@@ -378,7 +378,7 @@ def snapshot_zorder_rect_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE ZORDER under the driver's hash gate: ingest lineitem into
     a snapshot table as three arrival-ordered appends (no (part, supp)
     locality — the post-streaming state every real table degrades into),
-    run snapshot_zorder_compact over (l_partkey, l_suppkey), then answer
+    run snapshot_zorder_compact_n over (l_partkey, l_suppkey), then answer
     a 2-D rectangle query through snapshot_read_rect, which lists only
     the files whose manifest stats overlap BOTH ranges. The deterministic
     z-bucket layout makes each file a compact Morton rectangle, so the
@@ -396,7 +396,7 @@ def snapshot_zorder_rect_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_append,
         snapshot_read_rect,
         snapshot_write,
-        snapshot_zorder_compact,
+        snapshot_zorder_compact_n,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -411,7 +411,7 @@ def snapshot_zorder_rect_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot_write(l.where(third == 0), t)
     snapshot_append(l.where(third == 1), t)
     snapshot_append(l.where(third == 2), t)
-    snapshot_zorder_compact(spark, t, "l_partkey", "l_suppkey", n_files=8)
+    snapshot_zorder_compact_n(spark, t, ["l_partkey", "l_suppkey"], n_files=8)
     total = len(_read_manifest(t, current_version(t))["files"])
     out = snapshot_read_rect(
         spark, t, "l_partkey", 1, 50, "l_suppkey", 1, 5
@@ -4130,7 +4130,7 @@ def snapshot_mapped_interaction_read(
         "INSERT INTO mi_a SELECT o_orderkey, o_custkey FROM mi_raw_orders "
         "WHERE o_orderkey % 7 = 3 ORDER BY o_orderkey"
     )
-    S.snapshot_zorder_compact(spark, ta, "aa", "b", incremental=True)
+    S.snapshot_zorder_compact_n(spark, ta, ["aa", "b"], incremental=True)
     m = S._read_manifest(ta, S.current_version(ta))
     hi = cat.sql("SELECT max(aa) AS hi FROM mi_a").first()["hi"]
     if hi is not None:  # empty-lake day: no rows => nothing to prune

@@ -711,14 +711,14 @@ def bm25_index_compact(
     corpus — no re-tokenize), embarrassingly range-parallel; run it on
     the maintenance cadence of any OPTIMIZE."""
     root = Path(index_root)
-    from ..sources.snapshots import snapshot_compact, snapshot_compact_merged
+    from ..sources.snapshots import snapshot_compact
 
     ver = snapshot_compact(
         spark, root / "postings", n_files, stats_cols=["term_bucket"]
     )
-    snapshot_compact_merged(
+    snapshot_compact(
         spark, root / "vocab",
-        lambda d: d.groupBy("term_bucket", "term").agg(
+        merge=lambda d: d.groupBy("term_bucket", "term").agg(
             F.sum("df").cast("long").alias("df")
         ),
         target_files=max(1, n_files // 2), stats_cols=["term_bucket"],
@@ -739,8 +739,8 @@ def bm25_index_compact(
             F.sum("sum_dl").cast("long").alias("sum_dl"),
         )
 
-    snapshot_compact_merged(spark, root / "stats", _fold_stats,
-                            target_files=1)
+    snapshot_compact(spark, root / "stats", merge=_fold_stats,
+                     target_files=1)
     return ver
 
 

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults sized by env (SPARK_GRAFT_CPUS); on a real cluster the
-same configs apply per-executor. Design choices for the 100 TB posture:
+Local-mode defaults sized by env (SPARK_GRAFT_CPUS, else the host's core
+count); on a real cluster the same configs apply per-executor. Design
+choices for the 100 TB posture:
 
   * AQE on (runtime coalesce, skew-join splitting) — at scale the static
     shuffle-partition count is always wrong somewhere.
@@ -22,7 +23,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "energy-datalake-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     warehouse = os.environ.get(
         "SPARK_GRAFT_WAREHOUSE", os.path.join(tempfile.gettempdir(), "engine-warehouse")
     )

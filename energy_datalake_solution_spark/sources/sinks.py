@@ -118,49 +118,33 @@ def _partition_tokens(spark, n: int) -> list[int]:
 _PARTITION_TOKEN_CACHE: dict[tuple, list[int]] = {}
 
 
-def zorder_arrange(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 8,
-) -> DataFrame:
-    """Z-order (Morton-curve) clustered ARRANGEMENT over TWO numeric columns:
-    files cover compact rectangles of the (a, b) value space, so parquet
-    footer min/max statistics prune on EITHER column — a single-column
-    sort only ever prunes its own column.
-
-    Construction in pure Spark expressions: scale each column to a
-    ``bits``-bit bucket id against its global min/max (two-row broadcast),
-    interleave the bit positions into a Morton code, then DETERMINISTICALLY
-    place the rows: file f receives exactly the Morton range
-    ``[f * 4^bits / n_files, (f+1) * 4^bits / n_files)`` via an explicit
-    z-bucket key routed through a hash-perfect token (``_partition_tokens``)
-    so partition id == bucket id. Two writes of the same data always produce
-    identical file rectangles — ``repartitionByRange`` could not promise
-    that because its boundaries are reservoir-sampled per run. At 100 TB
-    the min/max agg is one cheap pass (or comes from table stats) and
-    everything else is row-local — no UDF, no driver-side data.
-    """
-    return zorder_arrange_n(df, [col_a, col_b], n_files=n_files, bits=bits)
-
-
 def zorder_arrange_n(
     df: DataFrame,
     cols: list[str],
     n_files: int = 8,
     bits: int = 8,
 ) -> DataFrame:
-    """N-column generalization of the Morton arrangement (Delta's
-    OPTIMIZE ZORDER BY takes any column list): bit ``i`` of column ``c``
-    interleaves to position ``i*N + (N-1-c)``, so files cover compact
-    N-dimensional boxes and footer stats prune on ANY subset of the
-    columns. For N=2 this is bit-identical to the classic 2-D curve.
-    ``bits * N`` must stay under 63 (the code lives in one long) —
-    8 bits x 3 cols = 24-bit codes, plenty: pruning granularity is file
-    COUNT, not code width. Same determinism contract as the 2-D form:
-    explicit z-bucket -> hash-perfect partition token, so two writes of
-    the same data produce identical file boxes."""
+    """Z-order (Morton-curve) clustered ARRANGEMENT over ``cols`` (Delta's
+    OPTIMIZE ZORDER BY takes any column list): files cover compact
+    N-dimensional boxes of the value space, so parquet footer min/max
+    statistics prune on ANY subset of the columns — a single-column sort
+    only ever prunes its own column.
+
+    Construction in pure Spark expressions: scale each column to a
+    ``bits``-bit bucket id against its global min/max (one-row
+    broadcast), interleave bit ``i`` of column ``c`` to position
+    ``i*N + (N-1-c)``, then DETERMINISTICALLY place the rows: file f
+    receives exactly the Morton range
+    ``[f * 2^(bits*N) / n_files, (f+1) * 2^(bits*N) / n_files)`` via an
+    explicit z-bucket key routed through a hash-perfect token
+    (``_partition_tokens``) so partition id == bucket id. Two writes of
+    the same data always produce identical file boxes —
+    ``repartitionByRange`` could not promise that because its boundaries
+    are reservoir-sampled per run. ``bits * N`` must stay under 63 (the
+    code lives in one long) — 8 bits x 3 cols = 24-bit codes, plenty:
+    pruning granularity is file COUNT, not code width. At 100 TB the
+    min/max agg is one cheap pass and everything else is row-local — no
+    UDF, nothing collected to one process."""
     n = len(cols)
     if n < 1:
         raise ValueError("z-order needs at least 1 column")
@@ -255,13 +239,13 @@ def write_zordered(
     n_files: int = 8,
     bits: int = 8,
 ) -> None:
-    """zorder_arrange + overwrite parquet write (the original sink form);
-    snapshot_write_zordered (sources/snapshots.py) commits the SAME
-    arrangement through the manifest format with per-file stats on both
-    columns."""
-    zorder_arrange(df, col_a, col_b, n_files=n_files, bits=bits).write.mode(
-        "overwrite"
-    ).parquet(str(path))
+    """zorder_arrange_n over (a, b) + overwrite parquet write (the original
+    sink form); snapshot_write_zordered_n (sources/snapshots.py) commits
+    the SAME arrangement through the manifest format with per-file stats
+    on both columns."""
+    zorder_arrange_n(
+        df, [col_a, col_b], n_files=n_files, bits=bits
+    ).write.mode("overwrite").parquet(str(path))
 
 
 def compact_partition(

@@ -93,7 +93,8 @@ contract one level up:
             -> snapshot_compact / snapshot_compact_where (predicate-
             scoped: only stats-overlapping files rewrite — compact one
             hot partition of a 100 TB table without touching the rest)
-            / snapshot_zorder_compact
+            / snapshot_zorder_compact_n (any number of z columns); all
+            three share one conflict-safe rewrite loop
         REORG TABLE <name> APPLY (PURGE)          -> snapshot_purge_dv
             (rewrite ONLY deletion-vector-carrying files — O(dv'd
             files); clean files stay byte-identical)
@@ -165,6 +166,7 @@ reference analog — Delta-style time travel surfaced through DDL.
 
 from __future__ import annotations
 
+import json
 import re
 from pathlib import Path
 
@@ -894,10 +896,10 @@ class SnapshotCatalog:
         self._tables: dict[str, tuple[str, int | None]] = {}
         self._views: dict[str, str] = {}  # named views, creation order
         self._txn = None  # open BEGIN TRANSACTION, if any
-        # (path, version) each registered view is currently pinned at —
+        # (path, version, manifest ts) each registered view is pinned at —
         # lets _refresh skip the Python-data-source reload for tables
         # whose resolved version did not move (see _register)
-        self._pinned: dict[str, tuple[str, int | None]] = {}
+        self._pinned: dict[str, tuple] = {}
         from .snapshot_datasource import SnapshotDataSource
 
         try:
@@ -2259,18 +2261,24 @@ class SnapshotCatalog:
         # The data-source reader pins current_version(path) at instance
         # creation when no version option is passed (snapshot_datasource
         # .py), so the view's pin is fully determined by (path, resolved
-        # version). Re-resolving that pin driver-side (one pointer-file
-        # read) and SKIPPING the reload when it did not move makes
-        # _refresh O(changed tables) instead of one Python-data-source
-        # load() — a Python worker round-trip for schema resolution —
-        # per registered table per statement: a multi-table session
-        # previously re-paid every table's load on every DML.
-        from .snapshots import current_version
+        # version, that manifest's identity). Re-resolving that pin in
+        # this process (a pointer-file and a manifest read) and SKIPPING
+        # the reload when it did not move makes _refresh O(changed
+        # tables) instead of one Python-data-source load() — a Python
+        # worker round-trip for schema resolution — per registered table
+        # per statement: a multi-table session previously re-paid every
+        # table's load on every DML. The identity is the manifest's
+        # commit stamp: a table dropped and recreated at the same path
+        # can reach the same version number, and must not keep serving
+        # the old table's view.
+        from .snapshots import _manifest_path, current_version
 
-        pin = (
-            str(path),
-            current_version(path) if version is None else version,
-        )
+        v = current_version(path) if version is None else version
+        try:
+            ts = json.loads(_manifest_path(path, v).read_text()).get("ts")
+        except FileNotFoundError:
+            ts = None  # the load below fails loudly on a missing version
+        pin = (str(path), v, ts)
         if (
             self._pinned.get(name) == pin
             and self.spark.catalog.tableExists(name)

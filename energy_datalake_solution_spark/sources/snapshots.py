@@ -988,20 +988,7 @@ def snapshot_write(df: DataFrame, table_path) -> int:
         # itself (running it here too would double every LIMIT-1 job)
         return snapshot_replace_where(df.sparkSession, p, None, df)
     df = _prep_replace_batch(df, p, tip, m_tip)
-    files = _write_files(df, p)
-    for attempt in range(COMMIT_RETRIES):
-        try:
-            # full replace resets widened-type metadata: every surviving
-            # file is this batch's, so the footers are the honest schema
-            return _commit(p, files, current_version(p), op="write",
-                           types_meta=CLEAR_METADATA,
-                           bucketing_meta=CLEAR_METADATA)
-        except SnapshotCommitConflict:
-            # full replace has no read-set: rebase = recommit the same
-            # files on the new tip (replace-whatever-is-current semantics)
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+    return _commit_full_replace(p, _write_files(df, p))
 
 
 def _carry_blooms(
@@ -3363,13 +3350,13 @@ def _commit_full_replace(p: Path, files: list[str], *, stats=None, blooms=None,
     """Commit a FULL-REPLACE file set with the optimistic rebase: a
     conflict means another writer advanced the tip, and replace-whatever-
     is-current semantics rebase by recommitting the same files on the new
-    parent (no read-set to validate). Widened-type metadata is CLEARED,
-    mirroring snapshot_write: every caller here is a content-replacing
-    writer (the df is the caller's, not a re-read of the table), so the
-    new files' footers are the honest schema — inheriting the parent's
-    stale ``types`` map would silently drop a column the batch added or
-    mis-type a replaced one. Compaction paths that re-read wide data use
-    their own _commit loops and keep inheriting."""
+    parent (no read-set to validate). Widened-type metadata is CLEARED:
+    every caller here is a content-replacing writer (the df is the
+    caller's, not a re-read of the table), so the new files' footers are
+    the honest schema — inheriting the parent's stale ``types`` map would
+    silently drop a column the batch added or mis-type a replaced one.
+    Maintenance rewrites re-read the table through _rewrite and keep
+    inheriting."""
     for attempt in range(COMMIT_RETRIES):
         try:
             return _commit(p, files, current_version(p), stats=stats,
@@ -5092,6 +5079,94 @@ def snapshot_read_range(
     return _apply_column_mapping(df, schema) if schema else df
 
 
+def _rewrite(
+    spark: SparkSession, p: Path, op: str, pick, arrange,
+    stats_cols: list[str] | None = None, merge_schema: bool = True,
+    logical: bool = False, logical_merge: bool = False,
+) -> int:
+    """The one conflict-safe loop behind every maintenance rewriter
+    (OPTIMIZE, OPTIMIZE WHERE, auto-compaction, REORG PURGE, ZORDER): a
+    metadata swap over rewritten data, never an in-place mutation. Each
+    attempt re-reads the tip manifest and asks the operation's policy:
+
+    - ``pick(m, parent)``: the files to rewrite, or None to commit
+      nothing (the current version is returned). An empty pick commits
+      the parent's files unchanged — an auditable no-op version.
+    - ``arrange(df, touched, phys)``: lay the read frame out for the
+      write (coalesce, range split, merge fold, Morton curve), or None
+      to write no file. ``phys`` maps a LOGICAL column name to its name
+      in ``df``.
+
+    The picked files are read with their deletion vectors applied (their
+    dead rows vanish physically) and without provenance columns, as the
+    PHYSICAL frame (``merge_schema`` unions their footers). With
+    ``logical``, a pick of every live file instead reads the table's
+    LOGICAL frame through snapshot_read (``logical_merge``), arranges it
+    by logical names and maps it back to the frozen physical names — a
+    logical-named file would read as all-NULL under the mapping after a
+    rename, and manifest stats key the same physical space.
+
+    Untouched files carry byte-identical with their stats, blooms and
+    DVs; new files get blooms for every column the parent tracked, and
+    stats for ``stats_cols`` (logical names) or, when None, for the
+    columns the manifest already tracks. The widened-types map is
+    inherited: carried files keep their narrow footers, which reads cast
+    up through it. Old versions stay time-travelable; vacuum reclaims
+    the replaced files. A writer landing mid-rewrite makes the commit
+    conflict — committing the stale file set would drop its rows — so
+    the next attempt re-reads the new tip and redoes the rewrite."""
+    for attempt in range(COMMIT_RETRIES):
+        parent = current_version(p)
+        if parent == 0:
+            raise FileNotFoundError(f"no snapshot table at {p}")
+        m = _read_manifest(p, parent)
+        touched = pick(m, parent)
+        if touched is None:
+            return parent
+        sch = m.get("schema")
+
+        def phys(c):
+            return _mapping_physical(sch, c) if sch else c
+
+        gone = set(touched)
+        kept = [f for f in m["files"] if f not in gone]
+        df = None
+        if logical and not kept:
+            df = arrange(
+                snapshot_read(spark, p, parent, merge_schema=logical_merge),
+                touched, lambda c: c,
+            )
+            if df is not None and sch:
+                df = _df_to_physical(df, sch)
+        elif touched:
+            df = arrange(
+                _read_files_with_dv(
+                    spark, p, sorted(touched), m.get("dv"),
+                    merge_schema=merge_schema, types=m.get("types"),
+                    schema=sch,
+                ),
+                touched, phys,
+            )
+        new_files = _write_files(df, p) if df is not None else []
+        old_stats: dict = m.get("stats", {}) or {}
+        cols = (
+            sorted({c for s in old_stats.values() for c in s})
+            if stats_cols is None
+            else [phys(c) for c in stats_cols]
+        )
+        stats = {f: old_stats[f] for f in kept if f in old_stats}
+        if cols and new_files:
+            stats.update(_collect_stats(p, new_files, cols, spark=spark))
+        try:
+            return _commit(p, kept + new_files, parent, stats=stats or None,
+                           blooms=_carry_blooms(p, m, kept, new_files),
+                           dv=_carry_dv(m, kept), op=op)
+        except SnapshotCommitConflict:
+            if attempt == COMMIT_RETRIES - 1:
+                raise
+    raise AssertionError("unreachable")
+
+
 def snapshot_compact(
     spark: SparkSession, table_path, target_files: int = 1,
     stats_cols: list[str] | None = None, merge=None,
@@ -5103,91 +5178,42 @@ def snapshot_compact(
     fall out of retention. With ``stats_cols`` the rewrite range-partitions
     on the first column and records fresh min/max stats, so compaction
     doubles as re-clustering (small random appends destroy key locality;
-    this restores it). Exactly Delta's OPTIMIZE semantics: a metadata swap
-    over rewritten data, never an in-place mutation.
+    this restores it); without, the new files record no stats. Exactly
+    Delta's OPTIMIZE semantics, through the rewrite loop of _rewrite.
 
-    ``merge`` (see snapshot_compact_merged, the public face): an optional
-    caller-certified read-equivalent transform applied to the logical
-    frame before the rewrite, for MERGE-ON-READ delta tables whose read
-    path folds rows. With a transform the read merges schemas (a fold
-    needs the union width — delta generations may differ) and the commit
-    op records 'compact-merged'."""
-    p = _table(table_path)
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        pm = _read_manifest(p, parent) if parent else {}
-        sch = pm.get("schema")
-        # LOGICAL frame on mapped tables
-        df = snapshot_read(spark, p, merge_schema=merge is not None)
-        if merge is not None:
-            df = merge(df)
-        if stats_cols:
-            df = df.repartitionByRange(target_files, stats_cols[0])
-        else:
-            df = df.coalesce(target_files)
-        scols = stats_cols
-        if sch:
-            # mapped table: rewritten files must carry the FROZEN
-            # PHYSICAL names — a logical-named file reads as all-NULL
-            # under the mapping after a rename (data files only ever
-            # know physical spellings), and manifest stats key the same
-            # physical space
-            df = _df_to_physical(df, sch)
-            scols = [
-                _mapping_physical(sch, c) for c in (stats_cols or [])
-            ] or None
-        files = _write_files(df, p)
-        stats = _collect_stats(p, files, scols, spark=spark) if scols else None
-        try:
-            return _commit(
-                p, files, parent, stats=stats,
-                blooms=_carry_blooms(p, pm, [], files),
-                op="compact-merged" if merge is not None else "compact",
-            )
-        except SnapshotCommitConflict:
-            # a writer landed mid-compaction: rewriting a stale file set
-            # would drop its rows — re-read the new tip and re-compact
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
-
-
-def snapshot_compact_merged(
-    spark: SparkSession, table_path, merge, target_files: int = 1,
-    stats_cols: list[str] | None = None,
-) -> int:
-    """OPTIMIZE for MERGE-ON-READ DELTA tables whose read path FOLDS
-    rows (sum-on-read vocab/stats deltas, per-commit counter rows):
-    rewrite the current version THROUGH ``merge`` — a caller-certified
-    read-equivalent transform that collapses delta rows (e.g.
-    ``groupBy(keys).agg(sum(...))``) — and commit the folded result as
-    a new version. The delta-table analogue of snapshot_compact: layout
-    compaction alone cannot shrink a delta table whose row count grows
-    one delta-row-set per append; folding restores the fresh-built row
-    count (and with ``stats_cols`` the fresh-built range layout), so
-    probe cost returns to O(fresh index) instead of O(appends).
-
-    ``merge`` takes and returns a LOGICAL DataFrame; the rewrite then
-    maps to physical on mapped tables like every compactor. Same
-    conflict-safe loop as snapshot_compact: a writer landing
-    mid-rewrite triggers a re-read of the new tip, so a racing append's
-    delta rows are folded, never dropped. Old versions stay
-    time-travelable; vacuum reclaims the unfolded files.
+    ``merge`` compacts MERGE-ON-READ DELTA tables whose read path FOLDS
+    rows (sum-on-read vocab/stats deltas, per-commit counter rows): a
+    caller-certified read-equivalent transform that collapses delta rows
+    (e.g. ``groupBy(keys).agg(sum(...))``) is applied to the LOGICAL
+    frame before the rewrite, and the commit op records
+    'compact-merged'. Layout compaction alone cannot shrink a delta table
+    whose row count grows one delta-row-set per append; folding restores
+    the fresh-built row count (and with ``stats_cols`` the fresh-built
+    range layout), so probe cost returns to O(fresh index) instead of
+    O(appends). A racing append's delta rows are folded on the retry,
+    never dropped.
 
     Contract: the transform must be READ-EQUIVALENT under the table's
     documented read semantics (for a sum-on-read delta table, any
     grouping that preserves every group's sum). The caller certifies
     this — the function cannot check it without knowing the read
-    semantics. The transform sees the MERGED-schema logical frame
-    (delta generations may differ in width — folding a generation's
-    column away because one footer lacked it would change reads).
+    semantics. With a transform the read merges schemas: delta
+    generations may differ in width, and folding a generation's column
+    away because one footer lacked it would change reads."""
 
-    Thin wrapper over snapshot_compact's rewrite loop — one body, so
-    the two compactors can never drift on conflict handling, mapped
-    -table disposition, stats collection, or bloom carry."""
-    return snapshot_compact(
-        spark, table_path, target_files=target_files,
-        stats_cols=stats_cols, merge=merge,
+    def arrange(df, touched, name):
+        if merge is not None:
+            df = merge(df)
+        if stats_cols:
+            return df.repartitionByRange(target_files, name(stats_cols[0]))
+        return df.coalesce(target_files)
+
+    return _rewrite(
+        spark, _table(table_path),
+        "compact-merged" if merge is not None else "compact",
+        lambda m, parent: m["files"], arrange,
+        stats_cols=stats_cols or [], logical=True,
+        logical_merge=merge is not None,
     )
 
 
@@ -5204,47 +5230,14 @@ def snapshot_compact_where(
     into the rewrite (their dead rows vanish physically). The predicate
     SCOPES which files rewrite; it never filters rows — every live row
     of a touched file carries, so table contents are identical before
-    and after (same guarantee as full compaction)."""
-    from pyspark.sql import functions as F
-
+    and after (same guarantee as full compaction). A predicate no file
+    overlaps commits a metadata-only version."""
     p = _table(table_path)
-    if current_version(p) == 0:
-        raise FileNotFoundError(f"no snapshot table at {p}")
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        m = _read_manifest(p, parent)
-        stats: dict = m.get("stats", {}) or {}
-        schema = m.get("schema")
-        touched = sorted(snapshot_files_for_predicate(p, condition, parent))
-        try:
-            if not touched:
-                return _commit(p, list(m["files"]), parent,
-                               stats=stats or None,
-                               blooms=m.get("blooms") or None,
-                               dv=m.get("dv") or None, op="compact-where")
-            cur = _read_files_with_dv(
-                spark, p, touched, m.get("dv"), merge_schema=True,
-                types=m.get("types"), schema=schema,
-            ).coalesce(max(1, target_files))
-            cur = cur.drop(*[c for c in _PROV_COLS if c in cur.columns])
-            new_files = _write_files(cur, p)
-            untouched = [f for f in m["files"] if f not in set(touched)]
-            new_stats = dict(stats)
-            for f in touched:
-                new_stats.pop(f, None)
-            tracked = sorted({c for s in stats.values() for c in s})
-            if tracked:
-                new_stats.update(
-                    _collect_stats(p, new_files, tracked, spark=spark)
-                )
-            return _commit(p, untouched + new_files, parent,
-                           stats=new_stats or None,
-                           blooms=_carry_blooms(p, m, untouched, new_files),
-                           dv=_carry_dv(m, untouched), op="compact-where")
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+    return _rewrite(
+        spark, p, "compact-where",
+        lambda m, parent: snapshot_files_for_predicate(p, condition, parent),
+        lambda df, touched, name: df.coalesce(max(1, target_files)),
+    )
 
 
 def snapshot_compact_small(
@@ -5264,45 +5257,19 @@ def snapshot_compact_small(
     files fold their vectors into the rewrite. Returns the new version
     (or the current one when nothing qualified)."""
     p = _table(table_path)
-    tip = current_version(p)
-    if tip == 0:
-        raise FileNotFoundError(f"no snapshot table at {p}")
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        m = _read_manifest(p, parent)
-        stats: dict = m.get("stats", {}) or {}
+
+    def pick(m, parent):
         small = [
             f for f in m["files"]
             if (p / f).exists() and (p / f).stat().st_size < small_bytes
         ]
-        if len(small) < min_small_files:
-            return parent
-        total = sum((p / f).stat().st_size for f in small)
-        n_out = max(1, round(total / target_bytes))
-        try:
-            cur = _read_files_with_dv(
-                spark, p, sorted(small), m.get("dv"), merge_schema=True,
-                types=m.get("types"), schema=m.get("schema"),
-            ).coalesce(n_out)
-            cur = cur.drop(*[c for c in _PROV_COLS if c in cur.columns])
-            new_files = _write_files(cur, p)
-            untouched = [f for f in m["files"] if f not in set(small)]
-            new_stats = dict(stats)
-            for f in small:
-                new_stats.pop(f, None)
-            tracked = sorted({c for s in stats.values() for c in s})
-            if tracked:
-                new_stats.update(
-                    _collect_stats(p, new_files, tracked, spark=spark)
-                )
-            return _commit(p, untouched + new_files, parent,
-                           stats=new_stats or None,
-                           blooms=_carry_blooms(p, m, untouched, new_files),
-                           dv=_carry_dv(m, untouched), op="autocompact")
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return small if len(small) >= min_small_files else None
+
+    def arrange(df, touched, name):
+        total = sum((p / f).stat().st_size for f in touched)
+        return df.coalesce(max(1, round(total / target_bytes)))
+
+    return _rewrite(spark, p, "autocompact", pick, arrange)
 
 
 def snapshot_analyze(spark: SparkSession, table_path, cols: list) -> int:
@@ -5360,85 +5327,18 @@ def snapshot_purge_dv(spark: SparkSession, table_path) -> int:
     insert/delete — snapshot_change_feed's documented fallback). Old
     versions still time-travel with their vectors; vacuum reclaims the
     purged files once out of retention. No-op (no new version) on a
-    vector-free table."""
-    p = _table(table_path)
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no snapshot table at {table_path}")
-        m = _read_manifest(p, parent)
-        dv = dict(m.get("dv", {}) or {})
-        if not dv:
-            return parent  # nothing to purge
-        files = list(m["files"])
-        dirty = [f for f in files if _dv_key(f) in dv]
-        clean = [f for f in files if _dv_key(f) not in dv]
-        df = _read_files_with_dv(
-            spark, p, dirty, dv, types=m.get("types"),
-            schema=m.get("schema"),
-        )
-        df = df.drop(*[c for c in _PROV_COLS if c in df.columns])
-        new_files = (
-            _write_files(df.coalesce(max(1, len(dirty))), p)
-            if not df.isEmpty()
-            else []
-        )
-        old_stats = m.get("stats", {}) or {}
-        tracked = sorted({c for s in old_stats.values() for c in s})
-        new_stats = {f: old_stats[f] for f in clean if f in old_stats}
-        if tracked and new_files:
-            new_stats.update(
-                _collect_stats(p, new_files, tracked, spark=spark)
-            )
-        try:
-            return _commit(
-                p, clean + new_files, parent,
-                stats=new_stats or None,
-                blooms=_carry_blooms(p, m, clean, new_files),
-                op="purge", types_meta=m.get("types"),
-            )
-        except SnapshotCommitConflict:
-            # a writer landed mid-purge: its DVs/files must not be lost
-            # — re-read the tip and re-purge
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+    vector-free table; dirty files whose every row is deleted leave no
+    file behind."""
 
+    def pick(m, parent):
+        dv = m.get("dv", {}) or {}
+        return [f for f in m["files"] if _dv_key(f) in dv] if dv else None
 
-def snapshot_zorder_compact(
-    spark: SparkSession,
-    table_path,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 8,
-    incremental: bool = False,
-) -> int:
-    """OPTIMIZE ZORDER BY: rewrite the current version on the Morton curve
-    over TWO columns and commit with per-file min/max stats for both —
-    the maintenance form of snapshot_write_zordered for tables whose
-    appends have destroyed locality (stream ingest writes arrival-ordered
-    files; after enough of them every 2-D range read admits every file).
-    The arrangement is the sink tier's DETERMINISTIC z-bucket layout
-    (sources/sinks.py::zorder_arrange), so repeated compactions of the
-    same data produce identical file rectangles. Same optimistic-retry
-    disposition as snapshot_compact.
+    def arrange(df, touched, name):
+        return None if df.isEmpty() else df.coalesce(max(1, len(touched)))
 
-    ``incremental=True`` is the liquid-clustering-shaped maintenance
-    loop: files that survive from the LAST zorder commit are already
-    compact rectangles and are CARRIED byte-identical with their stats —
-    only the unclustered tail (files appended since) is read, z-arranged
-    against its own span, and rewritten. Per-cycle write cost is
-    O(appends since last zorder), not O(table): at 100 TB that is the
-    difference between maintenance you run hourly and maintenance you
-    defer until reads hurt. Pruning stays exact either way (every file
-    carries true footer min/max; tail rectangles may overlap the
-    clustered ones until the next full rewrite, which only ADMITS a few
-    more files, never loses rows). Falls back to the full rewrite when
-    no prior zorder commit survives on disk or nothing is clustered."""
-    return snapshot_zorder_compact_n(
-        spark, table_path, [col_a, col_b], n_files=n_files, bits=bits,
-        incremental=incremental,
+    return _rewrite(
+        spark, _table(table_path), "purge", pick, arrange, merge_schema=False
     )
 
 
@@ -5450,65 +5350,48 @@ def snapshot_zorder_compact_n(
     bits: int = 8,
     incremental: bool = False,
 ) -> int:
-    """N-column OPTIMIZE ZORDER (the general form snapshot_zorder_compact
-    wraps at N=2): interleave ``bits`` quantile bits per column on the
-    N-ary Morton curve (sinks.zorder_arrange_n — bit-identical to the
-    2-D curve at N=2) and commit with per-file stats for every z
-    column. Same incremental carried-rectangle mode and optimistic-retry
-    disposition as the 2-column form."""
+    """OPTIMIZE ZORDER BY (c1, ..., cN): rewrite the current version on
+    the N-ary Morton curve, ``bits`` quantile bits per column, and commit
+    with per-file min/max stats for every z column — the maintenance
+    form of snapshot_write_zordered_n for tables whose appends have
+    destroyed locality (stream ingest writes arrival-ordered files;
+    after enough of them every range read admits every file). The
+    arrangement is the sink tier's DETERMINISTIC z-bucket layout
+    (sources/sinks.py::zorder_arrange_n), so repeated compactions of the
+    same data produce identical file boxes.
+
+    ``incremental=True`` is the liquid-clustering-shaped maintenance
+    loop: files that survive from the LAST zorder commit are already
+    compact boxes and are CARRIED byte-identical with their stats —
+    only the unclustered tail (files appended since) is read, z-arranged
+    against its own span, and rewritten. Per-cycle write cost is
+    O(appends since last zorder), not O(table): at 100 TB that is the
+    difference between maintenance you run hourly and maintenance you
+    defer until reads hurt. Pruning stays exact either way (every file
+    carries true footer min/max; tail boxes may overlap the clustered
+    ones until the next full rewrite, which only ADMITS a few more
+    files, never loses rows). A fully clustered table commits nothing;
+    the full rewrite runs when no prior zorder commit survives on disk
+    or nothing is clustered."""
     from .sinks import zorder_arrange_n
 
     cols = list(cols)
     if len(cols) < 1:
         raise ValueError("ZORDER needs at least one column")
     p = _table(table_path)
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        pm = _read_manifest(p, parent) if parent else {}
-        sch = pm.get("schema")
-        # mapped table: data files and manifest stats live in PHYSICAL
-        # space (a logical-named rewrite would read all-NULL under the
-        # mapping after a rename)
-        pcols = [_mapping_physical(sch, c) if sch else c for c in cols]
-        carried: list[str] = []
-        tail_files: list[str] | None = None
-        if incremental and parent:
-            zfiles = _last_zorder_files(p, parent)
-            if zfiles:
-                cur = list(pm["files"])
-                carried = [f for f in cur if f in zfiles]
-                tail_files = [f for f in cur if f not in zfiles]
-                if carried and not tail_files:
-                    return parent  # fully clustered already — no-op
-        if incremental and carried and tail_files:
-            df = _read_files_with_dv(
-                spark, p, sorted(tail_files), pm.get("dv"), merge_schema=True,
-                types=pm.get("types"), schema=pm.get("schema"),
-            )
-            # physical frame: arrange under physical names
-            arranged = zorder_arrange_n(df, pcols, n_files=n_files, bits=bits)
-        else:
-            carried = []
-            arranged = zorder_arrange_n(
-                snapshot_read(spark, p), cols, n_files=n_files, bits=bits
-            )
-            if sch:
-                arranged = _df_to_physical(arranged, sch)
-        new_files = _write_files(arranged, p)
-        stats = {
-            f: s
-            for f, s in (pm.get("stats", {}) or {}).items()
-            if f in set(carried)
-        }
-        stats.update(_collect_stats(p, new_files, pcols, spark=spark))
-        try:
-            return _commit(p, carried + new_files, parent, stats=stats,
-                           blooms=_carry_blooms(p, pm, carried, new_files),
-                           dv=_carry_dv(pm, carried), op="zorder")
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+
+    def pick(m, parent):
+        zfiles = (_last_zorder_files(p, parent) if incremental else None) or set()
+        tail = [f for f in m["files"] if f not in zfiles]
+        return tail if tail or not m["files"] else None  # None: clustered
+
+    def arrange(df, touched, name):
+        return zorder_arrange_n(
+            df, [name(c) for c in cols], n_files=n_files, bits=bits
+        )
+
+    return _rewrite(spark, p, "zorder", pick, arrange, stats_cols=cols,
+                    logical=True)
 
 
 def _last_zorder_files(p: Path, tip: int) -> set[str] | None:
@@ -5543,7 +5426,7 @@ def snapshot_read_rect(
     single-column prunes), then the row filters apply as usual. On a
     z-ordered layout each file is a compact rectangle of the (a, b)
     space, so a small query rectangle admits few files — the read-side
-    payoff of snapshot_zorder_compact; on a single-column layout this
+    payoff of snapshot_zorder_compact_n; on a single-column layout this
     degrades gracefully to that column's prune (files without stats for
     either column are always kept: pruning never loses rows)."""
     from pyspark.sql import functions as F
@@ -5797,52 +5680,6 @@ def snapshot_files_for_point(table_path, col, value, version: int | None = None)
     return keep
 
 
-def snapshot_write_zordered(
-    df: DataFrame,
-    table_path,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 8,
-) -> int:
-    """Full-replace commit laid out on the Morton curve over TWO columns,
-    with per-file min/max manifest stats for BOTH: files cover compact
-    rectangles of the (a, b) value space, so snapshot_files_for_range /
-    snapshot_read_range prune on EITHER column — the manifest-format form
-    of Delta's OPTIMIZE ZORDER BY, where a single-column range split can
-    only ever prune its own key. Reuses the sink tier's arrangement
-    (sources/sinks.py::zorder_arrange), so the two layouts cannot drift.
-
-    Same full-replace prelude as snapshot_write; identity tables route
-    to replace_where AFTER arranging (the curve layout is computed in
-    logical space, so it survives the route; replace_where's rebase
-    loop allocates the ids and tracks the same two stats columns).
-    Write defaults and generated columns materialize (logical space)
-    BEFORE the arrangement, so z-ordering on a column the batch omits
-    clusters the stored write-time value instead of failing on a
-    missing column; the prelude's later pass is a no-op for columns
-    already present."""
-    from .sinks import zorder_arrange
-
-    p = _table(table_path)
-    tip = current_version(p)
-    m_tip = _read_manifest(p, tip) if tip else {}
-    sch = m_tip.get("schema") if tip else None
-    df = _materialize_wdefaults(df, sch)
-    df = _materialize_generated(df, sch)
-    df = zorder_arrange(df, col_a, col_b, n_files=n_files, bits=bits)
-    if _identity_cols(sch):
-        return snapshot_replace_where(
-            df.sparkSession, p, None, df,
-            stats_cols=[_mapping_physical(sch, c) for c in (col_a, col_b)],
-        )
-    df = _prep_replace_batch(df, p, tip, m_tip)
-    pcols = [_mapping_physical(sch, c) if sch else c for c in (col_a, col_b)]
-    files = _write_files(df, p)
-    stats = _collect_stats(p, files, pcols, spark=df.sparkSession)
-    return _commit_full_replace(p, files, stats=stats)
-
-
 def snapshot_write_zordered_n(
     df: DataFrame,
     table_path,
@@ -5850,14 +5687,23 @@ def snapshot_write_zordered_n(
     n_files: int = 8,
     bits: int = 8,
 ) -> int:
-    """N-column z-ordered full-replace commit with per-file stats for
-    EVERY clustering column — Delta's OPTIMIZE ZORDER BY (c1, ..., cN).
-    Files cover compact N-dimensional boxes, so snapshot_read_box prunes
-    on any predicate subset; reuses the sink tier's arrangement
-    (sources/sinks.py::zorder_arrange_n) so the layouts cannot drift.
-    Identity/mapped-table disposition mirrors snapshot_write_zordered,
-    including the defaults-before-arrangement ordering (z-ordering on
-    an omitted DEFAULT/GENERATED column materializes it first)."""
+    """Full-replace commit laid out on the Morton curve over ``cols``,
+    with per-file min/max manifest stats for EVERY clustering column —
+    the manifest-format form of Delta's OPTIMIZE ZORDER BY (c1, ..., cN).
+    Files cover compact N-dimensional boxes, so snapshot_read_box /
+    snapshot_read_rect / snapshot_read_range prune on any predicate
+    subset, where a single-column range split only ever prunes its own
+    key. Reuses the sink tier's arrangement
+    (sources/sinks.py::zorder_arrange_n), so the layouts cannot drift.
+
+    Same full-replace prelude as snapshot_write; identity tables route
+    to replace_where AFTER arranging (the curve layout is computed in
+    logical space, so it survives the route; replace_where's rebase
+    loop allocates the ids and tracks the same stats columns). Write
+    defaults and generated columns materialize (logical space) BEFORE
+    the arrangement, so z-ordering on a column the batch omits clusters
+    the stored write-time value instead of failing on a missing column;
+    the prelude's later pass is a no-op for columns already present."""
     from .sinks import zorder_arrange_n
 
     p = _table(table_path)

@@ -126,7 +126,7 @@ def test_zorder_on_date_column(spark, tmp_path):
         "date_add(DATE'2026-01-01', CAST(id AS int)) AS day",
         "CAST(id % 8 AS int) AS v",
     )
-    S.snapshot_write_zordered(df, t, "day", "v", n_files=4)
+    S.snapshot_write_zordered_n(df, t, ["day", "v"], n_files=4)
     got = S.snapshot_read(spark, t)
     assert got.count() == 64
     import datetime
@@ -144,8 +144,8 @@ def test_zorder_on_string_column_refuses_loudly(spark, tmp_path):
     read as clustered when it isn't — strings refuse instead."""
     import pytest
 
-    from energy_datalake_solution_spark.sources.sinks import zorder_arrange
+    from energy_datalake_solution_spark.sources.sinks import zorder_arrange_n
 
     df = spark.range(8).selectExpr("id", "CAST(id AS string) AS s")
     with pytest.raises(ValueError, match="non-orderable-numeric"):
-        zorder_arrange(df, "id", "s").collect()
+        zorder_arrange_n(df, ["id", "s"]).collect()

@@ -22,13 +22,18 @@ ALLOWED_EXACT = {
     "ADVICE.md",
     "BASELINE.json",
     "BASELINE.md",
+    "BENCHMARK.json",  # the benchmark's declaration (perfbench/)
+    "CHANGES.md",
     "COPYCHECK.json",
     "COVERAGE.md",
     "FIXTURES.md",
     "LEAKCHECK.json",
+    "PAPER.md",
     "PAPERS.md",
     "PROGRESS.jsonl",
     "README.md",
+    "REVIEW.md",
+    "ROADMAP.md",
     "SCALING.md",
     "SNIPPETS.md",
     "SURVEY.md",
@@ -38,12 +43,18 @@ ALLOWED_EXACT = {
     "bench.py",
     "bench_last.json",  # full per-run artifact bench.py drops beside itself
     "energy_datalake_solution_spark",
+    "perfbench",  # the lake benchmark (BENCHMARK.json)
     "plans",  # committed explain('formatted') evidence (plans/r<N>/)
     "tests",
 }
 ALLOWED_PATTERNS = (
-    re.compile(r"^BENCH_r\d+\.json$"),
+    # bench runs; _c<N> marks a run at N cores
+    re.compile(r"^BENCH_r\d+(_c\d+)?\.json$"),
     re.compile(r"^CORRECTNESS_r\d+\.json$"),
+    re.compile(r"^PERF_r\d+\.json$"),
+    re.compile(r"^VERIFY_r\d+\.json$"),
+    # upper-case Markdown documents at the root (plans, notes, reviews)
+    re.compile(r"^[A-Z]+\.md$"),
     # optimization-round deliverable (one per optimization round)
     re.compile(r"^OPTIMIZATION_r\d+\.md$"),
 )

@@ -95,6 +95,26 @@ def test_catalog_version_pinning_and_drop(spark, snap_catalog, tmp_path):
         cat.sql("SELECT count(*) FROM pinned").collect()
 
 
+def test_catalog_reloads_table_recreated_at_same_version(spark, tmp_path):
+    """A table dropped and recreated at the same path, outside the
+    catalog, that reaches the version the registered view was pinned at
+    is a DIFFERENT table: the next sql() call must read the new one, not
+    keep serving the view of the old one."""
+    import shutil
+
+    cat = SnapshotCatalog(spark)
+    t = tmp_path / "recreated"
+    snapshot_write(spark.range(3).selectExpr("id AS k"), t)
+    cat.sql(f"CREATE TABLE recreated USING snapshot LOCATION '{t}'")
+    assert sorted(r.k for r in cat.sql("SELECT k FROM recreated").collect()) \
+        == [0, 1, 2]
+    shutil.rmtree(t)
+    snapshot_write(spark.range(10, 12).selectExpr("id AS k"), t)
+    assert (t / "_latest").read_text().strip() == "1"  # same version
+    assert sorted(r.k for r in cat.sql("SELECT k FROM recreated").collect()) \
+        == [10, 11]
+
+
 def test_catalog_rejects_duplicates_and_missing_tables(spark, snap_catalog, tmp_path):
     cat, _ = snap_catalog
     with pytest.raises(ValueError, match="already registered"):
@@ -335,7 +355,7 @@ def test_catalog_describe_detail(spark, tmp_path):
 
 def test_catalog_optimize_compacts_and_zorders(spark, tmp_path):
     """OPTIMIZE routes to snapshot_compact (plain) and
-    snapshot_zorder_compact (ZORDER BY): contents identical, file count
+    snapshot_zorder_compact_n (ZORDER BY): contents identical, file count
     collapses, history records the maintenance commit."""
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,

@@ -13,7 +13,7 @@
    that snapshot_write got in r14: snapshot_write_with_stats routes
    identity tables to the allocating replace_where (keeping the range
    layout and per-file stats) and materializes write defaults on
-   mapped tables; snapshot_write_zordered/_n route identity tables
+   mapped tables; snapshot_write_zordered_n routes identity tables
    after arranging; snapshot_write_with_bloom routes and then
    backfills its filters via snapshot_analyze_blooms.
 4. snapshot_upsert_partitioned refuses identity tables (its rewrite
@@ -36,7 +36,7 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_upsert_partitioned,
     snapshot_write_with_bloom,
     snapshot_write_with_stats,
-    snapshot_write_zordered,
+    snapshot_write_zordered_n,
 )
 
 
@@ -206,7 +206,7 @@ def test_write_zordered_identity_routes_and_allocates(spark, tmp_path):
     batch = spark.createDataFrame(
         [(i, (i * 7) % 16) for i in range(16)], "x bigint, y bigint"
     )
-    snapshot_write_zordered(batch, t, "x", "y", n_files=4)
+    snapshot_write_zordered_n(batch, t, ["x", "y"], n_files=4)
     out = snapshot_read(spark, t).collect()
     assert len(out) == 16
     ids = [r["id"] for r in out]
@@ -644,7 +644,7 @@ def test_widen_composes_with_compaction_and_zorder(spark, tmp_path):
         t2,
     )
     S.snapshot_widen_column(spark, t2, "a", "bigint")
-    S.snapshot_zorder_compact(spark, t2, "a", "b", n_files=2)
+    S.snapshot_zorder_compact_n(spark, t2, ["a", "b"], n_files=2)
     g2 = S.snapshot_read(spark, t2)
     assert dict(g2.dtypes)["a"] == "bigint" and g2.count() == 16
     assert len(S.snapshot_files_for_range(t2, "a", 0, 3)) == 1  # pruned
@@ -730,7 +730,7 @@ def test_optimize_after_rename_preserves_values(spark, tmp_path):
     assert len(S.snapshot_files_for_range(t, "a", 0, 7)) < len(m["files"])
     # incremental zorder over a fresh tail keeps values too
     cat.sql("INSERT INTO oct_ SELECT id, id % 7 FROM range(64, 96)")
-    S.snapshot_zorder_compact(spark, t, "aa", "b", incremental=True)
+    S.snapshot_zorder_compact_n(spark, t, ["aa", "b"], incremental=True)
     vals = sorted(r.aa for r in cat.sql("SELECT aa FROM oct_").collect())
     assert vals == list(range(96))
 

@@ -8,8 +8,8 @@
    before routing (so a CTAS replace after RENAME COLUMN reads back
    values, not NULLs), and IDENTITY tables refuse loudly (the
    per-partition routing has no per-rebase allocation).
-2. snapshot_write_zordered/_n materialize write defaults and generated
-   columns (logical space) BEFORE zorder_arrange, so z-ordering on a
+2. snapshot_write_zordered_n materializes write defaults and generated
+   columns (logical space) BEFORE zorder_arrange_n, so z-ordering on a
    DEFAULT/GENERATED column the batch omits clusters the stored
    write-time value instead of failing with a missing-column error.
 """
@@ -138,8 +138,8 @@ def default_table(spark, tmp_path):
 
 def test_zordered_on_omitted_generated_column(spark, default_table):
     cat, t = default_table
-    S.snapshot_write_zordered(
-        spark.range(16).selectExpr("id AS k"), t, "k", "g", n_files=2
+    S.snapshot_write_zordered_n(
+        spark.range(16).selectExpr("id AS k"), t, ["k", "g"], n_files=2
     )
     got = sorted(tuple(r) for r in
                  S.snapshot_read(spark, t).select("k", "v", "g").collect())
@@ -219,7 +219,7 @@ def test_enable_column_mapping_refuses_bucketed_tables(spark, tmp_path):
 
 
 def test_compact_merged_folds_racing_append(spark, tmp_path, monkeypatch):
-    """snapshot_compact_merged's docstring contract, raced for real: a
+    """snapshot_compact(merge=...)'s docstring contract, raced for real: a
     delta-row append landing between the compactor's read and its
     commit must be FOLDED by the conflict retry, never dropped (a
     full-replace rebase that recommitted the stale file set would lose
@@ -246,9 +246,9 @@ def test_compact_merged_folds_racing_append(spark, tmp_path, monkeypatch):
         return real_commit(p_, files_, parent_, **kw)
 
     monkeypatch.setattr(S, "_commit", racing_commit)
-    S.snapshot_compact_merged(
+    S.snapshot_compact(
         spark, t,
-        lambda d: d.groupBy("k").agg(
+        merge=lambda d: d.groupBy("k").agg(
             F.sum("cnt").cast("long").alias("cnt")
         ),
     )

@@ -39,7 +39,7 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_upsert,
     snapshot_vacuum,
     snapshot_write_with_stats,
-    snapshot_zorder_compact,
+    snapshot_zorder_compact_n,
 )
 
 N_OPS = 18
@@ -137,7 +137,7 @@ def test_random_op_sequences_match_reference_model(spark, tmp_path, seed):
             elif op == "compact":
                 snapshot_compact(spark, t, target_files=4, stats_cols=["k"])
             elif op == "zorder":
-                snapshot_zorder_compact(spark, t, "k", "v", n_files=4)
+                snapshot_zorder_compact_n(spark, t, ["k", "v"], n_files=4)
             elif op == "vacuum":
                 keep = rng.choice([2, 4])
                 snapshot_vacuum(t, keep_versions=keep)

@@ -740,7 +740,7 @@ def test_bloom_point_lookup_skips_files_without_false_negatives(spark, tmp_path)
 
 
 def test_zordered_snapshot_prunes_files_on_both_columns(spark, tmp_path):
-    """snapshot_write_zordered: per-file manifest stats over BOTH Morton
+    """snapshot_write_zordered_n: per-file manifest stats over BOTH Morton
     columns must let a mid-range slice on EITHER column prune files, and
     pruned range reads must lose no rows vs plain filters."""
     from pyspark.sql import functions as F
@@ -749,7 +749,7 @@ def test_zordered_snapshot_prunes_files_on_both_columns(spark, tmp_path):
         _read_manifest,
         snapshot_files_for_range,
         snapshot_read_range,
-        snapshot_write_zordered,
+        snapshot_write_zordered_n,
     )
 
     from .conftest import SF_ORACLE
@@ -758,7 +758,7 @@ def test_zordered_snapshot_prunes_files_on_both_columns(spark, tmp_path):
         "l_partkey", "l_suppkey", "l_quantity"
     )
     t = tmp_path / "t"
-    snapshot_write_zordered(l, t, "l_partkey", "l_suppkey", n_files=8)
+    snapshot_write_zordered_n(l, t, ["l_partkey", "l_suppkey"], n_files=8)
     m = _read_manifest(t, current_version(t))
     n_files = len(m["files"])
     assert n_files >= 6
@@ -968,7 +968,7 @@ def test_conflicting_upsert_rebases_prune_against_new_tip(spark, tmp_path, monke
 
 def test_zorder_compact_restores_two_dim_pruning(spark, tmp_path):
     """Arrival-ordered appends admit every file for a 2-D rectangle;
-    snapshot_zorder_compact re-lays the table on the Morton curve and
+    snapshot_zorder_compact_n re-lays the table on the Morton curve and
     the same rectangle read prunes on BOTH columns, with identical rows
     before and after (OPTIMIZE ZORDER semantics). The layout is the
     deterministic z-bucket arrangement, so a second compaction produces
@@ -980,7 +980,7 @@ def test_zorder_compact_restores_two_dim_pruning(spark, tmp_path):
         snapshot_append,
         snapshot_read_rect,
         snapshot_write,
-        snapshot_zorder_compact,
+        snapshot_zorder_compact_n,
     )
 
     from .conftest import SF_ORACLE
@@ -1000,7 +1000,7 @@ def test_zorder_compact_restores_two_dim_pruning(spark, tmp_path):
             (F.col("l_partkey").between(1, 50)) & (F.col("l_suppkey").between(1, 5))
         ).collect()
     )
-    v = snapshot_zorder_compact(spark, t, "l_partkey", "l_suppkey", n_files=8)
+    v = snapshot_zorder_compact_n(spark, t, ["l_partkey", "l_suppkey"], n_files=8)
     m = _read_manifest(t, v)
     total = len(m["files"])
     assert total >= 6
@@ -1012,7 +1012,7 @@ def test_zorder_compact_restores_two_dim_pruning(spark, tmp_path):
     )
     assert got == expected  # pruning lost nothing
     # deterministic maintenance: compacting again reproduces the rectangles
-    v2 = snapshot_zorder_compact(spark, t, "l_partkey", "l_suppkey", n_files=8)
+    v2 = snapshot_zorder_compact_n(spark, t, ["l_partkey", "l_suppkey"], n_files=8)
     m2 = _read_manifest(t, v2)
     rects = lambda mm: sorted(tuple(s.get(c, [None, None])) for f, s in mm["stats"].items() for c in ("l_partkey", "l_suppkey"))  # noqa: E731
     assert rects(m) == rects(m2)
@@ -1034,7 +1034,7 @@ def test_incremental_zorder_carries_clustered_files_untouched(spark, tmp_path):
         snapshot_read,
         snapshot_read_rect,
         snapshot_write,
-        snapshot_zorder_compact,
+        snapshot_zorder_compact_n,
     )
 
     from .conftest import SF_ORACLE
@@ -1045,14 +1045,14 @@ def test_incremental_zorder_carries_clustered_files_untouched(spark, tmp_path):
     )
     band = F.pmod("l_orderkey", F.lit(4))
     snapshot_write(l.where(band == 0), t)
-    v_full = snapshot_zorder_compact(spark, t, "l_partkey", "l_suppkey", n_files=8)
+    v_full = snapshot_zorder_compact_n(spark, t, ["l_partkey", "l_suppkey"], n_files=8)
     clustered = set(_read_manifest(t, v_full)["files"])
 
     snapshot_append(l.where(band == 1), t)
     snapshot_append(l.where(band == 2), t)
 
-    v_inc = snapshot_zorder_compact(
-        spark, t, "l_partkey", "l_suppkey", n_files=4, incremental=True
+    v_inc = snapshot_zorder_compact_n(
+        spark, t, ["l_partkey", "l_suppkey"], n_files=4, incremental=True
     )
     m = _read_manifest(t, v_inc)
     # every clustered file carried verbatim; the arrival-ordered append
@@ -1079,8 +1079,8 @@ def test_incremental_zorder_carries_clustered_files_untouched(spark, tmp_path):
     assert got == expected
     # idempotent steady state: nothing unclustered -> no new version
     assert (
-        snapshot_zorder_compact(
-            spark, t, "l_partkey", "l_suppkey", n_files=4, incremental=True
+        snapshot_zorder_compact_n(
+            spark, t, ["l_partkey", "l_suppkey"], n_files=4, incremental=True
         )
         == v_inc
     )
