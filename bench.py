@@ -7,7 +7,8 @@ local[$SPARK_GRAFT_CPUS], forcing full execution with a count-style action
 (no result materialization to the driver beyond the count).
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "cpus": ...}
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -36,7 +38,9 @@ def _prev_payload(prev: dict) -> "dict | None":
     if isinstance(prev.get("parsed"), dict) and prev["parsed"].get(
         "queries"
     ):
-        return prev["parsed"]
+        # the wrapper records the run's core count; a line that carries
+        # its own wins
+        return {"cpus": prev.get("cpus"), **prev["parsed"]}
     tail = prev.get("tail") or ""
     out: dict = {}
     m = _re.search(r'"query_mips":\s*\{([^{}]*)\}', tail)
@@ -59,7 +63,19 @@ def _prev_payload(prev: dict) -> "dict | None":
             )
         }
     out["sf"] = prev.get("sf")  # the wrapper records the run's SF
+    out["cpus"] = prev.get("cpus")  # ... and its core count
     return out if out.get("queries") else None
+
+
+def _comparable(prev: dict, sf: "float | None", cpus: "int | None") -> bool:
+    """A prior round compares with this run only at the same scale
+    factor and the same core count (an unrecorded value is no evidence
+    either way): cross-SF or cross-core ratios would be meaningless."""
+    for key, now in (("sf", sf), ("cpus", cpus)):
+        if prev.get(key) is not None and now is not None \
+                and float(prev[key]) != float(now):
+            return False
+    return True
 
 
 def _merge_bench_last(payload: dict, here: str) -> dict:
@@ -151,6 +167,9 @@ def main() -> None:
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # the core count the session runs on (local[N], N from SPARK_GRAFT_CPUS)
+    m_cpus = re.fullmatch(r"local\[(\d+)\]", spark.sparkContext.master)
+    cpus = int(m_cpus.group(1)) if m_cpus else None
 
     # Warm the JVM/codegen path once with a trivial job.
     spark.range(1000).count()
@@ -262,9 +281,8 @@ def main() -> None:
             return None
         if prev is None:
             return None
-        if prev.get("sf") is not None and sf is not None \
-                and float(prev["sf"]) != float(sf):
-            return None  # cross-SF ratios would be meaningless
+        if not _comparable(prev, sf, cpus):
+            return None
         prev = _merge_bench_last(prev, here)
         pq = prev.get("queries") or {}
         pm = prev.get("query_mips") or {}
@@ -322,6 +340,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus": cpus,
         "host_mips": host_score,
         "host_mips_post": host_score_post,
         # 1 decimal: the mips samples carry ~5% jitter anyway, and the

@@ -11,7 +11,7 @@ that split on the snapshot table format (sources/snapshots.py):
   * ``build_ivf_index`` — spherical-KMeans-assign every candidate vector
     to a cell and commit the assignment table RANGE-PARTITIONED by
     ``centroid_id`` with per-file min/max stats in the manifest
-    (snapshot_write_with_stats), plus a tiny ``centroids`` side table.
+    (snapshot_write with ``stats_cols``), plus a tiny ``centroids`` side table.
     Build cost is amortized: sampled fit (corpus-size-independent,
     ~256 vectors/cell) + one assignment pass — paid once per corpus
     version, never per query.
@@ -61,7 +61,6 @@ from ..sources.snapshots import (
     snapshot_files_for_values,
     snapshot_read,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 from .similarity import (
     LSH_BAND_BITS,
@@ -132,7 +131,7 @@ def build_ivf_index(
         centroids = [
             (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
         ]
-    snapshot_write_with_stats(assigned, root / "cells", ["centroid_id"], n_files=nlist)
+    snapshot_write(assigned, root / "cells", stats_cols=["centroid_id"], n_files=nlist)
     cdf = spark.createDataFrame(centroids, ["centroid_id", "centroid"]).select(
         F.col("centroid_id").cast("int").alias("centroid_id"),
         F.col("centroid").cast("array<double>").alias("centroid"),
@@ -443,7 +442,7 @@ def build_lsh_index(spark: SparkSession, sf_dir: str, index_root: str | Path) ->
         .alias("bb"),
     )
     n_files = LSH_BANDS * (LSH_BAND_MASK + 1) // 4  # ~4 buckets per file
-    snapshot_write_with_stats(banded, root / "buckets", ["bb"], n_files=n_files)
+    snapshot_write(banded, root / "buckets", stats_cols=["bb"], n_files=n_files)
 
 
 def lsh_index_append(

@@ -197,7 +197,7 @@ def snapshot_versioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-5 snapshot-format features under the driver's hash gate:
-    commit orders through snapshot_write_with_stats (range-partitioned
+    commit orders through snapshot_write with stats_cols (range-split
     into 8 files with per-file min/max + row-count manifest stats), then
     answer a keyed range query through snapshot_read_range — which prunes
     FILES against the manifest before Spark lists a path — and stamp every
@@ -213,7 +213,7 @@ def snapshot_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshots import (
         snapshot_read_range,
         snapshot_row_count,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -222,7 +222,7 @@ def snapshot_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     t = base / "table"
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=8)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=8)
     meta_rows = snapshot_row_count(t)  # manifest-only COUNT(*)
     out = snapshot_read_range(spark, t, "o_orderkey", 1000, 2999).select(
         F.col("o_orderkey").alias("order_id"),
@@ -261,7 +261,7 @@ def snapshot_retention_delete_orders(spark: SparkSession, sf_dir: str) -> DataFr
     from ..sources.snapshots import (
         snapshot_delete_range,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -270,7 +270,7 @@ def snapshot_retention_delete_orders(spark: SparkSession, sf_dir: str) -> DataFr
     shutil.rmtree(base, ignore_errors=True)
     t = base / "table"
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=8)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=8)
     snapshot_delete_range(spark, t, "o_orderkey", 1000, 2999)
 
     def tagged(version: int) -> DataFrame:
@@ -312,7 +312,7 @@ def snapshot_bloom_point_lookup_orders(spark: SparkSession, sf_dir: str) -> Data
         _read_manifest,
         current_version,
         snapshot_files_for_point,
-        snapshot_write_with_bloom,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -323,7 +323,7 @@ def snapshot_bloom_point_lookup_orders(spark: SparkSession, sf_dir: str) -> Data
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    snapshot_write_with_bloom(
+    snapshot_write(
         o, t, bloom_cols=["o_custkey"], stats_cols=["o_orderkey"], n_files=8
     )
     files = snapshot_files_for_point(t, "o_custkey", 421)
@@ -511,7 +511,7 @@ def snapshot_mor_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         current_version,
         snapshot_delete_range_mor,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -520,7 +520,7 @@ def snapshot_mor_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     t = base / "table"
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=8)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=8)
     before = list(_read_manifest(t, current_version(t))["files"])
     snapshot_delete_range_mor(spark, t, "o_orderkey", 1000, 2999)
     m = _read_manifest(t, current_version(t))
@@ -570,7 +570,7 @@ def snapshot_change_feed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_change_feed,
         snapshot_delete_range_mor,
         snapshot_upsert,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -579,7 +579,7 @@ def snapshot_change_feed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     t = base / "table"
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=8)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=8)
     v1 = current_version(t)
     band = (F.col("o_orderkey") >= 1000) & (F.col("o_orderkey") <= 1499)
     snapshot_upsert(
@@ -727,7 +727,7 @@ def snapshot_tail_changes_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_delete_range_mor,
         snapshot_tail_changes,
         snapshot_upsert,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -740,7 +740,7 @@ def snapshot_tail_changes_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.pmod("o_orderkey", F.lit(100)) < 50)
         .select("o_orderkey", "o_totalprice")
     )
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=8)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=8)
     band = (F.col("o_orderkey") >= 1000) & (F.col("o_orderkey") <= 1499)
     snapshot_upsert(
         spark,
@@ -888,7 +888,7 @@ def snapshot_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_clone,
         snapshot_delete_range_mor,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -897,7 +897,7 @@ def snapshot_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     src, dst = base / "src", base / "clone"
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    snapshot_write_with_stats(o, src, ["o_orderkey"], n_files=8)
+    snapshot_write(o, src, stats_cols=["o_orderkey"], n_files=8)
     snapshot_delete_range_mor(spark, src, "o_orderkey", 3000, 3499)
     src_tip = current_version(src)
     src_manifest = _read_manifest(src, src_tip)
@@ -960,7 +960,7 @@ def snapshot_mor_update_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         current_version,
         snapshot_read,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -969,7 +969,7 @@ def snapshot_mor_update_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     t = base / "table"
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=8)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=8)
     files_before = set(_read_manifest(t, current_version(t))["files"])
     snapshot_update_range_mor(
         spark, t, "o_orderkey", 4000, 4499,
@@ -1093,7 +1093,7 @@ def snapshot_type_widening_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_append,
         snapshot_read,
         snapshot_upsert,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -1107,7 +1107,7 @@ def snapshot_type_widening_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("int").alias("o_orderkey"),
         F.col("o_totalprice").cast("float").alias("o_totalprice"),
     )
-    snapshot_write_with_stats(narrow, t, ["o_orderkey"], n_files=4)
+    snapshot_write(narrow, t, stats_cols=["o_orderkey"], n_files=4)
     m1 = _read_manifest(t, current_version(t))
     wide = o.where(band >= 50).select(
         "o_orderkey",
@@ -1150,7 +1150,7 @@ def snapshot_zorder3_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THREE-column z-order under the driver's hash gate (Delta's
     OPTIMIZE ZORDER BY (c1, c2, c3)): lay lineitem out on the 3-D Morton
     curve over (l_partkey, l_suppkey, l_quantity) via
-    snapshot_write_zordered_n, then answer a 3-predicate box query
+    snapshot_write(..., zorder_by=...), then answer a 3-predicate box query
     through snapshot_read_box, which lists only files whose manifest
     stats overlap ALL three ranges. A guard raises if the corner box
     fails to prune to a strict file subset (the layout's entire point).
@@ -1164,7 +1164,7 @@ def snapshot_zorder3_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         _read_manifest,
         current_version,
         snapshot_read_box,
-        snapshot_write_zordered_n,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -1176,8 +1176,8 @@ def snapshot_zorder3_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey", "l_suppkey",
         F.col("l_quantity").cast("int").alias("l_quantity"),
     )
-    snapshot_write_zordered_n(
-        l, t, ["l_partkey", "l_suppkey", "l_quantity"], n_files=8
+    snapshot_write(
+        l, t, zorder_by=["l_partkey", "l_suppkey", "l_quantity"], n_files=8
     )
     total = len(_read_manifest(t, current_version(t))["files"])
     out = snapshot_read_box(
@@ -1230,7 +1230,7 @@ def snapshot_cdf_updates_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         current_version,
         snapshot_change_feed,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -1239,7 +1239,7 @@ def snapshot_cdf_updates_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     t = base / "table"
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=6)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=6)
     v1 = current_version(t)
     snapshot_update_range_mor(
         spark, t, "o_orderkey", 1000, 2999,
@@ -1297,7 +1297,7 @@ def snapshot_conditional_merge_read(spark: SparkSession, sf_dir: str) -> DataFra
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_read, snapshot_write_with_stats
+    from ..sources.snapshots import snapshot_read, snapshot_write
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_cmerge_{os.getpid()}_{path_tag(sf_dir)}"
@@ -1308,8 +1308,8 @@ def snapshot_conditional_merge_read(spark: SparkSession, sf_dir: str) -> DataFra
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     band = F.pmod("o_orderkey", F.lit(100))
-    snapshot_write_with_stats(
-        o.where(band < 50), t, ["o_orderkey"], n_files=6
+    snapshot_write(
+        o.where(band < 50), t, stats_cols=["o_orderkey"], n_files=6
     )
     o.where((band >= 40) & (band < 60)).select(
         "o_orderkey",
@@ -1366,7 +1366,7 @@ def snapshot_predicate_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_read, snapshot_write_with_stats
+    from ..sources.snapshots import snapshot_read, snapshot_write
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_pdml_{os.getpid()}_{path_tag(sf_dir)}"
@@ -1376,7 +1376,7 @@ def snapshot_predicate_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=6)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=6)
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE pdml_orders USING snapshot LOCATION '{t}'")
     cat.sql("DELETE FROM pdml_orders WHERE o_orderkey % 10 = 3")
@@ -1429,7 +1429,7 @@ def snapshot_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataF
         snapshot_files_for_values,
         snapshot_read_range,
         snapshot_set_partitioning,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -1441,8 +1441,8 @@ def snapshot_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataF
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     band = F.pmod("o_orderkey", F.lit(100))
-    snapshot_write_with_stats(
-        o.where(band < 60), t, ["o_orderkey"], n_files=4
+    snapshot_write(
+        o.where(band < 60), t, stats_cols=["o_orderkey"], n_files=4
     )
     pre_files = set(_read_manifest(t, current_version(t))["files"])
     snapshot_set_partitioning(t, "o_orderstatus")
@@ -1490,7 +1490,7 @@ def snapshot_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataF
 def snapshot_bucketed_join_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed snapshot-to-snapshot join under the driver's hash gate:
     commit an orders subset and the customer table through
-    snapshot_write_bucketed (8 buckets on the join key, spec in the
+    snapshot_write(..., bucket_by=...) (8 buckets on the join key, spec in
     manifest), register both versions as external bucketed tables, and
     aggregate their merge-hinted equi-join. A guard RAISES if the
     physical plan contains any Exchange — the whole point of the layout
@@ -1506,7 +1506,7 @@ def snapshot_bucketed_join_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.catalog import load_table
     from ..sources.snapshots import (
         snapshot_bucketed_table,
-        snapshot_write_bucketed,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -1517,8 +1517,8 @@ def snapshot_bucketed_join_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice"
     ).where(F.pmod("o_orderkey", F.lit(100)) < 50)
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    snapshot_write_bucketed(o, base / "orders", "o_custkey", 8)
-    snapshot_write_bucketed(c, base / "customer", "c_custkey", 8)
+    snapshot_write(o, base / "orders", bucket_by=("o_custkey", 8))
+    snapshot_write(c, base / "customer", bucket_by=("c_custkey", 8))
     a = snapshot_bucketed_table(spark, base / "orders", "bjoin_orders")
     b = snapshot_bucketed_table(spark, base / "customer", "bjoin_customer")
     j = a.join(b.hint("merge"), a.o_custkey == b.c_custkey)
@@ -1580,7 +1580,7 @@ def snapshot_txn_two_table_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_write_with_stats
+    from ..sources.snapshots import snapshot_write
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_txn_{os.getpid()}_{path_tag(sf_dir)}"
@@ -1588,15 +1588,15 @@ def snapshot_txn_two_table_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     to, tc = base / "orders", base / "customer"
     band = F.pmod("o_orderkey", F.lit(100))
-    snapshot_write_with_stats(
+    snapshot_write(
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .where(band < 50),
-        to, ["o_orderkey"], n_files=4,
+        to, stats_cols=["o_orderkey"], n_files=4,
     )
-    snapshot_write_with_stats(
+    snapshot_write(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal"),
-        tc, ["c_custkey"], n_files=2,
+        tc, stats_cols=["c_custkey"], n_files=2,
     )
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE txn_orders USING snapshot LOCATION '{to}'")
@@ -1680,7 +1680,7 @@ def snapshot_cdc_mirror_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_merge,
         snapshot_read,
         snapshot_update_where,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -1690,7 +1690,7 @@ def snapshot_cdc_mirror_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_t, rep_t = base / "source", base / "replica"
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     band = F.pmod("o_orderkey", F.lit(100))
-    snapshot_write_with_stats(o.where(band < 50), src_t, ["o_orderkey"], n_files=6)
+    snapshot_write(o.where(band < 50), src_t, stats_cols=["o_orderkey"], n_files=6)
     v1 = current_version(src_t)
     snapshot_clone(src_t, rep_t)
     # the source advances: update, delete, insert (the predicate DML
@@ -1761,7 +1761,7 @@ def snapshot_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshots import (
         _manifest_path,
         snapshot_append,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -1785,8 +1785,8 @@ def snapshot_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
         if "tt_orders" in cat._tables:
             cat.drop_table("tt_orders")
-        snapshot_write_with_stats(
-            o.where(band < 5), t, ["o_orderkey"], n_files=4
+        snapshot_write(
+            o.where(band < 5), t, stats_cols=["o_orderkey"], n_files=4
         )  # v1
         snapshot_append(o.where(band >= 5), t)  # v2
         cat.sql(f"CREATE TABLE tt_orders USING snapshot LOCATION '{t}'")
@@ -1846,7 +1846,7 @@ def snapshot_soft_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_read, snapshot_write_with_stats
+    from ..sources.snapshots import snapshot_read, snapshot_write
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_sdel_{os.getpid()}_{path_tag(sf_dir)}"
@@ -1857,8 +1857,8 @@ def snapshot_soft_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     band = F.pmod("o_orderkey", F.lit(100))
-    snapshot_write_with_stats(
-        o.where(band < 60), t, ["o_orderkey"], n_files=6
+    snapshot_write(
+        o.where(band < 60), t, stats_cols=["o_orderkey"], n_files=6
     )
     o.where(band < 30).select(
         "o_orderkey",
@@ -1922,7 +1922,7 @@ def snapshot_subquery_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_read, snapshot_write_with_stats
+    from ..sources.snapshots import snapshot_read, snapshot_write
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_sqdml_{os.getpid()}_{path_tag(sf_dir)}"
@@ -1932,13 +1932,13 @@ def snapshot_subquery_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    snapshot_write_with_stats(o, t, ["o_custkey"], n_files=6)
+    snapshot_write(o, t, stats_cols=["o_custkey"], n_files=6)
     stage = (
         load_table(spark, sf_dir, "customer")
         .where(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey", "c_acctbal")
     )
-    snapshot_write_with_stats(stage, s, ["c_custkey"], n_files=2)
+    snapshot_write(stage, s, stats_cols=["c_custkey"], n_files=2)
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE sq_orders USING snapshot LOCATION '{t}'")
     cat.sql(f"CREATE TABLE sq_stage USING snapshot LOCATION '{s}'")
@@ -1989,7 +1989,7 @@ def snapshot_replace_where_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_read, snapshot_write_with_stats
+    from ..sources.snapshots import snapshot_read, snapshot_write
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_rw_{os.getpid()}_{path_tag(sf_dir)}"
@@ -1999,7 +1999,7 @@ def snapshot_replace_where_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=8)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=8)
     o.createOrReplaceTempView("rw_src")
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE rw_orders USING snapshot LOCATION '{t}'")
@@ -2049,7 +2049,7 @@ def snapshot_multicol_partition_read(spark: SparkSession, sf_dir: str) -> DataFr
         snapshot_append,
         snapshot_files_for_values,
         snapshot_read_range,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -2062,8 +2062,8 @@ def snapshot_multicol_partition_read(spark: SparkSession, sf_dir: str) -> DataFr
         F.pmod("o_orderkey", F.lit(4)).cast("int").alias("o_band"),
     )
     band = F.pmod("o_orderkey", F.lit(100))
-    snapshot_write_with_stats(
-        o.where(band < 50), t, ["o_orderkey"], n_files=4
+    snapshot_write(
+        o.where(band < 50), t, stats_cols=["o_orderkey"], n_files=4
     )
     pre = set(_read_manifest(t, current_version(t))["files"])
     cat = SnapshotCatalog(spark)
@@ -2131,7 +2131,7 @@ def snapshot_schema_ddl_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_read, snapshot_write_with_stats
+    from ..sources.snapshots import snapshot_read, snapshot_write
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_sddl_{os.getpid()}_{path_tag(sf_dir)}"
@@ -2142,8 +2142,8 @@ def snapshot_schema_ddl_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice"
     )
     band = F.pmod("o_orderkey", F.lit(100))
-    snapshot_write_with_stats(
-        o.where(band < 40), t, ["o_orderkey"], n_files=4
+    snapshot_write(
+        o.where(band < 40), t, stats_cols=["o_orderkey"], n_files=4
     )
     o.where((band >= 40) & (band < 60)).createOrReplaceTempView("sddl_src")
     cat = SnapshotCatalog(spark)
@@ -2194,7 +2194,7 @@ def snapshot_or_pruning_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         current_version,
         snapshot_files_for_predicate,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -2205,7 +2205,7 @@ def snapshot_or_pruning_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=6)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=6)
     pred = (
         "o_orderkey BETWEEN 100 AND 299 OR o_orderkey BETWEEN 900 AND 1099"
     )
@@ -2257,7 +2257,7 @@ def snapshot_ctas_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshots import (
         snapshot_append,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -2269,8 +2269,8 @@ def snapshot_ctas_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice"
     )
     band = F.pmod("o_orderkey", F.lit(100))
-    snapshot_write_with_stats(
-        o.where(band < 50), src_t, ["o_orderkey"], n_files=4
+    snapshot_write(
+        o.where(band < 50), src_t, stats_cols=["o_orderkey"], n_files=4
     )  # v1
     snapshot_append(o.where(band >= 50), src_t)  # v2
     cat = SnapshotCatalog(spark)
@@ -2327,7 +2327,7 @@ def snapshot_mirror_loop_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_delete_where,
         snapshot_read,
         snapshot_update_where,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
     from ..streaming.pipeline import snapshot_mirror_cycle
 
@@ -2340,8 +2340,8 @@ def snapshot_mirror_loop_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice"
     )
     band = F.pmod("o_orderkey", F.lit(100))
-    snapshot_write_with_stats(
-        o.where(band < 40), src_t, ["o_orderkey"], n_files=6
+    snapshot_write(
+        o.where(band < 40), src_t, stats_cols=["o_orderkey"], n_files=6
     )
     boot = current_version(src_t)
     snapshot_clone(src_t, rep_t)
@@ -2400,7 +2400,7 @@ def snapshot_copy_into_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshots import (
         current_version,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -2413,8 +2413,8 @@ def snapshot_copy_into_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     band = F.pmod("o_orderkey", F.lit(100))
     o.where(band < 60).repartition(4).write.parquet(str(land))
-    snapshot_write_with_stats(
-        o.where(band < 0), t, ["o_orderkey"], n_files=1
+    snapshot_write(
+        o.where(band < 0), t, stats_cols=["o_orderkey"], n_files=1
     )  # empty-seeded table fixes the schema
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE cpi_orders USING snapshot LOCATION '{t}'")
@@ -2468,7 +2468,7 @@ def snapshot_purge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         _read_manifest,
         current_version,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -2479,7 +2479,7 @@ def snapshot_purge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    snapshot_write_with_stats(o, t, ["o_orderkey"], n_files=6)
+    snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=6)
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE purge_orders USING snapshot LOCATION '{t}'")
     cat.sql("DELETE FROM purge_orders WHERE o_orderkey % 10 = 3")
@@ -2529,7 +2529,7 @@ def snapshot_analyze_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         current_version,
         snapshot_files_for_range,
         snapshot_read_range,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     base = Path(tempfile.gettempdir()) / (
@@ -2540,7 +2540,7 @@ def snapshot_analyze_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    snapshot_write_with_stats(o, src_t, ["o_orderkey"], n_files=6)
+    snapshot_write(o, src_t, stats_cols=["o_orderkey"], n_files=6)
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE anl_src USING snapshot LOCATION '{src_t}'")
     cat.sql(
@@ -2601,7 +2601,7 @@ def snapshot_schema_evolution_merge_read(
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_read, snapshot_write_with_stats
+    from ..sources.snapshots import snapshot_read, snapshot_write
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_sev_{os.getpid()}_{path_tag(sf_dir)}"
@@ -2609,10 +2609,10 @@ def snapshot_schema_evolution_merge_read(
     shutil.rmtree(base, ignore_errors=True)
     t = base / "orders"
     o = load_table(spark, sf_dir, "orders")
-    snapshot_write_with_stats(
+    snapshot_write(
         o.where(F.col("o_orderkey") % 3 != 0)
         .select("o_orderkey", "o_totalprice"),
-        t, ["o_orderkey"], n_files=4,
+        t, stats_cols=["o_orderkey"], n_files=4,
     )
     o.where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey",
@@ -2790,7 +2790,7 @@ def snapshot_table_changes_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_write_with_stats
+    from ..sources.snapshots import snapshot_write
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_tc_{os.getpid()}_{path_tag(sf_dir)}"
@@ -2798,9 +2798,9 @@ def snapshot_table_changes_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     t = base / "orders"
     o = load_table(spark, sf_dir, "orders")
-    snapshot_write_with_stats(
+    snapshot_write(
         o.select("o_orderkey", "o_custkey", "o_totalprice"),
-        t, ["o_orderkey"], n_files=4,
+        t, stats_cols=["o_orderkey"], n_files=4,
     )  # v1
     o.createOrReplaceTempView("tc_raw_orders")
     cat = SnapshotCatalog(spark)

@@ -60,7 +60,6 @@ from ..sources.snapshots import (
     snapshot_files_for_values,
     snapshot_read,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 from .ann_index import PROBE_DRIVER_BATCH_CAP, _probe_batch_capped
 from .similarity import N_QUERIES, TOP_K, cosine_topk_epilogue
@@ -473,7 +472,7 @@ def build_ivfpq_index(
             )
 
     cells = cand.mapInPandas(enc, schema=_IVFPQ_CELLS_SCHEMA)
-    snapshot_write_with_stats(cells, root / "cells", ["centroid_id"], n_files=nlist)
+    snapshot_write(cells, root / "cells", stats_cols=["centroid_id"], n_files=nlist)
     crows = [(i, [float(x) for x in cents[i]]) for i in range(len(cents))]
     cdf = spark.createDataFrame(crows, ["centroid_id", "centroid"]).select(
         F.col("centroid_id").cast("int"), F.col("centroid").cast("array<double>")

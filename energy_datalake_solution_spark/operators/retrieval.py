@@ -554,25 +554,23 @@ def build_bm25_index(spark: SparkSession, sf_dir: str, index_root) -> tuple[int,
     rebuilds are new versions, readers keep consistent snapshots,
     rollback/vacuum work as for any table."""
     root = Path(index_root)
-    from ..sources.snapshots import (
-        snapshot_read,
-        snapshot_write,
-        snapshot_write_with_stats,
-    )
+    from ..sources.snapshots import snapshot_read, snapshot_write
 
     d = load_table(spark, sf_dir, "documents")
     n_docs = d.count()  # metadata-only: parquet footer row counts
 
     postings = _bm25_postings(d)
-    snapshot_write_with_stats(
-        postings, root / "postings", ["term_bucket"], n_files=BM25_INDEX_FILES
+    snapshot_write(
+        postings, root / "postings", stats_cols=["term_bucket"],
+        n_files=BM25_INDEX_FILES,
     )
     committed = snapshot_read(spark, root / "postings")
     vocab = committed.groupBy("term_bucket", "term").agg(
         F.count(F.lit(1)).cast("long").alias("df")
     )
-    snapshot_write_with_stats(
-        vocab, root / "vocab", ["term_bucket"], n_files=BM25_INDEX_FILES
+    snapshot_write(
+        vocab, root / "vocab", stats_cols=["term_bucket"],
+        n_files=BM25_INDEX_FILES,
     )
     n_text_docs, sum_dl = (
         committed.select("doc_id", "dl")

@@ -183,7 +183,7 @@ def merge_upsert(
                 # pre-format plain-parquet table: fold its rows into this
                 # first snapshot commit or they would silently vanish
                 # behind the manifest (survivors via the same anti-join)
-                from .snapshots import snapshot_write_with_stats
+                from .snapshots import snapshot_write
 
                 survivors = legacy.join(
                     incoming.select(*keys), on=keys, how="left_anti"
@@ -193,8 +193,9 @@ def merge_upsert(
                 # the legacy files they were read from. Range-split on the
                 # key with stats, same as a fresh table's seeded first
                 # commit — migrated tables prune their upserts too.
-                snapshot_write_with_stats(
-                    merged.localCheckpoint(eager=True), tp, [keys[0]], n_files=8
+                snapshot_write(
+                    merged.localCheckpoint(eager=True), tp,
+                    stats_cols=[keys[0]], n_files=8,
                 )
                 # the commit is durable — remove the pre-format files, or
                 # they would sit beside data/ as a dead full table copy

@@ -240,9 +240,9 @@ def write_zordered(
     bits: int = 8,
 ) -> None:
     """zorder_arrange_n over (a, b) + overwrite parquet write (the original
-    sink form); snapshot_write_zordered_n (sources/snapshots.py) commits
-    the SAME arrangement through the manifest format with per-file stats
-    on both columns."""
+    sink form); snapshot_write(..., zorder_by=...) (sources/snapshots.py)
+    commits the SAME arrangement through the manifest format with per-file
+    stats on both columns."""
     zorder_arrange_n(
         df, [col_a, col_b], n_files=n_files, bits=bits
     ).write.mode("overwrite").parquet(str(path))

@@ -950,7 +950,7 @@ class SnapshotCatalog:
             return None
         m = _CTAS_RE.match(text)
         if m:
-            from .snapshots import snapshot_write, snapshot_write_partitioned
+            from .snapshots import snapshot_write
 
             name, replace = m.group("name"), bool(m.group("replace"))
             if self._txn is not None:
@@ -971,13 +971,11 @@ class SnapshotCatalog:
                     "(use CREATE OR REPLACE TABLE)"
                 )
             part = m.group("part1") or m.group("part2")
-            if part:
-                snapshot_write_partitioned(
-                    self.spark, self._fresh_sql(m.group("query")), path,
-                    [c.strip() for c in part.split(",")],
-                )
-            else:
-                snapshot_write(self._fresh_sql(m.group("query")), path)
+            snapshot_write(
+                self._fresh_sql(m.group("query")), path,
+                partition_by=[c.strip() for c in part.split(",")]
+                if part else None,
+            )
             self.create_table(name, path)
             return None
         m = _CREATE_EMPTY_RE.match(text)

@@ -134,7 +134,9 @@ def _arrow_batches(part: _FilePartition):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    table = pq.read_table(part.path)
+    # Spark writes timestamps as INT96, which pyarrow reads as
+    # timestamp[ns] by default — a unit the Arrow-to-Spark bridge refuses
+    table = pq.read_table(part.path, coerce_int96_timestamp_unit="us")
     # reserved row-provenance columns (MOR update appends) are INTERNAL:
     # the library's every read path strips them (snapshots.py::_strip_prov)
     # and the DataSource must match — surfacing them would let an

@@ -19,8 +19,8 @@ core directly, which also makes the semantics inspectable:
     at an older manifest (an O(1) metadata operation, no data copied).
 
 At 100 TB the mechanism is unchanged — manifests hold file lists AND
-per-file min/max column stats (snapshot_write_with_stats collects them
-from the parquet footers at commit; snapshot_read_range prunes files
+per-file min/max column stats (snapshot_write's ``stats_cols`` collects
+them from the parquet footers at commit; snapshot_read_range prunes files
 against them before Spark ever lists a path); the pointer swap is the
 only serialization point, exactly like Delta's ``_delta_log`` tail.
 Multi-writer commits are OPTIMISTIC (Delta's documented protocol on a
@@ -869,7 +869,7 @@ def snapshot_widen_column(
                 f"cannot widen {col!r} on a bucketed table: the "
                 "registered CLUSTERED BY view reads the spec's frozen "
                 "schema DDL, which a type change would silently stale — "
-                "rewrite through snapshot_write_bucketed instead"
+                "rewrite through snapshot_write(..., bucket_by=...) instead"
             )
         sch = m.get("schema")
         pcol, declared = col, None
@@ -942,13 +942,13 @@ def snapshot_widen_column(
 
 
 def _prep_replace_batch(df: DataFrame, p, tip: int, m_tip: dict) -> DataFrame:
-    """Shared prelude for every row-creating FULL-REPLACE writer
-    (snapshot_write and the layout writers: with_stats, with_bloom,
-    zordered): enforce constraints, then on mapped tables materialize
-    write defaults and generated columns, map logical names to their
-    frozen physical names, and apply the declared-type discipline (the
-    first write into an empty-DDL table must not freeze a bare SQL
-    literal's narrower physical type; void columns always cast).
+    """Shared prelude of the row-creating FULL-REPLACE writer
+    (snapshot_write, every layout): enforce constraints, then on mapped
+    tables materialize write defaults and generated columns, map logical
+    names to their frozen physical names, and apply the declared-type
+    discipline (the first write into an empty-DDL table must not freeze
+    a bare SQL literal's narrower physical type; void columns always
+    cast).
     IDENTITY tables must be routed or refused by the CALLER before this
     runs — allocation needs replace_where's rebase loop, which a
     file-reusing full-replace rebase cannot provide."""
@@ -973,22 +973,157 @@ def _prep_replace_batch(df: DataFrame, p, tip: int, m_tip: dict) -> DataFrame:
     ])
 
 
-def snapshot_write(df: DataFrame, table_path) -> int:
+def snapshot_write(
+    df: DataFrame,
+    table_path,
+    *,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    n_files: int | None = None,
+    zorder_by: list[str] | None = None,
+    bucket_by: "tuple[str, int] | None" = None,
+    partition_by: list[str] | None = None,
+) -> int:
     """Commit df as a full-replace new version; returns the version.
 
-    Identity tables route to :func:`snapshot_replace_where` with
-    ``condition=None`` (Delta's overwrite-into-identity-table): its
-    commit loop re-allocates from each rebase attempt's fresh high-water
-    mark, which this function's file-reusing rebase cannot do."""
+    One file layout per call:
+
+    * none: one file per partition of ``df``;
+    * ``n_files`` with ``stats_cols``: a range split on ``stats_cols[0]``
+      (disjoint per-file key ranges are what make the stats selective);
+      ``n_files`` alone: a round-robin split;
+    * ``zorder_by``: the Morton curve over those columns into ``n_files``
+      (default 8) files — Delta's OPTIMIZE ZORDER BY (c1, ..., cN), so
+      snapshot_read_box / _rect / _range prune on any predicate subset
+      (the arrangement is sources/sinks.py::zorder_arrange_n);
+    * ``bucket_by=(col, n)``: Spark's bucketed file layout, with the spec
+      recorded — two tables bucketed the same way join with NO Exchange
+      through :func:`snapshot_bucketed_table`; appends honor the spec,
+      and rewriting through this call restores a layout that MOR
+      writers broke. Column-mapped tables refuse (bucket metadata binds
+      physical names to the join attribute);
+    * ``partition_by``: one file set per partition-value tuple, with the
+      spec recorded (LOGICAL names) — the write behind partitioned CTAS;
+      later inserts route through the spec.
+
+    Any other combination raises ValueError. The manifest records
+    per-file min/max for ``stats_cols`` plus the z-order or partition
+    columns (collected from the footers BEFORE the commit publishes) and
+    Bloom filters for ``bloom_cols``; names are LOGICAL and are stored
+    under their physical names on column-mapped tables.
+
+    Write defaults and generated columns materialize BEFORE a z-order
+    arrangement (clustering on a column the batch omits clusters its
+    stored write-time value); the shared prelude then enforces
+    constraints and maps the batch to physical names. Identity tables
+    route to :func:`snapshot_replace_where` with ``condition=None``
+    (Delta's overwrite-into-identity-table) after the arrangement: its
+    commit loop re-allocates ids from each rebase attempt's fresh
+    high-water mark, which this function's file-reusing rebase cannot
+    do. Requested blooms then backfill through
+    :func:`snapshot_analyze_blooms` — TWO commits (a reader between
+    them sees the rows with no filters yet; blooms are pruning hints,
+    so nothing is ever wrong, only momentarily unpruned). The bucket
+    and partition layouts refuse identity tables."""
+    layouts = [x for x in (zorder_by, bucket_by, partition_by) if x is not None]
+    if len(layouts) > 1 or (n_files and layouts and zorder_by is None):
+        raise ValueError(
+            "snapshot_write takes one layout: n_files (optionally range "
+            "split on stats_cols[0]), zorder_by [+ n_files], bucket_by "
+            "or partition_by"
+        )
     p = _table(table_path)
     tip = current_version(p)
     m_tip = _read_manifest(p, tip) if tip else {}
-    if _identity_cols(m_tip.get("schema")):
+    sch = m_tip.get("schema") if tip else None
+    if bucket_by is not None and sch:
+        raise ValueError(
+            "bucketed layout on column-mapped tables is unsupported"
+        )
+    if partition_by is not None and _identity_cols(sch):
+        raise NotImplementedError(
+            "partitioned CTAS replace over a GENERATED ALWAYS AS "
+            "IDENTITY table is unsupported (the per-partition file "
+            "routing has no per-rebase id allocation) — CTAS without "
+            "PARTITIONED BY routes allocation through "
+            "snapshot_replace_where, or DROP the table first"
+        )
+    # the layout's own columns always carry stats
+    stats_cols = list(dict.fromkeys(
+        [*(zorder_by or partition_by or ()), *(stats_cols or ())]
+    ))
+
+    def physical(cols):
+        return [_mapping_physical(sch, c) for c in cols] if sch else list(cols)
+
+    # arrange in LOGICAL space, before the identity route — the layout
+    # is identical either way
+    if zorder_by is not None:
+        from .sinks import zorder_arrange_n
+
+        df = _materialize_generated(_materialize_wdefaults(df, sch), sch)
+        df = zorder_arrange_n(df, zorder_by, n_files=n_files or 8)
+    elif n_files and stats_cols:
+        df = df.repartitionByRange(n_files, stats_cols[0])
+    elif n_files:
+        df = df.repartition(n_files)
+    if _identity_cols(sch):
         # route BEFORE enforcement — replace_where runs the full gate
-        # itself (running it here too would double every LIMIT-1 job)
-        return snapshot_replace_where(df.sparkSession, p, None, df)
+        # itself (running it here too would double every LIMIT-1 job);
+        # identity tables are always mapped, so stats go physical
+        v = snapshot_replace_where(
+            df.sparkSession, p, None, df,
+            stats_cols=physical(stats_cols) or None,
+        )
+        if bloom_cols:
+            return snapshot_analyze_blooms(df.sparkSession, p, bloom_cols)
+        return v
     df = _prep_replace_batch(df, p, tip, m_tip)
-    return _commit_full_replace(p, _write_files(df, p))
+    if partition_by is not None:
+        try:
+            pcols = physical(partition_by)
+        except KeyError:
+            raise ValueError(
+                f"PARTITIONED BY names column(s) not in the replaced "
+                f"table's column mapping (spec: {list(partition_by)}, "
+                f"live: {[c['name'] for c in sch['cols']]})"
+            ) from None
+        missing = [
+            c for c, pc in zip(partition_by, pcols) if pc not in df.columns
+        ]
+        if missing:
+            raise ValueError(
+                f"PARTITIONED BY names column(s) {missing} the CTAS query "
+                "does not produce"
+            )
+    stats_cols = physical(stats_cols)
+    bloom_cols = physical(bloom_cols or ())
+    if bucket_by is not None:
+        col, n = bucket_by
+        files = _write_files_bucketed(df, p, col, n)
+        # the schema DDL travels in the spec so registration needs no
+        # footer read — and an EMPTY bucketed table still registers
+        ddl = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+        )
+        op, bucketing = "write-bucketed", {"col": col, "n": n, "ddl": ddl}
+    elif partition_by is not None:
+        files = _write_files_by_partition(df, p, pcols, what="partitioned CTAS")
+        op, bucketing = "write-part", CLEAR_METADATA
+    else:
+        files = _write_files(df, p)
+        op, bucketing = "write", CLEAR_METADATA
+    spark = df.sparkSession
+    return _commit_full_replace(
+        p, files, op=op, bucketing_meta=bucketing,
+        stats=_collect_stats(p, files, stats_cols, spark=spark)
+        if stats_cols else None,
+        blooms=_collect_blooms(p, files, bloom_cols, spark)
+        if bloom_cols else None,
+        partitioning_meta=(
+            {"cols": list(partition_by)} if partition_by is not None else None
+        ),
+    )
 
 
 def _carry_blooms(
@@ -1138,17 +1273,9 @@ def snapshot_append(
             )
         # honor the table's partition spec: one file set per partition
         # value TUPLE with exact point stats on every spec column (the
-        # evolved-layout write path) — the distinct pull is
-        # partition-count-sized driver work
-        vals = [
-            tuple(r) for r in df.select(*part_cols).distinct().collect()
-        ]
-        if any(v is None for t_ in vals for v in t_):
-            raise ValueError(
-                "NULL partition values cannot route (partitioned append)"
-            )
+        # evolved-layout write path)
         files = _write_files_by_partition(
-            df.sparkSession, df, p, part_cols, vals
+            df, p, part_cols, what="partitioned append"
         )
         eff_stats_cols = sorted(set(stats_cols or []) | set(part_cols))
     else:
@@ -1358,11 +1485,10 @@ def snapshot_upsert(
     if current_version(p) == 0:
         # table creation (full replace either way); the rebase inside the
         # write handles a concurrent creator racing this one
-        if seed_stats_files:
-            return snapshot_write_with_stats(
-                df, p, [keys[0]], n_files=seed_stats_files
-            )
-        return snapshot_write(df, p)
+        return snapshot_write(
+            df, p, stats_cols=[keys[0]] if seed_stats_files else None,
+            n_files=seed_stats_files,
+        )
     id_cols_u = _identity_cols(
         _read_manifest(p, current_version(p)).get("schema")
     )
@@ -3369,49 +3495,6 @@ def _commit_full_replace(p: Path, files: list[str], *, stats=None, blooms=None,
     raise AssertionError("unreachable")
 
 
-def snapshot_write_with_stats(
-    df: DataFrame, table_path, stats_cols: list[str], n_files: int | None = None
-) -> int:
-    """Full-replace commit that records per-file min/max for ``stats_cols``
-    in the manifest (collected from the parquet footers BEFORE the commit
-    publishes, so the manifest is immutable like any other). Pass
-    ``n_files`` to range-partition the data by the first stats column
-    first — disjoint per-file key ranges are what make the stats selective
-    (a hash layout gives every file the full range).
-
-    Same full-replace prelude as snapshot_write: identity tables route
-    to :func:`snapshot_replace_where` (condition=None, same stats_cols —
-    its rebase loop re-allocates ids; the allocation's one batch
-    exchange may re-coalesce the range layout, but the collected stats
-    keep every prune CORRECT), and mapped tables materialize write
-    defaults + generated columns before going physical."""
-    p = _table(table_path)
-    tip = current_version(p)
-    m_tip = _read_manifest(p, tip) if tip else {}
-    sch = m_tip.get("schema") if tip else None
-    if n_files:
-        # range-split in LOGICAL space, before physical mapping or the
-        # identity route — the layout is identical either way
-        df = df.repartitionByRange(n_files, *stats_cols[:1])
-    if _identity_cols(sch):
-        # replace_where tracks stats_cols in PHYSICAL space (identity
-        # tables are always mapped), so translate before routing
-        return snapshot_replace_where(
-            df.sparkSession, p, None, df,
-            stats_cols=[_mapping_physical(sch, c) for c in stats_cols],
-        )
-    df = _prep_replace_batch(df, p, tip, m_tip)
-    if sch:
-        # mapped table: files and manifest stats keys live in PHYSICAL
-        # space (exactly snapshot_write's disposition) — writing logical
-        # names here would surface NULLs on mapped reads and break
-        # pruning (stats keyed by names no data file carries).
-        stats_cols = [_mapping_physical(sch, c) for c in stats_cols]
-    files = _write_files(df, p)
-    stats = _collect_stats(p, files, stats_cols, spark=df.sparkSession)
-    return _commit_full_replace(p, files, stats=stats)
-
-
 def snapshot_delete_range(
     spark: SparkSession, table_path, col: str, lo, hi
 ) -> int:
@@ -4611,17 +4694,8 @@ def snapshot_replace_where(
                         f"replacement batch lacks partition column(s) "
                         f"{missing}"
                     )
-                vals = [
-                    tuple(r)
-                    for r in batch.select(*part_cols).distinct().collect()
-                ]
-                if any(v is None for t_ in vals for v in t_):
-                    raise ValueError(
-                        "NULL partition values cannot route "
-                        "(partitioned replace)"
-                    )
                 new_files = _write_files_by_partition(
-                    spark, batch, p, part_cols, vals
+                    batch, p, part_cols, what="partitioned replace"
                 )
             else:
                 new_files = _write_files(batch, p)
@@ -5347,14 +5421,13 @@ def snapshot_zorder_compact_n(
     table_path,
     cols: list,
     n_files: int = 8,
-    bits: int = 8,
     incremental: bool = False,
 ) -> int:
     """OPTIMIZE ZORDER BY (c1, ..., cN): rewrite the current version on
-    the N-ary Morton curve, ``bits`` quantile bits per column, and commit
+    the N-ary Morton curve (8 quantile bits per column), and commit
     with per-file min/max stats for every z column — the maintenance
-    form of snapshot_write_zordered_n for tables whose appends have
-    destroyed locality (stream ingest writes arrival-ordered files;
+    form of snapshot_write(..., zorder_by=...) for tables whose appends
+    have destroyed locality (stream ingest writes arrival-ordered files;
     after enough of them every range read admits every file). The
     arrangement is the sink tier's DETERMINISTIC z-bucket layout
     (sources/sinks.py::zorder_arrange_n), so repeated compactions of the
@@ -5387,7 +5460,7 @@ def snapshot_zorder_compact_n(
 
     def arrange(df, touched, name):
         return zorder_arrange_n(
-            df, [name(c) for c in cols], n_files=n_files, bits=bits
+            df, [name(c) for c in cols], n_files=n_files
         )
 
     return _rewrite(spark, p, "zorder", pick, arrange, stats_cols=cols,
@@ -5517,72 +5590,12 @@ def _file_bloom(path: str, col: str) -> str | None:
     return base64.b64encode(bytes(bits)).decode()
 
 
-def snapshot_write_with_bloom(
-    df: DataFrame,
-    table_path,
-    bloom_cols: list[str],
-    stats_cols: list[str] | None = None,
-    n_files: int | None = None,
-) -> int:
-    """Full-replace commit carrying per-file Bloom filters for
-    ``bloom_cols`` (and optionally min/max stats for ``stats_cols``,
-    range-splitting on the first). Bloom collection mirrors
-    _collect_stats' bound: driver-side for small commits, a Spark job
-    over the file list above _DRIVER_STATS_MAX_FILES.
-
-    Same full-replace prelude as snapshot_write (constraints, write
-    defaults, generated columns, physical mapping); identity tables
-    route to the allocating replace_where and then backfill the
-    requested filters with :func:`snapshot_analyze_blooms` — TWO
-    commits instead of one (a reader between them sees the rows with
-    no filters yet; blooms are pruning hints, so nothing is ever
-    wrong, only momentarily unpruned)."""
-    p = _table(table_path)
-    tip = current_version(p)
-    m_tip = _read_manifest(p, tip) if tip else {}
-    sch = m_tip.get("schema") if tip else None
-    if _identity_cols(sch):
-        if n_files and stats_cols:
-            df = df.repartitionByRange(n_files, stats_cols[0])
-        elif n_files:
-            df = df.repartition(n_files)
-        snapshot_replace_where(
-            df.sparkSession, p, None, df,
-            stats_cols=(
-                [_mapping_physical(sch, c) for c in stats_cols]
-                if stats_cols else None
-            ),
-        )
-        return snapshot_analyze_blooms(df.sparkSession, p, bloom_cols)
-    if n_files and stats_cols:
-        df = df.repartitionByRange(n_files, stats_cols[0])
-    elif n_files:
-        df = df.repartition(n_files)
-    df = _prep_replace_batch(df, p, tip, m_tip)
-    if sch:
-        # manifest stats/bloom keys live in PHYSICAL space on mapped
-        # tables, exactly snapshot_write_with_stats' disposition
-        stats_cols = (
-            [_mapping_physical(sch, c) for c in stats_cols]
-            if stats_cols else stats_cols
-        )
-        bloom_cols = [_mapping_physical(sch, c) for c in bloom_cols]
-    files = _write_files(df, p)
-    stats = (
-        _collect_stats(p, files, stats_cols, spark=df.sparkSession)
-        if stats_cols
-        else None
-    )
-    blooms = _collect_blooms(p, files, bloom_cols, df.sparkSession)
-    return _commit_full_replace(p, files, stats=stats, blooms=blooms)
-
-
 def _collect_blooms(
     p: Path, files: list[str], bloom_cols: list[str], spark: SparkSession
 ) -> dict:
     """Per-file Bloom filters for ``bloom_cols`` over ``files`` —
     driver loop for small file lists, a Spark job above
-    _DRIVER_STATS_MAX_FILES (shared by snapshot_write_with_bloom and
+    _DRIVER_STATS_MAX_FILES (shared by snapshot_write and
     snapshot_analyze_blooms)."""
     root = str(p)
     if len(files) > _DRIVER_STATS_MAX_FILES:
@@ -5678,51 +5691,6 @@ def snapshot_files_for_point(table_path, col, value, version: int | None = None)
                 continue
         keep.append(rel)
     return keep
-
-
-def snapshot_write_zordered_n(
-    df: DataFrame,
-    table_path,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 8,
-) -> int:
-    """Full-replace commit laid out on the Morton curve over ``cols``,
-    with per-file min/max manifest stats for EVERY clustering column —
-    the manifest-format form of Delta's OPTIMIZE ZORDER BY (c1, ..., cN).
-    Files cover compact N-dimensional boxes, so snapshot_read_box /
-    snapshot_read_rect / snapshot_read_range prune on any predicate
-    subset, where a single-column range split only ever prunes its own
-    key. Reuses the sink tier's arrangement
-    (sources/sinks.py::zorder_arrange_n), so the layouts cannot drift.
-
-    Same full-replace prelude as snapshot_write; identity tables route
-    to replace_where AFTER arranging (the curve layout is computed in
-    logical space, so it survives the route; replace_where's rebase
-    loop allocates the ids and tracks the same stats columns). Write
-    defaults and generated columns materialize (logical space) BEFORE
-    the arrangement, so z-ordering on a column the batch omits clusters
-    the stored write-time value instead of failing on a missing column;
-    the prelude's later pass is a no-op for columns already present."""
-    from .sinks import zorder_arrange_n
-
-    p = _table(table_path)
-    tip = current_version(p)
-    m_tip = _read_manifest(p, tip) if tip else {}
-    sch = m_tip.get("schema") if tip else None
-    df = _materialize_wdefaults(df, sch)
-    df = _materialize_generated(df, sch)
-    df = zorder_arrange_n(df, cols, n_files=n_files, bits=bits)
-    if _identity_cols(sch):
-        return snapshot_replace_where(
-            df.sparkSession, p, None, df,
-            stats_cols=[_mapping_physical(sch, c) for c in cols],
-        )
-    df = _prep_replace_batch(df, p, tip, m_tip)
-    pcols = [_mapping_physical(sch, c) if sch else c for c in cols]
-    files = _write_files(df, p)
-    stats = _collect_stats(p, files, pcols, spark=df.sparkSession)
-    return _commit_full_replace(p, files, stats=stats)
 
 
 def snapshot_read_box(
@@ -6112,7 +6080,7 @@ def snapshot_enable_column_mapping(spark: SparkSession, table_path) -> int:
     schema into the manifest with stable ids; physical names freeze at
     their current spelling, so existing files read unchanged. Idempotent
     on an already-mapped table. BUCKETED tables refuse — the same
-    one-way contract as snapshot_write_bucketed's mapped-table refusal
+    one-way contract as snapshot_write's bucket_by mapped-table refusal
     (bucket metadata binds PHYSICAL names to the join attribute, and
     the bucketed view registers by those spellings; a later rename
     would leave the co-located join surface exposing stale names) —
@@ -6409,45 +6377,6 @@ def _write_files_bucketed(df: DataFrame, table_path: Path,
     )
 
 
-def snapshot_write_bucketed(
-    df: DataFrame, table_path, bucket_col: str, n_buckets: int,
-    stats_cols: list[str] | None = None,
-) -> int:
-    """Full-replace commit whose files carry Spark's bucketed layout,
-    with the spec (`{"col", "n"}`) recorded as manifest metadata. Two
-    snapshot tables bucketed the same way join with NO Exchange through
-    :func:`snapshot_bucketed_table` — the pre-shuffled co-location that
-    turns the biggest repeated join cost at 100 TB into a per-commit
-    write-side cost. Appends honor the spec (bucket-routed files
-    compose); MOR writers that add unbucketed files or deletion vectors
-    leave the spec in place and the VIEW fails loudly at registration
-    (never a silent mis-bucket) — rewrite through this function to
-    restore the layout. Column-mapped tables are rejected (bucket
-    metadata binds physical names to the join attribute)."""
-    p = _table(table_path)
-    tip = current_version(p)
-    _enforce_constraints(df, p, tip)
-    if tip and _read_manifest(p, tip).get("schema"):
-        raise ValueError(
-            "bucketed layout on column-mapped tables is unsupported"
-        )
-    files = _write_files_bucketed(df, p, bucket_col, n_buckets)
-    stats = (
-        _collect_stats(p, files, stats_cols, spark=df.sparkSession)
-        if stats_cols
-        else None
-    )
-    ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    return _commit_full_replace(
-        p, files, stats=stats, op="write-bucketed",
-        # the schema DDL travels in the spec so registration needs no
-        # footer read — and an EMPTY bucketed table still registers
-        bucketing_meta={"col": bucket_col, "n": n_buckets, "ddl": ddl},
-    )
-
-
 def snapshot_bucketed_table(
     spark: SparkSession, table_path, name: str, version: int | None = None
 ) -> DataFrame:
@@ -6474,14 +6403,14 @@ def snapshot_bucketed_table(
     if m.get("dv"):
         raise ValueError(
             "deletion vectors invalidate the bucketed view — rewrite "
-            "through snapshot_write_bucketed (or compact) first"
+            "through snapshot_write(..., bucket_by=...) (or compact) first"
         )
     bad = [f for f in m["files"] if not _BUCKET_FILE_RE.search(Path(f).name)]
     if bad:
         raise ValueError(
             f"{len(bad)} file(s) lack bucket naming (written outside the "
             f"bucketed path, e.g. {bad[0]!r}) — rewrite through "
-            "snapshot_write_bucketed first"
+            "snapshot_write(..., bucket_by=...) first"
         )
     vd = p / "_bucketed" / f"v{v}"
     if not vd.exists():
@@ -6580,8 +6509,8 @@ def snapshot_partitioning(table_path, version: int | None = None) -> list[str] |
 
 
 def _write_files_by_partition(
-    spark: SparkSession, df: DataFrame, table_path: Path,
-    partition_col: "str | list[str]", values: list,
+    df: DataFrame, table_path: Path, partition_col: "str | list[str]",
+    values: list | None = None, *, what: str = "",
 ) -> list[str]:
     """Materialize df with ONE FILE (set) PER PARTITION VALUE (single
     column) or PER VALUE TUPLE (multi-column spec, Hive/Iceberg's
@@ -6595,12 +6524,21 @@ def _write_files_by_partition(
     files across merges. Partition-count-sized driver work only (the
     token map literal); row routing is one codegen'd map lookup. For a
     multi-column spec the map key is the canonical unit-separator join
-    of the columns' string casts (rows carry no NULL spec values — the
-    append path rejects them)."""
+    of the columns' string casts.
+
+    ``values=None`` routes over the batch's own value tuples (one
+    distinct pull) and refuses a NULL spec value, naming ``what`` — the
+    full-replace, append and replace-where writes; upserts pass the
+    values they already hold."""
     from pyspark.sql import functions as F
 
     from .sinks import _partition_tokens
 
+    if values is None:
+        cols = [partition_col] if isinstance(partition_col, str) else partition_col
+        values = [tuple(r) for r in df.select(*cols).distinct().collect()]
+        if any(v is None for t_ in values for v in t_):
+            raise ValueError(f"NULL partition values cannot route ({what})")
     n = len(values)
     if n == 0:
         return _write_files(df, table_path)
@@ -6622,7 +6560,7 @@ def _write_files_by_partition(
         n = len(values)
     else:
         key_expr = F.col(partition_col)
-    tokens = _partition_tokens(spark, n)
+    tokens = _partition_tokens(df.sparkSession, n)
     # NULL routes to its own dedicated slot (carried rows from files
     # predating a partition-column evolution have no value for it)
     non_null = [v for v in values if v is not None]
@@ -6647,69 +6585,6 @@ def _write_files_by_partition(
         .drop("_pt")
     )
     return _write_files(routed, table_path)
-
-
-def snapshot_write_partitioned(
-    spark: SparkSession, df: DataFrame, table_path, part_cols: "list[str]"
-) -> int:
-    """Full-replace commit routed ONE FILE SET PER PARTITION-VALUE
-    TUPLE, with the spec recorded as manifest metadata and exact point
-    stats on every spec column — the write behind partitioned CTAS
-    (``CREATE TABLE ... PARTITIONED BY (...) AS SELECT ...``). Later
-    inserts route through the spec like any partitioned table; the
-    value prune admits exactly the touched partitions' files.
-
-    Same full-replace prelude as snapshot_write when the location
-    already holds a table (CREATE OR REPLACE ... PARTITIONED BY over a
-    standing table): constraints enforce, write defaults and generated
-    columns materialize, and a column-mapped table's batch maps logical
-    -> physical BEFORE routing — the spec records LOGICAL names (the
-    manifest convention; readers translate), while files and stats live
-    in physical space. IDENTITY tables refuse: the per-partition write
-    has no per-rebase allocation (plain CTAS routes allocation through
-    snapshot_replace_where; there is no partitioned equivalent)."""
-    p = _table(table_path)
-    part_cols = list(part_cols)
-    tip = current_version(p)
-    m_tip = _read_manifest(p, tip) if tip else {}
-    sch = m_tip.get("schema") if tip else None
-    if _identity_cols(sch):
-        raise NotImplementedError(
-            "partitioned CTAS replace over a GENERATED ALWAYS AS "
-            "IDENTITY table is unsupported (the per-partition file "
-            "routing has no per-rebase id allocation) — CTAS without "
-            "PARTITIONED BY routes allocation through "
-            "snapshot_replace_where, or DROP the table first"
-        )
-    df = _prep_replace_batch(df, p, tip, m_tip)
-    if sch:
-        try:
-            pcols = [_mapping_physical(sch, c) for c in part_cols]
-        except KeyError:
-            raise ValueError(
-                f"PARTITIONED BY names column(s) not in the replaced "
-                f"table's column mapping (spec: {part_cols}, live: "
-                f"{[c['name'] for c in sch['cols']]})"
-            ) from None
-    else:
-        pcols = part_cols
-    missing = [c for c, pc in zip(part_cols, pcols) if pc not in df.columns]
-    if missing:
-        raise ValueError(
-            f"PARTITIONED BY names column(s) {missing} the CTAS query "
-            "does not produce"
-        )
-    vals = [tuple(r) for r in df.select(*pcols).distinct().collect()]
-    if any(v is None for t_ in vals for v in t_):
-        raise ValueError(
-            "NULL partition values cannot route (partitioned CTAS)"
-        )
-    files = _write_files_by_partition(spark, df, p, pcols, vals)
-    stats = _collect_stats(p, files, pcols, spark=spark)
-    return _commit_full_replace(
-        p, files, stats=stats, op="write-part",
-        partitioning_meta={"cols": part_cols},
-    )
 
 
 def snapshot_upsert_partitioned(
@@ -6802,7 +6677,7 @@ def snapshot_upsert_partitioned(
             )
         if current_version(p) == 0:
             files = _write_files_by_partition(
-                spark, df, p, partition_col, touched_vals
+                df, p, partition_col, touched_vals
             )
             stats = _collect_stats(p, files, stats_cols, spark=spark)
             return _commit_full_replace(p, files, stats=stats, op="upsert-part",
@@ -6852,7 +6727,7 @@ def snapshot_upsert_partitioned(
             else:
                 merged, vals = df, touched_vals
             new_files = _write_files_by_partition(
-                spark, merged, p, partition_col, vals
+                merged, p, partition_col, vals
             )
             tracked = sorted(
                 {c for s in stats.values() for c in s} | set(stats_cols)

@@ -85,3 +85,34 @@ def test_merge_bench_last_agreeing_and_stale(tmp_path):
     # missing file: payload unchanged
     m3 = _merge_bench_last(p, str(tmp_path / "nowhere"))
     assert m3 == p
+
+
+def test_prev_payload_keeps_wrapper_cpus():
+    """The per-round wrapper records the run's core count beside its SF;
+    every recovered form must keep it."""
+    tail = '"b_q": 1.353, "c_q": 0.864}, "sf": 0.1, "host_mips": 29.8}'
+    assert _prev_payload(
+        {"sf": 0.1, "cpus": 32, "tail": tail, "parsed": None}
+    )["cpus"] == 32
+    assert _prev_payload(
+        {"sf": 0.1, "cpus": 32, "parsed": {"queries": {"q": 2.0}, "sf": 0.1}}
+    )["cpus"] == 32
+    # a line that records its own core count wins over the wrapper's
+    assert _prev_payload(
+        {"cpus": 32, "parsed": {"queries": {"q": 2.0}, "cpus": 4}}
+    )["cpus"] == 4
+    f = REPO / "BENCH_r17.json"
+    if f.exists():
+        assert _prev_payload(json.loads(f.read_text()))["cpus"] == 32
+
+
+def test_rounds_compare_only_at_same_sf_and_cores():
+    from bench import _comparable
+
+    prev = {"sf": 0.1, "cpus": 32}
+    assert _comparable(prev, 0.1, 32)
+    assert not _comparable(prev, 0.1, 4)    # cross-core ratios refused
+    assert not _comparable(prev, 0.01, 32)  # as cross-SF ones always were
+    # an unrecorded value is no evidence either way
+    assert _comparable({"sf": 0.1}, 0.1, 4)
+    assert _comparable(prev, 0.1, None)

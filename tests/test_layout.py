@@ -83,7 +83,7 @@ def test_zorder_n_columns_prunes_all_dimensions(spark, tmp_path):
         _read_manifest,
         current_version,
         snapshot_read_box,
-        snapshot_write_zordered_n,
+        snapshot_write,
     )
 
     df = spark.range(4096).select(
@@ -93,7 +93,7 @@ def test_zorder_n_columns_prunes_all_dimensions(spark, tmp_path):
         F.col("id").alias("payload"),
     )
     t = tmp_path / "t"
-    snapshot_write_zordered_n(df, t, ["a", "b", "c"], n_files=8)
+    snapshot_write(df, t, zorder_by=["a", "b", "c"], n_files=8)
     total = len(_read_manifest(t, current_version(t))["files"])
     assert total == 8
     out = snapshot_read_box(
@@ -126,7 +126,7 @@ def test_zorder_on_date_column(spark, tmp_path):
         "date_add(DATE'2026-01-01', CAST(id AS int)) AS day",
         "CAST(id % 8 AS int) AS v",
     )
-    S.snapshot_write_zordered_n(df, t, ["day", "v"], n_files=4)
+    S.snapshot_write(df, t, zorder_by=["day", "v"], n_files=4)
     got = S.snapshot_read(spark, t)
     assert got.count() == 64
     import datetime

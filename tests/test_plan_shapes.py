@@ -800,14 +800,14 @@ def test_change_feed_update_pairing_joins_broadcast(spark, tmp_path):
         current_version,
         snapshot_change_feed,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(200).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     v1 = current_version(t)
     snapshot_update_range_mor(spark, t, "k", 10, 30, {"v": F.col("v") + 1})
     cf = snapshot_change_feed(

@@ -1,6 +1,6 @@
 """Bucketed join layout in the snapshot format.
 
-``snapshot_write_bucketed`` records a bucket spec in the manifest and
+``snapshot_write(..., bucket_by=...)`` records a bucket spec in the manifest and
 writes Spark-bucket-named files; ``snapshot_bucketed_table`` registers a
 version's exact file list as an external bucketed catalog table, so two
 snapshot tables bucketed the same way JOIN WITH ZERO EXCHANGE — the
@@ -22,7 +22,7 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_append,
     snapshot_bucketed_table,
     snapshot_read,
-    snapshot_write_bucketed,
+    snapshot_write,
 )
 
 from .conftest import SF_ORACLE
@@ -44,8 +44,8 @@ def bucketed_pair(spark, tmp_path):
         "c_custkey", "c_name"
     )
     t_o, t_c = tmp_path / "orders", tmp_path / "customer"
-    snapshot_write_bucketed(o, t_o, "o_custkey", 8)
-    snapshot_write_bucketed(c, t_c, "c_custkey", 8)
+    snapshot_write(o, t_o, bucket_by=("o_custkey", 8))
+    snapshot_write(c, t_c, bucket_by=("c_custkey", 8))
     yield t_o, t_c, o, c
     for name in ("bt_orders", "bt_customer"):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -107,7 +107,7 @@ def test_bucketed_spec_cleared_by_plain_full_replace(spark, tmp_path):
 
     t = tmp_path / "t"
     df = spark.range(100).selectExpr("id AS k", "id * 2 AS v")
-    snapshot_write_bucketed(df, t, "k", 4)
+    snapshot_write(df, t, bucket_by=("k", 4))
     spec = _read_manifest(t, current_version(t)).get("bucketing")
     assert spec["col"] == "k" and spec["n"] == 4 and "bigint" in spec["ddl"]
     snapshot_write(df, t)  # plain full replace: unbucketed files
@@ -127,7 +127,7 @@ def test_bucketed_rejects_column_mapped_tables(spark, tmp_path):
     snapshot_write(df, t)
     snapshot_enable_column_mapping(spark, t)
     with pytest.raises(ValueError, match="column-mapped"):
-        snapshot_write_bucketed(df, t, "k", 4)
+        snapshot_write(df, t, bucket_by=("k", 4))
 
 
 def test_vacuum_drops_stale_bucketed_view_dirs(spark, tmp_path):
@@ -136,14 +136,14 @@ def test_vacuum_drops_stale_bucketed_view_dirs(spark, tmp_path):
     after vacuum works."""
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_vacuum,
-        snapshot_write_bucketed,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(50).selectExpr("id AS k", "id * 2 AS v")
-    snapshot_write_bucketed(df, t, "k", 4)            # v1
+    snapshot_write(df, t, bucket_by=("k", 4))            # v1
     snapshot_bucketed_table(spark, t, "bv_t", version=1)
-    snapshot_write_bucketed(df.limit(20), t, "k", 4)  # v2
+    snapshot_write(df.limit(20), t, bucket_by=("k", 4))  # v2
     snapshot_bucketed_table(spark, t, "bv_t")         # v2 view dir
     assert (t / "_bucketed" / "v1").exists()
     snapshot_vacuum(t, keep_versions=1)

@@ -130,14 +130,14 @@ def test_catalog_dml_insert_merge_delete_update(spark, tmp_path):
     INSERT appends, MERGE upserts on the key list, DELETE/UPDATE run the
     MOR range forms, and every statement is visible to the next query."""
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "fact"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(100).selectExpr("id AS k", "id * 10 AS v"), t,
-        ["k"], n_files=4,
+        stats_cols=["k"], n_files=4,
     )
     cat.sql(f"CREATE TABLE fact USING snapshot LOCATION '{t}'")
     cat.sql("INSERT INTO fact SELECT 1000 AS k, 1 AS v")
@@ -326,16 +326,16 @@ def test_catalog_describe_detail(spark, tmp_path):
         snapshot_append,
         snapshot_delete_range_mor,
         snapshot_set_partitioning,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "fact"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(100).selectExpr(
             "CAST(id AS int) AS k", "id AS v", "CAST(id % 3 AS string) AS cat"
         ),
-        t, ["k"], n_files=4,
+        t, stats_cols=["k"], n_files=4,
     )
     snapshot_set_partitioning(t, "cat")
     snapshot_delete_range_mor(spark, t, "k", 0, 4)
@@ -361,14 +361,14 @@ def test_catalog_optimize_compacts_and_zorders(spark, tmp_path):
         _read_manifest,
         current_version,
         snapshot_append,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "fact"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(200).selectExpr("id AS k", "id % 7 AS x", "id % 11 AS y"),
-        t, ["k"], n_files=4,
+        t, stats_cols=["k"], n_files=4,
     )
     for i in range(5):  # stream-shaped small appends
         snapshot_append(
@@ -395,16 +395,16 @@ def test_update_set_expressions_with_commas_and_strings(spark, tmp_path):
     """SET parsing is paren/quote-aware: function-call commas and quoted
     commas don't mis-split; a fragment with no `=` raises clearly."""
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "fact"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(10).selectExpr(
             "id AS k", "id * 10 AS v", "'a' AS tag"
         ),
-        t, ["k"], n_files=2,
+        t, stats_cols=["k"], n_files=2,
     )
     cat.sql(f"CREATE TABLE fc USING snapshot LOCATION '{t}'")
     # BETWEEN fast path
@@ -433,14 +433,14 @@ def test_select_level_time_travel(spark, tmp_path):
 
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_append,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "fact"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(10).selectExpr("id AS k", "id * 10 AS v"), t,
-        ["k"], n_files=2,
+        stats_cols=["k"], n_files=2,
     )  # v1
     ts_after_v1 = time.time()
     time.sleep(0.05)
@@ -490,14 +490,14 @@ def test_alter_table_schema_evolution_ddl(spark, tmp_path):
     dropped columns disappear from reads), and a re-added name cannot
     resurrect dropped bytes."""
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "fact"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(10).selectExpr("id AS k", "id * 10 AS v"), t,
-        ["k"], n_files=2,
+        stats_cols=["k"], n_files=2,
     )
     cat.sql(f"CREATE TABLE ev USING snapshot LOCATION '{t}'")
     # ADD: new column, old rows read as NULL, new inserts carry it
@@ -531,14 +531,14 @@ def test_ctas_materializes_and_registers(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         current_version,
         snapshot_append,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     src = tmp_path / "src"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(10).selectExpr("id AS k", "id * 10 AS v"), src,
-        ["k"], n_files=2,
+        stats_cols=["k"], n_files=2,
     )
     cat.sql(f"CREATE TABLE base USING snapshot LOCATION '{src}'")
     dst = tmp_path / "dst"
@@ -572,14 +572,14 @@ def test_alter_table_constraint_ddl(spark, tmp_path):
     write; DROP CONSTRAINT lifts the gate."""
     from energy_datalake_solution_spark.sources.snapshots import (
         SnapshotConstraintViolation,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(10).selectExpr("id AS k", "id * 10 AS v"), t,
-        ["k"], n_files=2,
+        stats_cols=["k"], n_files=2,
     )
     cat.sql(f"CREATE TABLE ct USING snapshot LOCATION '{t}'")
     cat.sql("ALTER TABLE ct ADD CONSTRAINT v_nonneg CHECK (v >= 0)")
@@ -600,14 +600,14 @@ def test_named_views_resolve_fresh_per_query(spark, tmp_path):
     and DROP VIEW removes it."""
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_append,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(10).selectExpr("id AS k", "id * 10 AS v"), t,
-        ["k"], n_files=2,
+        stats_cols=["k"], n_files=2,
     )
     cat.sql(f"CREATE TABLE vt USING snapshot LOCATION '{t}'")
     cat.sql("CREATE VIEW big AS SELECT * FROM vt WHERE v >= 50")
@@ -643,13 +643,13 @@ def test_named_views_resolve_fresh_per_query(spark, tmp_path):
 
 def test_failed_create_view_does_not_poison_catalog(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
-        spark.range(5).selectExpr("id AS k", "id AS v"), t, ["k"],
+    snapshot_write(
+        spark.range(5).selectExpr("id AS k", "id AS v"), t, stats_cols=["k"],
         n_files=1,
     )
     cat.sql(f"CREATE TABLE pt USING snapshot LOCATION '{t}'")
@@ -675,7 +675,7 @@ def test_copy_into_is_file_granular_idempotent(spark, tmp_path):
 
     from energy_datalake_solution_spark.sources.snapshots import (
         current_version,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     land = tmp_path / "landing"
@@ -683,8 +683,8 @@ def test_copy_into_is_file_granular_idempotent(spark, tmp_path):
     pd.DataFrame({"k": [1, 2], "v": [10, 20]}).to_parquet(land / "a.parquet")
     pd.DataFrame({"k": [3], "v": [30]}).to_parquet(land / "b.parquet")
     t = tmp_path / "t"
-    snapshot_write_with_stats(
-        spark.createDataFrame([(0, 0)], "k long, v long"), t, ["k"],
+    snapshot_write(
+        spark.createDataFrame([(0, 0)], "k long, v long"), t, stats_cols=["k"],
         n_files=1,
     )
     cat = SnapshotCatalog(spark)
@@ -733,13 +733,13 @@ def test_time_travel_rewrite_ignores_string_literals(spark, tmp_path):
     pins."""
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_append,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
-        spark.range(5).selectExpr("id AS k"), t, ["k"], n_files=1,
+    snapshot_write(
+        spark.range(5).selectExpr("id AS k"), t, stats_cols=["k"], n_files=1,
     )
     cat.sql(f"CREATE TABLE lt USING snapshot LOCATION '{t}'")
     snapshot_append(spark.range(5, 8).selectExpr("id AS k"), t)
@@ -775,7 +775,7 @@ def test_catalog_grammar_tolerates_reformatting(spark, tmp_path, mangle):
 
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     def reform(stmt: str) -> str:
@@ -795,11 +795,11 @@ def test_catalog_grammar_tolerates_reformatting(spark, tmp_path, mangle):
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(10).selectExpr(
             "id AS k", "id * 10 AS v", "'a' AS tag"
         ),
-        t, ["k"], n_files=2,
+        t, stats_cols=["k"], n_files=2,
     )
     spark.createDataFrame(
         [(3, 999, "s"), (50, 1, "s")], "k long, v long, tag string"
@@ -912,13 +912,13 @@ def test_catalog_grammar_tolerates_reformatting(spark, tmp_path, mangle):
 
 def test_show_tables_and_views(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
-        spark.range(3).selectExpr("id AS k"), t, ["k"], n_files=1,
+    snapshot_write(
+        spark.range(3).selectExpr("id AS k"), t, stats_cols=["k"], n_files=1,
     )
     cat.sql(f"CREATE TABLE st USING snapshot LOCATION '{t}'")
     cat.sql(f"CREATE TABLE st_pin USING snapshot LOCATION '{t}' "
@@ -938,17 +938,17 @@ def test_optimize_zorder_n_columns(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(2000).selectExpr(
             "id AS x", "CAST(id * 37 % 1000 AS LONG) AS y",
             "CAST(id * 91 % 500 AS LONG) AS z", "id AS v"
         ),
-        t, ["x"], n_files=4,
+        t, stats_cols=["x"], n_files=4,
     )
     cat.sql(f"CREATE TABLE zt USING snapshot LOCATION '{t}'")
     before = cat.sql("SELECT count(*) AS n FROM zt").first().n
@@ -989,14 +989,14 @@ def test_analyze_backfills_stats_and_enables_pruning(spark, tmp_path):
         _read_manifest,
         current_version,
         snapshot_files_for_range,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     src = tmp_path / "src"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(400).selectExpr("id AS k", "id * 10 AS v"), src,
-        ["k"], n_files=4,
+        stats_cols=["k"], n_files=4,
     )
     cat.sql(f"CREATE TABLE asrc USING snapshot LOCATION '{src}'")
     dst = tmp_path / "dst"
@@ -1040,17 +1040,17 @@ def test_subquery_dml_predicates(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t, s = tmp_path / "t", tmp_path / "s"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(100).selectExpr("id AS k", "id * 2 AS v"),
-        t, ["k"], n_files=10,
+        t, stats_cols=["k"], n_files=10,
     )
-    snapshot_write_with_stats(
-        spark.range(3, 9).selectExpr("id AS x"), s, ["x"], n_files=1,
+    snapshot_write(
+        spark.range(3, 9).selectExpr("id AS x"), s, stats_cols=["x"], n_files=1,
     )
     cat.sql(f"CREATE TABLE sq_t USING snapshot LOCATION '{t}'")
     cat.sql(f"CREATE TABLE sq_s USING snapshot LOCATION '{s}'")
@@ -1132,14 +1132,14 @@ def test_insert_overwrite_and_replace_where(spark, tmp_path, monkeypatch):
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(100).selectExpr("id AS k", "id * 2 AS v"),
-        t, ["k"], n_files=10,
+        t, stats_cols=["k"], n_files=10,
     )
     cat.sql(f"CREATE TABLE rw USING snapshot LOCATION '{t}'")
     m1 = _read_manifest(t, 1)
@@ -1216,16 +1216,16 @@ def test_merge_with_schema_evolution(spark, tmp_path):
         _read_manifest,
         current_version,
         snapshot_upsert,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
 
     # --- conditional-merge route, unmapped table -> mapping auto-enables
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(6).selectExpr("id AS k", "id * 10 AS v"),
-        t, ["k"], n_files=2,
+        t, stats_cols=["k"], n_files=2,
     )
     files_before = set(_read_manifest(t, current_version(t))["files"])
     cat.sql(f"CREATE TABLE ev USING snapshot LOCATION '{t}'")
@@ -1254,8 +1254,8 @@ def test_merge_with_schema_evolution(spark, tmp_path):
 
     # --- upsert route (UPDATE SET * / INSERT *) with evolution
     t2 = tmp_path / "t2"
-    snapshot_write_with_stats(
-        spark.range(4).selectExpr("id AS k", "id AS v"), t2, ["k"], n_files=1,
+    snapshot_write(
+        spark.range(4).selectExpr("id AS k", "id AS v"), t2, stats_cols=["k"], n_files=1,
     )
     cat.sql(f"CREATE TABLE ev2 USING snapshot LOCATION '{t2}'")
     spark.createDataFrame(
@@ -1272,8 +1272,8 @@ def test_merge_with_schema_evolution(spark, tmp_path):
     # --- WITHOUT the evolution keyword the same merge must not
     # silently evolve: either it raises or the new column stays absent
     t3 = tmp_path / "t3"
-    snapshot_write_with_stats(
-        spark.range(3).selectExpr("id AS k", "id AS v"), t3, ["k"], n_files=1,
+    snapshot_write(
+        spark.range(3).selectExpr("id AS k", "id AS v"), t3, stats_cols=["k"], n_files=1,
     )
     cat.sql(f"CREATE TABLE ev3 USING snapshot LOCATION '{t3}'")
     try:
@@ -1308,17 +1308,17 @@ def test_shallow_clone_show_partitions_show_create(spark, tmp_path):
     partitioning and constraints)."""
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_delete_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(20).selectExpr(
             "id AS k", "id * 2 AS v",
             "CASE WHEN id < 10 THEN 'x' ELSE 'y' END AS tag",
         ),
-        t, ["k"], n_files=2,
+        t, stats_cols=["k"], n_files=2,
     )
     cat.sql(f"CREATE TABLE base USING snapshot LOCATION '{t}'")
     cat.sql("ALTER TABLE base SET PARTITIONED BY (tag)")
@@ -1414,12 +1414,12 @@ def test_empty_table_ddl_and_column_defaults(spark, tmp_path):
     # --- ADD COLUMN DEFAULT backfill on a populated table
     t2 = tmp_path / "t2"
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(6).selectExpr("id AS k", "id * 10 AS v"),
-        t2, ["k"], n_files=2,
+        t2, stats_cols=["k"], n_files=2,
     )
     cat.sql(f"CREATE TABLE dft USING snapshot LOCATION '{t2}'")
     cat.sql("ALTER TABLE dft ADD COLUMN score bigint DEFAULT 7")
@@ -1462,14 +1462,14 @@ def test_vacuum_dry_run_optimize_where_table_changes(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(100).selectExpr("id AS k", "id * 2 AS v"),
-        t, ["k"], n_files=4,
+        t, stats_cols=["k"], n_files=4,
     )
     cat.sql(f"CREATE TABLE vt USING snapshot LOCATION '{t}'")
     cat.sql("UPDATE vt SET v = 0 WHERE k BETWEEN 0 AND 4")   # v2

@@ -19,7 +19,6 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_read,
     snapshot_rename_column,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 
 
@@ -38,7 +37,7 @@ def _df(spark, lo, hi, val):
 def test_batch_read_matches_snapshot_read(ds_spark, tmp_path):
     spark = ds_spark
     t = tmp_path / "t"
-    snapshot_write_with_stats(_df(spark, 0, 100, "a"), t, ["k"], n_files=4)
+    snapshot_write(_df(spark, 0, 100, "a"), t, stats_cols=["k"], n_files=4)
     snapshot_append(_df(spark, 100, 120, "b"), t)
     snapshot_delete_range_mor(spark, t, "k", 10, 19)
     got = spark.read.format("snapshot").option("path", str(t)).load()
@@ -80,7 +79,7 @@ def test_clone_batch_read_keeps_inherited_deletion_vectors(ds_spark, tmp_path):
     must match the library-API read of the same clone exactly."""
     spark = ds_spark
     src, dst = tmp_path / "src", tmp_path / "dst"
-    snapshot_write_with_stats(_df(spark, 0, 100, "a"), src, ["k"], n_files=4)
+    snapshot_write(_df(spark, 0, 100, "a"), src, stats_cols=["k"], n_files=4)
     snapshot_delete_range_mor(spark, src, "k", 10, 19)
     snapshot_clone(src, dst)
     got = spark.read.format("snapshot").option("path", str(dst)).load()
@@ -104,7 +103,7 @@ def test_clone_stream_read_keeps_inherited_deletion_vectors(ds_spark, tmp_path):
     spark = ds_spark
     src, dst = tmp_path / "src", tmp_path / "dst"
     out, ckpt = tmp_path / "out", tmp_path / "ckpt"
-    snapshot_write_with_stats(_df(spark, 0, 40, "a"), src, ["k"], n_files=4)
+    snapshot_write(_df(spark, 0, 40, "a"), src, stats_cols=["k"], n_files=4)
     snapshot_delete_range_mor(spark, src, "k", 5, 9)
     snapshot_clone(src, dst)
     q = (
@@ -181,7 +180,7 @@ def test_batch_write_appends_through_optimistic_commit(ds_spark, tmp_path):
 
     spark = ds_spark
     t = tmp_path / "t"
-    snapshot_write_with_stats(_df(spark, 0, 20, "a"), t, ["k"], n_files=2)
+    snapshot_write(_df(spark, 0, 20, "a"), t, stats_cols=["k"], n_files=2)
     _df(spark, 20, 25, "b").write.format("snapshot").option(
         "path", str(t)
     ).mode("append").save()
@@ -372,7 +371,7 @@ def test_batch_read_strips_provenance_after_mor_update(ds_spark, tmp_path):
 
     spark = ds_spark
     t = tmp_path / "t"
-    snapshot_write_with_stats(_df(spark, 0, 20, "a"), t, ["k"], n_files=2)
+    snapshot_write(_df(spark, 0, 20, "a"), t, stats_cols=["k"], n_files=2)
     snapshot_update_range_mor(spark, t, "k", 5, 9, {"v": F.lit("upd")})
     got = spark.read.format("snapshot").option("path", str(t)).load()
     assert got.columns == ["k", "v"], "provenance columns leaked"
@@ -393,12 +392,12 @@ def test_stream_change_feed_emits_net_row_changes(ds_spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_delete_range_mor,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     spark = ds_spark
     t, out, ckpt = tmp_path / "t", tmp_path / "out", tmp_path / "ckpt"
-    snapshot_write_with_stats(_df(spark, 0, 10, "a"), t, ["k"], n_files=2)  # v1
+    snapshot_write(_df(spark, 0, 10, "a"), t, stats_cols=["k"], n_files=2)  # v1
     snapshot_append(_df(spark, 10, 13, "b"), t)                             # v2
     snapshot_delete_range_mor(spark, t, "k", 3, 4)                          # v3
     snapshot_update_range_mor(spark, t, "k", 7, 7, {"v": F.lit("upd")})     # v4
@@ -474,12 +473,12 @@ def test_stream_change_feed_drives_exactly_once_mirror(ds_spark, tmp_path):
         snapshot_merge,
         snapshot_read,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     spark = ds_spark
     src, rep, ckpt = tmp_path / "src", tmp_path / "rep", tmp_path / "ckpt"
-    snapshot_write_with_stats(_df(spark, 0, 20, "a"), src, ["k"], n_files=2)
+    snapshot_write(_df(spark, 0, 20, "a"), src, stats_cols=["k"], n_files=2)
     snapshot_update_range_mor(spark, src, "k", 0, 4, {"v": F.lit("u")})
     snapshot_delete_range_mor(spark, src, "k", 10, 14)
     snapshot_append(_df(spark, 50, 55, "n"), src)
@@ -559,14 +558,14 @@ def test_stream_change_feed_across_rename_restart_contract(ds_spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_enable_column_mapping,
         snapshot_rename_column,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     spark = ds_spark
     t = tmp_path / "t"
     out1, ck1 = tmp_path / "o1", tmp_path / "c1"
     out2, ck2 = tmp_path / "o2", tmp_path / "c2"
-    snapshot_write_with_stats(_df(spark, 0, 5, "a"), t, ["k"], n_files=1)
+    snapshot_write(_df(spark, 0, 5, "a"), t, stats_cols=["k"], n_files=1)
 
     def run(out, ck):
         q = (
@@ -615,7 +614,7 @@ def test_stream_change_feed_skips_orphan_versions(ds_spark, tmp_path):
 
     spark = ds_spark
     t, out, ckpt = tmp_path / "t", tmp_path / "out", tmp_path / "ckpt"
-    snapshot_write_with_stats(_df(spark, 0, 5, "a"), t, ["k"])   # v1
+    snapshot_write(_df(spark, 0, 5, "a"), t, stats_cols=["k"])   # v1
     snapshot_append(_df(spark, 50, 55, "orphan"), t)             # v2
     snapshot_rollback(t, 1)
     snapshot_append(_df(spark, 5, 8, "b"), t)  # v3, parent=1 (v2 orphaned)
@@ -649,7 +648,7 @@ def test_stream_max_files_per_trigger_paces_batches(ds_spark, tmp_path):
     giant batch, exactly-once overall."""
     spark = ds_spark
     t, ckpt = tmp_path / "t", tmp_path / "ckpt"
-    snapshot_write_with_stats(_df(spark, 0, 40, "a"), t, ["k"], n_files=4)
+    snapshot_write(_df(spark, 0, 40, "a"), t, stats_cols=["k"], n_files=4)
     snapshot_append(
         _df(spark, 40, 80, "b").repartitionByRange(4, "k"), t
     )  # 8 data files total, 2 commits
@@ -690,7 +689,7 @@ def test_stream_max_bytes_per_trigger_one_file_floor(ds_spark, tmp_path):
     own micro-batch."""
     spark = ds_spark
     t, ckpt = tmp_path / "t", tmp_path / "ckpt"
-    snapshot_write_with_stats(_df(spark, 0, 30, "a"), t, ["k"], n_files=3)
+    snapshot_write(_df(spark, 0, 30, "a"), t, stats_cols=["k"], n_files=3)
     counts: list[int] = []
     q = (
         spark.readStream.format("snapshot")
@@ -721,7 +720,7 @@ def test_stream_rate_limit_restart_at_split_boundary(ds_spark, tmp_path):
     re-anchors the reader before the new offset is asked for)."""
     spark = ds_spark
     t, out, ckpt = tmp_path / "t", tmp_path / "out", tmp_path / "ckpt"
-    snapshot_write_with_stats(_df(spark, 0, 50, "a"), t, ["k"], n_files=5)
+    snapshot_write(_df(spark, 0, 50, "a"), t, stats_cols=["k"], n_files=5)
 
     def run():
         q = (
@@ -889,7 +888,7 @@ def test_stream_rate_limit_with_concurrent_writer(ds_spark, tmp_path):
     once — the pacing walk follows the committed chain as it grows."""
     spark = ds_spark
     t, ckpt = tmp_path / "t", tmp_path / "ckpt"
-    snapshot_write_with_stats(_df(spark, 0, 40, "a"), t, ["k"], n_files=4)
+    snapshot_write(_df(spark, 0, 40, "a"), t, stats_cols=["k"], n_files=4)
     seen: list[tuple] = []
     appended = {"n": 0}
 
@@ -926,4 +925,63 @@ def test_stream_rate_limit_with_concurrent_writer(ds_spark, tmp_path):
     assert sorted(seen) == want, (
         f"paced drain under concurrent writes lost/doubled rows "
         f"(got {len(seen)}, want {len(want)})"
+    )
+
+
+def _ts_df(spark, lo, hi):
+    # Spark writes TIMESTAMP columns as parquet INT96
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        F.timestamp_seconds(F.col("id") * 3600 + 1_700_000_000).alias("ts"),
+    )
+
+
+def test_catalog_read_of_timestamp_column(ds_spark, tmp_path):
+    """INT96 timestamps read through the Python source come back at
+    microsecond precision, the unit Spark's Arrow bridge accepts."""
+    from energy_datalake_solution_spark.sources.snapshot_catalog import (
+        SnapshotCatalog,
+    )
+
+    spark = ds_spark
+    t = tmp_path / "t"
+    snapshot_write(_ts_df(spark, 0, 5), t)
+    want = snapshot_read(spark, t).agg(F.count("*"), F.max("ts")).first()
+    cat = SnapshotCatalog(spark)
+    cat.sql(f"CREATE TABLE ts_tbl USING snapshot LOCATION '{t}'")
+    got = cat.sql("SELECT count(*) AS n, max(ts) AS hi FROM ts_tbl").first()
+    assert (got.n, got.hi) == (5, want[1])
+    fmt = spark.read.format("snapshot").option("path", str(t)).load()
+    assert sorted(tuple(r) for r in fmt.collect()) == sorted(
+        tuple(r) for r in snapshot_read(spark, t).collect()
+    )
+
+
+def test_stream_change_feed_of_timestamp_column(ds_spark, tmp_path):
+    spark = ds_spark
+    t, out, ckpt = tmp_path / "t", tmp_path / "out", tmp_path / "ckpt"
+    snapshot_write(_ts_df(spark, 0, 5), t)                 # v1
+    snapshot_append(_ts_df(spark, 5, 7), t)                # v2
+    snapshot_delete_range_mor(spark, t, "k", 1, 1)         # v3
+    q = (
+        spark.readStream.format("snapshot")
+        .option("path", str(t))
+        .option("readChangeFeed", "true")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", str(out))
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    ts = {r.k: r.ts for r in _ts_df(spark, 0, 7).collect()}
+    got = {
+        (r._commit_version, r._change_type, r.k, r.ts)
+        for r in spark.read.parquet(str(out)).collect()
+    }
+    assert got == (
+        {(1, "insert", k, ts[k]) for k in range(5)}
+        | {(2, "insert", k, ts[k]) for k in (5, 6)}
+        | {(3, "delete", 1, ts[1])}
     )

@@ -17,7 +17,7 @@ from energy_datalake_solution_spark.sources.snapshots import (
     current_version,
     snapshot_append,
     snapshot_read,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 
 
@@ -26,11 +26,11 @@ def wide_table(spark, tmp_path):
     """A table listing > _DRIVER_STATS_MAX_FILES files, no types map."""
     t = tmp_path / "t"
     n_files = S._DRIVER_STATS_MAX_FILES + 16
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(n_files * 4).selectExpr(
             "CAST(id AS int) AS k", "CAST(id AS int) AS v"
         ),
-        t, ["k"], n_files=n_files,
+        t, stats_cols=["k"], n_files=n_files,
     )
     return t, n_files
 
@@ -82,8 +82,8 @@ def test_change_feed_prov_probe_distributes_on_wide_windows(spark, tmp_path):
     )
 
     t = tmp_path / "t"
-    snapshot_write_with_stats(
-        spark.range(100).selectExpr("id AS k", "id AS v"), t, ["k"],
+    snapshot_write(
+        spark.range(100).selectExpr("id AS k", "id AS v"), t, stats_cols=["k"],
         n_files=2,
     )
     v1 = current_version(t)

@@ -9,13 +9,13 @@
    column DEFAULTs to subquery-free constant expressions; the fold
    would otherwise freeze arbitrary catalog state as the birth default
    and re-run the subquery on every narrow write).
-3. The layout full-replace writers honor the row-creating invariants
-   that snapshot_write got in r14: snapshot_write_with_stats routes
+3. The layout forms of snapshot_write honor the row-creating
+   invariants of its plain form: with ``stats_cols`` it routes
    identity tables to the allocating replace_where (keeping the range
    layout and per-file stats) and materializes write defaults on
-   mapped tables; snapshot_write_zordered_n routes identity tables
-   after arranging; snapshot_write_with_bloom routes and then
-   backfills its filters via snapshot_analyze_blooms.
+   mapped tables; with ``zorder_by`` it routes identity tables after
+   arranging; with ``bloom_cols`` it routes and then backfills its
+   filters via snapshot_analyze_blooms.
 4. snapshot_upsert_partitioned refuses identity tables (its rewrite
    loop has no per-rebase allocation) and materializes write defaults
    and generated columns for narrow batches.
@@ -34,9 +34,7 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_files_for_range,
     snapshot_read,
     snapshot_upsert_partitioned,
-    snapshot_write_with_bloom,
-    snapshot_write_with_stats,
-    snapshot_write_zordered_n,
+    snapshot_write,
 )
 
 
@@ -164,7 +162,7 @@ def test_write_with_stats_identity_routes_and_allocates(
     batch = spark.createDataFrame(
         [(i, f"v{i}") for i in range(10, 18)], "k bigint, v string"
     )
-    snapshot_write_with_stats(batch, t, ["k"], n_files=4)
+    snapshot_write(batch, t, stats_cols=["k"], n_files=4)
     out = snapshot_read(spark, t)
     rows = out.collect()
     assert len(rows) == 8                       # full replace
@@ -189,8 +187,8 @@ def test_write_with_stats_materializes_write_default(spark, tmp_path):
     cat.sql("ALTER TABLE wdt ALTER COLUMN d SET DEFAULT 42")
     # narrow batch omits d: must resolve the WRITE default (42), not
     # the stale birth default (1)
-    snapshot_write_with_stats(
-        spark.createDataFrame([(9,)], "k bigint"), t, ["k"]
+    snapshot_write(
+        spark.createDataFrame([(9,)], "k bigint"), t, stats_cols=["k"]
     )
     assert snapshot_read(spark, t).first()["d"] == 42
 
@@ -206,7 +204,7 @@ def test_write_zordered_identity_routes_and_allocates(spark, tmp_path):
     batch = spark.createDataFrame(
         [(i, (i * 7) % 16) for i in range(16)], "x bigint, y bigint"
     )
-    snapshot_write_zordered_n(batch, t, ["x", "y"], n_files=4)
+    snapshot_write(batch, t, zorder_by=["x", "y"], n_files=4)
     out = snapshot_read(spark, t).collect()
     assert len(out) == 16
     ids = [r["id"] for r in out]
@@ -224,7 +222,7 @@ def test_write_with_bloom_identity_routes_and_backfills(
     batch = spark.createDataFrame(
         [(i, f"v{i}") for i in range(30, 38)], "k bigint, v string"
     )
-    snapshot_write_with_bloom(batch, t, ["k"], n_files=4)
+    snapshot_write(batch, t, bloom_cols=["k"], n_files=4)
     rows = snapshot_read(spark, t).collect()
     assert len(rows) == 8
     ids = [r["id"] for r in rows]
@@ -244,8 +242,8 @@ def test_write_with_bloom_materializes_write_default(spark, tmp_path):
     )
     cat.sql("INSERT INTO wbt VALUES (1, 1)")
     cat.sql("ALTER TABLE wbt ALTER COLUMN d SET DEFAULT 42")
-    snapshot_write_with_bloom(
-        spark.createDataFrame([(9,)], "k bigint"), t, ["k"]
+    snapshot_write(
+        spark.createDataFrame([(9,)], "k bigint"), t, bloom_cols=["k"]
     )
     assert snapshot_read(spark, t).first()["d"] == 42
 
@@ -330,13 +328,13 @@ def test_analyze_blooms_backfills_point_pruning(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_files_for_point,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "ab"
     df = spark.range(0, 400).selectExpr("id AS k", "id % 7 AS v")
     # stats-only table: 4 range-split files, NO blooms yet
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     before = snapshot_files_for_point(t, "v", 3)
     assert len(before) == 4  # v has no stats/blooms: every file kept
     cat = SnapshotCatalog(spark)
@@ -354,12 +352,12 @@ def test_analyze_blooms_merges_with_existing_columns(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_analyze_blooms,
         snapshot_files_for_point,
-        snapshot_write_with_bloom,
+        snapshot_write,
     )
 
     t = tmp_path / "abm"
     df = spark.range(0, 100).selectExpr("id AS k", "id + 1000 AS w")
-    snapshot_write_with_bloom(df, t, ["k"], n_files=2)
+    snapshot_write(df, t, bloom_cols=["k"], n_files=2)
     snapshot_analyze_blooms(spark, t, ["w"])
     # both the write-time column and the analyzed one prune
     assert snapshot_files_for_point(t, "k", 777_777) == []
@@ -488,13 +486,12 @@ def test_widen_refuses_on_bucketed_table(spark, tmp_path):
     DDL — widening would stale it silently, so it refuses."""
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_widen_column,
-        snapshot_write_bucketed,
+        snapshot_write,
     )
 
     t = tmp_path / "wb2"
-    snapshot_write_bucketed(
-        spark.range(8).selectExpr("CAST(id AS int) AS k"), t, "k", 2
-    )
+    snapshot_write(
+        spark.range(8).selectExpr("CAST(id AS int) AS k"), t, bucket_by=("k", 2))
     with pytest.raises(ValueError, match="bucketed"):
         snapshot_widen_column(spark, t, "k", "bigint")
 
@@ -814,8 +811,8 @@ def test_restore_and_vacuum_across_widen_bloom_history(spark, tmp_path):
     from energy_datalake_solution_spark.sources import snapshots as S
 
     t = tmp_path / "rv"
-    S.snapshot_write_with_stats(
-        spark.range(100).selectExpr("id AS k", "id % 5 AS v"), t, ["k"],
+    S.snapshot_write(
+        spark.range(100).selectExpr("id AS k", "id % 5 AS v"), t, stats_cols=["k"],
         n_files=4,
     )
     v1 = S.current_version(t)

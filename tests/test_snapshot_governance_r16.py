@@ -1,6 +1,6 @@
 """Round-16 governance fixes, pinned.
 
-1. snapshot_write_partitioned (the partitioned-CTAS write,
+1. snapshot_write(..., partition_by=...) (the partitioned-CTAS write,
    snapshot_catalog CTAS routing) runs the SAME full-replace prelude as
    snapshot_write when the location already holds a table: constraints
    enforce on the replacing data, write defaults / generated columns
@@ -8,7 +8,7 @@
    before routing (so a CTAS replace after RENAME COLUMN reads back
    values, not NULLs), and IDENTITY tables refuse loudly (the
    per-partition routing has no per-rebase allocation).
-2. snapshot_write_zordered_n materializes write defaults and generated
+2. snapshot_write(..., zorder_by=...) materializes write defaults and generated
    columns (logical space) BEFORE zorder_arrange_n, so z-ordering on a
    DEFAULT/GENERATED column the batch omits clusters the stored
    write-time value instead of failing with a missing-column error.
@@ -138,8 +138,8 @@ def default_table(spark, tmp_path):
 
 def test_zordered_on_omitted_generated_column(spark, default_table):
     cat, t = default_table
-    S.snapshot_write_zordered_n(
-        spark.range(16).selectExpr("id AS k"), t, ["k", "g"], n_files=2
+    S.snapshot_write(
+        spark.range(16).selectExpr("id AS k"), t, zorder_by=["k", "g"], n_files=2
     )
     got = sorted(tuple(r) for r in
                  S.snapshot_read(spark, t).select("k", "v", "g").collect())
@@ -152,8 +152,8 @@ def test_zordered_on_omitted_generated_column(spark, default_table):
 
 def test_zordered_n_on_omitted_wdefault_column(spark, default_table):
     cat, t = default_table
-    S.snapshot_write_zordered_n(
-        spark.range(8).selectExpr("id AS k"), t, ["k", "v"], n_files=2
+    S.snapshot_write(
+        spark.range(8).selectExpr("id AS k"), t, zorder_by=["k", "v"], n_files=2
     )
     got = sorted(tuple(r) for r in
                  S.snapshot_read(spark, t).select("k", "v", "g").collect())
@@ -198,16 +198,15 @@ def test_additive_append_stamps_types_and_is_visible(spark, tmp_path):
 
 
 def test_enable_column_mapping_refuses_bucketed_tables(spark, tmp_path):
-    """The reverse direction of snapshot_write_bucketed's mapped-table
+    """The reverse direction of snapshot_write's bucket_by mapped-table
     refusal (one-way contract, both directions): enabling mapping on a
     bucketed table would let a bucket-column rename land while the
     bucketed view keeps exposing the frozen physical spelling."""
     from energy_datalake_solution_spark.sources import snapshots as S
 
     t = tmp_path / "b"
-    S.snapshot_write_bucketed(
-        spark.range(20).selectExpr("id AS k", "id % 7 AS v"), t, "k", 4
-    )
+    S.snapshot_write(
+        spark.range(20).selectExpr("id AS k", "id % 7 AS v"), t, bucket_by=("k", 4))
     with pytest.raises(ValueError, match="BUCKETED"):
         S.snapshot_enable_column_mapping(spark, t)
     # rewriting through snapshot_write drops the layout; mapping then

@@ -26,7 +26,7 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_history,
     snapshot_merge,
     snapshot_read,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 
 
@@ -38,9 +38,9 @@ def _file_hashes(p: Path) -> dict[str, str]:
 
 
 def _seed(spark, t, n=100, n_files=4):
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(n).selectExpr("id AS k", "id * 10 AS v", "'base' AS tag"),
-        t, ["k"], n_files=n_files,
+        t, stats_cols=["k"], n_files=n_files,
     )
 
 

@@ -38,7 +38,7 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_update_range_mor,
     snapshot_upsert,
     snapshot_vacuum,
-    snapshot_write_with_stats,
+    snapshot_write,
     snapshot_zorder_compact_n,
 )
 
@@ -77,7 +77,7 @@ def test_random_op_sequences_match_reference_model(spark, tmp_path, seed):
     # pre-widening versions (which must CLEAR the types map)
     model = {k: k * 10 for k in range(200)}
     df = spark.createDataFrame(sorted(model.items()), "k int, v int")
-    snapshot_write_with_stats(df, t, ["k"], n_files=6)
+    snapshot_write(df, t, stats_cols=["k"], n_files=6)
     pinned = {current_version(t): dict(model)}
     ops_done = ["seed"]
 

@@ -23,17 +23,17 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_read,
     snapshot_set_partitioning,
     snapshot_upsert_partitioned,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 
 
 def _seed(spark, t, n=40):
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(n).selectExpr(
             "id AS k", "id * 10 AS v",
             "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS cat",
         ),
-        t, ["k"], n_files=2,
+        t, stats_cols=["k"], n_files=2,
     )
 
 
@@ -168,15 +168,15 @@ def test_multi_column_partition_spec(spark, tmp_path):
         snapshot_files_for_values,
         snapshot_partitioning,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(20).selectExpr(
             "id AS k", "'A' AS status", "CAST(id % 2 AS INT) AS band"
         ),
-        t, ["k"], n_files=2,
+        t, stats_cols=["k"], n_files=2,
     )
     pre = set(_read_manifest(t, current_version(t))["files"])
     cat = SnapshotCatalog(spark)

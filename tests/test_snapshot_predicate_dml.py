@@ -25,7 +25,7 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_files_for_predicate,
     snapshot_read,
     snapshot_update_where,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 
 
@@ -37,12 +37,12 @@ def _file_hashes(p: Path) -> dict[str, str]:
 
 
 def _seed(spark, t, n=100, n_files=4):
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(n).selectExpr(
             "id AS k", "id * 10 AS v",
             "CASE WHEN id % 2 = 0 THEN 'even' ELSE 'odd' END AS tag",
         ),
-        t, ["k"], n_files=n_files,
+        t, stats_cols=["k"], n_files=n_files,
     )
 
 
@@ -116,12 +116,12 @@ def test_delete_where_compound_predicate(spark, tmp_path):
 
 def test_delete_where_null_predicate_deletes_nothing(spark, tmp_path):
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.sql(
             "SELECT id AS k, CASE WHEN id = 3 THEN NULL ELSE id END AS v "
             "FROM range(10)"
         ),
-        t, ["k"], n_files=1,
+        t, stats_cols=["k"], n_files=1,
     )
     snapshot_delete_where(spark, t, "v > 100")  # NULL > 100 -> no delete
     assert snapshot_read(spark, t).count() == 10
@@ -256,14 +256,14 @@ def test_or_of_ranges_prunes_to_union(spark, tmp_path):
         snapshot_delete_where,
         snapshot_files_for_predicate,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     # 4 files over disjoint key quartiles (range-sorted write)
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(400).selectExpr("id AS k", "id * 10 AS v"), t,
-        ["k"], n_files=4,
+        stats_cols=["k"], n_files=4,
     )
     all_files = snapshot_files_for_predicate(t, "k >= 0")
     assert len(all_files) == 4

@@ -39,7 +39,7 @@ def seeded(spark, tmp_path_factory):
             F.col("id").cast("int").alias("w"),
         )
 
-    S.snapshot_write_with_bloom(
+    S.snapshot_write(
         batch(0, 2000), t, bloom_cols=["u"], stats_cols=["k"], n_files=4
     )
     S.snapshot_enable_column_mapping(spark, t)

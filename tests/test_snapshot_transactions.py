@@ -22,14 +22,14 @@ from energy_datalake_solution_spark.sources.snapshots import (
     snapshot_read,
     snapshot_txn_recover,
     snapshot_upsert,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 
 
 def _seed(spark, t, n=20):
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(n).selectExpr("id AS k", "id * 10 AS v"), t,
-        ["k"], n_files=2,
+        stats_cols=["k"], n_files=2,
     )
 
 
@@ -263,11 +263,11 @@ def test_catalog_alter_partitioning(spark, tmp_path):
 
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(10).selectExpr(
             "id AS k", "id AS v", "CAST(id % 2 AS string) AS cat"
         ),
-        t, ["k"], n_files=1,
+        t, stats_cols=["k"], n_files=1,
     )
     cat.sql(f"CREATE TABLE t1 USING snapshot LOCATION '{t}'")
     cat.sql("ALTER TABLE t1 SET PARTITIONED BY (cat)")

@@ -128,8 +128,8 @@ CASES = {
     ),
     "stats-n-files": (
         None,
-        lambda spark, t: S.snapshot_write_with_stats(
-            _batch(spark), t, ["k"], n_files=4
+        lambda spark, t: S.snapshot_write(
+            _batch(spark), t, stats_cols=["k"], n_files=4
         ),
         1,
         {"op": "write", "n_files": 4, "stats": RangeSplit(4),
@@ -138,7 +138,7 @@ CASES = {
     ),
     "bloom-stats": (
         None,
-        lambda spark, t: S.snapshot_write_with_bloom(
+        lambda spark, t: S.snapshot_write(
             _batch(spark), t, bloom_cols=["u"], stats_cols=["k"], n_files=4
         ),
         1,
@@ -148,8 +148,8 @@ CASES = {
     ),
     "zorder-3": (
         None,
-        lambda spark, t: S.snapshot_write_zordered_n(
-            _batch(spark), t, ["k", "u", "v"], n_files=4
+        lambda spark, t: S.snapshot_write(
+            _batch(spark), t, zorder_by=["k", "u", "v"], n_files=4
         ),
         1,
         {"op": "write", "n_files": 4,
@@ -168,7 +168,7 @@ CASES = {
     ),
     "bucketed": (
         None,
-        lambda spark, t: S.snapshot_write_bucketed(_batch(spark), t, "k", 4),
+        lambda spark, t: S.snapshot_write(_batch(spark), t, bucket_by=("k", 4)),
         1,
         # four input tasks, each writing one file per bucket
         {"op": "write-bucketed", "n_files": 16, "stats": [[]] * 16,
@@ -182,8 +182,8 @@ CASES = {
     ),
     "partitioned-2": (
         None,
-        lambda spark, t: S.snapshot_write_partitioned(
-            spark, _batch(spark), t, ["p", "q"]
+        lambda spark, t: S.snapshot_write(
+            _batch(spark), t, partition_by=["p", "q"]
         ),
         1,
         # one file per (p, q) tuple, with exact point stats on both
@@ -199,7 +199,7 @@ CASES = {
     ),
     "mapped": (
         _mapped,
-        lambda spark, t: S.snapshot_write_with_bloom(
+        lambda spark, t: S.snapshot_write(
             _labelled(spark), t, bloom_cols=["label"],
             stats_cols=["k", "label"], n_files=2,
         ),
@@ -212,7 +212,7 @@ CASES = {
     ),
     "identity": (
         _identity,
-        lambda spark, t: S.snapshot_write_with_bloom(
+        lambda spark, t: S.snapshot_write(
             _batch(spark).select("k", "u"), t, bloom_cols=["u"],
             stats_cols=["k"], n_files=2,
         ),
@@ -272,9 +272,23 @@ def test_identity_and_mapped_tables_refuse_file_layouts(spark, tmp_path):
     _mapped(spark, tm)
     batch = _batch(spark).select("k", "u")
     with pytest.raises(ValueError, match="column-mapped"):
-        S.snapshot_write_bucketed(batch, ti, "k", 4)
+        S.snapshot_write(batch, ti, bucket_by=("k", 4))
     with pytest.raises(NotImplementedError, match="IDENTITY"):
-        S.snapshot_write_partitioned(spark, batch, ti, ["k"])
+        S.snapshot_write(batch, ti, partition_by=["k"])
     with pytest.raises(ValueError, match="column-mapped"):
-        S.snapshot_write_bucketed(_labelled(spark), tm, "k", 4)
+        S.snapshot_write(_labelled(spark), tm, bucket_by=("k", 4))
     assert S.current_version(ti) == 2
+
+
+@pytest.mark.parametrize("layout", [
+    {"zorder_by": ["k"], "bucket_by": ("k", 4)},
+    {"zorder_by": ["k"], "partition_by": ["p"]},
+    {"bucket_by": ("k", 4), "partition_by": ["p"]},
+    {"bucket_by": ("k", 4), "n_files": 2},
+    {"partition_by": ["p"], "n_files": 2},
+])
+def test_write_takes_one_layout(spark, tmp_path, layout):
+    t = tmp_path / "t"
+    with pytest.raises(ValueError, match="one layout"):
+        S.snapshot_write(_batch(spark), t, **layout)
+    assert S.current_version(t) == 0

@@ -297,12 +297,12 @@ def test_stats_commit_prunes_files_and_loses_nothing(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_files_for_range,
         snapshot_read_range,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(10_000).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
-    snapshot_write_with_stats(df, t, ["k"], n_files=8)
+    snapshot_write(df, t, stats_cols=["k"], n_files=8)
     all_files = snapshot_files_for_range(t, "k", 0, 10_000)
     assert len(all_files) == 8
     few = snapshot_files_for_range(t, "k", 2_000, 2_100)
@@ -364,12 +364,12 @@ def test_manifest_row_count_answers_count_star(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_append,
         snapshot_row_count,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(5_000).select(F.col("id").alias("k"), (F.col("id") % 3).alias("v"))
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     assert snapshot_row_count(t) == 5_000
     # batches share the table's column types (the widening gate now
     # REJECTS an incompatible string-v batch instead of storing it)
@@ -460,14 +460,14 @@ def test_upsert_with_key_stats_rewrites_only_touched_files(spark, tmp_path):
 
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     base = spark.range(0, 400).select(
         F.col("id").alias("k"), F.lit("old").alias("v")
     )
-    snapshot_write_with_stats(base, t, ["k"], n_files=8)
+    snapshot_write(base, t, stats_cols=["k"], n_files=8)
     m1 = _read_manifest(t, current_version(t))
     assert len(m1["files"]) >= 8
 
@@ -524,12 +524,12 @@ def test_vacuum_keeps_files_shared_across_pruned_upsert_versions(spark, tmp_path
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         snapshot_vacuum,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     base = spark.range(0, 400).select(F.col("id").alias("k"), F.lit("old").alias("v"))
-    snapshot_write_with_stats(base, t, ["k"], n_files=8)
+    snapshot_write(base, t, stats_cols=["k"], n_files=8)
     m1 = set(_read_manifest(t, current_version(t))["files"])
     snapshot_upsert(
         spark,
@@ -563,7 +563,7 @@ def test_delete_range_rewrites_only_overlapping_files(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         snapshot_delete_range,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
@@ -571,7 +571,7 @@ def test_delete_range_rewrites_only_overlapping_files(spark, tmp_path):
         F.when(F.col("id") == 399, None).otherwise(F.col("id")).alias("k"),
         F.lit("row").alias("v"),
     )
-    snapshot_write_with_stats(base, t, ["k"], n_files=8)
+    snapshot_write(base, t, stats_cols=["k"], n_files=8)
     v1 = current_version(t)
     m1 = _read_manifest(t, v1)
     mtimes = {f: os.path.getmtime(t / f) for f in m1["files"]}
@@ -611,12 +611,12 @@ def test_upsert_all_null_key_batch_appends_instead_of_vanishing(spark, tmp_path)
     from pyspark.sql import functions as F
 
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     base = spark.range(0, 40).select(F.col("id").alias("k"), F.lit("old").alias("v"))
-    snapshot_write_with_stats(base, t, ["k"], n_files=4)
+    snapshot_write(base, t, stats_cols=["k"], n_files=4)
     null_batch = spark.createDataFrame(
         [(None, "null-key-1"), (None, "null-key-2")], "k long, v string"
     )
@@ -634,14 +634,14 @@ def test_upsert_no_key_stats_fallback_keeps_other_column_stats(spark, tmp_path):
 
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     base = spark.range(0, 40).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("d"), F.lit("old").alias("v")
     )
-    snapshot_write_with_stats(base, t, ["d"], n_files=4)
+    snapshot_write(base, t, stats_cols=["d"], n_files=4)
     snapshot_upsert(
         spark, spark.createDataFrame([(5, 5 % 7, "new")], "k long, d long, v string"),
         t, ["k"],
@@ -699,7 +699,7 @@ def test_bloom_point_lookup_skips_files_without_false_negatives(spark, tmp_path)
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         snapshot_files_for_point,
-        snapshot_write_with_bloom,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
@@ -710,7 +710,7 @@ def test_bloom_point_lookup_skips_files_without_false_negatives(spark, tmp_path)
         (F.col("id") % 997).alias("user_id"),  # high cardinality
         F.col("id").alias("event_id"),
     )
-    snapshot_write_with_bloom(
+    snapshot_write(
         df, t, bloom_cols=["user_id"], stats_cols=["ts_bucket"], n_files=8
     )
     m = _read_manifest(t, current_version(t))
@@ -740,7 +740,7 @@ def test_bloom_point_lookup_skips_files_without_false_negatives(spark, tmp_path)
 
 
 def test_zordered_snapshot_prunes_files_on_both_columns(spark, tmp_path):
-    """snapshot_write_zordered_n: per-file manifest stats over BOTH Morton
+    """snapshot_write(..., zorder_by=...): per-file manifest stats over BOTH Morton
     columns must let a mid-range slice on EITHER column prune files, and
     pruned range reads must lose no rows vs plain filters."""
     from pyspark.sql import functions as F
@@ -749,7 +749,7 @@ def test_zordered_snapshot_prunes_files_on_both_columns(spark, tmp_path):
         _read_manifest,
         snapshot_files_for_range,
         snapshot_read_range,
-        snapshot_write_zordered_n,
+        snapshot_write,
     )
 
     from .conftest import SF_ORACLE
@@ -758,7 +758,7 @@ def test_zordered_snapshot_prunes_files_on_both_columns(spark, tmp_path):
         "l_partkey", "l_suppkey", "l_quantity"
     )
     t = tmp_path / "t"
-    snapshot_write_zordered_n(l, t, ["l_partkey", "l_suppkey"], n_files=8)
+    snapshot_write(l, t, zorder_by=["l_partkey", "l_suppkey"], n_files=8)
     m = _read_manifest(t, current_version(t))
     n_files = len(m["files"])
     assert n_files >= 6
@@ -793,12 +793,12 @@ def test_history_reports_ops_newest_first(spark, tmp_path):
         snapshot_delete_range,
         snapshot_history,
         snapshot_vacuum,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(0, 100).select(F.col("id").alias("k"), F.lit("v").alias("v"))
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     snapshot_append(spark.createDataFrame([(200, "a")], "k long, v string"), t)
     snapshot_upsert(spark, spark.createDataFrame([(5, "u")], "k long, v string"), t, ["k"])
     snapshot_delete_range(spark, t, "k", 10, 19)
@@ -827,7 +827,7 @@ def test_blooms_survive_upsert_append_delete_and_compact(spark, tmp_path):
         snapshot_compact,
         snapshot_delete_range,
         snapshot_files_for_point,
-        snapshot_write_with_bloom,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
@@ -836,7 +836,7 @@ def test_blooms_survive_upsert_append_delete_and_compact(spark, tmp_path):
         (F.col("id") % 499).alias("uid"),
         F.col("id").alias("k"),
     )
-    snapshot_write_with_bloom(df, t, bloom_cols=["uid"], stats_cols=["k"], n_files=8)
+    snapshot_write(df, t, bloom_cols=["uid"], stats_cols=["k"], n_files=8)
 
     def check(stage):
         m = _read_manifest(t, current_version(t))
@@ -1103,14 +1103,14 @@ def test_mor_delete_rewrites_no_files_and_never_resurrects(spark, tmp_path):
         snapshot_read_range,
         snapshot_row_count,
         snapshot_upsert,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(0, 4000).select(
         F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=8)
+    snapshot_write(df, t, stats_cols=["k"], n_files=8)
     v1 = current_version(t)
     files_v1 = list(_read_manifest(t, v1)["files"])
 
@@ -1155,12 +1155,12 @@ def test_mor_delete_wide_ranges_fall_back_to_rewrite(spark, tmp_path):
         current_version,
         snapshot_delete_range_mor,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(0, 1000).select(F.col("id").alias("k"))
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     v = snapshot_delete_range_mor(spark, t, "k", 0, 899, max_deleted_rows=100)
     m = _read_manifest(t, current_version(t))
     assert v == current_version(t)
@@ -1179,7 +1179,7 @@ def test_mor_scattered_vectors_take_join_path_and_stay_exact(spark, tmp_path):
     df = spark.range(0, 2000).select(F.col("k").alias("k")) if False else (
         spark.range(0, 2000).withColumnRenamed("id", "k")
     )
-    S.snapshot_write_with_stats(df, t, ["k"], n_files=2)
+    S.snapshot_write(df, t, stats_cols=["k"], n_files=2)
     # delete every even key in [0, 999]: 500 positions, ~500 runs > budget
     for lo in range(0, 1000, 2):
         pass  # (500 tiny commits would be slow; build the vector directly)
@@ -1212,14 +1212,14 @@ def test_change_feed_reports_net_changes_from_changed_files_only(spark, tmp_path
         snapshot_delete_range_mor,
         snapshot_read_incremental,
         snapshot_upsert,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     base = spark.range(0, 4000).select(
         F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")
     )
-    snapshot_write_with_stats(base, t, ["k"], n_files=8)
+    snapshot_write(base, t, stats_cols=["k"], n_files=8)
     v1 = current_version(t)
     # update a narrow band (pruned rewrite: one file touched)
     batch = spark.range(1000, 1100).select(
@@ -1302,7 +1302,7 @@ def test_delta_resolution_preserves_stats_blooms_dv(spark, tmp_path):
 
     t = tmp_path / "t"
     df = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
-    S.snapshot_write_with_stats(df, t, ["k"], n_files=4)  # v1 checkpoint
+    S.snapshot_write(df, t, stats_cols=["k"], n_files=4)  # v1 checkpoint
     S.snapshot_append(
         spark.range(1000, 1100).select(F.col("id").alias("k"), F.lit(0).alias("v")),
         t, stats_cols=["k"],
@@ -1821,12 +1821,12 @@ def test_shallow_clone_carries_deletion_vectors(spark, tmp_path):
         snapshot_clone,
         snapshot_delete_range_mor,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     src, dst = tmp_path / "src", tmp_path / "dst"
     df = spark.range(100).withColumnRenamed("id", "k")
-    snapshot_write_with_stats(df, src, ["k"], n_files=4)
+    snapshot_write(df, src, stats_cols=["k"], n_files=4)
     snapshot_delete_range_mor(spark, src, "k", 10, 19)
     snapshot_clone(src, dst)
     got = sorted(r.k for r in snapshot_read(spark, dst).collect())
@@ -1873,7 +1873,7 @@ def test_mor_update_range(spark, tmp_path):
         snapshot_delete_range_mor,
         snapshot_read,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
     from pyspark.sql import functions as F
 
@@ -1881,7 +1881,7 @@ def test_mor_update_range(spark, tmp_path):
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     snapshot_delete_range_mor(spark, t, "k", 12, 13)
     v_before = current_version(t)
     files_before = set(_read_manifest(t, v_before)["files"])
@@ -1919,7 +1919,7 @@ def test_mor_update_wide_routes_to_cow(spark, tmp_path):
         current_version,
         snapshot_read,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
     from pyspark.sql import functions as F
 
@@ -1927,7 +1927,7 @@ def test_mor_update_wide_routes_to_cow(spark, tmp_path):
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     snapshot_update_range_mor(
         spark, t, "k", 0, 99, {"v": F.col("v") + 5}, max_updated_rows=10
     )
@@ -2107,14 +2107,14 @@ def test_two_writer_threaded_mor_updates_compose(spark, tmp_path):
 
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(200).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     barrier = threading.Barrier(2)
     errors = []
     bands = {0: (10, 39), 1: (110, 139)}
@@ -2159,14 +2159,14 @@ def test_mor_update_on_column_mapped_table(spark, tmp_path):
         snapshot_read,
         snapshot_rename_column,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(60).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=3)
+    snapshot_write(df, t, stats_cols=["k"], n_files=3)
     snapshot_enable_column_mapping(spark, t)
     snapshot_rename_column(t, "v", "price")
     files_before = set(
@@ -2203,14 +2203,14 @@ def test_deletes_speak_logical_names_on_mapped_tables(spark, tmp_path):
         snapshot_enable_column_mapping,
         snapshot_read,
         snapshot_rename_column,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(80).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     snapshot_enable_column_mapping(spark, t)
     snapshot_rename_column(t, "k", "key")
     snapshot_delete_range_mor(spark, t, "key", 10, 19)
@@ -2234,14 +2234,14 @@ def test_pruned_reads_speak_logical_names_on_mapped_tables(spark, tmp_path):
         snapshot_read_range,
         snapshot_read_rect,
         snapshot_rename_column,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     snapshot_enable_column_mapping(spark, t)
     snapshot_rename_column(t, "k", "key")
     rr = snapshot_read_range(spark, t, "key", 20, 29)
@@ -2301,7 +2301,7 @@ def test_partitioned_upsert_speaks_logical_names_on_mapped_tables(spark, tmp_pat
 
 
 def test_write_with_stats_speaks_logical_names_on_mapped_tables(spark, tmp_path):
-    """Regression: snapshot_write_with_stats on a column-mapped table must
+    """Regression: snapshot_write(..., stats_cols=...) on a column-mapped table must
     translate to PHYSICAL space like every other writer — files written
     under logical names read back as NULL through the mapping, and stats
     keyed by logical names prune nothing (the data files only carry the
@@ -2313,21 +2313,21 @@ def test_write_with_stats_speaks_logical_names_on_mapped_tables(spark, tmp_path)
         snapshot_enable_column_mapping,
         snapshot_files_for_range,
         snapshot_rename_column,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     snapshot_enable_column_mapping(spark, t)
     snapshot_rename_column(t, "k", "key")
     # full-replace WITH STATS through the logical namespace
     df2 = spark.range(200).select(
         F.col("id").alias("key"), (F.col("id") * 7).alias("v")
     )
-    snapshot_write_with_stats(df2, t, ["key"], n_files=4)
+    snapshot_write(df2, t, stats_cols=["key"], n_files=4)
     got = snapshot_read(spark, t)
     assert set(got.columns) == {"key", "v"}
     rows = {r.key: r.v for r in got.collect()}
@@ -2585,14 +2585,14 @@ def test_change_feed_updates_as_updates_pairs_images(spark, tmp_path):
         snapshot_change_feed,
         snapshot_delete_range_mor,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     v1 = current_version(t)
     snapshot_update_range_mor(spark, t, "k", 10, 14, {"v": F.col("v") + 1})
     v2 = current_version(t)
@@ -2628,14 +2628,14 @@ def test_change_feed_updates_mode_degrades_without_pairing(spark, tmp_path):
         snapshot_change_feed,
         snapshot_compact,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(50).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     v1 = current_version(t)
     snapshot_update_range_mor(spark, t, "k", 5, 7, {"v": F.col("v") + 1})
     snapshot_compact(spark, t, target_files=2, stats_cols=["k"])
@@ -2660,14 +2660,14 @@ def test_tail_changes_updates_mode_delivers_paired_batches(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_tail_changes,
         snapshot_update_range_mor,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t, prog = tmp_path / "t", tmp_path / "prog"
     df = spark.range(50).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    snapshot_write_with_stats(df, t, ["k"], n_files=4)
+    snapshot_write(df, t, stats_cols=["k"], n_files=4)
     snapshot_update_range_mor(spark, t, "k", 3, 5, {"v": F.col("v") + 7})
     seen = {}
 
@@ -2782,13 +2782,13 @@ def test_change_feed_updates_mode_on_widened_table(spark, tmp_path):
 
 def test_full_replace_with_stats_clears_stale_types_map(spark, tmp_path):
     """r10 ADVICE regression: content-replacing writers through
-    _commit_full_replace (write_with_stats, zordered) CLEAR the widened
+    _commit_full_replace (every snapshot_write layout) CLEAR the widened
     types map like snapshot_write — a full replace whose batch ADDS a
     column on a previously-widened table must surface the new column
     (a stale map as explicit read schema would silently drop it)."""
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
@@ -2800,7 +2800,7 @@ def test_full_replace_with_stats_clears_stale_types_map(spark, tmp_path):
     replacement = spark.range(3).select(
         F.col("id").alias("k"), F.lit("new").alias("extra")
     )
-    snapshot_write_with_stats(replacement, t, ["k"])
+    snapshot_write(replacement, t, stats_cols=["k"])
     m = _read_manifest(t, current_version(t))
     assert not m.get("types"), "full replace must clear the widened map"
     got = snapshot_read(spark, t)
@@ -2825,13 +2825,13 @@ def test_purge_dv_rewrites_only_dirty_files(spark, tmp_path):
         snapshot_delete_range_mor,
         snapshot_purge_dv,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(100).selectExpr("id AS k", "id * 10 AS v"), t,
-        ["k"], n_files=4,
+        stats_cols=["k"], n_files=4,
     )  # k-ranges [0,24] [25,49] [50,74] [75,99]
     snapshot_delete_range_mor(spark, t, "k", 10, 19)  # DV on file 1 only
     v_pre = current_version(t)
@@ -2882,12 +2882,12 @@ def test_purge_then_vacuum_reclaims_replaced_files(spark, tmp_path):
         snapshot_purge_dv,
         snapshot_read,
         snapshot_vacuum,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
-    snapshot_write_with_stats(
-        spark.range(100).selectExpr("id AS k"), t, ["k"], n_files=4,
+    snapshot_write(
+        spark.range(100).selectExpr("id AS k"), t, stats_cols=["k"], n_files=4,
     )
     snapshot_delete_range_mor(spark, t, "k", 0, 30)
     v_pre = current_version(t)
@@ -2917,7 +2917,7 @@ def test_copy_into_races_concurrent_append(spark, tmp_path):
         current_version,
         snapshot_copy_into,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     land = tmp_path / "landing"
@@ -2927,8 +2927,8 @@ def test_copy_into_races_concurrent_append(spark, tmp_path):
             land / f"f{j}.parquet"
         )
     t = tmp_path / "t"
-    snapshot_write_with_stats(
-        spark.range(10).selectExpr("id AS k", "id AS v"), t, ["k"],
+    snapshot_write(
+        spark.range(10).selectExpr("id AS k", "id AS v"), t, stats_cols=["k"],
         n_files=1,
     )
 
@@ -3027,14 +3027,14 @@ def test_autocompact_bin_packs_only_small_files(spark, tmp_path):
         snapshot_append,
         snapshot_compact_small,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
     from pyspark.sql import functions as F
 
     t = tmp_path / "t"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(2000).selectExpr("id AS k", "id * 2 AS v"),
-        t, ["k"], n_files=2,
+        t, stats_cols=["k"], n_files=2,
     )
     big = list(_read_manifest(t, current_version(t))["files"])
     big_md5 = {f: hashlib.md5((t / f).read_bytes()).hexdigest() for f in big}
@@ -3086,14 +3086,14 @@ def test_change_feed_scattered_dv_deltas_route_to_join(spark, tmp_path):
         current_version,
         snapshot_change_feed,
         snapshot_delete_where,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     t = tmp_path / "t"
     base = spark.range(0, 1200).select(
         F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")
     )
-    snapshot_write_with_stats(base, t, ["k"], n_files=2)
+    snapshot_write(base, t, stats_cols=["k"], n_files=2)
     v1 = current_version(t)
     # scattered MOR delete: every even key -> one DV run per position
     snapshot_delete_where(spark, t, "k % 2 = 0")

@@ -1090,16 +1090,16 @@ def test_stream_snapshot_merge_sink_exactly_once_cdc_apply(spark, tmp_path):
         last_txn,
         snapshot_merge,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
     from energy_datalake_solution_spark.streaming.pipeline import (
         stream_snapshot_merge_sink,
     )
 
     t = tmp_path / "serving"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(100).selectExpr("id AS k", "id * 10 AS v"), t,
-        ["k"], n_files=4,
+        stats_cols=["k"], n_files=4,
     )
     src = tmp_path / "changes"
     src.mkdir()
@@ -1162,7 +1162,7 @@ def test_stream_fanout_txn_sink_atomic_and_replay_safe(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         current_version,
         snapshot_read,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
     from energy_datalake_solution_spark.streaming.pipeline import (
         stream_fanout_txn_sink,
@@ -1170,8 +1170,8 @@ def test_stream_fanout_txn_sink_atomic_and_replay_safe(spark, tmp_path):
 
     clicks_t, errors_t = tmp_path / "clicks", tmp_path / "errors"
     empty = spark.createDataFrame([], "k long, kind string")
-    snapshot_write_with_stats(empty, clicks_t, ["k"], n_files=1)
-    snapshot_write_with_stats(empty, errors_t, ["k"], n_files=1)
+    snapshot_write(empty, clicks_t, stats_cols=["k"], n_files=1)
+    snapshot_write(empty, errors_t, stats_cols=["k"], n_files=1)
     src = tmp_path / "in"
     src.mkdir()
     rows = [{"k": 1, "kind": "click"}, {"k": 2, "kind": "error"},
@@ -1227,16 +1227,16 @@ def test_cdc_mirror_loop_continuous_and_crash_replay(spark, tmp_path):
         snapshot_delete_where,
         snapshot_read,
         snapshot_update_where,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
     from energy_datalake_solution_spark.streaming.pipeline import (
         snapshot_mirror_cycle,
     )
 
     src, rep = tmp_path / "src", tmp_path / "rep"
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.range(100).selectExpr("id AS k", "id * 10 AS v"), src,
-        ["k"], n_files=4,
+        stats_cols=["k"], n_files=4,
     )
     snapshot_clone(src, rep)
     boot = current_version(src)
