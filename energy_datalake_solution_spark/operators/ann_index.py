@@ -1,6 +1,6 @@
 """Amortized IVF ANN: a STORED inverted-file index + a probe-only query.
 
-``embeddings_ivf_ann`` (operators/similarity.py) fuses the KMeans index
+``embeddings_ivf_ann`` (operators/similarity.py) fuses the k-means index
 BUILD into every query — the right demo of the plan shape, but not how a
 100 TB deployment runs IVF: there the corpus is assigned to coarse
 centroids ONCE, stored bucketed by cell, and every query only (a) scores
@@ -8,13 +8,15 @@ the tiny centroid table, (b) reads the nprobe probed cells' files, and
 (c) verifies exact cosine within them. This module implements exactly
 that split on the snapshot table format (sources/snapshots.py):
 
-  * ``build_ivf_index`` — spherical-KMeans-assign every candidate vector
-    to a cell and commit the assignment table RANGE-PARTITIONED by
-    ``centroid_id`` with per-file min/max stats in the manifest
-    (snapshot_write with ``stats_cols``), plus a tiny ``centroids`` side table.
-    Build cost is amortized: sampled fit (corpus-size-independent,
-    ~256 vectors/cell) + one assignment pass — paid once per corpus
-    version, never per query.
+  * ``build_ivf_index`` — fit spherical k-means centroids on the driver
+    (``spherical_centroids``: one Spark read of a deterministic hash
+    sample of ~256 vectors/cell, corpus-size-independent), put every
+    candidate vector in its argmax-cosine cell (``nearest_cell``, one
+    shuffle-free expression) and commit the assignment table
+    RANGE-PARTITIONED by ``centroid_id`` with per-file min/max stats in
+    the manifest (snapshot_write with ``stats_cols``), plus a tiny
+    ``centroids`` side table. Build cost is amortized: sampled fit + one
+    assignment pass — paid once per corpus version, never per query.
   * ``ivf_probe`` — the steady-state query path: broadcast the centroid
     table, pick each query's nprobe nearest cells, prune the stored
     index's FILES against the probed cell set via the manifest stats
@@ -69,10 +71,10 @@ from .similarity import (
     LSH_SIG_BITS,
     N_QUERIES,
     TOP_K,
-    _distinct_directions,
-    _kmeans_train_input,
     cosine_topk_epilogue,
     lsh_planes,
+    nearest_cell,
+    spherical_centroids,
 )
 
 IVF_INDEX_NLIST = 8    # cells in the stored index (stock embeddings table)
@@ -86,8 +88,10 @@ def build_ivf_index(
     nlist: int = IVF_INDEX_NLIST,
     n_queries: int = N_QUERIES,
 ) -> list[tuple[int, list[float]]]:
-    """Fit sampled spherical KMeans on the candidate vectors and commit the
-    centroid-assigned corpus as a snapshot table bucketed by cell.
+    """Fit spherical k-means on a sample of the candidate vectors (on the
+    driver, the same fit as embeddings_ivf_ann) and commit the corpus,
+    each vector in its argmax-cosine cell, as a snapshot table bucketed
+    by cell.
 
     Storage layout IS the index: ``cells`` is range-partitioned on
     centroid_id into ~nlist files whose manifests carry per-file
@@ -99,38 +103,12 @@ def build_ivf_index(
     root = Path(index_root)
     e = load_table(spark, sf_dir, "embeddings").where(l2_norm(F.col("embedding")) > 0)
     cand = e.where(F.col("vec_id") >= n_queries)
-    k_eff = _distinct_directions(cand, nlist)
-    if k_eff < 2:
-        # degenerate corpus (one distinct direction): a single cell
-        assigned = cand.select("vec_id", "embedding", F.lit(0).alias("centroid_id"))
-        centroids = [(0, [0.0] * 64)]
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.feature import Normalizer
-        from pyspark.ml.functions import array_to_vector
-
-        raw = cand.select(
-            "vec_id", "embedding", array_to_vector(F.col("embedding")).alias("_raw")
-        )
-        with_vec = Normalizer(inputCol="_raw", outputCol="features", p=2.0).transform(
-            raw
-        ).drop("_raw")
-        km = KMeans(
-            k=k_eff, seed=42, maxIter=10, featuresCol="features", predictionCol="centroid_id"
-        )
-        fit_input = _kmeans_train_input(with_vec, k_eff).select("features").persist()
-        try:
-            try:
-                model = km.fit(fit_input)
-            except Exception:
-                # sample degenerated below k distinct points — refit on all
-                model = km.fit(with_vec.select("features"))
-        finally:
-            fit_input.unpersist()
-        assigned = model.transform(with_vec).select("vec_id", "embedding", "centroid_id")
-        centroids = [
-            (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
-        ]
+    centroids = spherical_centroids(cand.select("vec_id", "embedding"), nlist)
+    assigned = cand.select(
+        "vec_id",
+        "embedding",
+        nearest_cell(F.col("embedding"), centroids).alias("centroid_id"),
+    )
     snapshot_write(assigned, root / "cells", stats_cols=["centroid_id"], n_files=nlist)
     cdf = spark.createDataFrame(centroids, ["centroid_id", "centroid"]).select(
         F.col("centroid_id").cast("int").alias("centroid_id"),
@@ -239,7 +217,7 @@ def ivf_probe(
     difference between beating and trailing the exact scan. The CORPUS
     side stays fully distributed: pruned file read, broadcast hash join,
     per-query window. ``centroids`` (from index build or a cached read)
-    skips the side-table read. No KMeans anywhere — the steady-state path."""
+    skips the side-table read. No k-means fit — the steady-state path."""
     import numpy as np
 
     root = Path(index_root)
@@ -331,10 +309,10 @@ def _ivf_index_for(
 def embeddings_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN against the STORED index — the amortized steady-state path.
 
-    First invocation per (process, corpus) builds the index (sampled
-    KMeans fit + one assignment pass, committed through the snapshot
-    format bucketed by cell); every later invocation is probe-only:
-    broadcast centroid scoring, manifest-stats file prune to the nprobe
+    First invocation per (process, corpus) builds the index (driver-side
+    spherical k-means on a hash sample + one assignment pass, committed
+    through the snapshot format bucketed by cell); every later invocation
+    is probe-only: broadcast centroid scoring, manifest-stats file prune to the nprobe
     probed cells, broadcast equi-join, exact cosine re-rank. Same output
     contract as embeddings_ivf_ann (recall floor >= 0.85 pinned in
     tests/test_ann_recall.py, scores exact); approximate -> rows-only
@@ -358,16 +336,17 @@ def ivf_index_append(
 ) -> int:
     """Incrementally add a vector batch to a STORED IVF index without
     rebuilding it: assign each new vector to its nearest existing centroid
-    (broadcast spherical assignment — argmax cosine against the <= nlist
-    centroid rows, the same ranking spherical KMeans uses on unit vectors)
-    and snapshot_append the assignments to the cells table, collecting
-    footer stats for the new files so manifest pruning keeps working.
+    (``nearest_cell`` against the <= nlist stored centroid rows — the
+    expression build_ivf_index assigns with, so a vector lands in the cell
+    the build would have given it) and snapshot_append the assignments to
+    the cells table, collecting footer stats for the new files so manifest
+    pruning keeps working.
     Returns the new cells-table version.
 
     This is the 100 TB maintenance path: an ingest cycle appends its
-    batch in one pass (no KMeans, corpus never re-shuffles), probes see
-    the new vectors immediately (snapshot isolation: a probe mid-append
-    keeps its resolved manifest), and periodic snapshot_compact with
+    batch in one pass (no fit, no shuffle), probes see the new vectors
+    immediately (snapshot isolation: a probe mid-append keeps its
+    resolved manifest), and periodic snapshot_compact with
     stats re-clusters the accumulated small append files back into tight
     per-cell ranges — exactly Delta's OPTIMIZE-after-streaming pattern.
     Centroid drift is the accepted tradeoff of every incremental IVF
@@ -384,19 +363,14 @@ def ivf_index_append(
 
         if txn <= last_txn(root / "cells", txn_app):
             return current_version(root / "cells")
-    cdf = snapshot_read(spark, root / "centroids")
-    b = batch.where(l2_norm(F.col("embedding")) > 0).select("vec_id", "embedding")
-    scored = b.crossJoin(F.broadcast(cdf)).select(
+    centroids = sorted(
+        (r.centroid_id, list(r.centroid))
+        for r in snapshot_read(spark, root / "centroids").collect()
+    )
+    assigned = batch.where(l2_norm(F.col("embedding")) > 0).select(
         "vec_id",
         "embedding",
-        "centroid_id",
-        cosine(F.col("embedding"), F.col("centroid")).alias("c_sim"),
-    )
-    wv = W.partitionBy("vec_id").orderBy(F.col("c_sim").desc(), F.col("centroid_id"))
-    assigned = (
-        scored.withColumn("p", F.row_number().over(wv))
-        .where(F.col("p") == 1)
-        .select("vec_id", "embedding", "centroid_id")
+        nearest_cell(F.col("embedding"), centroids).alias("centroid_id"),
     )
     from ..sources.snapshots import snapshot_append
 

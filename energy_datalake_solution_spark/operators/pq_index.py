@@ -62,7 +62,13 @@ from ..sources.snapshots import (
     snapshot_write,
 )
 from .ann_index import PROBE_DRIVER_BATCH_CAP, _probe_batch_capped
-from .similarity import N_QUERIES, TOP_K, cosine_topk_epilogue
+from .similarity import (
+    N_QUERIES,
+    TOP_K,
+    cosine_topk_epilogue,
+    lloyd_deterministic,
+    train_sample,
+)
 
 PQ_M = 16         # subspaces (64 dims -> 4 dims each)
 PQ_K = 16         # centroids per subspace (4-bit codes)
@@ -91,60 +97,6 @@ def _unit_rows(df: DataFrame) -> DataFrame:
     )
 
 
-def _train_sample(e: DataFrame, cap: int = PQ_TRAIN_CAP) -> "object":
-    """Deterministic hash-sampled training matrix (numpy (n, 64) float64),
-    counted: at n <= cap this is the whole candidate set (bit-identical
-    behavior at test scale); above, an xxhash64(vec_id) % mod thinning —
-    the _kmeans_train_input idiom, so build cost never tracks the corpus."""
-    import numpy as np
-
-    n = e.count()
-    if n == 0:  # empty-lake sweep: a shaped empty matrix, not a crash
-        return np.zeros((0, PQ_DIM))
-    s = e if n <= cap else e.where(
-        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n // cap)) == 0
-    )
-    pdf = s.select("vec_id", "unit").toPandas().sort_values("vec_id")
-    return np.array(pdf["unit"].tolist(), dtype=np.float64)
-
-
-def _lloyd_deterministic(X: "object", k: int, iters: int = PQ_ITERS) -> "object":
-    """Plain Lloyd k-means with deterministic farthest-point init (no RNG:
-    seed = row 0 of the vec_id-sorted sample; each next seed is the point
-    farthest from its nearest chosen seed). Empty clusters re-seed to the
-    current worst-quantized point, also deterministic. Returns (k, d)."""
-    import numpy as np
-
-    n = len(X)
-    if n == 0:
-        return np.zeros((k, X.shape[1] if X.ndim == 2 else PQ_SUB))
-    seeds = [0]
-    d2 = ((X - X[0]) ** 2).sum(axis=1)
-    while len(seeds) < min(k, n):
-        nxt = int(np.argmax(d2))
-        seeds.append(nxt)
-        d2 = np.minimum(d2, ((X - X[nxt]) ** 2).sum(axis=1))
-    C = X[seeds].copy()
-    if len(C) < k:  # degenerate sample: pad with repeats (codes still valid)
-        C = np.vstack([C, np.repeat(C[:1], k - len(C), axis=0)])
-    for _ in range(iters):
-        # (n, k) squared distances via ||x||^2 - 2xC^T + ||c||^2
-        d = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
-        assign = d.argmin(axis=1)
-        newC = C.copy()
-        for j in range(k):
-            mask = assign == j
-            if mask.any():
-                newC[j] = X[mask].mean(axis=0)
-            else:
-                worst = int(d[np.arange(n), assign].argmax())
-                newC[j] = X[worst]
-        if np.allclose(newC, C):
-            break
-        C = newC
-    return C
-
-
 def train_pq_codebooks(
     spark: SparkSession, sf_dir: str, n_queries: int = N_QUERIES
 ) -> "object":
@@ -155,10 +107,10 @@ def train_pq_codebooks(
     e = _unit_rows(load_table(spark, sf_dir, "embeddings")).where(
         F.col("vec_id") >= n_queries
     )
-    X = _train_sample(e)
+    X = train_sample(e, PQ_TRAIN_CAP)
     books = np.stack(
         [
-            _lloyd_deterministic(X[:, m * PQ_SUB : (m + 1) * PQ_SUB], PQ_K)
+            lloyd_deterministic(X[:, m * PQ_SUB : (m + 1) * PQ_SUB], PQ_K, PQ_ITERS)
             for m in range(PQ_M)
         ]
     )
@@ -431,15 +383,15 @@ def build_ivfpq_index(
     cand = _unit_rows(load_table(spark, sf_dir, "embeddings")).where(
         F.col("vec_id") >= n_queries
     )
-    X = _train_sample(cand)
-    cents = _lloyd_deterministic(X, nlist)
+    X = train_sample(cand, PQ_TRAIN_CAP)
+    cents = lloyd_deterministic(X, nlist, PQ_ITERS)
     nrm = np.sqrt((cents * cents).sum(1))
     cents = cents / np.maximum(nrm[:, None], 1e-12)
     assign = (X @ cents.T).argmax(1)
     resid = X - cents[assign]
     books = np.stack(
         [
-            _lloyd_deterministic(resid[:, m * PQ_SUB : (m + 1) * PQ_SUB], PQ_K)
+            lloyd_deterministic(resid[:, m * PQ_SUB : (m + 1) * PQ_SUB], PQ_K, PQ_ITERS)
             for m in range(PQ_M)
         ]
     )

@@ -9,12 +9,16 @@ Three tiers:
   2. random-hyperplane LSH ANN — deterministic seeded hyperplanes, bucket
      join on (band, key) with Hamming-1 multi-probe on the query side;
      recall@10 ~0.92 vs exact (floor pinned in tests/test_ann_recall.py).
-  3. IVF (inverted-file) ANN — spherical (unit-vector) KMeans coarse
-     centroids, nprobe=6 of nlist=8; recall ~0.92, floor pinned. The
-     synthetic embeddings are isotropic (no planted cluster structure), so
-     recall tracks the probed fraction almost linearly — real clustered
-     embeddings support far lower nprobe/nlist at the same recall; the
-     measured sweep is in the operator docstring.
+  3. IVF (inverted-file) ANN — coarse centroids from a spherical
+     (unit-vector) k-means fitted on the driver over a deterministic hash
+     sample of <= 256 rows per cell (``spherical_centroids``; the same
+     sampler trains the PQ codebooks), vectors assigned to cells by one
+     argmax-cosine expression (``nearest_cell``), nprobe=6 of nlist=8;
+     recall ~0.92, floor pinned. The synthetic embeddings are isotropic
+     (no planted cluster structure), so recall tracks the probed fraction
+     almost linearly — real clustered embeddings support far lower
+     nprobe/nlist at the same recall; the measured sweep is in the
+     operator docstring.
 
 Exact paths use higher-order functions or a blocked numpy applyInPandas
 kernel (near-dups); arithmetic accumulates in double, in the oracle's
@@ -112,44 +116,123 @@ def embeddings_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TRAIN_SAMPLE_PER_CELL = 256  # FAISS practice: ~256 training vectors per centroid
+SPHERICAL_ITERS = 10  # Lloyd rounds of the coarse fit; stops earlier once stable
 
 
-def _kmeans_train_input(with_vec: DataFrame, k: int) -> DataFrame:
-    """Deterministic hash-sampled KMeans training set, capped at
-    ~TRAIN_SAMPLE_PER_CELL * k rows. Coarse centroids need a statistical
-    sample, not the corpus: public FAISS trains IVF on ~256 vectors per
-    cell, and beyond that the centroids stop moving while the fit cost
-    keeps growing. Sampling by xxhash64(vec_id) % mod is deterministic
-    (same plan every run — no RNG), and at test scales (n <= cap) the mod
-    is 1, i.e. behavior is bit-identical to training on everything. At
-    100 TB this makes index BUILD cost O(k * sample) — independent of
-    corpus size — while assignment/transform still maps every vector.
-    Callers keep a full-input refit fallback for the pathological case of
-    a sample with fewer distinct points than k."""
-    cap = TRAIN_SAMPLE_PER_CELL * k
-    n = with_vec.count()
-    if n <= cap:
-        return with_vec
-    mod = n // cap
-    return with_vec.where(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(mod)) == 0)
+def train_sample(rows: DataFrame, cap: int) -> "object":
+    """The training matrix of every driver-side k-means fit (IVF and
+    semantic-dedup coarse centroids, PQ codebooks): ``rows`` carries
+    (vec_id, vector); returns the vectors as an (n, d) float64 numpy
+    matrix in vec_id order, n <= ~cap. Centroids need a statistical
+    sample, not the corpus: FAISS trains on ~256 vectors per cell, and
+    beyond that the centroids stop moving while the fit cost keeps
+    growing, so build cost is O(cap), independent of corpus size.
+
+    The rows come through a Spark scan (so the bytes count as the
+    operator's input). A ``limit(cap + 1)`` pull reads the whole input
+    when it fits under the cap — one job, bit-identical to training on
+    everything. Above the cap the input is counted and thinned by
+    xxhash64(vec_id) % (n // cap): deterministic, the same rows every
+    run, no RNG. An empty input gives a (0, 64) matrix, not an error."""
+    import numpy as np
+
+    vec = rows.columns[1]
+    head = rows.limit(cap + 1).collect()
+    if len(head) > cap:
+        mod = rows.count() // cap
+        head = rows.where(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(mod)) == 0).collect()
+    head.sort(key=lambda r: r["vec_id"])
+    if not head:
+        return np.zeros((0, 64))
+    return np.array([r[vec] for r in head], dtype=np.float64)
 
 
+def lloyd_deterministic(X: "object", k: int, iters: int, unit: bool = False) -> "object":
+    """Plain Lloyd k-means with deterministic farthest-point init (no RNG:
+    seed = row 0 of the vec_id-sorted sample; each next seed is the point
+    farthest from its nearest chosen seed). Empty clusters re-seed to the
+    current worst-quantized point, also deterministic. Returns (k, d); when
+    the sample has fewer than k distinct points the seeds are padded with
+    repeats of the first.
 
-def _distinct_directions(e: DataFrame, cap: int) -> int:
-    """min(cap, number of distinct unit directions), by 8-byte hash
-    (round(9) kills fp jitter). MLlib's blocked KMeans aggregator crashes
-    when k exceeds the number of distinct points, which a degenerate
-    corpus (all vectors colinear) can trigger — the fit's k is capped by
-    this count. The count stops at ``cap``: distinct().limit(cap) ships at
-    most cap hash rows through the final exchange instead of exactly
-    counting every distinct direction in the corpus (the exact number
-    above k is irrelevant to the guard — at 100 TB that is the difference
-    between a bounded guard job and a full-cardinality aggregation)."""
-    norm = l2_norm(F.col("embedding"))
-    unit = F.transform(
-        F.col("embedding"), lambda x: F.round(x.cast("double") / norm, 9)
+    ``unit`` is spherical k-means over unit rows: centroids are kept on
+    the unit sphere (the nearest by distance is then the one of highest
+    cosine), and seeding stops once every point lies within 1e-6 of a seed
+    — k is capped at the number of distinct directions, float32 jitter
+    included, and the result has that many rows, no padding."""
+    import numpy as np
+
+    n = len(X)
+    if n == 0:
+        return np.zeros((k, X.shape[1]))
+    tol = 1e-12 if unit else 0.0
+    seeds = [0]
+    d2 = ((X - X[0]) ** 2).sum(axis=1)
+    while len(seeds) < min(k, n) and d2.max() > tol:
+        nxt = int(np.argmax(d2))
+        seeds.append(nxt)
+        d2 = np.minimum(d2, ((X - X[nxt]) ** 2).sum(axis=1))
+    C = X[seeds].copy()
+    if len(C) < k and not unit:  # degenerate sample: pad (codes still valid)
+        C = np.vstack([C, np.repeat(C[:1], k - len(C), axis=0)])
+    for _ in range(iters):
+        # (n, k) squared distances via ||x||^2 - 2xC^T + ||c||^2
+        d = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
+        assign = d.argmin(axis=1)
+        newC = C.copy()
+        for j in range(len(C)):
+            mask = assign == j
+            if mask.any():
+                newC[j] = X[mask].mean(axis=0)
+            else:
+                worst = int(d[np.arange(n), assign].argmax())
+                newC[j] = X[worst]
+        if unit:
+            nrm = np.linalg.norm(newC, axis=1, keepdims=True)
+            newC = np.where(nrm > 0, newC / np.where(nrm > 0, nrm, 1.0), C)
+        if np.allclose(newC, C):
+            break
+        C = newC
+    return C
+
+
+def spherical_centroids(rows: DataFrame, k: int) -> list[tuple[int, list[float]]]:
+    """THE coarse-centroid fit of the IVF operators and semantic dedup:
+    spherical k-means on the driver over ``train_sample(rows)``, at most
+    ~TRAIN_SAMPLE_PER_CELL * k rows read through Spark (zero-norm rows
+    must be filtered out first). Rows are normalized, so cells partition by
+    direction (what cosine cares about) — k-means on raw vectors groups by
+    magnitude and wrecks recall. Then at most SPHERICAL_ITERS
+    deterministic Lloyd rounds with unit-norm centroids; k is capped at
+    the number of distinct directions in the sample, so a colinear corpus
+    gives one cell. Returns [(cell_id, centroid)] with ids 0..k'-1; an
+    empty sample gives the single cell (0, zero vector)."""
+    import numpy as np
+
+    X = train_sample(rows, TRAIN_SAMPLE_PER_CELL * k)
+    if not len(X):
+        return [(0, [0.0] * X.shape[1])]
+    U = X / np.linalg.norm(X, axis=1, keepdims=True)
+    C = lloyd_deterministic(U, k, SPHERICAL_ITERS, unit=True)
+    return [(i, [float(x) for x in c]) for i, c in enumerate(C)]
+
+
+def nearest_cell(emb, centroids: list[tuple[int, list[float]]]):
+    """The cell of ``emb`` as one shuffle-free Column: argmax cosine against
+    the centroid literal, ties to the lower id; a zero-norm centroid (the
+    empty-sample cell) scores -2, below any cosine. Centroid ids must be
+    0..k-1 in list order, as spherical_centroids returns them. Shared by
+    the fused IVF query, the stored-index build and its append, so every
+    path puts a vector in the same cell."""
+    lit = F.expr(
+        "array("
+        + ",".join(
+            "array(" + ",".join(repr(float(x)) + "D" for x in c) + ")" for _, c in centroids
+        )
+        + ")"
     )
-    return e.select(F.xxhash64(unit).alias("h")).distinct().limit(cap).count()
+    sims = F.transform(lit, lambda c: F.coalesce(cosine(emb, c), F.lit(-2.0)))
+    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
 
 
 def lsh_planes() -> list[list[float]]:
@@ -351,74 +434,37 @@ def embeddings_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("embeddings_ivf_ann", oracle=None, headline=True, tags=("similarity", "approx"))
 def embeddings_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: coarse-quantize candidates to seeded KMeans centroids,
-    probe the nearest 6 of 8 spherical centroids per query, exact cosine within probes.
+    """IVF-style ANN: coarse-quantize candidates to 8 spherical k-means
+    centroids, probe the nearest 6 per query, exact cosine within probes.
+    The fit runs on the driver over one Spark read of the candidate
+    sample; every candidate gets its cell from the shuffle-free
+    ``nearest_cell`` expression, as in the stored index (ann_index.py).
 
     At 100 TB the candidate table is stored bucketed by centroid_id, so a
     probe reads only nprobe/nlist of the data (partition pruning on the
     cluster column). Approximate -> rows-only check.
 
-    nprobe choice (offline sweep, 3 seeds, recall@5 vs exact, this data):
-    nprobe=3 -> 0.67, 4 -> 0.77, 6 -> 0.93 (min 0.92), 8 -> 1.0. The
+    nprobe choice (sweep at sf0.001/sf0.01/sf0.1, recall@5 vs exact):
+    nprobe=3 -> 0.71, 4 -> 0.83, 6 -> 0.94 (min 0.92), 8 -> 1.0. The
     synthetic vectors are isotropic, so recall ~= probed fraction; 6/8
     holds the pinned >=0.85 floor with margin. On real (clustered)
     embeddings the same recall comes at nprobe/nlist ~ 0.1 or less —
     the knob trades scan fraction for recall, the plan shape is unchanged.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from pyspark.ml.feature import Normalizer
-
     # zero-norm vectors have no direction: they can never score above a
-    # cosine threshold (cosine is NULL) and MLlib's blocked KMeans
-    # aggregator rejects them after normalization — exclude up front
+    # cosine threshold (cosine is NULL) and have no place on the unit
+    # sphere the fit clusters on — exclude up front
     e = load_table(spark, sf_dir, "embeddings").where(
         l2_norm(F.col("embedding")) > 0
     )
-    # spherical k-means: cluster UNIT vectors, so cells partition by
-    # direction (what cosine cares about), not by vector norm — unnormalized
-    # KMeans groups by magnitude and wrecks recall. Normalizer runs
-    # JVM-side on the ML vector; the fit input is persisted for the
-    # duration of KMeans' iterations (it re-scans per iteration) and
-    # released immediately after.
-    raw = e.select(
-        "vec_id", "embedding", array_to_vector(F.col("embedding")).alias("_raw")
-    )
-    with_vec = Normalizer(inputCol="_raw", outputCol="features", p=2.0).transform(raw).drop("_raw")
-    # maxIter=10: on this corpus Lloyd's has long converged by 10 (assignments
-    # stable); halves the fit's job count, recall floor unchanged (pinned test)
-    # count on the FIT subset (candidates only) — the query vectors may
-    # add directions the fit never sees; MLlib needs k >= 2, so a
-    # degenerate corpus (one distinct direction) skips the fit: one cell
-    k_eff = _distinct_directions(e.where(F.col("vec_id") >= N_QUERIES), 8)
-    if k_eff < 2:
-        assigned = with_vec.drop("features").withColumn("centroid_id", F.lit(0))
-        centroids = [(0, [0.0] * 64)]
-    else:
-        km = KMeans(k=k_eff, seed=42, maxIter=10, featuresCol="features", predictionCol="centroid_id")
-        cand_vec = with_vec.where(F.col("vec_id") >= N_QUERIES)
-        fit_input = _kmeans_train_input(cand_vec, k_eff).select("features").persist()
-        try:
-            try:
-                model = km.fit(fit_input)
-            except Exception:
-                # sample degenerated below k distinct points — refit on all
-                model = km.fit(cand_vec.select("features"))
-        finally:
-            fit_input.unpersist()
-        assigned = model.transform(with_vec).drop("features")
-        centroids = [
-            (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
-        ]
+    # fit on the candidates only: the query vectors are not part of the
+    # indexed corpus (build_ivf_index fits on the same rows, so the stored
+    # index and this fused form hold the same cells)
+    cand = e.where(F.col("vec_id") >= N_QUERIES)
+    centroids = spherical_centroids(cand.select("vec_id", "embedding"), 8)
     cdf = spark.createDataFrame(centroids, ["centroid_id", "centroid"]).select(
         "centroid_id", F.col("centroid").cast("array<double>").alias("centroid")
     )
-
-    # the query side never reads its centroid assignment (probing ranks
-    # centroids per query below) — take it straight from the filtered
-    # scan instead of through the Normalizer/KMeans-transform branch:
-    # one fewer full normalize+assign pass, identical rows
     q = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
@@ -435,8 +481,10 @@ def embeddings_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = qc.withColumn("p", F.row_number().over(wq)).where(F.col("p") <= 6).select(
         "q_id", "q_emb", "centroid_id"
     )
-    cands = assigned.where(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "centroid_id"
+    cands = cand.select(
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("c_emb"),
+        nearest_cell(F.col("embedding"), centroids).alias("centroid_id"),
     )
     scored = F.broadcast(probes).join(cands, "centroid_id").select(
         "q_id", "c_id", F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cosine_sim")
@@ -598,7 +646,8 @@ def embeddings_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     such id across all shared cells (greedy lowest-id representative —
     deterministic, no iteration).
 
-    Plan: one KMeans fit (persisted input, seeded), NPROBE-way explode,
+    Plan: one driver-side spherical k-means fit over one Spark read of
+    the hash sample (``spherical_centroids``), NPROBE-way explode,
     one shuffle to group by cell, an Arrow-batched `applyInPandas` numpy
     kernel per cell, then a per-vector min/max merge of the probe verdicts.
     At 100 TB the primary cell is the storage bucketing key, k scales with
@@ -610,34 +659,13 @@ def embeddings_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     NPROBE = 3
     import numpy as np
     import pandas as pd
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.feature import Normalizer
-    from pyspark.ml.functions import array_to_vector
 
     # direction-less (zero-norm) vectors can't be semantic duplicates and
-    # break spherical KMeans — excluded, same rule as the IVF operator
+    # have no place on the unit sphere — excluded, same rule as the IVF operator
     e = load_table(spark, sf_dir, "embeddings").where(
         l2_norm(F.col("embedding")) > 0
     )
-    raw = e.select("vec_id", "embedding", array_to_vector(F.col("embedding")).alias("_raw"))
-    with_vec = Normalizer(inputCol="_raw", outputCol="features", p=2.0).transform(raw).drop("_raw")
-    k_eff = _distinct_directions(e, K)
-    if k_eff < 2:  # MLlib needs k >= 2; one direction -> one cell
-        centroids = [(0, [0.0] * 64)]
-    else:
-        km = KMeans(k=k_eff, seed=42, maxIter=10, featuresCol="features", predictionCol="cluster_id")
-        fit_input = _kmeans_train_input(with_vec, k_eff).select("features").persist()
-        try:
-            try:
-                model = km.fit(fit_input)
-            except Exception:
-                # sample degenerated below k distinct points — refit on all
-                model = km.fit(with_vec.select("features"))
-        finally:
-            fit_input.unpersist()
-        centroids = [
-            (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
-        ]
+    centroids = spherical_centroids(e.select("vec_id", "embedding"), K)
     cdf = spark.createDataFrame(centroids, ["cell_id", "centroid"]).select(
         "cell_id", F.col("centroid").cast("array<double>").alias("centroid")
     )

@@ -83,6 +83,21 @@ def test_lsh_probe_stored_index_matches_fused_form(spark):
     assert a[key].equals(b[key])
 
 
+def test_ivf_probe_stored_index_matches_fused_form(spark):
+    """The stored-index IVF probe must return EXACTLY the fused
+    embeddings_ivf_ann's rows: both fit the same candidate sample with the
+    same spherical k-means, put every candidate in a cell with the same
+    expression and probe the same nearest cells per query — only the
+    amortization differs."""
+    probe = QUERIES["embeddings_ivf_probe"].fn(spark, SF_ORACLE).toPandas()
+    fused = QUERIES["embeddings_ivf_ann"].fn(spark, SF_ORACLE).toPandas()
+    key = ["query_id", "neighbor_id", "cosine_sim", "rank"]
+    a = probe.sort_values(key).reset_index(drop=True)
+    b = fused.sort_values(key).reset_index(drop=True)
+    assert len(a) > 0
+    assert a[key].equals(b[key])
+
+
 def test_ivf_index_append_makes_new_vectors_findable(spark, tmp_path):
     """Incremental index maintenance: appending a batch to the stored IVF
     index (no rebuild) must make the new vectors immediately findable by
@@ -132,6 +147,41 @@ def test_ivf_index_append_makes_new_vectors_findable(spark, tmp_path):
     # its nearest neighbors are same-cluster vectors (cluster = id % 16)
     assert all(r.neighbor_id % 16 == 1005 % 16 for r in hits)
     assert any(r.neighbor_id >= 1000 for r in hits)  # appended vecs findable
+
+
+def test_ivf_index_append_lands_vectors_in_their_build_cells(spark, tmp_path):
+    """The build and the incremental append put a vector in the same cell:
+    re-appending every indexed vector under a new id must land each copy
+    in the cell build_ivf_index gave the original. Isotropic vectors, so
+    many sit near a cell boundary where two different assignment rules
+    would disagree."""
+    from pyspark.sql import functions as F
+
+    from energy_datalake_solution_spark.operators.ann_index import (
+        build_ivf_index,
+        ivf_index_append,
+    )
+    from energy_datalake_solution_spark.sources.catalog import load_table
+    from energy_datalake_solution_spark.sources.snapshots import snapshot_read
+
+    offset = 1_000_000
+    idx = tmp_path / "idx"
+    build_ivf_index(spark, SF_ORACLE, idx)
+    built = {
+        r.vec_id: r.centroid_id
+        for r in snapshot_read(spark, idx / "cells").select("vec_id", "centroid_id").collect()
+    }
+    assert len(set(built.values())) > 1
+    batch = load_table(spark, SF_ORACLE, "embeddings").where(
+        F.col("vec_id").isin(list(built))
+    ).select((F.col("vec_id") + offset).alias("vec_id"), "embedding")
+    ivf_index_append(spark, batch, idx)
+    cells = {
+        r.vec_id: r.centroid_id
+        for r in snapshot_read(spark, idx / "cells").select("vec_id", "centroid_id").collect()
+    }
+    moved = {v: (c, cells.get(v + offset)) for v, c in built.items() if cells.get(v + offset) != c}
+    assert not moved, f"{len(moved)} of {len(built)} re-appended vectors changed cell: {moved}"
 
 
 def test_ivf_probe_stored_index_recall_floor_and_exact_scores(spark):
@@ -282,27 +332,28 @@ def test_minhash_verify_stage_exact(spark):
 
 
 def test_kmeans_train_sample_caps_and_is_deterministic(spark):
-    """On a corpus above the cap, the training sample lands near
-    TRAIN_SAMPLE_PER_CELL * k rows and is identical across invocations;
-    at-or-below the cap the input passes through untouched."""
+    """On a corpus above the cap, the shared training sampler returns near
+    cap rows and the same rows across invocations; at-or-below the cap
+    the input passes through untouched."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from energy_datalake_solution_spark.operators.similarity import (
         TRAIN_SAMPLE_PER_CELL,
-        _kmeans_train_input,
+        train_sample,
     )
 
     k = 8
     cap = TRAIN_SAMPLE_PER_CELL * k
     big = spark.range(10 * cap).withColumnRenamed("id", "vec_id").withColumn(
-        "features", F.array(F.lit(1.0))
+        "embedding", F.array(F.col("vec_id").cast("double"))
     )
-    s1 = _kmeans_train_input(big, k)
-    n1 = s1.count()
+    s1 = train_sample(big, cap)
+    n1 = len(s1)
     assert cap // 2 <= n1 <= 2 * cap  # hash-mod sampling, expected ~cap
-    assert n1 == _kmeans_train_input(big, k).count()  # deterministic
+    assert np.array_equal(s1, train_sample(big, cap))  # deterministic
     small = big.limit(cap)
-    assert _kmeans_train_input(small, k).count() == cap  # passthrough
+    assert len(train_sample(small, cap)) == cap  # passthrough
 
 
 def _plan_str(df) -> str:
