@@ -20,9 +20,9 @@ that split on the snapshot table format (sources/snapshots.py):
   * ``ivf_probe`` — the steady-state query path: broadcast the centroid
     table, pick each query's nprobe nearest cells, prune the stored
     index's FILES against the probed cell set via the manifest stats
-    (snapshot_files_for_values — an IN-list file prune; the collect is
-    metadata-sized, <= nlist ints), then a broadcast equi-join on
-    centroid_id + exact cosine re-rank. At 100 TB this touches
+    (snapshot_files with one point disjunct per cell — an IN-list file
+    prune; the collect is metadata-sized, <= nlist ints), then a
+    broadcast equi-join on centroid_id + exact cosine re-rank. At 100 TB this touches
     ~nprobe/nlist of the data and never shuffles the corpus.
 
 The registered ``embeddings_ivf_probe`` builds the index once per
@@ -60,7 +60,7 @@ from ..functions.vector import cosine, l2_norm
 from ..plans.registry import register
 from ..sources.catalog import load_table, path_tag
 from ..sources.snapshots import (
-    snapshot_files_for_values,
+    snapshot_files,
     snapshot_read,
     snapshot_write,
 )
@@ -178,7 +178,9 @@ def _ivf_probe_distributed(
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cosine_sim double, rank int"
         )
-    files = snapshot_files_for_values(root / "cells", "centroid_id", cells)
+    files = snapshot_files(
+        root / "cells", [{"centroid_id": (c, c)} for c in cells]
+    )
     cand = (
         spark.read.schema("vec_id bigint, embedding array<float>, centroid_id int")
         .parquet(*[str(root / "cells" / f) for f in files])
@@ -253,7 +255,9 @@ def ivf_probe(
         probe_rows, "q_id long, q_emb array<float>, centroid_id int"
     )
     cells = sorted(probed_cells)
-    files = snapshot_files_for_values(root / "cells", "centroid_id", cells)
+    files = snapshot_files(
+        root / "cells", [{"centroid_id": (c, c)} for c in cells]
+    )
     cand = (
         # explicit schema: the cells layout is fixed by build_ivf_index, so
         # the read skips the footer-sniff job — at probe latency every
@@ -508,7 +512,7 @@ def _lsh_probe_distributed(
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cosine_sim double, rank int"
         )
-    files = snapshot_files_for_values(root / "buckets", "bb", bbs)
+    files = snapshot_files(root / "buckets", [{"bb": (b, b)} for b in bbs])
     cand = (
         spark.read.schema("vec_id bigint, embedding array<float>, bb int")
         .parquet(*[str(root / "buckets" / f) for f in files])
@@ -567,7 +571,7 @@ def lsh_probe(
                 probed_bb.add(bb)
     probes = spark.createDataFrame(probe_rows, "q_id long, q_emb array<float>, bb int")
     bbs = sorted(probed_bb)
-    files = snapshot_files_for_values(root / "buckets", "bb", bbs)
+    files = snapshot_files(root / "buckets", [{"bb": (b, b)} for b in bbs])
     cand = (
         spark.read.schema("vec_id bigint, embedding array<float>, bb int")
         .parquet(*[str(root / "buckets" / f) for f in files])

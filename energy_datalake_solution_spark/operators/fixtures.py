@@ -199,9 +199,9 @@ def snapshot_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-5 snapshot-format features under the driver's hash gate:
     commit orders through snapshot_write with stats_cols (range-split
     into 8 files with per-file min/max + row-count manifest stats), then
-    answer a keyed range query through snapshot_read_range — which prunes
-    FILES against the manifest before Spark lists a path — and stamp every
-    row with the MANIFEST-derived total row count (snapshot_row_count:
+    answer a keyed range query through snapshot_read(where=...) — which
+    prunes FILES against the manifest before Spark lists a path — and
+    stamp every row with the MANIFEST-derived total row count (snapshot_row_count:
     COUNT(*) with no file opened). The oracle recomputes both from the
     raw orders table, so a pruning bug that loses rows, a stats slip that
     mis-bounds a file, or a row-count drift in the manifest all fail the
@@ -211,7 +211,7 @@ def snapshot_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..sources.snapshots import (
-        snapshot_read_range,
+        snapshot_read,
         snapshot_row_count,
         snapshot_write,
     )
@@ -224,7 +224,9 @@ def snapshot_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     snapshot_write(o, t, stats_cols=["o_orderkey"], n_files=8)
     meta_rows = snapshot_row_count(t)  # manifest-only COUNT(*)
-    out = snapshot_read_range(spark, t, "o_orderkey", 1000, 2999).select(
+    out = snapshot_read(
+        spark, t, where=[{"o_orderkey": (1000, 2999)}]
+    ).select(
         F.col("o_orderkey").alias("order_id"),
         F.col("o_totalprice").alias("total_price"),
         F.lit(meta_rows).cast("long").alias("table_rows_metadata"),
@@ -311,7 +313,7 @@ def snapshot_bloom_point_lookup_orders(spark: SparkSession, sf_dir: str) -> Data
     from ..sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_files_for_point,
+        snapshot_files,
         snapshot_write,
     )
 
@@ -326,13 +328,13 @@ def snapshot_bloom_point_lookup_orders(spark: SparkSession, sf_dir: str) -> Data
     snapshot_write(
         o, t, bloom_cols=["o_custkey"], stats_cols=["o_orderkey"], n_files=8
     )
-    files = snapshot_files_for_point(t, "o_custkey", 421)
+    files = snapshot_files(t, [{"o_custkey": (421, 421)}])
     total = len(_read_manifest(t, current_version(t))["files"])
     # pruning guard on a value ABSENT from the table: a real customer's
     # orders may legitimately span every file, but an absent key must be
     # rejected by (almost) all filters — a degenerate bloom that admits
     # everything should fail loudly, not silently full-scan
-    ghost = len(snapshot_files_for_point(t, "o_custkey", -10**9))
+    ghost = len(snapshot_files(t, [{"o_custkey": (-10**9, -10**9)}]))
     # threshold derived from the filters' design FP rate rather than a
     # fixed total//2: filters are sized to BLOOM_BITS_PER_KEY bits per
     # distinct key (~0.1% FP at any per-file cardinality), so even a
@@ -379,7 +381,7 @@ def snapshot_zorder_rect_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     a snapshot table as three arrival-ordered appends (no (part, supp)
     locality — the post-streaming state every real table degrades into),
     run snapshot_zorder_compact_n over (l_partkey, l_suppkey), then answer
-    a 2-D rectangle query through snapshot_read_rect, which lists only
+    a 2-D rectangle query through snapshot_read(where=...), which lists only
     the files whose manifest stats overlap BOTH ranges. The deterministic
     z-bucket layout makes each file a compact Morton rectangle, so the
     corner rectangle must admit a strict subset of files — a guard
@@ -394,7 +396,7 @@ def snapshot_zorder_rect_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         _read_manifest,
         current_version,
         snapshot_append,
-        snapshot_read_rect,
+        snapshot_read,
         snapshot_write,
         snapshot_zorder_compact_n,
     )
@@ -413,8 +415,8 @@ def snapshot_zorder_rect_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot_append(l.where(third == 2), t)
     snapshot_zorder_compact_n(spark, t, ["l_partkey", "l_suppkey"], n_files=8)
     total = len(_read_manifest(t, current_version(t))["files"])
-    out = snapshot_read_rect(
-        spark, t, "l_partkey", 1, 50, "l_suppkey", 1, 5
+    out = snapshot_read(
+        spark, t, where=[{"l_partkey": (1, 50), "l_suppkey": (1, 5)}]
     )
     # pruning guard: the corner rectangle must touch a strict subset of
     # the z-ordered files (both dimensions contribute cuts)
@@ -1151,7 +1153,7 @@ def snapshot_zorder3_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPTIMIZE ZORDER BY (c1, c2, c3)): lay lineitem out on the 3-D Morton
     curve over (l_partkey, l_suppkey, l_quantity) via
     snapshot_write(..., zorder_by=...), then answer a 3-predicate box query
-    through snapshot_read_box, which lists only files whose manifest
+    through snapshot_read(where=...), which lists only files whose manifest
     stats overlap ALL three ranges. A guard raises if the corner box
     fails to prune to a strict file subset (the layout's entire point).
     The oracle is the plain 3-predicate filter over raw lineitem, so
@@ -1163,7 +1165,7 @@ def snapshot_zorder3_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_read_box,
+        snapshot_read,
         snapshot_write,
     )
 
@@ -1180,10 +1182,9 @@ def snapshot_zorder3_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         l, t, zorder_by=["l_partkey", "l_suppkey", "l_quantity"], n_files=8
     )
     total = len(_read_manifest(t, current_version(t))["files"])
-    out = snapshot_read_box(
-        spark, t,
-        [("l_partkey", 1, 60), ("l_suppkey", 1, 6), ("l_quantity", 10, 40)],
-    )
+    out = snapshot_read(spark, t, where=[{
+        "l_partkey": (1, 60), "l_suppkey": (1, 6), "l_quantity": (10, 40),
+    }])
     admitted = len(out.inputFiles())
     if total >= 4 and admitted > total // 2:
         raise RuntimeError(
@@ -1426,8 +1427,8 @@ def snapshot_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataF
         _read_manifest,
         current_version,
         snapshot_append,
-        snapshot_files_for_values,
-        snapshot_read_range,
+        snapshot_files,
+        snapshot_read,
         snapshot_set_partitioning,
         snapshot_write,
     )
@@ -1449,7 +1450,7 @@ def snapshot_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataF
     snapshot_append(o.where((band >= 60) & (band < 80)), t)
     m = _read_manifest(t, current_version(t))
     post_files = set(m["files"]) - pre_files
-    pruned = set(snapshot_files_for_values(t, "o_orderstatus", ["F"]))
+    pruned = set(snapshot_files(t, [{"o_orderstatus": ("F", "F")}]))
     if not pre_files <= pruned:
         raise RuntimeError("conservative prune dropped a pre-evolution file")
     extra = {
@@ -1464,8 +1465,8 @@ def snapshot_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataF
         raise RuntimeError(
             f"post-evolution prune admitted non-matching files: {extra}"
         )
-    out = snapshot_read_range(
-        spark, t, "o_orderstatus", "F", "F"
+    out = snapshot_read(
+        spark, t, where=[{"o_orderstatus": ("F", "F")}]
     ).where(F.col("o_orderstatus") == "F").select(
         F.col("o_orderkey").alias("order_id"),
         F.col("o_totalprice").alias("total_price"),
@@ -2034,9 +2035,9 @@ def snapshot_multicol_partition_read(spark: SparkSession, sf_dir: str) -> DataFr
     (o_orderstatus, o_band) through verbatim DDL, append the 50..79 band
     (one file per value TUPLE, point stats on BOTH spec columns), and
     answer a two-predicate query through the stats-pruned read. A guard
-    raises unless the conjunctive value prune (files_for_values
-    intersect) admits every pre-evolution file conservatively and, among
-    post-evolution files, ONLY those whose recorded points match both
+    raises unless the conjunctive value prune (one region disjunct
+    bounding both columns) admits every pre-evolution file
+    conservatively and, among post-evolution files, ONLY those whose recorded points match both
     predicates — the Hive/Iceberg (date, region) layout contract. The
     oracle recomputes the final state from raw orders."""
     import shutil
@@ -2047,8 +2048,8 @@ def snapshot_multicol_partition_read(spark: SparkSession, sf_dir: str) -> DataFr
         _read_manifest,
         current_version,
         snapshot_append,
-        snapshot_files_for_values,
-        snapshot_read_range,
+        snapshot_files,
+        snapshot_read,
         snapshot_write,
     )
 
@@ -2073,9 +2074,9 @@ def snapshot_multicol_partition_read(spark: SparkSession, sf_dir: str) -> DataFr
     snapshot_append(o.where((band >= 50) & (band < 80)), t)
     m = _read_manifest(t, current_version(t))
     post = set(m["files"]) - pre
-    fs = set(snapshot_files_for_values(t, "o_orderstatus", ["F"])) & set(
-        snapshot_files_for_values(t, "o_band", [1])
-    )
+    fs = set(snapshot_files(
+        t, [{"o_orderstatus": ("F", "F"), "o_band": (1, 1)}]
+    ))
     if not pre <= fs:
         raise RuntimeError("conservative prune dropped a pre-evolution file")
     bad = {
@@ -2091,8 +2092,8 @@ def snapshot_multicol_partition_read(spark: SparkSession, sf_dir: str) -> DataFr
         raise RuntimeError(
             f"tuple prune admitted non-matching post-evolution files: {bad}"
         )
-    out = snapshot_read_range(
-        spark, t, "o_orderstatus", "F", "F"
+    out = snapshot_read(
+        spark, t, where=[{"o_orderstatus": ("F", "F")}]
     ).where(
         (F.col("o_orderstatus") == "F") & (F.col("o_band") == 1)
     ).select(
@@ -2192,7 +2193,7 @@ def snapshot_or_pruning_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_files_for_predicate,
+        snapshot_files,
         snapshot_read,
         snapshot_write,
     )
@@ -2210,7 +2211,7 @@ def snapshot_or_pruning_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey BETWEEN 100 AND 299 OR o_orderkey BETWEEN 900 AND 1099"
     )
     live = _read_manifest(t, current_version(t))["files"]
-    touched = snapshot_files_for_predicate(t, pred)
+    touched = snapshot_files(t, pred)
     # the strict-subset guard needs enough files to prune between — an
     # empty/tiny lake (the empty-corpus sweep) collapses to 1-2 files
     # whose ranges legitimately cover both disjuncts
@@ -2527,8 +2528,8 @@ def snapshot_analyze_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_files_for_range,
-        snapshot_read_range,
+        snapshot_files,
+        snapshot_read,
         snapshot_write,
     )
 
@@ -2549,20 +2550,20 @@ def snapshot_analyze_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "WHERE o_orderkey % 3 = 0"
     )
     n_live = len(_read_manifest(dst_t, current_version(dst_t))["files"])
-    if len(snapshot_files_for_range(dst_t, "o_orderkey", 500, 1500)) != n_live:
+    if len(snapshot_files(dst_t, [{"o_orderkey": (500, 1500)}])) != n_live:
         raise RuntimeError("stats-less table must admit every file")
     cat.sql(
         "ANALYZE TABLE anl_dst COMPUTE STATISTICS FOR COLUMNS (o_orderkey)"
     )
     cat.drop_table("anl_src")
     cat.drop_table("anl_dst")
-    pruned = snapshot_files_for_range(dst_t, "o_orderkey", 500, 1500)
+    pruned = snapshot_files(dst_t, [{"o_orderkey": (500, 1500)}])
     if n_live >= 4 and len(pruned) >= n_live:
         raise RuntimeError(
             f"ANALYZE did not enable pruning ({len(pruned)}/{n_live})"
         )
-    out = snapshot_read_range(
-        spark, dst_t, "o_orderkey", 500, 1500
+    out = snapshot_read(
+        spark, dst_t, where=[{"o_orderkey": (500, 1500)}]
     ).where(F.col("o_orderkey").between(500, 1500)).select(
         F.col("o_orderkey").alias("order_id"),
         F.col("o_totalprice").alias("total_price"),
@@ -3657,7 +3658,7 @@ def snapshot_widen_bloom_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..sources.snapshot_catalog import SnapshotCatalog
-    from ..sources.snapshots import snapshot_files_for_point
+    from ..sources.snapshots import snapshot_files
 
     base = Path(tempfile.gettempdir()) / (
         f"snap_wb_{os.getpid()}_{path_tag(sf_dir)}"
@@ -3696,13 +3697,15 @@ def snapshot_widen_bloom_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND a present key must keep its file (a filter that wrongly
     # rejects everything would "prune" both)
     cat.sql("ANALYZE TABLE wb_part COMPUTE BLOOM FILTERS FOR COLUMNS (k)")
-    missed = snapshot_files_for_point(t, "k", 999_999_999)
+    missed = snapshot_files(t, [{"k": (999_999_999, 999_999_999)}])
     if missed:
         raise RuntimeError(
             f"bloom backfill did not prune an absent key: {missed}"
         )
     present = cat.sql("SELECT min(k) AS m FROM wb_part").first()["m"]
-    if present is not None and not snapshot_files_for_point(t, "k", present):
+    if present is not None and not snapshot_files(
+        t, [{"k": (present, present)}]
+    ):
         raise RuntimeError(
             f"bloom backfill wrongly rejects present key {present}"
         )
@@ -4138,7 +4141,7 @@ def snapshot_mapped_interaction_read(
                        for c in s if not c.startswith("__")})
         if keys != ["a", "b"]:
             raise RuntimeError(f"rewrite lost physical stats keys: {keys}")
-        if not len(S.snapshot_files_for_range(ta, "a", 0, hi // 8)) < len(
+        if not len(S.snapshot_files(ta, [{"aa": (0, hi // 8)}])) < len(
             m["files"]
         ):
             raise RuntimeError("zordered rewrite is unprunable")
@@ -4173,7 +4176,7 @@ def snapshot_mapped_interaction_read(
         raise RuntimeError("SHOW CREATE kept the stale spec spelling")
     mb = S._read_manifest(tb, S.current_version(tb))
     if len(parts) > 1 and not len(
-        S.snapshot_files_for_point(tb, "part", sorted(parts)[0])
+        S.snapshot_files(tb, [{"bucket": (min(parts), min(parts))}])
     ) < len(mb["files"]):
         raise RuntimeError("partition point prune admits every file")
     for probe, exc_pat in (

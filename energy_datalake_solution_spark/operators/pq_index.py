@@ -57,7 +57,7 @@ from ..functions.vector import cosine, l2_norm
 from ..plans.registry import register
 from ..sources.catalog import load_table, path_tag
 from ..sources.snapshots import (
-    snapshot_files_for_values,
+    snapshot_files,
     snapshot_read,
     snapshot_write,
 )
@@ -525,7 +525,9 @@ def ivfpq_probe(
             probed.update(c for _, c, _, _ in pr)
         probes = F.broadcast(spark.createDataFrame(probe_rows, probe_schema))
         cells = sorted(probed)
-        files = snapshot_files_for_values(root / "cells", "centroid_id", cells)
+        files = snapshot_files(
+            root / "cells", [{"centroid_id": (c, c)} for c in cells]
+        )
         cand = (
             spark.read.schema(_IVFPQ_CELLS_SCHEMA)
             .parquet(*[str(root / "cells" / f) for f in files])

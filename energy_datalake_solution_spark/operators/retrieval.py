@@ -766,7 +766,7 @@ def bm25_probe(
     ``driver_batch_cap`` pairs route to the distributed form (COUNTED,
     not assumed: file pruning from the <= BM25_INDEX_BUCKETS distinct
     probed buckets, shuffle joins on term, no IN-list, no broadcast)."""
-    from ..sources.snapshots import snapshot_files_for_values, snapshot_read
+    from ..sources.snapshots import snapshot_files, snapshot_read
 
     root = Path(index_root)
     out_schema = "query_id string, doc_id bigint, bm25 double, rank bigint"
@@ -795,8 +795,9 @@ def bm25_probe(
 
     terms = sorted({t for _, t in query_terms})
     buckets = sorted({_py_term_bucket(t) for t in terms})
-    pfiles = snapshot_files_for_values(root / "postings", "term_bucket", buckets)
-    vfiles = snapshot_files_for_values(root / "vocab", "term_bucket", buckets)
+    region = [{"term_bucket": (b, b)} for b in buckets]
+    pfiles = snapshot_files(root / "postings", region)
+    vfiles = snapshot_files(root / "vocab", region)
     if not pfiles or not vfiles:  # empty corpus -> empty index tables
         return spark.createDataFrame([], out_schema)
     # explicit schemas: the index layout is fixed by build_bm25_index, so
@@ -876,7 +877,7 @@ def _bm25_probe_distributed(
     filter) and the scoring joins drop their broadcast hints. Same
     scoring arithmetic; the registered probe queries never take this
     path (their batches are interactive-sized)."""
-    from ..sources.snapshots import snapshot_files_for_values
+    from ..sources.snapshots import snapshot_files
 
     out_schema = "query_id string, doc_id bigint, bm25 double, rank bigint"
     if stats is None:
@@ -890,8 +891,9 @@ def _bm25_probe_distributed(
     )
     if not buckets:
         return spark.createDataFrame([], out_schema)
-    pfiles = snapshot_files_for_values(root / "postings", "term_bucket", buckets)
-    vfiles = snapshot_files_for_values(root / "vocab", "term_bucket", buckets)
+    region = [{"term_bucket": (b, b)} for b in buckets]
+    pfiles = snapshot_files(root / "postings", region)
+    vfiles = snapshot_files(root / "vocab", region)
     if not pfiles or not vfiles:
         return spark.createDataFrame([], out_schema)
     qterms = qdf.select("term").distinct()

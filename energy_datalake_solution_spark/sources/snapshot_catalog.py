@@ -1239,9 +1239,9 @@ class SnapshotCatalog:
             )
             return None
         # general-predicate DML: any WHERE expression (the BETWEEN fast
-        # paths above carry their direct stats-interval prune; these
-        # recover pruning from the predicate text's conjunctive
-        # constraints — `k = 5` still touches only overlapping files)
+        # paths above prune by the range's region; these recover pruning
+        # from the region the predicate text implies — `k = 5` still
+        # touches only overlapping files)
         m = _DELETE_WHERE_RE.match(text)
         if m and m.group("name") in self._tables:
             from .snapshots import snapshot_delete_where
@@ -1249,7 +1249,7 @@ class SnapshotCatalog:
             path = self._writable(m.group("name"))
             cond, prune = self._dml_condition(m.group("cond"))
             snapshot_delete_where(
-                self.spark, path, cond, _prune_range=prune,
+                self.spark, path, cond, _prune_region=prune,
                 table_alias=m.group("name"),
             )
             return None
@@ -1262,7 +1262,7 @@ class SnapshotCatalog:
             snapshot_update_where(
                 self.spark, path, cond,
                 _split_assignments(m.group("sets")),
-                _prune_range=prune,
+                _prune_region=prune,
                 table_alias=m.group("name"),
             )
             return None
@@ -2215,7 +2215,7 @@ class SnapshotCatalog:
         key-set delete only ever touches files overlapping the keys'
         range (at scale this is the difference between rewriting DVs on
         every file and on the few the staging keys land in). Returns
-        ``(condition_text, prune_range_or_None)``."""
+        ``(condition_text, prune_region_or_None)``."""
         if not _SUBQUERY_RE.search(cond):
             return cond, None
         self._refresh()
@@ -2232,7 +2232,7 @@ class SnapshotCatalog:
         ).first()
         if row.lo is None:  # empty/all-NULL key set: IN matches nothing
             return cond, None
-        return cond, (m.group("col"), row.lo, row.hi)
+        return cond, [{m.group("col"): (row.lo, row.hi)}]
 
     def _refresh(self) -> None:
         """Re-point every registered snapshot view at its table's

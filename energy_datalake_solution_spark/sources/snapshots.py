@@ -20,8 +20,9 @@ core directly, which also makes the semantics inspectable:
 
 At 100 TB the mechanism is unchanged — manifests hold file lists AND
 per-file min/max column stats (snapshot_write's ``stats_cols`` collects
-them from the parquet footers at commit; snapshot_read_range prunes files
-against them before Spark ever lists a path); the pointer swap is the
+them from the parquet footers at commit; snapshot_files and
+snapshot_read(where=...) prune files against them and the per-file Bloom
+filters before Spark ever lists a path); the pointer swap is the
 only serialization point, exactly like Delta's ``_delta_log`` tail.
 Multi-writer commits are OPTIMISTIC (Delta's documented protocol on a
 LogStore with put-if-absent): the manifest hard-link is the
@@ -994,7 +995,7 @@ def snapshot_write(
       ``n_files`` alone: a round-robin split;
     * ``zorder_by``: the Morton curve over those columns into ``n_files``
       (default 8) files — Delta's OPTIMIZE ZORDER BY (c1, ..., cN), so
-      snapshot_read_box / _rect / _range prune on any predicate subset
+      snapshot_read(where=...) prunes on any predicate subset
       (the arrangement is sources/sinks.py::zorder_arrange_n);
     * ``bucket_by=(col, n)``: Spark's bucketed file layout, with the spec
       recorded — two tables bucketed the same way join with NO Exchange
@@ -1611,7 +1612,7 @@ def _snapshot_upsert_committed(
         touched: set[str] = set()
         merged = df
     else:
-        touched = set(snapshot_files_for_range(p, col, lo, hi, parent))
+        touched = set(_admitted(m, [{col: (lo, hi)}]))
         if touched:
             # mergeSchema: on a schema-evolved table the touched set can
             # span file generations — a single-footer inference would
@@ -1917,7 +1918,7 @@ def _snapshot_merge_committed(
         # stats anywhere conservatively touches every file
         touched = [] if lo is None else list(m["files"])
     else:
-        touched = sorted(snapshot_files_for_range(p, pcol, lo, hi, parent))
+        touched = sorted(_admitted(m, [{pcol: (lo, hi)}]))
 
     # identity allocation state for this ATTEMPT: _ins_rows allocates
     # from the manifest's high-water marks; every commit path folds the
@@ -2576,6 +2577,7 @@ def snapshot_version_as_of(table_path, ts: float) -> int:
 def snapshot_read(
     spark: SparkSession, table_path, version: int | None = None,
     merge_schema: bool = False, as_of_ts: float | None = None,
+    where=None,
 ) -> DataFrame:
     """Read a consistent snapshot: the file LIST comes from one manifest,
     so concurrent commits can never tear the read. version=None reads the
@@ -2584,7 +2586,17 @@ def snapshot_read(
     ``merge_schema=True`` unions the schemas of ALL listed files (columns
     added by later appends read as NULL on pre-evolution files — Delta's
     additive schema evolution); the default single-footer inference is
-    cheaper and right for tables whose commits share one schema."""
+    cheaper and right for tables whose commits share one schema.
+
+    ``where`` (a SQL predicate string or a region, over logical names —
+    see :func:`snapshot_files`) prunes FILES against the manifest before
+    Spark lists a path, then filters the rows: stats prune files, the
+    predicate prunes rows. At 100 TB this is the difference between
+    opening every file of a snapshot and the few whose stats can match.
+    A selection no file can match reads as the snapshot's typed frame
+    with no rows (planned, never scanned)."""
+    from pyspark.sql import functions as F
+
     p = Path(table_path)
     if as_of_ts is not None:
         if version is not None:
@@ -2605,9 +2617,11 @@ def snapshot_read(
         raise FileNotFoundError(
             f"version {v} of {table_path} lists no files and no schema"
         )
+    files = list(m["files"])
+    kept = files if where is None else _admitted(m, _where_region(schema, where))
     # merge-on-read: apply the manifest's deletion vectors (no-op without)
     df = _read_files_with_dv(
-        spark, p, list(m["files"]), m.get("dv"),
+        spark, p, kept or files, m.get("dv"),
         # a mapped table's files span physical-column generations —
         # always union their schemas so the mapping sees every physical
         merge_schema=merge_schema or schema is not None,
@@ -2615,7 +2629,36 @@ def snapshot_read(
         schema=schema,
     )
     # column mapping: surface logical names, hide retired physicals
-    return _apply_column_mapping(df, schema) if schema else df
+    if schema:
+        df = _apply_column_mapping(df, schema)
+    if where is None:
+        return df
+    if not kept:
+        return df.where(F.lit(False))
+    if isinstance(where, (list, tuple)):
+        where = _region_filter(where)
+    return df.where(where)
+
+
+def _region_filter(region: list):
+    """Row filter of a region: OR over its disjuncts of the AND of each
+    disjunct's closed bounds."""
+    import operator
+
+    from pyspark.sql import functions as F
+
+    def _disjunct(d: dict):
+        terms = []
+        for c, (lo, hi) in d.items():
+            if lo is not None:
+                terms.append(F.col(c) >= F.lit(lo))
+            if hi is not None:
+                terms.append(F.col(c) <= F.lit(hi))
+        return functools.reduce(operator.and_, terms) if terms else F.lit(True)
+
+    if not region:
+        return F.lit(False)
+    return functools.reduce(operator.or_, map(_disjunct, region))
 
 
 def snapshot_rollback(table_path, version: int) -> None:
@@ -3525,7 +3568,7 @@ def snapshot_delete_range(
         # under its physical name (data files only know that one)
         schema = m.get("schema")
         pcol = _mapping_physical(schema, col) if schema else col
-        touched = set(snapshot_files_for_range(p, pcol, lo, hi, parent))
+        touched = set(_admitted(m, [{pcol: (lo, hi)}]))
         untouched = [f for f in m["files"] if f not in touched]
         try:
             if not touched:
@@ -3809,15 +3852,15 @@ def snapshot_delete_range_mor(
     [min, max] can contain the range are even scanned for positions).
     Deletes wider than ``max_deleted_rows`` copy-on-write rewrite the
     touched files instead — counted, not assumed. Same optimistic-retry
-    disposition as every writer. This is the direct-interval-prune form
-    of :func:`snapshot_delete_where` (general predicates live there)."""
+    disposition as every writer. This is :func:`snapshot_delete_where`
+    pruned by the range's region (general predicates live there)."""
     from pyspark.sql import functions as F
 
     return snapshot_delete_where(
         spark, table_path,
         (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
         max_deleted_rows=max_deleted_rows,
-        _prune_range=(col, lo, hi),
+        _prune_region=[{col: (lo, hi)}],
     )
 
 
@@ -3836,8 +3879,8 @@ def snapshot_update_range_mor(
     matched rows. Updates wider than ``max_updated_rows`` route to the
     copy-on-write form — counted, not assumed. Rows already deleted by
     existing vectors are never re-updated or resurrected. Same
-    optimistic rebase-retry disposition as every writer. This is the
-    direct-interval-prune form of :func:`snapshot_update_where`."""
+    optimistic rebase-retry disposition as every writer. This is
+    :func:`snapshot_update_where` pruned by the range's region."""
     from pyspark.sql import functions as F
 
     return snapshot_update_where(
@@ -3845,32 +3888,40 @@ def snapshot_update_range_mor(
         (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
         assignments,
         max_updated_rows=max_updated_rows,
-        _prune_range=(col, lo, hi),
+        _prune_region=[{col: (lo, hi)}],
     )
 
 
 # ---------------------------------------------------------------------------
-# Arbitrary-predicate DELETE / UPDATE. The range forms above are the
-# hot path (their prune is a direct stats-interval test); these general
-# forms accept any SQL predicate and recover the same file pruning for
-# the common shapes by extracting conjunctive range/equality constraints
-# from the predicate TEXT (the commit-side analogue of Delta's data
-# skipping: `k = 5` touches only files whose [min, max] admit 5).
-# Pruning is strictly conservative — an unparseable conjunct, a
-# top-level OR, or a type mismatch against the stats simply keeps every
-# file; correctness never depends on the parse.
+# File pruning. One admission rule picks the files a read or a DML
+# statement must open. A REGION is a list of disjuncts, each a
+# ``{column: (lo, hi)}`` dict of closed bounds (None = open side): a range
+# is one disjunct, an IN-list one point disjunct per value, an N-column
+# box one disjunct with N entries. A file is kept when ANY disjunct admits
+# it; a disjunct rejects a file only when the file's min/max stats exclude
+# one of its intervals, or when an interval is a point the file's Bloom
+# filter rejects. Missing stats or filters, and literals the stats cannot
+# be compared with, reject nothing: pruning never loses a row. ``[{}]``
+# admits every file; ``[]`` admits none.
+#
+# SQL predicate strings reach the same rule through a small grammar (the
+# commit-side analogue of Delta's data skipping: ``k = 5`` touches only
+# files whose [min, max] admit 5). Top-level ORs split into disjuncts;
+# within one, the simple ``col <op> literal`` / ``col BETWEEN a AND b``
+# conjuncts bound their columns and anything else bounds nothing. Pruning
+# is strictly conservative — correctness never depends on the parse.
 
-def _split_conjuncts(s: str) -> list[str] | None:
-    """Split a predicate on top-level ANDs (outside parens/quotes,
-    skipping the AND that belongs to a BETWEEN). Returns None when a
-    top-level OR is present — the expression is not a pure conjunction
-    and must not prune."""
+def _split_top(s: str, word: str) -> list[str]:
+    """Split a predicate on the top-level keyword ``word`` ("AND" or
+    "OR"): outside quotes and parentheses, and for AND skipping the one
+    that belongs to a BETWEEN. Returns the stripped parts ([s] when
+    there is no such keyword)."""
     parts, buf = [], []
     depth, in_str, pending_between = 0, False, 0
     i, n = 0, len(s)
 
     def _word_at(j: int, w: str) -> bool:
-        if not s[j:j + len(w)].upper() == w:
+        if s[j:j + len(w)].upper() != w:
             return False
         before_ok = j == 0 or not (s[j - 1].isalnum() or s[j - 1] == "_")
         k = j + len(w)
@@ -3880,37 +3931,28 @@ def _split_conjuncts(s: str) -> list[str] | None:
     while i < n:
         ch = s[i]
         if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-            i += 1
-            continue
-        if ch == "'":
+            in_str = ch != "'"
+        elif ch == "'":
             in_str = True
-            buf.append(ch)
-            i += 1
-            continue
-        if ch == "(":
+        elif ch == "(":
             depth += 1
         elif ch == ")":
             depth -= 1
-        if depth == 0:
-            if _word_at(i, "OR"):
-                return None
-            if _word_at(i, "BETWEEN"):
+        elif depth == 0:
+            if word == "AND" and _word_at(i, "BETWEEN"):
                 pending_between += 1
-            elif _word_at(i, "AND"):
-                if pending_between:
+            elif _word_at(i, word):
+                if word == "AND" and pending_between:
                     pending_between -= 1
                 else:
                     parts.append("".join(buf))
                     buf = []
-                    i += 3
+                    i += len(word)
                     continue
         buf.append(ch)
         i += 1
     parts.append("".join(buf))
-    return [x.strip() for x in parts if x.strip()]
+    return [x.strip() for x in parts]
 
 
 def _parse_pred_literal(txt: str):
@@ -3941,46 +3983,6 @@ _PRED_BETWEEN_RE = re.compile(
 )
 
 
-def _split_disjuncts(s: str) -> list[str]:
-    """Split a predicate on top-level ORs (outside parens/quotes).
-    Returns [s] when none — the predicate is a pure conjunction."""
-    parts, buf = [], []
-    depth, in_str = 0, False
-    i, n = 0, len(s)
-
-    def _word_at(j: int) -> bool:
-        if s[j:j + 2].upper() != "OR":
-            return False
-        before_ok = j == 0 or not (s[j - 1].isalnum() or s[j - 1] == "_")
-        k = j + 2
-        after_ok = k >= n or not (s[k].isalnum() or s[k] == "_")
-        return before_ok and after_ok
-
-    while i < n:
-        ch = s[i]
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0 and _word_at(i):
-            parts.append("".join(buf))
-            buf = []
-            i += 2
-            continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip() for p in parts]
-
-
 def _strip_parens(s: str) -> str:
     """Strip balanced outer parentheses: '(k BETWEEN 1 AND 5)' ->
     'k BETWEEN 1 AND 5' (so a parenthesized disjunct's conjuncts
@@ -3999,162 +4001,151 @@ def _strip_parens(s: str) -> str:
     return s
 
 
-def _predicate_disjunct_constraints(cond: str) -> list[dict]:
-    """Constraint dicts for a predicate that may be a top-level OR of
-    conjunctions: one ``{col: [lo, hi]}`` dict per disjunct. A file can
-    match the predicate only if it overlaps AT LEAST ONE disjunct's
-    region, so pruning keeps files any dict admits — the interval-union
-    analogue of data skipping over ORs (e.g. ``k BETWEEN 1 AND 5 OR k
-    BETWEEN 900 AND 950`` touches only files overlapping either range).
-    Returns [] (no pruning) when any disjunct contributes no
-    constraints — one opaque arm makes the whole OR unprunable."""
-    parts = _split_disjuncts(cond)
-    if len(parts) == 1:
-        cons = _predicate_constraints(cond)
-        return [cons] if cons else []
-    dicts = []
-    for d in parts:
-        cons = _predicate_constraints(_strip_parens(d))
-        if not cons:
-            return []
-        dicts.append(cons)
-    return dicts
-
-
-def _predicate_constraints(cond: str) -> dict[str, list]:
+def _predicate_constraints(cond: str, exact: bool = False) -> dict[str, list] | None:
     """{column: [lo, hi]} bounds implied by the predicate's top-level
     conjuncts (None bound = unconstrained). Only simple
     ``col <op> literal`` / ``col BETWEEN a AND b`` conjuncts contribute;
-    everything else contributes nothing (conservative)."""
-    conjuncts = _split_conjuncts(cond)
-    if conjuncts is None:
-        return {}
+    a top-level OR gives no bounds.
+
+    By default the bounds are CONSERVATIVE: any other conjunct simply
+    contributes nothing and strict ``<``/``>`` bound as closed, which is
+    all pruning needs (extra files are safe). ``exact=True`` returns the
+    bounds only when the predicate IS the conjunction of the closed
+    intervals, else None — every conjunct parsed (no subquery, function,
+    IS NULL, ``<>``, OR...) and none strict (containment against the
+    closed interval would claim boundary rows match). Proving a file's
+    rows ALL match (REPLACE WHERE's drop) needs exact bounds."""
+    if len(_split_top(cond, "OR")) > 1:
+        return None if exact else {}
     out: dict[str, list] = {}
-    for c in conjuncts:
+    for c in filter(None, _split_top(cond, "AND")):
         m = _PRED_BETWEEN_RE.match(c)
         if m:
-            lo, hi = _parse_pred_literal(m.group("lo")), _parse_pred_literal(m.group("hi"))
             col = m.group("col")
-        else:
-            m = _PRED_CMP_RE.match(c)
-            if not m:
-                continue
-            col = m.group("col")
-            lit = _parse_pred_literal(m.group("lit"))
-            op = m.group("op")
-            if op in ("=", "=="):
-                lo = hi = lit
-            elif op in (">", ">="):
-                lo, hi = lit, None
-            else:
-                lo, hi = None, lit
-        b = out.setdefault(col, [None, None])
-        if lo is not None and (b[0] is None or lo > b[0]):
-            b[0] = lo
-        if hi is not None and (b[1] is None or hi < b[1]):
-            b[1] = hi
-    return out
-
-
-def _predicate_exact_constraints(cond: str) -> dict[str, list] | None:
-    """Like :func:`_predicate_constraints`, but only when the bounds are
-    EXACT — every top-level conjunct parsed as a single-column range or
-    equality, none opaque. The distinction matters for containment
-    proofs: conservative bounds admit extra files safely (pruning), but
-    proving a file's rows ALL match needs the predicate to BE the
-    conjunction of the extracted intervals. Returns None when any
-    conjunct failed to parse (subquery, function, IS NULL, OR, ...)."""
-    conjuncts = _split_conjuncts(cond)
-    if conjuncts is None:
-        return None
-    out: dict[str, list] = {}
-    for c in conjuncts:
-        m = _PRED_BETWEEN_RE.match(c)
-        if m:
-            lo, hi = (
-                _parse_pred_literal(m.group("lo")),
-                _parse_pred_literal(m.group("hi")),
-            )
-            col = m.group("col")
-        else:
-            m = _PRED_CMP_RE.match(c)
-            if not m:
-                return None  # opaque conjunct: bounds are not the predicate
-            col = m.group("col")
-            lit = _parse_pred_literal(m.group("lit"))
-            op = m.group("op")
-            if op in ("=", "=="):
-                lo = hi = lit
-            elif op in (">", ">="):
-                lo, hi = lit, None
-            elif op in ("<", "<="):
-                lo, hi = None, lit
-            else:
-                return None  # e.g. <> excludes an interval, not a range
-            if op in (">", "<"):
-                # strict bounds: containment against the CLOSED interval
-                # would claim boundary rows match — refuse exactness
+            lo = _parse_pred_literal(m.group("lo"))
+            hi = _parse_pred_literal(m.group("hi"))
+        elif (m := _PRED_CMP_RE.match(c)) is not None:
+            col, op = m.group("col"), m.group("op")
+            if exact and op in ("<", ">"):
                 return None
-        if lo is None and hi is None:
-            return None
+            lit = _parse_pred_literal(m.group("lit"))
+            lo = None if op in ("<", "<=") else lit
+            hi = None if op in (">", ">=") else lit
+        elif exact:
+            return None  # opaque conjunct: the bounds are not the predicate
+        else:
+            continue
         b = out.setdefault(col, [None, None])
         if lo is not None and (b[0] is None or lo > b[0]):
             b[0] = lo
         if hi is not None and (b[1] is None or hi < b[1]):
             b[1] = hi
-    return out or None
+    return (out or None) if exact else out
 
 
-def snapshot_files_for_predicate(table_path, condition, version: int | None = None) -> list[str]:
-    """The file subset that can contain rows matching a SQL predicate
-    string, via manifest-stats overlap on its extracted constraints —
-    conjunctive bounds directly, and top-level ORs of conjunctions as
-    the UNION of their per-disjunct regions (a file survives if any
-    disjunct admits it). Non-string conditions, unconstrained columns
-    (or one opaque OR arm), files without stats, or stats/literal type
-    mismatches keep the file — pruning must never lose rows. Constraint
-    columns are translated to physical names on column-mapped tables."""
-    p = Path(table_path)
-    v = current_version(p) if version is None else version
-    m = _read_manifest(p, v)
-    cons_list = (
-        _predicate_disjunct_constraints(condition)
-        if isinstance(condition, str)
-        else []
-    )
-    schema = m.get("schema")
-    if schema:
-        known = {c["name"] for c in schema["cols"]}
-        cons_list = [
-            {
-                _mapping_physical(schema, c): b
-                for c, b in cons.items()
-                if c in known
-            }
-            for cons in cons_list
-        ]
-    stats = m.get("stats", {})
+def _predicate_region(cond: str) -> list[dict]:
+    """The region of a SQL predicate string: one disjunct per top-level
+    OR arm, bounded by the arm's conservative constraints (e.g.
+    ``k BETWEEN 1 AND 5 OR k BETWEEN 900 AND 950`` touches only files
+    overlapping either range). An arm with no constraint makes the whole
+    predicate unprunable: [{}]."""
+    arms = _split_top(cond, "OR")
+    if len(arms) > 1:
+        arms = [_strip_parens(a) for a in arms]
+    region = [_predicate_constraints(a) for a in arms]
+    return region if all(region) else [{}]
 
-    def _admits(rel: str, cons: dict) -> bool:
-        for c, (lo, hi) in cons.items():
-            s = stats.get(rel, {}).get(c)
-            if s is None:
-                continue
-            try:
-                if (hi is not None and s[0] > _stats_canon(hi)) or (
-                    lo is not None and s[1] < _stats_canon(lo)
-                ):
-                    return False
-            except TypeError:
-                continue  # incomparable literal vs stats: keep the file
+
+def _physical_region(schema: dict | None, region: list,
+                     known_only: bool = False) -> list[dict]:
+    """A region over LOGICAL column names renamed to the physical names
+    the manifest's stats and filters are keyed by (as is on unmapped
+    tables). A name the mapping lacks raises _mapping_physical's
+    KeyError; with ``known_only`` its constraint is dropped instead —
+    for names read out of SQL text, where dropping only widens the
+    prune."""
+    if not schema:
+        return region
+    known = {c["name"] for c in schema["cols"]}
+    return [
+        {
+            _mapping_physical(schema, c): b
+            for c, b in d.items()
+            if not known_only or c in known
+        }
+        for d in region
+    ]
+
+
+def _where_region(schema: dict | None, where) -> list[dict]:
+    """Physical region of a logical ``where``: a SQL predicate string, a
+    region, or a Column (whose text is unreadable: [{}])."""
+    from pyspark.sql import Column
+
+    if isinstance(where, str):
+        return _physical_region(
+            schema, _predicate_region(where), known_only=True
+        )
+    if isinstance(where, Column):
+        return [{}]
+    if not isinstance(where, (list, tuple)) or not all(
+        isinstance(d, dict) for d in where
+    ):
+        raise TypeError(
+            "where must be a SQL predicate string or a region (a list of "
+            f"{{column: (lo, hi)}} dicts), not {where!r}"
+        )
+    return _physical_region(schema, list(where))
+
+
+def _admitted(m: dict, region: list) -> list[str]:
+    """The files of manifest ``m`` that can hold a row in ``region`` (over
+    physical column names), in manifest order — the admission rule of
+    the section comment above."""
+    stats = m.get("stats") or {}
+    blooms = m.get("blooms") or {}
+    region = [
+        {c: (_stats_canon(lo), _stats_canon(hi)) for c, (lo, hi) in d.items()}
+        for d in region
+    ]
+
+    def _admits(rel: str, d: dict) -> bool:
+        fstats, fblooms = stats.get(rel, {}), blooms.get(rel, {})
+        for c, (lo, hi) in d.items():
+            s = fstats.get(c)
+            if s is not None:
+                try:
+                    if (hi is not None and s[0] > hi) or (
+                        lo is not None and s[1] < lo
+                    ):
+                        return False
+                except TypeError:
+                    continue  # incomparable literal: the column can't reject
+            if (
+                lo is not None and lo == hi and c in fblooms
+                and _bloom_rejects(fblooms[c], lo, s)
+            ):
+                return False
         return True
 
-    if not cons_list:
-        return list(m["files"])
     return [
-        rel for rel in m["files"]
-        if any(_admits(rel, cons) for cons in cons_list)
+        rel for rel in m["files"] if any(_admits(rel, d) for d in region)
     ]
+
+
+def snapshot_files(table_path, where, version: int | None = None) -> list[str]:
+    """The files of a snapshot that can hold rows matching ``where``, in
+    manifest order. ``where`` is a SQL predicate string (top-level ORs of
+    simple range/equality conjuncts prune; any other shape keeps every
+    file, and a column the table lacks drops its constraint) or a region
+    — a list of ``{column: (lo, hi)}`` disjuncts with closed bounds and
+    None for an open side (an IN-list is one point disjunct per value; a
+    column the table lacks raises KeyError). Names are LOGICAL on
+    column-mapped tables. See the section comment for the admission
+    rule."""
+    p = Path(table_path)
+    m = _read_manifest(p, current_version(p) if version is None else version)
+    return _admitted(m, _where_region(m.get("schema"), where))
 
 
 def _tagged_live_logical(spark, p: Path, m: dict, touched: list[str],
@@ -4249,21 +4240,21 @@ def _tagged_live_logical(spark, p: Path, m: dict, touched: list[str],
 def snapshot_delete_where(
     spark: SparkSession, table_path, condition,
     max_deleted_rows: int = DV_MAX_DELETED_ROWS,
-    _prune_range: tuple | None = None,
+    _prune_region: list | None = None,
     table_alias: str | None = None,
 ) -> int:
     """Merge-on-read DELETE of every row matching an arbitrary predicate
     (``DELETE FROM t WHERE k = 5 AND status <> 'F'``): the matched LIVE
     rows' positions join the touched files' deletion vectors — no data
     file rewritten. ``condition`` is a SQL string (over logical column
-    names; string form enables conjunctive-constraint file pruning via
-    :func:`snapshot_files_for_predicate`) or a Column (correct, but scans
-    every file). A NULL predicate value deletes nothing (SQL WHERE
+    names; string form enables file pruning by the region its text
+    implies, as :func:`snapshot_files` reads it) or a Column (correct,
+    but scans every file). A NULL predicate value deletes nothing (SQL WHERE
     semantics). Deletes wider than ``max_deleted_rows`` copy-on-write
     rewrite the touched files instead — counted, not assumed. Same
     optimistic rebase-retry disposition as every writer. The range form
-    :func:`snapshot_delete_range_mor` is this with a direct
-    stats-interval prune.
+    :func:`snapshot_delete_range_mor` is this pruned by the range's
+    region (``_prune_region``).
 
     ``table_alias`` names the target relation for the predicate's scope
     (the catalog passes the SQL table name) so correlated subqueries can
@@ -4284,12 +4275,9 @@ def snapshot_delete_where(
         stats: dict = m.get("stats", {}) or {}
         dv: dict = dict(m.get("dv", {}) or {})
         schema = m.get("schema")
-        if _prune_range is not None:
-            c0, lo, hi = _prune_range
-            pc = _mapping_physical(schema, c0) if schema else c0
-            touched = sorted(snapshot_files_for_range(p, pc, lo, hi, parent))
-        else:
-            touched = sorted(snapshot_files_for_predicate(p, condition, parent))
+        touched = sorted(
+            _admitted(m, _where_region(schema, _prune_region or condition))
+        )
         try:
             if not touched:
                 return _commit(p, list(m["files"]), parent,
@@ -4354,7 +4342,7 @@ def snapshot_delete_where(
 def snapshot_update_where(
     spark: SparkSession, table_path, condition, assignments: dict,
     max_updated_rows: int = DV_MAX_DELETED_ROWS,
-    _prune_range: tuple | None = None,
+    _prune_region: list | None = None,
     table_alias: str | None = None,
 ) -> int:
     """Merge-on-read UPDATE of every row matching an arbitrary predicate
@@ -4366,7 +4354,7 @@ def snapshot_update_where(
     (including ``table_alias`` scoping correlated subqueries' outer
     references); updates wider than ``max_updated_rows`` copy-on-write
     rewrite instead. The range form :func:`snapshot_update_range_mor` is
-    this with a direct stats-interval prune."""
+    this pruned by the range's region."""
     from pyspark.sql import functions as F
 
     p = _table(table_path)
@@ -4399,12 +4387,9 @@ def snapshot_update_where(
         stats: dict = m.get("stats", {}) or {}
         dv: dict = dict(m.get("dv", {}) or {})
         schema = m.get("schema")
-        if _prune_range is not None:
-            c0, lo, hi = _prune_range
-            pc = _mapping_physical(schema, c0) if schema else c0
-            touched = sorted(snapshot_files_for_range(p, pc, lo, hi, parent))
-        else:
-            touched = sorted(snapshot_files_for_predicate(p, condition, parent))
+        touched = sorted(
+            _admitted(m, _where_region(schema, _prune_region or condition))
+        )
         try:
             if not touched:
                 return _commit(p, list(m["files"]), parent,
@@ -4634,20 +4619,11 @@ def snapshot_replace_where(
             touched = list(m["files"])
             dropped, boundary = set(touched), []
         else:
-            touched = sorted(
-                snapshot_files_for_predicate(p, condition, parent)
-            )
-            exact = _predicate_exact_constraints(condition)
-            if exact and schema:
-                known = {c["name"] for c in schema["cols"]}
-                exact = (
-                    {
-                        _mapping_physical(schema, c): b
-                        for c, b in exact.items()
-                    }
-                    if set(exact) <= known
-                    else None
-                )
+            touched = sorted(_admitted(m, _where_region(schema, condition)))
+            exact = _predicate_constraints(condition, exact=True)
+            if exact:
+                phys = _physical_region(schema, [exact], known_only=True)[0]
+                exact = phys if len(phys) == len(exact) else None
 
             def _contained(rel: str) -> bool:
                 # every constrained column: stats present, zero nulls
@@ -5063,22 +5039,6 @@ def snapshot_change_feed(
     return out
 
 
-def snapshot_files_for_range(table_path, col: str, lo, hi, version: int | None = None) -> list[str]:
-    """The file subset whose [min, max] stats overlap [lo, hi] — files
-    without stats for ``col`` are kept (pruning must never lose rows)."""
-    p = Path(table_path)
-    v = current_version(p) if version is None else version
-    m = _read_manifest(p, v)
-    stats = m.get("stats", {})
-    lo, hi = _stats_canon(lo), _stats_canon(hi)  # date/ts probes -> ISO
-    keep = []
-    for rel in m["files"]:
-        s = stats.get(rel, {}).get(col)
-        if s is None or (s[1] >= lo and s[0] <= hi):
-            keep.append(rel)
-    return keep
-
-
 def snapshot_row_count(table_path, version: int | None = None) -> int | None:
     """COUNT(*) of a snapshot answered from the MANIFEST alone — no file
     opened, no Spark job: the sum of the per-file footer row counts
@@ -5107,50 +5067,6 @@ def snapshot_row_count(table_path, version: int | None = None) -> int | None:
         if k in dv:  # merge-on-read: deleted positions leave the count
             total -= int(dv[k][0])
     return total
-
-
-def snapshot_files_for_values(table_path, col, values, version: int | None = None) -> list[str]:
-    """The file subset whose [min, max] stats can contain ANY of the given
-    discrete values (an IN-list prune, e.g. IVF cells to probe) — files
-    without stats for ``col`` are kept (pruning must never lose rows)."""
-    p = Path(table_path)
-    v = current_version(p) if version is None else version
-    m = _read_manifest(p, v)
-    stats = m.get("stats", {})
-    values = [_stats_canon(v_) for v_ in values]  # date/ts probes -> ISO
-    keep = []
-    for rel in m["files"]:
-        s = stats.get(rel, {}).get(col)
-        if s is None or any(s[0] <= val <= s[1] for val in values):
-            keep.append(rel)
-    return keep
-
-
-def snapshot_read_range(
-    spark: SparkSession, table_path, col: str, lo, hi, version: int | None = None
-) -> DataFrame:
-    """Keyed range read with manifest-level data skipping: only files whose
-    stats overlap the range are handed to Spark (the row-level filter is
-    still applied — stats prune files, the predicate prunes rows). At
-    100 TB this is the difference between listing/opening every file of a
-    snapshot and touching the few whose key range can match."""
-    p = Path(table_path)
-    v = current_version(p) if version is None else version
-    m = _read_manifest(p, v)
-    schema = m.get("schema")
-    # mapped table: the caller's logical key prunes under its physical
-    # name; the returned frame surfaces logical names like snapshot_read
-    pcol = _mapping_physical(schema, col) if schema else col
-    files = snapshot_files_for_range(p, pcol, lo, hi, v)
-    if not files:
-        # empty selection: preserve schema by reading the full snapshot
-        # lazily and filtering (never collected — planner only)
-        return snapshot_read(spark, p, v).where(f"{col} >= {lo!r} AND {col} <= {hi!r}").limit(0)
-    df = _read_files_with_dv(spark, p, files, m.get("dv"),
-                             merge_schema=schema is not None,
-                             types=m.get("types"), schema=schema)
-    df = df.where((df[pcol] >= lo) & (df[pcol] <= hi))
-    return _apply_column_mapping(df, schema) if schema else df
 
 
 def _rewrite(
@@ -5309,7 +5225,9 @@ def snapshot_compact_where(
     p = _table(table_path)
     return _rewrite(
         spark, p, "compact-where",
-        lambda m, parent: snapshot_files_for_predicate(p, condition, parent),
+        lambda m, parent: _admitted(
+            m, _where_region(m.get("schema"), condition)
+        ),
         lambda df, touched, name: df.coalesce(max(1, target_files)),
     )
 
@@ -5483,48 +5401,6 @@ def _last_zorder_files(p: Path, tip: int) -> set[str] | None:
     return None
 
 
-def snapshot_read_rect(
-    spark: SparkSession,
-    table_path,
-    col_a: str,
-    lo_a,
-    hi_a,
-    col_b: str,
-    lo_b,
-    hi_b,
-    version: int | None = None,
-) -> DataFrame:
-    """2-D stats-pruned read: only files whose manifest [min, max] ranges
-    overlap BOTH predicates are listed (the intersection of the two
-    single-column prunes), then the row filters apply as usual. On a
-    z-ordered layout each file is a compact rectangle of the (a, b)
-    space, so a small query rectangle admits few files — the read-side
-    payoff of snapshot_zorder_compact_n; on a single-column layout this
-    degrades gracefully to that column's prune (files without stats for
-    either column are always kept: pruning never loses rows)."""
-    from pyspark.sql import functions as F
-
-    p = Path(table_path)
-    v = current_version(p) if version is None else version
-    m = _read_manifest(p, v)
-    schema = m.get("schema")
-    pa = _mapping_physical(schema, col_a) if schema else col_a
-    pb = _mapping_physical(schema, col_b) if schema else col_b
-    fa = set(snapshot_files_for_range(p, pa, lo_a, hi_a, v))
-    fb = set(snapshot_files_for_range(p, pb, lo_b, hi_b, v))
-    files = sorted(fa & fb)
-    if not files:
-        return snapshot_read(spark, p, version=v).where(F.lit(False))
-    df = (
-        _read_files_with_dv(spark, p, files, m.get("dv"),
-                            merge_schema=schema is not None,
-                            types=m.get("types"), schema=schema)
-        .where((F.col(pa) >= lo_a) & (F.col(pa) <= hi_a))
-        .where((F.col(pb) >= lo_b) & (F.col(pb) <= hi_b))
-    )
-    return _apply_column_mapping(df, schema) if schema else df
-
-
 # ---------------------------------------------------------------------------
 # Per-file Bloom filters (point-lookup skipping where min/max can't prune)
 # ---------------------------------------------------------------------------
@@ -5628,7 +5504,7 @@ def snapshot_analyze_blooms(spark: SparkSession, table_path, cols: list) -> int:
     :func:`snapshot_analyze`. Retrofits point-lookup file skipping onto
     tables written without filters (CTAS results, identity-routed
     overwrites, inherited lakes); after one pass,
-    snapshot_files_for_point prunes exactly like a bloom-born table.
+    point lookups prune exactly like on a bloom-born table.
     The merged map replaces prior filters for the analyzed columns and
     keeps other columns' entries; the footer sweep distributes above
     the driver bound like every metadata scan. Columns are LOGICAL
@@ -5665,71 +5541,25 @@ def snapshot_analyze_blooms(spark: SparkSession, table_path, cols: list) -> int:
     raise AssertionError("unreachable")
 
 
-def snapshot_files_for_point(table_path, col, value, version: int | None = None) -> list[str]:
-    """The file subset that CAN contain ``col = value``: a file is skipped
-    iff its manifest carries a Bloom filter for ``col`` that rejects the
-    value, or min/max stats that exclude it — files with neither are kept
-    (pruning must never lose rows)."""
+def _bloom_rejects(b64: str, value, s) -> bool:
+    """True when a file's Bloom filter proves it lacks ``value`` (a
+    stats-canonical probe; ``s`` is the file's stats entry for the
+    column, or None). The filter hashed the values pyarrow read, so only
+    a probe spelled the same way is tested: a non-string always, a
+    string only against string stats (a string or date column) and
+    never a timestamp-shaped one (the filter hashed 'YYYY-MM-DD
+    HH:MM:SS', probes spell ISO 'T'). Any other probe keeps the file."""
     import base64
 
-    p = Path(table_path)
-    v = current_version(p) if version is None else version
-    m = _read_manifest(p, v)
-    stats = m.get("stats", {})
-    blooms = m.get("blooms", {})
-    keep = []
-    for rel in m["files"]:
-        s = stats.get(rel, {}).get(col)
-        if s is not None and not (s[0] <= _stats_canon(value) <= s[1]):
-            continue
-        b64 = blooms.get(rel, {}).get(col)
-        if b64 is not None:
-            bits = base64.b64decode(b64)
-            # filter size travels as the bitset length (per-file adaptive)
-            positions = _bloom_positions(value, len(bits) * 8)
-            if not all(bits[pos // 8] & (1 << (pos % 8)) for pos in positions):
-                continue
-        keep.append(rel)
-    return keep
-
-
-def snapshot_read_box(
-    spark: SparkSession,
-    table_path,
-    preds: list,
-    version: int | None = None,
-) -> DataFrame:
-    """N-dimensional stats-pruned read: ``preds`` is a list of
-    ``(col, lo, hi)`` and only files whose manifest [min, max] overlap
-    EVERY predicate are listed (the intersection of the single-column
-    prunes), then the row filters apply as usual. The N-column analog of
-    snapshot_read_rect; on an N-dim z-ordered layout a small query box
-    admits few files, and on any other layout it degrades gracefully to
-    whichever columns carry stats (stats-less files are always kept —
-    pruning never loses rows)."""
-    from pyspark.sql import functions as F
-
-    p = Path(table_path)
-    v = current_version(p) if version is None else version
-    m = _read_manifest(p, v)
-    schema = m.get("schema")
-    phys = [
-        (_mapping_physical(schema, c) if schema else c, lo, hi)
-        for c, lo, hi in preds
-    ]
-    files: set | None = None
-    for pc, lo, hi in phys:
-        fs = set(snapshot_files_for_range(p, pc, lo, hi, v))
-        files = fs if files is None else files & fs
-    files = sorted(files or ())
-    if not files:
-        return snapshot_read(spark, p, version=v).where(F.lit(False))
-    df = _read_files_with_dv(spark, p, files, m.get("dv"),
-                             merge_schema=schema is not None,
-                             types=m.get("types"), schema=schema)
-    for pc, lo, hi in phys:
-        df = df.where((F.col(pc) >= lo) & (F.col(pc) <= hi))
-    return _apply_column_mapping(df, schema) if schema else df
+    if isinstance(value, str) and (
+        s is None or not isinstance(s[0], str)
+        or re.match(r"\d{4}-\d\d-\d\d[ T]\d", value)
+    ):
+        return False
+    bits = base64.b64decode(b64)
+    # filter size travels as the bitset length (per-file adaptive)
+    positions = _bloom_positions(value, len(bits) * 8)
+    return not all(bits[pos // 8] & (1 << (pos % 8)) for pos in positions)
 
 
 # ---------------------------------------------------------------------------
@@ -6696,19 +6526,17 @@ def snapshot_upsert_partitioned(
             parent = current_version(p)
             m = _read_manifest(p, parent)
             stats = m.get("stats", {}) or {}
-            touched = set(
-                snapshot_files_for_values(p, partition_col, touched_vals, parent)
-            )
-            # intersect with the batch's KEY-range prune: a file provably
-            # holding none of the batch keys never rewrites, even when it
-            # predates the partition column (PARTITION EVOLUTION: a table
-            # can switch its scoping column without rewriting old files —
-            # they lack stats for the new column, stay conservatively in
-            # the partition prune, and fall out here via their key stats)
-            if klo is not None:
-                touched &= set(
-                    snapshot_files_for_range(p, keys[0], klo, khi, parent)
-                )
+            # one point disjunct per batch partition value, each also
+            # carrying the batch's KEY range: a file provably holding none
+            # of the batch keys never rewrites, even when it predates the
+            # partition column (PARTITION EVOLUTION: a table can switch its
+            # scoping column without rewriting old files — they lack stats
+            # for the new column, stay conservatively in the partition
+            # prune, and fall out here via their key stats)
+            key_range = {keys[0]: (klo, khi)} if klo is not None else {}
+            touched = set(_admitted(m, [
+                {**key_range, partition_col: (v, v)} for v in touched_vals
+            ]))
             untouched = [f for f in m["files"] if f not in touched]
             if touched:
                 cur = _read_files_with_dv(

@@ -524,7 +524,7 @@ def test_ivfpq_cells_are_residual_coded_and_pruned(spark, tmp_path):
     file prune reads only the probed cells' files."""
     from energy_datalake_solution_spark.operators import pq_index as P
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_files_for_values,
+        snapshot_files,
         snapshot_read,
     )
 
@@ -534,13 +534,13 @@ def test_ivfpq_cells_are_residual_coded_and_pruned(spark, tmp_path):
     assert set(cells.columns) == {"vec_id", "centroid_id", "codes"}
     for codes in cells["codes"]:
         assert len(codes) == P.PQ_M and all(0 <= c < P.PQ_K for c in codes)
-    all_files = snapshot_files_for_values(
-        tmp_path / "ix" / "cells", "centroid_id",
-        sorted(cells["centroid_id"].unique()),
+    all_files = snapshot_files(
+        tmp_path / "ix" / "cells",
+        [{"centroid_id": (v, v)} for v in sorted(cells["centroid_id"].unique())],
     )
-    one_cell = snapshot_files_for_values(
-        tmp_path / "ix" / "cells", "centroid_id",
-        [int(cells["centroid_id"].iloc[0])],
+    c0 = int(cells["centroid_id"].iloc[0])
+    one_cell = snapshot_files(
+        tmp_path / "ix" / "cells", [{"centroid_id": (c0, c0)}]
     )
     assert len(one_cell) < len(all_files), "stats prune admitted every file"
 

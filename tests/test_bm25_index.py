@@ -126,7 +126,7 @@ def test_compaction_restores_probe_pruning(spark, tmp_path):
     )
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_compact,
-        snapshot_files_for_values,
+        snapshot_files,
     )
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
@@ -145,15 +145,15 @@ def test_compaction_restores_probe_pruning(spark, tmp_path):
     before_rows = _rows(bm25_probe(spark, QT, idx))
     # each append's files span the full bucket range: a one-bucket prune
     # still has to keep at least one file per append batch
-    one_bucket = snapshot_files_for_values(idx / "postings", "term_bucket", [4])
+    one_bucket = snapshot_files(idx / "postings", [{"term_bucket": (4, 4)}])
     assert len(one_bucket) >= 4  # base file + one per append
 
     snapshot_compact(
         spark, idx / "postings", target_files=BM25_INDEX_FILES,
         stats_cols=["term_bucket"],
     )
-    one_bucket_after = snapshot_files_for_values(
-        idx / "postings", "term_bucket", [4]
+    one_bucket_after = snapshot_files(
+        idx / "postings", [{"term_bucket": (4, 4)}]
     )
     assert len(one_bucket_after) < len(one_bucket)
     assert len(one_bucket_after) <= 2  # tight ranges again
@@ -171,7 +171,7 @@ def test_bm25_index_compact_folds_deltas(spark, tmp_path):
         bm25_index_compact,
     )
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_files_for_values,
+        snapshot_files,
         snapshot_read,
     )
 
@@ -201,9 +201,7 @@ def test_bm25_index_compact_folds_deltas(spark, tmp_path):
     assert snapshot_read(spark, idx / "vocab").count() == n_terms
     assert snapshot_read(spark, idx / "stats").count() == 1
     # postings back to tight per-bucket listings
-    one_bucket = snapshot_files_for_values(
-        idx / "postings", "term_bucket", [4]
-    )
+    one_bucket = snapshot_files(idx / "postings", [{"term_bucket": (4, 4)}])
     assert len(one_bucket) <= 2
     # replay protection survived the full-table rewrites: re-sending an
     # already-applied txn must change nothing

@@ -82,7 +82,7 @@ def test_zorder_n_columns_prunes_all_dimensions(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_read_box,
+        snapshot_read,
         snapshot_write,
     )
 
@@ -96,8 +96,8 @@ def test_zorder_n_columns_prunes_all_dimensions(spark, tmp_path):
     snapshot_write(df, t, zorder_by=["a", "b", "c"], n_files=8)
     total = len(_read_manifest(t, current_version(t))["files"])
     assert total == 8
-    out = snapshot_read_box(
-        spark, t, [("a", 0, 3), ("b", 0, 3), ("c", 0, 3)]
+    out = snapshot_read(
+        spark, t, where=[{"a": (0, 3), "b": (0, 3), "c": (0, 3)}]
     )
     assert len(out.inputFiles()) < total
     assert out.count() == 4 * 4 * 4 * (4096 // (16 * 16 * 16))
@@ -130,11 +130,11 @@ def test_zorder_on_date_column(spark, tmp_path):
     got = S.snapshot_read(spark, t)
     assert got.count() == 64
     import datetime
-    pruned = S.snapshot_files_for_range(
-        t, "day", datetime.date(2026, 1, 1), datetime.date(2026, 1, 8)
+    pruned = S.snapshot_files(
+        t, [{"day": (datetime.date(2026, 1, 1), datetime.date(2026, 1, 8))}]
     )
-    allf = S.snapshot_files_for_range(
-        t, "day", datetime.date(2026, 1, 1), datetime.date(2026, 3, 8)
+    allf = S.snapshot_files(
+        t, [{"day": (datetime.date(2026, 1, 1), datetime.date(2026, 3, 8))}]
     )
     assert 0 < len(pruned) < len(allf)
 

@@ -324,7 +324,7 @@ def test_snapshot_scoped_merge_prunes_to_touched_partitions(spark, tmp_path):
     partition values are point stats, so value pruning is exact."""
     from energy_datalake_solution_spark.sources.snapshots import (
         current_version,
-        snapshot_files_for_values,
+        snapshot_files,
         _read_manifest,
     )
 
@@ -336,9 +336,8 @@ def test_snapshot_scoped_merge_prunes_to_touched_partitions(spark, tmp_path):
     m = _read_manifest(t, current_version(t))
     import datetime as _dt
 
-    pruned = snapshot_files_for_values(
-        t, "txn_day", [_dt.date(2025, 3, 2)], current_version(t)
-    )
+    day = _dt.date(2025, 3, 2)
+    pruned = snapshot_files(t, [{"txn_day": (day, day)}], current_version(t))
     assert 0 < len(pruned) < len(m["files"])
 
 
@@ -394,7 +393,7 @@ def test_snapshot_partition_evolution_without_rewrite(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_files_for_values,
+        snapshot_files,
         snapshot_read,
         snapshot_upsert_partitioned,
     )
@@ -419,6 +418,6 @@ def test_snapshot_partition_evolution_without_rewrite(spark, tmp_path):
     assert rows == {"T1": (10.0, None), "T3": (30.0, None),
                     "T5": (50.0, "gold"), "T6": (60.0, "gold")}
     # pruning on the NEW column: sound on old files, exact on new ones
-    pruned = set(snapshot_files_for_values(t, "tier", ["silver"]))
+    pruned = set(snapshot_files(t, [{"tier": ("silver", "silver")}]))
     assert old_files <= pruned          # stats-less -> conservatively kept
     assert pruned & set(m["files"]) - old_files == set()  # no gold file admitted

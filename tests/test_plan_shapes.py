@@ -611,7 +611,7 @@ def test_ivf_probe_reads_pruned_file_subset_and_broadcasts(spark, tmp_path):
         ivf_probe,
     )
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_files_for_values,
+        snapshot_files,
     )
 
     d = tmp_path / "c"
@@ -633,7 +633,9 @@ def test_ivf_probe_reads_pruned_file_subset_and_broadcasts(spark, tmp_path):
     assert "SortMergeJoin" not in plan
     # one query, nprobe=1 -> the scan location must list only a couple of
     # the 16 ranged files, NOT the whole index
-    all_files = snapshot_files_for_values(idx / "cells", "centroid_id", list(range(16)))
+    all_files = snapshot_files(
+        idx / "cells", [{"centroid_id": (v, v)} for v in range(16)]
+    )
     n_scanned = plan.count(".parquet")
     assert len(all_files) >= 8  # the index is genuinely multi-file
     assert 1 <= n_scanned < len(all_files), (

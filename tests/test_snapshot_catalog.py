@@ -988,7 +988,7 @@ def test_analyze_backfills_stats_and_enables_pruning(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         current_version,
-        snapshot_files_for_range,
+        snapshot_files,
         snapshot_write,
     )
 
@@ -1007,7 +1007,7 @@ def test_analyze_backfills_stats_and_enables_pruning(spark, tmp_path):
     # CTAS result has no stats: conservative full admit
     v0 = current_version(dst)
     n_files = len(_read_manifest(dst, v0)["files"])
-    assert len(snapshot_files_for_range(dst, "k", 0, 0)) == n_files
+    assert len(snapshot_files(dst, [{"k": (0, 0)}])) == n_files
     hashes = {
         f: hashlib.sha256((dst / f).read_bytes()).hexdigest()
         for f in _read_manifest(dst, v0)["files"]
@@ -1021,7 +1021,7 @@ def test_analyze_backfills_stats_and_enables_pruning(spark, tmp_path):
             (dst / f).read_bytes()
         ).hexdigest() == h, "ANALYZE must not touch data"
     assert all({"k", "v"} <= set(s_) for s_ in m["stats"].values())
-    pruned = snapshot_files_for_range(dst, "k", 0, 0)
+    pruned = snapshot_files(dst, [{"k": (0, 0)}])
     assert len(pruned) < n_files
     got = cat.sql("SELECT count(*) AS n FROM actas").first().n
     assert got == 400

@@ -31,7 +31,7 @@ from energy_datalake_solution_spark.sources.snapshot_catalog import (
     SnapshotCatalog,
 )
 from energy_datalake_solution_spark.sources.snapshots import (
-    snapshot_files_for_range,
+    snapshot_files,
     snapshot_read,
     snapshot_upsert_partitioned,
     snapshot_write,
@@ -172,8 +172,8 @@ def test_write_with_stats_identity_routes_and_allocates(
     # prune stays CORRECT: a range outside the data hits no file; the
     # identity allocation's shuffle may merge the tiny layout, so file
     # COUNTS aren't asserted here)
-    assert snapshot_files_for_range(t, "k", 10, 17)      # within range
-    assert snapshot_files_for_range(t, "k", 500, 600) == []  # pruned out
+    assert snapshot_files(t, [{"k": (10, 17)}])      # within range
+    assert snapshot_files(t, [{"k": (500, 600)}]) == []  # pruned out
 
 
 def test_write_with_stats_materializes_write_default(spark, tmp_path):
@@ -215,7 +215,7 @@ def test_write_with_bloom_identity_routes_and_backfills(
     spark, identity_table
 ):
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_files_for_point,
+        snapshot_files,
     )
 
     cat, t = identity_table
@@ -229,8 +229,8 @@ def test_write_with_bloom_identity_routes_and_backfills(
     assert None not in ids and len(set(ids)) == 8   # allocated, unique
     # the backfilled blooms prune point lookups: a value outside the
     # data hits no file
-    assert snapshot_files_for_point(t, "k", 999_999) == []
-    assert snapshot_files_for_point(t, "k", 31)      # present value kept
+    assert snapshot_files(t, [{"k": (999_999, 999_999)}]) == []
+    assert snapshot_files(t, [{"k": (31, 31)}])      # present value kept
 
 
 def test_write_with_bloom_materializes_write_default(spark, tmp_path):
@@ -326,7 +326,7 @@ def test_default_infix_stops_at_clause_keywords(spark, tmp_path):
 
 def test_analyze_blooms_backfills_point_pruning(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_files_for_point,
+        snapshot_files,
         snapshot_read,
         snapshot_write,
     )
@@ -335,7 +335,7 @@ def test_analyze_blooms_backfills_point_pruning(spark, tmp_path):
     df = spark.range(0, 400).selectExpr("id AS k", "id % 7 AS v")
     # stats-only table: 4 range-split files, NO blooms yet
     snapshot_write(df, t, stats_cols=["k"], n_files=4)
-    before = snapshot_files_for_point(t, "v", 3)
+    before = snapshot_files(t, [{"v": (3, 3)}])
     assert len(before) == 4  # v has no stats/blooms: every file kept
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE abt USING snapshot LOCATION '{t}'")
@@ -343,15 +343,15 @@ def test_analyze_blooms_backfills_point_pruning(spark, tmp_path):
     # metadata-only: same rows, new version
     assert snapshot_read(spark, t).count() == 400
     # a value no file contains now prunes to zero via the blooms
-    assert snapshot_files_for_point(t, "v", 12345) == []
+    assert snapshot_files(t, [{"v": (12345, 12345)}]) == []
     # present values keep their files
-    assert snapshot_files_for_point(t, "v", 3)
+    assert snapshot_files(t, [{"v": (3, 3)}])
 
 
 def test_analyze_blooms_merges_with_existing_columns(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_analyze_blooms,
-        snapshot_files_for_point,
+        snapshot_files,
         snapshot_write,
     )
 
@@ -360,9 +360,9 @@ def test_analyze_blooms_merges_with_existing_columns(spark, tmp_path):
     snapshot_write(df, t, bloom_cols=["k"], n_files=2)
     snapshot_analyze_blooms(spark, t, ["w"])
     # both the write-time column and the analyzed one prune
-    assert snapshot_files_for_point(t, "k", 777_777) == []
-    assert snapshot_files_for_point(t, "w", 777_777) == []
-    assert snapshot_files_for_point(t, "w", 1005)
+    assert snapshot_files(t, [{"k": (777_777, 777_777)}]) == []
+    assert snapshot_files(t, [{"w": (777_777, 777_777)}]) == []
+    assert snapshot_files(t, [{"w": (1005, 1005)}])
 
 
 # ---------------------------------------------------------------------------
@@ -644,7 +644,7 @@ def test_widen_composes_with_compaction_and_zorder(spark, tmp_path):
     S.snapshot_zorder_compact_n(spark, t2, ["a", "b"], n_files=2)
     g2 = S.snapshot_read(spark, t2)
     assert dict(g2.dtypes)["a"] == "bigint" and g2.count() == 16
-    assert len(S.snapshot_files_for_range(t2, "a", 0, 3)) == 1  # pruned
+    assert len(S.snapshot_files(t2, [{"a": (0, 3)}])) == 1  # pruned
 
 
 def test_widen_preserves_all_sibling_metadata(spark, tmp_path):
@@ -685,8 +685,8 @@ def test_widen_preserves_all_sibling_metadata(spark, tmp_path):
 
 def test_analyze_blooms_after_rename_keys_physical(spark, tmp_path):
     """Bloom backfill on a RENAMED column: the logical name resolves to
-    the frozen physical name, manifest keys stay physical, and the
-    physical-space prune helpers skip on it."""
+    the frozen physical name, manifest keys stay physical, and a prune
+    on the logical name skips on it."""
     from energy_datalake_solution_spark.sources import snapshots as S
 
     t = tmp_path / "rb"
@@ -697,8 +697,8 @@ def test_analyze_blooms_after_rename_keys_physical(spark, tmp_path):
     cat.sql("ANALYZE TABLE rbt COMPUTE BLOOM FILTERS FOR COLUMNS (kk)")
     m = S._read_manifest(t, S.current_version(t))
     assert sorted({c for b in (m.get("blooms") or {}).values() for c in b}) == ["k"]
-    assert S.snapshot_files_for_point(t, "k", 123456) == []   # pruned
-    assert S.snapshot_files_for_point(t, "k", 5)              # present kept
+    assert S.snapshot_files(t, [{"kk": (123456, 123456)}]) == []  # pruned
+    assert S.snapshot_files(t, [{"kk": (5, 5)}])              # present kept
 
 
 def test_optimize_after_rename_preserves_values(spark, tmp_path):
@@ -719,12 +719,12 @@ def test_optimize_after_rename_preserves_values(spark, tmp_path):
     cat.sql("OPTIMIZE oct_ ZORDER BY (aa, b)")     # full zorder rewrite
     vals = sorted(r.aa for r in cat.sql("SELECT aa FROM oct_").collect())
     assert vals == list(range(64))
-    # stats keyed PHYSICAL: the physical-space prune helpers skip
+    # stats keyed PHYSICAL: the prune maps the logical name onto them
     m = S._read_manifest(t, S.current_version(t))
     keys = sorted({c for s in (m.get("stats") or {}).values()
                    for c in s if not c.startswith("__")})
     assert keys == ["a", "b"]
-    assert len(S.snapshot_files_for_range(t, "a", 0, 7)) < len(m["files"])
+    assert len(S.snapshot_files(t, [{"aa": (0, 7)}])) < len(m["files"])
     # incremental zorder over a fresh tail keeps values too
     cat.sql("INSERT INTO oct_ SELECT id, id % 7 FROM range(64, 96)")
     S.snapshot_zorder_compact_n(spark, t, ["aa", "b"], incremental=True)
@@ -752,7 +752,7 @@ def test_append_stats_cols_map_to_physical_after_rename(spark, tmp_path):
     keys = {c for s in (m.get("stats") or {}).values()
             for c in s if not c.startswith("__")}
     assert keys == {"a"}  # physical spelling
-    assert S.snapshot_files_for_range(t, "a", 400, 600)  # prunable
+    assert S.snapshot_files(t, [{"aa": (400, 600)}])  # prunable
 
 
 def test_partition_column_rename_moves_the_spec(spark, tmp_path):
@@ -827,7 +827,7 @@ def test_restore_and_vacuum_across_widen_bloom_history(spark, tmp_path):
     S.snapshot_widen_column(spark, t, "v", "bigint")
     S.snapshot_vacuum(t, keep_versions=2)
     assert S.snapshot_read(spark, t).count() == 100
-    assert S.snapshot_files_for_point(t, "v", 12345) == []  # blooms live
+    assert S.snapshot_files(t, [{"v": (12345, 12345)}]) == []  # blooms live
     assert S._read_manifest(t, S.current_version(t))["types"]["v"] == "bigint"
 
 

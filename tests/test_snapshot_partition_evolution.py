@@ -18,7 +18,7 @@ from energy_datalake_solution_spark.sources.snapshots import (
     _read_manifest,
     current_version,
     snapshot_append,
-    snapshot_files_for_values,
+    snapshot_files,
     snapshot_partitioning,
     snapshot_read,
     snapshot_set_partitioning,
@@ -58,7 +58,7 @@ def test_set_partitioning_is_metadata_only_and_append_honors_it(spark, tmp_path)
         s = m3["stats"][f]["cat"]
         assert s[0] == s[1], "partition stats must be exact points"
     # value pruning: exact over post-evolution files, conservative over old
-    pruned = set(snapshot_files_for_values(t, "cat", ["c"]))
+    pruned = set(snapshot_files(t, [{"cat": ("c", "c")}]))
     assert set(m1["files"]) <= pruned
     assert len(pruned & set(new_files)) == 1
     # key pruning still discriminates the pre-evolution files
@@ -165,7 +165,7 @@ def test_multi_column_partition_spec(spark, tmp_path):
         _read_manifest,
         current_version,
         snapshot_append,
-        snapshot_files_for_values,
+        snapshot_files,
         snapshot_partitioning,
         snapshot_read,
         snapshot_write,
@@ -200,8 +200,8 @@ def test_multi_column_partition_spec(spark, tmp_path):
         assert st["band"][0] == st["band"][1], "band not a point"
     # conjunctive value prune: status='B' AND band=0 -> exactly one
     # post-evolution file (plus the conservative pre-evolution set)
-    fs = set(snapshot_files_for_values(t, "status", ["B"])) & set(
-        snapshot_files_for_values(t, "band", [0])
+    fs = set(snapshot_files(t, [{"status": ("B", "B")}])) & set(
+        snapshot_files(t, [{"band": (0, 0)}])
     )
     assert pre <= fs and len(fs - pre) == 1
     # reads across the boundary are complete

@@ -22,7 +22,7 @@ from energy_datalake_solution_spark.sources.snapshot_catalog import (
 from energy_datalake_solution_spark.sources.snapshots import (
     _predicate_constraints,
     snapshot_delete_where,
-    snapshot_files_for_predicate,
+    snapshot_files,
     snapshot_read,
     snapshot_update_where,
     snapshot_write,
@@ -84,13 +84,13 @@ def test_predicate_constraints_conservative():
 def test_files_for_predicate_prunes_by_stats(spark, tmp_path):
     t = tmp_path / "t"
     _seed(spark, t, n=100, n_files=4)  # k-ranges [0,24] [25,49] [50,74] [75,99]
-    assert len(snapshot_files_for_predicate(t, "k = 5")) == 1
-    assert len(snapshot_files_for_predicate(t, "k = 5 AND v > 1")) == 1
-    assert len(snapshot_files_for_predicate(t, "k >= 60")) == 2
+    assert len(snapshot_files(t, "k = 5")) == 1
+    assert len(snapshot_files(t, "k = 5 AND v > 1")) == 1
+    assert len(snapshot_files(t, "k >= 60")) == 2
     # OR of constrained disjuncts prunes to the UNION of their regions
     # (round-11 upgrade from the conservative full set)
-    assert len(snapshot_files_for_predicate(t, "k = 5 OR k = 90")) == 2
-    assert len(snapshot_files_for_predicate(t, "tag = 'odd'")) == 4  # no tag stats
+    assert len(snapshot_files(t, "k = 5 OR k = 90")) == 2
+    assert len(snapshot_files(t, "tag = 'odd'")) == 4  # no tag stats
 
 
 # --- delete ------------------------------------------------------------
@@ -254,7 +254,7 @@ def test_or_of_ranges_prunes_to_union(spark, tmp_path):
     on mixed ORs."""
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_delete_where,
-        snapshot_files_for_predicate,
+        snapshot_files,
         snapshot_read,
         snapshot_write,
     )
@@ -265,30 +265,24 @@ def test_or_of_ranges_prunes_to_union(spark, tmp_path):
         spark.range(400).selectExpr("id AS k", "id * 10 AS v"), t,
         stats_cols=["k"], n_files=4,
     )
-    all_files = snapshot_files_for_predicate(t, "k >= 0")
+    all_files = snapshot_files(t, "k >= 0")
     assert len(all_files) == 4
     # union of two disjoint ranges -> exactly the two covering files
-    fs = snapshot_files_for_predicate(
-        t, "k BETWEEN 10 AND 20 OR k BETWEEN 310 AND 320"
-    )
+    fs = snapshot_files(t, "k BETWEEN 10 AND 20 OR k BETWEEN 310 AND 320")
     assert len(fs) == 2
     # parenthesized disjuncts extract too
-    fs = snapshot_files_for_predicate(
-        t, "(k BETWEEN 10 AND 20) OR (k BETWEEN 310 AND 320)"
-    )
+    fs = snapshot_files(t, "(k BETWEEN 10 AND 20) OR (k BETWEEN 310 AND 320)")
     assert len(fs) == 2
     # equality disjuncts
-    fs = snapshot_files_for_predicate(t, "k = 5 OR k = 399")
+    fs = snapshot_files(t, "k = 5 OR k = 399")
     assert len(fs) == 2
     # conjunctive disjunct arms contribute their own bounds
-    fs = snapshot_files_for_predicate(
-        t, "(k >= 10 AND k <= 20) OR (k >= 310 AND k <= 320)"
-    )
+    fs = snapshot_files(t, "(k >= 10 AND k <= 20) OR (k >= 310 AND k <= 320)")
     assert len(fs) == 2
     # one opaque arm -> whole OR unprunable (conservative full set)
-    fs = snapshot_files_for_predicate(t, "k BETWEEN 10 AND 20 OR v < 0")
+    fs = snapshot_files(t, "k BETWEEN 10 AND 20 OR v < 0")
     assert len(fs) == 4
-    fs = snapshot_files_for_predicate(t, "k BETWEEN 10 AND 20 OR k % 7 = 0")
+    fs = snapshot_files(t, "k BETWEEN 10 AND 20 OR k % 7 = 0")
     assert len(fs) == 4
     # correctness through the DML path: delete an OR of ranges, re-read
     snapshot_delete_where(

@@ -19,7 +19,13 @@ Each case runs one prune and checks the files it keeps, by role, in
 manifest order. Each read case also checks that the read returns exactly
 the rows the unpruned snapshot returns under the same filter.
 """
+import datetime
+import uuid
+
+import pyarrow.parquet as pq
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from energy_datalake_solution_spark.sources import snapshots as S
@@ -86,127 +92,142 @@ def test_seed_layout(seeded):
 
 # name -> (prune(t, pre, bounds) -> files, roles kept)
 FILE_CASES = {
-    # range: physical column names
+    # ranges
     "range-inside": (
-        lambda t, pre, b: S.snapshot_files_for_range(t, "k", 100, 200),
+        lambda t, pre, b: S.snapshot_files(t, [{"k": (100, 200)}]),
         ["b0", "ns"],
     ),
     "range-outside": (
-        lambda t, pre, b: S.snapshot_files_for_range(t, "k", 10_000, 20_000),
+        lambda t, pre, b: S.snapshot_files(t, [{"k": (10_000, 20_000)}]),
         ["ns"],
     ),
     "range-boundary-equal": (
-        lambda t, pre, b: S.snapshot_files_for_range(
-            t, "k", b["b0"][1], b["b1"][0]
+        lambda t, pre, b: S.snapshot_files(
+            t, [{"k": (b["b0"][1], b["b1"][0])}]
         ),
         ["b0", "b1", "ns"],
     ),
     "range-point-on-min": (
-        lambda t, pre, b: S.snapshot_files_for_range(
-            t, "k", b["b2"][0], b["b2"][0]
+        lambda t, pre, b: S.snapshot_files(
+            t, [{"k": (b["b2"][0], b["b2"][0])}]
         ),
         ["b2", "ns"],
     ),
-    "range-mapped-physical": (
-        lambda t, pre, b: S.snapshot_files_for_range(t, "v", 0, 100),
+    "range-mapped": (
+        lambda t, pre, b: S.snapshot_files(t, [{"label": (0, 100)}]),
         ["b0", "ns"],
     ),
     "range-old-version": (
-        lambda t, pre, b: S.snapshot_files_for_range(
-            t, "k", 10_000, 20_000, pre
-        ),
+        lambda t, pre, b: S.snapshot_files(t, [{"k": (10_000, 20_000)}], pre),
         [],
     ),
-    # IN-list
+    # IN-lists: one point disjunct per value
     "values-in-list": (
-        lambda t, pre, b: S.snapshot_files_for_values(t, "k", [5, 1200]),
+        lambda t, pre, b: S.snapshot_files(
+            t, [{"k": (5, 5)}, {"k": (1200, 1200)}]
+        ),
         ["b0", "b2", "ns"],
     ),
     "values-outside": (
-        lambda t, pre, b: S.snapshot_files_for_values(t, "k", [99_999]),
+        lambda t, pre, b: S.snapshot_files(t, [{"k": (99_999, 99_999)}]),
         ["ns"],
     ),
+    # an empty IN-list matches no row, so it admits no file (the IN-list
+    # pruner this replaced kept the stats-less files)
     "values-empty": (
-        lambda t, pre, b: S.snapshot_files_for_values(t, "k", []),
-        ["ns"],
+        lambda t, pre, b: S.snapshot_files(t, []),
+        [],
     ),
-    # point: stats and blooms
+    # points: stats and blooms
     "point-inside": (
-        lambda t, pre, b: S.snapshot_files_for_point(t, "k", 10),
+        lambda t, pre, b: S.snapshot_files(t, [{"k": (10, 10)}]),
         ["b0", "ns"],
     ),
     "point-no-stats-file": (
-        lambda t, pre, b: S.snapshot_files_for_point(t, "k", 5001),
+        lambda t, pre, b: S.snapshot_files(t, [{"k": (5001, 5001)}]),
         ["ns"],
     ),
     "point-bloom-admits": (
-        lambda t, pre, b: S.snapshot_files_for_point(t, "u", 30),
+        lambda t, pre, b: S.snapshot_files(t, [{"u": (30, 30)}]),
         ["b0"],
     ),
     "point-bloom-rejects": (
-        lambda t, pre, b: S.snapshot_files_for_point(t, "u", 31),
+        lambda t, pre, b: S.snapshot_files(t, [{"u": (31, 31)}]),
         [],
     ),
-    # SQL predicate strings: logical column names
+    # SQL predicate strings
     "pred-inside": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(
-            t, "k BETWEEN 100 AND 200"
-        ),
+        lambda t, pre, b: S.snapshot_files(t, "k BETWEEN 100 AND 200"),
         ["b0", "ns"],
     ),
     "pred-outside": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(t, "k > 10000"),
+        lambda t, pre, b: S.snapshot_files(t, "k > 10000"),
         ["ns"],
     ),
     "pred-boundary-equal": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(
+        lambda t, pre, b: S.snapshot_files(
             t, f"k >= {b['b1'][1]} AND k <= {b['b2'][0]}"
         ),
         ["b1", "b2", "ns"],
     ),
     "pred-open-lower": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(t, "k >= 1600"),
+        lambda t, pre, b: S.snapshot_files(t, "k >= 1600"),
         ["b3", "ns"],
     ),
     "pred-open-upper": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(t, "k < 100"),
+        lambda t, pre, b: S.snapshot_files(t, "k < 100"),
         ["b0", "ns"],
     ),
     "pred-or-of-ranges": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(
+        lambda t, pre, b: S.snapshot_files(
             t, "k BETWEEN 0 AND 10 OR (k BETWEEN 1900 AND 1950)"
         ),
         ["b0", "b3", "ns"],
     ),
     "pred-or-opaque-arm": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(
-            t, "k = 5 OR abs(k) = 7"
-        ),
+        lambda t, pre, b: S.snapshot_files(t, "k = 5 OR abs(k) = 7"),
         ALL,
     ),
     "pred-equality": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(t, "k = 1200"),
+        lambda t, pre, b: S.snapshot_files(t, "k = 1200"),
         ["b2", "ns"],
     ),
     "pred-incomparable-literal": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(t, "k = 'abc'"),
+        lambda t, pre, b: S.snapshot_files(t, "k = 'abc'"),
         ALL,
     ),
     "pred-mapped-logical": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(t, "label <= 100"),
+        lambda t, pre, b: S.snapshot_files(t, "label <= 100"),
         ["b0", "ns"],
     ),
     "pred-unknown-column": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(t, "v <= 100"),
+        lambda t, pre, b: S.snapshot_files(t, "v <= 100"),
         ALL,
     ),
     "pred-unparseable": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(t, "abs(k) = 5"),
+        lambda t, pre, b: S.snapshot_files(t, "abs(k) = 5"),
         ALL,
     ),
     "pred-old-version": (
-        lambda t, pre, b: S.snapshot_files_for_predicate(t, "k > 10000", pre),
+        lambda t, pre, b: S.snapshot_files(t, "k > 10000", pre),
         [],
+    ),
+    # regions the single-purpose pruners could not say
+    "region-open-bound": (
+        lambda t, pre, b: S.snapshot_files(t, [{"k": (1600, None)}]),
+        ["b3", "ns"],
+    ),
+    "region-unconstrained": (
+        lambda t, pre, b: S.snapshot_files(t, [{}]),
+        ALL,
+    ),
+    "pred-bloom-equality": (
+        lambda t, pre, b: S.snapshot_files(t, "u = 31"),
+        [],
+    ),
+    "pred-bloom-in-or": (
+        lambda t, pre, b: S.snapshot_files(t, "u = 30 OR u = 31"),
+        ["b0"],
     ),
 }
 
@@ -220,70 +241,67 @@ def test_prune_keeps_pinned_files(seeded, case):
     )
 
 
-# name -> (read(spark, t, pre, bounds) -> frame, row filter, version, roles
-# read, rows). An empty role list is an empty selection: no file matches.
+# name -> (where, version, row filter, roles read, rows). An empty role
+# list is an empty selection: no file matches.
 READ_CASES = {
     "read-range": (
-        lambda spark, t, pre, b: S.snapshot_read_range(spark, t, "k", 100, 200),
-        "k BETWEEN 100 AND 200", None, ["b0", "ns"], 101,
+        [{"k": (100, 200)}], None,
+        "k BETWEEN 100 AND 200", ["b0", "ns"], 101,
     ),
     "read-range-dv": (
-        lambda spark, t, pre, b: S.snapshot_read_range(spark, t, "k", 690, 720),
-        "k BETWEEN 690 AND 720", None, ["b1", "ns"], 21,
+        [{"k": (690, 720)}], None,
+        "k BETWEEN 690 AND 720", ["b1", "ns"], 21,
     ),
     "read-range-mapped": (
-        lambda spark, t, pre, b: S.snapshot_read_range(
-            spark, t, "label", 0, 100
-        ),
-        "label BETWEEN 0 AND 100", None, ["b0", "ns"], 202,
+        [{"label": (0, 100)}], None,
+        "label BETWEEN 0 AND 100", ["b0", "ns"], 202,
     ),
     "read-range-no-stats-file": (
-        lambda spark, t, pre, b: S.snapshot_read_range(
-            spark, t, "k", 5001, 5002
-        ),
-        "k BETWEEN 5001 AND 5002", None, ["ns"], 2,
+        [{"k": (5001, 5002)}], None,
+        "k BETWEEN 5001 AND 5002", ["ns"], 2,
     ),
     "read-range-empty": (
-        lambda spark, t, pre, b: S.snapshot_read_range(
-            spark, t, "k", 10_000, 20_000, pre
-        ),
-        "k BETWEEN 10000 AND 20000", "pre", [], 0,
+        [{"k": (10_000, 20_000)}], "pre",
+        "k BETWEEN 10000 AND 20000", [], 0,
     ),
     "read-rect": (
-        lambda spark, t, pre, b: S.snapshot_read_rect(
-            spark, t, "k", 0, 900, "label", 400, 440
-        ),
-        "k BETWEEN 0 AND 900 AND label BETWEEN 400 AND 440", None,
+        [{"k": (0, 900), "label": (400, 440)}], None,
+        "k BETWEEN 0 AND 900 AND label BETWEEN 400 AND 440",
         ["b1", "ns"], 82,
     ),
     "read-rect-empty": (
-        lambda spark, t, pre, b: S.snapshot_read_rect(
-            spark, t, "k", 0, 999, "label", 900, 950, pre
-        ),
-        "k BETWEEN 0 AND 999 AND label BETWEEN 900 AND 950", "pre", [], 0,
+        [{"k": (0, 999), "label": (900, 950)}], "pre",
+        "k BETWEEN 0 AND 999 AND label BETWEEN 900 AND 950", [], 0,
     ),
     "read-box": (
-        lambda spark, t, pre, b: S.snapshot_read_box(
-            spark, t, [("k", 0, 1200), ("label", 400, 600), ("u", 0, 3000)]
-        ),
+        [{"k": (0, 1200), "label": (400, 600), "u": (0, 3000)}], None,
         "k BETWEEN 0 AND 1200 AND label BETWEEN 400 AND 600 "
-        "AND u BETWEEN 0 AND 3000", None, ["b1", "b2", "ns"], 201,
+        "AND u BETWEEN 0 AND 3000", ["b1", "b2", "ns"], 201,
     ),
     "read-box-empty": (
-        lambda spark, t, pre, b: S.snapshot_read_box(
-            spark, t, [("k", 0, 400), ("label", 300, 400)], pre
-        ),
-        "k BETWEEN 0 AND 400 AND label BETWEEN 300 AND 400", "pre", [], 0,
+        [{"k": (0, 400), "label": (300, 400)}], "pre",
+        "k BETWEEN 0 AND 400 AND label BETWEEN 300 AND 400", [], 0,
+    ),
+    "read-or-of-ranges": (
+        [{"k": (0, 10)}, {"label": (950, None)}], None,
+        "k BETWEEN 0 AND 10 OR label >= 950", ["b0", "b3", "ns"], 115,
+    ),
+    "read-predicate-string": (
+        "k BETWEEN 0 AND 10 OR label >= 950", None,
+        "k BETWEEN 0 AND 10 OR label >= 950", ["b0", "b3", "ns"], 115,
+    ),
+    "read-predicate-string-empty": (
+        "k > 10000", "pre", "k > 10000", [], 0,
     ),
 }
 
 
 @pytest.mark.parametrize("case", sorted(READ_CASES))
 def test_read_prunes_pinned_files_and_keeps_rows(spark, seeded, case):
-    t, pre, roles, bounds = seeded
-    read, cond, at, want_files, n_rows = READ_CASES[case]
+    t, pre, roles, _ = seeded
+    where, at, cond, want_files, n_rows = READ_CASES[case]
     version = pre if at == "pre" else None
-    df = read(spark, t, pre, bounds)
+    df = S.snapshot_read(spark, t, version, where=where)
     full = S.snapshot_read(spark, t, version)
     assert df.columns == full.columns == ["k", "u", "label"]
     rows = sorted(tuple(r) for r in df.collect())
@@ -293,3 +311,136 @@ def test_read_prunes_pinned_files_and_keeps_rows(spark, seeded, case):
         names = {f.rsplit("/", 1)[-1]: f for f in roles}
         read_files = [names[u.rsplit("/", 1)[-1]] for u in df.inputFiles()]
         assert sorted(roles[f] for f in read_files) == want_files
+
+
+def test_prune_on_logical_name_of_renamed_column(seeded):
+    """Stats sit under the physical name ``v``; a region names the
+    logical ``label``, and the prune must reach those stats. A physical
+    name is no column of the table."""
+    t, _, roles, _ = seeded
+    kept = S.snapshot_files(t, [{"label": (0, 100)}])
+    assert 0 < len(kept) < len(roles)
+    with pytest.raises(KeyError):
+        S.snapshot_files(t, [{"v": (0, 100)}])
+
+
+def test_where_must_be_a_predicate_string_or_a_region(seeded):
+    t = seeded[0]
+    with pytest.raises(TypeError):
+        S.snapshot_files(t, {"k": (0, 100)})
+
+
+# --- generated: pruning never loses a row ------------------------------
+
+_DAY0 = datetime.date(2024, 1, 1)
+_INTS = st.integers(-5, 25)
+_STRS = st.sampled_from(["a", "b", "bb", "c", "x y", "zz"])
+_DATES = st.integers(0, 40).map(lambda n: _DAY0 + datetime.timedelta(days=n))
+_VALUES = {"i": _INTS, "s": _STRS, "d": _DATES}
+_ROW = st.tuples(
+    st.none() | _INTS, st.none() | _STRS, st.none() | _DATES
+)
+# one file: its rows, and whether the commit records its stats
+_FILE = st.tuples(st.lists(_ROW, min_size=1, max_size=6), st.booleans())
+
+
+@st.composite
+def _disjunct(draw):
+    out = {}
+    for c in draw(st.sets(st.sampled_from(sorted(_VALUES)), max_size=3)):
+        v = _VALUES[c]
+        shape = draw(st.sampled_from(["point", "range", "lo", "hi"]))
+        lo, hi = draw(v), draw(v)
+        out[c] = {
+            "point": (lo, lo), "range": (lo, hi), "lo": (lo, None),
+            "hi": (None, hi),
+        }[shape]
+    return out
+
+
+def _sql_literal(v):
+    if isinstance(v, datetime.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, str):
+        return f"'{v}'"
+    return str(v)
+
+
+def _sql(region):
+    """The SQL predicate string of a region: ORed arms of ANDed
+    comparisons; an unconstrained arm is an opaque conjunct."""
+    arms = []
+    for d in region:
+        terms = []
+        for c, (lo, hi) in d.items():
+            if lo is not None and lo == hi:
+                terms.append(f"{c} = {_sql_literal(lo)}")
+            elif lo is not None and hi is not None:
+                terms.append(
+                    f"{c} BETWEEN {_sql_literal(lo)} AND {_sql_literal(hi)}"
+                )
+            elif lo is not None:
+                terms.append(f"{c} >= {_sql_literal(lo)}")
+            elif hi is not None:
+                terms.append(f"{c} <= {_sql_literal(hi)}")
+        arms.append(" AND ".join(terms) or "abs(i) >= 0")
+    if len(arms) == 1:
+        return arms[0]
+    return " OR ".join(f"({a})" for a in arms)
+
+
+def _matches(row: dict, region) -> bool:
+    for d in region:
+        if all(
+            row[c] is not None
+            and (lo is None or row[c] >= lo)
+            and (hi is None or row[c] <= hi)
+            for c, (lo, hi) in d.items()
+        ):
+            return True
+    return False
+
+
+@settings(
+    max_examples=5, deadline=None,
+    suppress_health_check=[
+        HealthCheck.function_scoped_fixture, HealthCheck.too_slow,
+    ],
+)
+@given(
+    files=st.lists(_FILE, min_size=1, max_size=3),
+    blooms=st.booleans(),
+    regions=st.lists(
+        st.lists(_disjunct(), min_size=1, max_size=3),
+        min_size=16, max_size=16,
+    ),
+)
+def test_prune_never_loses_a_row(spark, tmp_path, files, blooms, regions):
+    """On generated tables of int, string and date columns (files with
+    and without stats, with and without Bloom filters), every file that
+    holds a row of a random region is kept, and the SQL spelling of the
+    region keeps exactly the files the region spelling keeps."""
+    t = tmp_path / uuid.uuid4().hex
+    cols = ["i", "s", "d"]
+    for n, (rows, with_stats) in enumerate(files):
+        df = spark.createDataFrame(rows, "i int, s string, d date").coalesce(1)
+        stats_cols = cols if with_stats else None
+        if n == 0:
+            S.snapshot_write(
+                df, t, stats_cols=stats_cols,
+                bloom_cols=cols if blooms else None,
+            )
+        else:
+            S.snapshot_append(df, t, stats_cols=stats_cols)
+    m = S._read_manifest(t, S.current_version(t))
+    content = {
+        f: pq.read_table(t / f).to_pylist() for f in m["files"]
+    }
+    for region in regions:
+        kept = S.snapshot_files(t, region)
+        must = [
+            f for f in m["files"]
+            if any(_matches(r, region) for r in content[f])
+        ]
+        assert set(must) <= set(kept), (region, must, kept)
+        assert S.snapshot_files(t, _sql(region)) == kept, _sql(region)

@@ -295,19 +295,19 @@ def test_stats_commit_prunes_files_and_loses_nothing(spark, tmp_path):
     the overlapping files, and the pruned read must equal the brute-force
     filter over the full snapshot."""
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_files_for_range,
-        snapshot_read_range,
+        snapshot_files,
+        snapshot_read,
         snapshot_write,
     )
 
     t = tmp_path / "t"
     df = spark.range(10_000).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
     snapshot_write(df, t, stats_cols=["k"], n_files=8)
-    all_files = snapshot_files_for_range(t, "k", 0, 10_000)
+    all_files = snapshot_files(t, [{"k": (0, 10_000)}])
     assert len(all_files) == 8
-    few = snapshot_files_for_range(t, "k", 2_000, 2_100)
+    few = snapshot_files(t, [{"k": (2_000, 2_100)}])
     assert 1 <= len(few) <= 2  # disjoint ranges: the window spans <=2 files
-    got = snapshot_read_range(spark, t, "k", 2_000, 2_100)
+    got = snapshot_read(spark, t, where=[{"k": (2_000, 2_100)}])
     expected = snapshot_read(spark, t).where("k BETWEEN 2000 AND 2100")
     assert got.count() == expected.count() == 101
     assert got.exceptAll(expected).count() == 0
@@ -318,16 +318,16 @@ def test_stats_missing_column_keeps_files(spark, tmp_path):
     (safety over selectivity) — a stats-less commit still answers keyed
     reads correctly."""
     from energy_datalake_solution_spark.sources.snapshots import (
-        snapshot_files_for_range,
-        snapshot_read_range,
+        snapshot_files,
+        snapshot_read,
     )
 
     t = tmp_path / "t"
     snapshot_write(_df(spark, 0, 100, "a"), t)  # plain commit: no stats
-    files = snapshot_files_for_range(t, "k", 5, 10)
-    m_files = snapshot_files_for_range(t, "k", -99, -90)
+    files = snapshot_files(t, [{"k": (5, 10)}])
+    m_files = snapshot_files(t, [{"k": (-99, -90)}])
     assert files == m_files  # nothing pruned either way
-    assert snapshot_read_range(spark, t, "k", 5, 10).count() == 6
+    assert snapshot_read(spark, t, where=[{"k": (5, 10)}]).count() == 6
 
 
 def test_compaction_shrinks_files_preserves_rows_and_history(spark, tmp_path):
@@ -336,25 +336,25 @@ def test_compaction_shrinks_files_preserves_rows_and_history(spark, tmp_path):
     restores key locality for pruned reads."""
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_compact,
-        snapshot_files_for_range,
+        snapshot_files,
     )
 
     t = tmp_path / "t"
     for i in range(6):  # simulated micro-batch appends: 6 small files
         snapshot_append(_df(spark, i * 10, (i + 1) * 10, "a").coalesce(1), t)
     v_before = current_version(t)
-    files_before = len(snapshot_files_for_range(t, "k", -1, 999))
+    files_before = len(snapshot_files(t, [{"k": (-1, 999)}]))
     assert files_before == 6
     v = snapshot_compact(spark, t, target_files=2, stats_cols=["k"])
     assert v == v_before + 1
-    assert len(snapshot_files_for_range(t, "k", -1, 999)) == 2
+    assert len(snapshot_files(t, [{"k": (-1, 999)}])) == 2
     # identical contents
     now = snapshot_read(spark, t)
     old = snapshot_read(spark, t, version=v_before)
     assert now.count() == old.count() == 60
     assert now.exceptAll(old).count() == 0
     # re-clustering: a narrow keyed read touches ONE of the two files
-    assert len(snapshot_files_for_range(t, "k", 5, 8)) == 1
+    assert len(snapshot_files(t, [{"k": (5, 8)}])) == 1
 
 
 def test_manifest_row_count_answers_count_star(spark, tmp_path):
@@ -698,7 +698,7 @@ def test_bloom_point_lookup_skips_files_without_false_negatives(spark, tmp_path)
 
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
-        snapshot_files_for_point,
+        snapshot_files,
         snapshot_write,
     )
 
@@ -720,7 +720,7 @@ def test_bloom_point_lookup_skips_files_without_false_negatives(spark, tmp_path)
 
     # no false negatives: every file truly holding the value is kept
     for probe in (0, 7, 123, 996):
-        kept = set(snapshot_files_for_point(t, "user_id", probe))
+        kept = set(snapshot_files(t, [{"user_id": (probe, probe)}]))
         rows = (
             spark.read.parquet(*[str(t / f) for f in kept])
             .where(F.col("user_id") == probe)
@@ -732,11 +732,11 @@ def test_bloom_point_lookup_skips_files_without_false_negatives(spark, tmp_path)
     # a value absent from the table prunes (essentially) everything:
     # each file holds ~500 of 997 user_ids, so at ~0.9% FP per file the
     # expected kept count is << n_files; allow 2 for FP slack
-    assert len(snapshot_files_for_point(t, "user_id", 10**9)) <= 2
+    assert len(snapshot_files(t, [{"user_id": (10**9, 10**9)}])) <= 2
 
     # min/max stats still compose: a ts_bucket outside every range drops
     # all files regardless of blooms
-    assert snapshot_files_for_point(t, "ts_bucket", 99) == []
+    assert snapshot_files(t, [{"ts_bucket": (99, 99)}]) == []
 
 
 def test_zordered_snapshot_prunes_files_on_both_columns(spark, tmp_path):
@@ -747,8 +747,8 @@ def test_zordered_snapshot_prunes_files_on_both_columns(spark, tmp_path):
 
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
-        snapshot_files_for_range,
-        snapshot_read_range,
+        snapshot_files,
+        snapshot_read,
         snapshot_write,
     )
 
@@ -776,9 +776,9 @@ def test_zordered_snapshot_prunes_files_on_both_columns(spark, tmp_path):
         ("l_partkey", rng[0], rng[0] + (rng[1] - rng[0]) // 8),
         ("l_suppkey", rng[2], rng[2] + (rng[3] - rng[2]) // 8),
     ):
-        kept = snapshot_files_for_range(t, col, lo, hi)
+        kept = snapshot_files(t, [{col: (lo, hi)}])
         assert len(kept) < n_files, f"{col}: no pruning ({len(kept)}/{n_files})"
-        got = snapshot_read_range(spark, t, col, lo, hi).count()
+        got = snapshot_read(spark, t, where=[{col: (lo, hi)}]).count()
         want = l.where((F.col(col) >= lo) & (F.col(col) <= hi)).count()
         assert got == want, f"{col}: pruned read lost rows"
 
@@ -826,7 +826,7 @@ def test_blooms_survive_upsert_append_delete_and_compact(spark, tmp_path):
         snapshot_append,
         snapshot_compact,
         snapshot_delete_range,
-        snapshot_files_for_point,
+        snapshot_files,
         snapshot_write,
     )
 
@@ -842,9 +842,9 @@ def test_blooms_survive_upsert_append_delete_and_compact(spark, tmp_path):
         m = _read_manifest(t, current_version(t))
         assert m.get("blooms"), f"{stage}: blooms stripped"
         assert all("uid" in m["blooms"].get(f, {}) for f in m["files"]), stage
-        ghost = snapshot_files_for_point(t, "uid", 10**9)
+        ghost = snapshot_files(t, [{"uid": (10**9, 10**9)}])
         assert len(ghost) <= 2, f"{stage}: absent-key prune lost ({len(ghost)})"
-        kept = snapshot_files_for_point(t, "uid", 123)
+        kept = snapshot_files(t, [{"uid": (123, 123)}])
         found = (
             spark.read.parquet(*[str(t / f) for f in kept])
             .where(F.col("uid") == 123)
@@ -978,7 +978,7 @@ def test_zorder_compact_restores_two_dim_pruning(spark, tmp_path):
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         snapshot_append,
-        snapshot_read_rect,
+        snapshot_read,
         snapshot_write,
         snapshot_zorder_compact_n,
     )
@@ -1004,7 +1004,9 @@ def test_zorder_compact_restores_two_dim_pruning(spark, tmp_path):
     m = _read_manifest(t, v)
     total = len(m["files"])
     assert total >= 6
-    rect = snapshot_read_rect(spark, t, "l_partkey", 1, 50, "l_suppkey", 1, 5)
+    rect = snapshot_read(
+        spark, t, where=[{"l_partkey": (1, 50), "l_suppkey": (1, 5)}]
+    )
     assert len(rect.inputFiles()) <= total // 2  # both dimensions cut
     got = sorted(
         (r.l_orderkey, r.l_partkey, r.l_suppkey, float(r.l_quantity))
@@ -1032,7 +1034,6 @@ def test_incremental_zorder_carries_clustered_files_untouched(spark, tmp_path):
         current_version,
         snapshot_append,
         snapshot_read,
-        snapshot_read_rect,
         snapshot_write,
         snapshot_zorder_compact_n,
     )
@@ -1072,8 +1073,8 @@ def test_incremental_zorder_carries_clustered_files_untouched(spark, tmp_path):
     )
     got = sorted(
         (r.l_orderkey, r.l_partkey, r.l_suppkey, float(r.l_quantity))
-        for r in snapshot_read_rect(
-            spark, t, "l_partkey", 1, 50, "l_suppkey", 1, 5
+        for r in snapshot_read(
+            spark, t, where=[{"l_partkey": (1, 50), "l_suppkey": (1, 5)}]
         ).collect()
     )
     assert got == expected
@@ -1100,7 +1101,6 @@ def test_mor_delete_rewrites_no_files_and_never_resurrects(spark, tmp_path):
         snapshot_compact,
         snapshot_delete_range_mor,
         snapshot_read,
-        snapshot_read_range,
         snapshot_row_count,
         snapshot_upsert,
         snapshot_write,
@@ -1121,7 +1121,9 @@ def test_mor_delete_rewrites_no_files_and_never_resurrects(spark, tmp_path):
     assert snapshot_read(spark, t).count() == 3000
     assert snapshot_row_count(t) == 3000  # manifest-only count sees the DV
     assert snapshot_read(spark, t, version=v1).count() == 4000  # time travel
-    got = sorted(r.k for r in snapshot_read_range(spark, t, "k", 500, 2499).collect())
+    got = sorted(
+        r.k for r in snapshot_read(spark, t, where=[{"k": (500, 2499)}]).collect()
+    )
     assert got == list(range(500, 1000)) + list(range(2000, 2500))
 
     # vectors merge across deletes (overlap is deduplicated)
@@ -1318,9 +1320,9 @@ def test_delta_resolution_preserves_stats_blooms_dv(spark, tmp_path):
     assert m.get("dv")
     assert snapshot_read(spark, t).count() == 1090
     # stats-pruned read across the chain still prunes AND loses nothing
-    files = S.snapshot_files_for_range(t, "k", 0, 100, v3)
+    files = S.snapshot_files(t, [{"k": (0, 100)}], v3)
     assert 0 < len(files) < len(m["files"])
-    got = S.snapshot_read_range(spark, t, "k", 0, 100).count()
+    got = S.snapshot_read(spark, t, where=[{"k": (0, 100)}]).count()
     assert got == 91  # 101 keys minus 10 MOR-deleted
 
 
@@ -2224,15 +2226,14 @@ def test_deletes_speak_logical_names_on_mapped_tables(spark, tmp_path):
 
 
 def test_pruned_reads_speak_logical_names_on_mapped_tables(spark, tmp_path):
-    """snapshot_read_range and snapshot_read_rect take logical names on a
-    mapped table (pruning on the physical key) and return logically-named
-    frames, across a rename."""
+    """snapshot_read(where=...) takes logical names on a mapped table
+    (pruning on the physical key) and returns logically-named frames,
+    across a rename — for a range and for a 2-column rectangle."""
     from pyspark.sql import functions as F
 
     from energy_datalake_solution_spark.sources.snapshots import (
         snapshot_enable_column_mapping,
-        snapshot_read_range,
-        snapshot_read_rect,
+        snapshot_read,
         snapshot_rename_column,
         snapshot_write,
     )
@@ -2244,10 +2245,10 @@ def test_pruned_reads_speak_logical_names_on_mapped_tables(spark, tmp_path):
     snapshot_write(df, t, stats_cols=["k"], n_files=4)
     snapshot_enable_column_mapping(spark, t)
     snapshot_rename_column(t, "k", "key")
-    rr = snapshot_read_range(spark, t, "key", 20, 29)
+    rr = snapshot_read(spark, t, where=[{"key": (20, 29)}])
     assert rr.columns == ["key", "v"]
     assert sorted(r.key for r in rr.collect()) == list(range(20, 30))
-    rect = snapshot_read_rect(spark, t, "key", 20, 29, "v", 250, 279)
+    rect = snapshot_read(spark, t, where=[{"key": (20, 29), "v": (250, 279)}])
     assert rect.columns == ["key", "v"]
     assert sorted(r.key for r in rect.collect()) == [25, 26, 27]
 
@@ -2311,7 +2312,7 @@ def test_write_with_stats_speaks_logical_names_on_mapped_tables(spark, tmp_path)
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         snapshot_enable_column_mapping,
-        snapshot_files_for_range,
+        snapshot_files,
         snapshot_rename_column,
         snapshot_write,
     )
@@ -2334,14 +2335,14 @@ def test_write_with_stats_speaks_logical_names_on_mapped_tables(spark, tmp_path)
     assert len(rows) == 200 and None not in rows  # no NULL-surfacing
     assert rows[42] == 294
     # stats landed under the frozen PHYSICAL name (the only name the data
-    # files carry): physical-space pruning selects a strict file subset
+    # files carry): pruning on the logical name selects a strict subset
     m = _read_manifest(t, current_version(t))
     assert len(m["files"]) == 4
     phys = next(
         c["physical"] for c in m["schema"]["cols"] if c["name"] == "key"
     )
     assert all(phys in s for s in m["stats"].values())
-    pruned = snapshot_files_for_range(t, phys, 10, 20)
+    pruned = snapshot_files(t, [{"key": (10, 20)}])
     assert 0 < len(pruned) < 4
 
 
