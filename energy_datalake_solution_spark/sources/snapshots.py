@@ -3441,6 +3441,18 @@ def _stats_canon(v):
     return v
 
 
+_TIMESTAMP_SHAPE = re.compile(r"\d{4}-\d\d-\d\d[ T]\d")
+
+
+def _timestamp_shaped(v) -> bool:
+    """A timestamp stat or probe spelled as a string. Footer stats spell
+    a timestamp with a UTC offset ('2024-01-01T03:00:00+00:00'); SQL
+    literals spell it with a space and ``datetime`` probes without an
+    offset, so string order between the two is not time order. A bound
+    with this shape on either side rejects no file."""
+    return isinstance(v, str) and _TIMESTAMP_SHAPE.match(v) is not None
+
+
 def _file_stats(path: str, stats_cols: list[str]) -> dict:
     """Min/max per column + exact row count for ONE parquet file, from its
     footer (row-group statistics — no data pages touched). When every
@@ -3900,8 +3912,9 @@ def snapshot_update_range_mor(
 # box one disjunct with N entries. A file is kept when ANY disjunct admits
 # it; a disjunct rejects a file only when the file's min/max stats exclude
 # one of its intervals, or when an interval is a point the file's Bloom
-# filter rejects. Missing stats or filters, and literals the stats cannot
-# be compared with, reject nothing: pruning never loses a row. ``[{}]``
+# filter rejects. Missing stats or filters, literals the stats cannot be
+# compared with, and timestamp bounds (footer stats and probes spell them
+# differently) reject nothing: pruning never loses a row. ``[{}]``
 # admits every file; ``[]`` admits none.
 #
 # SQL predicate strings reach the same rule through a small grammar (the
@@ -4035,6 +4048,8 @@ def _predicate_constraints(cond: str, exact: bool = False) -> dict[str, list] | 
             return None  # opaque conjunct: the bounds are not the predicate
         else:
             continue
+        if exact and (_timestamp_shaped(lo) or _timestamp_shaped(hi)):
+            return None  # a timestamp conjunct is opaque too
         b = out.setdefault(col, [None, None])
         if lo is not None and (b[0] is None or lo > b[0]):
             b[0] = lo
@@ -4113,6 +4128,8 @@ def _admitted(m: dict, region: list) -> list[str]:
         fstats, fblooms = stats.get(rel, {}), blooms.get(rel, {})
         for c, (lo, hi) in d.items():
             s = fstats.get(c)
+            if s is not None and any(map(_timestamp_shaped, (s[0], lo, hi))):
+                continue  # timestamp bounds can't reject, Bloom included
             if s is not None:
                 try:
                     if (hi is not None and s[0] > hi) or (
@@ -4631,6 +4648,8 @@ def snapshot_replace_where(
                 for c, (lo, hi) in (exact or {}).items():
                     s = stats.get(rel, {}).get(c)
                     if s is None or len(s) < 3 or s[2] != 0:
+                        return False
+                    if _timestamp_shaped(s[0]):
                         return False
                     try:
                         if lo is not None and s[0] < _stats_canon(lo):

@@ -330,15 +330,33 @@ def test_where_must_be_a_predicate_string_or_a_region(seeded):
         S.snapshot_files(t, {"k": (0, 100)})
 
 
+@pytest.fixture
+def micros_timestamps(spark):
+    """Parquet timestamps written as TIMESTAMP_MICROS, which carry footer
+    stats (Spark's default INT96 carries none); the conf is restored."""
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    yield
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)
+
+
 # --- generated: pruning never loses a row ------------------------------
 
 _DAY0 = datetime.date(2024, 1, 1)
 _INTS = st.integers(-5, 25)
 _STRS = st.sampled_from(["a", "b", "bb", "c", "x y", "zz"])
 _DATES = st.integers(0, 40).map(lambda n: _DAY0 + datetime.timedelta(days=n))
-_VALUES = {"i": _INTS, "s": _STRS, "d": _DATES}
+_TIMES = st.integers(0, 47).map(
+    lambda n: datetime.datetime(2024, 1, 1) + datetime.timedelta(hours=n)
+)
+_VALUES = {"i": _INTS, "s": _STRS, "d": _DATES, "t": _TIMES}
 _ROW = st.tuples(
-    st.none() | _INTS, st.none() | _STRS, st.none() | _DATES
+    st.none() | _INTS, st.none() | _STRS, st.none() | _DATES,
+    st.none() | _TIMES,
 )
 # one file: its rows, and whether the commit records its stats
 _FILE = st.tuples(st.lists(_ROW, min_size=1, max_size=6), st.booleans())
@@ -359,6 +377,8 @@ def _disjunct(draw):
 
 
 def _sql_literal(v):
+    if isinstance(v, datetime.datetime):
+        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
     if isinstance(v, datetime.date):
         return f"DATE '{v.isoformat()}'"
     if isinstance(v, str):
@@ -415,15 +435,20 @@ def _matches(row: dict, region) -> bool:
         min_size=16, max_size=16,
     ),
 )
-def test_prune_never_loses_a_row(spark, tmp_path, files, blooms, regions):
-    """On generated tables of int, string and date columns (files with
-    and without stats, with and without Bloom filters), every file that
-    holds a row of a random region is kept, and the SQL spelling of the
-    region keeps exactly the files the region spelling keeps."""
+def test_prune_never_loses_a_row(
+    spark, tmp_path, micros_timestamps, files, blooms, regions
+):
+    """On generated tables of int, string, date and timestamp columns
+    (files with and without stats, with and without Bloom filters), every
+    file that holds a row of a random region is kept, and the SQL
+    spelling of the region keeps exactly the files the region spelling
+    keeps."""
     t = tmp_path / uuid.uuid4().hex
-    cols = ["i", "s", "d"]
+    cols = ["i", "s", "d", "t"]
     for n, (rows, with_stats) in enumerate(files):
-        df = spark.createDataFrame(rows, "i int, s string, d date").coalesce(1)
+        df = spark.createDataFrame(
+            rows, "i int, s string, d date, t timestamp"
+        ).coalesce(1)
         stats_cols = cols if with_stats else None
         if n == 0:
             S.snapshot_write(
@@ -433,8 +458,14 @@ def test_prune_never_loses_a_row(spark, tmp_path, files, blooms, regions):
         else:
             S.snapshot_append(df, t, stats_cols=stats_cols)
     m = S._read_manifest(t, S.current_version(t))
+    # timestamps read back UTC-aware; the session and the probes are UTC
     content = {
-        f: pq.read_table(t / f).to_pylist() for f in m["files"]
+        f: [
+            {c: v.replace(tzinfo=None) if isinstance(v, datetime.datetime) else v
+             for c, v in r.items()}
+            for r in pq.read_table(t / f).to_pylist()
+        ]
+        for f in m["files"]
     }
     for region in regions:
         kept = S.snapshot_files(t, region)
@@ -444,3 +475,51 @@ def test_prune_never_loses_a_row(spark, tmp_path, files, blooms, regions):
         ]
         assert set(must) <= set(kept), (region, must, kept)
         assert S.snapshot_files(t, _sql(region)) == kept, _sql(region)
+
+
+# --- timestamp bounds -------------------------------------------------
+
+
+def _ts_table(spark, t):
+    rows = [(k, datetime.datetime(2024, 1, 1, h)) for k, h in ((1, 3), (2, 4), (3, 6))]
+    S.snapshot_write(
+        spark.createDataFrame(rows, "k int, ts timestamp").coalesce(1), t,
+        stats_cols=["ts"],
+    )
+    m = S._read_manifest(t, S.current_version(t))
+    # footer stats spell the bound as an offset ISO string
+    assert all("T" in s["ts"][0] for s in m["stats"].values())
+    return m
+
+
+def test_timestamp_bounds_keep_matching_rows(spark, tmp_path, micros_timestamps):
+    """Footer stats of a timestamp are offset ISO strings, probes are not:
+    string order between the two is not time order, so a timestamp bound
+    must keep every file. The read, the delete and a ``datetime`` region
+    all keep the rows at 03:00 and 04:00."""
+    t = tmp_path / "ts"
+    m = _ts_table(spark, t)
+    where = "ts <= TIMESTAMP '2024-01-01 05:00:00'"
+    assert S.snapshot_files(t, where) == m["files"]
+    at3 = datetime.datetime(2024, 1, 1, 3)
+    assert S.snapshot_files(t, [{"ts": (at3, at3)}]) == m["files"]
+    assert S.snapshot_files(t, "ts = '2024-01-01 03:00:00'") == m["files"]
+    got = S.snapshot_read(spark, t, where=where).collect()
+    assert sorted(r.k for r in got) == [1, 2]
+    S.snapshot_delete_where(spark, t, where)
+    assert [r.k for r in S.snapshot_read(spark, t).collect()] == [3]
+
+
+def test_replace_where_never_drops_a_file_on_a_timestamp_bound(
+    spark, tmp_path, micros_timestamps
+):
+    """REPLACE WHERE drops a file unread only when its stats prove every
+    row matches; timestamp stats prove nothing, so the 03:00 row, which
+    does not match, survives."""
+    t = tmp_path / "ts"
+    _ts_table(spark, t)
+    S.snapshot_replace_where(
+        spark, t, "ts >= '2024-01-01 03:30:00'",
+        spark.createDataFrame([], "k int, ts timestamp"),
+    )
+    assert [r.k for r in S.snapshot_read(spark, t).collect()] == [1]
