@@ -1,33 +1,165 @@
-"""Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
+"""Multimodal columns: binary payloads, their synthesizers and decoders.
 
-The container has no image/audio codec LIBRARIES, so compressed-format
-decode stays a deterministic stub behind `mapInPandas` — but header
-parsing (sniff_container_headers) and uncompressed WAV PCM sample decode
-(decode_wav_pcm_stats, numpy-only) are REAL, and everything Spark-side is
-real throughout: schema (binary + struct metadata), Arrow batch transfer,
-partition-preserving pandas iteration, and the pattern of keeping large
-blobs out of shuffle keys.
+Every query here has one shape. A synthesizer turns each document into
+a payload: a spec-valid file whose content derives arithmetically from
+the doc_id, or the document's UTF-8 text. A decoder turns each payload
+back into stat rows, and the DuckDB oracle recomputes those rows from
+the generating formula, so a decoder slip fails the hash gate. Decoders
+are pure ``bytes -> arrays`` functions; both stages run as Spark map
+stages through one driver, ``_map_rows``, so payload bytes never reach
+a shuffle. The query table at the end wires each query.
 
-At 100 TB: blobs live in their own column (parquet stores them contiguously;
-column pruning means metadata-only queries never read the bytes), and every
-shuffle/join key is a scalar (doc_id, digest) — the binary column is only
-materialized inside the final map stage.
+=========  =====================  ==========================================
+format     decoder                queries (``multimodal_*``)
+=========  =====================  ==========================================
+raw bytes  (none)                 payload_stats, resize_stats, frame_counts
+headers    ``_sniff``             header_sniff
+WAV        ``_riff`` + ``_pcm``,  wav_pcm_stats, wav_adpcm_stats,
+           ``_adpcm``, ``_g711``  wav_g711_stats
+BMP        ``_bmp``               bmp_pixel_stats
+PNG        ``_png``               png_pixel_stats, png_adam7_stats
+GIF        ``_gif``               gif_pixel_stats
+JPEG       ``_jpeg``              gray: jpeg_pixel_stats,
+                                  jpeg_progressive_pixel_stats; RGB:
+                                  jpeg_color/_420/_422_pixel_stats
+TIFF       ``_tiff``              tiff_pixel_stats, tiff_lzw_stats,
+                                  tiff_multistrip_stats
+MP4/MKV    ``_video``             video_container_stats
+=========  =====================  ==========================================
+
+At scale the blobs live in their own column (parquet stores them
+contiguously, so metadata-only queries never read them) and every
+shuffle or join key is a scalar. Decoders import numpy lazily, so an
+import builds the schemas and registers the queries and nothing more.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.registry import register
 from ..sources.catalog import load_table
 
-if TYPE_CHECKING:
-    import pandas as pd
+
+def _schema(ddl: list[tuple[str, T.DataType]]) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in ddl])
+
+
+_LONG, _INT, _DOUBLE, _STR = T.LongType(), T.IntegerType(), T.DoubleType(), T.StringType()
+
+PAYLOAD_SCHEMA = _schema([("doc_id", _LONG), ("payload", T.BinaryType())])
+DECODED_SCHEMA = _schema([
+    ("doc_id", _LONG), ("n_bytes", _INT), ("payload_md5", _STR),
+    ("feature", T.ArrayType(_DOUBLE)),
+])
+RESIZED_SCHEMA = _schema([
+    ("doc_id", _LONG), ("n_bytes_in", _INT), ("n_bytes_out", _INT),
+    ("payload_out", T.BinaryType()),
+])
+FRAMES_SCHEMA = _schema([
+    ("doc_id", _LONG), ("frame_no", _INT), ("frame", T.BinaryType()),
+])
+SNIFF_SCHEMA = _schema([
+    ("doc_id", _LONG), ("detected_format", _STR), ("width", _INT),
+    ("height", _INT), ("sample_rate", _INT),
+])
+WAV_STATS_SCHEMA = _schema([
+    ("doc_id", _LONG), ("channel", _INT), ("n_frames", _INT),
+    ("sample_rate", _INT), ("mean_amp", _DOUBLE), ("peak_amp", _INT),
+    ("rms_amp", _DOUBLE),
+])
+ADPCM_STATS_SCHEMA = _schema([
+    ("doc_id", _LONG), ("n_samples", _INT), ("sample_rate", _INT),
+    ("mean_amp", _DOUBLE), ("min_amp", _INT), ("max_amp", _INT),
+    ("end_amp", _INT),
+])
+G711_STATS_SCHEMA = _schema([
+    ("doc_id", _LONG), ("law", _STR), ("n_samples", _INT),
+    ("mean_amp", _DOUBLE), ("min_amp", _INT), ("max_amp", _INT),
+])
+# BMP, PNG and GIF: one row per channel
+CHANNEL_STATS_SCHEMA = _schema([
+    ("doc_id", _LONG), ("channel", _INT), ("width", _INT), ("height", _INT),
+    ("mean_val", _DOUBLE), ("min_val", _INT), ("max_val", _INT),
+    ("corner_val", _INT),
+])
+JPEG_STATS_SCHEMA = _schema([
+    ("doc_id", _LONG), ("width", _INT), ("height", _INT),
+    ("mean_val", _DOUBLE), ("min_val", _INT), ("max_val", _INT),
+    ("corner_val", _INT),
+])
+JPEG_COLOR_STATS_SCHEMA = _schema([
+    ("doc_id", _LONG), ("width", _INT), ("height", _INT),
+    ("mean_r", _DOUBLE), ("mean_g", _DOUBLE), ("mean_b", _DOUBLE),
+    ("corner_r", _INT), ("corner_g", _INT), ("corner_b", _INT),
+])
+TIFF_STATS_SCHEMA = _schema([
+    ("doc_id", _LONG), ("width", _INT), ("height", _INT),
+    ("byte_order", _STR), ("compressed", T.BooleanType()),
+    ("mean_val", _DOUBLE), ("min_val", _INT), ("max_val", _INT),
+    ("corner_val", _INT),
+])
+VIDEO_CONTAINER_SCHEMA = _schema([
+    ("doc_id", _LONG), ("container", _STR), ("codec", _STR),
+    ("width", _INT), ("height", _INT), ("duration_ms", _INT),
+    ("n_keyframes", _INT),
+])
+
+
+# --------------------------------------------------------------------------
+# The Spark driver
+# --------------------------------------------------------------------------
+
+
+def _map_rows(df: DataFrame, cols: tuple[str, ...], rows_of, schema: T.StructType) -> DataFrame:
+    """The module's one Spark stage. ``rows_of(*values)`` maps the
+    ``cols`` values of one input row to any number of output tuples in
+    ``schema`` order; a mapInArrow task builds them into Arrow batches."""
+
+    def batches(it):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(schema)
+        for batch in it:
+            args = zip(*(batch.column(c).to_pylist() for c in cols))
+            rows = [row for a in args for row in rows_of(*a)]
+            columns = list(zip(*rows)) or [()] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+                schema=arrow,
+            )
+
+    return df.select(*cols).mapInArrow(batches, schema)
+
+
+def _synth(payload_of, *args):
+    """A synth stage: each doc_id -> (doc_id, ``payload_of(doc_id, *args)``)."""
+
+    def stage(df: DataFrame) -> DataFrame:
+        return _map_rows(
+            df, ("doc_id",), lambda i: [(i, payload_of(i, *args))], PAYLOAD_SCHEMA
+        )
+
+    stage.__doc__ = payload_of.__doc__
+    return stage
+
+
+def _decoder(rows_of, schema: T.StructType):
+    """A decode stage: each (doc_id, payload) -> ``rows_of``'s stat rows."""
+
+    def stage(df: DataFrame) -> DataFrame:
+        return _map_rows(df, ("doc_id", "payload"), rows_of, schema)
+
+    stage.__doc__ = rows_of.__doc__
+    return stage
+
+
+# --------------------------------------------------------------------------
+# Raw bytes: the plumbing queries
+# --------------------------------------------------------------------------
 
 
 def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -45,670 +177,434 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("payload_md5", T.StringType()),
-        T.StructField("feature", T.ArrayType(T.DoubleType())),
-    ]
-)
+def _text_payloads(documents: DataFrame) -> DataFrame:
+    """The UTF-8 bytes of every non-NULL document text (a NULL payload
+    has nothing to decode; both engines exclude it)."""
+    return with_binary_payload(documents.where(F.col("text").isNotNull()))
 
 
-def decode_and_featurize(df: DataFrame, real_decode: bool = False) -> DataFrame:
-    """Decode binary payloads and extract a feature vector via mapInPandas.
+def _featurize(doc_id, payload):
+    """Byte length, md5 and a deterministic stand-in feature vector (the
+    first byte-distribution moments) of each payload."""
+    if payload is None:
+        return [(doc_id, None, None, None)]
+    import hashlib
 
-    `real_decode=True` would dispatch to an image/audio codec — not
-    available in this container, so it raises; the default path computes a
-    deterministic fake feature (byte histogram moments) so the Spark
-    plumbing (Arrow batches, schema, partitioning) is fully exercised.
-    """
+    import numpy as np
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            if real_decode:
-                # the remaining genuinely-library-bound tier: entropy-coded
-                # video FRAME decode (inter-frame prediction + arithmetic
-                # coding). WAV PCM, BMP, PNG, GIF, and baseline JPEG decode
-                # are REAL elsewhere in this module (numpy / zlib /
-                # pure-Python LZW / Huffman+IDCT), and MP4/MKV CONTAINER
-                # parsing is real too (parse_video_container_stats) — only
-                # the frame codec itself needs a library.
-                raise NotImplementedError(
-                    "entropy-coded video FRAME decode (av) not available in "
-                    "this environment; container parsing is real — see "
-                    "parse_video_container_stats"
-                )
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:  # NULL payload: nothing to decode
-                    rows.append({"doc_id": doc_id, "n_bytes": None,
-                                 "payload_md5": None, "feature": None})
-                    continue
-                buf = bytes(payload)
-                arr = np.frombuffer(buf, dtype=np.uint8)
-                # deterministic fake "embedding": first 4 byte-distribution moments
-                feature = [
-                    float(arr.mean()) if arr.size else 0.0,
-                    float(arr.std()) if arr.size else 0.0,
-                    float(arr.min()) if arr.size else 0.0,
-                    float(arr.max()) if arr.size else 0.0,
-                ]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_bytes": len(buf),
-                        "payload_md5": hashlib.md5(buf).hexdigest(),
-                        "feature": feature,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
-
-    return df.mapInPandas(batches, DECODED_SCHEMA)
+    arr = np.frombuffer(payload, dtype=np.uint8)
+    feature = (
+        [float(arr.mean()), float(arr.std()), float(arr.min()), float(arr.max())]
+        if arr.size else [0.0] * 4
+    )
+    return [(doc_id, len(payload), hashlib.md5(payload).hexdigest(), feature)]
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes_in", T.IntegerType()),
-        T.StructField("n_bytes_out", T.IntegerType()),
-        T.StructField("payload_out", T.BinaryType()),
-    ]
-)
+decode_and_featurize = _decoder(_featurize, DECODED_SCHEMA)
 
 
 def resize_payloads(df: DataFrame, target_bytes: int = 256) -> DataFrame:
     """'Resize' stand-in for image thumbnailing: deterministic byte
-    truncation via mapInPandas. With a codec present, the body would decode,
-    resample, and re-encode — the Spark contract (binary in, binary out,
-    Arrow batches, schema) is exactly this."""
+    truncation (binary in, binary out)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def resize(doc_id, payload):
+        if payload is None:
+            return [(doc_id, None, None, None)]
+        n = len(payload)
+        return [(doc_id, n, min(n, target_bytes), payload[:target_bytes])]
 
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:  # NULL payload: nothing to resize
-                    out.append({"doc_id": doc_id, "n_bytes_in": None,
-                                "n_bytes_out": None, "payload_out": None})
-                    continue
-                buf = bytes(payload)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_bytes_in": len(buf),
-                        "n_bytes_out": min(len(buf), target_bytes),
-                        "payload_out": buf[:target_bytes],
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in RESIZED_SCHEMA.fields])
-
-    return df.mapInPandas(batches, RESIZED_SCHEMA)
-
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
+    return _map_rows(df, ("doc_id", "payload"), resize, RESIZED_SCHEMA)
 
 
 def sample_frames(df: DataFrame, frame_size: int = 64, stride: int = 4) -> DataFrame:
-    """Frame sampling stand-in for video: emit every stride-th frame_size
-    chunk of the payload as its own row (1 input row -> N output rows — the
-    mapInPandas fan-out shape a real frame extractor uses)."""
+    """Frame sampling stand-in for video: every stride-th frame_size chunk
+    of the payload becomes its own row (the 1 -> N fan-out of a frame
+    extractor); a NULL payload has no frames."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def frames(doc_id, payload):
+        if payload is None:
+            return []
+        n_frames = max(1, len(payload) // frame_size)
+        return [
+            (doc_id, i, payload[i * frame_size : (i + 1) * frame_size])
+            for i in range(0, n_frames, stride)
+        ]
 
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:  # NULL payload: no frames
-                    continue
-                buf = bytes(payload)
-                n_frames = max(1, len(buf) // frame_size)
-                for i in range(0, n_frames, stride):
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_no": i,
-                            "frame": buf[i * frame_size : (i + 1) * frame_size],
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in FRAMES_SCHEMA.fields])
-
-    return df.mapInPandas(batches, FRAMES_SCHEMA)
-
-
-@register(
-    "multimodal_resize_stats",
-    oracle=f"""
-        SELECT doc_id,
-               octet_length(encode(text)) AS n_bytes_in,
-               least(octet_length(encode(text)), 256) AS n_bytes_out
-        FROM documents WHERE text IS NOT NULL
-    """,
-    tags=("multimodal",),
-)
-def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize pipeline metadata: input/output byte sizes through the
-    mapInPandas resize stage (payload itself checked in unit tests)."""
-    # NULL text -> NULL payload: nothing to decode; excluded on both
-    # engines (the kernels previously crashed on bytes(None))
-    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    resized = resize_payloads(with_binary_payload(d), target_bytes=256)
-    return resized.select("doc_id", "n_bytes_in", "n_bytes_out")
-
-
-@register(
-    "multimodal_frame_counts",
-    oracle="""
-        SELECT doc_id,
-               CAST(ceil(greatest(octet_length(encode(text)) // 64, 1) / 4.0) AS BIGINT)
-                   AS n_sampled_frames
-        FROM documents WHERE text IS NOT NULL
-    """,
-    tags=("multimodal",),
-)
-def multimodal_frame_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling pipeline: frames per document after stride-4 sampling
-    of 64-byte frames (the oracle recomputes the count arithmetically)."""
-    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    frames = sample_frames(with_binary_payload(d), frame_size=64, stride=4)
-    return frames.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sampled_frames"))
-
-
-@register(
-    "multimodal_payload_stats",
-    oracle="""
-        SELECT doc_id,
-               octet_length(encode(text)) AS n_bytes,
-               md5(text) AS payload_md5
-        FROM documents WHERE text IS NOT NULL
-    """,
-    tags=("multimodal",),
-)
-def multimodal_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column metadata path: byte length + digest of the payload.
-    Computed via the mapInPandas decode pipeline (Arrow-batched), oracle'd
-    against DuckDB's blob functions — proving the binary plumbing returns
-    byte-identical payloads."""
-    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    decoded = decode_and_featurize(with_binary_payload(d))
-    return decoded.select("doc_id", "n_bytes", "payload_md5")
+    return _map_rows(df, ("doc_id", "payload"), frames, FRAMES_SCHEMA)
 
 
 # --------------------------------------------------------------------------
-# Container-header sniffing — REAL decode-free metadata extraction
+# Container headers: magic-byte sniffing, no pixel or sample access
 # --------------------------------------------------------------------------
-SNIFF_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("detected_format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-    ]
-)
 
 
-def synth_container_payload(df: DataFrame) -> DataFrame:
-    """Deterministic VALID container headers per doc (fixture synthesis in
-    lieu of real media files): doc_id % 4 selects PNG / JPEG / GIF / WAV;
-    dimensions and sample rate derive arithmetically from doc_id, so an
-    oracle can recompute them without parsing bytes."""
+def _container_payload(i: int) -> bytes:
+    """Valid container headers only: doc_id % 4 selects PNG / JPEG / GIF
+    / WAV; dimensions and sample rate derive from doc_id."""
+    import struct
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        out_cols = ["doc_id", "payload"]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 16 + i % 101, 16 + i % 53
-                sr = 8000 + (i % 5) * 8000
-                kind = i % 4
-                if kind == 0:  # PNG: signature + IHDR chunk
-                    buf = (
-                        b"\x89PNG\r\n\x1a\n"
-                        + struct.pack(">I", 13)
-                        + b"IHDR"
-                        + struct.pack(">II", w, h)
-                        + b"\x08\x02\x00\x00\x00"
-                    )
-                elif kind == 1:  # JPEG: SOI + SOF0 (precision, height, width)
-                    buf = (
-                        b"\xff\xd8"
-                        + b"\xff\xc0"
-                        + struct.pack(">H", 17)
-                        + b"\x08"
-                        + struct.pack(">HH", h, w)
-                    )
-                elif kind == 2:  # GIF89a: logical screen w/h little-endian
-                    buf = b"GIF89a" + struct.pack("<HH", w, h)
-                else:  # WAV: RIFF/WAVE fmt chunk with sample rate
-                    buf = (
-                        b"RIFF"
-                        + struct.pack("<I", 36)
-                        + b"WAVEfmt "
-                        + struct.pack("<IHH", 16, 1, 1)
-                        + struct.pack("<I", sr)
-                    )
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-def sniff_container_headers(df: DataFrame) -> DataFrame:
-    """REAL (not stubbed) multimodal metadata extraction: detect the
-    container format from magic bytes and parse dimensions / sample rate
-    out of the raw header — PNG IHDR (big-endian), JPEG SOF0 scan, GIF
-    logical screen descriptor (little-endian), WAV fmt chunk. This is the
-    decode-free first pass every 100 TB media ingest runs (no codec
-    needed — codecs only enter at pixel/sample access, which stays behind
-    the documented stub). Arrow-batched mapInPandas; blobs never shuffle.
-    """
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        def sniff(buf: bytes):
-            if buf[:8] == b"\x89PNG\r\n\x1a\n" and buf[12:16] == b"IHDR":
-                w, h = struct.unpack(">II", buf[16:24])
-                return "png", w, h, None
-            if buf[:2] == b"\xff\xd8":
-                j = 2
-                while j + 9 <= len(buf):
-                    if buf[j] == 0xFF and buf[j + 1] in (0xC0, 0xC2):
-                        h, w = struct.unpack(">HH", buf[j + 5 : j + 9])
-                        return "jpeg", w, h, None
-                    j += 2 + (struct.unpack(">H", buf[j + 2 : j + 4])[0] if buf[j] == 0xFF else 0)
-                return "jpeg", None, None, None
-            if buf[:6] in (b"GIF87a", b"GIF89a"):
-                w, h = struct.unpack("<HH", buf[6:10])
-                return "gif", w, h, None
-            if buf[:4] == b"RIFF" and buf[8:12] == b"WAVE":
-                (sr,) = struct.unpack("<I", buf[24:28])
-                return "wav", None, None, sr
-            return "unknown", None, None, None
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fmt, w, h, sr = sniff(bytes(payload))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "detected_format": fmt,
-                        "width": w,
-                        "height": h,
-                        "sample_rate": sr,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in SNIFF_SCHEMA.fields])
-
-    return df.mapInPandas(batches, SNIFF_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# WAV PCM decode — REAL sample decode (no codec library needed)
-# --------------------------------------------------------------------------
-WAV_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("channel", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("mean_amp", T.DoubleType()),
-        T.StructField("peak_amp", T.IntegerType()),
-        T.StructField("rms_amp", T.DoubleType()),
-    ]
-)
-
-
-def synth_wav_pcm_payload(df: DataFrame) -> DataFrame:
-    """Synthesize COMPLETE, spec-valid 16-bit PCM WAV files per doc (RIFF
-    header + fmt chunk + interleaved data chunk). Channel count, frame
-    count, sample rate, and every sample amplitude derive arithmetically
-    from doc_id — amp(k, c) = ((doc_id*7919 + k*31 + c*17) % 2003) - 1001
-    — so a SQL oracle can recompute the decoded statistics without ever
-    parsing bytes. The WAV container itself is real: a standard decoder
-    would read these files."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                n_ch = 1 + i % 2
-                n_frames = 50 + i % 17
-                sr = 8000 + (i % 5) * 8000
-                k = np.arange(n_frames, dtype=np.int64)[:, None]
-                c = np.arange(n_ch, dtype=np.int64)[None, :]
-                amps = ((i * 7919 + k * 31 + c * 17) % 2003) - 1001
-                data = amps.astype("<i2").tobytes()  # interleaved frames
-                block_align = n_ch * 2
-                fmt = struct.pack("<HHIIHH", 1, n_ch, sr, sr * block_align, block_align, 16)
-                buf = (
-                    b"RIFF"
-                    + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-                    + b"WAVE"
-                    + b"fmt "
-                    + struct.pack("<I", len(fmt))
-                    + fmt
-                    + b"data"
-                    + struct.pack("<I", len(data))
-                    + data
-                )
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-def decode_wav_pcm_stats(df: DataFrame) -> DataFrame:
-    """REAL audio decode — not a stub: walk the RIFF chunk list, parse the
-    fmt chunk (PCM tag, channels, rate, bit depth), slice the data chunk
-    into an interleaved int16 numpy matrix, and reduce per-channel
-    mean / peak(|amp|) / RMS. This is the pixel/sample-access tier the
-    earlier rounds gated behind NotImplementedError; uncompressed PCM
-    needs only numpy, so here the gate lifts. Arrow-batched mapInPandas;
-    payload bytes stay inside the map stage (stats are the only shuffled
-    columns). At 100 TB the same kernel shape handles any fixed-rate
-    uncompressed format; compressed codecs slot in behind the identical
-    (binary in, stats out) contract."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        def decode(buf: bytes):
-            if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            pos, fmt, data = 12, None, None
-            while pos + 8 <= len(buf):
-                cid, size = buf[pos : pos + 4], struct.unpack("<I", buf[pos + 4 : pos + 8])[0]
-                body = buf[pos + 8 : pos + 8 + size]
-                if cid == b"fmt ":
-                    fmt = struct.unpack("<HHIIHH", body[:16])
-                elif cid == b"data":
-                    data = body
-                pos += 8 + size + (size & 1)  # chunks are word-aligned
-            if fmt is None or data is None:
-                raise ValueError("missing fmt/data chunk")
-            audio_fmt, n_ch, sr, _, _, bits = fmt
-            if audio_fmt != 1 or bits != 16:
-                raise ValueError(f"unsupported encoding: fmt={audio_fmt} bits={bits}")
-            return np.frombuffer(data, dtype="<i2").reshape(-1, n_ch), sr
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples, sr = decode(bytes(payload))
-                n_frames = samples.shape[0]
-                for ch in range(samples.shape[1]):
-                    col = samples[:, ch].astype(np.float64)
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "channel": ch,
-                            "n_frames": n_frames,
-                            "sample_rate": sr,
-                            "mean_amp": round(float(col.sum() / n_frames), 6),
-                            "peak_amp": int(np.abs(col).max()),
-                            "rms_amp": round(
-                                float(np.sqrt((col * col).sum() / n_frames)), 6
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in WAV_STATS_SCHEMA.fields])
-
-    return df.mapInPandas(batches, WAV_STATS_SCHEMA)
-
-
-@register(
-    "multimodal_wav_pcm_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id,
-                   1 + doc_id % 2 AS n_channels,
-                   50 + doc_id % 17 AS n_frames,
-                   8000 + (doc_id % 5) * 8000 AS sample_rate
-            FROM documents
-        ),
-        frames AS (
-            SELECT doc_id, n_channels, n_frames, sample_rate,
-                   UNNEST(range(0, n_frames)) AS k
-            FROM params
-        ),
-        samples AS (
-            SELECT doc_id, n_frames, sample_rate, k,
-                   UNNEST(range(0, n_channels)) AS channel
-            FROM frames
-        ),
-        amps AS (
-            SELECT doc_id, n_frames, sample_rate, channel,
-                   ((doc_id * 7919 + k * 31 + channel * 17) % 2003) - 1001 AS amp
-            FROM samples
+    w, h = 16 + i % 101, 16 + i % 53
+    sr = 8000 + (i % 5) * 8000
+    kind = i % 4
+    if kind == 0:  # PNG: signature + IHDR chunk
+        return (
+            _PNG_SIG + struct.pack(">I", 13) + b"IHDR"
+            + struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
         )
-        SELECT doc_id,
-               CAST(channel AS INT) AS channel,
-               CAST(n_frames AS INT) AS n_frames,
-               CAST(sample_rate AS INT) AS sample_rate,
-               round(avg(amp), 6) AS mean_amp,
-               CAST(max(abs(amp)) AS INT) AS peak_amp,
-               round(sqrt(avg(CAST(amp * amp AS DOUBLE))), 6) AS rms_amp
-        FROM amps
-        GROUP BY doc_id, channel, n_frames, sample_rate
-    """,
-    tags=("multimodal", "audio"),
-)
-def multimodal_wav_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-channel PCM sample statistics (mean / peak / RMS amplitude)
-    decoded from REAL WAV bytes. The payloads are complete spec-valid
-    16-bit PCM WAV files whose samples derive arithmetically from doc_id;
-    the Spark side genuinely parses the RIFF container and slices the
-    interleaved samples with numpy, while the oracle recomputes the same
-    statistics from the generating formula — a single mis-parsed header
-    field, endianness slip, or channel de-interleave bug fails the hash
-    gate. (Round-4 graduation of the decode tier the multimodal suite
-    previously stubbed; see decode_and_featurize.)"""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_wav_pcm_stats(synth_wav_pcm_payload(d))
-
-
-@register(
-    "multimodal_header_sniff",
-    oracle="""
-        SELECT doc_id,
-               CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-                               WHEN 2 THEN 'gif' ELSE 'wav' END AS detected_format,
-               CASE WHEN doc_id % 4 IN (0, 1, 2)
-                    THEN CAST(16 + doc_id % 101 AS INT) END AS width,
-               CASE WHEN doc_id % 4 IN (0, 1, 2)
-                    THEN CAST(16 + doc_id % 53 AS INT) END AS height,
-               CASE WHEN doc_id % 4 = 3
-                    THEN CAST(8000 + (doc_id % 5) * 8000 AS INT) END AS sample_rate
-        FROM documents
-    """,
-    tags=("multimodal",),
-)
-def multimodal_header_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Format sniffing + header parsing over binary payloads. The payloads
-    are synthesized VALID container headers (doc_id-derived dims); the
-    sniffer genuinely parses the bytes (magic dispatch, endian-correct
-    struct reads, JPEG marker scan) and the oracle recomputes the expected
-    metadata arithmetically — if the parser misreads a single header field
-    the hash gate fails."""
-    d = load_table(spark, sf_dir, "documents")
-    return sniff_container_headers(synth_container_payload(d))
-
-
-# --------------------------------------------------------------------------
-# Real image decode: uncompressed 24-bit BMP (numpy-only, no codec library)
-# --------------------------------------------------------------------------
-
-BMP_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("channel", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_val", T.DoubleType()),
-        T.StructField("min_val", T.IntegerType()),
-        T.StructField("max_val", T.IntegerType()),
-        T.StructField("corner_val", T.IntegerType()),
-    ]
-)
-
-
-def synth_bmp_payload(df: DataFrame) -> DataFrame:
-    """Synthesize complete spec-valid 24-bit BMP files (BITMAPFILEHEADER +
-    BITMAPINFOHEADER + BGR pixel array) whose pixel values derive
-    arithmetically from doc_id: px(x, y, c) = (doc_id*131 + y*37 + x*11 +
-    c*7) % 256 with y counted from the image TOP and c in (0=B, 1=G, 2=R).
-    The encoding keeps the two details a fake decoder would skip: rows are
-    stored BOTTOM-UP (positive biHeight) and each row is zero-padded to a
-    4-byte boundary (width 3..6 exercises pad 3/0/1/2)."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 3 + i % 4, 2 + i % 3
-                y = np.arange(h, dtype=np.int64)[:, None, None]
-                x = np.arange(w, dtype=np.int64)[None, :, None]
-                c = np.arange(3, dtype=np.int64)[None, None, :]
-                px = ((i * 131 + y * 37 + x * 11 + c * 7) % 256).astype(np.uint8)
-                stride = (3 * w + 3) // 4 * 4
-                raster = np.zeros((h, stride), dtype=np.uint8)
-                # bottom-up row order: image row y lands at raster row h-1-y
-                raster[:, : 3 * w] = px[::-1].reshape(h, 3 * w)
-                data = raster.tobytes()
-                info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
-                file_hdr = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(data), 0, 0, 14 + 40)
-                rows.append({"doc_id": doc_id, "payload": file_hdr + info + data})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    if kind == 1:  # JPEG: SOI + SOF0 (precision, height, width)
+        return (
+            b"\xff\xd8\xff\xc0" + struct.pack(">H", 17) + b"\x08"
+            + struct.pack(">HH", h, w)
+        )
+    if kind == 2:  # GIF89a: logical screen w/h little-endian
+        return b"GIF89a" + struct.pack("<HH", w, h)
+    return (  # WAV: RIFF/WAVE fmt chunk with sample rate
+        b"RIFF" + struct.pack("<I", 36) + b"WAVEfmt "
+        + struct.pack("<IHH", 16, 1, 1) + struct.pack("<I", sr)
     )
-    return df.select("doc_id").mapInPandas(batches, schema)
 
 
-def decode_bmp_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL image decode — parse the BMP file header (magic, pixel-array
-    offset), the BITMAPINFOHEADER (dims, planes, 24 bpp, BI_RGB), slice the
-    padded bottom-up raster into an (h, w, 3) BGR numpy cube, and reduce
-    per-channel mean/min/max plus the image-top-left corner value. The
-    corner value is position-sensitive on purpose: a decoder that forgets
-    the bottom-up row flip or the row padding produces the right means but
-    the wrong corner, and the oracle hash gate catches it."""
+def _sniff(doc_id, payload):
+    """Format from magic bytes, then width/height or sample rate from the
+    raw header: PNG IHDR (big-endian), a JPEG SOF0/SOF2 marker scan, the
+    GIF logical screen descriptor (little-endian), the WAV fmt chunk."""
+    import struct
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    buf = payload
+    fmt, w, h, sr = "unknown", None, None, None
+    if buf[:8] == _PNG_SIG and buf[12:16] == b"IHDR":
+        fmt, (w, h) = "png", struct.unpack(">II", buf[16:24])
+    elif buf[:2] == b"\xff\xd8":
+        fmt, j = "jpeg", 2
+        while j + 9 <= len(buf):
+            if buf[j] == 0xFF and buf[j + 1] in (0xC0, 0xC2):
+                h, w = struct.unpack(">HH", buf[j + 5 : j + 9])
+                break
+            j += 2 + (struct.unpack(">H", buf[j + 2 : j + 4])[0] if buf[j] == 0xFF else 0)
+    elif buf[:6] in (b"GIF87a", b"GIF89a"):
+        fmt, (w, h) = "gif", struct.unpack("<HH", buf[6:10])
+    elif buf[:4] == b"RIFF" and buf[8:12] == b"WAVE":
+        fmt, (sr,) = "wav", struct.unpack("<I", buf[24:28])
+    return [(doc_id, fmt, w, h, sr)]
 
-        import numpy as np
-        import pandas as pd
 
-        def decode(buf: bytes):
-            if buf[:2] != b"BM":
-                raise ValueError("not a BMP payload")
-            offset = struct.unpack_from("<I", buf, 10)[0]
-            hdr_size, w, h, planes, bpp, comp = struct.unpack_from("<IiiHHI", buf, 14)
-            if hdr_size != 40 or planes != 1 or bpp != 24 or comp != 0:
-                raise ValueError(f"unsupported BMP variant: {hdr_size}/{planes}/{bpp}/{comp}")
-            stride = (3 * w + 3) // 4 * 4
-            raster = np.frombuffer(buf, dtype=np.uint8, count=abs(h) * stride, offset=offset)
-            rows_ = raster.reshape(abs(h), stride)[:, : 3 * w]
-            cube = rows_.reshape(abs(h), w, 3)
-            if h > 0:  # positive height => stored bottom-up; flip to image order
-                cube = cube[::-1]
-            return cube, w, abs(h)
-
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                cube, w, h = decode(bytes(payload))
-                for ch in range(3):
-                    plane = cube[:, :, ch].astype(np.float64)
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "channel": ch,
-                            "width": w,
-                            "height": h,
-                            "mean_val": round(float(plane.sum() / (w * h)), 6),
-                            "min_val": int(plane.min()),
-                            "max_val": int(plane.max()),
-                            "corner_val": int(cube[0, 0, ch]),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in BMP_STATS_SCHEMA.fields])
-
-    return df.mapInPandas(batches, BMP_STATS_SCHEMA)
+synth_container_payload = _synth(_container_payload)
+sniff_container_headers = _decoder(_sniff, SNIFF_SCHEMA)
 
 
 # --------------------------------------------------------------------------
-# Real PNG decode: stdlib zlib inflate + full per-row unfilter (numpy)
+# WAV: one RIFF walk, three sample codecs (PCM, IMA ADPCM, G.711)
 # --------------------------------------------------------------------------
-#
-# PNG needed no codec library after all: the container is chunks + CRC32,
-# the compression is DEFLATE (stdlib zlib), and the only image-specific
-# machinery is the five scanline filters (None/Sub/Up/Average/Paeth, PNG
-# spec §6) — all implementable with numpy byte arithmetic. This narrows
-# the environment-gated stub in decode_and_featurize to formats whose
-# bitstreams genuinely require codec libraries (JPEG's DCT/Huffman, GIF's
-# LZW variant is doable but out of scope).
 
-PNG_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("channel", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_val", T.DoubleType()),
-        T.StructField("min_val", T.IntegerType()),
-        T.StructField("max_val", T.IntegerType()),
-        T.StructField("corner_val", T.IntegerType()),
-    ]
-)
+
+def _riff_wave(fmt: bytes, data: bytes) -> bytes:
+    import struct
+
+    return (
+        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
+        + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+
+
+def _riff(buf: bytes) -> tuple[tuple, bytes, bytes]:
+    """RIFF/WAVE chunk walk (word-aligned chunks, unknown ones skipped)
+    -> (the fmt chunk's first six fields, the whole fmt chunk, data)."""
+    import struct
+
+    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    pos, fmt, data = 12, None, None
+    while pos + 8 <= len(buf):
+        cid, (size,) = buf[pos : pos + 4], struct.unpack_from("<I", buf, pos + 4)
+        body = buf[pos + 8 : pos + 8 + size]
+        if cid == b"fmt ":
+            fmt = body
+        elif cid == b"data":
+            data = body
+        pos += 8 + size + (size & 1)
+    if fmt is None or data is None:
+        raise ValueError("missing fmt/data chunk")
+    return struct.unpack("<HHIIHH", fmt[:16]), fmt, data
+
+
+def _pcm_payload(i: int) -> bytes:
+    """Complete 16-bit PCM WAV files: channels 1 + doc_id % 2, frames
+    50 + doc_id % 17, rate 8000 + (doc_id % 5)*8000 and interleaved
+    samples amp(k, c) = ((doc_id*7919 + k*31 + c*17) % 2003) - 1001."""
+    import struct
+
+    import numpy as np
+
+    n_ch, n_frames, sr = 1 + i % 2, 50 + i % 17, 8000 + (i % 5) * 8000
+    k = np.arange(n_frames, dtype=np.int64)[:, None]
+    c = np.arange(n_ch, dtype=np.int64)[None, :]
+    amps = ((i * 7919 + k * 31 + c * 17) % 2003) - 1001
+    block_align = n_ch * 2
+    fmt = struct.pack("<HHIIHH", 1, n_ch, sr, sr * block_align, block_align, 16)
+    return _riff_wave(fmt, amps.astype("<i2").tobytes())
+
+
+def _pcm(buf: bytes):
+    """16-bit PCM WAV -> ((frames, channels) int16 samples, sample rate)."""
+    import numpy as np
+
+    (tag, n_ch, sr, _, _, bits), _, data = _riff(buf)
+    if tag != 1 or bits != 16:
+        raise ValueError(f"unsupported encoding: fmt={tag} bits={bits}")
+    return np.frombuffer(data, dtype="<i2").reshape(-1, n_ch), sr
+
+
+def _pcm_stats(doc_id, payload):
+    """Per-channel mean, peak |amp| and RMS of a PCM WAV's samples."""
+    import numpy as np
+
+    samples, sr = _pcm(payload)
+    n = samples.shape[0]
+    rows = []
+    for ch in range(samples.shape[1]):
+        col = samples[:, ch].astype(np.float64)
+        rows.append((
+            doc_id, ch, n, sr, round(float(col.sum() / n), 6),
+            int(np.abs(col).max()), round(float(np.sqrt((col * col).sum() / n)), 6),
+        ))
+    return rows
+
+
+synth_wav_pcm_payload = _synth(_pcm_payload)
+decode_wav_pcm_stats = _decoder(_pcm_stats, WAV_STATS_SCHEMA)
+
+# IMA/DVI ADPCM (IMA Digital Audio Interchange Format, 1992; the tables
+# RFC 3551 carries)
+_IMA_STEPS = [
+    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
+    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
+    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
+    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
+    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
+    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
+    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
+]
+_IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8]
+
+
+def _adpcm_payload(i: int) -> bytes:
+    """Complete IMA ADPCM WAV files (tag 0x11, mono, one block): seed
+    predictor p0 = ((doc_id*7919) % 2003) - 1001 and step index
+    idx0 = doc_id % 89 in the block header, then 64 + 8*(doc_id % 3)
+    nibbles nibble(k) = (doc_id*13 + k*7) % 16, rate
+    8000 + (doc_id % 4)*4000 — the oracle replays the decode in SQL."""
+    import struct
+
+    n_nib = 64 + 8 * (i % 3)
+    p0, idx0, sr = ((i * 7919) % 2003) - 1001, i % 89, 8000 + (i % 4) * 4000
+    nibs = [(i * 13 + k * 7) % 16 for k in range(n_nib)]
+    body = bytearray(struct.pack("<hBB", p0, idx0, 0))
+    for j in range(0, n_nib, 2):
+        body.append(nibs[j] | (nibs[j + 1] << 4))
+    block_align = len(body)
+    spb = 1 + n_nib  # header sample + one per nibble
+    fmt = struct.pack(
+        "<HHIIHHHH", 0x11, 1, sr, (sr * block_align) // spb, block_align, 4, 2, spb,
+    )
+    return _riff_wave(fmt, bytes(body))
+
+
+def _adpcm(buf: bytes):
+    """IMA ADPCM WAV (mono or stereo) -> (int64 samples, channel after
+    channel, sample rate). Each blockAlign block opens with one 4-byte
+    header per channel whose predictor is that channel's next sample and
+    re-seeds its state; stereo data then interleaves 4-byte chunks per
+    channel. Nibbles run low first through the spec state machine:
+    step lookup, magnitude from three bits, sign bit, predictor clamp to
+    int16, index clamp to [0, 88]."""
+    import struct
+
+    import numpy as np
+
+    (tag, n_ch, sr, _, block_align, bits), _, data = _riff(buf)
+    if tag != 0x11 or bits != 4 or n_ch not in (1, 2):
+        raise ValueError(f"unsupported encoding: fmt={tag:#x} bits={bits} ch={n_ch}")
+    chans: list[list[int]] = [[] for _ in range(n_ch)]
+    for b0 in range(0, len(data), block_align):
+        block = data[b0 : b0 + block_align]
+        state = [list(struct.unpack("<hBB", block[4 * c : 4 * c + 4])[:2]) for c in range(n_ch)]
+        for c in range(n_ch):
+            chans[c].append(state[c][0])
+        body = block[4 * n_ch :]
+        for j0 in range(0, len(body), 4 * n_ch):
+            for c in range(n_ch):
+                for byte in body[j0 + 4 * c : j0 + 4 * (c + 1)]:
+                    for delta in (byte & 0x0F, byte >> 4):
+                        pred, idx = state[c]
+                        step = _IMA_STEPS[idx]
+                        diff = step >> 3
+                        if delta & 1:
+                            diff += step >> 2
+                        if delta & 2:
+                            diff += step >> 1
+                        if delta & 4:
+                            diff += step
+                        pred = max(-32768, min(32767, pred - diff if delta & 8 else pred + diff))
+                        state[c] = [pred, max(0, min(88, idx + _IMA_INDEX[delta & 7]))]
+                        chans[c].append(pred)
+    return np.asarray([s for ch in chans for s in ch], dtype=np.int64), sr
+
+
+def _adpcm_stats(doc_id, payload):
+    """Sample count, mean, min, max and last sample of an ADPCM WAV."""
+    samples, sr = _adpcm(payload)
+    n = samples.shape[0]
+    return [(
+        doc_id, n, sr, round(float(samples.sum() / n), 6), int(samples.min()),
+        int(samples.max()), int(samples[-1]),
+    )]
+
+
+synth_wav_adpcm_payload = _synth(_adpcm_payload)
+decode_wav_adpcm_stats = _decoder(_adpcm_stats, ADPCM_STATS_SCHEMA)
+
+
+def _mulaw_expand(u: int) -> int:
+    """ITU G.711 mu-law byte -> linear PCM (the 0x84-bias segment form)."""
+    u = ~u & 0xFF
+    sign = u & 0x80
+    exp = (u >> 4) & 0x07
+    mant = u & 0x0F
+    mag = (((mant << 3) + 0x84) << exp) - 0x84
+    return -mag if sign else mag
+
+
+def _alaw_expand(a: int) -> int:
+    """ITU G.711 A-law byte -> linear PCM (even-bit inversion form)."""
+    a ^= 0x55
+    sign = a & 0x80
+    exp = (a >> 4) & 0x07
+    mant = a & 0x0F
+    if exp == 0:
+        mag = (mant << 4) + 8
+    else:
+        mag = ((mant << 4) + 0x108) << (exp - 1)
+    return -mag if sign else mag
+
+
+def _g711_payload(i: int) -> bytes:
+    """G.711 WAV files: odd doc_ids mu-law (tag 7), even A-law (tag 6),
+    mono 8 kHz, byte(k) = (doc_id*19 + k*11) % 256 for
+    120 + doc_id % 9 samples."""
+    import struct
+
+    tag, n = (7 if i % 2 else 6), 120 + i % 9
+    data = bytes(((i * 19 + k * 11) % 256) for k in range(n))
+    return _riff_wave(struct.pack("<HHIIHH", tag, 1, 8000, 8000, 1, 8), data)
+
+
+def _g711(buf: bytes):
+    """G.711 WAV (tag 6 A-law, 7 mu-law) -> (int64 samples, law)."""
+    import numpy as np
+
+    (tag, n_ch, _, _, _, bits), _, data = _riff(buf)
+    if tag not in (6, 7) or bits != 8 or n_ch != 1:
+        raise ValueError(f"unsupported encoding: fmt={tag} bits={bits} ch={n_ch}")
+    expand = _mulaw_expand if tag == 7 else _alaw_expand
+    return np.asarray([expand(b) for b in data], dtype=np.int64), (
+        "mulaw" if tag == 7 else "alaw"
+    )
+
+
+def _g711_stats(doc_id, payload):
+    """Law, sample count, mean, min and max of a G.711 WAV."""
+    samples, law = _g711(payload)
+    n = samples.shape[0]
+    return [(
+        doc_id, law, n, round(float(samples.sum() / n), 6), int(samples.min()),
+        int(samples.max()),
+    )]
+
+
+synth_wav_g711_payload = _synth(_g711_payload)
+decode_wav_g711_stats = _decoder(_g711_stats, G711_STATS_SCHEMA)
+
+
+# --------------------------------------------------------------------------
+# Raster images: BMP, PNG and GIF share one per-channel stats reader
+# --------------------------------------------------------------------------
+
+
+def _channel_stats(decode):
+    """The stats reader of a decoder returning an (h, w, 3) cube: per
+    channel the mean, min, max and the top-left corner value (position
+    sensitive, so a row-order or offset slip shows even when the means
+    agree)."""
+
+    def rows(doc_id, payload):
+        cube = decode(payload)
+        h, w = cube.shape[:2]
+        return [
+            (
+                doc_id, ch, w, h, round(float(cube[:, :, ch].sum()) / (w * h), 6),
+                int(cube[:, :, ch].min()), int(cube[:, :, ch].max()),
+                int(cube[0, 0, ch]),
+            )
+            for ch in range(3)
+        ]
+
+    rows.__doc__ = decode.__doc__
+    return rows
+
+
+def _bmp_payload(i: int) -> bytes:
+    """Complete 24-bit BMP files, px(x, y, c) = (doc_id*131 + y*37 +
+    x*11 + c*7) % 256 with y from the image top and c in (B, G, R);
+    rows stored bottom-up and zero-padded to 4 bytes (width 3..6
+    exercises pads 3/0/1/2)."""
+    import struct
+
+    import numpy as np
+
+    w, h = 3 + i % 4, 2 + i % 3
+    y = np.arange(h, dtype=np.int64)[:, None, None]
+    x = np.arange(w, dtype=np.int64)[None, :, None]
+    c = np.arange(3, dtype=np.int64)[None, None, :]
+    px = ((i * 131 + y * 37 + x * 11 + c * 7) % 256).astype(np.uint8)
+    stride = (3 * w + 3) // 4 * 4
+    raster = np.zeros((h, stride), dtype=np.uint8)
+    raster[:, : 3 * w] = px[::-1].reshape(h, 3 * w)  # image row y at h-1-y
+    data = raster.tobytes()
+    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
+    return struct.pack("<2sIHHI", b"BM", 14 + 40 + len(data), 0, 0, 14 + 40) + info + data
+
+
+def _bmp(buf: bytes):
+    """24-bit uncompressed BMP -> (h, w, 3) uint8 cube in stored channel
+    order (B, G, R), rows top-down: padded rows sliced, a bottom-up
+    (positive height) raster flipped."""
+    import struct
+
+    import numpy as np
+
+    if buf[:2] != b"BM":
+        raise ValueError("not a BMP payload")
+    offset = struct.unpack_from("<I", buf, 10)[0]
+    hdr_size, w, h, planes, bpp, comp = struct.unpack_from("<IiiHHI", buf, 14)
+    if hdr_size != 40 or planes != 1 or bpp != 24 or comp != 0:
+        raise ValueError(f"unsupported BMP variant: {hdr_size}/{planes}/{bpp}/{comp}")
+    stride = (3 * w + 3) // 4 * 4
+    raster = np.frombuffer(buf, dtype=np.uint8, count=abs(h) * stride, offset=offset)
+    cube = raster.reshape(abs(h), stride)[:, : 3 * w].reshape(abs(h), w, 3)
+    return cube[::-1] if h > 0 else cube
+
+
+synth_bmp_payload = _synth(_bmp_payload)
+decode_bmp_pixel_stats = _decoder(_channel_stats(_bmp), CHANNEL_STATS_SCHEMA)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+# Adam7 pass geometry: (x_start, y_start, x_step, y_step) per pass
+_ADAM7 = (
+    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
+)
 
 
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:
@@ -716,14 +612,12 @@ def _png_chunk(ctype: bytes, body: bytes) -> bytes:
     import zlib
 
     return (
-        struct.pack(">I", len(body))
-        + ctype
-        + body
+        struct.pack(">I", len(body)) + ctype + body
         + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
     )
 
 
-def _paeth(a: "int", b: "int", c: "int") -> int:
+def _paeth(a: int, b: int, c: int) -> int:
     p = a + b - c
     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
     if pa <= pb and pa <= pc:
@@ -731,288 +625,178 @@ def _paeth(a: "int", b: "int", c: "int") -> int:
     return b if pb <= pc else c
 
 
-def synth_png_payload(df: DataFrame) -> DataFrame:
-    """Synthesize complete spec-valid 8-bit RGB PNGs (signature, IHDR,
-    one zlib-compressed IDAT, IEND — all chunk CRCs real) whose pixel
-    values derive arithmetically from doc_id:
-    px(x, y, c) = (doc_id*149 + y*41 + x*13 + c*5) % 256. Each scanline is
-    ENCODED with filter type (doc_id + y) % 5, so a decoder that handles
-    only filter 0 — or unfilters rows out of order — cannot reproduce the
-    pixels: all five PNG filters (None/Sub/Up/Average/Paeth) are exercised
-    in every payload taller than 4 rows and across the corpus always."""
+def _png_filter_row(raw, prior, ftype: int, bpp: int):
+    """PNG spec §6 encoder side: one scanline filtered against the prior
+    row, bytes mod 256."""
+    import numpy as np
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        bpp = 3  # 8-bit RGB
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 3 + i % 5, 2 + i % 4
-                y = np.arange(h, dtype=np.int64)[:, None, None]
-                x = np.arange(w, dtype=np.int64)[None, :, None]
-                c = np.arange(3, dtype=np.int64)[None, None, :]
-                px = ((i * 149 + y * 41 + x * 13 + c * 5) % 256).astype(np.int64)
-                raster = px.reshape(h, w * bpp)
-                # per-row filtering, spec §6: arithmetic mod 256 on bytes
-                out = bytearray()
-                prior = np.zeros(w * bpp, dtype=np.int64)
-                for yy in range(h):
-                    raw = raster[yy]
-                    left = np.concatenate([np.zeros(bpp, dtype=np.int64), raw[:-bpp]])
-                    ul = np.concatenate([np.zeros(bpp, dtype=np.int64), prior[:-bpp]])
-                    ftype = (i + yy) % 5
-                    if ftype == 0:
-                        filt = raw
-                    elif ftype == 1:  # Sub
-                        filt = (raw - left) % 256
-                    elif ftype == 2:  # Up
-                        filt = (raw - prior) % 256
-                    elif ftype == 3:  # Average
-                        filt = (raw - (left + prior) // 2) % 256
-                    else:  # Paeth
-                        pred = np.array(
-                            [_paeth(int(a), int(b), int(cc)) for a, b, cc in zip(left, prior, ul)],
-                            dtype=np.int64,
-                        )
-                        filt = (raw - pred) % 256
-                    out.append(ftype)
-                    out.extend(filt.astype(np.uint8).tobytes())
-                    prior = raw
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
-                buf = (
-                    _PNG_SIG
-                    + _png_chunk(b"IHDR", ihdr)
-                    + _png_chunk(b"IDAT", zlib.compress(bytes(out)))
-                    + _png_chunk(b"IEND", b"")
-                )
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    left = np.concatenate([np.zeros(bpp, dtype=np.int64), raw[:-bpp]])
+    ul = np.concatenate([np.zeros(bpp, dtype=np.int64), prior[:-bpp]])
+    if ftype == 0:
+        return raw
+    if ftype == 1:  # Sub
+        return (raw - left) % 256
+    if ftype == 2:  # Up
+        return (raw - prior) % 256
+    if ftype == 3:  # Average
+        return (raw - (left + prior) // 2) % 256
+    pred = np.array(
+        [_paeth(int(a), int(b), int(cc)) for a, b, cc in zip(left, prior, ul)],
+        dtype=np.int64,
     )
-    return df.select("doc_id").mapInPandas(batches, schema)
+    return (raw - pred) % 256
 
 
-def decode_png_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL compressed-image decode with no codec library: walk the chunk
-    list VERIFYING each CRC32, parse IHDR (8-bit RGB, no interlace),
-    zlib-inflate the concatenated IDAT stream, then undo the per-scanline
-    filter — all five types, sequentially top-to-bottom because Up/Average/
-    Paeth reference the RECONSTRUCTED prior row — into an (h, w, 3) cube,
-    and reduce per-channel mean/min/max plus the top-left corner value.
-    The corner is position-sensitive on purpose (a row-order or filter
-    slip shifts it); the varying per-row filter types in the synthesized
-    payloads mean a decoder stub that skipped unfiltering would fail the
-    oracle hash on essentially every document."""
+def _png_file(ihdr: bytes, scanlines: bytes) -> bytes:
+    import zlib
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        bpp = 3
-
-        def decode(buf: bytes):
-            if buf[: len(_PNG_SIG)] != _PNG_SIG:
-                raise ValueError("not a PNG payload")
-            pos, ihdr, idat = len(_PNG_SIG), None, b""
-            while pos + 12 <= len(buf):
-                (size,) = struct.unpack(">I", buf[pos : pos + 4])
-                ctype = buf[pos + 4 : pos + 8]
-                body = buf[pos + 8 : pos + 8 + size]
-                (crc,) = struct.unpack(">I", buf[pos + 8 + size : pos + 12 + size])
-                if zlib.crc32(ctype + body) & 0xFFFFFFFF != crc:
-                    raise ValueError(f"bad CRC in {ctype!r} chunk")
-                if ctype == b"IHDR":
-                    ihdr = struct.unpack(">IIBBBBB", body)
-                elif ctype == b"IDAT":
-                    idat += body
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + size
-            if ihdr is None or not idat:
-                raise ValueError("missing IHDR/IDAT chunk")
-            w, h, depth, ctype_, comp, filt, interlace = ihdr
-            if depth != 8 or ctype_ != 2 or comp != 0 or filt != 0 or interlace != 0:
-                raise ValueError(
-                    f"unsupported PNG variant: depth={depth} color={ctype_} interlace={interlace}"
-                )
-            raw = zlib.decompress(idat)
-            stride = w * bpp
-            if len(raw) != h * (1 + stride):
-                raise ValueError("IDAT size does not match dimensions")
-            cube = np.zeros((h, stride), dtype=np.int64)
-            prior = np.zeros(stride, dtype=np.int64)
-            for yy in range(h):
-                line = raw[yy * (1 + stride) : (yy + 1) * (1 + stride)]
-                ftype = line[0]
-                filt_b = np.frombuffer(line[1:], dtype=np.uint8).astype(np.int64)
-                if ftype == 0:
-                    recon = filt_b
-                elif ftype == 1:  # Sub: sequential in x (left is reconstructed)
-                    recon = filt_b.copy()
-                    for k in range(bpp, stride):
-                        recon[k] = (recon[k] + recon[k - bpp]) % 256
-                elif ftype == 2:  # Up
-                    recon = (filt_b + prior) % 256
-                elif ftype == 3:  # Average
-                    recon = filt_b.copy()
-                    for k in range(stride):
-                        left = recon[k - bpp] if k >= bpp else 0
-                        recon[k] = (recon[k] + (left + prior[k]) // 2) % 256
-                else:  # Paeth
-                    recon = filt_b.copy()
-                    for k in range(stride):
-                        left = recon[k - bpp] if k >= bpp else 0
-                        ul = prior[k - bpp] if k >= bpp else 0
-                        recon[k] = (recon[k] + _paeth(int(left), int(prior[k]), int(ul))) % 256
-                cube[yy] = recon
-                prior = recon
-            return cube.reshape(h, w, bpp), w, h
-
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                cube, w, h = decode(bytes(payload))
-                for ch in range(3):
-                    plane = cube[:, :, ch].astype(np.float64)
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "channel": ch,
-                            "width": w,
-                            "height": h,
-                            "mean_val": round(float(plane.sum() / (w * h)), 6),
-                            "min_val": int(plane.min()),
-                            "max_val": int(plane.max()),
-                            "corner_val": int(cube[0, 0, ch]),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in PNG_STATS_SCHEMA.fields])
-
-    return df.mapInPandas(batches, PNG_STATS_SCHEMA)
+    return (
+        _PNG_SIG + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(scanlines)) + _png_chunk(b"IEND", b"")
+    )
 
 
-@register(
-    "multimodal_png_pixel_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id, 3 + doc_id % 5 AS w, 2 + doc_id % 4 AS h
-            FROM documents
-        ),
-        ys AS (SELECT doc_id, w, h, UNNEST(range(0, h)) AS y FROM params),
-        xs AS (SELECT doc_id, w, h, y, UNNEST(range(0, w)) AS x FROM ys),
-        cs AS (SELECT doc_id, w, h, y, x, UNNEST(range(0, 3)) AS c FROM xs),
-        vals AS (
-            SELECT doc_id, w, h, c, x, y,
-                   (doc_id * 149 + y * 41 + x * 13 + c * 5) % 256 AS v
-            FROM cs
+def _png_payload(i: int) -> bytes:
+    """Complete 8-bit RGB PNGs, px(x, y, c) = (doc_id*149 + y*41 + x*13 +
+    c*5) % 256, each scanline filtered with type (doc_id + y) % 5 so
+    every filter appears across the corpus."""
+    import struct
+
+    import numpy as np
+
+    w, h = 3 + i % 5, 2 + i % 4
+    y = np.arange(h, dtype=np.int64)[:, None, None]
+    x = np.arange(w, dtype=np.int64)[None, :, None]
+    c = np.arange(3, dtype=np.int64)[None, None, :]
+    raster = ((i * 149 + y * 41 + x * 13 + c * 5) % 256).astype(np.int64).reshape(h, w * 3)
+    out = bytearray()
+    prior = np.zeros(w * 3, dtype=np.int64)
+    for yy in range(h):
+        ftype = (i + yy) % 5
+        out.append(ftype)
+        out.extend(_png_filter_row(raster[yy], prior, ftype, 3).astype(np.uint8).tobytes())
+        prior = raster[yy]
+    return _png_file(struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0), bytes(out))
+
+
+def _png_adam7_payload(i: int) -> bytes:
+    """Complete 16-bit RGB Adam7-interlaced PNGs, sample(x, y, c) =
+    (doc_id*40503 + y*1031 + x*527 + c*257) % 65536 big-endian; 8..12 x
+    8..11 pixels make all seven passes non-empty, and each pass filters
+    its own rows (type (doc_id + pass + row) % 5, 6-byte pixels)."""
+    import struct
+
+    import numpy as np
+
+    w, h = 8 + i % 5, 8 + i % 4
+    y = np.arange(h, dtype=np.int64)[:, None, None]
+    x = np.arange(w, dtype=np.int64)[None, :, None]
+    c = np.arange(3, dtype=np.int64)[None, None, :]
+    px = (i * 40503 + y * 1031 + x * 527 + c * 257) % 65536
+    out = bytearray()
+    for p, (x0, y0, dx, dy) in enumerate(_ADAM7, start=1):
+        sub = px[y0::dy, x0::dx, :]
+        hp, wp = sub.shape[0], sub.shape[1]
+        if hp == 0 or wp == 0:
+            continue
+        raster = np.stack([sub // 256, sub % 256], axis=-1).reshape(hp, wp * 6)
+        prior = np.zeros(wp * 6, dtype=np.int64)
+        for j in range(hp):
+            ftype = (i + p + j) % 5
+            out.append(ftype)
+            out.extend(_png_filter_row(raster[j], prior, ftype, 6).astype(np.uint8).tobytes())
+            prior = raster[j]
+    return _png_file(struct.pack(">IIBBBBB", w, h, 16, 2, 0, 0, 1), bytes(out))
+
+
+def _png(buf: bytes):
+    """RGB PNG -> (h, w, 3) int64 sample cube. Chunk walk verifying every
+    CRC, one inflate of the IDAT stream, then each Adam7 pass in order —
+    a non-interlaced image is the one pass (0, 0, 1, 1) — unfiltered row
+    by row (Up/Average/Paeth read the reconstructed prior row of the same
+    pass; pixels are 3 or 6 bytes by bit depth) and scattered onto its
+    grid. Accepts the two layouts the corpora and oracles cover, 8-bit
+    sequential and 16-bit Adam7; any other refuses."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    if buf[: len(_PNG_SIG)] != _PNG_SIG:
+        raise ValueError("not a PNG payload")
+    pos, ihdr, idat = len(_PNG_SIG), None, b""
+    while pos + 12 <= len(buf):
+        (size,) = struct.unpack_from(">I", buf, pos)
+        ctype, body = buf[pos + 4 : pos + 8], buf[pos + 8 : pos + 8 + size]
+        (crc,) = struct.unpack(">I", buf[pos + 8 + size : pos + 12 + size])
+        if zlib.crc32(ctype + body) & 0xFFFFFFFF != crc:
+            raise ValueError(f"bad CRC in {ctype!r} chunk")
+        if ctype == b"IHDR":
+            ihdr = struct.unpack(">IIBBBBB", body)
+        elif ctype == b"IDAT":
+            idat += body
+        elif ctype == b"IEND":
+            break
+        pos += 12 + size
+    if ihdr is None or not idat:
+        raise ValueError("missing IHDR/IDAT chunk")
+    w, h, depth, color, comp, filt, interlace = ihdr
+    if color != 2 or comp or filt or (depth, interlace) not in ((8, 0), (16, 1)):
+        raise ValueError(
+            f"unsupported PNG variant: depth={depth} color={color} interlace={interlace}"
         )
-        SELECT doc_id,
-               CAST(c AS INT) AS channel,
-               CAST(w AS INT) AS width,
-               CAST(h AS INT) AS height,
-               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
-               CAST(min(v) AS INT) AS min_val,
-               CAST(max(v) AS INT) AS max_val,
-               CAST(max(CASE WHEN x = 0 AND y = 0 THEN v END) AS INT) AS corner_val
-        FROM vals
-        GROUP BY doc_id, c, w, h
-    """,
-    tags=("multimodal", "image"),
-)
-def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-channel pixel statistics decoded from REAL compressed PNG bytes
-    — the stdlib-only proof that the decode tier extends to compressed
-    containers: payloads are complete spec-valid 8-bit RGB PNGs (real
-    CRCs, zlib-deflated IDAT, every scanline filter type exercised), the
-    Spark side genuinely inflates and unfilters them with numpy, and the
-    oracle recomputes the statistics from the generating formula. A CRC
-    slip, a filter mix-up, or an out-of-order unfilter fails the hash
-    gate. (Round-5 narrowing of the codec gate; JPEG stays behind it —
-    DCT/Huffman genuinely needs a codec library.)"""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_png_pixel_stats(synth_png_payload(d))
-
-
-@register(
-    "multimodal_bmp_pixel_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id, 3 + doc_id % 4 AS w, 2 + doc_id % 3 AS h
-            FROM documents
-        ),
-        ys AS (SELECT doc_id, w, h, UNNEST(range(0, h)) AS y FROM params),
-        xs AS (SELECT doc_id, w, h, y, UNNEST(range(0, w)) AS x FROM ys),
-        cs AS (SELECT doc_id, w, h, y, x, UNNEST(range(0, 3)) AS c FROM xs),
-        vals AS (
-            SELECT doc_id, w, h, c, x, y,
-                   (doc_id * 131 + y * 37 + x * 11 + c * 7) % 256 AS v
-            FROM cs
-        )
-        SELECT doc_id,
-               CAST(c AS INT) AS channel,
-               CAST(w AS INT) AS width,
-               CAST(h AS INT) AS height,
-               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
-               CAST(min(v) AS INT) AS min_val,
-               CAST(max(v) AS INT) AS max_val,
-               CAST(max(CASE WHEN x = 0 AND y = 0 THEN v END) AS INT) AS corner_val
-        FROM vals
-        GROUP BY doc_id, c, w, h
-    """,
-    tags=("multimodal", "image"),
-)
-def multimodal_bmp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-channel pixel statistics decoded from REAL BMP bytes (the image
-    sibling of multimodal_wav_pcm_stats): payloads are complete spec-valid
-    uncompressed 24-bit BMPs with bottom-up padded rasters, the Spark side
-    genuinely parses headers and un-flips the pixel cube with numpy, and
-    the oracle recomputes the statistics from the generating formula — a
-    padding slip, row-order slip, or BGR/RGB mixup fails the hash gate."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_bmp_pixel_stats(synth_bmp_payload(d))
-
-
-# --------------------------------------------------------------------------
-# Real GIF decode: full LZW (variable-width codes, clear/EOI, KwKwK) in
-# pure Python/numpy — no codec library
-# --------------------------------------------------------------------------
-#
-# GIF needed no codec library either: the container is fixed-layout
-# descriptors + sub-blocked data, and the compression is the GIF variant
-# of LZW — a dictionary coder with LSB-first variable-width codes (9->12
-# bits for an 8-bit palette), CLEAR/EOI control codes, and the KwKwK
-# corner case. Both directions are implemented here (the synthesizer is a
-# REAL greedy longest-match LZW compressor, not a literal-only shortcut),
-# so the decoder's dictionary growth, width switches, and KwKwK path are
-# all genuinely exercised and hash-gated. The environment-gated stub in
-# decode_and_featurize now covers only JPEG/video (DCT/Huffman —
-# genuinely codec-library territory).
-
-GIF_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("channel", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_val", T.DoubleType()),
-        T.StructField("min_val", T.IntegerType()),
-        T.StructField("max_val", T.IntegerType()),
-        T.StructField("corner_val", T.IntegerType()),
+    nbytes = depth // 8
+    bpp = 3 * nbytes
+    grids = [
+        (x0, y0, dx, dy, -(-(w - x0) // dx), -(-(h - y0) // dy))
+        for x0, y0, dx, dy in (_ADAM7 if interlace else ((0, 0, 1, 1),))
     ]
-)
+    grids = [g for g in grids if g[4] > 0 and g[5] > 0]  # empty passes hold no bytes
+    raw = zlib.decompress(idat)
+    if len(raw) != sum(hp * (1 + wp * bpp) for *_, wp, hp in grids):
+        raise ValueError("IDAT size does not match dimensions")
+    cube = np.zeros((h, w, 3), dtype=np.int64)
+    pos = 0
+    for x0, y0, dx, dy, wp, hp in grids:
+        stride = wp * bpp
+        rows = np.zeros((hp, stride), dtype=np.int64)
+        prior = rows[0]  # zeros: the row above a pass's first row
+        for j in range(hp):
+            ftype = raw[pos]
+            recon = np.frombuffer(raw, np.uint8, stride, pos + 1).astype(np.int64)
+            pos += 1 + stride
+            if ftype == 1:  # Sub: sequential, left is reconstructed
+                for k in range(bpp, stride):
+                    recon[k] = (recon[k] + recon[k - bpp]) % 256
+            elif ftype == 2:  # Up
+                recon = (recon + prior) % 256
+            elif ftype == 3:  # Average
+                for k in range(stride):
+                    left = recon[k - bpp] if k >= bpp else 0
+                    recon[k] = (recon[k] + (left + prior[k]) // 2) % 256
+            elif ftype == 4:  # Paeth
+                for k in range(stride):
+                    left = recon[k - bpp] if k >= bpp else 0
+                    ul = prior[k - bpp] if k >= bpp else 0
+                    recon[k] = (recon[k] + _paeth(int(left), int(prior[k]), int(ul))) % 256
+            elif ftype:
+                raise ValueError(f"bad PNG filter type {ftype}")
+            rows[j] = recon
+            prior = recon
+        samples = rows.reshape(hp, wp, 3, nbytes)
+        vals = samples[..., 0]
+        for b in range(1, nbytes):  # big-endian multi-byte samples
+            vals = vals * 256 + samples[..., b]
+        cube[y0::dy, x0::dx, :] = vals
+    return cube
 
+
+synth_png_payload = _synth(_png_payload)
+synth_png_adam7_payload = _synth(_png_adam7_payload)
+decode_png_pixel_stats = _decoder(_channel_stats(_png), CHANNEL_STATS_SCHEMA)
+
+# GIF: LSB-first variable-width LZW codes (9 -> 12 bits for an 8-bit
+# palette), CLEAR/EOI control codes and the KwKwK case, both directions
 _GIF_MIN_CODE_SIZE = 8  # 256-color palette
 
 
@@ -1104,221 +888,103 @@ def _lzw_decompress(data: bytes, min_code_size: int = _GIF_MIN_CODE_SIZE) -> byt
             if len(table) == (1 << width) and width < 12:
                 width += 1
         prev = entry
-    raise AssertionError("unreachable")
 
 
-def synth_gif_payload(df: DataFrame) -> DataFrame:
-    """Synthesize complete spec-valid GIF89a files (header, logical screen
-    descriptor, 256-entry global color table, a Graphic Control Extension
-    the decoder must skip, image descriptor, REAL LZW-compressed index
-    stream in <=255-byte sub-blocks, trailer). Pixel index
-    idx(x, y) = (doc_id*157 + y*43 + x*17) % 256 and the per-file palette
-    maps index i, channel c -> (i*5 + c*11 + doc_id) % 256, so the decoded
-    channel value is a pure doc_id/x/y/c formula the oracle recomputes."""
+def _gif_payload(i: int) -> bytes:
+    """Complete GIF89a files: a 256-entry palette (index p, channel c ->
+    (p*5 + c*11 + doc_id) % 256), a Graphic Control Extension to skip,
+    and pixel indices idx(x, y) = (doc_id*157 + y*43 + x*17) % 256
+    LZW-compressed into <=255-byte sub-blocks."""
+    import struct
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import numpy as np
 
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 4 + i % 5, 3 + i % 4
-                y = np.arange(h, dtype=np.int64)[:, None]
-                x = np.arange(w, dtype=np.int64)[None, :]
-                idx = ((i * 157 + y * 43 + x * 17) % 256).astype(np.uint8)
-                pal = bytes(
-                    (p * 5 + c * 11 + i) % 256 for p in range(256) for c in range(3)
-                )
-                lzw = _lzw_compress(idx.tobytes())
-                blocks = bytearray()
-                for off in range(0, len(lzw), 255):
-                    chunk = lzw[off : off + 255]
-                    blocks.append(len(chunk))
-                    blocks.extend(chunk)
-                blocks.append(0)  # block terminator
-                buf = (
-                    b"GIF89a"
-                    + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT, 256 entries
-                    + pal
-                    + b"\x21\xf9\x04\x00\x00\x00\x00\x00"  # GCE (skippable)
-                    + b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-                    + bytes([_GIF_MIN_CODE_SIZE])
-                    + bytes(blocks)
-                    + b"\x3b"
-                )
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    w, h = 4 + i % 5, 3 + i % 4
+    y = np.arange(h, dtype=np.int64)[:, None]
+    x = np.arange(w, dtype=np.int64)[None, :]
+    idx = ((i * 157 + y * 43 + x * 17) % 256).astype(np.uint8)
+    pal = bytes((p * 5 + c * 11 + i) % 256 for p in range(256) for c in range(3))
+    lzw = _lzw_compress(idx.tobytes())
+    blocks = bytearray()
+    for off in range(0, len(lzw), 255):
+        chunk = lzw[off : off + 255]
+        blocks.append(len(chunk))
+        blocks.extend(chunk)
+    blocks.append(0)  # block terminator
+    return (
+        b"GIF89a"
+        + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT, 256 entries
+        + pal
+        + b"\x21\xf9\x04\x00\x00\x00\x00\x00"  # GCE (skippable)
+        + b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
+        + bytes([_GIF_MIN_CODE_SIZE])
+        + bytes(blocks)
+        + b"\x3b"
     )
-    return df.select("doc_id").mapInPandas(batches, schema)
 
 
-def decode_gif_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL dictionary-codec image decode with no codec library: parse the
-    GIF header and logical screen descriptor, load the global color table,
-    SKIP extension blocks by their sub-block lengths, parse the image
-    descriptor (no local table / no interlace), concatenate the data
-    sub-blocks, LZW-decompress the index stream (variable-width codes,
-    clear/EOI, KwKwK, width growth), map indices through the palette into
-    an (h, w, 3) RGB cube, and reduce per-channel stats. The corner value
-    is position-sensitive; the palette varies per file — a decoder that
-    guessed a fixed palette, skipped the LZW dictionary (literal-only
-    reads desynchronize at the first multi-symbol match), or mis-timed a
-    width switch fails the oracle hash on essentially every document."""
+def _gif(buf: bytes):
+    """GIF -> (h, w, 3) RGB cube: global color table, extension blocks
+    skipped by their sub-block lengths, one image (no local table, no
+    interlace) whose LZW index stream maps through the palette."""
+    import struct
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import numpy as np
 
-        import numpy as np
-        import pandas as pd
-
-        def decode(buf: bytes):
-            if buf[:6] not in (b"GIF87a", b"GIF89a"):
-                raise ValueError("not a GIF payload")
-            sw, sh, packed, _bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
-            pos = 13
-            if not packed & 0x80:
-                raise ValueError("missing global color table")
-            gct_n = 2 << (packed & 0x07)
-            pal = np.frombuffer(buf, dtype=np.uint8, count=3 * gct_n, offset=pos)
-            pal = pal.reshape(gct_n, 3)
-            pos += 3 * gct_n
-            while True:
-                marker = buf[pos]
-                pos += 1
-                if marker == 0x21:  # extension: label + sub-blocks
-                    pos += 1
-                    while buf[pos]:
-                        pos += 1 + buf[pos]
-                    pos += 1
-                elif marker == 0x2C:
-                    break
-                elif marker == 0x3B:
-                    raise ValueError("trailer before image data")
-                else:
-                    raise ValueError(f"unknown GIF block 0x{marker:02x}")
-            left, top, w, h, ipacked = struct.unpack_from("<HHHHB", buf, pos)
-            pos += 9
-            if ipacked & 0xC0:
-                raise ValueError("local color table / interlace unsupported")
-            min_code = buf[pos]
+    if buf[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF payload")
+    _sw, _sh, packed, _bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
+    pos = 13
+    if not packed & 0x80:
+        raise ValueError("missing global color table")
+    gct_n = 2 << (packed & 0x07)
+    pal = np.frombuffer(buf, dtype=np.uint8, count=3 * gct_n, offset=pos).reshape(gct_n, 3)
+    pos += 3 * gct_n
+    while True:
+        marker = buf[pos]
+        pos += 1
+        if marker == 0x21:  # extension: label + sub-blocks
             pos += 1
-            data = bytearray()
             while buf[pos]:
-                n = buf[pos]
-                data.extend(buf[pos + 1 : pos + 1 + n])
-                pos += 1 + n
-            indices = np.frombuffer(
-                _lzw_decompress(bytes(data), min_code), dtype=np.uint8
-            )
-            if len(indices) != w * h:
-                raise ValueError("decoded index count does not match dimensions")
-            return pal[indices.reshape(h, w)], w, h  # (h, w, 3) RGB cube
-
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                cube, w, h = decode(bytes(payload))
-                for ch in range(3):
-                    plane = cube[:, :, ch].astype(np.float64)
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "channel": ch,
-                            "width": w,
-                            "height": h,
-                            "mean_val": round(float(plane.sum() / (w * h)), 6),
-                            "min_val": int(plane.min()),
-                            "max_val": int(plane.max()),
-                            "corner_val": int(cube[0, 0, ch]),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in GIF_STATS_SCHEMA.fields])
-
-    return df.mapInPandas(batches, GIF_STATS_SCHEMA)
+                pos += 1 + buf[pos]
+            pos += 1
+        elif marker == 0x2C:
+            break
+        elif marker == 0x3B:
+            raise ValueError("trailer before image data")
+        else:
+            raise ValueError(f"unknown GIF block 0x{marker:02x}")
+    _left, _top, w, h, ipacked = struct.unpack_from("<HHHHB", buf, pos)
+    pos += 9
+    if ipacked & 0xC0:
+        raise ValueError("local color table / interlace unsupported")
+    min_code = buf[pos]
+    pos += 1
+    data = bytearray()
+    while buf[pos]:
+        n = buf[pos]
+        data.extend(buf[pos + 1 : pos + 1 + n])
+        pos += 1 + n
+    indices = np.frombuffer(_lzw_decompress(bytes(data), min_code), dtype=np.uint8)
+    if len(indices) != w * h:
+        raise ValueError("decoded index count does not match dimensions")
+    return pal[indices.reshape(h, w)]
 
 
-@register(
-    "multimodal_gif_pixel_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
-            FROM documents
-        ),
-        ys AS (SELECT doc_id, w, h, UNNEST(range(0, h)) AS y FROM params),
-        xs AS (SELECT doc_id, w, h, y, UNNEST(range(0, w)) AS x FROM ys),
-        cs AS (SELECT doc_id, w, h, y, x, UNNEST(range(0, 3)) AS c FROM xs),
-        vals AS (
-            SELECT doc_id, w, h, c, x, y,
-                   (((doc_id * 157 + y * 43 + x * 17) % 256) * 5
-                    + c * 11 + doc_id) % 256 AS v
-            FROM cs
-        )
-        SELECT doc_id,
-               CAST(c AS INT) AS channel,
-               CAST(w AS INT) AS width,
-               CAST(h AS INT) AS height,
-               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
-               CAST(min(v) AS INT) AS min_val,
-               CAST(max(v) AS INT) AS max_val,
-               CAST(max(CASE WHEN x = 0 AND y = 0 THEN v END) AS INT) AS corner_val
-        FROM vals
-        GROUP BY doc_id, c, w, h
-    """,
-    tags=("multimodal", "image"),
-)
-def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-channel pixel statistics decoded from REAL LZW-compressed GIF
-    bytes — the dictionary-codec sibling of multimodal_png_pixel_stats:
-    payloads are complete spec-valid GIF89a files (256-entry per-file
-    palette, skippable extension block, genuinely LZW-compressed index
-    stream), the Spark side decompresses them with a full pure-Python LZW
-    decoder (variable-width codes, clear/EOI, KwKwK, width switches) and
-    maps indices through the palette with numpy, and the oracle recomputes
-    the statistics from the generating formula. The codec gate in
-    decode_and_featurize narrows to JPEG/video — DCT/Huffman genuinely
-    needs a codec library."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_gif_pixel_stats(synth_gif_payload(d))
+synth_gif_payload = _synth(_gif_payload)
+decode_gif_pixel_stats = _decoder(_channel_stats(_gif), CHANNEL_STATS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
-# Real baseline JPEG decode: SOF0 Huffman + dequant + zigzag + IDCT (numpy)
+# JPEG (ITU-T T.81): five encoders, one decoder
 # --------------------------------------------------------------------------
 #
-# The last image format behind the codec gate falls to the same treatment
-# as PNG/GIF: baseline sequential JPEG (ITU-T T.81, SOF0) is markers +
-# canonical Huffman + an 8x8 type-II IDCT, all expressible in numpy. The
-# synthesized payloads are complete spec-valid JFIF-less JPEG streams
-# (SOI/DQT/SOF0/DHT/DHT/SOS/EOI) using the T.81 Annex K example Huffman
-# tables and a UNIT quantization table, with every 8x8 block a constant
-# value derived from doc_id — for constant blocks the DCT has only a DC
-# coefficient and unit quantization makes the round trip bit-exact, so a
-# generating-formula oracle can hash-gate a LOSSY format's decoder. The
-# decoder is a full baseline implementation (marker walk, canonical
-# Huffman table build, byte-stuffed bit reader, DC prediction, RS-coded
-# AC run-lengths, zigzag dequantization, separable float IDCT,
-# level-shift + clamp) — nothing about it knows the payloads are
-# DC-only; the AC path runs on every block via the Huffman-coded EOB.
-# The environment gate in decode_and_featurize now covers video only.
-
-JPEG_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_val", T.DoubleType()),
-        T.StructField("min_val", T.IntegerType()),
-        T.StructField("max_val", T.IntegerType()),
-        T.StructField("corner_val", T.IntegerType()),
-    ]
-)
+# The fixtures use unit quantization and 8x8 blocks that are each one
+# constant value: the DCT of a constant block is its DC coefficient
+# alone, so the lossy round trip is bit-exact and a generating-formula
+# oracle can hash-gate the decoder. The decoder itself never assumes
+# that: every block runs the AC path, and hand-built streams in the
+# tests carry real AC, restart and refinement data.
 
 # T.81 Annex K.3.1 / K.3.2: example luminance Huffman tables (BITS, HUFFVAL)
 _JPEG_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
@@ -1341,6 +1007,32 @@ _JPEG_AC_VALS = [
     0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
 
+# T.81 Tables K.4 / K.6: example CHROMINANCE Huffman tables (BITS, HUFFVAL)
+_JPEG_DC_C_BITS = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
+_JPEG_DC_C_VALS = list(range(12))
+_JPEG_AC_C_BITS = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
+_JPEG_AC_C_VALS = [
+    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12, 0x41,
+    0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
+    0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15, 0x62, 0x72, 0xD1,
+    0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
+    0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44,
+    0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
+    0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74,
+    0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
+    0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A,
+    0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
+    0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
+    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
+    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
+    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
+]
+
+# progressive AC table: the Annex K baseline table has no EOBn symbols
+# (baseline never emits them). Five canonical codes at length 3: EOB0..EOB4.
+_JPEG_PROG_AC_BITS = [0, 0, 5, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+_JPEG_PROG_AC_VALS = [0x00, 0x10, 0x20, 0x30, 0x40]
+
 # T.81 Figure A.6 zigzag: index i of the scan order -> (row, col)
 _JPEG_ZIGZAG = [
     (0, 0), (0, 1), (1, 0), (2, 0), (1, 1), (0, 2), (0, 3), (1, 2),
@@ -1352,6 +1044,13 @@ _JPEG_ZIGZAG = [
     (7, 2), (7, 3), (6, 4), (5, 5), (4, 6), (3, 7), (4, 7), (5, 6),
     (6, 5), (7, 4), (7, 5), (6, 6), (5, 7), (6, 7), (7, 6), (7, 7),
 ]
+
+# libjpeg's fixed-point YCbCr -> RGB constants (jdcolor.c), value * 65536:
+# integer arithmetic the SQL oracle replicates with FLOOR(x / 65536)
+_FIX_R_CR = 91881     # 1.40200
+_FIX_B_CB = 116130    # 1.77200
+_FIX_G_CB = -22554    # -0.34414
+_FIX_G_CR = -46802    # -0.71414
 
 
 def _jpeg_huff_codes(bits, vals):
@@ -1397,2701 +1096,504 @@ class _JpegBitWriter:
         return bytes(self.out)
 
 
-def synth_jpeg_payload(df: DataFrame) -> DataFrame:
-    """Synthesize complete spec-valid baseline JPEGs (SOF0, grayscale,
-    unit quantization, Annex K Huffman tables) whose 8x8 blocks are each
-    a constant value v(bx, by) = (doc_id*37 + bx*59 + by*83) % 256 —
-    dimensions w = 8*(1 + doc_id % 3), h = 8*(1 + doc_id % 2). Constant
-    blocks + unit quantization make the lossy pipeline bit-exact
-    (DC = 8*(v-128) survives quantization; the IDCT of a pure-DC block
-    is constant), so the decoder's output is hash-gated against the
-    generating formula. The entropy stream is REAL: per-block Huffman DC
-    categories with prediction differencing, magnitude bits, AC EOB
-    symbols, and 0xFF byte stuffing."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-        ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-        eob_code, eob_len = ac_codes[0x00]
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                bw, bh = 1 + i % 3, 1 + i % 2
-                w, h = 8 * bw, 8 * bh
-                head = bytearray(b"\xff\xd8")  # SOI
-                head += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
-                head += (
-                    b"\xff\xc0"
-                    + struct.pack(">H", 11)
-                    + bytes([8])
-                    + struct.pack(">HH", h, w)
-                    + bytes([1, 1, 0x11, 0])  # 1 component, 1x1 sampling, q-table 0
-                )
-                head += _jpeg_dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
-                head += _jpeg_dht(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
-                head += b"\xff\xda" + struct.pack(">H", 8) + bytes([1, 1, 0x00, 0, 63, 0])
-                bw_writer = _JpegBitWriter()
-                prev_dc = 0
-                for by in range(bh):  # MCU raster order
-                    for bx in range(bw):
-                        v = (i * 37 + bx * 59 + by * 83) % 256
-                        dc = 8 * (v - 128)
-                        diff = dc - prev_dc
-                        prev_dc = dc
-                        mag = abs(diff)
-                        cat = mag.bit_length()
-                        code, length = dc_codes[cat]
-                        bw_writer.put(code, length)
-                        if cat:
-                            bits_val = diff if diff > 0 else diff + (1 << cat) - 1
-                            bw_writer.put(bits_val, cat)
-                        bw_writer.put(eob_code, eob_len)  # all 63 ACs zero
-                buf = bytes(head) + bw_writer.flush() + b"\xff\xd9"  # EOI
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
+def _jpeg_put_block(wtr: _JpegBitWriter, v: int, prev_dc: int, dc_codes, ac_codes) -> int:
+    """Entropy-code one constant block of value ``v`` (DC difference
+    category + magnitude bits, then EOB); returns its DC for prediction."""
+    dc = 8 * (v - 128)
+    diff = dc - prev_dc
+    cat = abs(diff).bit_length()
+    wtr.put(*dc_codes[cat])
+    if cat:
+        wtr.put(diff if diff > 0 else diff + (1 << cat) - 1, cat)
+    wtr.put(*ac_codes[0x00])  # EOB: all 63 ACs zero
+    return dc
 
 
-def decode_jpeg_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL baseline JPEG decode with no codec library: walk the marker
-    segments (DQT/SOF0/DHT/SOS), build canonical Huffman decoding tables
-    from BITS/HUFFVAL, entropy-decode the byte-stuffed bitstream (DC
-    prediction + magnitude bits, RS-coded AC runs with EOB/ZRL), place
-    coefficients through the zigzag with dequantization, run a separable
-    float64 type-II IDCT per 8x8 block, level-shift, clamp, and reduce
-    mean/min/max + the top-left corner pixel. Grayscale SOF0 only —
-    anything else raises (progressive/chroma variants are where a real
-    codec library earns its keep). The decoder never assumes DC-only
-    data: the AC run-length loop executes for every block."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        # IDCT basis: M[u, x] = c(u)/2 * cos((2x+1) u pi / 16)
-        u = np.arange(8)[:, None]
-        x = np.arange(8)[None, :]
-        M = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
-        M[0, :] *= 1 / np.sqrt(2)
-
-        class BitReader:
-            def __init__(self, data: bytes):
-                self.data = data
-                self.pos = 0
-                self.acc = 0
-                self.nbits = 0
-
-            def bit(self) -> int:
-                if self.nbits == 0:
-                    if self.pos >= len(self.data):
-                        raise ValueError("entropy stream truncated")
-                    b = self.data[self.pos]
-                    self.pos += 1
-                    if b == 0xFF:
-                        if self.pos >= len(self.data) or self.data[self.pos] != 0x00:
-                            raise ValueError("unexpected marker in entropy data")
-                        self.pos += 1  # skip stuffed 0x00
-                    self.acc = b
-                    self.nbits = 8
-                self.nbits -= 1
-                return (self.acc >> self.nbits) & 1
-
-            def bits(self, n: int) -> int:
-                v = 0
-                for _ in range(n):
-                    v = (v << 1) | self.bit()
-                return v
-
-            def restart(self, m: int) -> None:
-                """Consume an RSTm marker at a restart interval: discard
-                the pad bits to the byte boundary, require the expected
-                modulo-8 marker (T.81 F.2.1.3.1 — a wrong index means a
-                lost or reordered segment, fail loudly)."""
-                self.nbits = 0
-                if self.pos + 1 >= len(self.data):
-                    raise ValueError("truncated at restart marker")
-                b0, b1 = self.data[self.pos], self.data[self.pos + 1]
-                if b0 != 0xFF or b1 != 0xD0 + (m % 8):
-                    raise ValueError(
-                        f"expected RST{m % 8} at restart interval, got "
-                        f"{b0:02x}{b1:02x}"
-                    )
-                self.pos += 2
-
-        def build_decoder(bits, vals):
-            """(code, length) -> symbol map for canonical Huffman."""
-            table = {}
-            code, k = 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length - 1]):
-                    table[(length, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return table
-
-        def huff_decode(reader, table):
-            code, length = 0, 0
-            while length <= 16:
-                code = (code << 1) | reader.bit()
-                length += 1
-                sym = table.get((length, code))
-                if sym is not None:
-                    return sym
-            raise ValueError("invalid Huffman code")
-
-        def extend(v: int, t: int) -> int:
-            # T.81 F.2.2.1: magnitude-bits to signed value
-            return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-        def decode(buf: bytes):
-            if buf[:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG payload (no SOI)")
-            pos = 2
-            qtables, dc_tables, ac_tables = {}, {}, {}
-            dims = None
-            comp_spec = None
-            ri = 0  # restart interval in MCUs (DRI; 0 = none)
-            while pos + 4 <= len(buf):
-                if buf[pos] != 0xFF:
-                    raise ValueError("marker sync lost")
-                marker = buf[pos + 1]
-                (seglen,) = struct.unpack(">H", buf[pos + 2 : pos + 4])
-                body = buf[pos + 4 : pos + 2 + seglen]
-                pos += 2 + seglen
-                if marker == 0xDB:  # DQT
-                    while body:
-                        pq, tq = body[0] >> 4, body[0] & 0x0F
-                        if pq != 0:
-                            raise ValueError("16-bit quant tables unsupported")
-                        qtables[tq] = np.frombuffer(
-                            body[1:65], dtype=np.uint8
-                        ).astype(np.int64)
-                        body = body[65:]
-                elif marker == 0xC0:  # SOF0 baseline
-                    prec, hh, ww, ncomp = body[0], *struct.unpack(">HH", body[1:5]), body[5]
-                    if prec != 8 or ncomp != 1:
-                        raise ValueError(
-                            f"unsupported SOF0 variant: precision={prec} ncomp={ncomp}"
-                        )
-                    cid, sampling, tq = body[6], body[7], body[8]
-                    if sampling != 0x11:
-                        raise ValueError("subsampled JPEG unsupported")
-                    dims = (ww, hh)
-                    comp_spec = (cid, tq)
-                elif marker in (0xC1, 0xC2, 0xC3):
-                    raise ValueError("non-baseline JPEG (progressive/extended)")
-                elif marker == 0xDD:
-                    (ri,) = struct.unpack(">H", body[:2])
-                elif marker == 0xC4:  # DHT
-                    while body:
-                        tc, th = body[0] >> 4, body[0] & 0x0F
-                        bits = list(body[1:17])
-                        n = sum(bits)
-                        vals = list(body[17 : 17 + n])
-                        (dc_tables if tc == 0 else ac_tables)[th] = build_decoder(
-                            bits, vals
-                        )
-                        body = body[17 + n :]
-                elif marker == 0xDA:  # SOS — entropy data follows
-                    td, ta = body[2] >> 4, body[2] & 0x0F
-                    entropy_end = buf.rfind(b"\xff\xd9")
-                    if entropy_end < 0:
-                        raise ValueError("missing EOI")
-                    reader = BitReader(buf[pos:entropy_end])
-                    if dims is None or comp_spec is None:
-                        raise ValueError("SOS before SOF0")
-                    w, h = dims
-                    q = qtables[comp_spec[1]]
-                    dct, act = dc_tables[td], ac_tables[ta]
-                    bw_, bh_ = w // 8, h // 8
-                    if w % 8 or h % 8:
-                        raise ValueError("non-multiple-of-8 dims unsupported")
-                    img = np.zeros((h, w), dtype=np.int64)
-                    prev_dc = 0
-                    n_rst = 0
-                    for by in range(bh_):
-                        for bx in range(bw_):
-                            mcu_i = by * bw_ + bx
-                            if ri and mcu_i and mcu_i % ri == 0:
-                                # restart interval (grayscale MCU = one
-                                # block): byte-align, consume RSTm, reset
-                                # the DC predictor
-                                reader.restart(n_rst)
-                                n_rst += 1
-                                prev_dc = 0
-                            zz = np.zeros(64, dtype=np.int64)
-                            t = huff_decode(reader, dct)
-                            diff = extend(reader.bits(t), t) if t else 0
-                            prev_dc += diff
-                            zz[0] = prev_dc * q[0]
-                            k = 1
-                            while k < 64:
-                                rs = huff_decode(reader, act)
-                                r, s = rs >> 4, rs & 0x0F
-                                if s == 0:
-                                    if r == 0:  # EOB
-                                        break
-                                    if r == 15:  # ZRL: 16 zeros
-                                        k += 16
-                                        continue
-                                    raise ValueError("invalid AC symbol")
-                                k += r
-                                if k >= 64:
-                                    raise ValueError("AC coefficient overrun")
-                                zz[k] = extend(reader.bits(s), s) * q[k]
-                                k += 1
-                            coef = np.zeros((8, 8), dtype=np.float64)
-                            for idx, (rr, cc) in enumerate(_JPEG_ZIGZAG):
-                                coef[rr, cc] = zz[idx]
-                            block = M.T @ coef @ M  # separable 2-D IDCT
-                            px = np.clip(np.rint(block + 128), 0, 255).astype(np.int64)
-                            img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = px
-                    return img, w, h
-                # other markers (APPn/COM): skipped by the generic length walk
-            raise ValueError("no SOS segment found")
-
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img, w, h = decode(bytes(payload))
-                plane = img.astype(np.float64)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "mean_val": round(float(plane.sum() / (w * h)), 6),
-                        "min_val": int(plane.min()),
-                        "max_val": int(plane.max()),
-                        "corner_val": int(img[0, 0]),
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in JPEG_STATS_SCHEMA.fields])
-
-    return df.mapInPandas(batches, JPEG_STATS_SCHEMA)
-
-
-@register(
-    "multimodal_jpeg_pixel_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id,
-                   1 + doc_id % 3 AS bw,
-                   1 + doc_id % 2 AS bh
-            FROM documents
-        ),
-        bys AS (SELECT doc_id, bw, bh, UNNEST(range(0, bh)) AS by FROM params),
-        bxs AS (SELECT doc_id, bw, bh, by, UNNEST(range(0, bw)) AS bx FROM bys),
-        vals AS (
-            SELECT doc_id, bw, bh,
-                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS v,
-                   bx, by
-            FROM bxs
-        )
-        SELECT doc_id,
-               CAST(8 * bw AS INT) AS width,
-               CAST(8 * bh AS INT) AS height,
-               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
-               CAST(min(v) AS INT) AS min_val,
-               CAST(max(v) AS INT) AS max_val,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN v END) AS INT) AS corner_val
-        FROM vals
-        GROUP BY doc_id, bw, bh
-    """,
-    tags=("multimodal", "image"),
-)
-def multimodal_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pixel statistics decoded from REAL baseline JPEG bytes — the
-    DCT-codec sibling of the PNG/GIF queries that retires JPEG from the
-    environment gate (decode_and_featurize now gates video only):
-    payloads are complete spec-valid SOF0 grayscale JPEGs (Annex K
-    Huffman tables, real byte-stuffed entropy stream, unit quantization)
-    and the Spark side runs a full baseline decoder — canonical Huffman,
-    DC prediction, RS-coded AC runs, zigzag dequantization, float IDCT.
-    Constant 8x8 blocks + unit quantization make the lossy pipeline
-    bit-exact, so the oracle recomputes the statistics from the
-    generating formula: a Huffman slip, a zigzag transposition, or an
-    IDCT scaling error fails the hash gate on essentially every doc."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_jpeg_pixel_stats(synth_jpeg_payload(d))
-
-# --------------------------------------------------------------------------
-# Video CONTAINER parsing: ISO BMFF (MP4) box walk + Matroska EBML walk.
-# This is the decode-free tier a multimodal curation pipeline scans first
-# (codec id, duration, track geometry, keyframe density — all without
-# touching a single entropy-coded frame). The remaining environment gate
-# in decode_and_featurize narrows to entropy-coded FRAME decode (inter-
-# frame prediction + arithmetic coding need a real codec library); the
-# container structure itself is fully parsed here, like PNG/JPEG headers.
-# Reference parity: the reference has no media handling at all (S3 object
-# moves only, lambda/ingestion_to_raw.py) — north-star surface.
-# --------------------------------------------------------------------------
-
-VIDEO_CONTAINER_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("container", T.StringType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-        T.StructField("n_keyframes", T.IntegerType()),
-    ]
-)
-
-_MP4_CODECS = ("avc1", "hev1", "av01")
-_MKV_CODECS = ("V_MPEG4/ISO/AVC", "V_MPEGH/ISO/HEVC", "V_AV1")
-
-
-def _mp4_box(btype: bytes, body: bytes) -> bytes:
+def _jpeg_head(sof: bytes, w: int, h: int, comps: bytes, color: bool) -> bytearray:
+    """SOI, one unit quantization table, the frame header and the Annex K
+    tables (luminance, plus chrominance for a color frame)."""
     import struct
 
-    return struct.pack(">I", 8 + len(body)) + btype + body
-
-
-def _ebml_size(n: int) -> bytes:
-    """EBML data-size varint: L-byte encoding whose first byte carries
-    L-1 leading zero bits then a marker 1 bit (all-ones payload is the
-    reserved 'unknown size', hence the -1)."""
-    for length in range(1, 9):
-        if n < (1 << (7 * length)) - 1:
-            return ((1 << (7 * length)) | n).to_bytes(length, "big")
-    raise ValueError(f"EBML size too large: {n}")
-
-
-def _ebml_el(eid: bytes, body: bytes) -> bytes:
-    return eid + _ebml_size(len(body)) + body
-
-
-def _ebml_uint(eid: bytes, v: int) -> bytes:
-    n = max(1, (v.bit_length() + 7) // 8)
-    return _ebml_el(eid, v.to_bytes(n, "big"))
-
-
-def synth_video_container_payload(df: DataFrame) -> DataFrame:
-    """Synthesize spec-valid video CONTAINER files per doc (no frame data
-    to decode — sample payloads are opaque filler, exactly what a
-    container-level scan sees without a codec): doc_id % 2 selects
-    MP4 (ftyp + moov[mvhd, trak[tkhd, mdia[mdhd, hdlr,
-    minf[stbl[stsd, stss]]]]] + mdat) or MKV (EBML header +
-    Segment[Info, Tracks[TrackEntry[CodecID, Video]], Cues]). Codec id,
-    dimensions, duration, and keyframe count all derive arithmetically
-    from doc_id so a SQL oracle recomputes them without parsing bytes."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        def mp4(i: int, w: int, h: int, dur_ms: int, kf: int) -> bytes:
-            codec = _MP4_CODECS[i % 3].encode()
-            ftyp = _mp4_box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
-            # mvhd v0: timescale 1000 -> duration field IS milliseconds
-            mvhd = _mp4_box(
-                b"mvhd",
-                b"\x00\x00\x00\x00"
-                + struct.pack(">II", 0, 0)                  # creation/modification
-                + struct.pack(">II", 1000, dur_ms)          # timescale, duration
-                + struct.pack(">I", 0x00010000)             # rate 1.0
-                + struct.pack(">H", 0x0100) + b"\x00" * 10  # volume + reserved
-                + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-                + b"\x00" * 24
-                + struct.pack(">I", 2),                     # next track id
-            )
-            tkhd = _mp4_box(
-                b"tkhd",
-                b"\x00\x00\x00\x07"
-                + struct.pack(">II", 0, 0)
-                + struct.pack(">I", 1) + b"\x00" * 4        # track id + reserved
-                + struct.pack(">I", dur_ms) + b"\x00" * 8
-                + struct.pack(">HHHH", 0, 0, 0, 0)          # layer/group/volume/rsvd
-                + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-                + struct.pack(">II", w << 16, h << 16),     # 16.16 fixed point
-            )
-            mdhd = _mp4_box(
-                b"mdhd",
-                b"\x00\x00\x00\x00" + struct.pack(">II", 0, 0)
-                + struct.pack(">II", 1000, dur_ms)
-                + struct.pack(">HH", 0x55C4, 0),            # language 'und'
-            )
-            hdlr = _mp4_box(
-                b"hdlr",
-                b"\x00\x00\x00\x00" + b"\x00" * 4 + b"vide" + b"\x00" * 12 + b"\x00",
-            )
-            entry = (
-                struct.pack(">I", 8 + 78) + codec
-                + b"\x00" * 6 + struct.pack(">H", 1)        # data_reference_index
-                + b"\x00" * 16
-                + struct.pack(">HH", w, h)
-                + struct.pack(">II", 0x00480000, 0x00480000)  # 72 dpi
-                + b"\x00" * 4 + struct.pack(">H", 1)        # frame_count
-                + b"\x00" * 32                              # compressorname
-                + struct.pack(">Hh", 24, -1)                # depth, predefined
-            )
-            stsd = _mp4_box(b"stsd", b"\x00\x00\x00\x00" + struct.pack(">I", 1) + entry)
-            stss = _mp4_box(
-                b"stss",
-                b"\x00\x00\x00\x00" + struct.pack(">I", kf)
-                + b"".join(struct.pack(">I", 1 + 30 * j) for j in range(kf)),
-            )
-            stbl = _mp4_box(b"stbl", stsd + stss)
-            minf = _mp4_box(b"minf", stbl)
-            mdia = _mp4_box(b"mdia", mdhd + hdlr + minf)
-            trak = _mp4_box(b"trak", tkhd + mdia)
-            moov = _mp4_box(b"moov", mvhd + trak)
-            mdat = _mp4_box(b"mdat", bytes(16))             # opaque filler frames
-            return ftyp + moov + mdat
-
-        def mkv(i: int, w: int, h: int, dur_ms: int, kf: int) -> bytes:
-            codec = _MKV_CODECS[i % 3].encode()
-            header = _ebml_el(
-                b"\x1a\x45\xdf\xa3",
-                _ebml_uint(b"\x42\x86", 1) + _ebml_uint(b"\x42\xf7", 1)
-                + _ebml_uint(b"\x42\xf2", 4) + _ebml_uint(b"\x42\xf3", 8)
-                + _ebml_el(b"\x42\x82", b"matroska")
-                + _ebml_uint(b"\x42\x87", 4) + _ebml_uint(b"\x42\x85", 2),
-            )
-            info = _ebml_el(
-                b"\x15\x49\xa9\x66",
-                _ebml_uint(b"\x2a\xd7\xb1", 1_000_000)      # 1 ms per tick
-                + _ebml_el(b"\x44\x89", struct.pack(">d", float(dur_ms))),
-            )
-            video = _ebml_el(
-                b"\xe0", _ebml_uint(b"\xb0", w) + _ebml_uint(b"\xba", h)
-            )
-            track_entry = _ebml_el(
-                b"\xae",
-                _ebml_uint(b"\xd7", 1) + _ebml_uint(b"\x73\xc5", i + 1)
-                + _ebml_uint(b"\x83", 1)                    # TrackType: video
-                + _ebml_el(b"\x86", codec) + video,
-            )
-            tracks = _ebml_el(b"\x16\x54\xae\x6b", track_entry)
-            cues = _ebml_el(
-                b"\x1c\x53\xbb\x6b",
-                b"".join(
-                    _ebml_el(
-                        b"\xbb",
-                        _ebml_uint(b"\xb3", 30 * j)
-                        + _ebml_el(
-                            b"\xb7",
-                            _ebml_uint(b"\xf7", 1) + _ebml_uint(b"\xf1", 100 + j),
-                        ),
-                    )
-                    for j in range(kf)
-                ),
-            )
-            segment = _ebml_el(b"\x18\x53\x80\x67", info + tracks + cues)
-            return header + segment
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 16 + i % 101, 16 + i % 53
-                dur_ms = 1000 + (i % 977) * 40
-                kf = 1 + i % 29
-                buf = mp4(i, w, h, dur_ms, kf) if i % 2 == 0 else mkv(i, w, h, dur_ms, kf)
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-def parse_video_container_stats(df: DataFrame) -> DataFrame:
-    """REAL video container parsing — not a stub: a generic ISO BMFF box
-    walker (size/type framing, recursion into moov/trak/mdia/minf/stbl,
-    version-aware mvhd/tkhd field offsets, stsd sample-entry fourcc, stss
-    sync-sample table) and a generic EBML walker (leading-bit varint ids
-    and sizes, recursion into Segment/Info/Tracks/TrackEntry/Video/Cues,
-    uint/float primitive reads) — the two container grammars that cover
-    essentially all video at rest. Emits codec id, track geometry,
-    duration, and keyframe count per payload. Arrow-batched mapInPandas;
-    payload bytes never shuffle. Frame DECODE stays behind the documented
-    environment gate (decode_and_featurize)."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
-
-        def walk_mp4(buf: bytes, out: dict) -> None:
-            pos = 0
-            while pos + 8 <= len(buf):
-                size, btype = struct.unpack(">I", buf[pos : pos + 4])[0], buf[pos + 4 : pos + 8]
-                if size == 1:  # 64-bit largesize
-                    size = struct.unpack(">Q", buf[pos + 8 : pos + 16])[0]
-                    body = buf[pos + 16 : pos + size]
-                else:
-                    body = buf[pos + 8 : pos + size]
-                if size < 8:
-                    break  # malformed framing: stop, keep what we have
-                if btype in MP4_CONTAINERS:
-                    walk_mp4(body, out)
-                elif btype == b"mvhd":
-                    ver = body[0]
-                    if ver == 1:
-                        ts, dur = struct.unpack(">IQ", body[20:32])
-                    else:
-                        ts, dur = struct.unpack(">II", body[12:20])
-                    out["duration_ms"] = int(round(dur * 1000 / ts)) if ts else None
-                elif btype == b"tkhd":
-                    ver = body[0]
-                    off = 88 if ver == 1 else 76
-                    w16, h16 = struct.unpack(">II", body[off : off + 8])
-                    out["width"], out["height"] = w16 >> 16, h16 >> 16
-                elif btype == b"stsd":
-                    (n,) = struct.unpack(">I", body[4:8])
-                    if n >= 1:
-                        out["codec"] = body[12:16].decode("ascii", "replace")
-                elif btype == b"stss":
-                    (out["n_keyframes"],) = struct.unpack(">I", body[4:8])
-                pos += size
-
-        EBML_CONTAINERS = {
-            b"\x18\x53\x80\x67",  # Segment
-            b"\x15\x49\xa9\x66",  # Info
-            b"\x16\x54\xae\x6b",  # Tracks
-            b"\xae",              # TrackEntry
-            b"\xe0",              # Video
-            b"\x1c\x53\xbb\x6b",  # Cues
-        }
-
-        def vint(buf: bytes, pos: int, keep_marker: bool):
-            """(value_or_raw, new_pos): EBML ids keep their raw bytes,
-            sizes strip the marker bit."""
-            first = buf[pos]
-            for length in range(1, 9):
-                if first & (0x80 >> (length - 1)):
-                    raw = buf[pos : pos + length]
-                    if keep_marker:
-                        return raw, pos + length
-                    v = int.from_bytes(raw, "big") & ((1 << (7 * length)) - 1)
-                    return v, pos + length
-            raise ValueError("invalid EBML varint")
-
-        def walk_ebml(buf: bytes, out: dict) -> None:
-            pos = 0
-            while pos < len(buf):
-                eid, pos = vint(buf, pos, keep_marker=True)
-                size, pos = vint(buf, pos, keep_marker=False)
-                body = buf[pos : pos + size]
-                pos += size
-                if eid in EBML_CONTAINERS:
-                    walk_ebml(body, out)
-                elif eid == b"\x2a\xd7\xb1":  # TimestampScale (ns per tick)
-                    out["ts_scale"] = int.from_bytes(body, "big")
-                elif eid == b"\x44\x89":      # Duration (float, in ticks)
-                    out["dur_ticks"] = struct.unpack(
-                        ">d" if len(body) == 8 else ">f", body
-                    )[0]
-                elif eid == b"\x86":          # CodecID
-                    out["codec"] = body.decode("ascii", "replace")
-                elif eid == b"\xb0":
-                    out["width"] = int.from_bytes(body, "big")
-                elif eid == b"\xba":
-                    out["height"] = int.from_bytes(body, "big")
-                elif eid == b"\xbb":          # CuePoint == one keyframe index
-                    out["n_keyframes"] = out.get("n_keyframes", 0) + 1
-
-        def parse(buf: bytes) -> dict:
-            if len(buf) >= 12 and buf[4:8] == b"ftyp":
-                out: dict = {"container": "mp4"}
-                walk_mp4(buf, out)
-                return out
-            if buf[:4] == b"\x1a\x45\xdf\xa3":
-                out = {"container": "mkv"}
-                walk_ebml(buf, out)
-                scale, ticks = out.pop("ts_scale", None), out.pop("dur_ticks", None)
-                if scale is not None and ticks is not None:
-                    out["duration_ms"] = int(round(ticks * scale / 1_000_000))
-                return out
-            return {"container": "unknown"}
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                r = parse(bytes(payload))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "container": r.get("container"),
-                        "codec": r.get("codec"),
-                        "width": r.get("width"),
-                        "height": r.get("height"),
-                        "duration_ms": r.get("duration_ms"),
-                        "n_keyframes": r.get("n_keyframes"),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_CONTAINER_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, VIDEO_CONTAINER_SCHEMA)
-
-
-@register(
-    "multimodal_video_container_stats",
-    oracle="""
-        SELECT doc_id,
-               CASE WHEN doc_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-               CASE WHEN doc_id % 2 = 0 THEN
-                    CASE doc_id % 3 WHEN 0 THEN 'avc1' WHEN 1 THEN 'hev1'
-                                    ELSE 'av01' END
-               ELSE
-                    CASE doc_id % 3 WHEN 0 THEN 'V_MPEG4/ISO/AVC'
-                                    WHEN 1 THEN 'V_MPEGH/ISO/HEVC'
-                                    ELSE 'V_AV1' END
-               END AS codec,
-               CAST(16 + doc_id % 101 AS INT) AS width,
-               CAST(16 + doc_id % 53 AS INT) AS height,
-               CAST(1000 + (doc_id % 977) * 40 AS INT) AS duration_ms,
-               CAST(1 + doc_id % 29 AS INT) AS n_keyframes
-        FROM documents
-    """,
-    tags=("multimodal", "video"),
-)
-def multimodal_video_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Container-level video metadata (codec / geometry / duration /
-    keyframe count) parsed from REAL MP4 and MKV bytes — the decode-free
-    scan a media curation pipeline runs before committing codec compute.
-    Payloads are complete spec-valid containers (ISO BMFF box tree, EBML
-    element tree) whose fields derive arithmetically from doc_id; the
-    Spark side genuinely walks the box/EBML grammars (varint ids,
-    version-aware offsets, fourcc dispatch) and the oracle recomputes the
-    metadata from the generating formula — one wrong offset, endianness
-    slip, or varint misparse fails the hash gate."""
-    d = load_table(spark, sf_dir, "documents")
-    return parse_video_container_stats(synth_video_container_payload(d))
-
-# --------------------------------------------------------------------------
-# Color (YCbCr 4:4:4) baseline JPEG: 3-component SOF0, interleaved MCUs,
-# per-component Huffman tables + DC prediction, fixed-point YCbCr -> RGB.
-# --------------------------------------------------------------------------
-
-# T.81 Tables K.4 / K.6: example CHROMINANCE Huffman tables (BITS, HUFFVAL)
-_JPEG_DC_C_BITS = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-_JPEG_DC_C_VALS = list(range(12))
-_JPEG_AC_C_BITS = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
-_JPEG_AC_C_VALS = [
-    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12, 0x41,
-    0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-    0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15, 0x62, 0x72, 0xD1,
-    0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-    0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44,
-    0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-    0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74,
-    0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-    0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A,
-    0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-    0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
-    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-
-JPEG_COLOR_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_r", T.DoubleType()),
-        T.StructField("mean_g", T.DoubleType()),
-        T.StructField("mean_b", T.DoubleType()),
-        T.StructField("corner_r", T.IntegerType()),
-        T.StructField("corner_g", T.IntegerType()),
-        T.StructField("corner_b", T.IntegerType()),
-    ]
-)
-
-# libjpeg's fixed-point color constants (jdcolor.c): value * 65536, so the
-# YCbCr -> RGB conversion is INTEGER arithmetic — exactly replicable in a
-# SQL oracle via FLOOR(x / 65536), no float-rounding-rule hazards.
-_FIX_R_CR = 91881     # 1.40200
-_FIX_B_CB = 116130    # 1.77200
-_FIX_G_CB = -22554    # -0.34414
-_FIX_G_CR = -46802    # -0.71414
-
-
-def synth_jpeg_color_payload(df: DataFrame) -> DataFrame:
-    """Synthesize complete spec-valid COLOR baseline JPEGs: 3-component
-    SOF0 (YCbCr, 1x1x1 sampling = 4:4:4), unit quantization, Annex K
-    luminance tables for Y and chrominance tables for Cb/Cr, interleaved
-    MCUs (Y block, Cb block, Cr block per MCU) with PER-COMPONENT DC
-    prediction. Each component's 8x8 blocks are constant:
-        Y(bx,by)  = (doc_id*37 + bx*59 + by*83) % 256
-        Cb(bx,by) = (doc_id*41 + bx*67 + by*89) % 256
-        Cr(bx,by) = (doc_id*43 + bx*71 + by*97) % 256
-    dims w = 8*(1 + doc_id % 3), h = 8*(1 + doc_id % 2). Constant blocks
-    + unit quantization keep the lossy pipeline bit-exact, so a SQL
-    oracle can recompute the decoded RGB statistics from the generating
-    formulas and the fixed-point color transform."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        dc_y = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-        ac_y = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-        dc_c = _jpeg_huff_codes(_JPEG_DC_C_BITS, _JPEG_DC_C_VALS)
-        ac_c = _jpeg_huff_codes(_JPEG_AC_C_BITS, _JPEG_AC_C_VALS)
-
-        def put_block(w, v, prev_dc, dct, act):
-            dc = 8 * (v - 128)
-            diff = dc - prev_dc
-            mag = abs(diff)
-            cat = mag.bit_length()
-            code, length = dct[cat]
-            w.put(code, length)
-            if cat:
-                bits_val = diff if diff > 0 else diff + (1 << cat) - 1
-                w.put(bits_val, cat)
-            eob, eob_len = act[0x00]
-            w.put(eob, eob_len)
-            return dc
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                bw, bh = 1 + i % 3, 1 + i % 2
-                w, h = 8 * bw, 8 * bh
-                head = bytearray(b"\xff\xd8")
-                head += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
-                head += (
-                    b"\xff\xc0"
-                    + struct.pack(">H", 17)
-                    + bytes([8])
-                    + struct.pack(">HH", h, w)
-                    + bytes([3])
-                    + bytes([1, 0x11, 0])   # Y:  1x1 sampling, q-table 0
-                    + bytes([2, 0x11, 0])   # Cb: 1x1 sampling, q-table 0
-                    + bytes([3, 0x11, 0])   # Cr: 1x1 sampling, q-table 0
-                )
-                head += _jpeg_dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
-                head += _jpeg_dht(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
-                head += _jpeg_dht(0x01, _JPEG_DC_C_BITS, _JPEG_DC_C_VALS)
-                head += _jpeg_dht(0x11, _JPEG_AC_C_BITS, _JPEG_AC_C_VALS)
-                head += (
-                    b"\xff\xda"
-                    + struct.pack(">H", 12)
-                    + bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-                )
-                wtr = _JpegBitWriter()
-                prev = [0, 0, 0]  # per-component DC predictors
-                for by in range(bh):
-                    for bx in range(bw):  # one MCU = Y, Cb, Cr blocks
-                        y = (i * 37 + bx * 59 + by * 83) % 256
-                        cb = (i * 41 + bx * 67 + by * 89) % 256
-                        cr = (i * 43 + bx * 71 + by * 97) % 256
-                        prev[0] = put_block(wtr, y, prev[0], dc_y, ac_y)
-                        prev[1] = put_block(wtr, cb, prev[1], dc_c, ac_c)
-                        prev[2] = put_block(wtr, cr, prev[2], dc_c, ac_c)
-                buf = bytes(head) + wtr.flush() + b"\xff\xd9"
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-def decode_jpeg_color_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL color baseline JPEG decode, no codec library: the grayscale
-    decoder's machinery generalized to 3 interleaved components — marker
-    walk with per-component quant/Huffman assignments, MCU-interleaved
-    entropy decoding with per-component DC prediction, per-block zigzag
-    dequantization + separable float IDCT, then libjpeg's FIXED-POINT
-    YCbCr -> RGB (integer multiplies and a floor-shift, so the oracle
-    replicates it exactly) with clamping. Emits per-channel mean and the
-    top-left corner pixel. Handles per-component sampling factors —
-    4:4:4 (1x1x1), 4:2:0 (Y 2x2 + chroma 1x1, the near-universal
-    camera/web layout), 4:2:2 — with chroma upsampled by pixel
-    replication (libjpeg's do_fancy_upsampling=FALSE box method).
-    Progressive scans still raise (genuinely library-bound)."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        u = np.arange(8)[:, None]
-        x = np.arange(8)[None, :]
-        M = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
-        M[0, :] *= 1 / np.sqrt(2)
-
-        class BitReader:
-            def __init__(self, data: bytes):
-                self.data, self.pos, self.acc, self.nbits = data, 0, 0, 0
-
-            def bit(self) -> int:
-                if self.nbits == 0:
-                    if self.pos >= len(self.data):
-                        raise ValueError("entropy stream truncated")
-                    b = self.data[self.pos]
-                    self.pos += 1
-                    if b == 0xFF:
-                        if self.pos >= len(self.data) or self.data[self.pos] != 0x00:
-                            raise ValueError("unexpected marker in entropy data")
-                        self.pos += 1
-                    self.acc, self.nbits = b, 8
-                self.nbits -= 1
-                return (self.acc >> self.nbits) & 1
-
-            def bits(self, n: int) -> int:
-                v = 0
-                for _ in range(n):
-                    v = (v << 1) | self.bit()
-                return v
-
-            def restart(self, m: int) -> None:
-                """Consume an RSTm marker at a restart interval: discard
-                the pad bits to the byte boundary, require the expected
-                modulo-8 marker (T.81 F.2.1.3.1 — a wrong index means a
-                lost or reordered segment, fail loudly)."""
-                self.nbits = 0
-                if self.pos + 1 >= len(self.data):
-                    raise ValueError("truncated at restart marker")
-                b0, b1 = self.data[self.pos], self.data[self.pos + 1]
-                if b0 != 0xFF or b1 != 0xD0 + (m % 8):
-                    raise ValueError(
-                        f"expected RST{m % 8} at restart interval, got "
-                        f"{b0:02x}{b1:02x}"
-                    )
-                self.pos += 2
-
-        def build_decoder(bits, vals):
-            table, code, k = {}, 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length - 1]):
-                    table[(length, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return table
-
-        def huff_decode(reader, table):
-            code, length = 0, 0
-            while length <= 16:
-                code = (code << 1) | reader.bit()
-                length += 1
-                sym = table.get((length, code))
-                if sym is not None:
-                    return sym
-            raise ValueError("invalid Huffman code")
-
-        def extend(v: int, t: int) -> int:
-            return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-        def decode_block(reader, dct, act, q, prev_dc):
-            zz = np.zeros(64, dtype=np.int64)
-            t = huff_decode(reader, dct)
-            diff = extend(reader.bits(t), t) if t else 0
-            dc = prev_dc + diff
-            zz[0] = dc * q[0]
-            k = 1
-            while k < 64:
-                rs = huff_decode(reader, act)
-                r, s = rs >> 4, rs & 0x0F
-                if s == 0:
-                    if r == 0:
-                        break
-                    if r == 15:
-                        k += 16
-                        continue
-                    raise ValueError("invalid AC symbol")
-                k += r
-                if k >= 64:
-                    raise ValueError("AC coefficient overrun")
-                zz[k] = extend(reader.bits(s), s) * q[k]
-                k += 1
-            coef = np.zeros((8, 8), dtype=np.float64)
-            for idx, (rr, cc) in enumerate(_JPEG_ZIGZAG):
-                coef[rr, cc] = zz[idx]
-            block = M.T @ coef @ M
-            return np.clip(np.rint(block + 128), 0, 255).astype(np.int64), dc
-
-        def decode(buf: bytes):
-            if buf[:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG payload (no SOI)")
-            pos = 2
-            qtables, dc_tables, ac_tables = {}, {}, {}
-            dims, comps = None, None
-            ri = 0  # restart interval in MCUs (DRI; 0 = none)
-            while pos + 4 <= len(buf):
-                if buf[pos] != 0xFF:
-                    raise ValueError("marker sync lost")
-                marker = buf[pos + 1]
-                (seglen,) = struct.unpack(">H", buf[pos + 2 : pos + 4])
-                body = buf[pos + 4 : pos + 2 + seglen]
-                pos += 2 + seglen
-                if marker == 0xDB:
-                    while body:
-                        pq, tq = body[0] >> 4, body[0] & 0x0F
-                        if pq != 0:
-                            raise ValueError("16-bit quant tables unsupported")
-                        qtables[tq] = np.frombuffer(
-                            body[1:65], dtype=np.uint8
-                        ).astype(np.int64)
-                        body = body[65:]
-                elif marker == 0xC0:
-                    prec, hh, ww, ncomp = body[0], *struct.unpack(">HH", body[1:5]), body[5]
-                    if prec != 8 or ncomp != 3:
-                        raise ValueError(
-                            f"color decoder needs 3-component SOF0 (got {ncomp})"
-                        )
-                    comps = []
-                    for c in range(3):
-                        cid, sampling, tq = body[6 + 3 * c : 9 + 3 * c]
-                        comps.append({
-                            "id": cid, "tq": tq,
-                            "h": sampling >> 4, "v": sampling & 0x0F,
-                        })
-                    dims = (ww, hh)
-                elif marker in (0xC1, 0xC2, 0xC3):
-                    raise ValueError("non-baseline JPEG (progressive/extended)")
-                elif marker == 0xDD:
-                    (ri,) = struct.unpack(">H", body[:2])
-                elif marker == 0xC4:
-                    while body:
-                        tc, th = body[0] >> 4, body[0] & 0x0F
-                        bits = list(body[1:17])
-                        n = sum(bits)
-                        (dc_tables if tc == 0 else ac_tables)[th] = build_decoder(
-                            bits, list(body[17 : 17 + n])
-                        )
-                        body = body[17 + n :]
-                elif marker == 0xDA:
-                    if dims is None or comps is None:
-                        raise ValueError("SOS before SOF0")
-                    ns = body[0]
-                    if ns != 3:
-                        raise ValueError("color scan must cover 3 components")
-                    by_id = {c["id"]: c for c in comps}
-                    scan, samp = [], []
-                    for c in range(3):
-                        cid, tdta = body[1 + 2 * c], body[2 + 2 * c]
-                        spec = by_id[cid]
-                        scan.append(
-                            (
-                                dc_tables[tdta >> 4],
-                                ac_tables[tdta & 0x0F],
-                                qtables[spec["tq"]],
-                            )
-                        )
-                        samp.append((spec["h"], spec["v"]))
-                    entropy_end = buf.rfind(b"\xff\xd9")
-                    if entropy_end < 0:
-                        raise ValueError("missing EOI")
-                    reader = BitReader(buf[pos:entropy_end])
-                    w, h = dims
-                    # general sampling factors (4:4:4 = 1x1x1, 4:2:0 =
-                    # Y 2x2 + chroma 1x1, 4:2:2 = Y 2x1 + chroma 1x1):
-                    # MCU covers 8*hmax x 8*vmax pixels and carries
-                    # Hc*Vc blocks per component in raster order
-                    hmax = max(s[0] for s in samp)
-                    vmax = max(s[1] for s in samp)
-                    for sh, sv in samp:
-                        if sh < 1 or sv < 1 or hmax % sh or vmax % sv:
-                            raise ValueError(
-                                f"non-integer sampling ratio {sh}x{sv}"
-                            )
-                    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-                    if w % mcu_w or h % mcu_h:
-                        raise ValueError(
-                            "dims must be MCU-aligned (multiples of "
-                            f"{mcu_w}x{mcu_h} for this sampling)"
-                        )
-                    mcus_x, mcus_y = w // mcu_w, h // mcu_h
-                    sub = [
-                        np.zeros(
-                            (h * sv // vmax, w * sh // hmax), dtype=np.int64
-                        )
-                        for sh, sv in samp
-                    ]
-                    prev = [0, 0, 0]
-                    n_rst = 0
-                    for my in range(mcus_y):
-                        for mx in range(mcus_x):
-                            mcu_i = my * mcus_x + mx
-                            if ri and mcu_i and mcu_i % ri == 0:
-                                # restart interval: byte-align, consume
-                                # RSTm, reset the DC predictors
-                                reader.restart(n_rst)
-                                n_rst += 1
-                                prev = [0, 0, 0]
-                            for c in range(3):
-                                dct, act, q = scan[c]
-                                sh, sv = samp[c]
-                                for v in range(sv):
-                                    for hh_ in range(sh):
-                                        px, prev[c] = decode_block(
-                                            reader, dct, act, q, prev[c]
-                                        )
-                                        py = 8 * (my * sv + v)
-                                        pxx = 8 * (mx * sh + hh_)
-                                        sub[c][
-                                            py : py + 8, pxx : pxx + 8
-                                        ] = px
-                    # chroma upsampling by pixel replication (libjpeg's
-                    # do_fancy_upsampling=FALSE box method — exact, and
-                    # what the generating-formula oracle replicates)
-                    planes = np.zeros((3, h, w), dtype=np.int64)
-                    for c in range(3):
-                        sh, sv = samp[c]
-                        pl = sub[c]
-                        if vmax // sv > 1:
-                            pl = np.repeat(pl, vmax // sv, axis=0)
-                        if hmax // sh > 1:
-                            pl = np.repeat(pl, hmax // sh, axis=1)
-                        planes[c] = pl
-                    return planes, w, h
-            raise ValueError("no SOS segment found")
-
-        def to_rgb(planes):
-            y = planes[0]
-            cb = planes[1] - 128
-            cr = planes[2] - 128
-            r = y + (_FIX_R_CR * cr + 32768) // 65536
-            g = y + (_FIX_G_CB * cb + _FIX_G_CR * cr + 32768) // 65536
-            b = y + (_FIX_B_CB * cb + 32768) // 65536
-            return [np.clip(ch, 0, 255) for ch in (r, g, b)]
-
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                planes, w, h = decode(bytes(payload))
-                r, g, b = to_rgb(planes)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "mean_r": round(float(r.sum()) / (w * h), 6),
-                        "mean_g": round(float(g.sum()) / (w * h), 6),
-                        "mean_b": round(float(b.sum()) / (w * h), 6),
-                        "corner_r": int(r[0, 0]),
-                        "corner_g": int(g[0, 0]),
-                        "corner_b": int(b[0, 0]),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in JPEG_COLOR_STATS_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, JPEG_COLOR_STATS_SCHEMA)
-
-
-@register(
-    "multimodal_jpeg_color_pixel_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id, 1 + doc_id % 3 AS bw, 1 + doc_id % 2 AS bh
-            FROM documents
-        ),
-        bys AS (SELECT doc_id, bw, bh, UNNEST(range(0, bh)) AS by FROM params),
-        bxs AS (SELECT doc_id, bw, bh, by, UNNEST(range(0, bw)) AS bx FROM bys),
-        ycc AS (
-            SELECT doc_id, bw, bh, bx, by,
-                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS y,
-                   (doc_id * 41 + bx * 67 + by * 89) % 256 - 128 AS cb,
-                   (doc_id * 43 + bx * 71 + by * 97) % 256 - 128 AS cr
-            FROM bxs
-        ),
-        rgb AS (
-            SELECT doc_id, bw, bh, bx, by,
-                   LEAST(255, GREATEST(0,
-                       y + CAST(FLOOR((91881 * cr + 32768) / 65536.0) AS BIGINT)
-                   )) AS r,
-                   LEAST(255, GREATEST(0,
-                       y + CAST(FLOOR((-22554 * cb - 46802 * cr + 32768) / 65536.0) AS BIGINT)
-                   )) AS g,
-                   LEAST(255, GREATEST(0,
-                       y + CAST(FLOOR((116130 * cb + 32768) / 65536.0) AS BIGINT)
-                   )) AS b
-            FROM ycc
-        )
-        SELECT doc_id,
-               CAST(8 * bw AS INT) AS width,
-               CAST(8 * bh AS INT) AS height,
-               round(avg(CAST(r AS DOUBLE)), 6) AS mean_r,
-               round(avg(CAST(g AS DOUBLE)), 6) AS mean_g,
-               round(avg(CAST(b AS DOUBLE)), 6) AS mean_b,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN r END) AS INT) AS corner_r,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN g END) AS INT) AS corner_g,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN b END) AS INT) AS corner_b
-        FROM rgb
-        GROUP BY doc_id, bw, bh
-    """,
-    tags=("multimodal", "image"),
-)
-def multimodal_jpeg_color_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-channel RGB statistics decoded from REAL color baseline JPEG
-    bytes: 3-component YCbCr 4:4:4 SOF0 streams with interleaved MCUs,
-    per-component Annex K Huffman tables (luminance for Y, chrominance
-    for Cb/Cr) and per-component DC prediction, decoded by a full
-    baseline pipeline ending in libjpeg's fixed-point color transform.
-    The oracle recomputes the RGB statistics from the generating
-    formulas and the SAME integer transform — a swapped chroma table, a
-    broken per-component DC predictor, an MCU interleave slip, or a
-    color-constant error fails the hash on essentially every doc."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_jpeg_color_pixel_stats(synth_jpeg_color_payload(d))
-
-
-def synth_jpeg_420_payload(df: DataFrame) -> DataFrame:
-    """Synthesize complete spec-valid 4:2:0 CHROMA-SUBSAMPLED baseline
-    JPEGs — the near-universal camera/web layout: 3-component SOF0 with
-    Y sampling 2x2 and Cb/Cr 1x1, unit quantization, Annex K tables,
-    interleaved MCUs of SIX blocks (four Y in raster order, then Cb,
-    Cr) with per-component DC prediction, and a DRI RESTART INTERVAL of
-    2 MCUs (byte-aligned RSTn markers, DC predictors reset — the
-    segmentation every camera JPEG carries). Each 8x8 block is constant:
-        Y at block (bx, by):   (doc_id*37 + bx*59 + by*83) % 256
-        Cb at MCU  (mx, my):   (doc_id*41 + mx*67 + my*89) % 256
-        Cr at MCU  (mx, my):   (doc_id*43 + mx*71 + my*97) % 256
-    dims w = 16*(1 + doc_id % 2), h = 16*(1 + doc_id % 3) — whole MCUs.
-    Constant blocks + unit quantization keep the lossy pipeline
-    bit-exact, and constant chroma per MCU makes the box upsample
-    formula-exact, so a SQL oracle recomputes the decoded RGB stats."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        dc_y = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-        ac_y = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-        dc_c = _jpeg_huff_codes(_JPEG_DC_C_BITS, _JPEG_DC_C_VALS)
-        ac_c = _jpeg_huff_codes(_JPEG_AC_C_BITS, _JPEG_AC_C_VALS)
-
-        def put_block(w, v, prev_dc, dct, act):
-            dc = 8 * (v - 128)
-            diff = dc - prev_dc
-            mag = abs(diff)
-            cat = mag.bit_length()
-            code, length = dct[cat]
-            w.put(code, length)
-            if cat:
-                bits_val = diff if diff > 0 else diff + (1 << cat) - 1
-                w.put(bits_val, cat)
-            eob, eob_len = act[0x00]
-            w.put(eob, eob_len)
-            return dc
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                mw, mh = 1 + i % 2, 1 + i % 3   # MCUs (16x16 px each)
-                w, h = 16 * mw, 16 * mh
-                head = bytearray(b"\xff\xd8")
-                head += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
-                head += (
-                    b"\xff\xc0"
-                    + struct.pack(">H", 17)
-                    + bytes([8])
-                    + struct.pack(">HH", h, w)
-                    + bytes([3])
-                    + bytes([1, 0x22, 0])   # Y:  2x2 sampling -> 4:2:0
-                    + bytes([2, 0x11, 0])   # Cb: 1x1 sampling
-                    + bytes([3, 0x11, 0])   # Cr: 1x1 sampling
-                )
-                head += _jpeg_dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
-                head += _jpeg_dht(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
-                head += _jpeg_dht(0x01, _JPEG_DC_C_BITS, _JPEG_DC_C_VALS)
-                head += _jpeg_dht(0x11, _JPEG_AC_C_BITS, _JPEG_AC_C_VALS)
-                # restart interval: 2 MCUs (DRI + RSTn markers — the
-                # segmentation every camera JPEG carries; content is
-                # unchanged, so the generating-formula oracle carries over)
-                RI = 2
-                head += b"\xff\xdd" + struct.pack(">HH", 4, RI)
-                head += (
-                    b"\xff\xda"
-                    + struct.pack(">H", 12)
-                    + bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-                )
-                entropy = bytearray()
-                wtr = _JpegBitWriter()
-                prev = [0, 0, 0]  # per-component DC predictors
-                n_rst = 0
-                for my in range(mh):
-                    for mx in range(mw):  # MCU: 4 Y blocks + Cb + Cr
-                        mcu_i = my * mw + mx
-                        if RI and mcu_i and mcu_i % RI == 0:
-                            # byte-align the segment, emit RSTm, reset DC
-                            entropy += wtr.flush()
-                            entropy += bytes([0xFF, 0xD0 + (n_rst % 8)])
-                            n_rst += 1
-                            wtr = _JpegBitWriter()
-                            prev = [0, 0, 0]
-                        for dy in range(2):
-                            for dx in range(2):
-                                bx, by = 2 * mx + dx, 2 * my + dy
-                                y = (i * 37 + bx * 59 + by * 83) % 256
-                                prev[0] = put_block(wtr, y, prev[0], dc_y, ac_y)
-                        cb = (i * 41 + mx * 67 + my * 89) % 256
-                        cr = (i * 43 + mx * 71 + my * 97) % 256
-                        prev[1] = put_block(wtr, cb, prev[1], dc_c, ac_c)
-                        prev[2] = put_block(wtr, cr, prev[2], dc_c, ac_c)
-                entropy += wtr.flush()
-                buf = bytes(head) + bytes(entropy) + b"\xff\xd9"
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-@register(
-    "multimodal_jpeg_420_pixel_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id, 1 + doc_id % 2 AS mw, 1 + doc_id % 3 AS mh
-            FROM documents
-        ),
-        bys AS (SELECT doc_id, mw, mh, UNNEST(range(0, 2 * mh)) AS by FROM params),
-        bxs AS (SELECT doc_id, mw, mh, by, UNNEST(range(0, 2 * mw)) AS bx FROM bys),
-        ycc AS (
-            SELECT doc_id, mw, mh, bx, by,
-                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS y,
-                   (doc_id * 41 + (bx // 2) * 67 + (by // 2) * 89) % 256 - 128 AS cb,
-                   (doc_id * 43 + (bx // 2) * 71 + (by // 2) * 97) % 256 - 128 AS cr
-            FROM bxs
-        ),
-        rgb AS (
-            SELECT doc_id, mw, mh, bx, by,
-                   LEAST(255, GREATEST(0,
-                       y + CAST(FLOOR((91881 * cr + 32768) / 65536.0) AS BIGINT)
-                   )) AS r,
-                   LEAST(255, GREATEST(0,
-                       y + CAST(FLOOR((-22554 * cb - 46802 * cr + 32768) / 65536.0) AS BIGINT)
-                   )) AS g,
-                   LEAST(255, GREATEST(0,
-                       y + CAST(FLOOR((116130 * cb + 32768) / 65536.0) AS BIGINT)
-                   )) AS b
-            FROM ycc
-        )
-        SELECT doc_id,
-               CAST(16 * mw AS INT) AS width,
-               CAST(16 * mh AS INT) AS height,
-               round(avg(CAST(r AS DOUBLE)), 6) AS mean_r,
-               round(avg(CAST(g AS DOUBLE)), 6) AS mean_g,
-               round(avg(CAST(b AS DOUBLE)), 6) AS mean_b,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN r END) AS INT) AS corner_r,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN g END) AS INT) AS corner_g,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN b END) AS INT) AS corner_b
-        FROM rgb
-        GROUP BY doc_id, mw, mh
-    """,
-    tags=("multimodal", "image"),
-)
-def multimodal_jpeg_420_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-channel RGB statistics decoded from REAL 4:2:0
-    chroma-subsampled baseline JPEG bytes — the layout of essentially
-    every camera/web JPEG: six-block interleaved MCUs (four Y, one Cb,
-    one Cr), per-component DC prediction across the 2x2 Y quad, chroma
-    planes decoded at quarter resolution and box-upsampled, then
-    libjpeg's fixed-point color transform. The oracle recomputes the
-    stats from the generating formulas with the chroma indexed at
-    (bx//2, by//2) — exactly the subsample/upsample geometry — so a
-    swapped Y-quad order, a DC predictor that resets per block row, an
-    upsample misalignment, a sampling-factor parse slip, or a restart
-    interval mis-consumed (the stream carries DRI=2 with RSTn markers)
-    fails the hash on essentially every doc. Same decoder as the 4:4:4 query
-    (decode_jpeg_color_pixel_stats handles both via SOF0 sampling
-    factors)."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_jpeg_color_pixel_stats(synth_jpeg_420_payload(d))
-
-
-# --------------------------------------------------------------------------
-# Progressive JPEG (ITU-T T.81 SOF2): multi-scan spectral selection +
-# successive approximation. The decoder accumulates coefficients across
-# DC-first / DC-refinement / AC-first / AC-refinement scans (EOB-run
-# coding included) and runs dequant + IDCT once at the end — the layout
-# ~all web "optimized" JPEGs use. The synthesized fixtures are complete
-# three-scan progressive streams over the SAME constant blocks as the
-# baseline query, so the generating-formula oracle carries over; the
-# AC-refinement machinery (not reachable from constant blocks, whose AC
-# is zero) is pinned separately in tests/test_multimodal_decode.py
-# against a numpy IDCT oracle.
-# --------------------------------------------------------------------------
-
-
-# minimal AC table for progressive scans: the Annex K baseline table has
-# no EOBn symbols (baseline never emits them) — progressive streams
-# define their own. Five canonical codes at length 3: EOB0..EOB4.
-_JPEG_PROG_AC_BITS = [0, 0, 5, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_JPEG_PROG_AC_VALS = [0x00, 0x10, 0x20, 0x30, 0x40]
-
-
-def synth_jpeg_progressive_payload(df: DataFrame) -> DataFrame:
-    """Synthesize complete spec-valid PROGRESSIVE (SOF2) grayscale
-    JPEGs: three scans — DC first (Al=1), DC refinement (Ah=1, one raw
-    bit per block), and an AC first scan whose all-zero band is a single
-    EOB run over every block (the EOBn run-length coding progressive
-    introduces). Blocks and dims follow the baseline fixture:
-    v(bx,by) = (doc_id*37 + bx*59 + by*83) % 256, w = 8*(1+doc_id%3),
-    h = 8*(1+doc_id%2); constant blocks + unit quantization keep the
-    reconstruction bit-exact for the SQL oracle."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-        ac_codes = _jpeg_huff_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
-
-        def sos(comp_tables: bytes, ss: int, se: int, ah: int, al: int) -> bytes:
-            body = bytes([1]) + comp_tables + bytes([ss, se, (ah << 4) | al])
-            return b"\xff\xda" + struct.pack(">H", 2 + len(body)) + body
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                bw, bh = 1 + i % 3, 1 + i % 2
-                w, h = 8 * bw, 8 * bh
-                head = bytearray(b"\xff\xd8")
-                head += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
-                head += (
-                    b"\xff\xc2"  # SOF2: progressive DCT
-                    + struct.pack(">H", 11)
-                    + bytes([8])
-                    + struct.pack(">HH", h, w)
-                    + bytes([1, 1, 0x11, 0])
-                )
-                head += _jpeg_dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
-                dcs = [
-                    8 * (((i * 37 + bx * 59 + by * 83) % 256) - 128)
-                    for by in range(bh)
-                    for bx in range(bw)
-                ]
-                # scan 1: DC first, successive approximation Al=1 —
-                # diffs of (dc >> 1), regular DC Huffman categories
-                body = bytearray(sos(bytes([1, 0x00]), 0, 0, 0, 1))
-                wtr = _JpegBitWriter()
-                prev = 0
-                for dc in dcs:
-                    v = dc >> 1  # arithmetic shift (T.81 point transform)
-                    diff = v - prev
-                    prev = v
-                    cat = abs(diff).bit_length()
-                    code, length = dc_codes[cat]
-                    wtr.put(code, length)
-                    if cat:
-                        wtr.put(
-                            diff if diff > 0 else diff + (1 << cat) - 1, cat
-                        )
-                body += wtr.flush()
-                # scan 2: DC refinement Ah=1, Al=0 — one raw bit per block
-                body += sos(bytes([1, 0x00]), 0, 0, 1, 0)
-                wtr = _JpegBitWriter()
-                for dc in dcs:
-                    wtr.put(dc & 1, 1)
-                body += wtr.flush()
-                # scan 3: AC first, full band 1..63 — all zero, so ONE
-                # EOB run covering every block: EOBn symbol (r<<4) with
-                # r = floor(log2(n)), then r raw bits of n - 2^r. The AC
-                # table (with the progressive-only EOBn symbols Annex K
-                # lacks) is defined HERE, between scans — decoders must
-                # accept mid-stream DHT segments
-                body += _jpeg_dht(0x11, _JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
-                body += sos(bytes([1, 0x01]), 1, 63, 0, 0)
-                wtr = _JpegBitWriter()
-                n = len(dcs)
-                r = n.bit_length() - 1
-                code, length = ac_codes[r << 4]
-                wtr.put(code, length)
-                if r:
-                    wtr.put(n - (1 << r), r)
-                body += wtr.flush()
-                buf = bytes(head) + bytes(body) + b"\xff\xd9"
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-def decode_jpeg_progressive_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL progressive JPEG decode, no codec library: marker walk
-    accepting SOF2 and MULTIPLE SOS scans, per-scan spectral selection
-    (Ss..Se) and successive approximation (Ah/Al), coefficient
-    accumulation across scans — DC first/refinement, AC first with EOB
-    runs, AC refinement with correction bits (T.81 G.1.2) — then one
-    zigzag dequantization + separable float IDCT per block at the end.
-    Grayscale single-component scans; restart markers unsupported
-    (raise). Emits the same stats as the baseline decoder."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        u = np.arange(8)[:, None]
-        x = np.arange(8)[None, :]
-        M = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
-        M[0, :] *= 1 / np.sqrt(2)
-
-        class BitReader:
-            def __init__(self, data: bytes):
-                self.data, self.pos, self.acc, self.nbits = data, 0, 0, 0
-
-            def bit(self) -> int:
-                if self.nbits == 0:
-                    if self.pos >= len(self.data):
-                        raise ValueError("entropy stream truncated")
-                    b = self.data[self.pos]
-                    self.pos += 1
-                    if b == 0xFF:
-                        if self.pos >= len(self.data) or self.data[self.pos] != 0x00:
-                            raise ValueError("unexpected marker in entropy data")
-                        self.pos += 1
-                    self.acc, self.nbits = b, 8
-                self.nbits -= 1
-                return (self.acc >> self.nbits) & 1
-
-            def bits(self, n: int) -> int:
-                v = 0
-                for _ in range(n):
-                    v = (v << 1) | self.bit()
-                return v
-
-        def build_decoder(bits, vals):
-            table, code, k = {}, 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length - 1]):
-                    table[(length, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return table
-
-        def huff_decode(reader, table):
-            code, length = 0, 0
-            while length <= 16:
-                code = (code << 1) | reader.bit()
-                length += 1
-                sym = table.get((length, code))
-                if sym is not None:
-                    return sym
-            raise ValueError("invalid Huffman code")
-
-        def extend(v: int, t: int) -> int:
-            return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-        def entropy_end(buf: bytes, pos: int) -> int:
-            """Index of the next REAL marker (not a stuffed 0xFF00, not
-            a restart marker) — the end of this scan's entropy bytes."""
-            i = pos
-            while i + 1 < len(buf):
-                if buf[i] == 0xFF and buf[i + 1] != 0x00:
-                    if 0xD0 <= buf[i + 1] <= 0xD7:
-                        raise ValueError("restart markers unsupported")
-                    return i
-                i += 1
-            raise ValueError("entropy stream ran past end of payload")
-
-        def decode(buf: bytes):
-            if buf[:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG payload (no SOI)")
-            pos = 2
-            qtables, dc_tables, ac_tables = {}, {}, {}
-            dims = None
-            coef = None  # (n_blocks, 64) accumulated across scans
-            tq = 0
-            pred = 0
-            while pos + 4 <= len(buf):
-                if buf[pos] != 0xFF:
-                    raise ValueError("marker sync lost")
-                marker = buf[pos + 1]
-                if marker == 0xD9:
-                    break
-                (seglen,) = struct.unpack(">H", buf[pos + 2 : pos + 4])
-                body = buf[pos + 4 : pos + 2 + seglen]
-                pos += 2 + seglen
-                if marker == 0xDB:
-                    while body:
-                        pq, tq_ = body[0] >> 4, body[0] & 0x0F
-                        if pq != 0:
-                            raise ValueError("16-bit quant tables unsupported")
-                        qtables[tq_] = np.frombuffer(
-                            body[1:65], dtype=np.uint8
-                        ).astype(np.int64)
-                        body = body[65:]
-                elif marker == 0xC2:
-                    prec, hh, ww, ncomp = body[0], *struct.unpack(">HH", body[1:5]), body[5]
-                    if prec != 8 or ncomp != 1:
-                        raise ValueError(
-                            "progressive decoder supports 8-bit grayscale"
-                        )
-                    if body[7] != 0x11:
-                        raise ValueError("subsampled progressive unsupported")
-                    tq = body[8]
-                    dims = (ww, hh)
-                    if ww % 8 or hh % 8:
-                        raise ValueError("non-multiple-of-8 dims unsupported")
-                    coef = np.zeros((ww // 8 * (hh // 8), 64), dtype=np.int64)
-                elif marker == 0xC0:
-                    raise ValueError("baseline stream: use the SOF0 decoder")
-                elif marker == 0xC4:
-                    while body:
-                        tc, th = body[0] >> 4, body[0] & 0x0F
-                        bits = list(body[1:17])
-                        n = sum(bits)
-                        (dc_tables if tc == 0 else ac_tables)[th] = build_decoder(
-                            bits, list(body[17 : 17 + n])
-                        )
-                        body = body[17 + n :]
-                elif marker == 0xDD:
-                    raise ValueError("restart markers unsupported")
-                elif marker == 0xDA:
-                    if coef is None:
-                        raise ValueError("SOS before SOF2")
-                    if body[0] != 1:
-                        raise ValueError("multi-component scans unsupported")
-                    tdta = body[2]
-                    ss, se = body[3], body[4]
-                    ah, al = body[5] >> 4, body[5] & 0x0F
-                    end = entropy_end(buf, pos)
-                    reader = BitReader(buf[pos:end])
-                    pos = end
-                    n_blocks = coef.shape[0]
-                    if ss == 0:  # DC scan (refinement or first)
-                        if se != 0:
-                            raise ValueError("DC scan must have Se=0")
-                        dct = dc_tables.get(tdta >> 4)
-                        if ah == 0:
-                            pred = 0
-                            for b in range(n_blocks):
-                                t = huff_decode(reader, dct)
-                                diff = extend(reader.bits(t), t) if t else 0
-                                pred += diff
-                                coef[b, 0] = pred << al
-                        else:
-                            for b in range(n_blocks):
-                                if reader.bit():
-                                    coef[b, 0] |= 1 << al
-                    else:  # AC scan over band ss..se
-                        act = ac_tables.get(tdta & 0x0F)
-                        eobrun = 0
-                        if ah == 0:  # AC first scan
-                            b = 0
-                            while b < n_blocks:
-                                if eobrun:
-                                    eobrun -= 1
-                                    b += 1
-                                    continue
-                                k = ss
-                                while k <= se:
-                                    rs = huff_decode(reader, act)
-                                    r, s_ = rs >> 4, rs & 0x0F
-                                    if s_ == 0:
-                                        if r == 15:
-                                            k += 16
-                                            continue
-                                        eobrun = (1 << r) - 1
-                                        if r:
-                                            eobrun += reader.bits(r)
-                                        break
-                                    k += r
-                                    if k > se:
-                                        raise ValueError("AC overrun")
-                                    coef[b, k] = (
-                                        extend(reader.bits(s_), s_) << al
-                                    )
-                                    k += 1
-                                b += 1
-                        else:  # AC refinement (T.81 G.1.2.3)
-                            p1, m1 = 1 << al, -1 << al
-
-                            def refine_nonzero(b, k):
-                                if coef[b, k] and reader.bit():
-                                    if coef[b, k] > 0:
-                                        coef[b, k] += p1
-                                    else:
-                                        coef[b, k] += m1
-
-                            b = 0
-                            while b < n_blocks:
-                                k = ss
-                                if not eobrun:
-                                    while k <= se:
-                                        rs = huff_decode(reader, act)
-                                        r, s_ = rs >> 4, rs & 0x0F
-                                        newval = 0
-                                        if s_ == 0:
-                                            if r < 15:
-                                                # EOBRUN counts the CURRENT
-                                                # block too (its band tail
-                                                # still takes corrections)
-                                                eobrun = 1 << r
-                                                if r:
-                                                    eobrun += reader.bits(r)
-                                                break
-                                            # r == 15: pass 16 zero-history
-                                        else:
-                                            if s_ != 1:
-                                                raise ValueError(
-                                                    "refinement size must be 1"
-                                                )
-                                            newval = p1 if reader.bit() else m1
-                                        # skip r ZERO-history positions,
-                                        # refining nonzero ones en route
-                                        while k <= se:
-                                            if coef[b, k]:
-                                                refine_nonzero(b, k)
-                                            else:
-                                                if r == 0:
-                                                    break
-                                                r -= 1
-                                            k += 1
-                                        if newval and k <= se:
-                                            coef[b, k] = newval
-                                        k += 1
-                                if eobrun:
-                                    # refine the band remainder's nonzero
-                                    # history, then consume one run unit
-                                    while k <= se:
-                                        if coef[b, k]:
-                                            refine_nonzero(b, k)
-                                        k += 1
-                                    eobrun -= 1
-                                b += 1
-                else:
-                    pass  # APPn/COM: skipped by the seglen arithmetic
-            if coef is None or dims is None:
-                raise ValueError("no SOF2/SOS found")
-            w, h = dims
-            q = qtables[tq]
-            bw_ = w // 8
-            img = np.zeros((h, w), dtype=np.int64)
-            for b in range(coef.shape[0]):
-                zz = coef[b] * q
-                cf = np.zeros((8, 8), dtype=np.float64)
-                for idx, (rr, cc) in enumerate(_JPEG_ZIGZAG):
-                    cf[rr, cc] = zz[idx]
-                px = np.clip(np.rint(M.T @ cf @ M + 128), 0, 255)
-                by, bx = divmod(b, bw_)
-                img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = px
-            return img, w, h
-
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img, w, h = decode(bytes(payload))
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "mean_val": round(float(img.sum()) / (w * h), 6),
-                        "min_val": int(img.min()),
-                        "max_val": int(img.max()),
-                        "corner_val": int(img[0, 0]),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in JPEG_STATS_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, JPEG_STATS_SCHEMA)
-
-
-@register(
-    "multimodal_jpeg_progressive_pixel_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id,
-                   1 + doc_id % 3 AS bw,
-                   1 + doc_id % 2 AS bh
-            FROM documents
-        ),
-        bys AS (SELECT doc_id, bw, bh, UNNEST(range(0, bh)) AS by FROM params),
-        bxs AS (SELECT doc_id, bw, bh, by, UNNEST(range(0, bw)) AS bx FROM bys),
-        vals AS (
-            SELECT doc_id, bw, bh,
-                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS v,
-                   bx, by
-            FROM bxs
-        )
-        SELECT doc_id,
-               CAST(8 * bw AS INT) AS width,
-               CAST(8 * bh AS INT) AS height,
-               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
-               CAST(min(v) AS INT) AS min_val,
-               CAST(max(v) AS INT) AS max_val,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN v END) AS INT)
-                   AS corner_val
-        FROM vals
-        GROUP BY doc_id, bw, bh
-    """,
-    tags=("multimodal", "image"),
-)
-def multimodal_jpeg_progressive_pixel_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pixel statistics decoded from REAL progressive (SOF2) JPEG bytes
-    — the multi-scan layout most web-optimized JPEGs ship: a DC-first
-    scan at half precision, a DC refinement scan of raw bits, and an
-    AC scan whose zero band is a single EOB run, accumulated across
-    scans and inverse-transformed once. The oracle recomputes the stats
-    from the generating formulas — a successive-approximation shift
-    slip (off-by-one in Al reconstructs every pixel at half intensity),
-    a DC predictor that resets between scans, or a mis-consumed EOB run
-    all fail the hash on essentially every doc. AC refinement with
-    correction bits (unreachable from constant blocks) is pinned in
-    tests/test_multimodal_decode.py against a numpy IDCT oracle."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_jpeg_progressive_pixel_stats(
-        synth_jpeg_progressive_payload(d)
-    )
-
-
-def synth_jpeg_422_payload(df: DataFrame) -> DataFrame:
-    """Synthesize spec-valid 4:2:2 chroma-subsampled baseline JPEGs
-    (Y sampling 2x1, chroma 1x1 — the broadcast/video-frame layout):
-    four-block MCUs covering 16x8 pixels (two Y in raster order, then
-    Cb, Cr), per-component DC prediction. Blocks are constant:
-        Y at block (bx, by):  (doc_id*37 + bx*59 + by*83) % 256
-        Cb at MCU  (mx, by):  (doc_id*41 + mx*67 + by*89) % 256
-        Cr at MCU  (mx, by):  (doc_id*43 + mx*71 + by*97) % 256
-    dims w = 16*(1 + doc_id % 2), h = 8*(1 + doc_id % 3)."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        dc_y = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-        ac_y = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-        dc_c = _jpeg_huff_codes(_JPEG_DC_C_BITS, _JPEG_DC_C_VALS)
-        ac_c = _jpeg_huff_codes(_JPEG_AC_C_BITS, _JPEG_AC_C_VALS)
-
-        def put_block(w, v, prev_dc, dct, act):
-            dc = 8 * (v - 128)
-            diff = dc - prev_dc
-            cat = abs(diff).bit_length()
-            code, length = dct[cat]
-            w.put(code, length)
-            if cat:
-                w.put(diff if diff > 0 else diff + (1 << cat) - 1, cat)
-            eob, eob_len = act[0x00]
-            w.put(eob, eob_len)
-            return dc
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                mw, mh = 1 + i % 2, 1 + i % 3   # MCUs (16x8 px each)
-                w, h = 16 * mw, 8 * mh
-                head = bytearray(b"\xff\xd8")
-                head += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
-                head += (
-                    b"\xff\xc0"
-                    + struct.pack(">H", 17)
-                    + bytes([8])
-                    + struct.pack(">HH", h, w)
-                    + bytes([3])
-                    + bytes([1, 0x21, 0])   # Y: 2x1 sampling -> 4:2:2
-                    + bytes([2, 0x11, 0])
-                    + bytes([3, 0x11, 0])
-                )
-                head += _jpeg_dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
-                head += _jpeg_dht(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
-                head += _jpeg_dht(0x01, _JPEG_DC_C_BITS, _JPEG_DC_C_VALS)
-                head += _jpeg_dht(0x11, _JPEG_AC_C_BITS, _JPEG_AC_C_VALS)
-                head += (
-                    b"\xff\xda"
-                    + struct.pack(">H", 12)
-                    + bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-                )
+    head = bytearray(b"\xff\xd8")
+    head += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
+    head += sof + struct.pack(">H", 7 + len(comps)) + bytes([8]) + struct.pack(">HH", h, w)
+    head += comps
+    head += _jpeg_dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
+    if sof == b"\xff\xc0":
+        head += _jpeg_dht(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
+    if color:
+        head += _jpeg_dht(0x01, _JPEG_DC_C_BITS, _JPEG_DC_C_VALS)
+        head += _jpeg_dht(0x11, _JPEG_AC_C_BITS, _JPEG_AC_C_VALS)
+    return head
+
+
+def _jpeg_payload(i: int) -> bytes:
+    """Baseline grayscale JPEGs (SOF0), w = 8*(1 + doc_id % 3), h =
+    8*(1 + doc_id % 2), block (bx, by) constant at
+    (doc_id*37 + bx*59 + by*83) % 256."""
+    import struct
+
+    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+    bw, bh = 1 + i % 3, 1 + i % 2
+    head = _jpeg_head(b"\xff\xc0", 8 * bw, 8 * bh, bytes([1, 1, 0x11, 0]), False)
+    head += b"\xff\xda" + struct.pack(">H", 8) + bytes([1, 1, 0x00, 0, 63, 0])
+    wtr = _JpegBitWriter()
+    prev_dc = 0
+    for by in range(bh):  # MCU raster order
+        for bx in range(bw):
+            v = (i * 37 + bx * 59 + by * 83) % 256
+            prev_dc = _jpeg_put_block(wtr, v, prev_dc, dc_codes, ac_codes)
+    return bytes(head) + wtr.flush() + b"\xff\xd9"
+
+
+def _jpeg_color_payload(i: int, hy: int, vy: int, ri: int) -> bytes:
+    """Color baseline JPEGs, Y sampled hy x vy against 1x1 chroma: 4:4:4
+    (1, 1) in 8*(1 + doc_id % 3) x 8*(1 + doc_id % 2) pixels; 4:2:0
+    (2, 2) and 4:2:2 (2, 1) in (1 + doc_id % 2) x (1 + doc_id % 3) MCUs.
+    Y block (bx, by) = (doc_id*37 + bx*59 + by*83) % 256; Cb and Cr of
+    MCU (mx, my) = (doc_id*41 + mx*67 + my*89) % 256 and (doc_id*43 +
+    mx*71 + my*97) % 256; a restart interval of ``ri`` MCUs when
+    nonzero (the 4:2:0 corpus uses 2)."""
+    import struct
+
+    mw, mh = (1 + i % 3, 1 + i % 2) if hy == 1 else (1 + i % 2, 1 + i % 3)
+    dc_y = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+    ac_y = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+    dc_c = _jpeg_huff_codes(_JPEG_DC_C_BITS, _JPEG_DC_C_VALS)
+    ac_c = _jpeg_huff_codes(_JPEG_AC_C_BITS, _JPEG_AC_C_VALS)
+    comps = bytes([3, 1, hy << 4 | vy, 0, 2, 0x11, 0, 3, 0x11, 0])
+    head = _jpeg_head(b"\xff\xc0", 8 * hy * mw, 8 * vy * mh, comps, True)
+    if ri:
+        head += b"\xff\xdd" + struct.pack(">HH", 4, ri)
+    head += b"\xff\xda" + struct.pack(">H", 12) + bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
+    entropy = bytearray()
+    wtr = _JpegBitWriter()
+    prev = [0, 0, 0]  # per-component DC predictors
+    n_rst = 0
+    for my in range(mh):
+        for mx in range(mw):
+            mcu_i = my * mw + mx
+            if ri and mcu_i and mcu_i % ri == 0:
+                # byte-align the segment, emit RSTm, reset DC
+                entropy += wtr.flush() + bytes([0xFF, 0xD0 + (n_rst % 8)])
+                n_rst += 1
                 wtr = _JpegBitWriter()
                 prev = [0, 0, 0]
-                for by in range(mh):
-                    for mx in range(mw):  # MCU: 2 Y blocks + Cb + Cr
-                        for dx in range(2):
-                            bx = 2 * mx + dx
-                            y = (i * 37 + bx * 59 + by * 83) % 256
-                            prev[0] = put_block(wtr, y, prev[0], dc_y, ac_y)
-                        cb = (i * 41 + mx * 67 + by * 89) % 256
-                        cr = (i * 43 + mx * 71 + by * 97) % 256
-                        prev[1] = put_block(wtr, cb, prev[1], dc_c, ac_c)
-                        prev[2] = put_block(wtr, cr, prev[2], dc_c, ac_c)
-                buf = bytes(head) + wtr.flush() + b"\xff\xd9"
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
+            for dy in range(vy):
+                for dx in range(hy):
+                    bx, by = hy * mx + dx, vy * my + dy
+                    v = (i * 37 + bx * 59 + by * 83) % 256
+                    prev[0] = _jpeg_put_block(wtr, v, prev[0], dc_y, ac_y)
+            prev[1] = _jpeg_put_block(wtr, (i * 41 + mx * 67 + my * 89) % 256, prev[1], dc_c, ac_c)
+            prev[2] = _jpeg_put_block(wtr, (i * 43 + mx * 71 + my * 97) % 256, prev[2], dc_c, ac_c)
+    return bytes(head) + bytes(entropy + wtr.flush()) + b"\xff\xd9"
 
 
-@register(
-    "multimodal_jpeg_422_pixel_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id, 1 + doc_id % 2 AS mw, 1 + doc_id % 3 AS mh
-            FROM documents
-        ),
-        bys AS (SELECT doc_id, mw, mh, UNNEST(range(0, mh)) AS by FROM params),
-        bxs AS (SELECT doc_id, mw, mh, by, UNNEST(range(0, 2 * mw)) AS bx FROM bys),
-        ycc AS (
-            SELECT doc_id, mw, mh, bx, by,
-                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS y,
-                   (doc_id * 41 + (bx // 2) * 67 + by * 89) % 256 - 128 AS cb,
-                   (doc_id * 43 + (bx // 2) * 71 + by * 97) % 256 - 128 AS cr
-            FROM bxs
-        ),
-        rgb AS (
-            SELECT doc_id, mw, mh, bx, by,
-                   LEAST(255, GREATEST(0,
-                       y + CAST(FLOOR((91881 * cr + 32768) / 65536.0) AS BIGINT)
-                   )) AS r,
-                   LEAST(255, GREATEST(0,
-                       y + CAST(FLOOR((-22554 * cb - 46802 * cr + 32768) / 65536.0) AS BIGINT)
-                   )) AS g,
-                   LEAST(255, GREATEST(0,
-                       y + CAST(FLOOR((116130 * cb + 32768) / 65536.0) AS BIGINT)
-                   )) AS b
-            FROM ycc
-        )
-        SELECT doc_id,
-               CAST(16 * mw AS INT) AS width,
-               CAST(8 * mh AS INT) AS height,
-               round(avg(CAST(r AS DOUBLE)), 6) AS mean_r,
-               round(avg(CAST(g AS DOUBLE)), 6) AS mean_g,
-               round(avg(CAST(b AS DOUBLE)), 6) AS mean_b,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN r END) AS INT) AS corner_r,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN g END) AS INT) AS corner_g,
-               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN b END) AS INT) AS corner_b
-        FROM rgb
-        GROUP BY doc_id, mw, mh
-    """,
-    tags=("multimodal", "image"),
-)
-def multimodal_jpeg_422_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-channel RGB statistics decoded from REAL 4:2:2
-    chroma-subsampled baseline JPEG bytes (Y 2x1 + chroma 1x1 — the
-    broadcast/video-frame sibling of 4:2:0): four-block MCUs, chroma at
-    half horizontal resolution box-upsampled. Exercises the generalized
-    sampling-factor path with ASYMMETRIC factors (hmax=2, vmax=1), so a
-    decoder that conflated the two axes fails the hash. Same decoder as
-    the 4:4:4 and 4:2:0 queries; oracle indexes chroma at (bx//2, by) —
-    the 4:2:2 geometry itself."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_jpeg_color_pixel_stats(synth_jpeg_422_payload(d))
+def _jpeg_progressive_payload(i: int) -> bytes:
+    """Progressive grayscale JPEGs (SOF2) over the baseline fixture's
+    blocks in three scans: DC first at Al=1, DC refinement (one raw bit
+    per block), and an AC first scan whose all-zero band is one EOB run
+    over every block, its AC table defined between scans."""
+    import struct
 
+    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+    ac_codes = _jpeg_huff_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
 
-# --------------------------------------------------------------------------
-# IMA/DVI ADPCM WAV decode (format tag 0x11) — a real COMPRESSED audio
-# codec in pure numpy/int arithmetic. Public spec: IMA Digital Audio
-# Interchange Format (1992), the same tables RFC 3551 and every WAV
-# implementation carry. The decode is a per-sample integer state machine
-# (step index + predictor), which the oracle replays as a DuckDB
-# RECURSIVE CTE — the strongest oracle shape in the suite: any slip in
-# the nibble order, sign handling, clamping, or table lookup diverges the
-# state and fails the hash for every later sample.
-# --------------------------------------------------------------------------
-_IMA_STEPS = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-]
-_IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8]
+    def sos(comp_tables: bytes, ss: int, se: int, ah: int, al: int) -> bytes:
+        body = bytes([1]) + comp_tables + bytes([ss, se, (ah << 4) | al])
+        return b"\xff\xda" + struct.pack(">H", 2 + len(body)) + body
 
-ADPCM_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("mean_amp", T.DoubleType()),
-        T.StructField("min_amp", T.IntegerType()),
-        T.StructField("max_amp", T.IntegerType()),
-        T.StructField("end_amp", T.IntegerType()),
+    bw, bh = 1 + i % 3, 1 + i % 2
+    head = _jpeg_head(b"\xff\xc2", 8 * bw, 8 * bh, bytes([1, 1, 0x11, 0]), False)
+    dcs = [
+        8 * (((i * 37 + bx * 59 + by * 83) % 256) - 128)
+        for by in range(bh) for bx in range(bw)
     ]
-)
+    # scan 1: DC first, Al=1 — Huffman-coded diffs of (dc >> 1)
+    body = bytearray(sos(bytes([1, 0x00]), 0, 0, 0, 1))
+    wtr = _JpegBitWriter()
+    prev = 0
+    for dc in dcs:
+        v = dc >> 1  # arithmetic shift (T.81 point transform)
+        diff = v - prev
+        prev = v
+        cat = abs(diff).bit_length()
+        wtr.put(*dc_codes[cat])
+        if cat:
+            wtr.put(diff if diff > 0 else diff + (1 << cat) - 1, cat)
+    body += wtr.flush()
+    # scan 2: DC refinement Ah=1, Al=0 — one raw bit per block
+    body += sos(bytes([1, 0x00]), 0, 0, 1, 0)
+    wtr = _JpegBitWriter()
+    for dc in dcs:
+        wtr.put(dc & 1, 1)
+    body += wtr.flush()
+    # scan 3: AC first over 1..63, all zero: ONE EOB run covering every
+    # block, EOBn symbol (r << 4) with r = floor(log2(n)), then r raw
+    # bits of n - 2^r
+    body += _jpeg_dht(0x11, _JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
+    body += sos(bytes([1, 0x01]), 1, 63, 0, 0)
+    wtr = _JpegBitWriter()
+    n = len(dcs)
+    r = n.bit_length() - 1
+    wtr.put(*ac_codes[r << 4])
+    if r:
+        wtr.put(n - (1 << r), r)
+    body += wtr.flush()
+    return bytes(head) + bytes(body) + b"\xff\xd9"
 
 
-def synth_wav_adpcm_payload(df: DataFrame) -> DataFrame:
-    """Synthesize COMPLETE, spec-valid IMA ADPCM WAV files (format tag
-    0x11, mono, one block): RIFF header, extended fmt chunk carrying
-    samplesPerBlock, and a block whose 4-byte header holds the seed
-    predictor/step-index and whose nibble stream derives arithmetically
-    from doc_id — nibble(k) = (doc_id*13 + k*7) % 16, seed
-    p0 = ((doc_id*7919) % 2003) - 1001, idx0 = doc_id % 89,
-    n_nibbles = 64 + 8*(doc_id % 3), rate = 8000 + (doc_id % 4)*4000.
-    A standard ADPCM decoder reads these files; the formulas let the
-    oracle REPLAY the decode in SQL."""
+class _JpegBitReader:
+    """MSB-first reader over one scan's entropy bytes (T.81 F.2.2): drops
+    the 0x00 stuffed after a data 0xFF and consumes RSTm markers."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def __init__(self, data: bytes):
+        self.data, self.pos, self.acc, self.nbits = data, 0, 0, 0
 
-        import pandas as pd
+    def bit(self) -> int:
+        if self.nbits == 0:
+            if self.pos >= len(self.data):
+                raise ValueError("entropy stream truncated")
+            b = self.data[self.pos]
+            self.pos += 1
+            if b == 0xFF:
+                if self.pos >= len(self.data) or self.data[self.pos] != 0x00:
+                    raise ValueError("unexpected marker in entropy data")
+                self.pos += 1  # skip stuffed 0x00
+            self.acc, self.nbits = b, 8
+        self.nbits -= 1
+        return (self.acc >> self.nbits) & 1
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                n_nib = 64 + 8 * (i % 3)
-                p0 = ((i * 7919) % 2003) - 1001
-                idx0 = i % 89
-                sr = 8000 + (i % 4) * 4000
-                nibs = [(i * 13 + k * 7) % 16 for k in range(n_nib)]
-                body = bytearray(struct.pack("<hBB", p0, idx0, 0))
-                for j in range(0, n_nib, 2):
-                    body.append(nibs[j] | (nibs[j + 1] << 4))
-                block_align = len(body)
-                spb = 1 + n_nib  # header sample + one per nibble
-                fmt = struct.pack(
-                    "<HHIIHHHH", 0x11, 1, sr,
-                    (sr * block_align) // spb, block_align, 4, 2, spb,
-                )
-                buf = (
-                    b"RIFF"
-                    + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(body))
-                    + b"WAVEfmt "
-                    + struct.pack("<I", len(fmt))
-                    + fmt
-                    + b"data"
-                    + struct.pack("<I", len(body))
-                    + bytes(body)
-                )
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def bits(self, n: int) -> int:
+        v = 0
+        for _ in range(n):
+            v = (v << 1) | self.bit()
+        return v
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
+    def receive(self, t: int) -> int:
+        """T.81 F.2.2.1: ``t`` magnitude bits as a signed value."""
+        if not t:
+            return 0
+        v = self.bits(t)
+        return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
+    def huff(self, table: dict | None) -> int:
+        """One canonical-Huffman symbol; ``table`` maps (length, code)."""
+        if table is None:
+            raise ValueError("scan uses an undefined Huffman table")
+        code = 0
+        for length in range(1, 17):
+            code = (code << 1) | self.bit()
+            sym = table.get((length, code))
+            if sym is not None:
+                return sym
+        raise ValueError("invalid Huffman code")
 
-def decode_wav_adpcm_stats(df: DataFrame) -> DataFrame:
-    """REAL IMA ADPCM decode: walk the RIFF chunks, require format tag
-    0x11 / 4-bit mono-or-stereo, then run the spec state machine over
-    the nibble stream (low nibble first) — step-table lookup, magnitude
-    reconstruction from the three mantissa bits, sign bit, predictor
-    clamp to int16, index clamp to [0, 88] — and reduce per-doc sample
-    statistics over all channels (each block carries one 4-byte header
-    per channel whose seed predictor is that channel's sample 0; stereo
-    data interleaves as alternating 4-byte chunks per channel, the WAV
-    IMA layout). Arrow-batched mapInPandas; payload bytes never shuffle.
-    Multi-block streams decode by striding blockAlign."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        def decode(buf: bytes):
-            if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            pos, fmt, data = 12, None, None
-            while pos + 8 <= len(buf):
-                cid, size = buf[pos:pos + 4], struct.unpack(
-                    "<I", buf[pos + 4:pos + 8]
-                )[0]
-                body = buf[pos + 8:pos + 8 + size]
-                if cid == b"fmt ":
-                    fmt = body
-                elif cid == b"data":
-                    data = body
-                pos += 8 + size + (size & 1)
-            if fmt is None or data is None:
-                raise ValueError("missing fmt/data chunk")
-            tag, n_ch, sr, _, block_align, bits = struct.unpack(
-                "<HHIIHH", fmt[:16]
-            )
-            if tag != 0x11 or bits != 4 or n_ch not in (1, 2):
-                raise ValueError(
-                    f"unsupported encoding: fmt={tag:#x} bits={bits} ch={n_ch}"
-                )
-
-            def nibbles_of(chunk: bytes):
-                for byte in chunk:
-                    yield byte & 0x0F  # low nibble first
-                    yield byte >> 4
-
-            def step_one(pred: int, idx: int, delta: int):
-                step = _IMA_STEPS[idx]
-                diff = step >> 3
-                if delta & 1:
-                    diff += step >> 2
-                if delta & 2:
-                    diff += step >> 1
-                if delta & 4:
-                    diff += step
-                pred = pred - diff if delta & 8 else pred + diff
-                pred = max(-32768, min(32767, pred))
-                idx = max(0, min(88, idx + _IMA_INDEX[delta & 7]))
-                return pred, idx
-
-            # per channel: 4-byte block header, then (stereo) the data
-            # interleaves as alternating 4-byte chunks per channel — 8
-            # samples of the left channel, 8 of the right, ... (the WAV
-            # IMA layout; mono degenerates to one run of bytes)
-            chans = [[] for _ in range(n_ch)]
-            for b0 in range(0, len(data), block_align):
-                block = data[b0:b0 + block_align]
-                preds, idxs = [], []
-                for c in range(n_ch):
-                    pred, idx, _r = struct.unpack(
-                        "<hBB", block[4 * c:4 * c + 4]
-                    )
-                    preds.append(pred)
-                    idxs.append(idx)
-                    chans[c].append(pred)
-                body = block[4 * n_ch:]
-                for j0 in range(0, len(body), 4 * n_ch):
-                    for c in range(n_ch):
-                        chunk = body[j0 + 4 * c:j0 + 4 * (c + 1)]
-                        for delta in nibbles_of(chunk):
-                            preds[c], idxs[c] = step_one(
-                                preds[c], idxs[c], delta
-                            )
-                            chans[c].append(preds[c])
-            # stats reduce over ALL channels' samples (mono unchanged)
-            out = [s_ for ch_ in chans for s_ in ch_]
-            return np.asarray(out, dtype=np.int64), sr
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples, sr = decode(bytes(payload))
-                n = samples.shape[0]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_samples": n,
-                        "sample_rate": sr,
-                        "mean_amp": round(float(samples.sum() / n), 6),
-                        "min_amp": int(samples.min()),
-                        "max_amp": int(samples.max()),
-                        "end_amp": int(samples[-1]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ADPCM_STATS_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, ADPCM_STATS_SCHEMA)
+    def restart(self, m: int) -> None:
+        """Consume the RSTm marker ending a restart interval: drop the pad
+        bits to the byte boundary, require the expected modulo-8 index
+        (T.81 F.2.1.3.1: a wrong one means a lost or reordered segment)."""
+        self.nbits = 0
+        if self.pos + 1 >= len(self.data):
+            raise ValueError("truncated at restart marker")
+        b0, b1 = self.data[self.pos], self.data[self.pos + 1]
+        if b0 != 0xFF or b1 != 0xD0 + (m % 8):
+            raise ValueError(f"expected RST{m % 8} at restart interval, got {b0:02x}{b1:02x}")
+        self.pos += 2
 
 
-@register(
-    "multimodal_wav_adpcm_stats",
-    oracle="""
-        WITH RECURSIVE step_tab(si, sv) AS (
-            SELECT * FROM (VALUES
-            (0, 7), (1, 8), (2, 9), (3, 10), (4, 11), (5, 12), (6, 13), (7,
-            14), (8, 16), (9, 17), (10, 19), (11, 21), (12, 23), (13, 25),
-            (14, 28), (15, 31), (16, 34), (17, 37), (18, 41), (19, 45), (20,
-            50), (21, 55), (22, 60), (23, 66), (24, 73), (25, 80), (26, 88),
-            (27, 97), (28, 107), (29, 118), (30, 130), (31, 143), (32, 157),
-            (33, 173), (34, 190), (35, 209), (36, 230), (37, 253), (38, 279),
-            (39, 307), (40, 337), (41, 371), (42, 408), (43, 449), (44, 494),
-            (45, 544), (46, 598), (47, 658), (48, 724), (49, 796), (50, 876),
-            (51, 963), (52, 1060), (53, 1166), (54, 1282), (55, 1411), (56,
-            1552), (57, 1707), (58, 1878), (59, 2066), (60, 2272), (61, 2499),
-            (62, 2749), (63, 3024), (64, 3327), (65, 3660), (66, 4026), (67,
-            4428), (68, 4871), (69, 5358), (70, 5894), (71, 6484), (72, 7132),
-            (73, 7845), (74, 8630), (75, 9493), (76, 10442), (77, 11487), (78,
-            12635), (79, 13899), (80, 15289), (81, 16818), (82, 18500), (83,
-            20350), (84, 22385), (85, 24623), (86, 27086), (87, 29794), (88,
-            32767)
-            ) t(si, sv)
-        ),
-        params AS (
-            SELECT doc_id,
-                   64 + 8 * (doc_id % 3) AS n_nib,
-                   ((doc_id * 7919) % 2003) - 1001 AS p0,
-                   doc_id % 89 AS idx0,
-                   8000 + (doc_id % 4) * 4000 AS sample_rate
-            FROM documents
-        ),
-        dec(doc_id, k, pred, idx) AS (
-            SELECT doc_id, 0, p0, idx0 FROM params
-            UNION ALL
-            SELECT d.doc_id, d.k + 1,
-                   GREATEST(-32768, LEAST(32767, d.pred
-                       + CASE WHEN ((d.doc_id*13 + d.k*7) % 16) >= 8
-                              THEN -1 ELSE 1 END
-                       * ((st.sv // 8)
-                          + CASE WHEN ((d.doc_id*13 + d.k*7) % 16) % 2 = 1
-                                 THEN st.sv // 4 ELSE 0 END
-                          + CASE WHEN (((d.doc_id*13 + d.k*7) % 16) // 2) % 2 = 1
-                                 THEN st.sv // 2 ELSE 0 END
-                          + CASE WHEN (((d.doc_id*13 + d.k*7) % 16) // 4) % 2 = 1
-                                 THEN st.sv ELSE 0 END))),
-                   GREATEST(0, LEAST(88, d.idx
-                       + CASE ((d.doc_id*13 + d.k*7) % 16) % 8
-                              WHEN 4 THEN 2 WHEN 5 THEN 4
-                              WHEN 6 THEN 6 WHEN 7 THEN 8
-                              ELSE -1 END))
-            FROM dec d
-            JOIN step_tab st ON st.si = d.idx
-            JOIN params p ON p.doc_id = d.doc_id
-            WHERE d.k < p.n_nib
-        )
-        SELECT d.doc_id,
-               CAST(1 + p.n_nib AS INT) AS n_samples,
-               CAST(p.sample_rate AS INT) AS sample_rate,
-               round(avg(CAST(d.pred AS DOUBLE)), 6) AS mean_amp,
-               CAST(min(d.pred) AS INT) AS min_amp,
-               CAST(max(d.pred) AS INT) AS max_amp,
-               CAST(max(CASE WHEN d.k = p.n_nib THEN d.pred END) AS INT)
-                   AS end_amp
-        FROM dec d JOIN params p ON p.doc_id = d.doc_id
-        GROUP BY d.doc_id, p.n_nib, p.sample_rate
-    """,
-    tags=("multimodal", "audio", "adpcm"),
-)
-def multimodal_wav_adpcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc sample statistics decoded from REAL IMA ADPCM WAV bytes
-    (format tag 0x11) — a genuinely COMPRESSED audio codec under the
-    hash gate. The Spark side parses the RIFF container and runs the
-    spec's integer state machine over the nibble stream; the oracle
-    REPLAYS the same state machine as a DuckDB recursive CTE over the
-    89-entry step table, so one wrong table entry, a swapped nibble
-    order, a missed clamp, or a sign slip diverges every subsequent
-    sample and fails the hash. Public spec: IMA DAIF (1992) / the
-    ADPCM tables carried by RFC 3551."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_wav_adpcm_stats(synth_wav_adpcm_payload(d))
+def _jpeg_scan(frame: dict, sos: bytes, data: bytes, ri: int, tables: dict) -> None:
+    """Entropy-decode one scan into the frame's per-component coefficient
+    arrays (quantized, zigzag order). A baseline scan codes DC and AC of
+    each block together; a progressive one is a DC first or refinement
+    scan (Ss = 0) or an AC first or refinement scan with EOB runs over a
+    band Ss..Se of one component (T.81 G.1.2). Units are MCUs in an
+    interleaved scan and blocks in a single-component one; every ``ri``
+    units a restart marker resets the DC predictors and the EOB run."""
+    ns = sos[0]
+    by_id = {c["id"]: c for c in frame["comps"]}
+    if any(sos[1 + 2 * k] not in by_id for k in range(ns)):
+        raise ValueError("scan names a component the frame lacks")
+    scan = [by_id[sos[1 + 2 * k]] for k in range(ns)]
+    dct = [tables[0].get(sos[2 + 2 * k] >> 4) for k in range(ns)]
+    act = [tables[1].get(sos[2 + 2 * k] & 0x0F) for k in range(ns)]
+    ss, se, ah, al = sos[1 + 2 * ns], sos[2 + 2 * ns], sos[3 + 2 * ns] >> 4, sos[3 + 2 * ns] & 0x0F
+    progressive = frame["progressive"]
+    if not progressive and (ss, se, ah, al) != (0, 63, 0, 0):
+        raise ValueError("baseline scans cover Ss=0..Se=63 with Ah=Al=0")
+    if progressive and ss == 0 and se != 0:
+        raise ValueError(f"progressive DC scan must have Se=0, not {se}")
+    if progressive and ss and ns != 1:
+        raise ValueError("progressive AC scans cover one component")
+    if ss > se or se > 63:
+        raise ValueError(f"bad spectral selection {ss}..{se}")
+    rd = _JpegBitReader(data)
+    pred = [0] * ns
+    eobrun = 0
+    p1, m1 = 1 << al, -1 << al
 
+    def dc(blk, k):
+        if ah:  # refinement: one raw bit
+            if rd.bit():
+                blk[0] |= p1
+            return
+        pred[k] += rd.receive(rd.huff(dct[k]))
+        blk[0] = pred[k] << al
 
-# --------------------------------------------------------------------------
-# G.711 companded WAV decode (format tags 6 = A-law, 7 = mu-law) — ITU-T
-# G.711 (1988), the telephony codecs every WAV implementation carries.
-# Unlike ADPCM there is no state: each byte expands independently through
-# the segment/mantissa formula, so the oracle recomputes the decode as
-# plain column arithmetic.
-# --------------------------------------------------------------------------
-G711_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("law", T.StringType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("mean_amp", T.DoubleType()),
-        T.StructField("min_amp", T.IntegerType()),
-        T.StructField("max_amp", T.IntegerType()),
-    ]
-)
-
-
-def _mulaw_expand(u: int) -> int:
-    """ITU G.711 mu-law byte -> linear PCM (the 0x84-bias segment form)."""
-    u = ~u & 0xFF
-    sign = u & 0x80
-    exp = (u >> 4) & 0x07
-    mant = u & 0x0F
-    mag = (((mant << 3) + 0x84) << exp) - 0x84
-    return -mag if sign else mag
-
-
-def _alaw_expand(a: int) -> int:
-    """ITU G.711 A-law byte -> linear PCM (even-bit inversion form)."""
-    a ^= 0x55
-    sign = a & 0x80
-    exp = (a >> 4) & 0x07
-    mant = a & 0x0F
-    if exp == 0:
-        mag = (mant << 4) + 8
-    else:
-        mag = ((mant << 4) + 0x108) << (exp - 1)
-    return -mag if sign else mag
-
-
-def synth_wav_g711_payload(df: DataFrame) -> DataFrame:
-    """Spec-valid G.711 WAV files: odd doc_ids mu-law (tag 7), even
-    A-law (tag 6), mono 8 kHz, byte(k) = (doc_id*19 + k*11) % 256,
-    n = 120 + doc_id % 9 samples — every field arithmetic so the oracle
-    recomputes the expansion without parsing bytes."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                tag = 7 if i % 2 else 6
-                n = 120 + i % 9
-                data = bytes(((i * 19 + k * 11) % 256) for k in range(n))
-                fmt = struct.pack("<HHIIHH", tag, 1, 8000, 8000, 1, 8)
-                buf = (
-                    b"RIFF"
-                    + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-                    + b"WAVEfmt "
-                    + struct.pack("<I", len(fmt))
-                    + fmt
-                    + b"data"
-                    + struct.pack("<I", len(data))
-                    + data
-                )
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-def decode_wav_g711_stats(df: DataFrame) -> DataFrame:
-    """REAL G.711 expansion from WAV bytes: RIFF walk, tag dispatch
-    (6 = A-law, 7 = mu-law), vectorized 256-entry expansion LUT built
-    from the ITU formulas, per-doc amplitude statistics. Map-only
-    Arrow-batched kernel; payload bytes never shuffle."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        mu_lut = np.asarray([_mulaw_expand(b) for b in range(256)], np.int64)
-        a_lut = np.asarray([_alaw_expand(b) for b in range(256)], np.int64)
-
-        def decode(buf: bytes):
-            if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            pos, fmt, data = 12, None, None
-            while pos + 8 <= len(buf):
-                cid, size = buf[pos:pos + 4], struct.unpack(
-                    "<I", buf[pos + 4:pos + 8]
-                )[0]
-                body = buf[pos + 8:pos + 8 + size]
-                if cid == b"fmt ":
-                    fmt = struct.unpack("<HHIIHH", body[:16])
-                elif cid == b"data":
-                    data = body
-                pos += 8 + size + (size & 1)
-            if fmt is None or data is None:
-                raise ValueError("missing fmt/data chunk")
-            tag, n_ch, _sr, _, _, bits = fmt
-            if tag not in (6, 7) or bits != 8 or n_ch != 1:
-                raise ValueError(
-                    f"unsupported encoding: fmt={tag} bits={bits} ch={n_ch}"
-                )
-            lut = mu_lut if tag == 7 else a_lut
-            return lut[np.frombuffer(data, np.uint8)], (
-                "mulaw" if tag == 7 else "alaw"
-            )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples, law = decode(bytes(payload))
-                n = samples.shape[0]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "law": law,
-                        "n_samples": n,
-                        "mean_amp": round(float(samples.sum() / n), 6),
-                        "min_amp": int(samples.min()),
-                        "max_amp": int(samples.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in G711_STATS_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, G711_STATS_SCHEMA)
-
-
-@register(
-    "multimodal_wav_g711_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id, 120 + doc_id % 9 AS n FROM documents
-        ),
-        bytes_ AS (
-            SELECT doc_id, n, UNNEST(range(0, n)) AS k FROM params
-        ),
-        b_ AS (
-            SELECT doc_id, n,
-                   (doc_id * 19 + k * 11) % 256 AS b
-            FROM bytes_
-        ),
-        fields AS (
-            -- mu-law inverts all bits; A-law inverts the even bits
-            SELECT doc_id, n,
-                   CASE WHEN doc_id % 2 = 1 THEN 255 - b
-                        ELSE xor(b, 85) END AS u
-            FROM b_
-        ),
-        expanded AS (
-            SELECT doc_id, n,
-                   CASE WHEN u >= 128 THEN -1 ELSE 1 END
-                   * CASE WHEN doc_id % 2 = 1 THEN
-                       -- mu-law: ((mant*8 + 0x84) << exp) - 0x84
-                       ((u % 16) * 8 + 132)
-                         * CAST(pow(2, (u // 16) % 8) AS BIGINT) - 132
-                     WHEN (u // 16) % 8 = 0 THEN
-                       -- A-law segment 0: mant*16 + 8
-                       (u % 16) * 16 + 8
-                     ELSE
-                       -- A-law: ((mant*16 + 0x108) << (exp - 1))
-                       ((u % 16) * 16 + 264)
-                         * CAST(pow(2, (u // 16) % 8 - 1) AS BIGINT)
-                     END AS amp
-            FROM fields
-        )
-        SELECT doc_id,
-               CASE WHEN doc_id % 2 = 1 THEN 'mulaw' ELSE 'alaw' END AS law,
-               CAST(n AS INT) AS n_samples,
-               round(avg(CAST(amp AS DOUBLE)), 6) AS mean_amp,
-               CAST(min(amp) AS INT) AS min_amp,
-               CAST(max(amp) AS INT) AS max_amp
-        FROM expanded
-        GROUP BY doc_id, n
-    """,
-    tags=("multimodal", "audio", "g711"),
-)
-def multimodal_wav_g711_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G.711 mu-law/A-law expansion from REAL WAV bytes (format tags
-    7/6) under the hash gate: the Spark side walks the RIFF container
-    and expands through ITU G.711's segment/mantissa formulas
-    (vectorized 256-entry LUT); the oracle recomputes the expansion as
-    plain column arithmetic — the sign split, the exponent segment
-    scale, the 0x84 bias (mu) and the even-bit 0x55 inversion (A) all
-    restated independently in SQL. A single wrong bias or segment shift
-    fails the hash. Public spec: ITU-T G.711 (1988)."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_wav_g711_stats(synth_wav_g711_payload(d))
-
-
-# --------------------------------------------------------------------------
-# TIFF decode (TIFF 6.0, Adobe 1992): both byte orders (II/MM), grayscale
-# 8-bit, strip-organized, Compression=1 (none) and 32773 (PackBits RLE —
-# TIFF 6.0 §9). IFD tag walk + strip reassembly + RLE expansion in pure
-# numpy/bytes — the strip/tag machinery every TIFF reader implements.
-# --------------------------------------------------------------------------
-TIFF_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("byte_order", T.StringType()),
-        T.StructField("compressed", T.BooleanType()),
-        T.StructField("mean_val", T.DoubleType()),
-        T.StructField("min_val", T.IntegerType()),
-        T.StructField("max_val", T.IntegerType()),
-        T.StructField("corner_val", T.IntegerType()),
-    ]
-)
-
-
-def synth_tiff_payload(df: DataFrame) -> DataFrame:
-    """Spec-valid single-strip grayscale TIFFs: width = 16 + 8*(doc_id%3),
-    height = 8 + 4*(doc_id%2); row y is the CONSTANT value
-    v(y) = (doc_id*37 + y*53) % 256 (constant rows make PackBits repeat
-    runs genuine AND the pixel statistics SQL-recomputable); even doc_ids
-    little-endian (II) uncompressed, odd big-endian (MM) PackBits. The
-    IFD carries the 9 baseline tags a conforming reader needs."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        def entry(en, tag, typ, count, value):
-            # value packed into the 4-byte inline field, endian-honoring
-            if typ == 3:  # SHORT
-                v = struct.pack(en + "HH", value, 0)
-            else:  # LONG
-                v = struct.pack(en + "I", value)
-            return struct.pack(en + "HHI", tag, typ, count) + v
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 16 + 8 * (i % 3)
-                h = 8 + 4 * (i % 2)
-                en = "<" if i % 2 == 0 else ">"
-                comp = 1 if i % 2 == 0 else 32773
-                strip = bytearray()
-                for y in range(h):
-                    v = (i * 37 + y * 53) % 256
-                    if comp == 1:
-                        strip += bytes([v]) * w
-                    else:
-                        # PackBits repeat runs: (257 - n) header repeats
-                        # the next byte n times, n <= 128
-                        left = w
-                        while left:
-                            n = min(128, left)
-                            strip += bytes([257 - n, v])
-                            left -= n
-                header = struct.pack(
-                    en + "2sHI", b"II" if en == "<" else b"MM", 42, 8
-                )
-                n_entries = 9
-                strip_off = 8 + 2 + n_entries * 12 + 4
-                ifd = struct.pack(en + "H", n_entries)
-                ifd += entry(en, 256, 3, 1, w)          # ImageWidth
-                ifd += entry(en, 257, 3, 1, h)          # ImageLength
-                ifd += entry(en, 258, 3, 1, 8)          # BitsPerSample
-                ifd += entry(en, 259, 3, 1, comp)       # Compression
-                ifd += entry(en, 262, 3, 1, 1)          # Photometric: BlackIsZero
-                ifd += entry(en, 273, 4, 1, strip_off)  # StripOffsets
-                ifd += entry(en, 277, 3, 1, 1)          # SamplesPerPixel
-                ifd += entry(en, 278, 3, 1, h)          # RowsPerStrip
-                ifd += entry(en, 279, 4, 1, len(strip))  # StripByteCounts
-                ifd += struct.pack(en + "I", 0)         # next IFD: none
-                rows.append(
-                    {"doc_id": doc_id,
-                     "payload": header + ifd + bytes(strip)}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-def decode_tiff_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL TIFF decode: byte-order dispatch on the II/MM magic, IFD tag
-    walk (SHORT/LONG inline values), multi-strip reassembly, PackBits
-    RLE expansion (TIFF 6.0 §9: header n in [0,127] copies n+1 literal
-    bytes, n in [-127,-1] as 257-n repeats the next byte, -128 is a
-    no-op), and per-image grayscale statistics. Unsupported baselines
-    (multi-sample, bit depths != 8, other compressions) refuse loudly.
-    Arrow-batched map-only kernel; payload bytes never shuffle."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        def unpackbits_rle(src: bytes, expect: int) -> bytes:
-            out = bytearray()
-            i = 0
-            while i < len(src) and len(out) < expect:
-                n = src[i]
-                i += 1
-                if n == 128:
+    def ac_first(blk, k):
+        nonlocal eobrun
+        if eobrun:
+            eobrun -= 1
+            return
+        z = max(ss, 1)
+        while z <= se:
+            r, s = divmod(rd.huff(act[k]), 16)
+            if s == 0:
+                if r == 15:  # ZRL: 16 zeros
+                    z += 16
                     continue
-                if n < 128:
-                    out += src[i:i + n + 1]
-                    i += n + 1
+                if r and not progressive:
+                    raise ValueError("invalid AC symbol")
+                eobrun = (1 << r) - 1 + rd.bits(r)  # EOB0 = this block only
+                return
+            z += r
+            if z > se:
+                raise ValueError("AC coefficient overrun")
+            blk[z] = rd.receive(s) << al
+            z += 1
+
+    def ac_refine(blk, k):  # T.81 G.1.2.3
+        nonlocal eobrun
+        z = ss
+        if not eobrun:
+            while z <= se:
+                r, s = divmod(rd.huff(act[k]), 16)
+                new = 0
+                if s == 0:
+                    if r < 15:
+                        # the run counts this block too: its band tail
+                        # still takes corrections below
+                        eobrun = (1 << r) + rd.bits(r)
+                        break
+                    # r == 15: pass 16 zero-history coefficients
+                elif s != 1:
+                    raise ValueError("refinement size must be 1")
                 else:
-                    out += bytes([src[i]]) * (257 - n)
-                    i += 1
-            if len(out) != expect:
+                    new = p1 if rd.bit() else m1
+                # skip r zero-history coefficients, correcting nonzero
+                # ones on the way
+                while z <= se:
+                    if blk[z]:
+                        if rd.bit():
+                            blk[z] += p1 if blk[z] > 0 else m1
+                    elif r == 0:
+                        break
+                    else:
+                        r -= 1
+                    z += 1
+                if new and z <= se:
+                    blk[z] = new
+                z += 1
+        if eobrun:
+            while z <= se:  # the band tail's nonzero history
+                if blk[z] and rd.bit():
+                    blk[z] += p1 if blk[z] > 0 else m1
+                z += 1
+            eobrun -= 1
+
+    if ns == 1:
+        rows, cols = scan[0]["coef"].shape[:2]
+        units = [[(0, by, bx)] for by in range(rows) for bx in range(cols)]
+    else:
+        mcus_y, mcus_x = frame["mcus"]
+        units = [
+            [
+                (k, my * c["v"] + v, mx * c["h"] + h)
+                for k, c in enumerate(scan)
+                for v in range(c["v"])
+                for h in range(c["h"])
+            ]
+            for my in range(mcus_y)
+            for mx in range(mcus_x)
+        ]
+    ac = ac_refine if ah else ac_first
+    for u, unit in enumerate(units):
+        if ri and u and u % ri == 0:
+            rd.restart(u // ri - 1)
+            pred = [0] * ns
+            eobrun = 0
+        for k, by, bx in unit:
+            blk = scan[k]["coef"][by, bx]
+            if ss == 0:
+                dc(blk, k)
+            if se:
+                ac(blk, k)
+
+
+def _jpeg(buf: bytes):
+    """Baseline (SOF0) or progressive (SOF2) JPEG -> (planes, w, h): one
+    (h, w) int64 pixel plane per frame component, in frame order. One
+    marker walk (DQT, DHT anywhere, DRI, any number of scans); every scan
+    fills per-component coefficient arrays; then one tail dequantizes,
+    runs the separable float IDCT per 8x8 block, level-shifts, clamps and
+    box-upsamples subsampled components (pixel replication, libjpeg's
+    do_fancy_upsampling=FALSE). Any integer sampling ratio; dims must be
+    whole MCUs."""
+    import re
+    import struct
+
+    import numpy as np
+
+    if buf[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload (no SOI)")
+    qt: dict = {}
+    tables: dict = {0: {}, 1: {}}  # DHT class 0 = DC, 1 = AC
+    frame = None
+    ri = n_scans = 0
+    pos = 2
+    while pos + 4 <= len(buf):
+        if buf[pos] != 0xFF:
+            raise ValueError("marker sync lost")
+        marker = buf[pos + 1]
+        if marker == 0xD9:  # EOI
+            break
+        (seglen,) = struct.unpack_from(">H", buf, pos + 2)
+        body = buf[pos + 4 : pos + 2 + seglen]
+        pos += 2 + seglen
+        if marker == 0xDB:  # DQT
+            while body:
+                if body[0] >> 4:
+                    raise ValueError("16-bit quant tables unsupported")
+                qt[body[0] & 0x0F] = np.frombuffer(body[1:65], dtype=np.uint8).astype(np.int64)
+                body = body[65:]
+        elif marker == 0xC4:  # DHT
+            while body:
+                n = sum(body[1:17])
+                codes = _jpeg_huff_codes(body[1:17], body[17 : 17 + n])
+                tables[body[0] >> 4][body[0] & 0x0F] = {
+                    (length, code): sym for sym, (code, length) in codes.items()
+                }
+                body = body[17 + n :]
+        elif marker == 0xDD:  # DRI: restart interval in MCUs, 0 = none
+            (ri,) = struct.unpack_from(">H", body)
+        elif marker in (0xC0, 0xC2):  # SOF0 baseline, SOF2 progressive
+            prec, hh, ww, ncomp = body[0], *struct.unpack_from(">HH", body, 1), body[5]
+            if prec != 8:
+                raise ValueError(f"unsupported JPEG precision {prec}")
+            comps = [
+                {"id": body[6 + 3 * k], "h": body[7 + 3 * k] >> 4,
+                 "v": body[7 + 3 * k] & 0x0F, "tq": body[8 + 3 * k]}
+                for k in range(ncomp)
+            ]
+            hmax, vmax = max(c["h"] for c in comps), max(c["v"] for c in comps)
+            for c in comps:
+                if c["h"] < 1 or c["v"] < 1 or hmax % c["h"] or vmax % c["v"]:
+                    raise ValueError(f"non-integer sampling ratio {c['h']}x{c['v']}")
+            if ww % (8 * hmax) or hh % (8 * vmax):
                 raise ValueError(
-                    f"PackBits expansion mismatch: {len(out)} != {expect}"
+                    f"dims must be MCU-aligned (multiples of {8 * hmax}x{8 * vmax} "
+                    "for this sampling)"
                 )
-            return bytes(out)
-
-        def decode(buf: bytes):
-            if buf[:2] == b"II":
-                en, order = "<", "II"
-            elif buf[:2] == b"MM":
-                en, order = ">", "MM"
-            else:
-                raise ValueError("not a TIFF payload (no II/MM magic)")
-            magic, ifd_off = struct.unpack(en + "HI", buf[2:8])
-            if magic != 42:
-                raise ValueError("bad TIFF magic number")
-            (n_entries,) = struct.unpack(
-                en + "H", buf[ifd_off:ifd_off + 2]
+            mcus = (hh // (8 * vmax), ww // (8 * hmax))
+            for c in comps:
+                c["coef"] = np.zeros((mcus[0] * c["v"], mcus[1] * c["h"], 64), dtype=np.int64)
+            frame = {
+                "progressive": marker == 0xC2, "w": ww, "h": hh, "comps": comps, "mcus": mcus,
+            }
+        elif 0xC1 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            raise ValueError(
+                f"unsupported JPEG frame SOF{marker - 0xC0}: baseline and progressive only"
             )
-            tags = {}
-            for j in range(n_entries):
-                off = ifd_off + 2 + j * 12
-                tag, typ, count = struct.unpack(
-                    en + "HHI", buf[off:off + 8]
-                )
-                if typ not in (3, 4) or count < 1:
-                    raise ValueError(
-                        f"unsupported IFD entry: tag={tag} type={typ} "
-                        f"count={count}"
-                    )
-                # SHORT/LONG scalars sit inline; arrays longer than the
-                # 4-byte value slot resolve through their offset (the
-                # multi-strip StripOffsets/StripByteCounts case)
-                fmt = ("H" if typ == 3 else "I") * count
-                size = (2 if typ == 3 else 4) * count
-                if size <= 4:
-                    vals = struct.unpack(en + fmt, buf[off + 8:off + 8 + size])
-                else:
-                    (p_off,) = struct.unpack(en + "I", buf[off + 8:off + 12])
-                    vals = struct.unpack(en + fmt, buf[p_off:p_off + size])
-                tags[tag] = vals[0] if count == 1 else list(vals)
-            w, h = tags[256], tags[257]
-            comp = tags.get(259, 1)
-            pred = tags.get(317, 1)
-            if tags.get(258, 1) != 8 or tags.get(277, 1) != 1:
-                raise ValueError("only 8-bit single-sample TIFF supported")
-            if comp not in (1, 32773, 5):
-                raise ValueError(f"unsupported compression {comp}")
-            if pred not in (1, 2):
-                raise ValueError(f"unsupported predictor {pred}")
-            offs = tags[273]
-            cnts = tags[279]
-            offs = offs if isinstance(offs, list) else [offs]
-            cnts = cnts if isinstance(cnts, list) else [cnts]
-            if len(offs) != len(cnts):
-                raise ValueError("StripOffsets/StripByteCounts mismatch")
-            rps = tags.get(278, h)
-            if len(offs) != -(-h // rps):
-                raise ValueError(
-                    f"strip count {len(offs)} does not match "
-                    f"RowsPerStrip={rps} for height {h}"
-                )
-            # per-strip decompression: the codec state RESETS at every
-            # strip boundary (TIFF 6.0 — each strip is an independent
-            # compressed stream)
-            parts = []
-            for s, (o, n) in enumerate(zip(offs, cnts)):
-                nrows = min(rps, h - s * rps)
-                expect = nrows * w
-                raw = buf[o:o + n]
-                if comp == 1:
-                    part = raw[:expect]
-                elif comp == 32773:
-                    part = unpackbits_rle(raw, expect)
-                else:
-                    part = _tiff_lzw_decompress(raw, expect)
-                parts.append(part)
-            data = b"".join(parts)
-            if len(data) < w * h:
-                raise ValueError("strips shorter than image")
-            img = np.frombuffer(data[:w * h], np.uint8).reshape(h, w)
-            if pred == 2:
-                # horizontal differencing (TIFF 6.0 §14): stored bytes
-                # are per-row diffs mod 256 — cumulative-sum them back
-                img = (
-                    np.cumsum(img.astype(np.int64), axis=1) % 256
-                ).astype(np.uint8)
-            return img, order, comp != 1
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img, order, compressed = decode(bytes(payload))
-                h, w = img.shape
-                plane = img.astype(np.float64)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "byte_order": order,
-                        "compressed": compressed,
-                        "mean_val": round(float(plane.sum() / (w * h)), 6),
-                        "min_val": int(img.min()),
-                        "max_val": int(img.max()),
-                        "corner_val": int(img[0, 0]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TIFF_STATS_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, TIFF_STATS_SCHEMA)
+        elif marker == 0xDA:  # SOS: entropy data runs to the next non-RST marker
+            if frame is None:
+                raise ValueError("SOS before SOF")
+            end = re.search(rb"\xff[^\x00\xd0-\xd7]", buf[pos:])
+            if end is None:
+                raise ValueError("entropy data runs past the payload end (no EOI)")
+            _jpeg_scan(frame, body, buf[pos : pos + end.start()], ri, tables)
+            pos += end.start()
+            n_scans += 1
+        # APPn, COM and other segments: skipped by their length
+    if frame is None or not n_scans:
+        raise ValueError("no SOS segment found")
+    u = np.arange(8)[:, None]
+    x = np.arange(8)[None, :]
+    M = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)  # IDCT basis M[u, x]
+    M[0, :] *= 1 / np.sqrt(2)
+    natural = [8 * r + c for r, c in _JPEG_ZIGZAG]
+    hmax = max(c["h"] for c in frame["comps"])
+    vmax = max(c["v"] for c in frame["comps"])
+    planes = []
+    for c in frame["comps"]:
+        if c["tq"] not in qt:
+            raise ValueError(f"missing quantization table {c['tq']}")
+        coef = c["coef"]
+        plane = np.zeros((8 * coef.shape[0], 8 * coef.shape[1]), dtype=np.int64)
+        cf = np.zeros(64)
+        for by in range(coef.shape[0]):
+            for bx in range(coef.shape[1]):
+                cf[natural] = coef[by, bx] * qt[c["tq"]]
+                block = M.T @ cf.reshape(8, 8) @ M  # separable 2-D IDCT
+                px = np.clip(np.rint(block + 128), 0, 255)
+                plane[8 * by : 8 * by + 8, 8 * bx : 8 * bx + 8] = px
+        planes.append(plane.repeat(vmax // c["v"], axis=0).repeat(hmax // c["h"], axis=1))
+    return planes, frame["w"], frame["h"]
 
 
-@register(
-    "multimodal_tiff_pixel_stats",
-    oracle="""
-        WITH params AS (
-            SELECT doc_id,
-                   16 + 8 * (doc_id % 3) AS w,
-                   8 + 4 * (doc_id % 2) AS h
-            FROM documents
-        ),
-        rows_ AS (
-            SELECT doc_id, w, h, UNNEST(range(0, h)) AS y FROM params
-        ),
-        vals AS (
-            SELECT doc_id, w, h, y,
-                   (doc_id * 37 + y * 53) % 256 AS v
-            FROM rows_
+def _jpeg_gray_stats(doc_id, payload):
+    """Mean, min, max and top-left pixel of a one-component JPEG."""
+    planes, w, h = _jpeg(payload)
+    if len(planes) != 1:
+        raise ValueError(f"gray stats need a 1-component JPEG, got {len(planes)}")
+    img = planes[0]
+    return [(
+        doc_id, w, h, round(float(img.sum()) / (w * h), 6), int(img.min()),
+        int(img.max()), int(img[0, 0]),
+    )]
+
+
+def _jpeg_rgb_stats(doc_id, payload):
+    """Per-channel mean and top-left pixel of a three-component (YCbCr)
+    JPEG after libjpeg's fixed-point color transform with clamping."""
+    import numpy as np
+
+    planes, w, h = _jpeg(payload)
+    if len(planes) != 3:
+        raise ValueError(f"RGB stats need a 3-component JPEG, got {len(planes)}")
+    y, cb, cr = planes[0], planes[1] - 128, planes[2] - 128
+    rgb = [
+        np.clip(ch, 0, 255)
+        for ch in (
+            y + (_FIX_R_CR * cr + 32768) // 65536,
+            y + (_FIX_G_CB * cb + _FIX_G_CR * cr + 32768) // 65536,
+            y + (_FIX_B_CB * cb + 32768) // 65536,
         )
-        SELECT doc_id,
-               CAST(w AS INT) AS width,
-               CAST(h AS INT) AS height,
-               CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END
-                   AS byte_order,
-               doc_id % 2 = 1 AS compressed,
-               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
-               CAST(min(v) AS INT) AS min_val,
-               CAST(max(v) AS INT) AS max_val,
-               CAST(max(CASE WHEN y = 0 THEN v END) AS INT) AS corner_val
-        FROM vals
-        GROUP BY doc_id, w, h
-    """,
-    tags=("multimodal", "image", "tiff"),
-)
-def multimodal_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grayscale pixel statistics decoded from REAL TIFF bytes — BOTH
-    byte orders (even docs II/little-endian uncompressed, odd docs
-    MM/big-endian PackBits-compressed), IFD tag walk, strip reassembly,
-    RLE expansion. Constant rows make the PackBits runs genuine repeat
-    packets while keeping the statistics SQL-recomputable (rows average
-    per row value; the mean over the image is the row-value mean). An
-    endianness slip, a mis-read tag, or an RLE off-by-one fails the
-    hash. Public spec: TIFF 6.0 (Adobe, 1992), PackBits per its §9."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_tiff_pixel_stats(synth_tiff_payload(d))
+    ]
+    return [(
+        doc_id, w, h, *(round(float(ch.sum()) / (w * h), 6) for ch in rgb),
+        *(int(ch[0, 0]) for ch in rgb),
+    )]
+
+
+synth_jpeg_payload = _synth(_jpeg_payload)
+synth_jpeg_progressive_payload = _synth(_jpeg_progressive_payload)
+synth_jpeg_color_payload = _synth(_jpeg_color_payload, 1, 1, 0)
+synth_jpeg_420_payload = _synth(_jpeg_color_payload, 2, 2, 2)
+synth_jpeg_422_payload = _synth(_jpeg_color_payload, 2, 1, 0)
+decode_jpeg_pixel_stats = _decoder(_jpeg_gray_stats, JPEG_STATS_SCHEMA)
+decode_jpeg_color_pixel_stats = _decoder(_jpeg_rgb_stats, JPEG_COLOR_STATS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
-# TIFF LZW (TIFF 6.0 §13) + horizontal-differencing predictor (§14).
-# The GIF decoder above already implements LZW (_lzw_compress/_lzw_
-# decompress); TIFF's variant differs in exactly two spec'd ways, so the
-# pair below mirrors that structure with the two knobs flipped:
-#   * codes pack MSB-FIRST into the byte stream (GIF is LSB-first);
-#   * the code width bumps ONE CODE EARLY — when the next free slot
-#     reaches (1 << width) - 1, not 1 << width (the spec's "early
-#     change", TIFF 6.0 §13 pseudocode).
-# Fixed 8-bit samples: ClearCode=256, EOI=257, first code 9 bits wide,
-# dictionary capped at 4096 with an encoder-side CLEAR reset at 4094
-# (the spec's mandated reset point).
+# TIFF 6.0: both byte orders, 8-bit grayscale strips, no compression,
+# PackBits (§9) or LZW (§13) with the horizontal predictor (§14)
 # --------------------------------------------------------------------------
+#
+# TIFF LZW differs from GIF's in exactly two ways, so it keeps its own
+# pair: codes pack MSB-first, and the code width bumps one code early
+# (when the next free slot reaches (1 << width) - 1). ClearCode=256,
+# EOI=257, 9-bit first codes, an encoder CLEAR at the spec's 4094.
 
 
 def _tiff_lzw_compress(data: bytes) -> bytes:
@@ -4183,78 +1685,1035 @@ def _tiff_lzw_decompress(data: bytes, expect: int) -> bytes:
     return bytes(out)
 
 
-def synth_tiff_lzw_payload(df: DataFrame) -> DataFrame:
-    """Spec-valid single-strip grayscale LZW TIFFs exercising both
-    predictors: pixel(x, y) = (doc_id*37 + y*53 + x*29) % 256 (the x
-    gradient makes horizontal differencing non-trivial: rows are NOT
-    constant, diffs are). Even doc_ids II/little-endian Predictor=1
-    (none); odd MM/big-endian Predictor=2 (horizontal differencing —
-    the strip stores row[0], then byte diffs mod 256, TIFF 6.0 §14).
-    Compression=5 via the REAL encoder above, so width switches and
-    dictionary growth are genuinely exercised."""
+def _tiff_file(en: str, tags: list, after_ifd: bytes) -> bytes:
+    """Header, one IFD and what follows it. A tag is a (tag, type, value)
+    triple, one inline SHORT (3) or LONG (4), or an entry already packed
+    as bytes (an array behind an offset)."""
+    import struct
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    ifd = struct.pack(en + "H", len(tags))
+    for t in tags:
+        if not isinstance(t, bytes):
+            tag, typ, value = t
+            v = struct.pack(en + "HH", value, 0) if typ == 3 else struct.pack(en + "I", value)
+            t = struct.pack(en + "HHI", tag, typ, 1) + v
+        ifd += t
+    ifd += struct.pack(en + "I", 0)  # next IFD: none
+    return struct.pack(en + "2sHI", b"II" if en == "<" else b"MM", 42, 8) + ifd + after_ifd
 
-        import numpy as np
-        import pandas as pd
 
-        def entry(en, tag, typ, count, value):
-            if typ == 3:  # SHORT
-                v = struct.pack(en + "HH", value, 0)
-            else:  # LONG
-                v = struct.pack(en + "I", value)
-            return struct.pack(en + "HHI", tag, typ, count) + v
+def _tiff_payload(i: int) -> bytes:
+    """Single-strip grayscale TIFFs, width 16 + 8*(doc_id % 3), height
+    8 + 4*(doc_id % 2), row y constant at (doc_id*37 + y*53) % 256; even
+    doc_ids II uncompressed, odd MM PackBits (constant rows make real
+    repeat runs)."""
+    w, h = 16 + 8 * (i % 3), 8 + 4 * (i % 2)
+    en = "<" if i % 2 == 0 else ">"
+    comp = 1 if i % 2 == 0 else 32773
+    strip = bytearray()
+    for y in range(h):
+        v = (i * 37 + y * 53) % 256
+        if comp == 1:
+            strip += bytes([v]) * w
+        else:  # PackBits repeat runs: header 257 - n repeats the next byte n <= 128 times
+            left = w
+            while left:
+                n = min(128, left)
+                strip += bytes([257 - n, v])
+                left -= n
+    strip_off = 8 + 2 + 9 * 12 + 4
+    tags = [
+        (256, 3, w), (257, 3, h), (258, 3, 8), (259, 3, comp),
+        (262, 3, 1),  # Photometric: BlackIsZero
+        (273, 4, strip_off), (277, 3, 1), (278, 3, h), (279, 4, len(strip)),
+    ]
+    return _tiff_file(en, tags, bytes(strip))
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 16 + 8 * (i % 3)
-                h = 8 + 4 * (i % 2)
-                en = "<" if i % 2 == 0 else ">"
-                pred = 1 if i % 2 == 0 else 2
-                y, x = np.mgrid[0:h, 0:w]
-                img = ((i * 37 + y * 53 + x * 29) % 256).astype(np.uint8)
-                plane = img.astype(np.int64)
-                if pred == 2:
-                    plane[:, 1:] = (plane[:, 1:] - plane[:, :-1]) % 256
-                strip = _tiff_lzw_compress(
-                    plane.astype(np.uint8).tobytes()
-                )
-                header = struct.pack(
-                    en + "2sHI", b"II" if en == "<" else b"MM", 42, 8
-                )
-                n_entries = 10
-                strip_off = 8 + 2 + n_entries * 12 + 4
-                ifd = struct.pack(en + "H", n_entries)
-                ifd += entry(en, 256, 3, 1, w)          # ImageWidth
-                ifd += entry(en, 257, 3, 1, h)          # ImageLength
-                ifd += entry(en, 258, 3, 1, 8)          # BitsPerSample
-                ifd += entry(en, 259, 3, 1, 5)          # Compression: LZW
-                ifd += entry(en, 262, 3, 1, 1)          # BlackIsZero
-                ifd += entry(en, 273, 4, 1, strip_off)  # StripOffsets
-                ifd += entry(en, 277, 3, 1, 1)          # SamplesPerPixel
-                ifd += entry(en, 278, 3, 1, h)          # RowsPerStrip
-                ifd += entry(en, 279, 4, 1, len(strip))  # StripByteCounts
-                ifd += entry(en, 317, 3, 1, pred)       # Predictor
-                ifd += struct.pack(en + "I", 0)         # next IFD: none
-                rows.append(
-                    {"doc_id": doc_id,
-                     "payload": header + ifd + bytes(strip)}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()),
-         T.StructField("payload", T.BinaryType())]
+def _tiff_lzw_payload(i: int) -> bytes:
+    """Single-strip LZW TIFFs, pixel(x, y) = (doc_id*37 + y*53 + x*29) %
+    256; even doc_ids II with Predictor 1, odd MM with Predictor 2 (the
+    strip stores row diffs mod 256)."""
+    import numpy as np
+
+    w, h = 16 + 8 * (i % 3), 8 + 4 * (i % 2)
+    en = "<" if i % 2 == 0 else ">"
+    pred = 1 if i % 2 == 0 else 2
+    y, x = np.mgrid[0:h, 0:w]
+    plane = ((i * 37 + y * 53 + x * 29) % 256).astype(np.uint8).astype(np.int64)
+    if pred == 2:
+        plane[:, 1:] = (plane[:, 1:] - plane[:, :-1]) % 256
+    strip = _tiff_lzw_compress(plane.astype(np.uint8).tobytes())
+    strip_off = 8 + 2 + 10 * 12 + 4
+    tags = [
+        (256, 3, w), (257, 3, h), (258, 3, 8), (259, 3, 5), (262, 3, 1),
+        (273, 4, strip_off), (277, 3, 1), (278, 3, h), (279, 4, len(strip)),
+        (317, 3, pred),
+    ]
+    return _tiff_file(en, tags, strip)
+
+
+def _tiff_multistrip_payload(i: int) -> bytes:
+    """Multi-strip LZW TIFFs: RowsPerStrip 4 splits each image into 3-4
+    independently compressed strips whose StripOffsets/StripByteCounts
+    are LONG arrays behind offsets; pixel(x, y) = (doc_id*41 + y*59 +
+    x*31) % 256, even doc_ids II Predictor 1, odd MM Predictor 2."""
+    import struct
+
+    import numpy as np
+
+    w, h, rps = 16 + 8 * (i % 3), 12 + 4 * (i % 2), 4
+    en = "<" if i % 2 == 0 else ">"
+    pred = 1 if i % 2 == 0 else 2
+    y, x = np.mgrid[0:h, 0:w]
+    plane = ((i * 41 + y * 59 + x * 31) % 256).astype(np.int64)
+    if pred == 2:
+        plane[:, 1:] = (plane[:, 1:] - plane[:, :-1]) % 256
+    strips = [
+        _tiff_lzw_compress(plane[s : s + rps].astype(np.uint8).tobytes())
+        for s in range(0, h, rps)
+    ]
+    n = len(strips)
+    # layout: header | IFD | offsets array | counts array | strip data
+    arr_off = 8 + 2 + 10 * 12 + 4
+    offs, pos = [], arr_off + 8 * n
+    for s in strips:
+        offs.append(pos)
+        pos += len(s)
+    tags = [
+        (256, 3, w), (257, 3, h), (258, 3, 8), (259, 3, 5), (262, 3, 1),
+        struct.pack(en + "HHII", 273, 4, n, arr_off), (277, 3, 1),
+        (278, 3, rps), struct.pack(en + "HHII", 279, 4, n, arr_off + 4 * n),
+        (317, 3, pred),
+    ]
+    arrays = struct.pack(en + "I" * n, *offs) + struct.pack(en + "I" * n, *map(len, strips))
+    return _tiff_file(en, tags, arrays + b"".join(strips))
+
+
+def _tiff(buf: bytes):
+    """TIFF -> ((h, w) uint8 image, byte order, compressed?): II/MM
+    dispatch, IFD walk (SHORT/LONG values inline or behind an offset),
+    per-strip decompression (each strip an independent stream: none,
+    PackBits — n in [0, 127] copies n+1 literals, [129, 255] repeats the
+    next byte 257-n times, 128 is a no-op — or LZW), then the horizontal
+    predictor undone by a cumulative sum. Multi-sample images, depths
+    other than 8 and other compressions refuse."""
+    import struct
+
+    import numpy as np
+
+    if buf[:2] not in (b"II", b"MM"):
+        raise ValueError("not a TIFF payload (no II/MM magic)")
+    order = buf[:2].decode()
+    en = "<" if order == "II" else ">"
+    magic, ifd_off = struct.unpack(en + "HI", buf[2:8])
+    if magic != 42:
+        raise ValueError("bad TIFF magic number")
+    (n_entries,) = struct.unpack(en + "H", buf[ifd_off : ifd_off + 2])
+    tags = {}
+    for j in range(n_entries):
+        off = ifd_off + 2 + j * 12
+        tag, typ, count = struct.unpack(en + "HHI", buf[off : off + 8])
+        if typ not in (3, 4) or count < 1:
+            raise ValueError(f"unsupported IFD entry: tag={tag} type={typ} count={count}")
+        fmt = ("H" if typ == 3 else "I") * count
+        size = (2 if typ == 3 else 4) * count
+        if size <= 4:
+            vals = struct.unpack(en + fmt, buf[off + 8 : off + 8 + size])
+        else:
+            (p_off,) = struct.unpack(en + "I", buf[off + 8 : off + 12])
+            vals = struct.unpack(en + fmt, buf[p_off : p_off + size])
+        tags[tag] = vals[0] if count == 1 else list(vals)
+    w, h = tags[256], tags[257]
+    comp, pred = tags.get(259, 1), tags.get(317, 1)
+    if tags.get(258, 1) != 8 or tags.get(277, 1) != 1:
+        raise ValueError("only 8-bit single-sample TIFF supported")
+    if comp not in (1, 32773, 5):
+        raise ValueError(f"unsupported compression {comp}")
+    if pred not in (1, 2):
+        raise ValueError(f"unsupported predictor {pred}")
+    offs, cnts = tags[273], tags[279]
+    offs = offs if isinstance(offs, list) else [offs]
+    cnts = cnts if isinstance(cnts, list) else [cnts]
+    if len(offs) != len(cnts):
+        raise ValueError("StripOffsets/StripByteCounts mismatch")
+    rps = tags.get(278, h)
+    if len(offs) != -(-h // rps):
+        raise ValueError(
+            f"strip count {len(offs)} does not match RowsPerStrip={rps} for height {h}"
+        )
+    parts = []
+    for s, (o, n) in enumerate(zip(offs, cnts)):
+        expect = min(rps, h - s * rps) * w
+        raw = buf[o : o + n]
+        if comp == 1:
+            parts.append(raw[:expect])
+        elif comp == 5:
+            parts.append(_tiff_lzw_decompress(raw, expect))
+        else:
+            out, k = bytearray(), 0
+            while k < len(raw) and len(out) < expect:
+                hdr = raw[k]
+                k += 1
+                if hdr < 128:
+                    out += raw[k : k + hdr + 1]
+                    k += hdr + 1
+                elif hdr > 128:
+                    out += bytes([raw[k]]) * (257 - hdr)
+                    k += 1
+            if len(out) != expect:
+                raise ValueError(f"PackBits expansion mismatch: {len(out)} != {expect}")
+            parts.append(bytes(out))
+    data = b"".join(parts)
+    if len(data) < w * h:
+        raise ValueError("strips shorter than image")
+    img = np.frombuffer(data[: w * h], np.uint8).reshape(h, w)
+    if pred == 2:  # stored bytes are per-row diffs mod 256
+        img = (np.cumsum(img.astype(np.int64), axis=1) % 256).astype(np.uint8)
+    return img, order, comp != 1
+
+
+def _tiff_stats(doc_id, payload):
+    """Size, byte order, compression flag, mean, min, max and top-left
+    pixel of a grayscale TIFF."""
+    img, order, compressed = _tiff(payload)
+    h, w = img.shape
+    return [(
+        doc_id, w, h, order, compressed, round(float(img.sum()) / (w * h), 6),
+        int(img.min()), int(img.max()), int(img[0, 0]),
+    )]
+
+
+synth_tiff_payload = _synth(_tiff_payload)
+synth_tiff_lzw_payload = _synth(_tiff_lzw_payload)
+synth_tiff_multistrip_lzw_payload = _synth(_tiff_multistrip_payload)
+decode_tiff_pixel_stats = _decoder(_tiff_stats, TIFF_STATS_SCHEMA)
+
+
+# --------------------------------------------------------------------------
+# Video containers: ISO BMFF (MP4) box walk and Matroska EBML walk. Codec,
+# geometry, duration and keyframe count come from container metadata
+# alone; frame decode is out of scope (no codec library here).
+# --------------------------------------------------------------------------
+
+_MP4_CODECS = ("avc1", "hev1", "av01")
+_MKV_CODECS = ("V_MPEG4/ISO/AVC", "V_MPEGH/ISO/HEVC", "V_AV1")
+
+
+def _video_payload(i: int) -> bytes:
+    """Video containers with opaque filler frames: even doc_ids MP4
+    (ftyp + moov[mvhd, trak[tkhd, mdia[mdhd, hdlr, minf[stbl[stsd,
+    stss]]]]] + mdat), odd MKV (EBML header + Segment[Info,
+    Tracks[TrackEntry[CodecID, Video]], Cues]); codec doc_id % 3, size
+    (16 + doc_id % 101) x (16 + doc_id % 53), duration 1000 +
+    (doc_id % 977)*40 ms, 1 + doc_id % 29 keyframes."""
+    import struct
+
+    def mp4_box(btype: bytes, body: bytes) -> bytes:
+        return struct.pack(">I", 8 + len(body)) + btype + body
+
+    def ebml_el(eid: bytes, body: bytes) -> bytes:
+        # data-size varint: L bytes, the first carrying L-1 zero bits then
+        # a marker bit (an all-ones value is reserved for 'unknown size')
+        n = len(body)
+        length = next(k for k in range(1, 9) if n < (1 << (7 * k)) - 1)
+        return eid + ((1 << (7 * length)) | n).to_bytes(length, "big") + body
+
+    def ebml_uint(eid: bytes, v: int) -> bytes:
+        return ebml_el(eid, v.to_bytes(max(1, (v.bit_length() + 7) // 8), "big"))
+
+    w, h = 16 + i % 101, 16 + i % 53
+    dur_ms = 1000 + (i % 977) * 40
+    kf = 1 + i % 29
+    if i % 2 == 0:
+        codec = _MP4_CODECS[i % 3].encode()
+        ftyp = mp4_box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
+        matrix = struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
+        # mvhd v0: timescale 1000 -> duration field IS milliseconds
+        mvhd = mp4_box(
+            b"mvhd",
+            b"\x00\x00\x00\x00"
+            + struct.pack(">II", 0, 0)                  # creation/modification
+            + struct.pack(">II", 1000, dur_ms)          # timescale, duration
+            + struct.pack(">I", 0x00010000)             # rate 1.0
+            + struct.pack(">H", 0x0100) + b"\x00" * 10  # volume + reserved
+            + matrix + b"\x00" * 24
+            + struct.pack(">I", 2),                     # next track id
+        )
+        tkhd = mp4_box(
+            b"tkhd",
+            b"\x00\x00\x00\x07"
+            + struct.pack(">II", 0, 0)
+            + struct.pack(">I", 1) + b"\x00" * 4        # track id + reserved
+            + struct.pack(">I", dur_ms) + b"\x00" * 8
+            + struct.pack(">HHHH", 0, 0, 0, 0)          # layer/group/volume/rsvd
+            + matrix
+            + struct.pack(">II", w << 16, h << 16),     # 16.16 fixed point
+        )
+        mdhd = mp4_box(
+            b"mdhd",
+            b"\x00\x00\x00\x00" + struct.pack(">II", 0, 0)
+            + struct.pack(">II", 1000, dur_ms)
+            + struct.pack(">HH", 0x55C4, 0),            # language 'und'
+        )
+        hdlr = mp4_box(b"hdlr", b"\x00\x00\x00\x00" + b"\x00" * 4 + b"vide" + b"\x00" * 13)
+        entry = (
+            struct.pack(">I", 8 + 78) + codec
+            + b"\x00" * 6 + struct.pack(">H", 1)        # data_reference_index
+            + b"\x00" * 16
+            + struct.pack(">HH", w, h)
+            + struct.pack(">II", 0x00480000, 0x00480000)  # 72 dpi
+            + b"\x00" * 4 + struct.pack(">H", 1)        # frame_count
+            + b"\x00" * 32                              # compressorname
+            + struct.pack(">Hh", 24, -1)                # depth, predefined
+        )
+        stsd = mp4_box(b"stsd", b"\x00\x00\x00\x00" + struct.pack(">I", 1) + entry)
+        stss = mp4_box(
+            b"stss",
+            b"\x00\x00\x00\x00" + struct.pack(">I", kf)
+            + b"".join(struct.pack(">I", 1 + 30 * j) for j in range(kf)),
+        )
+        minf = mp4_box(b"minf", mp4_box(b"stbl", stsd + stss))
+        trak = mp4_box(b"trak", tkhd + mp4_box(b"mdia", mdhd + hdlr + minf))
+        moov = mp4_box(b"moov", mvhd + trak)
+        return ftyp + moov + mp4_box(b"mdat", bytes(16))  # opaque filler frames
+    codec = _MKV_CODECS[i % 3].encode()
+    header = ebml_el(
+        b"\x1a\x45\xdf\xa3",
+        ebml_uint(b"\x42\x86", 1) + ebml_uint(b"\x42\xf7", 1)
+        + ebml_uint(b"\x42\xf2", 4) + ebml_uint(b"\x42\xf3", 8)
+        + ebml_el(b"\x42\x82", b"matroska")
+        + ebml_uint(b"\x42\x87", 4) + ebml_uint(b"\x42\x85", 2),
     )
-    return df.select("doc_id").mapInPandas(batches, schema)
+    info = ebml_el(
+        b"\x15\x49\xa9\x66",
+        ebml_uint(b"\x2a\xd7\xb1", 1_000_000)      # 1 ms per tick
+        + ebml_el(b"\x44\x89", struct.pack(">d", float(dur_ms))),
+    )
+    video = ebml_el(b"\xe0", ebml_uint(b"\xb0", w) + ebml_uint(b"\xba", h))
+    track_entry = ebml_el(
+        b"\xae",
+        ebml_uint(b"\xd7", 1) + ebml_uint(b"\x73\xc5", i + 1)
+        + ebml_uint(b"\x83", 1)                    # TrackType: video
+        + ebml_el(b"\x86", codec) + video,
+    )
+    cues = ebml_el(
+        b"\x1c\x53\xbb\x6b",
+        b"".join(
+            ebml_el(
+                b"\xbb",
+                ebml_uint(b"\xb3", 30 * j)
+                + ebml_el(b"\xb7", ebml_uint(b"\xf7", 1) + ebml_uint(b"\xf1", 100 + j)),
+            )
+            for j in range(kf)
+        ),
+    )
+    tracks = ebml_el(b"\x16\x54\xae\x6b", track_entry)
+    return header + ebml_el(b"\x18\x53\x80\x67", info + tracks + cues)
 
 
-@register(
-    "multimodal_tiff_lzw_stats",
-    oracle="""
+def _video(buf: bytes) -> dict:
+    """MP4 or MKV -> {container, codec, width, height, duration_ms,
+    n_keyframes}: a generic ISO BMFF box walk (size/type framing,
+    64-bit largesize, recursion into moov/trak/mdia/minf/stbl,
+    version-aware mvhd/tkhd offsets, stsd fourcc, stss count) and a
+    generic EBML walk (leading-bit varint ids and sizes, recursion into
+    Segment/Info/Tracks/TrackEntry/Video/Cues, one CuePoint per
+    keyframe). Any other payload is container 'unknown'."""
+    import struct
+
+    mp4_containers = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
+    ebml_containers = {
+        b"\x18\x53\x80\x67",  # Segment
+        b"\x15\x49\xa9\x66",  # Info
+        b"\x16\x54\xae\x6b",  # Tracks
+        b"\xae",              # TrackEntry
+        b"\xe0",              # Video
+        b"\x1c\x53\xbb\x6b",  # Cues
+    }
+
+    def walk_mp4(buf: bytes, out: dict) -> None:
+        pos = 0
+        while pos + 8 <= len(buf):
+            size, btype = struct.unpack(">I", buf[pos : pos + 4])[0], buf[pos + 4 : pos + 8]
+            if size == 1:  # 64-bit largesize
+                size = struct.unpack(">Q", buf[pos + 8 : pos + 16])[0]
+                body = buf[pos + 16 : pos + size]
+            else:
+                body = buf[pos + 8 : pos + size]
+            if size < 8:
+                break  # malformed framing: stop, keep what we have
+            if btype in mp4_containers:
+                walk_mp4(body, out)
+            elif btype == b"mvhd":
+                if body[0] == 1:
+                    ts, dur = struct.unpack(">IQ", body[20:32])
+                else:
+                    ts, dur = struct.unpack(">II", body[12:20])
+                out["duration_ms"] = int(round(dur * 1000 / ts)) if ts else None
+            elif btype == b"tkhd":
+                off = 88 if body[0] == 1 else 76
+                w16, h16 = struct.unpack(">II", body[off : off + 8])
+                out["width"], out["height"] = w16 >> 16, h16 >> 16
+            elif btype == b"stsd":
+                (n,) = struct.unpack(">I", body[4:8])
+                if n >= 1:
+                    out["codec"] = body[12:16].decode("ascii", "replace")
+            elif btype == b"stss":
+                (out["n_keyframes"],) = struct.unpack(">I", body[4:8])
+            pos += size
+
+    def vint(buf: bytes, pos: int, keep_marker: bool):
+        """(value_or_raw, new_pos): EBML ids keep their raw bytes, sizes
+        strip the marker bit."""
+        first = buf[pos]
+        for length in range(1, 9):
+            if first & (0x80 >> (length - 1)):
+                raw = buf[pos : pos + length]
+                if keep_marker:
+                    return raw, pos + length
+                return int.from_bytes(raw, "big") & ((1 << (7 * length)) - 1), pos + length
+        raise ValueError("invalid EBML varint")
+
+    def walk_ebml(buf: bytes, out: dict) -> None:
+        pos = 0
+        while pos < len(buf):
+            eid, pos = vint(buf, pos, keep_marker=True)
+            size, pos = vint(buf, pos, keep_marker=False)
+            body = buf[pos : pos + size]
+            pos += size
+            if eid in ebml_containers:
+                walk_ebml(body, out)
+            elif eid == b"\x2a\xd7\xb1":  # TimestampScale (ns per tick)
+                out["ts_scale"] = int.from_bytes(body, "big")
+            elif eid == b"\x44\x89":      # Duration (float, in ticks)
+                out["dur_ticks"] = struct.unpack(">d" if len(body) == 8 else ">f", body)[0]
+            elif eid == b"\x86":          # CodecID
+                out["codec"] = body.decode("ascii", "replace")
+            elif eid == b"\xb0":
+                out["width"] = int.from_bytes(body, "big")
+            elif eid == b"\xba":
+                out["height"] = int.from_bytes(body, "big")
+            elif eid == b"\xbb":          # CuePoint == one keyframe index
+                out["n_keyframes"] = out.get("n_keyframes", 0) + 1
+
+    if len(buf) >= 12 and buf[4:8] == b"ftyp":
+        out: dict = {"container": "mp4"}
+        walk_mp4(buf, out)
+        return out
+    if buf[:4] == b"\x1a\x45\xdf\xa3":
+        out = {"container": "mkv"}
+        walk_ebml(buf, out)
+        scale, ticks = out.pop("ts_scale", None), out.pop("dur_ticks", None)
+        if scale is not None and ticks is not None:
+            out["duration_ms"] = int(round(ticks * scale / 1_000_000))
+        return out
+    return {"container": "unknown"}
+
+
+def _video_stats(doc_id, payload):
+    """Container, codec, size, duration and keyframe count of a video."""
+    r = _video(payload)
+    return [(doc_id, *(r.get(f) for f in VIDEO_CONTAINER_SCHEMA.names[1:]))]
+
+
+synth_video_container_payload = _synth(_video_payload)
+parse_video_container_stats = _decoder(_video_stats, VIDEO_CONTAINER_SCHEMA)
+
+
+# --------------------------------------------------------------------------
+# The query table: (name, synth, decode, oracle, tags, doc). Each query
+# runs decode(synth(documents)); the oracle recomputes its rows from the
+# generating formula in DuckDB SQL.
+# --------------------------------------------------------------------------
+
+# (name, synth, decode, tags, doc, oracle)
+_QUERIES = (
+    (
+        "multimodal_resize_stats",
+        _text_payloads,
+        lambda df: resize_payloads(df, 256).select("doc_id", "n_bytes_in", "n_bytes_out"),
+        ("multimodal",),
+        "Input and output byte sizes of the 256-byte resize stage.",
+        """
+        SELECT doc_id,
+               octet_length(encode(text)) AS n_bytes_in,
+               least(octet_length(encode(text)), 256) AS n_bytes_out
+        FROM documents WHERE text IS NOT NULL
+    """,
+    ),
+    (
+        "multimodal_frame_counts",
+        _text_payloads,
+        lambda df: sample_frames(df, 64, 4)
+        .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sampled_frames")),
+        ("multimodal",),
+        "Frames per document after stride-4 sampling of 64-byte frames.",
+        """
+        SELECT doc_id,
+               CAST(ceil(greatest(octet_length(encode(text)) // 64, 1) / 4.0) AS BIGINT)
+                   AS n_sampled_frames
+        FROM documents WHERE text IS NOT NULL
+    """,
+    ),
+    (
+        "multimodal_payload_stats",
+        _text_payloads,
+        lambda df: decode_and_featurize(df).select("doc_id", "n_bytes", "payload_md5"),
+        ("multimodal",),
+        "Byte length and md5 of each text payload, byte-identical to DuckDB's blob functions.",
+        """
+        SELECT doc_id,
+               octet_length(encode(text)) AS n_bytes,
+               md5(text) AS payload_md5
+        FROM documents WHERE text IS NOT NULL
+    """,
+    ),
+    (
+        "multimodal_wav_pcm_stats",
+        synth_wav_pcm_payload,
+        decode_wav_pcm_stats,
+        ("multimodal", "audio"),
+        "Per-channel mean, peak and RMS amplitude of 16-bit PCM WAV files.",
+        """
+        WITH params AS (
+            SELECT doc_id,
+                   1 + doc_id % 2 AS n_channels,
+                   50 + doc_id % 17 AS n_frames,
+                   8000 + (doc_id % 5) * 8000 AS sample_rate
+            FROM documents
+        ),
+        frames AS (
+            SELECT doc_id, n_channels, n_frames, sample_rate,
+                   UNNEST(range(0, n_frames)) AS k
+            FROM params
+        ),
+        samples AS (
+            SELECT doc_id, n_frames, sample_rate, k,
+                   UNNEST(range(0, n_channels)) AS channel
+            FROM frames
+        ),
+        amps AS (
+            SELECT doc_id, n_frames, sample_rate, channel,
+                   ((doc_id * 7919 + k * 31 + channel * 17) % 2003) - 1001 AS amp
+            FROM samples
+        )
+        SELECT doc_id,
+               CAST(channel AS INT) AS channel,
+               CAST(n_frames AS INT) AS n_frames,
+               CAST(sample_rate AS INT) AS sample_rate,
+               round(avg(amp), 6) AS mean_amp,
+               CAST(max(abs(amp)) AS INT) AS peak_amp,
+               round(sqrt(avg(CAST(amp * amp AS DOUBLE))), 6) AS rms_amp
+        FROM amps
+        GROUP BY doc_id, channel, n_frames, sample_rate
+    """,
+    ),
+    (
+        "multimodal_header_sniff",
+        synth_container_payload,
+        sniff_container_headers,
+        ("multimodal",),
+        "Format, dimensions and sample rate sniffed from container headers.",
+        """
+        SELECT doc_id,
+               CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
+                               WHEN 2 THEN 'gif' ELSE 'wav' END AS detected_format,
+               CASE WHEN doc_id % 4 IN (0, 1, 2)
+                    THEN CAST(16 + doc_id % 101 AS INT) END AS width,
+               CASE WHEN doc_id % 4 IN (0, 1, 2)
+                    THEN CAST(16 + doc_id % 53 AS INT) END AS height,
+               CASE WHEN doc_id % 4 = 3
+                    THEN CAST(8000 + (doc_id % 5) * 8000 AS INT) END AS sample_rate
+        FROM documents
+    """,
+    ),
+    (
+        "multimodal_png_pixel_stats",
+        synth_png_payload,
+        decode_png_pixel_stats,
+        ("multimodal", "image"),
+        "Per-channel pixel stats of 8-bit RGB PNGs using all five scanline filters.",
+        """
+        WITH params AS (
+            SELECT doc_id, 3 + doc_id % 5 AS w, 2 + doc_id % 4 AS h
+            FROM documents
+        ),
+        ys AS (SELECT doc_id, w, h, UNNEST(range(0, h)) AS y FROM params),
+        xs AS (SELECT doc_id, w, h, y, UNNEST(range(0, w)) AS x FROM ys),
+        cs AS (SELECT doc_id, w, h, y, x, UNNEST(range(0, 3)) AS c FROM xs),
+        vals AS (
+            SELECT doc_id, w, h, c, x, y,
+                   (doc_id * 149 + y * 41 + x * 13 + c * 5) % 256 AS v
+            FROM cs
+        )
+        SELECT doc_id,
+               CAST(c AS INT) AS channel,
+               CAST(w AS INT) AS width,
+               CAST(h AS INT) AS height,
+               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
+               CAST(min(v) AS INT) AS min_val,
+               CAST(max(v) AS INT) AS max_val,
+               CAST(max(CASE WHEN x = 0 AND y = 0 THEN v END) AS INT) AS corner_val
+        FROM vals
+        GROUP BY doc_id, c, w, h
+    """,
+    ),
+    (
+        "multimodal_bmp_pixel_stats",
+        synth_bmp_payload,
+        decode_bmp_pixel_stats,
+        ("multimodal", "image"),
+        "Per-channel pixel stats of bottom-up, row-padded 24-bit BMPs.",
+        """
+        WITH params AS (
+            SELECT doc_id, 3 + doc_id % 4 AS w, 2 + doc_id % 3 AS h
+            FROM documents
+        ),
+        ys AS (SELECT doc_id, w, h, UNNEST(range(0, h)) AS y FROM params),
+        xs AS (SELECT doc_id, w, h, y, UNNEST(range(0, w)) AS x FROM ys),
+        cs AS (SELECT doc_id, w, h, y, x, UNNEST(range(0, 3)) AS c FROM xs),
+        vals AS (
+            SELECT doc_id, w, h, c, x, y,
+                   (doc_id * 131 + y * 37 + x * 11 + c * 7) % 256 AS v
+            FROM cs
+        )
+        SELECT doc_id,
+               CAST(c AS INT) AS channel,
+               CAST(w AS INT) AS width,
+               CAST(h AS INT) AS height,
+               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
+               CAST(min(v) AS INT) AS min_val,
+               CAST(max(v) AS INT) AS max_val,
+               CAST(max(CASE WHEN x = 0 AND y = 0 THEN v END) AS INT) AS corner_val
+        FROM vals
+        GROUP BY doc_id, c, w, h
+    """,
+    ),
+    (
+        "multimodal_gif_pixel_stats",
+        synth_gif_payload,
+        decode_gif_pixel_stats,
+        ("multimodal", "image"),
+        "Per-channel pixel stats of LZW-compressed GIFs with per-file palettes.",
+        """
+        WITH params AS (
+            SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
+            FROM documents
+        ),
+        ys AS (SELECT doc_id, w, h, UNNEST(range(0, h)) AS y FROM params),
+        xs AS (SELECT doc_id, w, h, y, UNNEST(range(0, w)) AS x FROM ys),
+        cs AS (SELECT doc_id, w, h, y, x, UNNEST(range(0, 3)) AS c FROM xs),
+        vals AS (
+            SELECT doc_id, w, h, c, x, y,
+                   (((doc_id * 157 + y * 43 + x * 17) % 256) * 5
+                    + c * 11 + doc_id) % 256 AS v
+            FROM cs
+        )
+        SELECT doc_id,
+               CAST(c AS INT) AS channel,
+               CAST(w AS INT) AS width,
+               CAST(h AS INT) AS height,
+               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
+               CAST(min(v) AS INT) AS min_val,
+               CAST(max(v) AS INT) AS max_val,
+               CAST(max(CASE WHEN x = 0 AND y = 0 THEN v END) AS INT) AS corner_val
+        FROM vals
+        GROUP BY doc_id, c, w, h
+    """,
+    ),
+    (
+        "multimodal_jpeg_pixel_stats",
+        synth_jpeg_payload,
+        decode_jpeg_pixel_stats,
+        ("multimodal", "image"),
+        "Pixel stats of baseline grayscale JPEGs.",
+        """
+        WITH params AS (
+            SELECT doc_id,
+                   1 + doc_id % 3 AS bw,
+                   1 + doc_id % 2 AS bh
+            FROM documents
+        ),
+        bys AS (SELECT doc_id, bw, bh, UNNEST(range(0, bh)) AS by FROM params),
+        bxs AS (SELECT doc_id, bw, bh, by, UNNEST(range(0, bw)) AS bx FROM bys),
+        vals AS (
+            SELECT doc_id, bw, bh,
+                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS v,
+                   bx, by
+            FROM bxs
+        )
+        SELECT doc_id,
+               CAST(8 * bw AS INT) AS width,
+               CAST(8 * bh AS INT) AS height,
+               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
+               CAST(min(v) AS INT) AS min_val,
+               CAST(max(v) AS INT) AS max_val,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN v END) AS INT) AS corner_val
+        FROM vals
+        GROUP BY doc_id, bw, bh
+    """,
+    ),
+    (
+        "multimodal_video_container_stats",
+        synth_video_container_payload,
+        parse_video_container_stats,
+        ("multimodal", "video"),
+        "Codec, geometry, duration and keyframe count parsed from MP4 and MKV containers.",
+        """
+        SELECT doc_id,
+               CASE WHEN doc_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
+               CASE WHEN doc_id % 2 = 0 THEN
+                    CASE doc_id % 3 WHEN 0 THEN 'avc1' WHEN 1 THEN 'hev1'
+                                    ELSE 'av01' END
+               ELSE
+                    CASE doc_id % 3 WHEN 0 THEN 'V_MPEG4/ISO/AVC'
+                                    WHEN 1 THEN 'V_MPEGH/ISO/HEVC'
+                                    ELSE 'V_AV1' END
+               END AS codec,
+               CAST(16 + doc_id % 101 AS INT) AS width,
+               CAST(16 + doc_id % 53 AS INT) AS height,
+               CAST(1000 + (doc_id % 977) * 40 AS INT) AS duration_ms,
+               CAST(1 + doc_id % 29 AS INT) AS n_keyframes
+        FROM documents
+    """,
+    ),
+    (
+        "multimodal_jpeg_color_pixel_stats",
+        synth_jpeg_color_payload,
+        decode_jpeg_color_pixel_stats,
+        ("multimodal", "image"),
+        "Per-channel RGB stats of 4:4:4 color baseline JPEGs.",
+        """
+        WITH params AS (
+            SELECT doc_id, 1 + doc_id % 3 AS bw, 1 + doc_id % 2 AS bh
+            FROM documents
+        ),
+        bys AS (SELECT doc_id, bw, bh, UNNEST(range(0, bh)) AS by FROM params),
+        bxs AS (SELECT doc_id, bw, bh, by, UNNEST(range(0, bw)) AS bx FROM bys),
+        ycc AS (
+            SELECT doc_id, bw, bh, bx, by,
+                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS y,
+                   (doc_id * 41 + bx * 67 + by * 89) % 256 - 128 AS cb,
+                   (doc_id * 43 + bx * 71 + by * 97) % 256 - 128 AS cr
+            FROM bxs
+        ),
+        rgb AS (
+            SELECT doc_id, bw, bh, bx, by,
+                   LEAST(255, GREATEST(0,
+                       y + CAST(FLOOR((91881 * cr + 32768) / 65536.0) AS BIGINT)
+                   )) AS r,
+                   LEAST(255, GREATEST(0,
+                       y + CAST(FLOOR((-22554 * cb - 46802 * cr + 32768) / 65536.0) AS BIGINT)
+                   )) AS g,
+                   LEAST(255, GREATEST(0,
+                       y + CAST(FLOOR((116130 * cb + 32768) / 65536.0) AS BIGINT)
+                   )) AS b
+            FROM ycc
+        )
+        SELECT doc_id,
+               CAST(8 * bw AS INT) AS width,
+               CAST(8 * bh AS INT) AS height,
+               round(avg(CAST(r AS DOUBLE)), 6) AS mean_r,
+               round(avg(CAST(g AS DOUBLE)), 6) AS mean_g,
+               round(avg(CAST(b AS DOUBLE)), 6) AS mean_b,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN r END) AS INT) AS corner_r,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN g END) AS INT) AS corner_g,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN b END) AS INT) AS corner_b
+        FROM rgb
+        GROUP BY doc_id, bw, bh
+    """,
+    ),
+    (
+        "multimodal_jpeg_420_pixel_stats",
+        synth_jpeg_420_payload,
+        decode_jpeg_color_pixel_stats,
+        ("multimodal", "image"),
+        "Per-channel RGB stats of 4:2:0 baseline JPEGs with restart markers.",
+        """
+        WITH params AS (
+            SELECT doc_id, 1 + doc_id % 2 AS mw, 1 + doc_id % 3 AS mh
+            FROM documents
+        ),
+        bys AS (SELECT doc_id, mw, mh, UNNEST(range(0, 2 * mh)) AS by FROM params),
+        bxs AS (SELECT doc_id, mw, mh, by, UNNEST(range(0, 2 * mw)) AS bx FROM bys),
+        ycc AS (
+            SELECT doc_id, mw, mh, bx, by,
+                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS y,
+                   (doc_id * 41 + (bx // 2) * 67 + (by // 2) * 89) % 256 - 128 AS cb,
+                   (doc_id * 43 + (bx // 2) * 71 + (by // 2) * 97) % 256 - 128 AS cr
+            FROM bxs
+        ),
+        rgb AS (
+            SELECT doc_id, mw, mh, bx, by,
+                   LEAST(255, GREATEST(0,
+                       y + CAST(FLOOR((91881 * cr + 32768) / 65536.0) AS BIGINT)
+                   )) AS r,
+                   LEAST(255, GREATEST(0,
+                       y + CAST(FLOOR((-22554 * cb - 46802 * cr + 32768) / 65536.0) AS BIGINT)
+                   )) AS g,
+                   LEAST(255, GREATEST(0,
+                       y + CAST(FLOOR((116130 * cb + 32768) / 65536.0) AS BIGINT)
+                   )) AS b
+            FROM ycc
+        )
+        SELECT doc_id,
+               CAST(16 * mw AS INT) AS width,
+               CAST(16 * mh AS INT) AS height,
+               round(avg(CAST(r AS DOUBLE)), 6) AS mean_r,
+               round(avg(CAST(g AS DOUBLE)), 6) AS mean_g,
+               round(avg(CAST(b AS DOUBLE)), 6) AS mean_b,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN r END) AS INT) AS corner_r,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN g END) AS INT) AS corner_g,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN b END) AS INT) AS corner_b
+        FROM rgb
+        GROUP BY doc_id, mw, mh
+    """,
+    ),
+    (
+        "multimodal_jpeg_progressive_pixel_stats",
+        synth_jpeg_progressive_payload,
+        decode_jpeg_pixel_stats,
+        ("multimodal", "image"),
+        "Pixel stats of three-scan progressive grayscale JPEGs.",
+        """
+        WITH params AS (
+            SELECT doc_id,
+                   1 + doc_id % 3 AS bw,
+                   1 + doc_id % 2 AS bh
+            FROM documents
+        ),
+        bys AS (SELECT doc_id, bw, bh, UNNEST(range(0, bh)) AS by FROM params),
+        bxs AS (SELECT doc_id, bw, bh, by, UNNEST(range(0, bw)) AS bx FROM bys),
+        vals AS (
+            SELECT doc_id, bw, bh,
+                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS v,
+                   bx, by
+            FROM bxs
+        )
+        SELECT doc_id,
+               CAST(8 * bw AS INT) AS width,
+               CAST(8 * bh AS INT) AS height,
+               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
+               CAST(min(v) AS INT) AS min_val,
+               CAST(max(v) AS INT) AS max_val,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN v END) AS INT)
+                   AS corner_val
+        FROM vals
+        GROUP BY doc_id, bw, bh
+    """,
+    ),
+    (
+        "multimodal_jpeg_422_pixel_stats",
+        synth_jpeg_422_payload,
+        decode_jpeg_color_pixel_stats,
+        ("multimodal", "image"),
+        "Per-channel RGB stats of 4:2:2 baseline JPEGs.",
+        """
+        WITH params AS (
+            SELECT doc_id, 1 + doc_id % 2 AS mw, 1 + doc_id % 3 AS mh
+            FROM documents
+        ),
+        bys AS (SELECT doc_id, mw, mh, UNNEST(range(0, mh)) AS by FROM params),
+        bxs AS (SELECT doc_id, mw, mh, by, UNNEST(range(0, 2 * mw)) AS bx FROM bys),
+        ycc AS (
+            SELECT doc_id, mw, mh, bx, by,
+                   (doc_id * 37 + bx * 59 + by * 83) % 256 AS y,
+                   (doc_id * 41 + (bx // 2) * 67 + by * 89) % 256 - 128 AS cb,
+                   (doc_id * 43 + (bx // 2) * 71 + by * 97) % 256 - 128 AS cr
+            FROM bxs
+        ),
+        rgb AS (
+            SELECT doc_id, mw, mh, bx, by,
+                   LEAST(255, GREATEST(0,
+                       y + CAST(FLOOR((91881 * cr + 32768) / 65536.0) AS BIGINT)
+                   )) AS r,
+                   LEAST(255, GREATEST(0,
+                       y + CAST(FLOOR((-22554 * cb - 46802 * cr + 32768) / 65536.0) AS BIGINT)
+                   )) AS g,
+                   LEAST(255, GREATEST(0,
+                       y + CAST(FLOOR((116130 * cb + 32768) / 65536.0) AS BIGINT)
+                   )) AS b
+            FROM ycc
+        )
+        SELECT doc_id,
+               CAST(16 * mw AS INT) AS width,
+               CAST(8 * mh AS INT) AS height,
+               round(avg(CAST(r AS DOUBLE)), 6) AS mean_r,
+               round(avg(CAST(g AS DOUBLE)), 6) AS mean_g,
+               round(avg(CAST(b AS DOUBLE)), 6) AS mean_b,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN r END) AS INT) AS corner_r,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN g END) AS INT) AS corner_g,
+               CAST(max(CASE WHEN bx = 0 AND by = 0 THEN b END) AS INT) AS corner_b
+        FROM rgb
+        GROUP BY doc_id, mw, mh
+    """,
+    ),
+    (
+        "multimodal_wav_adpcm_stats",
+        synth_wav_adpcm_payload,
+        decode_wav_adpcm_stats,
+        ("multimodal", "audio", "adpcm"),
+        "Sample stats of IMA ADPCM WAV files; the oracle replays the codec as a recursive CTE.",
+        """
+        WITH RECURSIVE step_tab(si, sv) AS (
+            SELECT * FROM (VALUES
+            (0, 7), (1, 8), (2, 9), (3, 10), (4, 11), (5, 12), (6, 13), (7,
+            14), (8, 16), (9, 17), (10, 19), (11, 21), (12, 23), (13, 25),
+            (14, 28), (15, 31), (16, 34), (17, 37), (18, 41), (19, 45), (20,
+            50), (21, 55), (22, 60), (23, 66), (24, 73), (25, 80), (26, 88),
+            (27, 97), (28, 107), (29, 118), (30, 130), (31, 143), (32, 157),
+            (33, 173), (34, 190), (35, 209), (36, 230), (37, 253), (38, 279),
+            (39, 307), (40, 337), (41, 371), (42, 408), (43, 449), (44, 494),
+            (45, 544), (46, 598), (47, 658), (48, 724), (49, 796), (50, 876),
+            (51, 963), (52, 1060), (53, 1166), (54, 1282), (55, 1411), (56,
+            1552), (57, 1707), (58, 1878), (59, 2066), (60, 2272), (61, 2499),
+            (62, 2749), (63, 3024), (64, 3327), (65, 3660), (66, 4026), (67,
+            4428), (68, 4871), (69, 5358), (70, 5894), (71, 6484), (72, 7132),
+            (73, 7845), (74, 8630), (75, 9493), (76, 10442), (77, 11487), (78,
+            12635), (79, 13899), (80, 15289), (81, 16818), (82, 18500), (83,
+            20350), (84, 22385), (85, 24623), (86, 27086), (87, 29794), (88,
+            32767)
+            ) t(si, sv)
+        ),
+        params AS (
+            SELECT doc_id,
+                   64 + 8 * (doc_id % 3) AS n_nib,
+                   ((doc_id * 7919) % 2003) - 1001 AS p0,
+                   doc_id % 89 AS idx0,
+                   8000 + (doc_id % 4) * 4000 AS sample_rate
+            FROM documents
+        ),
+        dec(doc_id, k, pred, idx) AS (
+            SELECT doc_id, 0, p0, idx0 FROM params
+            UNION ALL
+            SELECT d.doc_id, d.k + 1,
+                   GREATEST(-32768, LEAST(32767, d.pred
+                       + CASE WHEN ((d.doc_id*13 + d.k*7) % 16) >= 8
+                              THEN -1 ELSE 1 END
+                       * ((st.sv // 8)
+                          + CASE WHEN ((d.doc_id*13 + d.k*7) % 16) % 2 = 1
+                                 THEN st.sv // 4 ELSE 0 END
+                          + CASE WHEN (((d.doc_id*13 + d.k*7) % 16) // 2) % 2 = 1
+                                 THEN st.sv // 2 ELSE 0 END
+                          + CASE WHEN (((d.doc_id*13 + d.k*7) % 16) // 4) % 2 = 1
+                                 THEN st.sv ELSE 0 END))),
+                   GREATEST(0, LEAST(88, d.idx
+                       + CASE ((d.doc_id*13 + d.k*7) % 16) % 8
+                              WHEN 4 THEN 2 WHEN 5 THEN 4
+                              WHEN 6 THEN 6 WHEN 7 THEN 8
+                              ELSE -1 END))
+            FROM dec d
+            JOIN step_tab st ON st.si = d.idx
+            JOIN params p ON p.doc_id = d.doc_id
+            WHERE d.k < p.n_nib
+        )
+        SELECT d.doc_id,
+               CAST(1 + p.n_nib AS INT) AS n_samples,
+               CAST(p.sample_rate AS INT) AS sample_rate,
+               round(avg(CAST(d.pred AS DOUBLE)), 6) AS mean_amp,
+               CAST(min(d.pred) AS INT) AS min_amp,
+               CAST(max(d.pred) AS INT) AS max_amp,
+               CAST(max(CASE WHEN d.k = p.n_nib THEN d.pred END) AS INT)
+                   AS end_amp
+        FROM dec d JOIN params p ON p.doc_id = d.doc_id
+        GROUP BY d.doc_id, p.n_nib, p.sample_rate
+    """,
+    ),
+    (
+        "multimodal_wav_g711_stats",
+        synth_wav_g711_payload,
+        decode_wav_g711_stats,
+        ("multimodal", "audio", "g711"),
+        "Sample stats of mu-law and A-law G.711 WAV files.",
+        """
+        WITH params AS (
+            SELECT doc_id, 120 + doc_id % 9 AS n FROM documents
+        ),
+        bytes_ AS (
+            SELECT doc_id, n, UNNEST(range(0, n)) AS k FROM params
+        ),
+        b_ AS (
+            SELECT doc_id, n,
+                   (doc_id * 19 + k * 11) % 256 AS b
+            FROM bytes_
+        ),
+        fields AS (
+            -- mu-law inverts all bits; A-law inverts the even bits
+            SELECT doc_id, n,
+                   CASE WHEN doc_id % 2 = 1 THEN 255 - b
+                        ELSE xor(b, 85) END AS u
+            FROM b_
+        ),
+        expanded AS (
+            SELECT doc_id, n,
+                   CASE WHEN u >= 128 THEN -1 ELSE 1 END
+                   * CASE WHEN doc_id % 2 = 1 THEN
+                       -- mu-law: ((mant*8 + 0x84) << exp) - 0x84
+                       ((u % 16) * 8 + 132)
+                         * CAST(pow(2, (u // 16) % 8) AS BIGINT) - 132
+                     WHEN (u // 16) % 8 = 0 THEN
+                       -- A-law segment 0: mant*16 + 8
+                       (u % 16) * 16 + 8
+                     ELSE
+                       -- A-law: ((mant*16 + 0x108) << (exp - 1))
+                       ((u % 16) * 16 + 264)
+                         * CAST(pow(2, (u // 16) % 8 - 1) AS BIGINT)
+                     END AS amp
+            FROM fields
+        )
+        SELECT doc_id,
+               CASE WHEN doc_id % 2 = 1 THEN 'mulaw' ELSE 'alaw' END AS law,
+               CAST(n AS INT) AS n_samples,
+               round(avg(CAST(amp AS DOUBLE)), 6) AS mean_amp,
+               CAST(min(amp) AS INT) AS min_amp,
+               CAST(max(amp) AS INT) AS max_amp
+        FROM expanded
+        GROUP BY doc_id, n
+    """,
+    ),
+    (
+        "multimodal_tiff_pixel_stats",
+        synth_tiff_payload,
+        decode_tiff_pixel_stats,
+        ("multimodal", "image", "tiff"),
+        "Pixel stats of II uncompressed and MM PackBits grayscale TIFFs.",
+        """
+        WITH params AS (
+            SELECT doc_id,
+                   16 + 8 * (doc_id % 3) AS w,
+                   8 + 4 * (doc_id % 2) AS h
+            FROM documents
+        ),
+        rows_ AS (
+            SELECT doc_id, w, h, UNNEST(range(0, h)) AS y FROM params
+        ),
+        vals AS (
+            SELECT doc_id, w, h, y,
+                   (doc_id * 37 + y * 53) % 256 AS v
+            FROM rows_
+        )
+        SELECT doc_id,
+               CAST(w AS INT) AS width,
+               CAST(h AS INT) AS height,
+               CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END
+                   AS byte_order,
+               doc_id % 2 = 1 AS compressed,
+               round(avg(CAST(v AS DOUBLE)), 6) AS mean_val,
+               CAST(min(v) AS INT) AS min_val,
+               CAST(max(v) AS INT) AS max_val,
+               CAST(max(CASE WHEN y = 0 THEN v END) AS INT) AS corner_val
+        FROM vals
+        GROUP BY doc_id, w, h
+    """,
+    ),
+    (
+        "multimodal_tiff_lzw_stats",
+        synth_tiff_lzw_payload,
+        decode_tiff_pixel_stats,
+        ("multimodal", "image", "tiff", "lzw"),
+        "Pixel stats of LZW TIFFs with and without the horizontal predictor.",
+        """
         WITH params AS (
             SELECT doc_id,
                    16 + 8 * (doc_id % 3) AS w,
@@ -4285,258 +2744,14 @@ def synth_tiff_lzw_payload(df: DataFrame) -> DataFrame:
         FROM vals
         GROUP BY doc_id, w, h
     """,
-    tags=("multimodal", "image", "tiff", "lzw"),
-)
-def multimodal_tiff_lzw_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pixel statistics decoded from REAL LZW-compressed TIFFs under the
-    hash gate — MSB-first variable-width codes with the spec's EARLY
-    width change, both byte orders, and the horizontal-differencing
-    predictor (odd docs store per-row byte diffs that the decoder must
-    cumulative-sum back, TIFF 6.0 §14). The oracle recomputes every
-    pixel from the generating formula, so a wrong width-switch point, a
-    missed KwKwK, or a skipped/double-applied predictor all fail the
-    hash; corner_val pins pixel (0, 0) exactly.
-    Public spec: TIFF 6.0 (Adobe, 1992) §13-14; encode/decode are
-    independent-direction implementations of the same spec (the GIF
-    LZW pair above has the same posture)."""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_tiff_pixel_stats(synth_tiff_lzw_payload(d))
-
-
-# --------------------------------------------------------------------------
-# PNG Adam7 interlace + 16-bit samples (PNG spec §8.2 / §7.2): the round-13
-# generalization of the sequential 8-bit decoder above — seven independent
-# sub-images, each with its own scanline filtering, 2-byte big-endian
-# samples widening the filter arithmetic to 6-byte pixels
-# --------------------------------------------------------------------------
-
-# Adam7 pass geometry: (x_start, y_start, x_step, y_step) per pass
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-
-
-def synth_png_adam7_payload(df: DataFrame) -> DataFrame:
-    """Spec-valid 16-bit RGB Adam7-INTERLACED PNGs: sample(x, y, c) =
-    (doc_id*40503 + y*1031 + x*527 + c*257) % 65536, stored big-endian
-    (PNG §7.2). Dimensions 8..12 x 8..11 make every one of the seven
-    passes non-empty. Each pass is an independent sub-image: its
-    scanlines filter against the RECONSTRUCTED prior row of the SAME
-    pass with 6-byte pixel offsets, filter type (doc_id + pass + row)
-    % 5 — so a decoder that deinterlaces in the wrong pass order,
-    carries filter state across passes, or uses 3-byte offsets cannot
-    reproduce the pixels."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        bpp = 6  # 16-bit RGB: 3 samples x 2 bytes
-
-        def filter_row(raw, prior, ftype):
-            left = np.concatenate(
-                [np.zeros(bpp, dtype=np.int64), raw[:-bpp]]
-            )
-            ul = np.concatenate(
-                [np.zeros(bpp, dtype=np.int64), prior[:-bpp]]
-            )
-            if ftype == 0:
-                return raw
-            if ftype == 1:
-                return (raw - left) % 256
-            if ftype == 2:
-                return (raw - prior) % 256
-            if ftype == 3:
-                return (raw - (left + prior) // 2) % 256
-            pred = np.array(
-                [_paeth(int(a), int(b), int(cc))
-                 for a, b, cc in zip(left, prior, ul)],
-                dtype=np.int64,
-            )
-            return (raw - pred) % 256
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 8 + i % 5, 8 + i % 4
-                y = np.arange(h, dtype=np.int64)[:, None, None]
-                x = np.arange(w, dtype=np.int64)[None, :, None]
-                c = np.arange(3, dtype=np.int64)[None, None, :]
-                px = (i * 40503 + y * 1031 + x * 527 + c * 257) % 65536
-                out = bytearray()
-                for p, (x0, y0, dx, dy) in enumerate(_ADAM7, start=1):
-                    sub = px[y0::dy, x0::dx, :]
-                    hp, wp = sub.shape[0], sub.shape[1]
-                    if hp == 0 or wp == 0:
-                        continue
-                    # big-endian 16-bit samples -> byte raster per row
-                    hi = sub // 256
-                    lo = sub % 256
-                    raster = np.stack([hi, lo], axis=-1).reshape(
-                        hp, wp * bpp
-                    )
-                    prior = np.zeros(wp * bpp, dtype=np.int64)
-                    for j in range(hp):
-                        raw = raster[j]
-                        ftype = (i + p + j) % 5
-                        out.append(ftype)
-                        out.extend(
-                            filter_row(raw, prior, ftype)
-                            .astype(np.uint8).tobytes()
-                        )
-                        prior = raw
-                ihdr = struct.pack(">IIBBBBB", w, h, 16, 2, 0, 0, 1)
-                buf = (
-                    _PNG_SIG
-                    + _png_chunk(b"IHDR", ihdr)
-                    + _png_chunk(b"IDAT", zlib.compress(bytes(out)))
-                    + _png_chunk(b"IEND", b"")
-                )
-                rows.append({"doc_id": doc_id, "payload": buf})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()),
-         T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-def decode_png_adam7_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL Adam7 + 16-bit PNG decode, no codec library: CRC-verified
-    chunk walk, one zlib-inflate, then the seven passes consumed IN
-    ORDER — each unfiltered independently (filter state resets per
-    pass, 6-byte pixel offsets) and scattered to its interlace grid
-    positions — into an (h, w, 3) uint16 cube reduced to per-channel
-    stats. Empty passes (possible on small images) consume zero bytes,
-    exactly as the spec requires."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        bpp = 6
-
-        def unfilter(raw_bytes, hp, stride):
-            cube = np.zeros((hp, stride), dtype=np.int64)
-            prior = np.zeros(stride, dtype=np.int64)
-            pos = 0
-            for j in range(hp):
-                ftype = raw_bytes[pos]
-                filt_b = np.frombuffer(
-                    raw_bytes[pos + 1: pos + 1 + stride], dtype=np.uint8
-                ).astype(np.int64)
-                pos += 1 + stride
-                if ftype == 0:
-                    recon = filt_b
-                elif ftype == 1:
-                    recon = filt_b.copy()
-                    for k in range(bpp, stride):
-                        recon[k] = (recon[k] + recon[k - bpp]) % 256
-                elif ftype == 2:
-                    recon = (filt_b + prior) % 256
-                elif ftype == 3:
-                    recon = filt_b.copy()
-                    for k in range(stride):
-                        left = recon[k - bpp] if k >= bpp else 0
-                        recon[k] = (recon[k] + (left + prior[k]) // 2) % 256
-                else:
-                    recon = filt_b.copy()
-                    for k in range(stride):
-                        left = recon[k - bpp] if k >= bpp else 0
-                        ul = prior[k - bpp] if k >= bpp else 0
-                        recon[k] = (
-                            recon[k]
-                            + _paeth(int(left), int(prior[k]), int(ul))
-                        ) % 256
-                cube[j] = recon
-                prior = recon
-            return cube, pos
-
-        def decode(buf: bytes):
-            if buf[: len(_PNG_SIG)] != _PNG_SIG:
-                raise ValueError("not a PNG payload")
-            pos, ihdr, idat = len(_PNG_SIG), None, b""
-            while pos + 12 <= len(buf):
-                (size,) = struct.unpack(">I", buf[pos: pos + 4])
-                ctype = buf[pos + 4: pos + 8]
-                body = buf[pos + 8: pos + 8 + size]
-                (crc,) = struct.unpack(
-                    ">I", buf[pos + 8 + size: pos + 12 + size]
-                )
-                if zlib.crc32(ctype + body) & 0xFFFFFFFF != crc:
-                    raise ValueError(f"bad CRC in {ctype!r} chunk")
-                if ctype == b"IHDR":
-                    ihdr = struct.unpack(">IIBBBBB", body)
-                elif ctype == b"IDAT":
-                    idat += body
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + size
-            if ihdr is None or not idat:
-                raise ValueError("missing IHDR/IDAT chunk")
-            w, h, depth, ctype_, comp, filt, interlace = ihdr
-            if depth != 16 or ctype_ != 2 or comp != 0 or interlace != 1:
-                raise ValueError(
-                    f"unsupported PNG variant: depth={depth} "
-                    f"color={ctype_} interlace={interlace}"
-                )
-            raw = zlib.decompress(idat)
-            full = np.zeros((h, w, 3), dtype=np.int64)
-            pos = 0
-            for x0, y0, dx, dy in _ADAM7:
-                wp = max(0, -(-(w - x0) // dx))
-                hp = max(0, -(-(h - y0) // dy))
-                if wp == 0 or hp == 0:
-                    continue
-                stride = wp * bpp
-                cube, used = unfilter(raw[pos:], hp, stride)
-                pos += used
-                samples = cube.reshape(hp, wp, 3, 2)
-                vals = samples[..., 0] * 256 + samples[..., 1]
-                full[y0::dy, x0::dx, :] = vals
-            if pos != len(raw):
-                raise ValueError("IDAT size does not match pass layout")
-            return full, w, h
-
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                cube, w, h = decode(bytes(payload))
-                for ch in range(3):
-                    plane = cube[:, :, ch].astype(np.float64)
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "channel": ch,
-                            "width": w,
-                            "height": h,
-                            "mean_val": round(
-                                float(plane.sum() / (w * h)), 6
-                            ),
-                            "min_val": int(plane.min()),
-                            "max_val": int(plane.max()),
-                            "corner_val": int(cube[0, 0, ch]),
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PNG_STATS_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, PNG_STATS_SCHEMA)
-
-
-@register(
-    "multimodal_png_adam7_stats",
-    oracle="""
+    ),
+    (
+        "multimodal_png_adam7_stats",
+        synth_png_adam7_payload,
+        decode_png_pixel_stats,
+        ("multimodal", "image", "png", "interlace"),
+        "Per-channel sample stats of 16-bit RGB Adam7-interlaced PNGs.",
+        """
         WITH params AS (
             SELECT doc_id, 8 + doc_id % 5 AS w, 8 + doc_id % 4 AS h
             FROM documents
@@ -4562,116 +2777,14 @@ def decode_png_adam7_pixel_stats(df: DataFrame) -> DataFrame:
         FROM vals
         GROUP BY doc_id, c, w, h
     """,
-    tags=("multimodal", "image", "png", "interlace"),
-)
-def multimodal_png_adam7_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-channel pixel statistics decoded from REAL Adam7-interlaced
-    16-bit RGB PNGs under the hash gate — the seven-pass deinterlace
-    (PNG spec §8.2) with per-pass filter state and 2-byte big-endian
-    samples (§7.2) widening filter offsets to 6-byte pixels. Dimensions
-    make every pass non-empty and every filter type appears within each
-    payload; the oracle recomputes from the generating formula, so a
-    wrong pass order, cross-pass filter leakage, a byte-order slip on
-    the 16-bit samples, or 3-byte offsets all fail the hash.
-    (Round-13 extension of multimodal_png_pixel_stats; same
-    stdlib-zlib + numpy posture.)"""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_png_adam7_pixel_stats(synth_png_adam7_payload(d))
-
-
-def synth_tiff_multistrip_lzw_payload(df: DataFrame) -> DataFrame:
-    """Spec-valid MULTI-STRIP grayscale LZW TIFFs (round-13
-    generalization of synth_tiff_lzw_payload): RowsPerStrip=4 splits
-    each image into 3-4 strips, each compressed as an INDEPENDENT LZW
-    stream (the codec dictionary resets at every strip boundary — TIFF
-    6.0 strip semantics), with StripOffsets/StripByteCounts as
-    offset-resolved LONG arrays. pixel(x, y) = (doc_id*41 + y*59 +
-    x*31) % 256; even doc_ids II Predictor=1, odd MM Predictor=2
-    (differencing per row, so it composes with any strip split)."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        def entry(en, tag, typ, count, value):
-            if typ == 3:
-                v = struct.pack(en + "HH", value, 0)
-            else:
-                v = struct.pack(en + "I", value)
-            return struct.pack(en + "HHI", tag, typ, count) + v
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 16 + 8 * (i % 3)
-                h = 12 + 4 * (i % 2)
-                rps = 4
-                en = "<" if i % 2 == 0 else ">"
-                pred = 1 if i % 2 == 0 else 2
-                y, x = np.mgrid[0:h, 0:w]
-                img = ((i * 41 + y * 59 + x * 31) % 256).astype(np.int64)
-                plane = img.copy()
-                if pred == 2:
-                    plane[:, 1:] = (plane[:, 1:] - plane[:, :-1]) % 256
-                strips = [
-                    _tiff_lzw_compress(
-                        plane[s:s + rps].astype(np.uint8).tobytes()
-                    )
-                    for s in range(0, h, rps)
-                ]
-                n_strips = len(strips)
-                header = struct.pack(
-                    en + "2sHI", b"II" if en == "<" else b"MM", 42, 8
-                )
-                n_entries = 10
-                # layout: header | IFD | offsets array | counts array |
-                # strip data
-                arr_off = 8 + 2 + n_entries * 12 + 4
-                counts_off = arr_off + 4 * n_strips
-                data_off = counts_off + 4 * n_strips
-                offs = []
-                pos = data_off
-                for s in strips:
-                    offs.append(pos)
-                    pos += len(s)
-                ifd = struct.pack(en + "H", n_entries)
-                ifd += entry(en, 256, 3, 1, w)
-                ifd += entry(en, 257, 3, 1, h)
-                ifd += entry(en, 258, 3, 1, 8)
-                ifd += entry(en, 259, 3, 1, 5)           # LZW
-                ifd += entry(en, 262, 3, 1, 1)
-                # StripOffsets: LONG[n_strips] via offset
-                ifd += struct.pack(en + "HHII", 273, 4, n_strips, arr_off)
-                ifd += entry(en, 277, 3, 1, 1)
-                ifd += entry(en, 278, 3, 1, rps)         # RowsPerStrip
-                ifd += struct.pack(
-                    en + "HHII", 279, 4, n_strips, counts_off
-                )
-                ifd += entry(en, 317, 3, 1, pred)
-                ifd += struct.pack(en + "I", 0)
-                arrays = struct.pack(en + "I" * n_strips, *offs)
-                arrays += struct.pack(
-                    en + "I" * n_strips, *[len(s) for s in strips]
-                )
-                rows.append(
-                    {"doc_id": doc_id,
-                     "payload": header + ifd + arrays + b"".join(strips)}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()),
-         T.StructField("payload", T.BinaryType())]
-    )
-    return df.select("doc_id").mapInPandas(batches, schema)
-
-
-@register(
-    "multimodal_tiff_multistrip_stats",
-    oracle="""
+    ),
+    (
+        "multimodal_tiff_multistrip_stats",
+        synth_tiff_multistrip_lzw_payload,
+        decode_tiff_pixel_stats,
+        ("multimodal", "image", "tiff", "lzw"),
+        "Pixel stats of multi-strip LZW TIFFs, one LZW stream per strip.",
+        """
         WITH params AS (
             SELECT doc_id,
                    16 + 8 * (doc_id % 3) AS w,
@@ -4702,19 +2815,18 @@ def synth_tiff_multistrip_lzw_payload(df: DataFrame) -> DataFrame:
         FROM vals
         GROUP BY doc_id, w, h
     """,
-    tags=("multimodal", "image", "tiff", "lzw"),
+    ),
 )
-def multimodal_tiff_multistrip_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pixel statistics decoded from MULTI-STRIP LZW TIFFs under the
-    hash gate: StripOffsets/StripByteCounts are offset-resolved LONG
-    arrays, every strip is an independent LZW stream whose dictionary
-    and code width RESET at the boundary, and the horizontal-
-    differencing predictor (odd docs) must compose with the strip
-    split. A decoder that runs one LZW state across strips, mis-walks
-    the offset arrays, or sizes the last partial strip wrong fails the
-    hash. (Round-13 generalization of multimodal_tiff_lzw_stats;
-    TIFF 6.0 §13-14.)"""
-    d = load_table(spark, sf_dir, "documents")
-    return decode_tiff_pixel_stats(synth_tiff_multistrip_lzw_payload(d))
+
+
+def _register_all() -> None:
+    for name, synth, decode, tags, doc, oracle in _QUERIES:
+        def run(spark, sf_dir, synth=synth, decode=decode):
+            return decode(synth(load_table(spark, sf_dir, "documents")))
+
+        run.__name__ = run.__qualname__ = name
+        run.__doc__ = doc
+        register(name, oracle=oracle, tags=tags)(run)
+
+
+_register_all()

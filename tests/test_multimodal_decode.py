@@ -1,9 +1,11 @@
-"""Unit tests for the REAL WAV PCM decoder (multimodal round-4 tier).
+"""Unit tests for the multimodal decoders.
 
-The registry-level oracle test already value-gates multimodal_wav_pcm_stats
-end-to-end; these tests pin the decoder's container-walking behavior on
-inputs the synthesizer never produces: extra chunks, odd-size padding,
-and malformed payloads.
+The registry-level oracle tests value-gate every query end to end
+through Spark; these tests call each decode stage's kernel directly on
+payload bytes the synthesizers never produce (extra chunks, odd-size
+padding, AC and refinement data, restart markers, malformed input), so
+they need no Spark job. One test sends a malformed payload through the
+Spark driver.
 """
 
 from __future__ import annotations
@@ -12,6 +14,19 @@ import struct
 
 import numpy as np
 import pytest
+from pyspark.sql import Row
+
+from energy_datalake_solution_spark.operators import multimodal as mm
+
+
+def _rows(stats_of, schema, payload: bytes, doc_id: int = 1) -> list[Row]:
+    """One payload's stat rows, straight from a decode stage's kernel."""
+    return [Row(**dict(zip(schema.names, r))) for r in stats_of(doc_id, bytes(payload))]
+
+
+def _synth_rows(payload_of, stats_of, schema, doc_ids) -> list[Row]:
+    """Synthesize and decode each doc_id's payload."""
+    return [r for i in doc_ids for r in _rows(stats_of, schema, payload_of(i), i)]
 
 
 def _wav(samples: np.ndarray, sr: int = 8000, extra_chunks: bytes = b"") -> bytes:
@@ -33,24 +48,14 @@ def _wav(samples: np.ndarray, sr: int = 8000, extra_chunks: bytes = b"") -> byte
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _decode_one(spark, payload: bytes):
-    from pyspark.sql import types as T
-
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_wav_pcm_stats,
-    )
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    df = spark.createDataFrame([(1, bytearray(payload))], schema)
-    return decode_wav_pcm_stats(df).collect()
+def _decode_one(payload: bytes):
+    return _rows(mm._pcm_stats, mm.WAV_STATS_SCHEMA, payload)
 
 
-def test_decodes_stereo_samples_exactly(spark):
+def test_decodes_stereo_samples_exactly():
     left = np.array([0, 100, -100, 32767, -32768], dtype=np.int64)
     right = np.array([5, -5, 250, -250, 0], dtype=np.int64)
-    rows = _decode_one(spark, _wav(np.stack([left, right], axis=1), sr=44100))
+    rows = _decode_one(_wav(np.stack([left, right], axis=1), sr=44100))
     assert [r["channel"] for r in rows] == [0, 1]
     for r, ch in zip(rows, (left, right)):
         assert r["n_frames"] == 5
@@ -60,12 +65,12 @@ def test_decodes_stereo_samples_exactly(spark):
         assert r["rms_amp"] == pytest.approx(np.sqrt((ch.astype(float) ** 2).mean()), abs=1e-6)
 
 
-def test_skips_unknown_and_odd_sized_chunks(spark):
+def test_skips_unknown_and_odd_sized_chunks():
     # a 3-byte LIST chunk forces the word-alignment (size & 1) padding path;
     # the decoder must still find fmt/data after it
     extra = b"LIST" + struct.pack("<I", 3) + b"abc" + b"\x00"
     mono = np.array([[7], [-7], [21]], dtype=np.int64)
-    rows = _decode_one(spark, _wav(mono, sr=16000, extra_chunks=extra))
+    rows = _decode_one(_wav(mono, sr=16000, extra_chunks=extra))
     assert len(rows) == 1
     assert rows[0]["n_frames"] == 3
     assert rows[0]["peak_amp"] == 21
@@ -78,9 +83,19 @@ def test_skips_unknown_and_odd_sized_chunks(spark):
         b"RIFF\x04\x00\x00\x00WAVE",  # no fmt/data chunks
     ],
 )
-def test_malformed_payload_raises(spark, payload):
+def test_malformed_payload_raises(payload):
     with pytest.raises(Exception, match="not a RIFF/WAVE|missing fmt/data"):
-        _decode_one(spark, payload)
+        _decode_one(payload)
+
+
+def test_driver_surfaces_the_decoders_refusal(spark):
+    """A malformed payload sent through the Spark driver fails the job
+    with the decoder's own message."""
+    df = spark.createDataFrame(
+        [(1, b"\x89PNG\r\n\x1a\nnot audio")], "doc_id long, payload binary"
+    )
+    with pytest.raises(Exception, match="not a RIFF/WAVE payload"):
+        mm.decode_wav_pcm_stats(df).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -99,19 +114,11 @@ def _bmp(px: np.ndarray) -> bytes:
     return struct.pack("<2sIHHI", b"BM", 14 + 40 + len(data), 0, 0, 54) + info + data
 
 
-def _decode_bmp(spark, payload: bytes):
-    from pyspark.sql import types as T
-
-    from energy_datalake_solution_spark.operators.multimodal import decode_bmp_pixel_stats
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    df = spark.createDataFrame([(1, bytearray(payload))], schema)
-    return decode_bmp_pixel_stats(df).collect()
+def _decode_bmp(payload: bytes):
+    return _rows(mm._channel_stats(mm._bmp), mm.CHANNEL_STATS_SCHEMA, payload)
 
 
-def test_bmp_decode_unflips_rows_and_strips_padding(spark):
+def test_bmp_decode_unflips_rows_and_strips_padding():
     # 3x2 image (stride 12 -> 3 pad bytes/row): corner_val must be the
     # IMAGE top-left, which sits in the LAST stored row of the bottom-up
     # raster — a decoder that skips the flip reads the bottom-left instead.
@@ -119,7 +126,7 @@ def test_bmp_decode_unflips_rows_and_strips_padding(spark):
     px[0, 0] = (11, 12, 13)   # image top-left (B,G,R)
     px[1, 0] = (99, 98, 97)   # image bottom-left — the wrong answer
     px[1, 2] = (0, 0, 255)
-    rows = _decode_bmp(spark, _bmp(px))
+    rows = _decode_bmp(_bmp(px))
     assert [r["channel"] for r in rows] == [0, 1, 2]
     assert [r["corner_val"] for r in rows] == [11, 12, 13]
     assert rows[0]["width"] == 3 and rows[0]["height"] == 2
@@ -128,26 +135,18 @@ def test_bmp_decode_unflips_rows_and_strips_padding(spark):
         assert rows[ch]["mean_val"] == pytest.approx(px[:, :, ch].mean(), abs=1e-6)
 
 
-def test_bmp_malformed_or_unsupported_raises(spark):
+def test_bmp_malformed_or_unsupported_raises():
     with pytest.raises(Exception, match="not a BMP"):
-        _decode_bmp(spark, b"PNG?nope")
+        _decode_bmp(b"PNG?nope")
     # 8-bit palette BMP must be rejected, not silently misdecoded
     info = struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 8, 0, 16, 0, 0, 0, 0)
     bad = struct.pack("<2sIHHI", b"BM", 14 + 40 + 16, 0, 0, 54) + info + b"\x00" * 16
     with pytest.raises(Exception, match="unsupported BMP"):
-        _decode_bmp(spark, bad)
+        _decode_bmp(bad)
 
 
-def _decode_png(spark, payload: bytes):
-    from pyspark.sql import types as T
-
-    from energy_datalake_solution_spark.operators.multimodal import decode_png_pixel_stats
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    df = spark.createDataFrame([(1, bytearray(payload))], schema)
-    return decode_png_pixel_stats(df).collect()
+def _decode_png(payload: bytes):
+    return _rows(mm._channel_stats(mm._png), mm.CHANNEL_STATS_SCHEMA, payload)
 
 
 def _png_rgb(px: np.ndarray, filters: list[int]) -> bytes:
@@ -195,14 +194,14 @@ def _png_rgb(px: np.ndarray, filters: list[int]) -> bytes:
     )
 
 
-def test_png_decode_every_filter_type(spark):
+def test_png_decode_every_filter_type():
     """A 4x5 image encoded with one row per filter type (None, Sub, Up,
     Average, Paeth): decode must reproduce every pixel — proven via the
     per-channel stats AND the position-sensitive corner."""
     rng = np.arange(4 * 5 * 3, dtype=np.uint8).reshape(5, 4, 3) * 7 % 256
     rng[0, 0] = (200, 100, 50)
     payload = _png_rgb(rng, filters=[0, 1, 2, 3, 4])
-    rows = _decode_png(spark, payload)
+    rows = _decode_png(payload)
     assert [r["channel"] for r in rows] == [0, 1, 2]
     assert [r["corner_val"] for r in rows] == [200, 100, 50]
     assert rows[0]["width"] == 4 and rows[0]["height"] == 5
@@ -212,7 +211,7 @@ def test_png_decode_every_filter_type(spark):
         assert rows[ch]["max_val"] == int(rng[:, :, ch].max())
 
 
-def test_png_decode_rejects_corruption_and_unsupported(spark):
+def test_png_decode_rejects_corruption_and_unsupported():
     px = np.full((2, 3, 3), 9, dtype=np.uint8)
     good = _png_rgb(px, filters=[4])
     # flip one IDAT byte: CRC verification must catch it
@@ -220,9 +219,9 @@ def test_png_decode_rejects_corruption_and_unsupported(spark):
     idat_at = good.index(b"IDAT")
     bad[idat_at + 6] ^= 0xFF
     with pytest.raises(Exception, match="bad CRC"):
-        _decode_png(spark, bytes(bad))
+        _decode_png(bytes(bad))
     with pytest.raises(Exception, match="not a PNG"):
-        _decode_png(spark, b"BM?nope")
+        _decode_png(b"BM?nope")
     # 16-bit depth must be rejected, not misdecoded
     from energy_datalake_solution_spark.operators.multimodal import _PNG_SIG, _png_chunk
     import zlib
@@ -230,22 +229,16 @@ def test_png_decode_rejects_corruption_and_unsupported(spark):
     p16 = (_PNG_SIG + _png_chunk(b"IHDR", ihdr16)
            + _png_chunk(b"IDAT", zlib.compress(b"\x00" * 38)) + _png_chunk(b"IEND", b""))
     with pytest.raises(Exception, match="unsupported PNG"):
-        _decode_png(spark, p16)
+        _decode_png(p16)
 
 
-def test_png_synth_roundtrip_matches_formula(spark):
-    """synth_png_payload -> decode_png_pixel_stats over a doc_id range
-    covering all (w, h, filter-phase) combinations reproduces the
-    generating formula exactly."""
-    from pyspark.sql import functions as F
-
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_png_pixel_stats,
-        synth_png_payload,
+def test_png_synth_roundtrip_matches_formula():
+    """The PNG synthesizer -> decoder over a doc_id range covering all
+    (w, h, filter-phase) combinations reproduces the generating formula
+    exactly."""
+    rows = _synth_rows(
+        mm._png_payload, mm._channel_stats(mm._png), mm.CHANNEL_STATS_SCHEMA, range(40)
     )
-
-    docs = spark.range(40).select(F.col("id").alias("doc_id"))
-    rows = decode_png_pixel_stats(synth_png_payload(docs)).collect()
     assert len(rows) == 40 * 3
     for r in rows:
         i, ch = r["doc_id"], r["channel"]
@@ -289,19 +282,13 @@ def test_gif_lzw_roundtrip_covers_growth_kwkwk_and_reset():
         assert _lzw_decompress(_lzw_compress(b)) == b
 
 
-def test_gif_synth_roundtrip_matches_formula(spark):
-    """synth_gif_payload -> decode_gif_pixel_stats over a doc_id range
-    covering all (w, h) combinations reproduces the palette-composed
-    generating formula exactly."""
-    from pyspark.sql import functions as F
-
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_gif_pixel_stats,
-        synth_gif_payload,
+def test_gif_synth_roundtrip_matches_formula():
+    """The GIF synthesizer -> decoder over a doc_id range covering all
+    (w, h) combinations reproduces the palette-composed generating
+    formula exactly."""
+    rows = _synth_rows(
+        mm._gif_payload, mm._channel_stats(mm._gif), mm.CHANNEL_STATS_SCHEMA, range(40)
     )
-
-    docs = spark.range(40).select(F.col("id").alias("doc_id"))
-    rows = decode_gif_pixel_stats(synth_gif_payload(docs)).collect()
     assert len(rows) == 40 * 3
     for r in rows:
         i, ch = r["doc_id"], r["channel"]
@@ -317,24 +304,13 @@ def test_gif_synth_roundtrip_matches_formula(spark):
         assert r["mean_val"] == pytest.approx(sum(vals) / len(vals), abs=1e-6)
 
 
-def test_gif_decode_rejects_corruption_and_unsupported(spark):
+def test_gif_decode_rejects_corruption_and_unsupported():
     """Bad magic, a truncated LZW stream, and an interlaced image
     descriptor must all raise, not return wrong pixels."""
-    from pyspark.sql import functions as F
-
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_gif_pixel_stats,
-        synth_gif_payload,
-    )
-
-    docs = spark.range(1).select(F.col("id").alias("doc_id"))
-    payload = bytearray(synth_gif_payload(docs).collect()[0]["payload"])
+    payload = bytearray(mm._gif_payload(0))
 
     def run(buf: bytes):
-        pdf = spark.createDataFrame(
-            [(0, bytes(buf))], "doc_id long, payload binary"
-        )
-        decode_gif_pixel_stats(pdf).collect()
+        _rows(mm._channel_stats(mm._gif), mm.CHANNEL_STATS_SCHEMA, buf, 0)
 
     for mutate in (
         lambda b: b"JIF89a" + bytes(b[6:]),          # bad magic
@@ -358,31 +334,21 @@ def test_gif_decode_rejects_corruption_and_unsupported(spark):
 # --------------------------------------------------------------------------
 
 
-def _decode_jpeg(spark, payload: bytes):
-    import pandas as pd
-
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_jpeg_pixel_stats,
-    )
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "payload": [payload]}),
-        "doc_id long, payload binary",
-    )
-    return decode_jpeg_pixel_stats(df).collect()
+def _decode_jpeg(payload: bytes):
+    return _rows(mm._jpeg_gray_stats, mm.JPEG_STATS_SCHEMA, payload)
 
 
-def test_jpeg_synth_roundtrip_matches_formula(spark):
+def _decode_jpeg_rgb(payload: bytes):
+    return _rows(mm._jpeg_rgb_stats, mm.JPEG_COLOR_STATS_SCHEMA, payload)
+
+
+def test_jpeg_synth_roundtrip_matches_formula():
     """Decoding the synthesized payloads reproduces the generating
     formula exactly — the bit-exactness claim (constant blocks + unit
     quantization) that lets a lossy codec sit under a hash gate."""
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_jpeg_pixel_stats,
-        synth_jpeg_payload,
+    rows = _synth_rows(
+        mm._jpeg_payload, mm._jpeg_gray_stats, mm.JPEG_STATS_SCHEMA, range(40)
     )
-
-    d = spark.range(0, 40).withColumnRenamed("id", "doc_id")
-    rows = decode_jpeg_pixel_stats(synth_jpeg_payload(d)).collect()
     assert len(rows) == 40
     for r in rows:
         i = r.doc_id
@@ -398,7 +364,7 @@ def test_jpeg_synth_roundtrip_matches_formula(spark):
         assert abs(r.mean_val - sum(vals) / len(vals)) < 1e-6
 
 
-def test_jpeg_ac_coefficients_decode_through_full_path(spark):
+def test_jpeg_ac_coefficients_decode_through_full_path():
     """The decoder's AC machinery is real, not an EOB shortcut: a
     hand-built payload with a nonzero AC coefficient (run-length 2,
     size-coded magnitude, then EOB) must decode to the IDCT of that
@@ -439,7 +405,7 @@ def test_jpeg_ac_coefficients_decode_through_full_path(spark):
     w.put(code, length)
     payload = bytes(head) + w.flush() + b"\xff\xd9"
 
-    (r,) = _decode_jpeg(spark, payload)
+    (r,) = _decode_jpeg(payload)
 
     # independent reconstruction: coef at zigzag index 3 = (2, 0)
     u = np.arange(8)[:, None]
@@ -455,41 +421,33 @@ def test_jpeg_ac_coefficients_decode_through_full_path(spark):
     assert abs(r.mean_val - round(float(px.mean()), 6)) < 1e-9
 
 
-def test_jpeg_malformed_or_unsupported_raises(spark):
-    import struct
-
-    import pytest
-
-    from energy_datalake_solution_spark.operators.multimodal import (
-        synth_jpeg_payload,
-    )
-    import pandas as pd
-
-    d = spark.createDataFrame(pd.DataFrame({"doc_id": [3]}), "doc_id long")
-    (row,) = synth_jpeg_payload(d).collect()
-    good = bytes(row.payload)
+def test_jpeg_malformed_or_unsupported_raises():
+    good = mm._jpeg_payload(3)
     with pytest.raises(Exception, match="SOI"):
-        _decode_jpeg(spark, b"not a jpeg")
+        _decode_jpeg(b"not a jpeg")
     with pytest.raises(Exception, match="EOI|truncated|marker"):
-        _decode_jpeg(spark, good[:-4])  # EOI and tail bits gone
-    # progressive SOF2 must be refused, not mis-decoded
+        _decode_jpeg(good[:-4])  # EOI and tail bits gone
+    # a baseline scan under a progressive SOF2 frame must be refused,
+    # not mis-decoded
     prog = good.replace(b"\xff\xc0", b"\xff\xc2", 1)
     with pytest.raises(Exception, match="baseline|progressive"):
-        _decode_jpeg(spark, prog)
+        _decode_jpeg(prog)
+    # each stats reader refuses the other's component count
+    with pytest.raises(Exception, match="3-component"):
+        _decode_jpeg_rgb(good)
+    with pytest.raises(Exception, match="1-component"):
+        _decode_jpeg(mm._jpeg_color_payload(3, 1, 1, 0))
 
 
-def test_jpeg_420_synth_roundtrip_matches_formula(spark):
+def test_jpeg_420_synth_roundtrip_matches_formula():
     """Decoding the synthesized 4:2:0 payloads reproduces the generating
     formulas through the full subsampled pipeline — six-block MCUs,
     per-component DC prediction, quarter-res chroma box-upsampled —
     with libjpeg's fixed-point color transform applied per pixel."""
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_jpeg_color_pixel_stats,
-        synth_jpeg_420_payload,
+    rows = _synth_rows(
+        lambda i: mm._jpeg_color_payload(i, 2, 2, 2),
+        mm._jpeg_rgb_stats, mm.JPEG_COLOR_STATS_SCHEMA, range(36),
     )
-
-    d = spark.range(0, 36).withColumnRenamed("id", "doc_id")
-    rows = decode_jpeg_color_pixel_stats(synth_jpeg_420_payload(d)).collect()
     assert len(rows) == 36
 
     def transform(y, cb, cr):
@@ -517,7 +475,7 @@ def test_jpeg_420_synth_roundtrip_matches_formula(spark):
         assert (row.corner_r, row.corner_g, row.corner_b) == px[0]
 
 
-def test_jpeg_420_rejects_unaligned_dims(spark):
+def test_jpeg_420_rejects_unaligned_dims():
     """A 4:2:0 stream whose dims are not MCU-aligned raises loudly
     (partial-MCU edge handling is out of the documented subset)."""
     import struct
@@ -534,9 +492,7 @@ def test_jpeg_420_rejects_unaligned_dims(spark):
         _JPEG_DC_C_VALS,
         _JPEG_DC_VALS,
         _jpeg_dht,
-        decode_jpeg_color_pixel_stats,
     )
-    from pyspark.sql import types as T
 
     head = bytearray(b"\xff\xd8")
     head += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
@@ -550,30 +506,17 @@ def test_jpeg_420_rejects_unaligned_dims(spark):
     head += (b"\xff\xda" + struct.pack(">H", 12)
              + bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
     payload = bytes(head) + b"\x00" + b"\xff\xd9"
-    df = spark.createDataFrame(
-        [(0, payload)],
-        T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]),
-    )
     with _pytest.raises(Exception, match="MCU-aligned"):
-        decode_jpeg_color_pixel_stats(df).collect()
+        _decode_jpeg_rgb(payload)
 
 
-def test_jpeg_progressive_synth_roundtrip_matches_formula(spark):
+def test_jpeg_progressive_synth_roundtrip_matches_formula():
     """The three-scan progressive fixtures (DC first at Al=1, DC
     refinement bits, EOB-run AC scan) reconstruct the generating
     formula exactly through the multi-scan decoder."""
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_jpeg_progressive_pixel_stats,
-        synth_jpeg_progressive_payload,
+    rows = _synth_rows(
+        mm._jpeg_progressive_payload, mm._jpeg_gray_stats, mm.JPEG_STATS_SCHEMA, range(40)
     )
-
-    d = spark.range(0, 40).withColumnRenamed("id", "doc_id")
-    rows = decode_jpeg_progressive_pixel_stats(
-        synth_jpeg_progressive_payload(d)
-    ).collect()
     assert len(rows) == 40
     for r in rows:
         i = r.doc_id
@@ -589,7 +532,7 @@ def test_jpeg_progressive_synth_roundtrip_matches_formula(spark):
         assert abs(r.mean_val - sum(vals) / len(vals)) < 1e-6
 
 
-def test_jpeg_progressive_ac_refinement_correction_bits(spark):
+def test_jpeg_progressive_ac_refinement_correction_bits():
     """The AC-refinement machinery is real: a hand-built stream whose
     second AC scan refines an existing coefficient (correction bit) AND
     inserts a new ±1 coefficient must decode to the IDCT of the final
@@ -607,9 +550,7 @@ def test_jpeg_progressive_ac_refinement_correction_bits(spark):
         _JpegBitWriter,
         _jpeg_dht,
         _jpeg_huff_codes,
-        decode_jpeg_progressive_pixel_stats,
     )
-    from pyspark.sql import types as T
 
     # AC table for the FIRST scan needs real (r, s) symbols too
     ac_bits = [0, 0, 7, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
@@ -657,14 +598,7 @@ def test_jpeg_progressive_ac_refinement_correction_bits(spark):
     body += w.flush()
     payload = bytes(head) + bytes(body) + b"\xff\xd9"
 
-    df = spark.createDataFrame(
-        [(0, payload)],
-        T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]),
-    )
-    (r,) = decode_jpeg_progressive_pixel_stats(df).collect()
+    (r,) = _decode_jpeg(payload)
 
     u = np.arange(8)[:, None]
     x = np.arange(8)[None, :]
@@ -679,18 +613,10 @@ def test_jpeg_progressive_ac_refinement_correction_bits(spark):
     assert abs(r.mean_val - round(float(px.mean()), 6)) < 1e-9
 
 
-def test_jpeg_restart_marker_sequence_is_validated(spark):
+def test_jpeg_restart_marker_sequence_is_validated():
     """A restart marker with the wrong modulo-8 index (a lost or
     reordered entropy segment) fails loudly, not with garbage pixels."""
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_jpeg_color_pixel_stats,
-        synth_jpeg_420_payload,
-    )
-    from pyspark.sql import types as T
-
-    d = spark.range(1, 2).withColumnRenamed("id", "doc_id")  # doc 1: 2x2 MCUs -> RST0 fires at MCU 2
-    (row,) = synth_jpeg_420_payload(d).collect()
-    buf = bytearray(bytes(row.payload))
+    buf = bytearray(mm._jpeg_color_payload(1, 2, 2, 2))  # doc 1: 2x2 MCUs, RST0 at MCU 2
     # corrupt the first RST marker's index (0xD0 -> 0xD5)
     for i in range(len(buf) - 1):
         if buf[i] == 0xFF and buf[i + 1] == 0xD0:
@@ -698,18 +624,11 @@ def test_jpeg_restart_marker_sequence_is_validated(spark):
             break
     else:
         raise AssertionError("fixture carries no RST0 marker")
-    df = spark.createDataFrame(
-        [(1, bytes(buf))],
-        T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]),
-    )
     with pytest.raises(Exception, match="RST|restart"):
-        decode_jpeg_color_pixel_stats(df).collect()
+        _decode_jpeg_rgb(bytes(buf))
 
 
-def test_jpeg_grayscale_restart_markers_decode(spark):
+def test_jpeg_grayscale_restart_markers_decode():
     """A grayscale baseline JPEG carrying DRI + RSTn markers decodes:
     the reader byte-aligns at each interval, consumes the modulo-8
     marker, and resets the DC predictor (T.81 F.2.1.3.1). Two DC-only
@@ -753,7 +672,7 @@ def test_jpeg_grayscale_restart_markers_decode(spark):
     payload = (bytes(head) + w1.flush() + b"\xff\xd0" + w2.flush()
                + b"\xff\xd9")
 
-    (r,) = _decode_jpeg(spark, payload)
+    (r,) = _decode_jpeg(payload)
     assert (r.width, r.height) == (16, 8)
     assert r.corner_val == 128
     assert r.min_val == 128 and r.max_val == 130
@@ -764,10 +683,10 @@ def test_jpeg_grayscale_restart_markers_decode(spark):
     i = bad.rfind(b"\xff\xd0")
     bad[i + 1] = 0xD4
     with pytest.raises(Exception, match="RST|restart"):
-        _decode_jpeg(spark, bytes(bad))
+        _decode_jpeg(bytes(bad))
 
 
-def test_adpcm_decode_matches_reference_state_machine(spark):
+def test_adpcm_decode_matches_reference_state_machine():
     """The IMA ADPCM decoder reproduces an independently-coded reference
     decode (separate implementation of the spec tables/clamps) on the
     synthesized payloads, and rejects non-ADPCM or multichannel input."""
@@ -778,13 +697,11 @@ def test_adpcm_decode_matches_reference_state_machine(spark):
     from energy_datalake_solution_spark.operators.multimodal import (
         _IMA_INDEX,
         _IMA_STEPS,
-        decode_wav_adpcm_stats,
-        synth_wav_adpcm_payload,
     )
 
-    d = spark.range(0, 25).withColumnRenamed("id", "doc_id")
-    rows = {r.doc_id: r for r in
-            decode_wav_adpcm_stats(synth_wav_adpcm_payload(d)).collect()}
+    rows = {r.doc_id: r for r in _synth_rows(
+        mm._adpcm_payload, mm._adpcm_stats, mm.ADPCM_STATS_SCHEMA, range(25)
+    )}
     assert len(rows) == 25
     for i in range(25):
         n_nib = 64 + 8 * (i % 3)
@@ -809,18 +726,10 @@ def test_adpcm_decode_matches_reference_state_machine(spark):
         assert abs(r.mean_amp - round(float(a.mean()), 6)) < 1e-9
 
     # malformed / unsupported inputs fail loudly
-    (row,) = synth_wav_adpcm_payload(
-        spark.range(1, 2).withColumnRenamed("id", "doc_id")
-    ).collect()
-    buf = bytearray(bytes(row.payload))
+    buf = bytearray(mm._adpcm_payload(1))
 
     def run(payload):
-        import pandas as pd
-        df = spark.createDataFrame(
-            pd.DataFrame({"doc_id": [1], "payload": [payload]}),
-            "doc_id long, payload binary",
-        )
-        return decode_wav_adpcm_stats(df).collect()
+        return _rows(mm._adpcm_stats, mm.ADPCM_STATS_SCHEMA, payload)
 
     with pytest.raises(Exception):
         run(b"JUNK" + bytes(buf[4:]))
@@ -837,7 +746,7 @@ def test_adpcm_decode_matches_reference_state_machine(spark):
         run(bytes(bad))
 
 
-def test_g711_expansion_matches_itu_formulas(spark):
+def test_g711_expansion_matches_itu_formulas():
     """The mu-law/A-law LUTs match the ITU formulas computed
     independently per byte; known anchor points hold (mu-law 0xFF -> 0,
     0x7F -> -8031... sign conventions pinned); non-G.711 tags refuse."""
@@ -846,8 +755,6 @@ def test_g711_expansion_matches_itu_formulas(spark):
     from energy_datalake_solution_spark.operators.multimodal import (
         _alaw_expand,
         _mulaw_expand,
-        decode_wav_g711_stats,
-        synth_wav_g711_payload,
     )
 
     # anchors: full-scale and zero codes of the public tables
@@ -861,9 +768,9 @@ def test_g711_expansion_matches_itu_formulas(spark):
     mags = [abs(_mulaw_expand(0xFF - m)) for m in range(16)]
     assert mags == sorted(mags)
 
-    d = spark.range(0, 12).withColumnRenamed("id", "doc_id")
-    rows = {r.doc_id: r for r in
-            decode_wav_g711_stats(synth_wav_g711_payload(d)).collect()}
+    rows = {r.doc_id: r for r in _synth_rows(
+        mm._g711_payload, mm._g711_stats, mm.G711_STATS_SCHEMA, range(12)
+    )}
     for i in range(12):
         n = 120 + i % 9
         expand = _mulaw_expand if i % 2 else _alaw_expand
@@ -875,37 +782,22 @@ def test_g711_expansion_matches_itu_formulas(spark):
         assert abs(r.mean_amp - round(sum(amps) / n, 6)) < 1e-9
 
     # PCM-tagged input refuses
-    (row,) = synth_wav_g711_payload(
-        spark.range(1, 2).withColumnRenamed("id", "doc_id")
-    ).collect()
-    buf = bytearray(bytes(row.payload))
+    buf = bytearray(mm._g711_payload(1))
     tag_at = buf.find(b"fmt ") + 8
     buf[tag_at:tag_at + 2] = struct.pack("<H", 1)
-    import pandas as pd
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "payload": [bytes(buf)]}),
-        "doc_id long, payload binary",
-    )
     with pytest.raises(Exception):
-        decode_wav_g711_stats(df).collect()
+        _rows(mm._g711_stats, mm.G711_STATS_SCHEMA, bytes(buf))
 
 
-def test_tiff_decode_both_orders_and_packbits(spark):
+def test_tiff_decode_both_orders_and_packbits():
     """TIFF: II-uncompressed and MM-PackBits payloads decode to the
     generating formula; literal-run and no-op PackBits packets decode;
     malformed inputs refuse."""
     import struct
 
-    import pandas as pd
-
-    from energy_datalake_solution_spark.operators.multimodal import (
-        decode_tiff_pixel_stats,
-        synth_tiff_payload,
-    )
-
-    d = spark.range(0, 12).withColumnRenamed("id", "doc_id")
-    rows = {r.doc_id: r for r in
-            decode_tiff_pixel_stats(synth_tiff_payload(d)).collect()}
+    rows = {r.doc_id: r for r in _synth_rows(
+        mm._tiff_payload, mm._tiff_stats, mm.TIFF_STATS_SCHEMA, range(12)
+    )}
     for i in range(12):
         w, h = 16 + 8 * (i % 3), 8 + 4 * (i % 2)
         vals = [(i * 37 + y * 53) % 256 for y in range(h)]
@@ -919,11 +811,7 @@ def test_tiff_decode_both_orders_and_packbits(spark):
         assert abs(r.mean_val - round(sum(vals) / h, 6)) < 1e-9
 
     def run(payload):
-        df = spark.createDataFrame(
-            pd.DataFrame({"doc_id": [1], "payload": [payload]}),
-            "doc_id long, payload binary",
-        )
-        return decode_tiff_pixel_stats(df).collect()
+        return _rows(mm._tiff_stats, mm.TIFF_STATS_SCHEMA, payload)
 
     # hand-built MM TIFF whose strip mixes literal runs, a repeat run,
     # and the -128 no-op packet — the three PackBits packet kinds
@@ -956,7 +844,7 @@ def test_tiff_decode_both_orders_and_packbits(spark):
         run(buf[:len(buf) - 3])        # truncated strip (RLE mismatch)
 
 
-def test_adpcm_stereo_block_decodes_interleaved_chunks(spark):
+def test_adpcm_stereo_block_decodes_interleaved_chunks():
     """Stereo IMA ADPCM: per-channel 4-byte headers, data interleaved
     as alternating 4-byte chunks (8 samples L, 8 samples R, ...) —
     decode must match the reference state machine run independently
@@ -964,12 +852,10 @@ def test_adpcm_stereo_block_decodes_interleaved_chunks(spark):
     import struct
 
     import numpy as np
-    import pandas as pd
 
     from energy_datalake_solution_spark.operators.multimodal import (
         _IMA_INDEX,
         _IMA_STEPS,
-        decode_wav_adpcm_stats,
     )
 
     n_nib = 16  # per channel: two 4-byte chunks each
@@ -992,11 +878,7 @@ def test_adpcm_stereo_block_decodes_interleaved_chunks(spark):
            + b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
            + b"data" + struct.pack("<I", len(body)) + bytes(body))
 
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "payload": [buf]}),
-        "doc_id long, payload binary",
-    )
-    (r,) = decode_wav_adpcm_stats(df).collect()
+    (r,) = _rows(mm._adpcm_stats, mm.ADPCM_STATS_SCHEMA, buf)
 
     # reference: run the state machine per channel independently
     all_samples = []
@@ -1017,7 +899,7 @@ def test_adpcm_stereo_block_decodes_interleaved_chunks(spark):
     assert abs(r.mean_amp - round(float(a.mean()), 6)) < 1e-9
 
 
-def test_adpcm_multi_block_stream_resets_state_per_block(spark):
+def test_adpcm_multi_block_stream_resets_state_per_block():
     """Multi-block mono ADPCM: the decoder strides blockAlign and each
     block's header RE-SEEDS the predictor/index (spec behavior — blocks
     are independently decodable), so a two-block stream equals the
@@ -1025,12 +907,10 @@ def test_adpcm_multi_block_stream_resets_state_per_block(spark):
     import struct
 
     import numpy as np
-    import pandas as pd
 
     from energy_datalake_solution_spark.operators.multimodal import (
         _IMA_INDEX,
         _IMA_STEPS,
-        decode_wav_adpcm_stats,
     )
 
     n_nib = 8
@@ -1048,11 +928,7 @@ def test_adpcm_multi_block_stream_resets_state_per_block(spark):
     buf = (b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(body))
            + b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
            + b"data" + struct.pack("<I", len(body)) + bytes(body))
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "payload": [buf]}),
-        "doc_id long, payload binary",
-    )
-    (r,) = decode_wav_adpcm_stats(df).collect()
+    (r,) = _rows(mm._adpcm_stats, mm.ADPCM_STATS_SCHEMA, buf)
 
     all_samples = []
     for pred, idx, nibs in blocks:
