@@ -1228,48 +1228,41 @@ def _commit_datasource_write(
     """Driver side: publish the tasks' files through the library's
     optimistic commit (rebase on conflict — blind appends compose,
     overwrite recommits replace-whatever-is-current). A txn-stamped
-    commit (streaming) that finds its (app, batchId) already in the tip's
-    txn map is a REPLAY: the re-written files are unlinked and the commit
-    is skipped — exactly-once without coordination."""
+    commit (streaming) that finds its (app, batchId) already on the tip
+    is a REPLAY: the re-written files are unlinked and the commit is
+    skipped — exactly-once without coordination."""
     from .snapshots import (
-        COMMIT_RETRIES,
         CLEAR_METADATA,
-        SnapshotCommitConflict,
         _carry_blooms,
         _carry_dv,
         _commit,
         _merge_type_maps,
         _table,
+        _transact,
     )
 
     p = _table(table_path)
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        pm = _read_manifest(p, parent) if parent else {}
-        if txn is not None and parent:
-            key = txn_app if txn_app is not None else ""
-            seen = pm.get("txns", {}).get(key)
-            if seen is not None and int(seen) >= int(txn):
-                _discard_files(table_path, files)  # replayed micro-batch
-                return
-        try:
-            if overwrite:
-                _commit(p, files, parent, op="write",
-                        types_meta=CLEAR_METADATA)
-            else:
-                old_files = pm.get("files", [])
-                _commit(
-                    p, old_files + files, parent,
-                    txn=txn, txn_app=txn_app,
-                    stats=pm.get("stats") or None,
-                    blooms=_carry_blooms(p, pm, old_files, files)
-                    if parent else None,
-                    dv=_carry_dv(pm, old_files) if parent else None,
-                    op="append",
-                    types_meta=_merge_type_maps(pm.get("types"), types_meta)
-                    if types_meta is not None else None,
-                )
-            return
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
+    committed = False
+
+    def attempt(parent, pm):
+        nonlocal committed
+        if overwrite:
+            _commit(p, files, parent, op="write", types_meta=CLEAR_METADATA)
+        else:
+            old_files = pm.get("files", [])
+            _commit(
+                p, old_files + files, parent,
+                txn=txn, txn_app=txn_app,
+                stats=pm.get("stats") or None,
+                blooms=_carry_blooms(p, pm, old_files, files)
+                if parent else None,
+                dv=_carry_dv(pm, old_files) if parent else None,
+                op="append",
+                types_meta=_merge_type_maps(pm.get("types"), types_meta)
+                if types_meta is not None else None,
+            )
+        committed = True
+
+    _transact(p, attempt, txn=txn, txn_app=txn_app, create=True)
+    if not committed:
+        _discard_files(table_path, files)  # replayed micro-batch

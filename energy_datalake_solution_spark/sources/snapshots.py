@@ -83,12 +83,13 @@ CHECKPOINT_EVERY = 8
 CKPT_PARQUET_MIN_FILES = 64
 
 # Optimistic concurrency (Delta's documented LogStore protocol): _commit
-# NEVER overwrites — a lost race raises SnapshotCommitConflict — and each
-# writer-facing operation REBASES on conflict: re-read the new tip,
-# re-validate what it assumed about the table (appends assume nothing;
-# upserts/deletes re-run their file prune against the new parent), and
-# re-commit. Bounded attempts: a table under genuinely sustained write
-# contention should serialize its writers upstream, not spin here.
+# NEVER overwrites — a lost race raises SnapshotCommitConflict — and every
+# table-mutating operation REBASES on conflict through one loop,
+# _transact: re-read the new tip, re-validate what it assumed about the
+# table (appends assume nothing; upserts/deletes re-run their file prune
+# against the new parent), and re-commit. Bounded attempts: a table under
+# genuinely sustained write contention should serialize its writers
+# upstream, not spin here.
 COMMIT_RETRIES = 5
 
 # Explicit-clear sentinel for _commit's schema_meta / constraints_meta:
@@ -103,7 +104,8 @@ class SnapshotCommitConflict(RuntimeError):
     """A concurrent writer committed this version first. The raising
     writer's manifest (if linked) is an unreachable orphan; its data
     files are unreferenced garbage for vacuum. Retry against the new
-    tip — snapshot_append/upsert/delete do so automatically."""
+    tip — every snapshot mutation does so automatically, up to
+    COMMIT_RETRIES times."""
 
 
 class SnapshotConstraintViolation(ValueError):
@@ -290,11 +292,11 @@ def _commit(
     stays on disk as an orphan branch: the later writer is never
     silently un-published, a lost race is never reported as success, and
     a stale-parent manifest (whose file list would omit the winner's
-    files) can never become the tip. The writer-facing operations
-    (snapshot_write/append/upsert/delete) catch the conflict and REBASE:
-    re-read the tip, re-derive their file list against it, re-commit —
-    appends compose, overlapping upserts/deletes serialize by re-running
-    their prune.
+    files) can never become the tip. Every table-mutating operation
+    commits through :func:`_transact`, which catches the conflict and
+    REBASES: re-read the tip, re-derive the file list against it,
+    re-commit — appends compose, overlapping upserts/deletes serialize by
+    re-running their prune.
     """
     # allocate ABOVE any manifest on disk, not just parent+1 — after a
     # rollback (pointer < max version) or an interrupted commit (manifest
@@ -518,6 +520,59 @@ def _commit(
     finally:
         _release_pointer_lock(lock, lock_token)
     return version
+
+
+def _transact(p: Path, attempt, *, txn: int | None = None,
+              txn_app: str | None = None, create: bool = False) -> int:
+    """The one optimistic-commit loop behind every snapshot mutation
+    (Delta's protocol): each round reads the tip ``parent`` and its
+    resolved manifest ``m`` and returns ``attempt(parent, m)``, which
+    derives everything it commits from that tip and commits against
+    ``parent``. A SnapshotCommitConflict means another writer moved the
+    tip; the next round re-reads it and the attempt re-derives — re-runs
+    its prune and rewrite, or recommits the files it already wrote onto
+    the new tip's. The conflict re-raises after COMMIT_RETRIES rounds.
+
+    A table with no version refuses unless ``create`` (writers whose
+    first commit creates the table; their attempt sees ``m == {}``).
+    With ``txn``, a tip already stamped (``txn_app``, ``txn`` or later)
+    means this batch landed — a replay, possibly the racer that beat the
+    last round — so the tip returns without attempting."""
+    for n in range(COMMIT_RETRIES):
+        parent = current_version(p)
+        if parent == 0 and not create:
+            raise FileNotFoundError(f"no snapshot table at {p}")
+        m = _read_manifest(p, parent) if parent else {}
+        if txn is not None and _txn_stamp(m, txn_app) >= int(txn):
+            return parent
+        try:
+            return attempt(parent, m)
+        except SnapshotCommitConflict:
+            if n == COMMIT_RETRIES - 1:
+                raise
+
+
+def _recommit(p: Path, parent: int, m: dict, op: str, **meta) -> int:
+    """Commit ``m``'s files with their stats, blooms and deletion vectors
+    unchanged on top of ``parent``: a metadata-only version whose only
+    change is ``meta`` (_commit's metadata and txn keywords), or none —
+    an auditable no-op."""
+    return _commit(p, list(m.get("files", [])), parent,
+                   stats=m.get("stats") or None,
+                   blooms=m.get("blooms") or None,
+                   dv=m.get("dv") or None, op=op, **meta)
+
+
+def _txn_stamp(m: dict, txn_app: str | None) -> int:
+    """The newest txn id manifest ``m`` records for writer namespace
+    ``txn_app``: its carried ``txns`` map, else its own pre-map stamp;
+    -1 when neither has one."""
+    key = txn_app if txn_app is not None else ""
+    if key in m.get("txns", {}):
+        return int(m["txns"][key])
+    if m.get("txn") is not None and m.get("txn_app") == txn_app:
+        return int(m["txn"])
+    return -1
 
 
 _TXN_LOCAL = threading.local()
@@ -860,11 +915,8 @@ def snapshot_widen_column(
     p = _table(table_path)
     nt = new_type.strip().lower()
     footer_cache: dict = {}  # frozenset(files) -> sweep; retries reuse it
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no snapshot table at {table_path}")
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         if m.get("bucketing"):
             raise ValueError(
                 f"cannot widen {col!r} on a bucketed table: the "
@@ -929,17 +981,10 @@ def snapshot_widen_column(
             new_schema is None or new_schema == sch
         ):
             return parent  # already that wide everywhere: true no-op
-        try:
-            return _commit(p, list(m["files"]), parent,
-                           stats=m.get("stats") or None,
-                           blooms=m.get("blooms") or None,
-                           dv=m.get("dv") or None, op="widen-column",
-                           types_meta=new_types,
-                           schema_meta=new_schema)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _recommit(p, parent, m, "widen-column",
+                         types_meta=new_types, schema_meta=new_schema)
+
+    return _transact(p, attempt)
 
 
 def _prep_replace_batch(df: DataFrame, p, tip: int, m_tip: dict) -> DataFrame:
@@ -1115,16 +1160,20 @@ def snapshot_write(
         files = _write_files(df, p)
         op, bucketing = "write", CLEAR_METADATA
     spark = df.sparkSession
-    return _commit_full_replace(
-        p, files, op=op, bucketing_meta=bucketing,
-        stats=_collect_stats(p, files, stats_cols, spark=spark)
-        if stats_cols else None,
-        blooms=_collect_blooms(p, files, bloom_cols, spark)
-        if bloom_cols else None,
-        partitioning_meta=(
-            {"cols": list(partition_by)} if partition_by is not None else None
-        ),
+    stats = _collect_stats(p, files, stats_cols, spark=spark) if stats_cols else None
+    blooms = _collect_blooms(p, files, bloom_cols, spark) if bloom_cols else None
+    partitioning = (
+        {"cols": list(partition_by)} if partition_by is not None else None
     )
+    # a full replace has no read-set: a conflict recommits the same files
+    # onto the new tip. The widened-types map CLEARS — the new files'
+    # footers are the honest schema, and inheriting the parent's stale
+    # map would drop a column the batch added or mis-type a replaced one
+    return _transact(p, lambda parent, m: _commit(
+        p, files, parent, stats=stats, blooms=blooms, op=op,
+        types_meta=CLEAR_METADATA, partitioning_meta=partitioning,
+        bucketing_meta=bucketing,
+    ), create=True)
 
 
 def _carry_blooms(
@@ -1155,7 +1204,6 @@ def snapshot_append(
     txn_app: str | None = None,
     stats_cols: list[str] | None = None,
     txns_extra: dict | None = None,
-    _identity_attempt: int = 0,
 ) -> int:
     """Commit df's rows IN ADDITION to the current version's files — the
     new manifest lists old files + new files; no data is rewritten.
@@ -1170,190 +1218,179 @@ def snapshot_append(
     because stats-less files are always kept).
 
     Concurrency: on a commit conflict the append REBASES — the batch's
-    data files are written exactly once, and only the manifest merge
-    reruns against the new tip (an append has no read-set, so disjoint
+    data files are written once, and only the manifest merge reruns
+    against the new tip (an append has no read-set, so disjoint
     concurrent appends always compose; Delta's documented disposition
-    for blind appends). A txn-stamped append additionally re-checks the
-    new tip's txn map before recommitting, so losing a race to a replay
-    of the SAME (app, txn) batch resolves idempotently instead of
-    double-appending."""
+    for blind appends). The one exception is an identity table whose
+    high-water mark a concurrent writer moved: the batch's allocated
+    values may collide, so that rebase re-allocates and rewrites the
+    batch. A txn-stamped append re-checks the new tip's stamps before
+    recommitting, so losing a race to a replay of the SAME (app, txn)
+    batch resolves idempotently instead of double-appending."""
     p = _table(table_path)
-    tip = current_version(p)
-    _enforce_constraints(df, p, tip)
-    widen_types: dict | None = None
-    part_cols: list[str] = []
-    df_in = df  # pre-pipeline frame, kept for an identity-conflict restart
-    identity_alloc: dict[str, tuple[int, int]] = {}  # name -> (base, n)
-    if tip:
-        m_tip = _read_manifest(p, tip)
-        sch = m_tip.get("schema")
-        if sch:
-            # GENERATED ALWAYS AS IDENTITY: explicit values refuse
-            # (ALWAYS semantics); omitted columns allocate from the
-            # schema's per-commit high-water mark. The allocation base
-            # is validated against the tip again at commit time — a
-            # concurrent identity writer moving it forces a restart
-            # with fresh values (collision-free optimistic writers).
-            batch_lower = {n.lower() for n in df.columns}
-            for c in _identity_cols(sch):
-                # case-insensitive: Spark resolves identifiers that way,
-                # so a batch carrying 'ID' against identity 'id' is an
-                # explicit write, not a new column
-                if c["name"].lower() in batch_lower:
-                    raise ValueError(
-                        f"column {c['name']!r} is GENERATED ALWAYS AS "
-                        "IDENTITY and cannot be written explicitly"
-                    )
-                ident = c["identity"]
-                base = int(ident.get("next", 0))
-                df, n_alloc = _with_identity(
-                    df, c["name"], c["type"],
-                    int(ident.get("start", 1)), int(ident.get("step", 1)),
-                    base,
-                )
-                identity_alloc[c["name"]] = (base, n_alloc)
-            df = _materialize_wdefaults(df, sch)
-            # generated columns the batch omits compute HERE (logical
-            # namespace); carried ones were validated above
-            df = _materialize_generated(df, sch)
-            if identity_alloc:
-                # constraints referencing identity columns were deferred
-                # pre-allocation; re-enforce against allocated values
-                _enforce_identity_constraints(df, p, tip, m_tip)
-            # mapped table: incoming logical columns write under their
-            # frozen physical names (unknown columns fail loudly)
-            df = _df_to_physical(df, sch)
-            from pyspark.sql import functions as F
 
-            declared = {c["physical"]: c["type"] for c in sch["cols"]}
-            first_write = not m_tip.get("files")
-            # cast to the DECLARED type: always on the FIRST write into
-            # an empty-DDL table (the declaration is authoritative — a
-            # bare SQL literal like 0.5 arrives as decimal(1,1) and
-            # would otherwise freeze the physical type), and for any
-            # void-typed column (a bare NULL literal) on every write
-            # (void would poison the widening map)
-            df = df.select(*[
-                F.col(c).cast(declared[c]).alias(c)
-                if c in declared and (
-                    first_write
-                    or dict(df.dtypes)[c] == "void"
-                )
-                else F.col(c)
-                for c in df.columns
-            ])
-        # type widening: a wider batch records the widened logical types
-        # in the manifest (no rewrite); a narrower batch upcasts here
-        df, widen_types = _apply_type_widening(df, p, m_tip)
-        spec = m_tip.get("partitioning")
-        if spec:
-            part_cols = [
-                _mapping_physical(sch, c) if sch else c
-                for c in (spec.get("cols") or [])
+    def write(df: DataFrame, tip: int, m_tip: dict) -> dict:
+        """Run the batch through the table's write pipeline as of ``tip``
+        and write its files."""
+        _enforce_constraints(df, p, tip)
+        widen_types: dict | None = None
+        part_cols: list[str] = []
+        identity_alloc: dict[str, tuple[int, int]] = {}  # name -> (base, n)
+        if tip:
+            sch = m_tip.get("schema")
+            if sch:
+                # GENERATED ALWAYS AS IDENTITY: explicit values refuse
+                # (ALWAYS semantics); omitted columns allocate from the
+                # schema's per-commit high-water mark. The allocation base
+                # is validated against the tip again at commit time — a
+                # concurrent identity writer moving it forces a rewrite
+                # with fresh values (collision-free optimistic writers).
+                batch_lower = {n.lower() for n in df.columns}
+                for c in _identity_cols(sch):
+                    # case-insensitive: Spark resolves identifiers that way,
+                    # so a batch carrying 'ID' against identity 'id' is an
+                    # explicit write, not a new column
+                    if c["name"].lower() in batch_lower:
+                        raise ValueError(
+                            f"column {c['name']!r} is GENERATED ALWAYS AS "
+                            "IDENTITY and cannot be written explicitly"
+                        )
+                    ident = c["identity"]
+                    base = int(ident.get("next", 0))
+                    df, n_alloc = _with_identity(
+                        df, c["name"], c["type"],
+                        int(ident.get("start", 1)), int(ident.get("step", 1)),
+                        base,
+                    )
+                    identity_alloc[c["name"]] = (base, n_alloc)
+                df = _materialize_wdefaults(df, sch)
+                # generated columns the batch omits compute HERE (logical
+                # namespace); carried ones were validated above
+                df = _materialize_generated(df, sch)
+                if identity_alloc:
+                    # constraints referencing identity columns were deferred
+                    # pre-allocation; re-enforce against allocated values
+                    _enforce_identity_constraints(df, p, tip, m_tip)
+                # mapped table: incoming logical columns write under their
+                # frozen physical names (unknown columns fail loudly)
+                df = _df_to_physical(df, sch)
+                from pyspark.sql import functions as F
+
+                declared = {c["physical"]: c["type"] for c in sch["cols"]}
+                first_write = not m_tip.get("files")
+                # cast to the DECLARED type: always on the FIRST write into
+                # an empty-DDL table (the declaration is authoritative — a
+                # bare SQL literal like 0.5 arrives as decimal(1,1) and
+                # would otherwise freeze the physical type), and for any
+                # void-typed column (a bare NULL literal) on every write
+                # (void would poison the widening map)
+                df = df.select(*[
+                    F.col(c).cast(declared[c]).alias(c)
+                    if c in declared and (
+                        first_write
+                        or dict(df.dtypes)[c] == "void"
+                    )
+                    else F.col(c)
+                    for c in df.columns
+                ])
+            # type widening: a wider batch records the widened logical types
+            # in the manifest (no rewrite); a narrower batch upcasts here
+            df, widen_types = _apply_type_widening(df, p, m_tip)
+            spec = m_tip.get("partitioning")
+            if spec:
+                part_cols = [
+                    _mapping_physical(sch, c) if sch else c
+                    for c in (spec.get("cols") or [])
+                ]
+            bspec = m_tip.get("bucketing")
+        else:
+            bspec = None
+        eff_stats_cols = stats_cols
+        if tip and stats_cols and m_tip.get("schema"):
+            # caller speaks LOGICAL names; files and manifest stats live in
+            # physical space (same disposition as every other stats writer)
+            eff_stats_cols = [
+                _mapping_physical(m_tip["schema"], c) for c in stats_cols
             ]
-        bspec = m_tip.get("bucketing")
-    else:
-        bspec = None
-    eff_stats_cols = stats_cols
-    if tip and stats_cols and m_tip.get("schema"):
-        # caller speaks LOGICAL names; files and manifest stats live in
-        # physical space (same disposition as every other stats writer)
-        eff_stats_cols = [
-            _mapping_physical(m_tip["schema"], c) for c in stats_cols
-        ]
-    if bspec:
-        # bucketed table: the batch bucket-routes like the standing
-        # files (bucket files from any number of writes compose into
-        # one bucketed read)
-        files = _write_files_bucketed(df, p, bspec["col"], int(bspec["n"]))
-    elif part_cols:
-        missing = [c for c in part_cols if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"append batch lacks partition column(s) {missing}"
+        if bspec:
+            # bucketed table: the batch bucket-routes like the standing
+            # files (bucket files from any number of writes compose into
+            # one bucketed read)
+            files = _write_files_bucketed(df, p, bspec["col"], int(bspec["n"]))
+        elif part_cols:
+            missing = [c for c in part_cols if c not in df.columns]
+            if missing:
+                raise ValueError(
+                    f"append batch lacks partition column(s) {missing}"
+                )
+            # honor the table's partition spec: one file set per partition
+            # value TUPLE with exact point stats on every spec column (the
+            # evolved-layout write path)
+            files = _write_files_by_partition(
+                df, p, part_cols, what="partitioned append"
             )
-        # honor the table's partition spec: one file set per partition
-        # value TUPLE with exact point stats on every spec column (the
-        # evolved-layout write path)
-        files = _write_files_by_partition(
-            df, p, part_cols, what="partitioned append"
+            eff_stats_cols = sorted(set(stats_cols or []) | set(part_cols))
+        else:
+            files = _write_files(df, p)
+        new_stats = (
+            _collect_stats(p, files, eff_stats_cols, spark=df.sparkSession)
+            if eff_stats_cols
+            else None
         )
-        eff_stats_cols = sorted(set(stats_cols or []) | set(part_cols))
-    else:
-        files = _write_files(df, p)
-    new_stats = (
-        _collect_stats(p, files, eff_stats_cols, spark=df.sparkSession)
-        if eff_stats_cols
-        else None
-    )
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        parent_manifest = _read_manifest(p, parent) if parent else {}
-        if txn is not None and parent:
-            key = txn_app if txn_app is not None else ""
-            seen = parent_manifest.get("txns", {}).get(key)
-            if seen is None and parent_manifest.get("txn_app") == txn_app:
-                seen = parent_manifest.get("txn")
-            if seen is not None and int(seen) >= int(txn):
-                return parent  # this batch already landed (replay race)
-        old_files = parent_manifest.get("files", [])
+        return {"files": files, "stats_cols": eff_stats_cols, "stats": new_stats,
+                "identity": identity_alloc, "widen": widen_types}
+
+    # the files are written BEFORE the commit loop reads its first tip:
+    # the window a racer can land in is the manifest merge, not the write
+    tip = current_version(p)
+    written = write(df, tip, _read_manifest(p, tip) if tip else {})
+
+    def attempt(parent, m):
+        nonlocal written
+        # a concurrent identity writer that advanced the high-water mark
+        # past our planning base means our baked-in values may collide —
+        # re-run the pipeline on the ORIGINAL batch against this tip
+        # (fresh allocation + rewrite; the earlier files become
+        # vacuum-able orphans)
+        if any(
+            c.get("identity") and c["name"] in written["identity"]
+            and int(c["identity"].get("next", 0))
+            != written["identity"][c["name"]][0]
+            for c in (m.get("schema") or {}).get("cols", [])
+        ):
+            written = write(df, parent, m)
+        files, identity_alloc = written["files"], written["identity"]
         id_schema_meta = None
         if identity_alloc:
-            # a concurrent identity writer that advanced the high-water
-            # mark past our planning base means our baked-in values may
-            # collide — restart the whole append from the ORIGINAL batch
-            # (fresh allocation + rewrite; the first attempt's files
-            # become vacuum-able orphans). Otherwise bump next on the
-            # TIP's schema (which may carry unrelated concurrent DDL).
-            tip_sch = parent_manifest.get("schema") or {}
-            id_schema_meta = json.loads(json.dumps(tip_sch))
-            moved = False
+            # bump next on the TIP's schema (which may carry unrelated
+            # concurrent DDL)
+            id_schema_meta = json.loads(json.dumps(m.get("schema") or {}))
             for c in id_schema_meta.get("cols", []):
                 ident = c.get("identity")
                 if ident and c["name"] in identity_alloc:
                     base, n_alloc = identity_alloc[c["name"]]
-                    if int(ident.get("next", 0)) != base:
-                        moved = True
-                        break
                     ident["next"] = base + n_alloc
-            if moved:
-                if _identity_attempt >= COMMIT_RETRIES - 1:
-                    raise SnapshotCommitConflict(
-                        f"identity allocation for {p} lost "
-                        f"{COMMIT_RETRIES} races to concurrent writers"
-                    )
-                return snapshot_append(
-                    df_in, p, txn=txn, txn_app=txn_app,
-                    stats_cols=stats_cols, txns_extra=txns_extra,
-                    _identity_attempt=_identity_attempt + 1,
-                )
+        old_files = m.get("files", [])
         stats = None
-        if eff_stats_cols:
-            stats = dict(parent_manifest.get("stats", {}))
-            stats.update(new_stats)
-        elif parent_manifest.get("stats"):
-            stats = parent_manifest["stats"]  # carry surviving files' stats
-        blooms = _carry_blooms(p, parent_manifest, old_files, files) if parent else None
-        try:
-            return _commit(p, old_files + files, parent, txn=txn, txn_app=txn_app,
-                           txns_extra=txns_extra,
-                           stats=stats, blooms=blooms,
-                           dv=_carry_dv(parent_manifest, old_files) if parent else None,
-                           op="append",
-                           schema_meta=id_schema_meta,
-                           # rebase: a racer may have widened further —
-                           # merge per attempt (wider wins columnwise)
-                           types_meta=(
-                               _merge_type_maps(
-                                   parent_manifest.get("types"), widen_types
-                               )
-                               if widen_types is not None
-                               else None
-                           ))
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        if written["stats_cols"]:
+            stats = dict(m.get("stats", {}))
+            stats.update(written["stats"])
+        elif m.get("stats"):
+            stats = m["stats"]  # carry surviving files' stats
+        return _commit(p, old_files + files, parent, txn=txn, txn_app=txn_app,
+                       txns_extra=txns_extra, stats=stats,
+                       blooms=_carry_blooms(p, m, old_files, files) if parent else None,
+                       dv=_carry_dv(m, old_files) if parent else None,
+                       op="append", schema_meta=id_schema_meta,
+                       # rebase: a racer may have widened further — merge
+                       # per attempt (wider wins columnwise)
+                       types_meta=(
+                           _merge_type_maps(m.get("types"), written["widen"])
+                           if written["widen"] is not None
+                           else None
+                       ))
+
+    return _transact(p, attempt, txn=txn, txn_app=txn_app, create=True)
 
 
 def snapshot_copy_into(
@@ -1436,16 +1473,14 @@ def last_txn(table_path, txn_app: str | None = None) -> int:
         m = _read_manifest(p, v)
     except FileNotFoundError:
         return -1
-    key = txn_app if txn_app is not None else ""
-    if key in m.get("txns", {}):
-        return int(m["txns"][key])
-    # key absent from the map (or no map): fall through to the chain walk
-    # — a legacy pre-map stamp for this app may sit below map-carrying
-    # commits whose maps never saw it (conservative, never skips a live
-    # stamp; a vacuumed ancestor ends the walk at -1 as before)
+    # key absent from the map (or no map): walk the chain — a legacy
+    # pre-map stamp for this app may sit below map-carrying commits whose
+    # maps never saw it (conservative, never skips a live stamp; a
+    # vacuumed ancestor ends the walk at -1)
     while True:
-        if m.get("txn") is not None and m.get("txn_app") == txn_app:
-            return int(m["txn"])
+        seen = _txn_stamp(m, txn_app)
+        if seen >= 0:
+            return seen
         v = m["parent"]
         if v <= 0:
             return -1
@@ -1529,7 +1564,6 @@ def snapshot_upsert(
     # type widening: wider batch -> manifest records the widened types;
     # narrower batch -> upcast here so the merge runs at the wide type
     df, widen_types = _apply_type_widening(df, p, m_tip)
-    col = keys[0]
     # The batch is evaluated more than once below (key-range agg, then
     # the anti-join + write; the no-stats path references it twice inside
     # one DAG). Persist pins one evaluation so a NONDETERMINISTIC batch
@@ -1538,36 +1572,27 @@ def snapshot_upsert(
     # alive in unrewritten files.
     df = df.persist()
     try:
-        for attempt in range(COMMIT_RETRIES):
-            # re-resolve the tip each attempt: an upsert's read-set is the
-            # file prune below, so a conflict means another writer changed
-            # the file list — the WHOLE prune+rewrite reruns against the
-            # new parent (the failed attempt's files stay as vacuum-able
-            # orphans). This is Delta's conflict disposition for
-            # overlapping MERGEs: serialize by re-running, never compose.
-            parent = current_version(p)
-            m = _read_manifest(p, parent)
-            stats = m.get("stats", {}) or {}
-            tracked_cols = sorted({c for s in stats.values() for c in s})
-            try:
-                return _snapshot_upsert_committed(
-                    spark, df, p, keys, parent, m, stats, tracked_cols, col,
-                    widen_types,
-                )
-            except SnapshotCommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-        raise AssertionError("unreachable")
+        # each round re-resolves the tip: an upsert's read-set is its file
+        # prune, so a conflict means another writer changed the file list
+        # — the WHOLE prune+rewrite reruns against the new parent (the
+        # failed attempt's files stay as vacuum-able orphans). This is
+        # Delta's conflict disposition for overlapping MERGEs: serialize
+        # by re-running, never compose.
+        return _transact(p, lambda parent, m: _snapshot_upsert_committed(
+            spark, df, p, keys, parent, m, widen_types,
+        ))
     finally:
         df.unpersist()
 
 
 def _snapshot_upsert_committed(
-    spark, df, p, keys, parent, m, stats, tracked_cols, col,
-    widen_types: dict | None = None,
+    spark, df, p, keys, parent, m, widen_types: dict | None = None,
 ) -> int:
     from pyspark.sql import functions as F
 
+    col = keys[0]
+    stats = m.get("stats", {}) or {}
+    tracked_cols = sorted({c for s in stats.values() for c in s})
     # effective read/commit types: the parent's widened map merged with
     # this batch's contribution (rebase-safe: recomputed per attempt)
     eff_types = (
@@ -1599,10 +1624,7 @@ def _snapshot_upsert_committed(
     lo, hi, n_rows = df.agg(F.min(col), F.max(col), F.count(F.lit(1))).first()
     if n_rows == 0:
         # empty batch: metadata-only commit carrying the parent's files
-        return _commit(p, list(m["files"]), parent, stats=stats or None,
-                       blooms=m.get("blooms") or None,
-                       dv=m.get("dv") or None, op="upsert",
-                       types_meta=types_meta)
+        return _recommit(p, parent, m, "upsert", types_meta=types_meta)
     if lo is None:
         # non-empty batch whose key is NULL in every row: NULL matches no
         # existing row (the anti-join never equates NULLs), so this is a
@@ -1850,31 +1872,20 @@ def snapshot_merge(
                 "snapshot_merge: source has duplicate rows per key — "
                 "multiple source rows cannot match one target row"
             )
-        for attempt in range(COMMIT_RETRIES):
-            parent = current_version(p)
-            m = _read_manifest(p, parent)
-            try:
-                if (txn is not None and parent
-                        and txn <= last_txn(p, txn_app)):
-                    return parent  # lost a rebase race to our own replay
-                return _snapshot_merge_committed(
-                    spark, src, p, keys, col, parent, m, widen_types,
-                    matched_update, matched_update_condition,
-                    matched_delete, matched_delete_condition,
-                    not_matched_insert, not_matched_condition,
-                    insert_values=not_matched_insert_values,
-                    nmbs_delete=not_matched_by_source_delete,
-                    nmbs_condition=not_matched_by_source_condition,
-                    nmbs_update=not_matched_by_source_update,
-                    nmbs_update_condition=(
-                        not_matched_by_source_update_condition
-                    ),
-                    txn=txn, txn_app=txn_app,
-                )
-            except SnapshotCommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-        raise AssertionError("unreachable")
+        # a round that finds the batch's stamp on the tip lost a rebase
+        # race to its own replay and returns that tip
+        return _transact(p, lambda parent, m: _snapshot_merge_committed(
+            spark, src, p, keys, col, parent, m, widen_types,
+            matched_update, matched_update_condition,
+            matched_delete, matched_delete_condition,
+            not_matched_insert, not_matched_condition,
+            insert_values=not_matched_insert_values,
+            nmbs_delete=not_matched_by_source_delete,
+            nmbs_condition=not_matched_by_source_condition,
+            nmbs_update=not_matched_by_source_update,
+            nmbs_update_condition=not_matched_by_source_update_condition,
+            txn=txn, txn_app=txn_app,
+        ), txn=txn, txn_app=txn_app)
     finally:
         src.unpersist()
 
@@ -1909,10 +1920,8 @@ def _snapshot_merge_committed(
         # an empty source is a no-op — UNLESS a not-matched-by-source
         # arm is present, where it means "sync to empty" (every target
         # row is unmatched and the arm decides its fate below)
-        return _commit(p, list(m["files"]), parent, stats=stats or None,
-                       blooms=m.get("blooms") or None,
-                       dv=m.get("dv") or None, op="merge",
-                       types_meta=types_meta, txn=txn, txn_app=txn_app)
+        return _recommit(p, parent, m, "merge", types_meta=types_meta,
+                         txn=txn, txn_app=txn_app)
     if lo is None or not any(pcol in s for s in stats.values()):
         # all-NULL keys match nothing (pure insert); a table with no key
         # stats anywhere conservatively touches every file
@@ -1923,8 +1932,8 @@ def _snapshot_merge_committed(
     # identity allocation state for this ATTEMPT: _ins_rows allocates
     # from the manifest's high-water marks; every commit path folds the
     # bumped marks into its schema_meta. A commit conflict throws to
-    # snapshot_merge's retry loop, which re-derives from the fresh tip —
-    # the same restart-with-fresh-values protocol snapshot_append uses.
+    # _transact, whose next round re-derives from the fresh tip — the
+    # same restart-with-fresh-values protocol snapshot_append uses.
     id_cols_m = _identity_cols(sch)
     id_alloc: dict[str, tuple[int, int]] = {}
 
@@ -2909,17 +2918,9 @@ def snapshot_truncate(table_path) -> int:
     feed reports every previous row as deleted, computed from the file
     diff alone."""
     p = _table(table_path)
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no snapshot table at {table_path}")
-        try:
-            return _commit(p, [], parent, op="truncate",
-                           types_meta=CLEAR_METADATA)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+    return _transact(p, lambda parent, m: _commit(
+        p, [], parent, op="truncate", types_meta=CLEAR_METADATA
+    ))
 
 
 def snapshot_set_column_default(table_path, col: str,
@@ -2959,24 +2960,13 @@ def snapshot_set_properties(table_path, props: dict) -> int:
     existing keys overwrite, others keep. Properties travel with clones
     and revert with RESTORE like every other table metadata."""
     p = _table(table_path)
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no snapshot table at {table_path}")
-        pm = _read_manifest(p, parent)
-        cur = dict(pm.get("properties") or {})
+
+    def attempt(parent, m):
+        cur = dict(m.get("properties") or {})
         cur.update({str(k): str(v) for k, v in props.items()})
-        try:
-            return _commit(p, list(pm["files"]), parent,
-                           stats=pm.get("stats") or None,
-                           blooms=pm.get("blooms") or None,
-                           dv=dict(pm.get("dv", {}) or {}) or None,
-                           op="set-tblproperties",
-                           properties_meta=cur)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _recommit(p, parent, m, "set-tblproperties", properties_meta=cur)
+
+    return _transact(p, attempt)
 
 
 def snapshot_unset_properties(table_path, keys: list) -> int:
@@ -2984,25 +2974,15 @@ def snapshot_unset_properties(table_path, keys: list) -> int:
     commit without the named keys (absent keys are ignored — Delta's
     IF EXISTS disposition)."""
     p = _table(table_path)
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no snapshot table at {table_path}")
-        pm = _read_manifest(p, parent)
-        cur = dict(pm.get("properties") or {})
+
+    def attempt(parent, m):
+        cur = dict(m.get("properties") or {})
         for k in keys:
             cur.pop(str(k), None)
-        try:
-            return _commit(p, list(pm["files"]), parent,
-                           stats=pm.get("stats") or None,
-                           blooms=pm.get("blooms") or None,
-                           dv=dict(pm.get("dv", {}) or {}) or None,
-                           op="unset-tblproperties",
-                           properties_meta=cur or CLEAR_METADATA)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _recommit(p, parent, m, "unset-tblproperties",
+                         properties_meta=cur or CLEAR_METADATA)
+
+    return _transact(p, attempt)
 
 
 def snapshot_set_column_comment(table_path, col: str, comment: str) -> int:
@@ -3066,71 +3046,48 @@ def snapshot_sync_identity(spark: SparkSession, table_path) -> int:
 
 def snapshot_set_constraint(spark: SparkSession, table_path, name: str,
                             expr: str) -> int:
-    """ADD CONSTRAINT ... CHECK (expr): validates the CURRENT table
-    contents first (Delta's semantics — a constraint the standing data
-    violates is refused), then commits a metadata-only version carrying
-    the constraint; every later write batch is checked against it."""
-    p = _table(table_path)
-    tip = current_version(p)
-    if tip == 0:
-        raise FileNotFoundError(f"no snapshot table at {table_path}")
-    m = _read_manifest(p, tip)
-    cons = dict(m.get("constraints", {}) or {})
-    cons[name] = expr
-    # the standing data must already satisfy the new constraint
-    probe = Path(table_path)
-    current = snapshot_read(spark, probe, version=tip)
+    """ADD CONSTRAINT ... CHECK (expr): validates the table's contents
+    first (Delta's semantics — a constraint the standing data violates is
+    refused), then commits a metadata-only version carrying the
+    constraint; every later write batch is checked against it. Both run
+    against each commit round's tip, so a racing writer's rows are
+    validated too and its own constraints are kept."""
     from pyspark.sql import functions as F
 
-    bad = (
-        current.where(
-            F.coalesce(F.expr(expr).cast("boolean"), F.lit(True)) == F.lit(False)
+    p = _table(table_path)
+
+    def attempt(parent, m):
+        bad = (
+            snapshot_read(spark, p, version=parent)
+            .where(
+                F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
+                == F.lit(False)
+            )
+            .limit(1)
+            .collect()
         )
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        raise SnapshotConstraintViolation(
-            f"existing rows violate CHECK {name!r} ({expr}), e.g. "
-            f"{bad[0].asDict()}"
-        )
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        pm = _read_manifest(p, parent)
-        try:
-            return _commit(p, list(pm["files"]), parent,
-                           stats=pm.get("stats") or None,
-                           blooms=pm.get("blooms") or None,
-                           dv=dict(pm.get("dv", {}) or {}) or None,
-                           op="set-constraint",
-                           constraints_meta=cons)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        if bad:
+            raise SnapshotConstraintViolation(
+                f"existing rows violate CHECK {name!r} ({expr}), e.g. "
+                f"{bad[0].asDict()}"
+            )
+        cons = dict(m.get("constraints", {}) or {})
+        cons[name] = expr
+        return _recommit(p, parent, m, "set-constraint", constraints_meta=cons)
+
+    return _transact(p, attempt)
 
 
 def snapshot_drop_constraint(table_path, name: str) -> int:
     """DROP CONSTRAINT: metadata-only commit without the named check."""
     p = _table(table_path)
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no snapshot table at {table_path}")
-        pm = _read_manifest(p, parent)
-        cons = dict(pm.get("constraints", {}) or {})
+
+    def attempt(parent, m):
+        cons = dict(m.get("constraints", {}) or {})
         cons.pop(name, None)
-        try:
-            return _commit(p, list(pm["files"]), parent,
-                           stats=pm.get("stats") or None,
-                           blooms=pm.get("blooms") or None,
-                           dv=dict(pm.get("dv", {}) or {}) or None,
-                           op="drop-constraint",
-                           constraints_meta=cons)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _recommit(p, parent, m, "drop-constraint", constraints_meta=cons)
+
+    return _transact(p, attempt)
 
 
 def snapshot_restore(table_path, version: int | None = None,
@@ -3171,30 +3128,20 @@ def snapshot_restore(table_path, version: int | None = None,
     properties_meta = (
         m["properties"] if m.get("properties") is not None else CLEAR_METADATA
     )
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
+
+    def attempt(parent, _tip):
+        # restore-whatever-wins semantics: the target CONTENT is fixed, so
+        # a conflict just rebases the same state onto the new tip
         if parent == rv:
             return parent  # restoring the tip is a no-op
-        try:
-            return _commit(
-                p, list(m["files"]), parent,
-                stats=m.get("stats") or None,
-                blooms=m.get("blooms") or None,
-                dv=dict(m.get("dv", {}) or {}) or None,
-                op="restore", schema_meta=schema_meta,
-                constraints_meta=constraints_meta,
-                types_meta=types_meta,
-                partitioning_meta=partitioning_meta,
-                bucketing_meta=bucketing_meta,
-                properties_meta=properties_meta,
-            )
-        except SnapshotCommitConflict:
-            # restore-whatever-wins semantics: the target CONTENT is
-            # fixed, so a conflict just rebases the same state onto the
-            # new tip (the docstring's conflict-and-rebase contract)
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _recommit(
+            p, parent, m, "restore", schema_meta=schema_meta,
+            constraints_meta=constraints_meta, types_meta=types_meta,
+            partitioning_meta=partitioning_meta,
+            bucketing_meta=bucketing_meta, properties_meta=properties_meta,
+        )
+
+    return _transact(p, attempt)
 
 
 def snapshot_vacuum(
@@ -3525,31 +3472,6 @@ def _collect_stats(
     return out
 
 
-def _commit_full_replace(p: Path, files: list[str], *, stats=None, blooms=None,
-                         op: str = "write", partitioning_meta=None,
-                         bucketing_meta=CLEAR_METADATA) -> int:
-    """Commit a FULL-REPLACE file set with the optimistic rebase: a
-    conflict means another writer advanced the tip, and replace-whatever-
-    is-current semantics rebase by recommitting the same files on the new
-    parent (no read-set to validate). Widened-type metadata is CLEARED:
-    every caller here is a content-replacing writer (the df is the
-    caller's, not a re-read of the table), so the new files' footers are
-    the honest schema — inheriting the parent's stale ``types`` map would
-    silently drop a column the batch added or mis-type a replaced one.
-    Maintenance rewrites re-read the table through _rewrite and keep
-    inheriting."""
-    for attempt in range(COMMIT_RETRIES):
-        try:
-            return _commit(p, files, current_version(p), stats=stats,
-                           blooms=blooms, op=op, types_meta=CLEAR_METADATA,
-                           partitioning_meta=partitioning_meta,
-                           bucketing_meta=bucketing_meta)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
-
-
 def snapshot_delete_range(
     spark: SparkSession, table_path, col: str, lo, hi
 ) -> int:
@@ -3570,11 +3492,8 @@ def snapshot_delete_range(
     from pyspark.sql import functions as F
 
     p = _table(table_path)
-    if current_version(p) == 0:
-        raise FileNotFoundError(f"no snapshot table at {p}")
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         stats: dict = m.get("stats", {}) or {}
         # column-mapped table: the caller's LOGICAL key prunes and filters
         # under its physical name (data files only know that one)
@@ -3582,34 +3501,29 @@ def snapshot_delete_range(
         pcol = _mapping_physical(schema, col) if schema else col
         touched = set(_admitted(m, [{pcol: (lo, hi)}]))
         untouched = [f for f in m["files"] if f not in touched]
-        try:
-            if not touched:
-                return _commit(p, list(m["files"]), parent, stats=stats or None,
-                               blooms=m.get("blooms") or None,
-                               dv=m.get("dv") or None, op="delete")
-            kept_rows = _read_files_with_dv(
-                spark, p, sorted(touched), m.get("dv"), merge_schema=True,
-                types=m.get("types"), schema=m.get("schema"),
-            ).where(
-                ~((F.col(pcol) >= lo) & (F.col(pcol) <= hi)) | F.col(pcol).isNull()
-            ).coalesce(max(1, len(touched)))  # no small-files creep per delete
-            new_files = _write_files(kept_rows, p)
-            new_stats = dict(stats)
-            for f in touched:
-                new_stats.pop(f, None)
-            tracked_cols = sorted({c for s in stats.values() for c in s})
-            if tracked_cols:
-                new_stats.update(
-                    _collect_stats(p, new_files, tracked_cols, spark=spark)
-                )
-            return _commit(p, untouched + new_files, parent,
-                           stats=new_stats or None,
-                           blooms=_carry_blooms(p, m, untouched, new_files),
-                           dv=_carry_dv(m, untouched), op="delete")
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        if not touched:
+            return _recommit(p, parent, m, "delete")
+        kept_rows = _read_files_with_dv(
+            spark, p, sorted(touched), m.get("dv"), merge_schema=True,
+            types=m.get("types"), schema=m.get("schema"),
+        ).where(
+            ~((F.col(pcol) >= lo) & (F.col(pcol) <= hi)) | F.col(pcol).isNull()
+        ).coalesce(max(1, len(touched)))  # no small-files creep per delete
+        new_files = _write_files(kept_rows, p)
+        new_stats = dict(stats)
+        for f in touched:
+            new_stats.pop(f, None)
+        tracked_cols = sorted({c for s in stats.values() for c in s})
+        if tracked_cols:
+            new_stats.update(
+                _collect_stats(p, new_files, tracked_cols, spark=spark)
+            )
+        return _commit(p, untouched + new_files, parent,
+                       stats=new_stats or None,
+                       blooms=_carry_blooms(p, m, untouched, new_files),
+                       dv=_carry_dv(m, untouched), op="delete")
+
+    return _transact(p, attempt)
 
 
 # ---------------------------------------------------------------------------
@@ -4283,77 +4197,68 @@ def snapshot_delete_where(
     from pyspark.sql import functions as F
 
     p = _table(table_path)
-    if current_version(p) == 0:
-        raise FileNotFoundError(f"no snapshot table at {p}")
     matched = F.coalesce(_merge_cond(condition), F.lit(False))
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         stats: dict = m.get("stats", {}) or {}
         dv: dict = dict(m.get("dv", {}) or {})
         schema = m.get("schema")
         touched = sorted(
             _admitted(m, _where_region(schema, _prune_region or condition))
         )
-        try:
-            if not touched:
-                return _commit(p, list(m["files"]), parent,
-                               stats=stats or None,
-                               blooms=m.get("blooms") or None,
-                               dv=dv or None, op="delete-mor")
-            tagged = _tagged_live_logical(spark, p, m, touched)
-            if table_alias:
-                tagged = tagged.alias(table_alias)
-            hits = tagged.where(matched).select("_fp", "_ri")
-            n_hits = hits.count()
-            if n_hits > max_deleted_rows:
-                # wide delete: the rewrite is cheaper than giant vectors —
-                # copy-on-write the touched files keeping unmatched rows
-                cur = _read_files_with_dv(
-                    spark, p, touched, m.get("dv"), merge_schema=True,
-                    types=m.get("types"), schema=schema,
-                )
-                if schema:
-                    cur = _apply_column_mapping(cur, schema)
-                if table_alias:
-                    cur = cur.alias(table_alias)
-                kept = cur.where(~matched).coalesce(max(1, len(touched)))
-                if schema:
-                    kept = _df_to_physical(kept, schema)
-                new_files = _write_files(kept, p)
-                untouched = [f for f in m["files"] if f not in set(touched)]
-                new_stats = dict(stats)
-                for f in touched:
-                    new_stats.pop(f, None)
-                tracked = sorted({c for s in stats.values() for c in s})
-                if tracked:
-                    new_stats.update(
-                        _collect_stats(p, new_files, tracked, spark=spark)
-                    )
-                return _commit(p, untouched + new_files, parent,
-                               stats=new_stats or None,
-                               blooms=_carry_blooms(p, m, untouched, new_files),
-                               dv=_carry_dv(m, untouched), op="delete")
-            by_file = (
-                hits.groupBy("_fp")
-                .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
-                .collect()  # <= touched-file rows, positions capped above
+        if not touched:
+            return _recommit(p, parent, m, "delete-mor")
+        tagged = _tagged_live_logical(spark, p, m, touched)
+        if table_alias:
+            tagged = tagged.alias(table_alias)
+        hits = tagged.where(matched).select("_fp", "_ri")
+        n_hits = hits.count()
+        if n_hits > max_deleted_rows:
+            # wide delete: the rewrite is cheaper than giant vectors —
+            # copy-on-write the touched files keeping unmatched rows
+            cur = _read_files_with_dv(
+                spark, p, touched, m.get("dv"), merge_schema=True,
+                types=m.get("types"), schema=schema,
             )
-            for r in by_file:
-                new_pos = list(r["pos"])
-                if r["_fp"] in dv:
-                    new_pos = sorted(
-                        set(_unpack_positions(dv[r["_fp"]])) | set(new_pos)
-                    )
-                dv[r["_fp"]] = _pack_positions(new_pos)
-            return _commit(p, list(m["files"]), parent,
-                           stats=stats or None,
-                           blooms=m.get("blooms") or None,
-                           dv=dv or None, op="delete-mor")
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+            if schema:
+                cur = _apply_column_mapping(cur, schema)
+            if table_alias:
+                cur = cur.alias(table_alias)
+            kept = cur.where(~matched).coalesce(max(1, len(touched)))
+            if schema:
+                kept = _df_to_physical(kept, schema)
+            new_files = _write_files(kept, p)
+            untouched = [f for f in m["files"] if f not in set(touched)]
+            new_stats = dict(stats)
+            for f in touched:
+                new_stats.pop(f, None)
+            tracked = sorted({c for s in stats.values() for c in s})
+            if tracked:
+                new_stats.update(
+                    _collect_stats(p, new_files, tracked, spark=spark)
+                )
+            return _commit(p, untouched + new_files, parent,
+                           stats=new_stats or None,
+                           blooms=_carry_blooms(p, m, untouched, new_files),
+                           dv=_carry_dv(m, untouched), op="delete")
+        by_file = (
+            hits.groupBy("_fp")
+            .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
+            .collect()  # <= touched-file rows, positions capped above
+        )
+        for r in by_file:
+            new_pos = list(r["pos"])
+            if r["_fp"] in dv:
+                new_pos = sorted(
+                    set(_unpack_positions(dv[r["_fp"]])) | set(new_pos)
+                )
+            dv[r["_fp"]] = _pack_positions(new_pos)
+        return _commit(p, list(m["files"]), parent,
+                       stats=stats or None,
+                       blooms=m.get("blooms") or None,
+                       dv=dv or None, op="delete-mor")
+
+    return _transact(p, attempt)
 
 
 def snapshot_update_where(
@@ -4398,117 +4303,107 @@ def snapshot_update_where(
         c: (F.expr(e) if isinstance(e, str) else e)
         for c, e in assignments.items()
     }
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         stats: dict = m.get("stats", {}) or {}
         dv: dict = dict(m.get("dv", {}) or {})
         schema = m.get("schema")
         touched = sorted(
             _admitted(m, _where_region(schema, _prune_region or condition))
         )
-        try:
-            if not touched:
-                return _commit(p, list(m["files"]), parent,
-                               stats=stats or None,
-                               blooms=m.get("blooms") or None,
-                               dv=dv or None, op="update-mor")
-            tagged = _tagged_live_logical(spark, p, m, touched)
-            if table_alias:
-                tagged = tagged.alias(table_alias)
-            hits = tagged.where(matched)
-            hits = hits.localCheckpoint(eager=True)  # one scan, three uses
-            n_hits = hits.count()
-            if n_hits == 0:
-                return _commit(p, list(m["files"]), parent,
-                               stats=stats or None,
-                               blooms=m.get("blooms") or None,
-                               dv=dv or None, op="update-mor")
-            data_cols = [c for c in hits.columns if c not in ("_fp", "_ri")]
-            if n_hits > max_updated_rows:
-                # wide update: the rewrite is cheaper than giant vectors —
-                # copy-on-write the touched files with assignments applied
-                cur = _read_files_with_dv(
-                    spark, p, touched, m.get("dv"), merge_schema=True,
-                    types=m.get("types"), schema=schema,
-                )
-                if schema:
-                    cur = _apply_column_mapping(cur, schema)
-                if table_alias:
-                    cur = cur.alias(table_alias)
-                sc = _normalize_assign_keys(set_cols, cur.columns)
-                rewritten = cur.select(*[
-                    (F.when(matched, sc[c]).otherwise(F.col(c))
-                     if c in sc else F.col(c)).alias(c)
-                    for c in cur.columns
-                ]).coalesce(max(1, len(touched)))
-                rewritten = _regen_generated(rewritten, schema, set_cols)
-                _enforce_constraints(rewritten, p, parent)
-                if schema:
-                    rewritten = _df_to_physical(rewritten, schema)
-                new_files = _write_files(rewritten, p)
-                untouched = [f for f in m["files"] if f not in set(touched)]
-                new_stats = dict(stats)
-                for f in touched:
-                    new_stats.pop(f, None)
-                tracked = sorted({c for s in stats.values() for c in s})
-                if tracked:
-                    new_stats.update(
-                        _collect_stats(p, new_files, tracked, spark=spark)
-                    )
-                return _commit(p, untouched + new_files, parent,
-                               stats=new_stats or None,
-                               blooms=_carry_blooms(p, m, untouched, new_files),
-                               dv=_carry_dv(m, untouched), op="update")
-            # MOR path: grow vectors with the hit positions...
-            by_file = (
-                hits.groupBy("_fp")
-                .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
-                .collect()  # <= touched-file rows, positions capped above
+        if not touched:
+            return _recommit(p, parent, m, "update-mor")
+        tagged = _tagged_live_logical(spark, p, m, touched)
+        if table_alias:
+            tagged = tagged.alias(table_alias)
+        hits = tagged.where(matched)
+        hits = hits.localCheckpoint(eager=True)  # one scan, three uses
+        n_hits = hits.count()
+        if n_hits == 0:
+            return _recommit(p, parent, m, "update-mor")
+        data_cols = [c for c in hits.columns if c not in ("_fp", "_ri")]
+        if n_hits > max_updated_rows:
+            # wide update: the rewrite is cheaper than giant vectors —
+            # copy-on-write the touched files with assignments applied
+            cur = _read_files_with_dv(
+                spark, p, touched, m.get("dv"), merge_schema=True,
+                types=m.get("types"), schema=schema,
             )
-            for r in by_file:
-                new_pos = list(r["pos"])
-                if r["_fp"] in dv:
-                    new_pos = sorted(
-                        set(_unpack_positions(dv[r["_fp"]])) | set(new_pos)
-                    )
-                dv[r["_fp"]] = _pack_positions(new_pos)
-            # ...and append the updated images as new files carrying row
-            # provenance (see snapshot_update_range_mor's contract note).
-            # Assignments cast to the column's CURRENT type: `SET v = 1`
-            # on a long column must not append an int-typed image file —
-            # mixed parquet widths crash the vectorized reader (the CoW
-            # path gets this free from when/otherwise type coercion)
-            cur_type = {f.name: f.dataType for f in hits.schema.fields}
-            sc = _normalize_assign_keys(set_cols, data_cols)
-            updated = hits.select(*[
-                (sc[c].cast(cur_type[c]) if c in sc
-                 else F.col(c)).alias(c)
-                for c in data_cols
-            ], F.col("_fp").alias("_prov_fp"), F.col("_ri").alias("_prov_ri"))
-            updated = _regen_generated(updated, schema, set_cols)
-            _enforce_constraints(updated.drop(*_PROV_COLS), p, parent)
             if schema:
-                by_name = {c["name"]: c["physical"] for c in schema["cols"]}
-                updated = updated.select(
-                    *[F.col(c).alias(by_name[c]) for c in data_cols],
-                    *_PROV_COLS,
-                )
-            new_files = _write_files(updated.coalesce(1), p)
+                cur = _apply_column_mapping(cur, schema)
+            if table_alias:
+                cur = cur.alias(table_alias)
+            sc = _normalize_assign_keys(set_cols, cur.columns)
+            rewritten = cur.select(*[
+                (F.when(matched, sc[c]).otherwise(F.col(c))
+                 if c in sc else F.col(c)).alias(c)
+                for c in cur.columns
+            ]).coalesce(max(1, len(touched)))
+            rewritten = _regen_generated(rewritten, schema, set_cols)
+            _enforce_constraints(rewritten, p, parent)
+            if schema:
+                rewritten = _df_to_physical(rewritten, schema)
+            new_files = _write_files(rewritten, p)
+            untouched = [f for f in m["files"] if f not in set(touched)]
             new_stats = dict(stats)
+            for f in touched:
+                new_stats.pop(f, None)
             tracked = sorted({c for s in stats.values() for c in s})
             if tracked:
                 new_stats.update(
                     _collect_stats(p, new_files, tracked, spark=spark)
                 )
-            return _commit(p, list(m["files"]) + new_files, parent,
+            return _commit(p, untouched + new_files, parent,
                            stats=new_stats or None,
-                           blooms=m.get("blooms") or None,
-                           dv=dv or None, op="update-mor")
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+                           blooms=_carry_blooms(p, m, untouched, new_files),
+                           dv=_carry_dv(m, untouched), op="update")
+        # MOR path: grow vectors with the hit positions...
+        by_file = (
+            hits.groupBy("_fp")
+            .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
+            .collect()  # <= touched-file rows, positions capped above
+        )
+        for r in by_file:
+            new_pos = list(r["pos"])
+            if r["_fp"] in dv:
+                new_pos = sorted(
+                    set(_unpack_positions(dv[r["_fp"]])) | set(new_pos)
+                )
+            dv[r["_fp"]] = _pack_positions(new_pos)
+        # ...and append the updated images as new files carrying row
+        # provenance (see snapshot_update_range_mor's contract note).
+        # Assignments cast to the column's CURRENT type: `SET v = 1`
+        # on a long column must not append an int-typed image file —
+        # mixed parquet widths crash the vectorized reader (the CoW
+        # path gets this free from when/otherwise type coercion)
+        cur_type = {f.name: f.dataType for f in hits.schema.fields}
+        sc = _normalize_assign_keys(set_cols, data_cols)
+        updated = hits.select(*[
+            (sc[c].cast(cur_type[c]) if c in sc
+             else F.col(c)).alias(c)
+            for c in data_cols
+        ], F.col("_fp").alias("_prov_fp"), F.col("_ri").alias("_prov_ri"))
+        updated = _regen_generated(updated, schema, set_cols)
+        _enforce_constraints(updated.drop(*_PROV_COLS), p, parent)
+        if schema:
+            by_name = {c["name"]: c["physical"] for c in schema["cols"]}
+            updated = updated.select(
+                *[F.col(c).alias(by_name[c]) for c in data_cols],
+                *_PROV_COLS,
+            )
+        new_files = _write_files(updated.coalesce(1), p)
+        new_stats = dict(stats)
+        tracked = sorted({c for s in stats.values() for c in s})
+        if tracked:
+            new_stats.update(
+                _collect_stats(p, new_files, tracked, spark=spark)
+            )
+        return _commit(p, list(m["files"]) + new_files, parent,
+                       stats=new_stats or None,
+                       blooms=m.get("blooms") or None,
+                       dv=dv or None, op="update-mor")
+
+    return _transact(p, attempt)
 
 
 def snapshot_replace_where(
@@ -4566,9 +4461,8 @@ def snapshot_replace_where(
                 f"predicate {condition!r} (found at least one that "
                 "does not)"
             )
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         if m.get("bucketing"):
             raise NotImplementedError(
                 "REPLACE WHERE on a bucketed table would break the "
@@ -4662,72 +4556,69 @@ def snapshot_replace_where(
 
             dropped = {rel for rel in touched if _contained(rel)}
             boundary = [rel for rel in touched if rel not in dropped]
-        try:
-            rewritten: list[str] = []
-            if boundary:
-                cur = _read_files_with_dv(
-                    spark, p, boundary, m.get("dv"), merge_schema=True,
-                    types=types, schema=schema,
-                )
-                if schema:
-                    cur = _apply_column_mapping(cur, schema)
-                kept = cur.where(~matched)
-                if schema:
-                    kept = _df_to_physical(kept, schema)
-                rewritten = _write_files(
-                    kept.coalesce(max(1, len(boundary))), p
-                )
-            spec = m.get("partitioning")
-            part_cols = [
-                _mapping_physical(schema, c) if schema else c
-                for c in ((spec or {}).get("cols") or [])
-            ]
-            if part_cols:
-                missing = [c for c in part_cols if c not in batch.columns]
-                if missing:
-                    raise ValueError(
-                        f"replacement batch lacks partition column(s) "
-                        f"{missing}"
-                    )
-                new_files = _write_files_by_partition(
-                    batch, p, part_cols, what="partitioned replace"
-                )
-            else:
-                new_files = _write_files(batch, p)
-            untouched = [f for f in m["files"] if f not in set(touched)]
-            tracked = sorted(
-                {c for s in stats.values() for c in s if c != _ROWS_KEY}
-                | set(stats_cols or [])
-                | set(part_cols)
+        rewritten: list[str] = []
+        if boundary:
+            cur = _read_files_with_dv(
+                spark, p, boundary, m.get("dv"), merge_schema=True,
+                types=types, schema=schema,
             )
-            new_stats = {
-                f: s for f, s in stats.items() if f in set(untouched)
-            }
-            if tracked:
-                new_stats.update(
-                    _collect_stats(
-                        p, rewritten + new_files, tracked, spark=spark
-                    )
-                )
-            return _commit(
-                p, untouched + rewritten + new_files, parent,
-                stats=new_stats or None,
-                blooms=_carry_blooms(p, m, untouched, rewritten + new_files),
-                dv=_carry_dv(m, untouched),
-                op="overwrite" if condition is None else "replace-where",
-                schema_meta=id_schema_meta,
-                types_meta=(
-                    CLEAR_METADATA
-                    if condition is None
-                    else _merge_type_maps(types, widen_types)
-                    if widen_types is not None
-                    else None
-                ),
+            if schema:
+                cur = _apply_column_mapping(cur, schema)
+            kept = cur.where(~matched)
+            if schema:
+                kept = _df_to_physical(kept, schema)
+            rewritten = _write_files(
+                kept.coalesce(max(1, len(boundary))), p
             )
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        spec = m.get("partitioning")
+        part_cols = [
+            _mapping_physical(schema, c) if schema else c
+            for c in ((spec or {}).get("cols") or [])
+        ]
+        if part_cols:
+            missing = [c for c in part_cols if c not in batch.columns]
+            if missing:
+                raise ValueError(
+                    f"replacement batch lacks partition column(s) "
+                    f"{missing}"
+                )
+            new_files = _write_files_by_partition(
+                batch, p, part_cols, what="partitioned replace"
+            )
+        else:
+            new_files = _write_files(batch, p)
+        untouched = [f for f in m["files"] if f not in set(touched)]
+        tracked = sorted(
+            {c for s in stats.values() for c in s if c != _ROWS_KEY}
+            | set(stats_cols or [])
+            | set(part_cols)
+        )
+        new_stats = {
+            f: s for f, s in stats.items() if f in set(untouched)
+        }
+        if tracked:
+            new_stats.update(
+                _collect_stats(
+                    p, rewritten + new_files, tracked, spark=spark
+                )
+            )
+        return _commit(
+            p, untouched + rewritten + new_files, parent,
+            stats=new_stats or None,
+            blooms=_carry_blooms(p, m, untouched, rewritten + new_files),
+            dv=_carry_dv(m, untouched),
+            op="overwrite" if condition is None else "replace-where",
+            schema_meta=id_schema_meta,
+            types_meta=(
+                CLEAR_METADATA
+                if condition is None
+                else _merge_type_maps(types, widen_types)
+                if widen_types is not None
+                else None
+            ),
+        )
+
+    return _transact(p, attempt)
 
 
 def snapshot_read_incremental(
@@ -5093,10 +4984,11 @@ def _rewrite(
     stats_cols: list[str] | None = None, merge_schema: bool = True,
     logical: bool = False, logical_merge: bool = False,
 ) -> int:
-    """The one conflict-safe loop behind every maintenance rewriter
-    (OPTIMIZE, OPTIMIZE WHERE, auto-compaction, REORG PURGE, ZORDER): a
-    metadata swap over rewritten data, never an in-place mutation. Each
-    attempt re-reads the tip manifest and asks the operation's policy:
+    """The one rewrite behind every maintenance rewriter (OPTIMIZE,
+    OPTIMIZE WHERE, auto-compaction, REORG PURGE, ZORDER): a metadata
+    swap over rewritten data, never an in-place mutation. Each commit
+    round of _transact re-reads the tip manifest and asks the
+    operation's policy:
 
     - ``pick(m, parent)``: the files to rewrite, or None to commit
       nothing (the current version is returned). An empty pick commits
@@ -5124,11 +5016,8 @@ def _rewrite(
     the replaced files. A writer landing mid-rewrite makes the commit
     conflict — committing the stale file set would drop its rows — so
     the next attempt re-reads the new tip and redoes the rewrite."""
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no snapshot table at {p}")
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         touched = pick(m, parent)
         if touched is None:
             return parent
@@ -5166,14 +5055,11 @@ def _rewrite(
         stats = {f: old_stats[f] for f in kept if f in old_stats}
         if cols and new_files:
             stats.update(_collect_stats(p, new_files, cols, spark=spark))
-        try:
-            return _commit(p, kept + new_files, parent, stats=stats or None,
-                           blooms=_carry_blooms(p, m, kept, new_files),
-                           dv=_carry_dv(m, kept), op=op)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _commit(p, kept + new_files, parent, stats=stats or None,
+                       blooms=_carry_blooms(p, m, kept, new_files),
+                       dv=_carry_dv(m, kept), op=op)
+
+    return _transact(p, attempt)
 
 
 def snapshot_compact(
@@ -5298,11 +5184,8 @@ def snapshot_analyze(spark: SparkSession, table_path, cols: list) -> int:
     cols = list(cols)
     if not cols:
         raise ValueError("ANALYZE needs at least one column")
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no snapshot table at {table_path}")
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         sch = m.get("schema")
         pcols = [_mapping_physical(sch, c) if sch else c for c in cols]
         files = list(m["files"])
@@ -5314,16 +5197,13 @@ def snapshot_analyze(spark: SparkSession, table_path, cols: list) -> int:
             ent.update(fresh.get(f, {}))
             if ent:
                 merged[f] = ent
-        try:
-            return _commit(p, files, parent, stats=merged or None,
-                           blooms=m.get("blooms") or None,
-                           dv=dict(m.get("dv", {}) or {}) or None,
-                           op="analyze",
-                           types_meta=m.get("types"))
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _commit(p, files, parent, stats=merged or None,
+                       blooms=m.get("blooms") or None,
+                       dv=dict(m.get("dv", {}) or {}) or None,
+                       op="analyze",
+                       types_meta=m.get("types"))
+
+    return _transact(p, attempt)
 
 
 def snapshot_purge_dv(spark: SparkSession, table_path) -> int:
@@ -5532,11 +5412,8 @@ def snapshot_analyze_blooms(spark: SparkSession, table_path, cols: list) -> int:
     cols = list(cols)
     if not cols:
         raise ValueError("ANALYZE BLOOM FILTERS needs at least one column")
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no snapshot table at {table_path}")
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         sch = m.get("schema")
         pcols = [_mapping_physical(sch, c) if sch else c for c in cols]
         files = list(m["files"])
@@ -5548,16 +5425,13 @@ def snapshot_analyze_blooms(spark: SparkSession, table_path, cols: list) -> int:
             ent.update(fresh.get(f, {}))
             if ent:
                 merged[f] = ent
-        try:
-            return _commit(p, files, parent, stats=m.get("stats") or None,
-                           blooms=merged or None,
-                           dv=dict(m.get("dv", {}) or {}) or None,
-                           op="analyze-blooms",
-                           types_meta=m.get("types"))
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _commit(p, files, parent, stats=m.get("stats") or None,
+                       blooms=merged or None,
+                       dv=dict(m.get("dv", {}) or {}) or None,
+                       op="analyze-blooms",
+                       types_meta=m.get("types"))
+
+    return _transact(p, attempt)
 
 
 def _bloom_rejects(b64: str, value, s) -> bool:
@@ -5894,11 +5768,8 @@ def _commit_schema_change(
     partitioning spec in the SAME commit (a partition-column rename
     must move the spec's logical name atomically with the schema's)."""
     p = Path(table_path)
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        if parent == 0:
-            raise FileNotFoundError(f"no committed version in {table_path}")
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         schema = m.get("schema")
         if schema is None:
             raise ValueError(
@@ -5911,17 +5782,10 @@ def _commit_schema_change(
             new_part = mutate_partitioning(
                 json.loads(json.dumps(m["partitioning"]))
             )
-        try:
-            return _commit(p, list(m["files"]), parent,
-                           stats=m.get("stats") or None,
-                           blooms=m.get("blooms") or None,
-                           dv=m.get("dv") or None, op=op,
-                           schema_meta=new_schema,
-                           partitioning_meta=new_part)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _recommit(p, parent, m, op, schema_meta=new_schema,
+                         partitioning_meta=new_part)
+
+    return _transact(p, attempt)
 
 
 def snapshot_enable_column_mapping(spark: SparkSession, table_path) -> int:
@@ -5935,39 +5799,29 @@ def snapshot_enable_column_mapping(spark: SparkSession, table_path) -> int:
     would leave the co-located join surface exposing stale names) —
     rewrite through snapshot_write to drop the layout first."""
     p = Path(table_path)
-    parent = current_version(p)
-    if parent == 0:
-        raise FileNotFoundError(f"no committed version in {table_path}")
-    m = _read_manifest(p, parent)
-    if m.get("schema"):
-        return parent
-    if m.get("bucketing"):
-        raise ValueError(
-            "column mapping on a BUCKETED table is unsupported (bucket "
-            "metadata binds physical names to the join attribute) — "
-            "rewrite through snapshot_write to drop the bucketed "
-            "layout first, then enable mapping"
-        )
-    df = snapshot_read(spark, p, merge_schema=True)
-    cols = [
-        {"id": i + 1, "name": f.name, "physical": f.name,
-         "type": f.dataType.simpleString()}
-        for i, f in enumerate(df.schema.fields)
-    ]
-    schema = {"next_id": len(cols) + 1, "cols": cols, "retired": []}
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        m = _read_manifest(p, parent)
-        try:
-            return _commit(p, list(m["files"]), parent,
-                           stats=m.get("stats") or None,
-                           blooms=m.get("blooms") or None,
-                           dv=m.get("dv") or None, op="set-mapping",
-                           schema_meta=schema)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+
+    def attempt(parent, m):
+        if m.get("schema"):
+            return parent
+        if m.get("bucketing"):
+            raise ValueError(
+                "column mapping on a BUCKETED table is unsupported (bucket "
+                "metadata binds physical names to the join attribute) — "
+                "rewrite through snapshot_write to drop the bucketed "
+                "layout first, then enable mapping"
+            )
+        # the mapping snapshots THIS round's tip: a column a racing writer
+        # added must be mapped, or reads would drop it
+        df = snapshot_read(spark, p, version=parent, merge_schema=True)
+        cols = [
+            {"id": i + 1, "name": f.name, "physical": f.name,
+             "type": f.dataType.simpleString()}
+            for i, f in enumerate(df.schema.fields)
+        ]
+        schema = {"next_id": len(cols) + 1, "cols": cols, "retired": []}
+        return _recommit(p, parent, m, "set-mapping", schema_meta=schema)
+
+    return _transact(p, attempt)
 
 
 def snapshot_rename_column(table_path, old: str, new: str) -> int:
@@ -6310,8 +6164,6 @@ def snapshot_set_partitioning(table_path, col: "str | list[str] | None") -> int:
     writer; the spec follows the standard metadata carry (inherit,
     delta-on-change, checkpoint, clone, restore-with-CLEAR)."""
     p = _table(table_path)
-    if current_version(p) == 0:
-        raise FileNotFoundError(f"no snapshot table at {p}")
     cols = (
         None if col is None
         else [col] if isinstance(col, str) else list(col)
@@ -6320,9 +6172,8 @@ def snapshot_set_partitioning(table_path, col: "str | list[str] | None") -> int:
         not cols or len(set(cols)) != len(cols)
     ):
         raise ValueError(f"invalid partition column list: {cols}")
-    for attempt in range(COMMIT_RETRIES):
-        parent = current_version(p)
-        m = _read_manifest(p, parent)
+
+    def attempt(parent, m):
         if cols is not None:
             sch = m.get("schema")
             if sch:
@@ -6333,17 +6184,10 @@ def snapshot_set_partitioning(table_path, col: "str | list[str] | None") -> int:
                         f"partition column(s) {bad} not in table schema"
                     )
         meta = {"cols": cols} if cols is not None else CLEAR_METADATA
-        try:
-            return _commit(p, list(m["files"]), parent,
-                           stats=m.get("stats") or None,
-                           blooms=m.get("blooms") or None,
-                           dv=m.get("dv") or None,
-                           op="set-partitioning",
-                           partitioning_meta=meta)
-        except SnapshotCommitConflict:
-            if attempt == COMMIT_RETRIES - 1:
-                raise
-    raise AssertionError("unreachable")
+        return _recommit(p, parent, m, "set-partitioning",
+                         partitioning_meta=meta)
+
+    return _transact(p, attempt)
 
 
 def snapshot_partitioning(table_path, version: int | None = None) -> list[str] | None:
@@ -6529,21 +6373,21 @@ def snapshot_upsert_partitioned(
                 df, p, partition_col, touched_vals
             )
             stats = _collect_stats(p, files, stats_cols, spark=spark)
-            return _commit_full_replace(p, files, stats=stats, op="upsert-part",
-                                        partitioning_meta=part_meta)
+            # table creation: a full replace, same disposition as
+            # snapshot_write's
+            return _transact(p, lambda parent, m: _commit(
+                p, files, parent, stats=stats, op="upsert-part",
+                types_meta=CLEAR_METADATA, partitioning_meta=part_meta,
+                bucketing_meta=CLEAR_METADATA,
+            ), create=True)
         if not touched_vals:
             # empty batch: metadata-only commit (auditable no-op)
-            parent = current_version(p)
-            m = _read_manifest(p, parent)
-            return _commit(p, list(m["files"]), parent,
-                           stats=m.get("stats") or None,
-                           blooms=m.get("blooms") or None,
-                           dv=m.get("dv") or None, op="upsert-part",
-                           partitioning_meta=part_meta)
+            return _transact(p, lambda parent, m: _recommit(
+                p, parent, m, "upsert-part", partitioning_meta=part_meta
+            ))
         klo, khi = _g["klo"], _g["khi"]
-        for attempt in range(COMMIT_RETRIES):
-            parent = current_version(p)
-            m = _read_manifest(p, parent)
+
+        def attempt(parent, m):
             stats = m.get("stats", {}) or {}
             # one point disjunct per batch partition value, each also
             # carrying the batch's KEY range: a file provably holding none
@@ -6583,16 +6427,13 @@ def snapshot_upsert_partitioned(
             new_stats.update(
                 _collect_stats(p, new_files, tracked, spark=spark)
             )
-            try:
-                return _commit(p, untouched + new_files, parent,
-                               stats=new_stats,
-                               blooms=_carry_blooms(p, m, untouched, new_files),
-                               dv=_carry_dv(m, untouched), op="upsert-part",
-                               partitioning_meta=part_meta)
-            except SnapshotCommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-        raise AssertionError("unreachable")
+            return _commit(p, untouched + new_files, parent,
+                           stats=new_stats,
+                           blooms=_carry_blooms(p, m, untouched, new_files),
+                           dv=_carry_dv(m, untouched), op="upsert-part",
+                           partitioning_meta=part_meta)
+
+        return _transact(p, attempt)
     finally:
         df.unpersist()
 
@@ -6676,20 +6517,11 @@ def snapshot_tail_changes(
             )
         process_batch(batch, ver)
         # exactly-once progress stamp: a metadata-only commit on the
-        # progress table records (app_id, ver); a replayed stamp is a
-        # no-op by the txn protocol
-        for attempt in range(COMMIT_RETRIES):
-            parent = current_version(progress)
-            if last_txn(progress, app_id) >= ver:
-                break  # another consumer instance raced ahead
-            try:
-                pm = _read_manifest(progress, parent) if parent else {}
-                _commit(progress, list(pm.get("files", [])), parent,
-                        txn=ver, txn_app=app_id, op="progress")
-                break
-            except SnapshotCommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
+        # progress table records (app_id, ver); a stamp another consumer
+        # instance already landed is a no-op by the txn protocol
+        _transact(progress, lambda parent, m: _recommit(
+            progress, parent, m, "progress", txn=ver, txn_app=app_id,
+        ), txn=ver, txn_app=app_id, create=True)
         n += 1
     return n
 

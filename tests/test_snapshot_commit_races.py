@@ -11,6 +11,10 @@ racer's version).
 
 ``test_op_gives_up_after_commit_retries`` makes every commit conflict:
 the op must re-raise after exactly ``COMMIT_RETRIES`` commit attempts.
+The last cases pin what a rebase must re-derive from the new tip rather
+than from a tip read before the first attempt: a racer's constraint,
+rows a new constraint must check, columns a new column mapping must
+name, and a replay stamp written before the tip carried a txns map.
 
 Every case builds its own four-row table.
 """
@@ -41,13 +45,15 @@ def t(spark, tmp_path):
 
 @pytest.fixture
 def race(spark, monkeypatch):
-    """Make the first ``_commit`` land a racing append first. The racer's
-    frame is ``race["rows"]()`` (keys 100 and 101 by default); its
-    committed version ends up in ``race["version"]``. Set-up commits run
-    with ``race["armed"]`` false."""
+    """Make the first ``_commit`` let a racing writer commit first. The
+    racer runs ``race["act"](table)`` — by default an append of
+    ``race["rows"]()``, keys 100 and 101 — and its committed version ends
+    up in ``race["version"]``. Set-up commits run with ``race["armed"]``
+    false."""
     real = S._commit
     state = {
         "rows": lambda: _rows(spark, 100, 102, "racer"),
+        "act": lambda p_: S.snapshot_append(state["rows"](), p_),
         "version": None,
         "armed": True,
     }
@@ -55,7 +61,7 @@ def race(spark, monkeypatch):
     def racing_commit(p_, files_, parent_, **kw):
         if state["armed"] and state["version"] is None:
             state["version"] = -1  # the racer's own commit goes straight through
-            state["version"] = S.snapshot_append(state["rows"](), p_)
+            state["version"] = state["act"](p_)
         return real(p_, files_, parent_, **kw)
 
     monkeypatch.setattr(S, "_commit", racing_commit)
@@ -311,3 +317,58 @@ def test_op_gives_up_after_commit_retries(spark, t, monkeypatch, op):
         run()
     assert calls == [1] * S.COMMIT_RETRIES
     assert S.current_version(t) == 1
+
+
+def test_one_commit_loop_in_the_package():
+    pkg = Path(S.__file__).resolve().parent.parent
+    loops = {
+        str(f.relative_to(pkg)): f.read_text().count("range(COMMIT_RETRIES)")
+        for f in pkg.rglob("*.py")
+    }
+    assert {f: n for f, n in loops.items() if n} == {"sources/snapshots.py": 1}
+
+
+# -- what a rebase must re-derive ------------------------------------------
+
+
+def test_set_constraint_keeps_a_racers_constraint(spark, t, race):
+    race["act"] = lambda p_: S.snapshot_set_constraint(spark, p_, "c2", "v IS NOT NULL")
+    S.snapshot_set_constraint(spark, t, "c1", "k >= 0")
+    tip = _rebased(t, race, "set-constraint")
+    assert tip["m"]["constraints"] == {"c1": "k >= 0", "c2": "v IS NOT NULL"}
+
+
+def test_set_constraint_checks_a_racers_rows(spark, t, race):
+    race["rows"] = lambda: _rows(spark, -2, 0, "racer")
+    with pytest.raises(S.SnapshotConstraintViolation, match="c1"):
+        S.snapshot_set_constraint(spark, t, "c1", "k >= 0")
+    tip = _tip(t)
+    assert tip["version"] == race["version"]
+    assert not tip["m"].get("constraints")
+
+
+def test_enable_column_mapping_maps_a_racers_column(spark, t, race):
+    race["rows"] = lambda: _rows(spark, 100, 102, "racer").withColumn(
+        "extra", F.col("k") * 10
+    )
+    S.snapshot_enable_column_mapping(spark, t)
+    tip = _rebased(t, race, "set-mapping")
+    assert [c["name"] for c in tip["m"]["schema"]["cols"]] == ["k", "v", "extra"]
+    got = {r["k"]: r["extra"] for r in S.snapshot_read(spark, t).collect()}
+    assert (got[0], got[100], got[101]) == (None, 1000, 1010)
+
+
+def test_datasource_replay_of_a_pre_map_stamp_is_a_no_op(spark, t):
+    import json
+
+    # v1 as a legacy manifest: a per-commit stamp, no txns map
+    mp = S._manifest_path(t, 1)
+    m = json.loads(mp.read_text())
+    m["txn"], m["txn_app"] = 7, "A"
+    m.pop("txns", None)
+    mp.write_text(json.dumps(m))
+    files = S._write_files(_rows(spark, 0, 4, "base"), S._table(t))
+    _commit_datasource_write(str(t), files, False, None, txn=7, txn_app="A")
+    assert S.current_version(t) == 1
+    assert S.snapshot_read(spark, t).count() == 4
+    assert not any((t / f).exists() for f in files)  # the replay's files go
