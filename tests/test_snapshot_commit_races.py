@@ -217,9 +217,10 @@ def test_restore_rebases(spark, t, race):
 
 def test_widen_column_rebases(spark, tmp_path, race):
     t = tmp_path / "t"
-    narrow = lambda lo, hi, v: _rows(spark, lo, hi, v).withColumn(  # noqa: E731
-        "n", F.col("k").cast("int")
-    )
+
+    def narrow(lo, hi, v):
+        return _rows(spark, lo, hi, v).withColumn("n", F.col("k").cast("int"))
+
     race["armed"] = False
     S.snapshot_write(narrow(0, 4, "base"), t)
     race["armed"] = True
