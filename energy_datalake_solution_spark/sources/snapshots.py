@@ -2603,7 +2603,9 @@ def snapshot_read(
     predicate prunes rows. At 100 TB this is the difference between
     opening every file of a snapshot and the few whose stats can match.
     A selection no file can match reads as the snapshot's typed frame
-    with no rows (planned, never scanned)."""
+    with no rows (planned, never scanned). So does a version listing no
+    files (a truncate): typed by the declared mapping, else by the footer
+    of the nearest earlier version that lists files."""
     from pyspark.sql import functions as F
 
     p = Path(table_path)
@@ -2623,9 +2625,17 @@ def snapshot_read(
             return spark.createDataFrame([], ", ".join(
                 f"{c['name']} {c['type']}" for c in schema["cols"]
             ))
-        raise FileNotFoundError(
-            f"version {v} of {table_path} lists no files and no schema"
-        )
+        # an unmapped table keeps its schema only in file footers
+        listed = _nearest_listed_ancestor(p, m)
+        first = listed["files"][0] if listed else None
+        if first is None or not (p / first).exists():
+            raise FileNotFoundError(
+                f"version {v} of {table_path} lists no files and no "
+                "schema, and no earlier version's footer is readable"
+            )
+        return spark.createDataFrame([], _read_files_with_dv(
+            spark, p, [first], None, types=listed.get("types")
+        ).schema)
     files = list(m["files"])
     kept = files if where is None else _admitted(m, _where_region(schema, where))
     # merge-on-read: apply the manifest's deletion vectors (no-op without)
@@ -2647,6 +2657,22 @@ def snapshot_read(
     if isinstance(where, (list, tuple)):
         where = _region_filter(where)
     return df.where(where)
+
+
+def _nearest_listed_ancestor(p: Path, m: dict) -> dict | None:
+    """Resolved manifest of the nearest version on ``m``'s parent chain
+    that lists files; None when the chain ends (or reaches a vacuumed
+    manifest) first."""
+    v = int(m.get("parent", 0))
+    while v > 0:
+        try:
+            anc = _read_manifest(p, v)
+        except FileNotFoundError:
+            return None
+        if anc["files"]:
+            return anc
+        v = int(anc.get("parent", 0))
+    return None
 
 
 def _region_filter(region: list):

@@ -3,7 +3,11 @@
 Re-expresses the reference's Glue Job 1 (glue_jobs/dynamic-data-processor.py)
 as a contract-driven pipeline:
 
-  * CSV read with header/inference and the reference's quoting dialect (:31-38)
+  * CSV read with header and the reference's quoting dialect (:31-38). A
+    contracted file is read with every column a string, and the contract's
+    cast is the only typing: the reference's inferSchema costs a whole-file
+    scan whose types the cast throws away, and it turns an all-digit key
+    such as "007" into 7. Only the unrecognized passthrough infers.
   * per-file-type select/cast/alias contract (:52-139) from schemas.CONTRACTS
   * derived columns: customer_category CASE/LIKE (:88-92), hashed_customer_id
     sha2 (:94), total_cost product (:118), transaction_date (:124)
@@ -25,14 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import categorize_like, sha256_hex
+from .formats import read_any
 from .schemas import CONTRACTS, CUSTOMER_CATEGORY_MAP, PARTITION_COLUMN, TableContract
-
-
-def read_raw_csv(spark: SparkSession, path: str) -> DataFrame:
-    """CSV scan with schema inference (reference: dynamic-data-processor.py:31-38)."""
-    return spark.read.csv(
-        path, header=True, inferSchema=True, sep=",", quote='"', escape="\\"
-    )
 
 
 def apply_contract(df: DataFrame, contract: TableContract) -> DataFrame:
@@ -84,8 +82,8 @@ def transform(
     unrecognized_data_{file_type} (:130-139) — schema-on-read passthrough.
     """
     src_name = Path(raw_path).name
-    raw = read_raw_csv(spark, raw_path)
     contract = CONTRACTS.get(file_type)
+    raw = read_any(spark, raw_path, fmt="csv", infer=contract is None)
     if contract is None:
         return f"unrecognized_data_{file_type}", add_audit_columns(raw, src_name, load_date)
     typed = apply_contract(raw, contract)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..sources.formats import CSV_DIALECT
 from ..sources.schemas import PARTITION_COLUMN, TableContract
 from ..sources.transform import add_audit_columns, add_derived_columns, apply_contract
 
@@ -35,14 +36,7 @@ from ..sources.transform import add_audit_columns, add_derived_columns, apply_co
 def raw_csv_stream(spark: SparkSession, raw_dir: str | Path, schema: T.StructType) -> DataFrame:
     """File-arrival CSV stream over a raw-zone directory. Streaming sources
     need an explicit schema (no inference mid-stream)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        .option("sep", ",")
-        .option("quote", '"')
-        .option("escape", "\\")
-        .csv(str(raw_dir))
-    )
+    return spark.readStream.schema(schema).options(**CSV_DIALECT).csv(str(raw_dir))
 
 
 def stream_to_processed(

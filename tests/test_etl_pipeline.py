@@ -13,7 +13,12 @@ from pyspark.sql import functions as F
 
 from energy_datalake_solution_spark.sources.ingest import ingest_file
 from energy_datalake_solution_spark.sources.merge import curated_read, run_merge
-from energy_datalake_solution_spark.sources.schemas import CLIENTES, CONTRACTS, TRANSACCIONES
+from energy_datalake_solution_spark.sources.schemas import (
+    CLIENTES,
+    CONTRACTS,
+    PROVEEDORES,
+    TRANSACCIONES,
+)
 from energy_datalake_solution_spark.sources.transform import run_pipeline, transform
 
 PROVEEDORES_CSV = textwrap.dedent(
@@ -136,6 +141,90 @@ def test_transform_transacciones_derived_and_unknown_passthrough(spark, lake):
     out = df2.collect()[0]
     assert out["a"] == 1 and out["b"] == 2
     assert out["load_date_partition"] == dt.date(2025, 3, 5)
+
+
+def test_transform_keeps_all_digit_keys_verbatim(spark, lake):
+    """A contracted file is read as strings and typed only by its
+    contract: schema inference would read the all-digit keys "007" and
+    "7" as the integers 7 and 7, land both as "7" and merge them into
+    one supplier, and hash customer "0001" as "1"."""
+    import hashlib
+
+    root, landing = lake
+    processed, curated = root / "processed", root / "curated"
+    now = dt.datetime(2025, 3, 5, tzinfo=dt.timezone.utc)
+    files = {
+        "proveedores_digits.csv": (
+            "ID_Proveedor,NombreProveedor,TipoEnergia,PaisOrigen,FechaInicioContrato\n"
+            "007,Bond Energia,Solar,Espana,2020-01-15\n"
+            "7,Siete SA,Eolica,Chile,2021-06-01\n"
+        ),
+        "clientes_digits.csv": (
+            "ID_Cliente,NombreCliente,TipoCliente,Direccion,Ciudad,Pais\n"
+            "0001,Ana Ruiz,Residencial,Calle 1,Bogota,Colombia\n"
+        ),
+    }
+    for name, content in files.items():
+        res = ingest_file(_land(landing, name, content), root, now=now)
+        run_pipeline(spark, res.file_type, res.raw_path, res.load_date, processed)
+    for contract in (PROVEEDORES, CLIENTES):
+        assert run_merge(spark, processed, curated, contract, "2025-03-05")
+
+    suppliers = {
+        r["supplier_id"]: r["supplier_name"]
+        for r in curated_read(spark, curated, "dim_proveedores").collect()
+    }
+    assert suppliers == {"007": "Bond Energia", "7": "Siete SA"}
+    (customer,) = curated_read(spark, curated, "dim_clientes").collect()
+    assert customer["customer_id"] == "0001"
+    assert customer["hashed_customer_id"] == hashlib.sha256(b"0001").hexdigest()
+
+
+def _group_input_bytes(spark, group: str) -> int:
+    """Input bytes of every stage the job group ran, from the status
+    store once the listener bus has delivered the group's events."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    total = 0
+    for job_id in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(job_id)
+        for stage_id in info.stageIds if info else ():
+            try:
+                total += store.lastStageAttempt(stage_id).inputBytes()
+            except Py4JJavaError:  # a skipped stage never ran
+                continue
+    return total
+
+
+def test_contracted_csv_is_scanned_once(spark, lake):
+    """The processed write is the only scan of a contracted CSV: no
+    inference pass reads the whole file first. Only the header probe
+    (one read buffer) comes on top, so the input bytes of the whole
+    pipeline stay well under two scans of a file larger than that
+    buffer."""
+    root, landing = lake
+    rows = [TRANSACCIONES_CSV.splitlines()[0]] + [
+        f"T{i:06d},C{i % 97:03d},P{i % 13:03d},2025-03-01 10:{i % 60:02d}:00,"
+        f"{i % 100}.25,{50 + i % 7}.5"
+        for i in range(8000)
+    ]
+    f = _land(landing, "transacciones_big.csv", "\n".join(rows) + "\n")
+    size = f.stat().st_size
+    assert size > 4 * 65536
+    res = ingest_file(f, root, now=dt.datetime(2025, 3, 5, tzinfo=dt.timezone.utc))
+
+    sc = spark.sparkContext
+    group = "contracted-csv-single-scan"
+    sc.setJobGroup(group, "contracted csv pipeline")
+    try:
+        run_pipeline(spark, res.file_type, res.raw_path, res.load_date, root / "processed")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert _group_input_bytes(spark, group) < 1.5 * size
 
 
 def test_processed_write_partitioned_and_merge_upsert(spark, lake):

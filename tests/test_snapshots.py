@@ -427,6 +427,29 @@ def test_row_count_on_empty_table_raises_descriptively(tmp_path):
         snapshot_row_count(t)
 
 
+def test_truncated_unmapped_table_reads_typed_empty(spark, tmp_path):
+    """A truncate commits a version listing no files, and an unmapped
+    table keeps its schema only in file footers: the read takes its typed
+    empty frame from the nearest earlier version that lists files (its
+    widened types map included), through repeated truncates, and refuses
+    once vacuum has removed every such version."""
+    from energy_datalake_solution_spark.sources.snapshots import snapshot_truncate
+
+    t = tmp_path / "t"
+    snapshot_write(_df(spark, 0, 5, "a").withColumn("k", F.col("k").cast("int")), t)
+    snapshot_append(spark.createDataFrame([(2**40, "w")], "k long, v string"), t)
+    before = snapshot_read(spark, t).schema
+    snapshot_truncate(t)
+    snapshot_truncate(t)
+    out = snapshot_read(spark, t)
+    assert out.schema == before
+    assert out.schema["k"].dataType.simpleString() == "bigint"
+    assert out.count() == 0
+    snapshot_vacuum(t, keep_versions=1)
+    with pytest.raises(FileNotFoundError, match="no earlier version"):
+        snapshot_read(spark, t)
+
+
 def test_schema_evolution_read_across_appends(spark, tmp_path):
     """Additive schema evolution: a later append carries an extra column;
     a merge_schema read surfaces it (NULL on pre-evolution rows), the
@@ -2782,9 +2805,9 @@ def test_change_feed_updates_mode_on_widened_table(spark, tmp_path):
 
 
 def test_full_replace_with_stats_clears_stale_types_map(spark, tmp_path):
-    """r10 ADVICE regression: content-replacing writers through
-    _commit_full_replace (every snapshot_write layout) CLEAR the widened
-    types map like snapshot_write — a full replace whose batch ADDS a
+    """r10 ADVICE regression: a full replace (every snapshot_write
+    layout, committed through _transact) CLEARS the widened types map —
+    a full replace whose batch ADDS a
     column on a previously-widened table must surface the new column
     (a stale map as explicit read schema would silently drop it)."""
     from energy_datalake_solution_spark.sources.snapshots import (
