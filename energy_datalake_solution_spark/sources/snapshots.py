@@ -4426,7 +4426,7 @@ def snapshot_update_where(
             )
         return _commit(p, list(m["files"]) + new_files, parent,
                        stats=new_stats or None,
-                       blooms=m.get("blooms") or None,
+                       blooms=_carry_blooms(p, m, list(m["files"]), new_files),
                        dv=dv or None, op="update-mor")
 
     return _transact(p, attempt)

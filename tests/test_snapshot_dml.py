@@ -271,7 +271,7 @@ CASES = {
             spark, t, WHERE, {"w": "w + 1000000"}
         ),
         "update-mor", _none, lambda m: _holding(m, 0, 299),
-        NEW_STATS, set(),
+        NEW_STATS, {"u"},
         lambda rows: _set(rows, _where_hit, w=lambda r: r[3] + 1000000),
         True,
     ),
@@ -289,7 +289,7 @@ CASES = {
             spark, t, "k", 100, 109, {"u": "u + 1"}
         ),
         "update-mor", _none, lambda m: _holding(m, 100, 109),
-        NEW_STATS, set(),
+        NEW_STATS, {"u"},
         lambda rows: _set(rows, lambda r: 100 <= r[0] <= 109,
                           u=lambda r: r[1] + 1),
         True,
