@@ -777,6 +777,9 @@ def _types_ddl_with_prov(types: dict) -> str:
     return ", ".join([_types_ddl(types), *extra])
 
 
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 def _file_footer_types_raw(path: str) -> list[str]:
     """One file's footer column NAMES, reserved columns included —
     executor-safe (pure pyarrow, no session)."""
@@ -788,13 +791,26 @@ def _file_footer_types_raw(path: str) -> list[str]:
 def _file_footer_types(path: str) -> dict:
     """One file's {column: Spark type} from its parquet footer — the
     per-task unit of the distributed type sweep (executor-safe: pure
-    pyarrow, no session)."""
+    pyarrow, no session). A Spark-written footer records the schema it
+    wrote under its row-metadata key, which is authoritative: the
+    parquet types alone cannot tell ``timestamp_ntz`` from
+    ``timestamp`` (both are 64-bit timestamps; pyarrow reads the naive
+    one as ``timestamp``). Files other writers made fall back to the
+    arrow schema."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
 
+    arrow = pq.read_schema(path)
+    written = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
+    schema = (
+        StructType.fromJson(json.loads(written))
+        if written
+        else from_arrow_schema(arrow)
+    )
     return {
         f.name: f.dataType.simpleString()
-        for f in from_arrow_schema(pq.read_schema(path)).fields
+        for f in schema.fields
         if f.name not in _PROV_COLS
     }
 
@@ -1235,39 +1251,22 @@ def snapshot_append(
         _enforce_constraints(df, p, tip)
         widen_types: dict | None = None
         part_cols: list[str] = []
-        identity_alloc: dict[str, tuple[int, int]] = {}  # name -> (base, n)
+        sch = m_tip.get("schema") if tip else None
+        id_meta = None
         if tip:
-            sch = m_tip.get("schema")
             if sch:
-                # GENERATED ALWAYS AS IDENTITY: explicit values refuse
-                # (ALWAYS semantics); omitted columns allocate from the
-                # schema's per-commit high-water mark. The allocation base
-                # is validated against the tip again at commit time — a
-                # concurrent identity writer moving it forces a rewrite
-                # with fresh values (collision-free optimistic writers).
-                batch_lower = {n.lower() for n in df.columns}
-                for c in _identity_cols(sch):
-                    # case-insensitive: Spark resolves identifiers that way,
-                    # so a batch carrying 'ID' against identity 'id' is an
-                    # explicit write, not a new column
-                    if c["name"].lower() in batch_lower:
-                        raise ValueError(
-                            f"column {c['name']!r} is GENERATED ALWAYS AS "
-                            "IDENTITY and cannot be written explicitly"
-                        )
-                    ident = c["identity"]
-                    base = int(ident.get("next", 0))
-                    df, n_alloc = _with_identity(
-                        df, c["name"], c["type"],
-                        int(ident.get("start", 1)), int(ident.get("step", 1)),
-                        base,
-                    )
-                    identity_alloc[c["name"]] = (base, n_alloc)
+                # GENERATED ALWAYS AS IDENTITY allocates from the schema's
+                # per-commit high-water mark. The planning schema is
+                # validated against the tip again at commit time — a
+                # concurrent identity writer moving a mark forces a
+                # rewrite with fresh values (collision-free optimistic
+                # writers).
+                df, id_meta = _allocate_identity(df, sch)
                 df = _materialize_wdefaults(df, sch)
                 # generated columns the batch omits compute HERE (logical
                 # namespace); carried ones were validated above
                 df = _materialize_generated(df, sch)
-                if identity_alloc:
+                if id_meta:
                     # constraints referencing identity columns were deferred
                     # pre-allocation; re-enforce against allocated values
                     _enforce_identity_constraints(df, p, tip, m_tip)
@@ -1338,7 +1337,7 @@ def snapshot_append(
             else None
         )
         return {"files": files, "stats_cols": eff_stats_cols, "stats": new_stats,
-                "identity": identity_alloc, "widen": widen_types}
+                "schema": sch, "id_meta": id_meta, "widen": widen_types}
 
     # the files are written BEFORE the commit loop reads its first tip:
     # the window a racer can land in is the manifest merge, not the write
@@ -1347,29 +1346,25 @@ def snapshot_append(
 
     def attempt(parent, m):
         nonlocal written
-        # a concurrent identity writer that advanced the high-water mark
+        # a concurrent identity writer that advanced a high-water mark
         # past our planning base means our baked-in values may collide —
         # re-run the pipeline on the ORIGINAL batch against this tip
         # (fresh allocation + rewrite; the earlier files become
         # vacuum-able orphans)
-        if any(
-            c.get("identity") and c["name"] in written["identity"]
-            and int(c["identity"].get("next", 0))
-            != written["identity"][c["name"]][0]
-            for c in (m.get("schema") or {}).get("cols", [])
+        if written["id_meta"] and (
+            _identity_cols(m.get("schema")) != _identity_cols(written["schema"])
         ):
             written = write(df, parent, m)
-        files, identity_alloc = written["files"], written["identity"]
-        id_schema_meta = None
-        if identity_alloc:
-            # bump next on the TIP's schema (which may carry unrelated
-            # concurrent DDL)
-            id_schema_meta = json.loads(json.dumps(m.get("schema") or {}))
-            for c in id_schema_meta.get("cols", []):
-                ident = c.get("identity")
-                if ident and c["name"] in identity_alloc:
-                    base, n_alloc = identity_alloc[c["name"]]
-                    ident["next"] = base + n_alloc
+        files, id_schema_meta = written["files"], written["id_meta"]
+        if id_schema_meta:
+            # carry the bumped marks onto the TIP's schema (which may carry
+            # unrelated concurrent DDL)
+            marks = {c["name"]: c["identity"]
+                     for c in _identity_cols(id_schema_meta)}
+            id_schema_meta = json.loads(json.dumps(m["schema"]))
+            for c in id_schema_meta["cols"]:
+                if c["name"] in marks:
+                    c["identity"] = marks[c["name"]]
         old_files = m.get("files", [])
         stats = None
         if written["stats_cols"]:
@@ -1592,7 +1587,6 @@ def _snapshot_upsert_committed(
 
     col = keys[0]
     stats = m.get("stats", {}) or {}
-    tracked_cols = sorted({c for s in stats.values() for c in s})
     # effective read/commit types: the parent's widened map merged with
     # this batch's contribution (rebase-safe: recomputed per attempt)
     eff_types = (
@@ -1615,11 +1609,9 @@ def _snapshot_upsert_committed(
         merged = cur.join(df.select(keys).distinct(), keys, "left_anti").unionByName(
             df, allowMissingColumns=True  # additive schema evolution
         )
-        files = _write_files(merged, p)
-        st = _collect_stats(p, files, tracked_cols, spark=spark) if tracked_cols else None
-        return _commit(p, files, parent, stats=st,
-                       blooms=_carry_blooms(p, m, [], files), op="upsert",
-                       types_meta=types_meta)
+        return _replace_files(spark, p, parent, m, m["files"],
+                              _write_files(merged, p), "upsert",
+                              types_meta=types_meta)
 
     lo, hi, n_rows = df.agg(F.min(col), F.max(col), F.count(F.lit(1))).first()
     if n_rows == 0:
@@ -1653,16 +1645,9 @@ def _snapshot_upsert_committed(
             merged = merged.coalesce(max(1, len(touched)))
         else:
             merged = df
-    untouched = [f for f in m["files"] if f not in touched]
-    new_files = _write_files(merged, p)
-    new_stats = dict(stats)
-    for f in touched:
-        new_stats.pop(f, None)
-    new_stats.update(_collect_stats(p, new_files, tracked_cols, spark=spark))
-    return _commit(p, untouched + new_files, parent, stats=new_stats,
-                   blooms=_carry_blooms(p, m, untouched, new_files),
-                   dv=_carry_dv(m, untouched), op="upsert",
-                   types_meta=types_meta)
+    return _replace_files(spark, p, parent, m, touched,
+                          _write_files(merged, p), "upsert",
+                          types_meta=types_meta)
 
 
 def _merge_cond(expr):
@@ -1907,21 +1892,20 @@ def _snapshot_merge_committed(
     # them must recompute on the update image (see _regen_generated)
     gen_assigned = set(matched_update or ()) | set(nmbs_update or ())
     stats: dict = m.get("stats", {}) or {}
-    tracked_cols = sorted({c for s in stats.values() for c in s})
     eff_types = (
         _merge_type_maps(m.get("types"), widen_types)
         if widen_types is not None
         else m.get("types")
     )
     types_meta = eff_types if widen_types is not None else None
+    meta = {"types_meta": types_meta, "txn": txn, "txn_app": txn_app}
     pcol = _mapping_physical(sch, col) if sch else col
     lo, hi, n_rows = src.agg(F.min(col), F.max(col), F.count(F.lit(1))).first()
     if n_rows == 0 and not nmbs_delete and nmbs_update is None:
         # an empty source is a no-op — UNLESS a not-matched-by-source
         # arm is present, where it means "sync to empty" (every target
         # row is unmatched and the arm decides its fate below)
-        return _recommit(p, parent, m, "merge", types_meta=types_meta,
-                         txn=txn, txn_app=txn_app)
+        return _recommit(p, parent, m, "merge", **meta)
     if lo is None or not any(pcol in s for s in stats.values()):
         # all-NULL keys match nothing (pure insert); a table with no key
         # stats anywhere conservatively touches every file
@@ -1929,42 +1913,15 @@ def _snapshot_merge_committed(
     else:
         touched = sorted(_admitted(m, [{pcol: (lo, hi)}]))
 
-    # identity allocation state for this ATTEMPT: _ins_rows allocates
-    # from the manifest's high-water marks; every commit path folds the
-    # bumped marks into its schema_meta. A commit conflict throws to
-    # _transact, whose next round re-derives from the fresh tip — the
-    # same restart-with-fresh-values protocol snapshot_append uses.
-    id_cols_m = _identity_cols(sch)
-    id_alloc: dict[str, tuple[int, int]] = {}
-
-    def _alloc_identity(ins: DataFrame) -> DataFrame:
-        for c in id_cols_m:
-            if c["name"] in ins.columns:
-                ins = ins.drop(c["name"])  # typed-NULL slot from the
-                # explicit-insert projection; allocation replaces it
-            ident = c["identity"]
-            base = int(ident.get("next", 0))
-            ins, n_alloc = _with_identity(
-                ins, c["name"], c["type"],
-                int(ident.get("start", 1)), int(ident.get("step", 1)),
-                base,
-            )
-            id_alloc[c["name"]] = (base, n_alloc)
-        return ins
-
-    def _id_schema_meta():
-        if not id_alloc:
-            return None
-        out = json.loads(json.dumps(sch))
-        for c in out["cols"]:
-            if c.get("identity") and c["name"] in id_alloc:
-                b, n_alloc = id_alloc[c["name"]]
-                c["identity"]["next"] = b + n_alloc
-        return out
-
-    def _ins_rows(live_keys: DataFrame) -> DataFrame:
+    def _ins_rows(live_keys: DataFrame) -> "tuple[DataFrame, dict | None]":
+        """The insert arm's rows against ``live_keys`` and the
+        schema_meta their identity allocation bumps. Allocation runs
+        per ATTEMPT from this tip's high-water marks: a commit conflict
+        throws to _transact, whose next round re-derives from the
+        fresh tip — snapshot_append's restart-with-fresh-values
+        protocol."""
         if not not_matched_insert:
-            return src.limit(0)
+            return src.limit(0), None
         ins = src
         if not_matched_condition is not None:
             ins = ins.alias("s").where(_merge_cond(not_matched_condition))
@@ -2013,9 +1970,37 @@ def _snapshot_merge_committed(
         # only genuinely ABSENT columns materialize
         ins = _materialize_wdefaults(ins, sch)
         ins = _materialize_generated(ins, sch)
-        if id_cols_m:
-            ins = _alloc_identity(ins)
-        return ins
+        # the explicit-insert projection's typed-NULL identity slots give
+        # way to allocated values
+        return _allocate_identity(
+            ins.drop(*[c["name"] for c in _identity_cols(sch)]), sch
+        )
+
+    def _insert_files(live_keys: DataFrame) -> "tuple[list[str], dict | None]":
+        """Write the insert arm's rows on their own (merge-on-read):
+        CHECKs (incl. ones referencing identity, deferred
+        pre-allocation) bite on the allocated rows."""
+        ins, id_meta = _ins_rows(live_keys)
+        _enforce_constraints(ins, p, parent)
+        if sch:
+            ins = _df_to_physical(ins, sch)
+        return (_write_files(ins, p) if not ins.isEmpty() else []), id_meta
+
+    def _mor(tagged, aff, data_cols) -> int:
+        """Merge-on-read commit of the affected rows ``aff`` (tagged
+        (_fp, _ri), ``_upd`` flagging an update image): their positions
+        grow the deletion vectors, update images and inserts append."""
+        images = _update_images(
+            p, parent, aff.where(F.col("_upd")), data_cols, sch
+        )
+        img_files = (
+            _write_files(images.coalesce(1), p)
+            if not images.isEmpty()
+            else []
+        )
+        ins_files, id_meta = _insert_files(tagged.select(keys).distinct())
+        return _grow_dvs(spark, p, parent, m, aff, img_files + ins_files,
+                         "merge", schema_meta=id_meta, **meta)
 
     always = F.lit(True)
     if matched_update is None and not nmbs_delete and nmbs_update is None:
@@ -2023,7 +2008,7 @@ def _snapshot_merge_committed(
         # vectors; inserts append as new files. One commit. (The
         # not-matched-by-source arms route to their whole-table branch
         # below instead — their scope ignores the stats prune.)
-        dv: dict = dict(m.get("dv", {}) or {})
+        hits = None
         if touched:
             tagged = _tagged_live_logical(spark, p, m, touched, types=eff_types)
             # tagged is used twice (insert anti-join keys; delete hits) —
@@ -2035,8 +2020,7 @@ def _snapshot_merge_committed(
                 if matched_delete_condition is not None:
                     pair = pair.where(_merge_cond(matched_delete_condition))
                 hits = pair.select("t._fp", "t._ri")
-                n_hits = hits.count()
-                if n_hits > DV_MAX_DELETED_ROWS:
+                if hits.count() > DV_MAX_DELETED_ROWS:
                     # wide delete: the rewrite is cheaper than giant
                     # vectors — rerun on the CoW shape with a never-firing
                     # update arm so only the delete clause applies
@@ -2048,42 +2032,11 @@ def _snapshot_merge_committed(
                         nmbs_delete=nmbs_delete, nmbs_condition=nmbs_condition,
                         txn=txn, txn_app=txn_app,
                     )
-                by_file = (
-                    hits.groupBy("_fp")
-                    .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
-                    .collect()
-                )
-                for r in by_file:
-                    new_pos = list(r["pos"])
-                    if r["_fp"] in dv:
-                        new_pos = sorted(
-                            set(_unpack_positions(dv[r["_fp"]])) | set(new_pos)
-                        )
-                    dv[r["_fp"]] = _pack_positions(new_pos)
         else:
             live_keys = src.limit(0).select(keys)
-        ins = _ins_rows(live_keys)
-        # same post-allocation gate as the CoW branches: the insert
-        # arm's frame now carries allocated identity values and any
-        # explicit-insert projections, so CHECKs (incl. ones
-        # referencing identity, deferred pre-allocation) bite here
-        _enforce_constraints(ins, p, parent)
-        if sch:
-            ins = _df_to_physical(ins, sch)
-        ins_files = _write_files(ins, p) if not ins.isEmpty() else []
-        old_files = list(m["files"])
-        new_stats = dict(stats)
-        if tracked_cols and ins_files:
-            new_stats.update(
-                _collect_stats(p, ins_files, tracked_cols, spark=spark)
-            )
-        return _commit(p, old_files + ins_files, parent,
-                       stats=new_stats or None,
-                       blooms=_carry_blooms(p, m, old_files, ins_files)
-                       if ins_files else m.get("blooms") or None,
-                       dv=dv or None, op="merge", types_meta=types_meta,
-                       schema_meta=_id_schema_meta(),
-                       txn=txn, txn_app=txn_app)
+        ins_files, id_meta = _insert_files(live_keys)
+        return _grow_dvs(spark, p, parent, m, hits, ins_files, "merge",
+                         schema_meta=id_meta, **meta)
 
     upd_c = _merge_cond(matched_update_condition) if (
         matched_update_condition is not None
@@ -2115,7 +2068,6 @@ def _snapshot_merge_committed(
             return e
 
         live = sorted(m["files"])
-        dv = dict(m.get("dv", {}) or {})
         if live:
             tagged = _tagged_live_logical(spark, p, m, live, types=eff_types)
             data_cols = [c for c in tagged.columns if c not in ("_fp", "_ri")]
@@ -2163,84 +2115,25 @@ def _snapshot_merge_committed(
                 aff = _regen_generated(aff, sch, gen_assigned)
                 if n_aff:
                     aff = aff.localCheckpoint(eager=True)  # <= cap rows
-                by_file = (
-                    aff.groupBy("_fp")
-                    .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
-                    .collect()
-                )
-                for r in by_file:
-                    new_pos = list(r["pos"])
-                    if r["_fp"] in dv:
-                        new_pos = sorted(
-                            set(_unpack_positions(dv[r["_fp"]])) | set(new_pos)
-                        )
-                    dv[r["_fp"]] = _pack_positions(new_pos)
-                images = aff.where(F.col("_upd")).select(
-                    *data_cols,
-                    F.col("_fp").alias("_prov_fp"),
-                    F.col("_ri").alias("_prov_ri"),
-                )
-                _enforce_constraints(images.drop(*_PROV_COLS), p, parent)
-                if sch:
-                    by_name = {
-                        c["name"]: c["physical"] for c in sch["cols"]
-                    }
-                    images = images.select(
-                        *[F.col(c).alias(by_name[c]) for c in data_cols],
-                        *_PROV_COLS,
-                    )
-                img_files = (
-                    _write_files(images.coalesce(1), p)
-                    if not images.isEmpty()
-                    else []
-                )
-                ins = _ins_rows(tagged.select(keys).distinct())
-                _enforce_constraints(ins, p, parent)
-                if sch:
-                    ins = _df_to_physical(ins, sch)
-                ins_files = _write_files(ins, p) if not ins.isEmpty() else []
-                old_files = list(m["files"])
-                new_files = img_files + ins_files
-                new_stats = dict(stats)
-                if tracked_cols and new_files:
-                    new_stats.update(
-                        _collect_stats(p, new_files, tracked_cols, spark=spark)
-                    )
-                return _commit(p, old_files + new_files, parent,
-                               stats=new_stats or None,
-                               blooms=_carry_blooms(p, m, old_files, new_files)
-                               if new_files else m.get("blooms") or None,
-                               dv=dv or None, op="merge",
-                               types_meta=types_meta,
-                               schema_meta=_id_schema_meta(),
-                               txn=txn, txn_app=txn_app)
+                return _mor(tagged, aff, data_cols)
             # wide sync: a full-table rewrite IS the honest cost
             kept = pair_n.where(~do_del_n & ~do_nmbs_del).select(*[
                 _upd_expr(c, do_upd_n, do_nmbs_upd).alias(c)
                 for c in data_cols
             ])
             kept = _regen_generated(kept, sch, gen_assigned)
+            ins, id_meta = _ins_rows(tagged.select(keys).distinct())
             merged = kept.unionByName(
-                _ins_rows(tagged.select(keys).distinct()),
-                allowMissingColumns=True,
+                ins, allowMissingColumns=True,
             ).coalesce(max(1, len(live)))
         else:
-            merged = _ins_rows(src.limit(0).select(keys))
+            merged, id_meta = _ins_rows(src.limit(0).select(keys))
         _enforce_constraints(merged, p, parent)
         if sch:
             merged = _df_to_physical(merged, sch)
         new_files = _write_files(merged, p) if not merged.isEmpty() else []
-        tracked = tracked_cols
-        new_stats = (
-            _collect_stats(p, new_files, tracked, spark=spark)
-            if tracked and new_files
-            else None
-        )
-        return _commit(p, new_files, parent, stats=new_stats,
-                       blooms=_carry_blooms(p, m, [], new_files),
-                       dv=None, op="merge", types_meta=types_meta,
-                       schema_meta=_id_schema_meta(),
-                       txn=txn, txn_app=txn_app)
+        return _replace_files(spark, p, parent, m, live, new_files, "merge",
+                              schema_meta=id_meta, **meta)
 
     # MERGE-ON-READ first (update arm present): when the affected row
     # set is small — the overwhelmingly common MERGE on a large table —
@@ -2285,56 +2178,7 @@ def _snapshot_merge_committed(
             aff = _regen_generated(aff, sch, gen_assigned)
             if n_aff:
                 aff = aff.localCheckpoint(eager=True)  # <= cap rows
-            dv = dict(m.get("dv", {}) or {})
-            by_file = (
-                aff.groupBy("_fp")
-                .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
-                .collect()
-            )
-            for r in by_file:
-                new_pos = list(r["pos"])
-                if r["_fp"] in dv:
-                    new_pos = sorted(
-                        set(_unpack_positions(dv[r["_fp"]])) | set(new_pos)
-                    )
-                dv[r["_fp"]] = _pack_positions(new_pos)
-            images = aff.where(F.col("_upd")).select(
-                *data_cols,
-                F.col("_fp").alias("_prov_fp"),
-                F.col("_ri").alias("_prov_ri"),
-            )
-            _enforce_constraints(images.drop(*_PROV_COLS), p, parent)
-            if sch:
-                by_name = {c["name"]: c["physical"] for c in sch["cols"]}
-                images = images.select(
-                    *[F.col(c).alias(by_name[c]) for c in data_cols],
-                    *_PROV_COLS,
-                )
-            img_files = (
-                _write_files(images.coalesce(1), p)
-                if not images.isEmpty()
-                else []
-            )
-            ins = _ins_rows(tagged.select(keys).distinct())
-            _enforce_constraints(ins, p, parent)
-            if sch:
-                ins = _df_to_physical(ins, sch)
-            ins_files = _write_files(ins, p) if not ins.isEmpty() else []
-            old_files = list(m["files"])
-            new_files = img_files + ins_files
-            new_stats = dict(stats)
-            if tracked_cols and new_files:
-                new_stats.update(
-                    _collect_stats(p, new_files, tracked_cols, spark=spark)
-                )
-            return _commit(p, old_files + new_files, parent,
-                           stats=new_stats or None,
-                           blooms=_carry_blooms(p, m, old_files, new_files)
-                           if new_files else m.get("blooms") or None,
-                           dv=dv or None, op="merge",
-                           types_meta=types_meta,
-                           schema_meta=_id_schema_meta(),
-                   txn=txn, txn_app=txn_app)
+            return _mor(tagged, aff, data_cols)
 
     # COPY-ON-WRITE path (wide update set): rewrite the touched files
     # with the clause logic applied; untouched files carry byte-identical
@@ -2370,29 +2214,18 @@ def _snapshot_merge_committed(
             for c in t_cols
         ])
         kept = _regen_generated(kept, sch, gen_assigned)
-        live_keys = cur.select(keys).distinct()
+        ins, id_meta = _ins_rows(cur.select(keys).distinct())
         merged = kept.unionByName(
-            _ins_rows(live_keys), allowMissingColumns=True
+            ins, allowMissingColumns=True
         ).coalesce(max(1, len(touched)))
     else:
-        merged = _ins_rows(src.limit(0).select(keys))
+        merged, id_meta = _ins_rows(src.limit(0).select(keys))
     _enforce_constraints(merged, p, parent)
     if sch:
         merged = _df_to_physical(merged, sch)
-    untouched = [f for f in m["files"] if f not in set(touched)]
     new_files = _write_files(merged, p) if not merged.isEmpty() else []
-    new_stats = dict(stats)
-    for f in touched:
-        new_stats.pop(f, None)
-    if tracked_cols and new_files:
-        new_stats.update(_collect_stats(p, new_files, tracked_cols, spark=spark))
-    return _commit(p, untouched + new_files, parent,
-                   stats=new_stats or None,
-                   blooms=_carry_blooms(p, m, untouched, new_files),
-                   dv=_carry_dv(m, untouched), op="merge",
-                   types_meta=types_meta,
-                   schema_meta=_id_schema_meta(),
-                   txn=txn, txn_app=txn_app)
+    return _replace_files(spark, p, parent, m, touched, new_files, "merge",
+                          schema_meta=id_meta, **meta)
 
 
 # Resolved-manifest cache: manifests are immutable once published (the
@@ -3520,34 +3353,21 @@ def snapshot_delete_range(
     p = _table(table_path)
 
     def attempt(parent, m):
-        stats: dict = m.get("stats", {}) or {}
         # column-mapped table: the caller's LOGICAL key prunes and filters
         # under its physical name (data files only know that one)
         schema = m.get("schema")
         pcol = _mapping_physical(schema, col) if schema else col
-        touched = set(_admitted(m, [{pcol: (lo, hi)}]))
-        untouched = [f for f in m["files"] if f not in touched]
+        touched = sorted(_admitted(m, [{pcol: (lo, hi)}]))
         if not touched:
             return _recommit(p, parent, m, "delete")
         kept_rows = _read_files_with_dv(
-            spark, p, sorted(touched), m.get("dv"), merge_schema=True,
-            types=m.get("types"), schema=m.get("schema"),
+            spark, p, touched, m.get("dv"), merge_schema=True,
+            types=m.get("types"), schema=schema,
         ).where(
             ~((F.col(pcol) >= lo) & (F.col(pcol) <= hi)) | F.col(pcol).isNull()
         ).coalesce(max(1, len(touched)))  # no small-files creep per delete
-        new_files = _write_files(kept_rows, p)
-        new_stats = dict(stats)
-        for f in touched:
-            new_stats.pop(f, None)
-        tracked_cols = sorted({c for s in stats.values() for c in s})
-        if tracked_cols:
-            new_stats.update(
-                _collect_stats(p, new_files, tracked_cols, spark=spark)
-            )
-        return _commit(p, untouched + new_files, parent,
-                       stats=new_stats or None,
-                       blooms=_carry_blooms(p, m, untouched, new_files),
-                       dv=_carry_dv(m, untouched), op="delete")
+        return _replace_files(spark, p, parent, m, touched,
+                              _write_files(kept_rows, p), "delete")
 
     return _transact(p, attempt)
 
@@ -3564,9 +3384,20 @@ def snapshot_delete_range(
 # guard, not a comment): past that point the rewrite is cheaper than
 # dragging a large DV through every read, which is also Delta's guidance.
 # Compaction/z-order PURGE vectors physically (their reads apply the DV,
-# their outputs carry none); upserts/CoW-deletes apply the DV when reading
-# files they rewrite and carry entries for files they keep — a deleted row
-# can never resurrect.
+# their outputs carry none) — a deleted row can never resurrect.
+#
+# Every row-level mutation (upsert, merge, delete-range, delete-where,
+# update-where, replace-where, partitioned upsert) writes its own files
+# and then commits through one of two cores, which own the rule for the
+# stats, blooms and vectors a DML commit carries:
+# - _replace_files (copy-on-write): new files replace the touched ones,
+#   which were read through their vectors; every other file carries
+#   byte-identical with its stats, bloom and vector.
+# - _grow_dvs (merge-on-read): the hit (_fp, _ri) positions join the
+#   vectors and the new files (update images, inserts) append; it commits
+#   through _replace_files with nothing touched.
+# In both, new files get footer stats and blooms for every column the
+# parent tracked.
 # ---------------------------------------------------------------------------
 
 DV_MAX_DELETED_ROWS = 1_000_000
@@ -3669,6 +3500,102 @@ def _dv_key(f: str) -> str:
     return m.group(1) if m else f
 
 
+def _replace_files(
+    spark: SparkSession, p: Path, parent: int, m: dict, touched,
+    new_files: list[str], op: str, *, stats_cols=(), **meta,
+) -> int:
+    """The copy-on-write DML commit: ``new_files`` replace the
+    ``touched`` files of ``m`` on top of ``parent``. Every other file
+    carries byte-identical with its stats, bloom and deletion vector;
+    the touched files' entries drop (their rewrite read through their
+    vectors). New files get footer stats for every column the parent
+    tracked plus ``stats_cols``, and blooms for every column it
+    bloomed. ``meta`` goes to _commit."""
+    touched = set(touched)
+    untouched = [f for f in m["files"] if f not in touched]
+    parent_stats = m.get("stats") or {}
+    stats = {f: s for f, s in parent_stats.items() if f not in touched}
+    tracked = sorted(
+        {c for s in parent_stats.values() for c in s} | set(stats_cols)
+    )
+    if tracked:
+        stats.update(_collect_stats(p, new_files, tracked, spark=spark))
+    return _commit(p, untouched + new_files, parent, stats=stats or None,
+                   blooms=_carry_blooms(p, m, untouched, new_files),
+                   dv=_carry_dv(m, untouched), op=op, **meta)
+
+
+def _grow_dvs(
+    spark: SparkSession, p: Path, parent: int, m: dict, hits,
+    new_files: list[str], op: str, **meta,
+) -> int:
+    """The merge-on-read DML commit: the (_fp, _ri) positions of
+    ``hits`` (None: no row deleted) join their files' deletion vectors
+    and ``new_files`` — update images, inserted rows — append; no file
+    of ``m`` is rewritten. One driver pull of per-file position lists,
+    bounded by the caller's DV_MAX_DELETED_ROWS check."""
+    from pyspark.sql import functions as F
+
+    dv = dict(m.get("dv") or {})
+    if hits is not None:
+        for r in (
+            hits.groupBy("_fp")
+            .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
+            .collect()
+        ):
+            pos = set(r["pos"])
+            if r["_fp"] in dv:
+                pos |= set(_unpack_positions(dv[r["_fp"]]))
+            dv[r["_fp"]] = _pack_positions(pos)
+    return _replace_files(spark, p, parent, {**m, "dv": dv}, (), new_files,
+                          op, **meta)
+
+
+def _update_images(
+    p: Path, parent: int, aff: DataFrame, data_cols: list[str],
+    schema: dict | None,
+) -> DataFrame:
+    """Write-ready merge-on-read update images: the LOGICAL ``data_cols``
+    of ``aff``, CHECKed, under their physical names, plus the
+    (_prov_fp, _prov_ri) position of the row each image replaces — the
+    change feed pairs them as update_preimage/update_postimage."""
+    from pyspark.sql import functions as F
+
+    images = aff.select(
+        *data_cols,
+        F.col("_fp").alias("_prov_fp"),
+        F.col("_ri").alias("_prov_ri"),
+    )
+    _enforce_constraints(images.drop(*_PROV_COLS), p, parent)
+    if schema:
+        by_name = {c["name"]: c["physical"] for c in schema["cols"]}
+        images = images.select(
+            *[F.col(c).alias(by_name[c]) for c in data_cols], *_PROV_COLS,
+        )
+    return images
+
+
+def _default_groups(
+    p: Path, rels: list[str], defaults: dict
+) -> "list[tuple[frozenset, list[str]]]":
+    """``rels`` grouped by the set of defaulted physical columns (keys of
+    ``defaults``, see _schema_defaults) their footers lack, in a stable
+    order — the per-FILE unit of column-DEFAULT injection. Empty when no
+    file lacks one: nothing to inject, and no footer is opened for a
+    table without defaults."""
+    if not defaults or not rels:
+        return []
+    groups: dict[frozenset, list[str]] = {}
+    for f in rels:
+        names = _footer_names(str((p / f).resolve()))
+        groups.setdefault(
+            frozenset(ph for ph in defaults if ph not in names), []
+        ).append(f)
+    if len(groups) == 1 and not next(iter(groups)):
+        return []
+    return sorted(groups.items(), key=lambda kv: sorted(kv[0]))
+
+
 def _read_files_with_dv(
     spark: SparkSession,
     p: Path,
@@ -3702,29 +3629,18 @@ def _read_files_with_dv(
     from pyspark.sql import functions as F
 
     defaults = _schema_defaults(schema)
-    if defaults and rels:
-        groups: dict[frozenset, list[str]] = {}
-        for f in rels:
-            names = _footer_names(str((p / f).resolve()))
-            lacking = frozenset(
-                ph for ph in defaults if ph not in names
+    groups = _default_groups(p, rels, defaults)
+    if groups:
+        out = None
+        for lacking, sub in groups:
+            df = _read_files_with_dv(spark, p, sub, dv, merge_schema, types)
+            for ph in sorted(lacking):
+                expr, t = defaults[ph]
+                df = df.withColumn(ph, F.expr(expr).cast(t))
+            out = df if out is None else out.unionByName(
+                df, allowMissingColumns=True
             )
-            groups.setdefault(lacking, []).append(f)
-        if len(groups) > 1 or next(iter(groups)):
-            out = None
-            for lacking, sub in sorted(
-                groups.items(), key=lambda kv: sorted(kv[0])
-            ):
-                df = _read_files_with_dv(
-                    spark, p, sub, dv, merge_schema, types
-                )
-                for ph in sorted(lacking):
-                    expr, t = defaults[ph]
-                    df = df.withColumn(ph, F.expr(expr).cast(t))
-                out = df if out is None else out.unionByName(
-                    df, allowMissingColumns=True
-                )
-            return out
+        return out
     reader = spark.read
     if types:
         reader = reader.schema(_types_ddl(types))
@@ -4121,35 +4037,21 @@ def _tagged_live_logical(spark, p: Path, m: dict, touched: list[str],
     from pyspark.sql import functions as F
 
     defaults = _schema_defaults(m.get("schema")) if _inject_defaults else {}
-    if defaults and touched:
-        groups: dict[frozenset, list[str]] = {}
-        for f in touched:
-            names = _footer_names(str((p / f).resolve()))
-            groups.setdefault(
-                frozenset(ph for ph in defaults if ph not in names), []
-            ).append(f)
-        if len(groups) > 1 or next(iter(groups)):
-            out = None
-            for lacking, sub in sorted(
-                groups.items(), key=lambda kv: sorted(kv[0])
-            ):
-                df = _tagged_live_logical(
-                    spark, p, m, sub, types=types,
-                    _inject_defaults=False,
-                )
-                by_phys = {
-                    c["physical"]: c["name"]
-                    for c in m["schema"]["cols"]
-                }
-                for ph in sorted(lacking):
-                    expr, t = defaults[ph]
-                    df = df.withColumn(
-                        by_phys.get(ph, ph), F.expr(expr).cast(t)
-                    )
-                out = df if out is None else out.unionByName(
-                    df, allowMissingColumns=True
-                )
-            return out
+    groups = _default_groups(p, touched, defaults)
+    if groups:
+        by_phys = {c["physical"]: c["name"] for c in m["schema"]["cols"]}
+        out = None
+        for lacking, sub in groups:
+            df = _tagged_live_logical(
+                spark, p, m, sub, types=types, _inject_defaults=False,
+            )
+            for ph in sorted(lacking):
+                expr, t = defaults[ph]
+                df = df.withColumn(by_phys.get(ph, ph), F.expr(expr).cast(t))
+            out = df if out is None else out.unionByName(
+                df, allowMissingColumns=True
+            )
+        return out
 
     eff_types = m.get("types") if types is None else types
     _rd = spark.read
@@ -4226,8 +4128,6 @@ def snapshot_delete_where(
     matched = F.coalesce(_merge_cond(condition), F.lit(False))
 
     def attempt(parent, m):
-        stats: dict = m.get("stats", {}) or {}
-        dv: dict = dict(m.get("dv", {}) or {})
         schema = m.get("schema")
         touched = sorted(
             _admitted(m, _where_region(schema, _prune_region or condition))
@@ -4238,8 +4138,7 @@ def snapshot_delete_where(
         if table_alias:
             tagged = tagged.alias(table_alias)
         hits = tagged.where(matched).select("_fp", "_ri")
-        n_hits = hits.count()
-        if n_hits > max_deleted_rows:
+        if hits.count() > max_deleted_rows:
             # wide delete: the rewrite is cheaper than giant vectors —
             # copy-on-write the touched files keeping unmatched rows
             cur = _read_files_with_dv(
@@ -4253,36 +4152,9 @@ def snapshot_delete_where(
             kept = cur.where(~matched).coalesce(max(1, len(touched)))
             if schema:
                 kept = _df_to_physical(kept, schema)
-            new_files = _write_files(kept, p)
-            untouched = [f for f in m["files"] if f not in set(touched)]
-            new_stats = dict(stats)
-            for f in touched:
-                new_stats.pop(f, None)
-            tracked = sorted({c for s in stats.values() for c in s})
-            if tracked:
-                new_stats.update(
-                    _collect_stats(p, new_files, tracked, spark=spark)
-                )
-            return _commit(p, untouched + new_files, parent,
-                           stats=new_stats or None,
-                           blooms=_carry_blooms(p, m, untouched, new_files),
-                           dv=_carry_dv(m, untouched), op="delete")
-        by_file = (
-            hits.groupBy("_fp")
-            .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
-            .collect()  # <= touched-file rows, positions capped above
-        )
-        for r in by_file:
-            new_pos = list(r["pos"])
-            if r["_fp"] in dv:
-                new_pos = sorted(
-                    set(_unpack_positions(dv[r["_fp"]])) | set(new_pos)
-                )
-            dv[r["_fp"]] = _pack_positions(new_pos)
-        return _commit(p, list(m["files"]), parent,
-                       stats=stats or None,
-                       blooms=m.get("blooms") or None,
-                       dv=dv or None, op="delete-mor")
+            return _replace_files(spark, p, parent, m, touched,
+                                  _write_files(kept, p), "delete")
+        return _grow_dvs(spark, p, parent, m, hits, [], "delete-mor")
 
     return _transact(p, attempt)
 
@@ -4331,8 +4203,6 @@ def snapshot_update_where(
     }
 
     def attempt(parent, m):
-        stats: dict = m.get("stats", {}) or {}
-        dv: dict = dict(m.get("dv", {}) or {})
         schema = m.get("schema")
         touched = sorted(
             _admitted(m, _where_region(schema, _prune_region or condition))
@@ -4369,65 +4239,26 @@ def snapshot_update_where(
             _enforce_constraints(rewritten, p, parent)
             if schema:
                 rewritten = _df_to_physical(rewritten, schema)
-            new_files = _write_files(rewritten, p)
-            untouched = [f for f in m["files"] if f not in set(touched)]
-            new_stats = dict(stats)
-            for f in touched:
-                new_stats.pop(f, None)
-            tracked = sorted({c for s in stats.values() for c in s})
-            if tracked:
-                new_stats.update(
-                    _collect_stats(p, new_files, tracked, spark=spark)
-                )
-            return _commit(p, untouched + new_files, parent,
-                           stats=new_stats or None,
-                           blooms=_carry_blooms(p, m, untouched, new_files),
-                           dv=_carry_dv(m, untouched), op="update")
-        # MOR path: grow vectors with the hit positions...
-        by_file = (
-            hits.groupBy("_fp")
-            .agg(F.sort_array(F.collect_list("_ri")).alias("pos"))
-            .collect()  # <= touched-file rows, positions capped above
-        )
-        for r in by_file:
-            new_pos = list(r["pos"])
-            if r["_fp"] in dv:
-                new_pos = sorted(
-                    set(_unpack_positions(dv[r["_fp"]])) | set(new_pos)
-                )
-            dv[r["_fp"]] = _pack_positions(new_pos)
-        # ...and append the updated images as new files carrying row
-        # provenance (see snapshot_update_range_mor's contract note).
-        # Assignments cast to the column's CURRENT type: `SET v = 1`
-        # on a long column must not append an int-typed image file —
-        # mixed parquet widths crash the vectorized reader (the CoW
-        # path gets this free from when/otherwise type coercion)
+            return _replace_files(spark, p, parent, m, touched,
+                                  _write_files(rewritten, p), "update")
+        # MOR path: the hit positions grow the vectors and the updated
+        # images append as new files carrying row provenance (see
+        # snapshot_update_range_mor's contract note). Assignments cast
+        # to the column's CURRENT type: `SET v = 1` on a long column
+        # must not append an int-typed image file — mixed parquet widths
+        # crash the vectorized reader (the CoW path gets this free from
+        # when/otherwise type coercion)
         cur_type = {f.name: f.dataType for f in hits.schema.fields}
         sc = _normalize_assign_keys(set_cols, data_cols)
         updated = hits.select(*[
             (sc[c].cast(cur_type[c]) if c in sc
              else F.col(c)).alias(c)
             for c in data_cols
-        ], F.col("_fp").alias("_prov_fp"), F.col("_ri").alias("_prov_ri"))
+        ], "_fp", "_ri")
         updated = _regen_generated(updated, schema, set_cols)
-        _enforce_constraints(updated.drop(*_PROV_COLS), p, parent)
-        if schema:
-            by_name = {c["name"]: c["physical"] for c in schema["cols"]}
-            updated = updated.select(
-                *[F.col(c).alias(by_name[c]) for c in data_cols],
-                *_PROV_COLS,
-            )
-        new_files = _write_files(updated.coalesce(1), p)
-        new_stats = dict(stats)
-        tracked = sorted({c for s in stats.values() for c in s})
-        if tracked:
-            new_stats.update(
-                _collect_stats(p, new_files, tracked, spark=spark)
-            )
-        return _commit(p, list(m["files"]) + new_files, parent,
-                       stats=new_stats or None,
-                       blooms=_carry_blooms(p, m, list(m["files"]), new_files),
-                       dv=dv or None, op="update-mor")
+        images = _update_images(p, parent, updated, data_cols, schema)
+        return _grow_dvs(spark, p, parent, m, hits,
+                         _write_files(images.coalesce(1), p), "update-mor")
 
     return _transact(p, attempt)
 
@@ -4504,37 +4335,14 @@ def snapshot_replace_where(
         # re-derives — the same restart protocol the other writers use);
         # explicit values refuse (ALWAYS semantics). Write defaults and
         # generated columns resolve exactly as on append.
-        work = _materialize_generated(
-            _materialize_wdefaults(df, schema), schema
+        work, id_schema_meta = _allocate_identity(
+            _materialize_generated(_materialize_wdefaults(df, schema), schema),
+            schema,
         )
-        id_alloc: dict[str, tuple[int, int]] = {}
-        work_lower = {n.lower() for n in work.columns}
-        for c in _identity_cols(schema):
-            # case-insensitive, same rationale as snapshot_append's guard
-            if c["name"].lower() in work_lower:
-                raise ValueError(
-                    f"column {c['name']!r} is GENERATED ALWAYS AS "
-                    "IDENTITY and cannot be written explicitly"
-                )
-            ident = c["identity"]
-            base = int(ident.get("next", 0))
-            work, n_alloc = _with_identity(
-                work, c["name"], c["type"],
-                int(ident.get("start", 1)), int(ident.get("step", 1)),
-                base,
-            )
-            id_alloc[c["name"]] = (base, n_alloc)
-        if id_alloc:
+        if id_schema_meta:
             # constraints referencing identity columns were deferred
             # pre-allocation; re-enforce against allocated values
             _enforce_identity_constraints(work, p, parent, m)
-        id_schema_meta = None
-        if id_alloc:
-            id_schema_meta = json.loads(json.dumps(schema))
-            for c in id_schema_meta["cols"]:
-                if c.get("identity") and c["name"] in id_alloc:
-                    b, n_alloc = id_alloc[c["name"]]
-                    c["identity"]["next"] = b + n_alloc
         batch = _df_to_physical(work, schema) if schema else work
         if schema:
             # same declared-type discipline as snapshot_append: writing
@@ -4613,27 +4421,10 @@ def snapshot_replace_where(
             )
         else:
             new_files = _write_files(batch, p)
-        untouched = [f for f in m["files"] if f not in set(touched)]
-        tracked = sorted(
-            {c for s in stats.values() for c in s if c != _ROWS_KEY}
-            | set(stats_cols or [])
-            | set(part_cols)
-        )
-        new_stats = {
-            f: s for f, s in stats.items() if f in set(untouched)
-        }
-        if tracked:
-            new_stats.update(
-                _collect_stats(
-                    p, rewritten + new_files, tracked, spark=spark
-                )
-            )
-        return _commit(
-            p, untouched + rewritten + new_files, parent,
-            stats=new_stats or None,
-            blooms=_carry_blooms(p, m, untouched, rewritten + new_files),
-            dv=_carry_dv(m, untouched),
-            op="overwrite" if condition is None else "replace-where",
+        return _replace_files(
+            spark, p, parent, m, touched, rewritten + new_files,
+            "overwrite" if condition is None else "replace-where",
+            stats_cols=[*(stats_cols or []), *part_cols],
             schema_meta=id_schema_meta,
             types_meta=(
                 CLEAR_METADATA
@@ -5646,6 +5437,39 @@ def _with_identity(
     return out, acc
 
 
+def _allocate_identity(
+    df: DataFrame, schema: dict | None
+) -> "tuple[DataFrame, dict | None]":
+    """Allocate every GENERATED ALWAYS AS IDENTITY column of ``schema``
+    for a row-creating write (append, MERGE insert arm, REPLACE WHERE)
+    from the schema's high-water mark ``next``. Explicit values refuse
+    (ALWAYS semantics) — case-insensitively, as Spark resolves
+    identifiers, so a batch carrying 'ID' against identity 'id' is an
+    explicit write, not a new column. Returns the batch and the
+    schema_meta to commit: a copy of ``schema`` with each mark bumped
+    past its allocation, or None for a table without identity."""
+    id_cols = _identity_cols(schema)
+    if not id_cols:
+        return df, None
+    lower = {n.lower() for n in df.columns}
+    meta = json.loads(json.dumps(schema))
+    bumped = {c["name"]: c["identity"] for c in _identity_cols(meta)}
+    for c in id_cols:
+        if c["name"].lower() in lower:
+            raise ValueError(
+                f"column {c['name']!r} is GENERATED ALWAYS AS "
+                "IDENTITY and cannot be written explicitly"
+            )
+        ident = c["identity"]
+        base = int(ident.get("next", 0))
+        df, n_alloc = _with_identity(
+            df, c["name"], c["type"],
+            int(ident.get("start", 1)), int(ident.get("step", 1)), base,
+        )
+        bumped[c["name"]]["next"] = base + n_alloc
+    return df, meta
+
+
 def _normalize_assign_keys(assignments: dict, columns) -> dict:
     """Re-key an UPDATE/MERGE assignment map onto the table's actual
     column spellings: Spark SQL resolves identifiers case-insensitively,
@@ -6414,7 +6238,6 @@ def snapshot_upsert_partitioned(
         klo, khi = _g["klo"], _g["khi"]
 
         def attempt(parent, m):
-            stats = m.get("stats", {}) or {}
             # one point disjunct per batch partition value, each also
             # carrying the batch's KEY range: a file provably holding none
             # of the batch keys never rewrites, even when it predates the
@@ -6426,7 +6249,6 @@ def snapshot_upsert_partitioned(
             touched = set(_admitted(m, [
                 {**key_range, partition_col: (v, v)} for v in touched_vals
             ]))
-            untouched = [f for f in m["files"] if f not in touched]
             if touched:
                 cur = _read_files_with_dv(
                     spark, p, sorted(touched), m.get("dv"), merge_schema=True,
@@ -6443,21 +6265,12 @@ def snapshot_upsert_partitioned(
                 ]
             else:
                 merged, vals = df, touched_vals
-            new_files = _write_files_by_partition(
-                merged, p, partition_col, vals
+            return _replace_files(
+                spark, p, parent, m, touched,
+                _write_files_by_partition(merged, p, partition_col, vals),
+                "upsert-part", stats_cols=stats_cols,
+                partitioning_meta=part_meta,
             )
-            tracked = sorted(
-                {c for s in stats.values() for c in s} | set(stats_cols)
-            )
-            new_stats = {f: s for f, s in stats.items() if f not in touched}
-            new_stats.update(
-                _collect_stats(p, new_files, tracked, spark=spark)
-            )
-            return _commit(p, untouched + new_files, parent,
-                           stats=new_stats,
-                           blooms=_carry_blooms(p, m, untouched, new_files),
-                           dv=_carry_dv(m, untouched), op="upsert-part",
-                           partitioning_meta=part_meta)
 
         return _transact(p, attempt)
     finally:

@@ -11,10 +11,12 @@ racer's version).
 
 ``test_op_gives_up_after_commit_retries`` makes every commit conflict:
 the op must re-raise after exactly ``COMMIT_RETRIES`` commit attempts.
-The last cases pin what a rebase must re-derive from the new tip rather
-than from a tip read before the first attempt: a racer's constraint,
-rows a new constraint must check, columns a new column mapping must
-name, and a replay stamp written before the tip carried a txns map.
+Delete-where, update-where and merge race in both their merge-on-read
+(``mor``) and copy-on-write (``cow``) forms. The last cases pin what a
+rebase must re-derive from the new tip rather than from a tip read
+before the first attempt: a racer's constraint, rows a new constraint
+must check, columns a new column mapping must name, and a replay stamp
+written before the tip carried a txns map.
 
 Every case builds its own four-row table.
 """
@@ -122,12 +124,16 @@ def test_upsert_rebases(spark, t, race):
     assert [got[k] for k in (0, 1, 2, 3)] == ["base", "new", "new", "base"]
 
 
-def test_merge_rebases(spark, t, race):
+@pytest.mark.parametrize("form", ["mor", "cow"])
+def test_merge_rebases(spark, t, race, monkeypatch, form):
+    if form == "cow":
+        monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 0)
     S.snapshot_merge(
         spark, _rows(spark, 3, 5, "m"), t, ["k"], matched_update={"v": "s.v"},
         txn=4, txn_app="merger",
     )
-    _rebased(t, race, "merge")
+    tip = _rebased(t, race, "merge")
+    assert bool(tip["m"].get("dv")) == (form == "mor")
     got = _values(spark, t)
     assert sorted(got) == [0, 1, 2, 3, 4, *RACER_KEYS]
     assert (got[2], got[3], got[4]) == ("base", "m", "m")
@@ -163,15 +169,25 @@ def test_delete_range_rebases(spark, t, race):
     assert _keys(spark, t) == [0, 3, *RACER_KEYS]
 
 
-def test_delete_where_rebases(spark, t, race):
-    S.snapshot_delete_where(spark, t, "k = 1")
-    _rebased(t, race, "delete-mor")
+@pytest.mark.parametrize("op, max_deleted_rows", [
+    pytest.param("delete-mor", S.DV_MAX_DELETED_ROWS, id="mor"),
+    pytest.param("delete", 0, id="cow"),
+])
+def test_delete_where_rebases(spark, t, race, op, max_deleted_rows):
+    S.snapshot_delete_where(spark, t, "k = 1", max_deleted_rows=max_deleted_rows)
+    _rebased(t, race, op)
     assert _keys(spark, t) == [0, 2, 3, *RACER_KEYS]
 
 
-def test_update_where_rebases(spark, t, race):
-    S.snapshot_update_where(spark, t, "k = 1", {"v": "'upd'"})
-    _rebased(t, race, "update-mor")
+@pytest.mark.parametrize("op, max_updated_rows", [
+    pytest.param("update-mor", S.DV_MAX_DELETED_ROWS, id="mor"),
+    pytest.param("update", 0, id="cow"),
+])
+def test_update_where_rebases(spark, t, race, op, max_updated_rows):
+    S.snapshot_update_where(
+        spark, t, "k = 1", {"v": "'upd'"}, max_updated_rows=max_updated_rows
+    )
+    _rebased(t, race, op)
     got = _values(spark, t)
     assert sorted(got) == [0, 1, 2, 3, *RACER_KEYS]
     assert got[1] == "upd"

@@ -2577,6 +2577,39 @@ def test_type_widening_rejects_incompatible_change(spark, tmp_path):
         snapshot_append(bad, t)
 
 
+def test_type_widening_reads_timestamp_kinds_from_spark_footers(spark, tmp_path):
+    """A Spark footer types its columns by the schema Spark wrote, so a
+    ``timestamp_ntz`` column is not mistaken for ``timestamp`` (the
+    parquet types alone cannot tell them apart): an append to an ntz
+    table lands, a tz-aware table still appends, and int -> bigint
+    widening still records."""
+    from energy_datalake_solution_spark.sources.snapshots import (
+        _read_manifest,
+    )
+
+    def batch(k, kind):
+        return spark.sql(
+            f"select {k} k, cast('2024-01-01 10:00:00' as {kind}) ts"
+        )
+
+    for kind in ("timestamp_ntz", "timestamp"):
+        t = tmp_path / kind
+        snapshot_write(batch(1, kind), t)
+        snapshot_append(batch(2, kind), t)
+        got = snapshot_read(spark, t)
+        assert dict(got.dtypes)["ts"] == kind
+        assert sorted(r.k for r in got.collect()) == [1, 2]
+        assert not _read_manifest(t, current_version(t)).get("types")
+
+    t = tmp_path / "widen"
+    snapshot_write(batch("cast(1 as int)", "timestamp_ntz"), t)
+    snapshot_append(batch("cast(2 as bigint)", "timestamp_ntz"), t)
+    assert _read_manifest(t, current_version(t))["types"] == {
+        "k": "bigint", "ts": "timestamp_ntz",
+    }
+    assert sorted(r.k for r in snapshot_read(spark, t).collect()) == [1, 2]
+
+
 def test_type_widening_restore_clears_postdating_map(spark, tmp_path):
     """RESTORE to a pre-widening version drops the types map (the CLEAR
     sentinel), so the restored table reads at its original narrow types."""
