@@ -3159,3 +3159,78 @@ def test_change_feed_scattered_dv_deltas_route_to_join(spark, tmp_path):
     assert dels == list(range(0, 1200, 2))
     assert len(dels) > _DV_RUNS_MAX  # proves the join path was exercised
     assert not [r for r in feed if r._change_type == "insert"]
+
+
+def _regime_caller(spark, t, caller):
+    """Run one reader of a vectored file and return its rows as sorted
+    tuples. The table is k 0..39 (v = 10k) in two files, with k 3 and 5
+    already dead in a deletion vector of the first file."""
+    from energy_datalake_solution_spark.sources.snapshots import (
+        snapshot_change_feed,
+        snapshot_delete_where,
+        snapshot_update_where,
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    if caller == "read":
+        return rows(snapshot_read(spark, t))
+    if caller == "delete_where":
+        # k = 3 is already dead: it must neither match nor resurrect
+        snapshot_delete_where(spark, t, "k = 3 OR k = 7")
+        return rows(snapshot_read(spark, t))
+    if caller == "update_where":
+        snapshot_update_where(spark, t, "k = 5 OR k = 8", {"v": "v + 1"})
+        return rows(snapshot_read(spark, t))
+    v0 = current_version(t)
+    if caller == "feed_netflow":
+        snapshot_delete_where(spark, t, "k = 7")  # the vector grows
+        return rows(snapshot_change_feed(spark, t, v0))
+    # feed_updates: two update images, one of them deleted again
+    snapshot_update_where(spark, t, "k = 8 OR k = 9", {"v": "v + 1"})
+    snapshot_delete_where(spark, t, "k = 8")
+    return rows(snapshot_change_feed(spark, t, v0, updates_as="updates"))
+
+
+_REGIME_EXPECTED = {
+    "read": [(k, 10 * k) for k in range(40) if k not in (3, 5)],
+    "delete_where": [(k, 10 * k) for k in range(40) if k not in (3, 5, 7)],
+    "update_where": [
+        (k, 10 * k + (k == 8)) for k in range(40) if k not in (3, 5)
+    ],
+    "feed_netflow": [(7, 70, "delete")],
+    "feed_updates": sorted([
+        (8, 80, "delete"),
+        (9, 90, "update_preimage"),
+        (9, 91, "update_postimage"),
+    ]),
+}
+
+
+@pytest.mark.parametrize("regime", ["expression", "join"])
+@pytest.mark.parametrize("caller", sorted(_REGIME_EXPECTED))
+def test_vectored_reads_agree_across_position_filter_regimes(
+    spark, tmp_path, monkeypatch, caller, regime
+):
+    """Every reader of a file that already carries a deletion vector
+    returns the same rows whether the vector applies as a BETWEEN
+    expression (runs within _DV_RUNS_MAX) or as a broadcast join (a
+    zero budget forces the join for every vector)."""
+    from energy_datalake_solution_spark.sources import snapshots as S
+    from energy_datalake_solution_spark.sources.snapshots import (
+        snapshot_delete_where,
+    )
+
+    t = tmp_path / "t"
+    snapshot_write(
+        spark.range(40).selectExpr("id AS k", "id * 10 AS v"),
+        t, stats_cols=["k"], n_files=2,
+    )
+    snapshot_delete_where(spark, t, "k = 3 OR k = 5")
+    m = S._read_manifest(t, current_version(t))
+    assert len(m["dv"]) == 1
+    if regime == "join":
+        monkeypatch.setattr(S, "_DV_RUNS_MAX", 0)
+    assert _regime_caller(spark, t, caller) == _REGIME_EXPECTED[caller]
+
