@@ -780,12 +780,27 @@ def _types_ddl_with_prov(types: dict) -> str:
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _file_footer_types_raw(path: str) -> list[str]:
-    """One file's footer column NAMES, reserved columns included —
-    executor-safe (pure pyarrow, no session)."""
-    import pyarrow.parquet as pq
+def _footer_sweep(spark: SparkSession | None, p: Path, rels: list[str], fn) -> list:
+    """``[fn(path) for each file ref]``, the path being the ref joined
+    to the table root (Path-join semantics: a shallow clone's ABSOLUTE
+    inherited refs stay as they are). A driver loop up to
+    _DRIVER_STATS_MAX_FILES files (or any number when ``spark`` is
+    None); above that one Spark job, a task per ~32 files, so the
+    driver folds only per-file results and never a linear chain of
+    remote footer round-trips. ``fn`` then runs on executors: it must
+    stay session-free (pure pyarrow)."""
+    root = str(p)
 
-    return list(pq.read_schema(path).names)
+    def run(rel: str):
+        return fn(rel if os.path.isabs(rel) else f"{root}/{rel}")
+
+    if spark is not None and len(rels) > _DRIVER_STATS_MAX_FILES:
+        return (
+            spark.sparkContext.parallelize(rels, max(1, len(rels) // 32))
+            .map(run)
+            .collect()
+        )
+    return [run(rel) for rel in rels]
 
 
 def _file_footer_types(path: str) -> dict:
@@ -825,23 +840,7 @@ def _footer_types(p: Path, rels: list[str], spark: SparkSession | None = None) -
     driver folds only column-count-sized per-file dicts, so the
     bootstrap stays bounded on a version listing arbitrarily many
     files."""
-    root = str(p)
-
-    def _abs(rel: str) -> str:
-        # shallow clones list SOURCE files by absolute path — joining,
-        # not concatenating, keeps them readable (Path-join semantics)
-        return rel if os.path.isabs(rel) else f"{root}/{rel}"
-
-    if spark is not None and len(rels) > _DRIVER_STATS_MAX_FILES:
-        sc = spark.sparkContext
-        n_tasks = max(1, len(rels) // 32)
-        per_file = (
-            sc.parallelize(rels, n_tasks)
-            .map(lambda rel: _file_footer_types(_abs(rel)))
-            .collect()
-        )
-    else:
-        per_file = (_file_footer_types(_abs(rel)) for rel in rels)
+    per_file = _footer_sweep(spark, p, rels, _file_footer_types)
     out: dict = {}
     for types in per_file:
         for name, t in types.items():
@@ -1204,12 +1203,7 @@ def _carry_blooms(
     if not cols:
         return None
     blooms = {f: dict(parent_blooms[f]) for f in kept if f in parent_blooms}
-    root = str(table_path)
-    for rel in new_files:
-        for c in cols:
-            b = _file_bloom(f"{root}/{rel}", c)
-            if b is not None:
-                blooms.setdefault(rel, {})[c] = b
+    blooms.update(_collect_blooms(table_path, new_files, cols, None))
     return blooms or None
 
 
@@ -3312,23 +3306,10 @@ def _collect_stats(
     reads as a Spark job over the file list — the driver receives only the
     manifest-sized stats dict, so the commit path stays bounded no matter
     how many files a 100 TB version lists."""
-    root = str(table_path)
-    if spark is not None and len(files) > _DRIVER_STATS_MAX_FILES:
-        sc = spark.sparkContext
-        n_tasks = max(1, len(files) // 32)
-        pairs = (
-            sc.parallelize(files, n_tasks)
-            .map(lambda rel: (rel, _file_stats(f"{root}/{rel}", stats_cols)))
-            .filter(lambda kv: bool(kv[1]))
-            .collect()
-        )
-        return dict(pairs)
-    out: dict[str, dict[str, list]] = {}
-    for rel in files:
-        stats = _file_stats(f"{root}/{rel}", stats_cols)
-        if stats:
-            out[rel] = stats
-    return out
+    per_file = _footer_sweep(
+        spark, table_path, files, lambda path: _file_stats(path, stats_cols)
+    )
+    return {rel: st for rel, st in zip(files, per_file) if st}
 
 
 def snapshot_delete_range(
@@ -3376,8 +3357,9 @@ def snapshot_delete_range(
 # Deletion vectors: merge-on-read DELETE (Delta DV / Iceberg positional
 # deletes). A MOR delete rewrites NO data file — the new manifest carries,
 # per touched file, the sorted row positions (parquet row_index) of the
-# deleted rows, zlib-packed. Readers anti-join the (file, position) set
-# back out via the parquet _metadata.row_index column, so the delete is
+# deleted rows, zlib-packed. Every read filters the (file, position) set
+# back out via the parquet _metadata.row_index column, in one core
+# (_read_files_with_dv), so the delete is
 # O(matched rows) metadata instead of O(touched files) rewrite — the shape
 # that makes narrow deletes on a 100 TB table instant. Wide deletes fall
 # back to the copy-on-write rewrite above DV_MAX_DELETED_ROWS (a counted
@@ -3604,18 +3586,34 @@ def _read_files_with_dv(
     merge_schema: bool = False,
     types: dict | None = None,
     schema: dict | None = None,
+    *,
+    _tag: bool = False,
+    _prov: bool = False,
+    _keep: bool = False,
 ) -> DataFrame:
-    """Read a file subset with its deletion vectors applied: tag every row
-    with (_metadata.file_path, _metadata.row_index), broadcast-anti-join
-    the DV's (file, position) pairs (DV-sized by the write-side cap), and
-    drop the helper columns. Files without vectors pay nothing beyond the
-    metadata projection; a subset with no vectors at all skips it.
+    """THE Spark read of a snapshot file subset, with a ``{file:
+    positions}`` set applied — every reader, CoW rewrite, merge-on-read
+    DML match and change-feed read goes through here. Files with
+    positions are tagged with (_fp, _ri) (table-relative file path,
+    _metadata.row_index) and position-filtered; files without are read
+    plain, and a subset with no positions at all skips the tag.
+
+    The position filter DROPS the positions (``dv`` is a table's
+    deletion vectors) or, with ``_keep``, keeps only them (the change
+    feed's grown-vector delta; files without positions then contribute
+    nothing). Up to _DV_RUNS_MAX contiguous [lo, hi] runs it is a
+    BETWEEN expression inside whole-stage codegen — no broadcast build,
+    no join stage; more runs (scattered vectors) take an arrow-backed
+    broadcast semi- or anti-join, still DV-sized by the write-side cap.
+    An uncapped OR-fold builds an O(runs)-deep Column tree that
+    overflows the converter's stack before any job runs.
 
     ``types`` (the manifest's widened-type map) switches the read to an
     EXPLICIT schema: Spark's parquet reader performs the widening
     promotion per file (INT32 files surface as bigint, FLOAT as double),
     which mergeSchema cannot do (mixed widths are a merge conflict), and
-    columns a pre-evolution file lacks still read as NULL.
+    columns a pre-evolution file lacks still read as NULL. Without it,
+    ``merge_schema`` unions the footers' schemas.
 
     ``schema`` (the manifest's column-mapping meta) activates column
     DEFAULTs: a file that physically LACKS a defaulted column reads it
@@ -3625,7 +3623,14 @@ def _read_files_with_dv(
     lacking-set and injecting per group; tables without defaults skip
     the footer sweep entirely. Kept HERE, under every reader AND every
     CoW rewrite, so compaction/purge/DML images of pre-add files
-    materialize the default rather than freezing a NULL."""
+    materialize the default rather than freezing a NULL. Columns stay
+    PHYSICAL; _apply_column_mapping surfaces the logical names.
+
+    Private switches: ``_tag`` keeps (_fp, _ri) on every row (the
+    merge-on-read writers match on it; clean files are tagged too);
+    ``_prov`` keeps the reserved provenance columns every other read
+    strips (the change feed pairs update images by them); ``_keep`` as
+    above."""
     from pyspark.sql import functions as F
 
     defaults = _schema_defaults(schema)
@@ -3633,7 +3638,8 @@ def _read_files_with_dv(
     if groups:
         out = None
         for lacking, sub in groups:
-            df = _read_files_with_dv(spark, p, sub, dv, merge_schema, types)
+            df = _read_files_with_dv(spark, p, sub, dv, merge_schema, types,
+                                     _tag=_tag, _prov=_prov, _keep=_keep)
             for ph in sorted(lacking):
                 expr, t = defaults[ph]
                 df = df.withColumn(ph, F.expr(expr).cast(t))
@@ -3643,69 +3649,67 @@ def _read_files_with_dv(
         return out
     reader = spark.read
     if types:
-        reader = reader.schema(_types_ddl(types))
+        reader = reader.schema(
+            _types_ddl_with_prov(types) if _prov else _types_ddl(types)
+        )
     elif merge_schema:
         reader = reader.option("mergeSchema", "true")
-    # DV lookup goes through _dv_key so a clone's ABSOLUTE inherited refs
-    # still find the source's suffix-keyed vectors (identity for every
-    # table-relative ref)
-    ref_of = {_dv_key(f): f for f in rels}
-    sub = {k: (dv or {})[k] for k in ref_of if k in (dv or {})}
-    if not sub:
-        return _strip_prov(reader.parquet(*[str(p / f) for f in rels]))
-    dirty = sorted(sub)
-    d_df = reader.parquet(*[str(p / ref_of[k]) for k in dirty])
-    # select (not drop) the non-provenance columns: the _metadata pseudo-
-    # column below resolves only on the scan relation
-    cols = [c for c in d_df.columns if c not in _PROV_COLS]
-    tagged = d_df.select(
-        _rel_path_col().alias("_fp"),
-        F.col("_metadata.row_index").alias("_ri"),
-        *cols,
-    )
-    positions = {rel: _unpack_positions(entry) for rel, entry in sub.items()}
-    runs = {fp: _position_runs(pos) for fp, pos in positions.items()}
-    n_runs = sum(len(r) for r in runs.values())
-    if n_runs <= _DV_RUNS_MAX:
-        # run-length-compressed vectors as a plain expression filter: a
-        # range delete's positions are a handful of contiguous [lo, hi]
-        # runs per file, so the whole DV becomes a few BETWEEN
-        # predicates inside whole-stage codegen — no broadcast build, no
-        # join stage, no per-literal py4j cost (the naive isin(positions)
-        # spent ~1 s of DRIVER time converting literals at plan build).
-        keep = None
-        for fp, rr in runs.items():
-            span = None
-            for lo_, hi_ in rr:
-                c = F.col("_ri").between(int(lo_), int(hi_))
-                span = c if span is None else span | c
-            cond = (F.col("_fp") == fp) & span
-            keep = ~cond if keep is None else keep & ~cond
-        applied = tagged.where(keep).select(*cols)
-    else:
-        # scattered vectors: arrow-backed broadcast anti-join (one
-        # conversion, not one py4j call per position); still DV-sized
-        import pandas as pd
 
-        pairs = pd.DataFrame(
-            [(fp, int(ri)) for fp, pos in positions.items() for ri in pos],
-            columns=["_dv_fp", "_dv_ri"],
+    def scan(files: list[str], tag: bool) -> DataFrame:
+        df = reader.parquet(*[str(p / f) for f in files])
+        if not tag:
+            return df if _prov else _strip_prov(df)
+        # select (not drop) the kept columns: the _metadata pseudo-
+        # column resolves only on the scan relation
+        cols = [c for c in df.columns if _prov or c not in _PROV_COLS]
+        return df.select(
+            _rel_path_col().alias("_fp"),
+            F.col("_metadata.row_index").alias("_ri"),
+            *cols,
         )
-        dvf = spark.createDataFrame(pairs)
-        applied = tagged.join(
-            F.broadcast(dvf),
-            (tagged["_fp"] == dvf["_dv_fp"]) & (tagged["_ri"] == dvf["_dv_ri"]),
-            "left_anti",
-        ).select(*cols)
-    clean = [f for f in rels if _dv_key(f) not in sub]
-    if not clean:
-        return applied
-    # only files WITH vectors pay the metadata projection + filtering;
-    # the clean majority reads plain (at 100 TB deletes touch few files,
-    # so the DV overhead tracks the deleted fraction, not the table)
-    return _strip_prov(
-        reader.parquet(*[str(p / f) for f in clean])
-    ).unionByName(applied, allowMissingColumns=True)
+
+    # position lookup goes through _dv_key so a clone's ABSOLUTE
+    # inherited refs still find the source's suffix-keyed vectors
+    # (identity for every table-relative ref)
+    ref_of = {_dv_key(f): f for f in rels}
+    positions = {
+        k: _unpack_positions(dv[k]) for k in sorted(ref_of) if k in (dv or {})
+    }
+    runs = {k: _position_runs(pos) for k, pos in positions.items()}
+    clean = [f for f in rels if _dv_key(f) not in positions]
+    out = None
+    if positions:
+        tagged = scan([ref_of[k] for k in positions], True)
+        if sum(len(rr) for rr in runs.values()) <= _DV_RUNS_MAX:
+            hit = F.lit(False)
+            for fp, rr in runs.items():
+                span = F.lit(False)
+                for lo_, hi_ in rr:
+                    span = span | F.col("_ri").between(int(lo_), int(hi_))
+                hit = hit | ((F.col("_fp") == fp) & span)
+            out = tagged.where(hit if _keep else ~hit)
+        else:
+            import pandas as pd
+
+            pairs = pd.DataFrame(
+                [(fp, int(ri)) for fp, pos in positions.items() for ri in pos],
+                columns=["_fp", "_ri"],
+            )
+            out = tagged.join(
+                F.broadcast(spark.createDataFrame(pairs)), ["_fp", "_ri"],
+                "left_semi" if _keep else "left_anti",
+            )
+        if not _tag:
+            out = out.drop("_fp", "_ri")
+    if clean and not _keep:
+        # only files WITH positions pay the tag + filter; the clean
+        # majority reads plain (at 100 TB deletes touch few files, so
+        # the DV overhead tracks the deleted fraction, not the table)
+        plain = scan(clean, _tag)
+        out = plain if out is None else plain.unionByName(
+            out, allowMissingColumns=True
+        )
+    return out
 
 
 def snapshot_delete_range_mor(
@@ -4022,78 +4026,20 @@ def snapshot_files(table_path, where, version: int | None = None) -> list[str]:
 
 
 def _tagged_live_logical(spark, p: Path, m: dict, touched: list[str],
-                         types: dict | None = None,
-                         _inject_defaults: bool = True) -> DataFrame:
-    """The LIVE rows of ``touched`` files tagged with their (_fp, _ri)
-    positions: reserved provenance columns stripped, logical column
-    names surfaced on mapped tables, the widened-types map applied as an
-    explicit read schema (mixed footer widths are a merge conflict for
-    inference), and positions already in the deletion vectors anti-
-    joined out so dead rows can neither match nor resurrect. Shared by
-    the MOR delete/update/merge writers. Column DEFAULTs follow the same
-    per-FILE contract as _read_files_with_dv: touched files lacking a
-    defaulted physical read (and therefore match and re-materialize) the
-    default, not NULL."""
-    from pyspark.sql import functions as F
-
-    defaults = _schema_defaults(m.get("schema")) if _inject_defaults else {}
-    groups = _default_groups(p, touched, defaults)
-    if groups:
-        by_phys = {c["physical"]: c["name"] for c in m["schema"]["cols"]}
-        out = None
-        for lacking, sub in groups:
-            df = _tagged_live_logical(
-                spark, p, m, sub, types=types, _inject_defaults=False,
-            )
-            for ph in sorted(lacking):
-                expr, t = defaults[ph]
-                df = df.withColumn(by_phys.get(ph, ph), F.expr(expr).cast(t))
-            out = df if out is None else out.unionByName(
-                df, allowMissingColumns=True
-            )
-        return out
-
-    eff_types = m.get("types") if types is None else types
-    _rd = spark.read
-    if eff_types:
-        _rd = _rd.schema(_types_ddl(eff_types))
-    else:
-        _rd = _rd.option("mergeSchema", "true")
-    raw = _rd.parquet(*[str(p / f) for f in touched])
-    tagged = raw.select(
-        _rel_path_col().alias("_fp"),
-        F.col("_metadata.row_index").alias("_ri"),
-        *[c for c in raw.columns if c not in _PROV_COLS],
-    )
+                         types: dict | None = None) -> DataFrame:
+    """The LIVE rows of ``touched`` files of ``m`` tagged with their
+    (_fp, _ri) positions, under logical names — what the MOR delete,
+    update and merge writers match on. One tagged _read_files_with_dv
+    (``types``, default the manifest's, as its explicit read schema;
+    vectors applied, so dead rows can neither match nor resurrect;
+    per-file column defaults injected) plus _apply_column_mapping."""
     sch = m.get("schema")
-    if sch:
-        have = set(raw.columns)
-        tagged = tagged.select(
-            "_fp", "_ri",
-            *[
-                (
-                    F.col(c["physical"])
-                    if c["physical"] in have
-                    else F.lit(None).cast(c["type"])
-                ).alias(c["name"])
-                for c in sch["cols"]
-            ],
-        )
-    dv = m.get("dv", {}) or {}
-    existing = [
-        (_dv_key(rel), int(ri))
-        for rel in touched
-        if _dv_key(rel) in dv
-        for ri in _unpack_positions(dv[_dv_key(rel)])
-    ]
-    if existing:
-        import pandas as _pd
-
-        ex_df = spark.createDataFrame(
-            _pd.DataFrame(existing, columns=["_fp", "_ri"])
-        )
-        tagged = tagged.join(F.broadcast(ex_df), ["_fp", "_ri"], "left_anti")
-    return tagged
+    df = _read_files_with_dv(
+        spark, p, touched, m.get("dv"), merge_schema=True,
+        types=m.get("types") if types is None else types, schema=sch,
+        _tag=True,
+    )
+    return _apply_column_mapping(df, sch, keep=("_fp", "_ri")) if sch else df
 
 
 def snapshot_delete_where(
@@ -4458,9 +4404,12 @@ def snapshot_read_incremental(
     added = sorted(set(m_to["files"]) - set(m_from.get("files", [])))
     if not added:
         return snapshot_read(spark, p, version=v_to).limit(0)
-    return _read_files_with_dv(spark, p, added, m_to.get("dv"),
-                                types=m_to.get("types"),
-                                schema=m_to.get("schema"))
+    sch = m_to.get("schema")
+    # as in snapshot_read: the mapping must see every physical generation
+    df = _read_files_with_dv(spark, p, added, m_to.get("dv"),
+                             merge_schema=sch is not None,
+                             types=m_to.get("types"), schema=sch)
+    return _apply_column_mapping(df, sch) if sch else df
 
 
 def _align_schemas(a: DataFrame, b: DataFrame) -> "tuple[DataFrame, DataFrame]":
@@ -4527,59 +4476,35 @@ def snapshot_change_feed(
     added = sorted(to_files - from_files)
     removed = sorted(from_files - to_files)
     kept = sorted(from_files & to_files)
+    sch = m_to.get("schema")
+
+    def read(rels, dv, m, **kw):
+        # PHYSICAL reads (physical names survive renames, so EXCEPT ALL
+        # still cancels carried rows), defaulted by the to-side mapping
+        # so a carried row and its pre-image agree; merge_schema because
+        # a schema-evolved window's file sets can disagree on columns
+        return _read_files_with_dv(
+            spark, p, rels, dv, merge_schema=True, types=m.get("types"),
+            schema=sch, **kw,
+        )
+
+    def empty(v, m):
+        df = snapshot_read(spark, p, version=v).limit(0)
+        return _df_to_physical(df, m["schema"]) if m.get("schema") else df
 
     # updates mode: split added files into provenance-carrying (MOR
     # update appends) and plain, by footer inspection (metadata-only)
     prov_added: list[str] = []
     plain_added = added
     if updates_as == "updates" and added:
-        root = str(p)
-        if len(added) > _DRIVER_STATS_MAX_FILES:
-            # wide window: distribute the footer probes (same bound as
-            # the stats collector) — the driver receives one bool per
-            # added file, never O(files) local opens. Join, don't
-            # concatenate: shallow clones list absolute paths.
-            sc = spark.sparkContext
-            flags = (
-                sc.parallelize(added, max(1, len(added) // 32))
-                .map(lambda rel: (
-                    rel,
-                    _PROV_COLS[0] in _file_footer_types_raw(
-                        rel if os.path.isabs(rel) else f"{root}/{rel}"
-                    ),
-                ))
-                .collect()
-            )
-            prov_added = sorted(rel for rel, has in flags if has)
-        else:
-            import pyarrow.parquet as pq
+        has_prov = _footer_sweep(
+            spark, p, added, lambda path: _PROV_COLS[0] in _footer_names(path)
+        )
+        prov_added = [f for f, has in zip(added, has_prov) if has]
+        plain_added = [f for f, has in zip(added, has_prov) if not has]
 
-            prov_added = [
-                f
-                for f in added
-                if _PROV_COLS[0] in pq.read_schema(str(p / f)).names
-            ]
-        plain_added = [f for f in added if f not in set(prov_added)]
-
-    # merge_schema on every read: a schema-evolved window's added and
-    # removed file sets can disagree on columns — single-footer inference
-    # would silently drop late-added columns (EXCEPT ALL then cancels
-    # rows differing only there, under-reporting updates) or the final
-    # union would raise on mismatched column sets
-    ins = (
-        _read_files_with_dv(spark, p, plain_added, dv_to, merge_schema=True,
-                            types=m_to.get("types"),
-                            schema=m_to.get("schema"))
-        if plain_added
-        else snapshot_read(spark, p, version=v_to).limit(0)
-    )
-    dels = (
-        _read_files_with_dv(spark, p, removed, dv_from, merge_schema=True,
-                            types=m_from.get("types"),
-                            schema=m_from.get("schema"))
-        if removed
-        else snapshot_read(spark, p, version=v_from).limit(0)
-    )
+    ins = read(plain_added, dv_to, m_to) if plain_added else empty(v_to, m_to)
+    dels = read(removed, dv_from, m_from) if removed else empty(v_from, m_from)
     ins, dels = _align_schemas(ins, dels)
     net_ins = ins.exceptAll(dels)
     net_del = dels.exceptAll(ins)
@@ -4592,178 +4517,74 @@ def snapshot_change_feed(
         old_pos = set(_unpack_positions(dv_from[k])) if k in dv_from else set()
         delta = sorted(new_pos - old_pos)
         if delta:
-            grown[f] = _pack_positions(delta)
+            grown[k] = _pack_positions(delta)
     pre_tagged = None  # grown-delta rows WITH (_fp, _ri), updates mode
     if grown:
-        # read ONLY the delta positions: apply the COMPLEMENT trick —
-        # a DV marks rows to drop, so dropping everything EXCEPT the
-        # delta needs the inverse; simplest exact form reads the grown
-        # files once and keeps the delta rows via the same run filter
-        rels = sorted(grown)
-        # widened window: explicit schema (mixed footer widths break
-        # mergeSchema); the from-side map types the rows that DIED, and
-        # kept files may carry prov columns a previous update appended —
-        # keep them readable so the select below can strip them
-        _rd = spark.read
-        if m_from.get("types"):
-            _rd = _rd.schema(_types_ddl_with_prov(m_from["types"]))
-        else:
-            _rd = _rd.option("mergeSchema", "true")
-        df = _rd.parquet(*[str(p / f) for f in rels])
-        cols = [c for c in df.columns if c not in _PROV_COLS]
-        tagged = df.select(
-            _rel_path_col().alias("_fp"),
-            F.col("_metadata.row_index").alias("_ri"),
-            *cols,
+        # read ONLY the delta positions of the grown files; the from-side
+        # types map types the rows that DIED
+        matches = read(
+            sorted(f for f in kept if _dv_key(f) in grown), grown, m_from,
+            _tag=updates_as == "updates", _keep=True,
         )
-        # same run-budget dual as _read_files_with_dv: few contiguous
-        # runs -> a BETWEEN expression filter; scattered deltas -> a
-        # broadcast semi-join on the exact (file, position) pairs. The
-        # uncapped expression form linearly OR-folded one predicate per
-        # run — thousands of scattered grown-delta runs (seen at sf0.1
-        # mirror-loop/CDC windows) built an O(runs)-deep Column tree
-        # that overflowed the converter's stack before any job ran.
-        grown_runs = {
-            rel: _position_runs(_unpack_positions(entry))
-            for rel, entry in grown.items()
-        }
-        if sum(len(r) for r in grown_runs.values()) <= _DV_RUNS_MAX:
-            keep = None
-            for rel, rr in grown_runs.items():
-                fp = _dv_key(rel)  # _fp rows carry the suffix form
-                span = None
-                for lo_, hi_ in rr:
-                    c = F.col("_ri").between(int(lo_), int(hi_))
-                    span = c if span is None else span | c
-                cond = (F.col("_fp") == fp) & span
-                keep = cond if keep is None else keep | cond
-            matches = tagged.where(keep)
-        else:
-            import pandas as _pd
-
-            pairs = _pd.DataFrame(
-                [
-                    (_dv_key(rel), int(ri))
-                    for rel, entry in grown.items()
-                    for ri in _unpack_positions(entry)
-                ],
-                columns=["_fp", "_ri"],
-            )
-            matches = tagged.join(
-                F.broadcast(spark.createDataFrame(pairs)),
-                ["_fp", "_ri"],
-                "left_semi",
-            )
         if updates_as == "updates":
             pre_tagged = matches  # pairing decides delete vs preimage
         else:
-            net_del = net_del.unionByName(
-                matches.select(*cols), allowMissingColumns=True
-            )
+            net_del = net_del.unionByName(matches, allowMissingColumns=True)
     ct = "_change_type"
     out = net_ins.withColumn(ct, F.lit("insert")).unionByName(
         net_del.withColumn(ct, F.lit("delete")), allowMissingColumns=True
     )
-    if updates_as != "updates":
-        return out
-
-    # pair postimages (provenance-carrying added rows, minus any already
-    # dead at v_to) with preimages (the grown DV-delta rows)
-    post = None
-    if prov_added:
-        # widened window: explicit schema, WITH the provenance columns —
-        # they are the pairing key and prov-added files always carry them
-        _rd = spark.read
-        if m_to.get("types"):
-            _rd = _rd.schema(_types_ddl_with_prov(m_to["types"]))
-        else:
-            _rd = _rd.option("mergeSchema", "true")
-        raw = _rd.parquet(*[str(p / f) for f in prov_added])
-        ptag = raw.select(
-            _rel_path_col().alias("_ffp"),
-            F.col("_metadata.row_index").alias("_fri"),
-            *raw.columns,
-        )
-        # rows of prov files deleted again by v_to — same run-budget
-        # dual as the grown-delta path above (an uncapped OR-fold here
-        # has the same O(runs)-deep-tree stack hazard)
-        dead = {
-            _dv_key(f): _unpack_positions(dv_to[_dv_key(f)])
-            for f in prov_added
-            if _dv_key(f) in dv_to
-        }
-        dead_runs = {k: _position_runs(pos) for k, pos in dead.items()}
-        if not dead:
-            pass
-        elif sum(len(r) for r in dead_runs.values()) <= _DV_RUNS_MAX:
-            drop_cond = None
-            for k, rr in dead_runs.items():
-                span = None
-                for lo_, hi_ in rr:
-                    c = F.col("_fri").between(int(lo_), int(hi_))
-                    span = c if span is None else span | c
-                cond = (F.col("_ffp") == k) & span
-                drop_cond = cond if drop_cond is None else drop_cond | cond
-            ptag = ptag.where(~drop_cond)
-        else:
-            import pandas as _pd
-
-            pairs = _pd.DataFrame(
-                [(k, int(ri)) for k, pos in dead.items() for ri in pos],
-                columns=["_ffp", "_fri"],
+    if updates_as == "updates" and (prov_added or pre_tagged is not None):
+        # pair postimages (provenance-carrying added rows, minus any
+        # already dead at v_to, WITH the provenance columns — they are
+        # the pairing key) with preimages (the grown DV-delta rows)
+        post = read(prov_added, dv_to, m_to, _prov=True) if prov_added else None
+        data_of = lambda df, extra: [c for c in df.columns if c not in extra]  # noqa: E731
+        if post is not None and pre_tagged is not None:
+            pre_keys = pre_tagged.select(
+                F.col("_fp").alias("_prov_fp"), F.col("_ri").alias("_prov_ri")
             )
-            ptag = ptag.join(
-                F.broadcast(spark.createDataFrame(pairs)),
-                ["_ffp", "_fri"],
-                "left_anti",
+            post_keys = post.select("_prov_fp", "_prov_ri")
+            pk = ["_prov_fp", "_prov_ri"]
+            post_m = post.join(F.broadcast(pre_keys), pk, "left_semi")
+            post_u = post.join(F.broadcast(pre_keys), pk, "left_anti")
+            pre_j = pre_tagged.withColumnsRenamed(
+                {"_fp": "_prov_fp", "_ri": "_prov_ri"}
             )
-        post = ptag.drop("_ffp", "_fri")
-    if post is None and pre_tagged is None:
-        return out
-    data_of = lambda df, extra: [c for c in df.columns if c not in extra]  # noqa: E731
-    if post is not None and pre_tagged is not None:
-        pre_keys = pre_tagged.select(
-            F.col("_fp").alias("_prov_fp"), F.col("_ri").alias("_prov_ri")
-        )
-        post_keys = post.select("_prov_fp", "_prov_ri")
-        pk = ["_prov_fp", "_prov_ri"]
-        post_m = post.join(F.broadcast(pre_keys), pk, "left_semi")
-        post_u = post.join(F.broadcast(pre_keys), pk, "left_anti")
-        pre_j = pre_tagged.withColumnsRenamed(
-            {"_fp": "_prov_fp", "_ri": "_prov_ri"}
-        )
-        pre_m = pre_j.join(F.broadcast(post_keys), pk, "left_semi")
-        pre_u = pre_j.join(F.broadcast(post_keys), pk, "left_anti")
-        out = out.unionByName(
-            post_m.select(*data_of(post_m, set(pk)))
-            .withColumn(ct, F.lit("update_postimage")),
-            allowMissingColumns=True,
-        ).unionByName(
-            post_u.select(*data_of(post_u, set(pk)))
-            .withColumn(ct, F.lit("insert")),
-            allowMissingColumns=True,
-        ).unionByName(
-            pre_m.select(*data_of(pre_m, set(pk)))
-            .withColumn(ct, F.lit("update_preimage")),
-            allowMissingColumns=True,
-        ).unionByName(
-            pre_u.select(*data_of(pre_u, set(pk)))
-            .withColumn(ct, F.lit("delete")),
-            allowMissingColumns=True,
-        )
-    elif post is not None:  # provenance but origin files left the window
-        out = out.unionByName(
-            post.select(*data_of(post, set(_PROV_COLS)))
-            .withColumn(ct, F.lit("insert")),
-            allowMissingColumns=True,
-        )
-    else:  # grown deltas but no provenance files: plain deletes
-        out = out.unionByName(
-            pre_tagged.select(*data_of(pre_tagged, {"_fp", "_ri"}))
-            .withColumn(ct, F.lit("delete")),
-            allowMissingColumns=True,
-        )
-    return out
+            pre_m = pre_j.join(F.broadcast(post_keys), pk, "left_semi")
+            pre_u = pre_j.join(F.broadcast(post_keys), pk, "left_anti")
+            out = out.unionByName(
+                post_m.select(*data_of(post_m, set(pk)))
+                .withColumn(ct, F.lit("update_postimage")),
+                allowMissingColumns=True,
+            ).unionByName(
+                post_u.select(*data_of(post_u, set(pk)))
+                .withColumn(ct, F.lit("insert")),
+                allowMissingColumns=True,
+            ).unionByName(
+                pre_m.select(*data_of(pre_m, set(pk)))
+                .withColumn(ct, F.lit("update_preimage")),
+                allowMissingColumns=True,
+            ).unionByName(
+                pre_u.select(*data_of(pre_u, set(pk)))
+                .withColumn(ct, F.lit("delete")),
+                allowMissingColumns=True,
+            )
+        elif post is not None:  # provenance but origin files left the window
+            out = out.unionByName(
+                post.select(*data_of(post, set(_PROV_COLS)))
+                .withColumn(ct, F.lit("insert")),
+                allowMissingColumns=True,
+            )
+        else:  # grown deltas but no provenance files: plain deletes
+            out = out.unionByName(
+                pre_tagged.select(*data_of(pre_tagged, {"_fp", "_ri"}))
+                .withColumn(ct, F.lit("delete")),
+                allowMissingColumns=True,
+            )
+    # map ONCE, by the to-side mapping: the feed's columns are
+    # snapshot_read(v_to)'s plus _change_type
+    return _apply_column_mapping(out, sch, keep=(ct,)) if sch else out
 
 
 def snapshot_row_count(table_path, version: int | None = None) -> int | None:
@@ -5169,10 +4990,9 @@ def _file_bloom(path: str, col: str) -> str | None:
 
     import pyarrow.parquet as pq
 
-    try:
-        table = pq.read_table(path, columns=[col])
-    except Exception:
-        return None
+    if col not in _footer_names(path):
+        return None  # an unreadable or missing file raises, never None
+    table = pq.read_table(path, columns=[col])
     vals = [v for v in table.column(col).unique().to_pylist() if v is not None]
     m_bits = max(BLOOM_BITS, ((len(vals) * BLOOM_BITS_PER_KEY + 7) // 8) * 8)
     bits = bytearray(m_bits // 8)
@@ -5183,34 +5003,16 @@ def _file_bloom(path: str, col: str) -> str | None:
 
 
 def _collect_blooms(
-    p: Path, files: list[str], bloom_cols: list[str], spark: SparkSession
+    p: Path, files: list[str], bloom_cols: list[str],
+    spark: SparkSession | None,
 ) -> dict:
-    """Per-file Bloom filters for ``bloom_cols`` over ``files`` —
-    driver loop for small file lists, a Spark job above
-    _DRIVER_STATS_MAX_FILES (shared by snapshot_write and
-    snapshot_analyze_blooms)."""
-    root = str(p)
-    if len(files) > _DRIVER_STATS_MAX_FILES:
-        sc = spark.sparkContext
-        pairs = (
-            sc.parallelize(
-                [(rel, c) for rel in files for c in bloom_cols],
-                max(1, len(files) // 32),
-            )
-            .map(lambda rc: (rc[0], rc[1], _file_bloom(f"{root}/{rc[0]}", rc[1])))
-            .collect()
-        )
-    else:
-        pairs = [
-            (rel, c, _file_bloom(f"{root}/{rel}", c))
-            for rel in files
-            for c in bloom_cols
-        ]
-    blooms: dict[str, dict[str, str]] = {}
-    for rel, c, b in pairs:
-        if b is not None:
-            blooms.setdefault(rel, {})[c] = b
-    return blooms
+    """Per-file Bloom filters for ``bloom_cols`` over ``files`` — one
+    _footer_sweep (shared by snapshot_write, snapshot_analyze_blooms and
+    _carry_blooms). A file lacking a column gets no filter for it."""
+    per_file = _footer_sweep(spark, p, files, lambda path: {
+        c: b for c in bloom_cols if (b := _file_bloom(path, c)) is not None
+    })
+    return {rel: b for rel, b in zip(files, per_file) if b}
 
 
 def snapshot_analyze_blooms(spark: SparkSession, table_path, cols: list) -> int:
@@ -5548,12 +5350,15 @@ def _footer_names(abs_path: str) -> frozenset:
     return frozenset(pq.read_schema(abs_path).names)
 
 
-def _apply_column_mapping(df: DataFrame, schema: dict) -> DataFrame:
+def _apply_column_mapping(
+    df: DataFrame, schema: dict, keep: tuple = ()
+) -> DataFrame:
     """Physical frame -> logical frame: select each mapped column under
-    its logical name; a column whose physical data predates every listed
-    file (freshly added) reads as a typed NULL — or as its DEFAULT
-    expression when the column declares one (the per-file mixed case is
-    handled earlier, in _read_files_with_dv's group split)."""
+    its logical name, then the ``keep`` columns as they are; a column
+    whose physical data predates every listed file (freshly added) reads
+    as a typed NULL — or as its DEFAULT expression when the column
+    declares one (the per-file mixed case is handled earlier, in
+    _read_files_with_dv's group split)."""
     from pyspark.sql import functions as F
 
     have = set(df.columns)
@@ -5571,7 +5376,8 @@ def _apply_column_mapping(df: DataFrame, schema: dict) -> DataFrame:
                 else _absent(c)
             ).alias(c["name"])
             for c in schema["cols"]
-        ]
+        ],
+        *keep,
     )
 
 
@@ -5785,10 +5591,10 @@ def snapshot_add_column(
     every file that physically LACKS the column — pre-add files, and
     later narrow writes that omit it — reads the default instead of
     NULL; files that carry the column read their stored values
-    (including explicit NULLs). Enforced per-file in the read
-    primitives (_read_files_with_dv / _tagged_live_logical), so DML
-    images, compaction, and purge materialize the default rather than
-    freezing a NULL."""
+    (including explicit NULLs). Enforced per-file in the one read core
+    (_read_files_with_dv, under every reader, DML match, change-feed
+    read and rewrite), so DML images, compaction, and purge materialize
+    the default rather than freezing a NULL."""
     def mutate(schema: dict) -> dict:
         if any(c["name"] == name for c in schema["cols"]):
             raise ValueError(f"column {name!r} already exists")

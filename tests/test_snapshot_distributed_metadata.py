@@ -1,10 +1,12 @@
 """Driver-bounded metadata sweeps: footer reads above the stats
 collector's 64-file bound run as Spark jobs, not driver loops.
 
-The widening bootstrap (`_footer_types` on a no-types-map table) and the
-change feed's provenance probe both scale with the file count; past
-_DRIVER_STATS_MAX_FILES they distribute, so the driver folds only
-column-count-sized results no matter how many files a version lists.
+Every per-file footer read — the widening bootstrap (`_footer_types` on
+a no-types-map table), the stats and bloom collectors, and the change
+feed's provenance probe — scales with the file count and goes through
+one sweep (`_footer_sweep`); past _DRIVER_STATS_MAX_FILES it
+distributes, so the driver folds only column-count-sized results no
+matter how many files a version lists.
 """
 
 from __future__ import annotations

@@ -3234,3 +3234,145 @@ def test_vectored_reads_agree_across_position_filter_regimes(
         monkeypatch.setattr(S, "_DV_RUNS_MAX", 0)
     assert _regime_caller(spark, t, caller) == _REGIME_EXPECTED[caller]
 
+
+def test_mapped_change_reads_surface_logical_columns(spark, tmp_path):
+    """On a column-mapped table with a renamed column and a defaulted
+    added column, the batch change feed, table_changes(),
+    snapshot_read_incremental and snapshot_tail_changes all hand out
+    snapshot_read's logical columns, and the feed's delete rows read the
+    default of a file that lacks the column — the rows the streaming
+    change feed (the pyarrow reader) reports."""
+    from energy_datalake_solution_spark.sources.snapshot_catalog import (
+        SnapshotCatalog,
+    )
+    from energy_datalake_solution_spark.sources.snapshot_datasource import (
+        SnapshotDataSource,
+    )
+    from energy_datalake_solution_spark.sources.snapshots import (
+        snapshot_add_column,
+        snapshot_change_feed,
+        snapshot_delete_where,
+        snapshot_enable_column_mapping,
+        snapshot_read_incremental,
+        snapshot_rename_column,
+        snapshot_tail_changes,
+        snapshot_update_where,
+    )
+
+    t = tmp_path / "t"
+    snapshot_write(
+        spark.range(10).selectExpr("id AS k", "id * 10 AS v"),
+        t, stats_cols=["k"], n_files=2,
+    )
+    snapshot_enable_column_mapping(spark, t)
+    snapshot_add_column(t, "d", "int", default="5")
+    snapshot_rename_column(t, "v", "w")
+    v0 = current_version(t)
+    snapshot_delete_where(spark, t, "k = 3")
+    snapshot_update_where(spark, t, "k = 4", {"w": "w + 1"})
+    logical = snapshot_read(spark, t).columns
+    assert logical == ["k", "w", "d"]
+
+    feed = snapshot_change_feed(spark, t, v0)
+    assert feed.columns == [*logical, "_change_type"]
+    batch = sorted(tuple(r) for r in feed.collect())
+    assert batch == [
+        (3, 30, 5, "delete"), (4, 40, 5, "delete"), (4, 41, 5, "insert"),
+    ]
+
+    spark.dataSource.register(SnapshotDataSource)
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    q = (
+        spark.readStream.format("snapshot")
+        .option("path", str(t))
+        .option("startingVersion", str(v0))
+        .option("readChangeFeed", "true")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", str(out))
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    stream = spark.read.parquet(str(out)).drop("_commit_version")
+    assert sorted(tuple(r) for r in stream.select(*feed.columns).collect()) \
+        == batch
+
+    upd = snapshot_change_feed(spark, t, v0, updates_as="updates")
+    assert upd.columns == [*logical, "_change_type"]
+    assert sorted(tuple(r) for r in upd.where("k = 4").collect()) == [
+        (4, 40, 5, "update_preimage"), (4, 41, 5, "update_postimage"),
+    ]
+
+    cat = SnapshotCatalog(spark)
+    cat.sql(f"CREATE TABLE mapped_cf USING snapshot LOCATION '{t}'")
+    sql = cat.sql(f"SELECT * FROM table_changes('mapped_cf', {v0})")
+    assert sql.columns == feed.columns
+    assert sorted(tuple(r) for r in sql.collect()) == batch
+    cat.drop_table("mapped_cf")
+
+    v_app = current_version(t)
+    snapshot_append(spark.createDataFrame([(20, 200, 7)], "k long, w long, d int"), t)
+    inc = snapshot_read_incremental(spark, t, v_app)
+    assert inc.columns == snapshot_read(spark, t).columns
+    assert [tuple(r) for r in inc.collect()] == [(20, 200, 7)]
+
+    seen = []
+    snapshot_tail_changes(
+        spark, t, tmp_path / "progress",
+        lambda df, ver: seen.append((ver, df.columns)),
+    )
+    assert [v for v, _ in seen] == list(range(1, current_version(t) + 1))
+    for ver, cols in seen:
+        assert cols == [
+            *snapshot_read(spark, t, version=ver).columns, "_change_type"
+        ], ver
+
+
+def test_analyze_on_shallow_clone_covers_inherited_files(spark, tmp_path):
+    """ANALYZE ... COMPUTE STATISTICS and ... COMPUTE BLOOM FILTERS on a
+    shallow clone read the inherited files through their absolute refs
+    and record stats and a bloom filter for every one of them."""
+    from energy_datalake_solution_spark.sources import snapshots as S
+    from energy_datalake_solution_spark.sources.snapshots import (
+        snapshot_analyze,
+        snapshot_analyze_blooms,
+        snapshot_clone,
+    )
+
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    snapshot_write(
+        spark.range(30).selectExpr("id AS k", "CAST(id % 7 AS string) AS u"),
+        src, n_files=3,
+    )
+    snapshot_clone(src, dst)
+    files = S._read_manifest(dst, current_version(dst))["files"]
+    assert len(files) == 3 and all(f.startswith("/") for f in files)
+    snapshot_analyze(spark, dst, ["k"])
+    snapshot_analyze_blooms(spark, dst, ["u"])
+    m = S._read_manifest(dst, current_version(dst))
+    assert {f for f in files if "k" in m["stats"].get(f, {})} == set(files)
+    assert {f for f in files if "u" in m["blooms"].get(f, {})} == set(files)
+    got = sorted(r.k for r in S.snapshot_read(spark, dst, where="u = '3'").collect())
+    assert got == [3, 10, 17, 24]
+
+
+def test_analyze_blooms_refuses_a_missing_data_file(spark, tmp_path):
+    """A data file that cannot be read fails ANALYZE BLOOM FILTERS
+    loudly; no version commits a bloom map that silently lacks it."""
+    from energy_datalake_solution_spark.sources import snapshots as S
+    from energy_datalake_solution_spark.sources.snapshots import (
+        snapshot_analyze_blooms,
+    )
+
+    t = tmp_path / "t"
+    snapshot_write(
+        spark.range(20).selectExpr("id AS k", "CAST(id AS string) AS u"),
+        t, n_files=2,
+    )
+    v = current_version(t)
+    (t / S._read_manifest(t, v)["files"][0]).unlink()
+    with pytest.raises(FileNotFoundError):
+        snapshot_analyze_blooms(spark, t, ["u"])
+    assert current_version(t) == v
