@@ -2264,3 +2264,708 @@ def test_constraint_enforcement_edge_interactions(spark, tmp_path):
     cat.sql("UPDATE mwd SET K = K + 10 WHERE K = 2")
     got = {r.k: r.par for r in snapshot_read(spark, t3).collect()}
     assert got[12] == 0
+
+
+# ---------------------------------------------------------------------------
+# Route pins: for every statement form of the module docstring, which
+# ``snapshots.*`` entry point it reaches and the exact text it hands on
+# (conditions, assignments, source queries). Entry points that mutate are
+# stubbed to record their arguments and return None; the read-only ones
+# (change feed, history, TIMESTAMP AS OF resolution) record and run.
+# ---------------------------------------------------------------------------
+
+_ROUTE_MUTATORS = (
+    "snapshot_add_column", "snapshot_analyze", "snapshot_analyze_blooms",
+    "snapshot_append", "snapshot_clone", "snapshot_compact",
+    "snapshot_compact_where", "snapshot_copy_into", "snapshot_create_table",
+    "snapshot_delete_range_mor", "snapshot_delete_where",
+    "snapshot_drop_column", "snapshot_drop_constraint",
+    "snapshot_enable_column_mapping", "snapshot_merge", "snapshot_purge_dv",
+    "snapshot_rename_column", "snapshot_replace_where", "snapshot_restore",
+    "snapshot_set_column_comment", "snapshot_set_column_default",
+    "snapshot_set_constraint", "snapshot_set_partitioning",
+    "snapshot_set_properties", "snapshot_sync_identity", "snapshot_truncate",
+    "snapshot_unset_properties", "snapshot_update_range_mor",
+    "snapshot_update_where", "snapshot_upsert", "snapshot_vacuum",
+    "snapshot_widen_column", "snapshot_write", "snapshot_zorder_compact_n",
+)
+_ROUTE_READERS = (
+    "snapshot_change_feed", "snapshot_history", "snapshot_version_as_of",
+)
+
+
+def _iso_ts(s: str) -> float:
+    from datetime import datetime
+
+    return datetime.fromisoformat(s).timestamp()
+
+
+_ROUTES = {
+    # -- registration DDL ---------------------------------------------------
+    "create_options": (
+        "CREATE TABLE rt_reg USING snapshot OPTIONS (path '<rt>')",
+        [("result", None)],
+    ),
+    "create_pinned": (
+        "CREATE OR REPLACE TABLE rt_pin USING snapshot LOCATION '<rt>' "
+        "VERSION AS OF 1",
+        [("result", None)],
+    ),
+    "ctas": (
+        "CREATE OR REPLACE TABLE rt_ctas USING snapshot PARTITIONED BY (tag) "
+        "LOCATION '<rt>' AS SELECT * FROM rt VERSION AS OF 1",
+        [("spark.sql", "SELECT * FROM rt__asof_v1"),
+         ("snapshot_write", (("df", "k", "v", "tag", "o"), "<rt>"),
+          {"partition_by": ["tag"]}),
+         ("result", None)],
+    ),
+    "create_empty": (
+        "CREATE TABLE rt_ddl (a bigint NOT NULL DEFAULT 1 + 2 "
+        "COMMENT 'it''s', b string GENERATED ALWAYS AS (upper(tag)), "
+        "c bigint GENERATED ALWAYS AS IDENTITY (START WITH 5 INCREMENT BY 2), "
+        "d decimal(10,2) DEFAULT 0.5) USING snapshot PARTITIONED BY (a) "
+        "LOCATION '<rt>' TBLPROPERTIES ('team' = 'ml', "
+        "'delta.constraints.pos' = 'a > 0')",
+        [("spark.sql", "SELECT (1 + 2) AS v"),
+         ("snapshot_create_table", ("<rt>", [
+             ("a", "bigint", "3", None, None, True, "it's", "1 + 2"),
+             ("b", "string", None, "upper(tag)", None, False, None, None),
+             ("c", "bigint", None, None, {"start": 5, "step": 2}, False,
+              None, None),
+             ("d", "decimal(10,2)", "0.5", None, None, False, None, None),
+         ]), {}),
+         ("snapshot_set_partitioning", ("<rt>", ["a"]), {}),
+         ("snapshot_set_constraint", ("<rt>", "pos", "a > 0"), {}),
+         ("snapshot_set_properties", ("<rt>", {"team": "ml"}), {}),
+         ("result", None)],
+    ),
+    "create_empty_location_first": (
+        "CREATE TABLE rt_ddl2 (a bigint) USING snapshot LOCATION '<rt>' "
+        "PARTITIONED BY (a)",
+        [("snapshot_create_table",
+          ("<rt>", [("a", "bigint", None, None, None, False, None, None)]),
+          {}),
+         ("snapshot_set_partitioning", ("<rt>", ["a"]), {}),
+         ("result", None)],
+    ),
+    "shallow_clone": (
+        "CREATE TABLE rt_cl SHALLOW CLONE rt VERSION AS OF 1 "
+        "LOCATION '<rt>'",
+        [("snapshot_clone",
+          ("<rt>", "<rt>"),
+          {"version": 1, "as_of_ts": None}),
+         ("result", None)],
+    ),
+    "drop_table": (
+        ("CREATE TABLE rt_drop USING snapshot LOCATION '<rt>'",
+         "DROP TABLE rt_drop", "DROP TABLE IF EXISTS rt_drop"),
+        [("result", None),
+         ("result", None),
+         ("spark.sql", "DROP TABLE IF EXISTS rt_drop"),
+         ("result", ())],
+    ),
+    "views": (
+        ("CREATE VIEW rt_v AS SELECT k FROM rt VERSION AS OF 1",
+         "CREATE OR REPLACE VIEW rt_v AS SELECT k FROM rt WHERE k > 1",
+         "DROP VIEW rt_v", "DROP VIEW IF EXISTS rt_v"),
+        [("spark.sql",
+          "CREATE OR REPLACE TEMPORARY VIEW rt_v AS SELECT k FROM "
+          "rt__asof_v1"),
+         ("result", None),
+         ("spark.sql",
+          "CREATE OR REPLACE TEMPORARY VIEW rt_v AS SELECT k FROM rt "
+          "WHERE k > 1"),
+         ("result", None),
+         ("result", None),
+         ("result", None)],
+    ),
+    # -- DML ----------------------------------------------------------------
+    "insert_select": (
+        "INSERT INTO rt SELECT * FROM rt_src",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("spark.sql", "SELECT * FROM rt LIMIT 0"),
+         ("snapshot_append", (("df", "k", "v", "tag", "o"), "<rt>"), {}),
+         ("result", None)],
+    ),
+    "insert_cols_values": (
+        "INSERT INTO rt (k, v) VALUES (1, 2)",
+        [("spark.sql", "VALUES (1, 2)"),
+         ("snapshot_append", (("df", "k", "v"), "<rt>"), {}),
+         ("result", None)],
+    ),
+    "insert_time_travel": (
+        "INSERT INTO rt SELECT * FROM rt VERSION AS OF 1",
+        [("spark.sql", "SELECT * FROM rt__asof_v1"),
+         ("spark.sql", "SELECT * FROM rt LIMIT 0"),
+         ("snapshot_append", (("df", "k", "v", "tag", "o"), "<rt>"), {}),
+         ("result", None)],
+    ),
+    "insert_overwrite": (
+        "INSERT OVERWRITE TABLE rt SELECT * FROM rt_src",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("spark.sql", "SELECT * FROM rt LIMIT 0"),
+         ("snapshot_replace_where",
+          ("<rt>", None, ("df", "k", "v", "tag", "o")),
+          {}),
+         ("result", None)],
+    ),
+    "replace_where": (
+        "INSERT INTO rt REPLACE WHERE k >= 2 AND tag = 'a' "
+        "SELECT * FROM rt_src",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("spark.sql", "SELECT * FROM rt LIMIT 0"),
+         ("snapshot_replace_where",
+          ("<rt>", "k >= 2 AND tag = 'a'", ("df", "k", "v", "tag", "o")),
+          {}),
+         ("result", None)],
+    ),
+    "merge_keys_no_when": (
+        "MERGE INTO rt USING rt_src ON (k)",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("snapshot_upsert",
+          (("df", "k", "v", "tag", "o"), "<rt>", ["k"]),
+          {"auto_evolve_schema": False}),
+         ("result", None)],
+    ),
+    "merge_key_tuple_star": (
+        "MERGE INTO rt USING rt_src ON (k, tag) WHEN MATCHED THEN "
+        "UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("snapshot_upsert",
+          (("df", "k", "v", "tag", "o"), "<rt>", ["k", "tag"]),
+          {"auto_evolve_schema": False}),
+         ("result", None)],
+    ),
+    "merge_bare_key_star": (
+        "MERGE INTO rt USING rt_src ON k WHEN MATCHED THEN "
+        "UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("snapshot_upsert",
+          (("df", "k", "v", "tag", "o"), "<rt>", ["k"]),
+          {"auto_evolve_schema": False}),
+         ("result", None)],
+    ),
+    "merge_evolve_subquery": (
+        "MERGE WITH SCHEMA EVOLUTION INTO rt USING "
+        "(SELECT * FROM rt_src WHERE k > 0) ON (k)",
+        [("spark.sql", "SELECT * FROM rt_src WHERE k > 0"),
+         ("snapshot_upsert",
+          (("df", "k", "v", "tag", "o"), "<rt>", ["k"]),
+          {"auto_evolve_schema": True}),
+         ("result", None)],
+    ),
+    "merge_when_clauses": (
+        "MERGE INTO rt t USING rt_src s ON t.k = s.k "
+        "WHEN MATCHED AND s.v > t.v THEN UPDATE SET v = s.v, "
+        "tag = concat(s.tag, ',x') "
+        "WHEN MATCHED THEN DELETE "
+        "WHEN NOT MATCHED AND s.k > 0 THEN INSERT (k, v) "
+        "VALUES (s.k, greatest(s.v, 1)) "
+        "WHEN NOT MATCHED BY SOURCE AND t.k = 9 THEN DELETE "
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET tag = 'stale'",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("snapshot_merge",
+          (("df", "k", "v", "tag", "o"), "<rt>", ["k"]),
+          {"auto_evolve_schema": False,
+           "matched_update": {"v": "s.v", "tag": "concat(s.tag, ',x')"},
+           "matched_update_condition": "s.v > t.v",
+           "matched_delete": True,
+           "matched_delete_condition": None,
+           "not_matched_insert": True,
+           "not_matched_condition": "s.k > 0",
+           "not_matched_insert_values": {"k": "s.k",
+                                         "v": "greatest(s.v, 1)"},
+           "not_matched_by_source_delete": True,
+           "not_matched_by_source_condition": "t.k = 9",
+           "not_matched_by_source_update": {"tag": "'stale'"},
+           "not_matched_by_source_update_condition":
+               "NOT coalesce((t.k = 9), false)"}),
+         ("result", None)],
+    ),
+    "merge_delete_first_star": (
+        "MERGE INTO rt t USING rt_src s ON t.k = s.k AND t.tag = s.tag "
+        "WHEN MATCHED AND s.v < 0 THEN DELETE "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("spark.sql", "SELECT * FROM rt LIMIT 0"),
+         ("snapshot_merge",
+          (("df", "k", "v", "tag", "o"), "<rt>", ["k", "tag"]),
+          {"auto_evolve_schema": False,
+           "matched_update": {"k": "s.k", "v": "s.v", "tag": "s.tag",
+                              "o": "s.o"},
+           "matched_update_condition": "NOT coalesce((s.v < 0), false)",
+           "matched_delete": True,
+           "matched_delete_condition": "s.v < 0",
+           "not_matched_insert": True,
+           "not_matched_condition": None,
+           "not_matched_insert_values": None,
+           "not_matched_by_source_delete": False,
+           "not_matched_by_source_condition": None,
+           "not_matched_by_source_update": None,
+           "not_matched_by_source_update_condition": None}),
+         ("result", None)],
+    ),
+    "merge_evolve_when": (
+        "MERGE WITH SCHEMA EVOLUTION INTO rt t USING rt_src s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("spark.sql", "SELECT * FROM rt LIMIT 0"),
+         ("snapshot_merge",
+          (("df", "k", "v", "tag", "o"), "<rt>", ["k"]),
+          {"auto_evolve_schema": True,
+           "matched_update": {"k": "s.k", "v": "s.v", "tag": "s.tag",
+                              "o": "s.o"},
+           "matched_update_condition": None,
+           "matched_delete": False,
+           "matched_delete_condition": None,
+           "not_matched_insert": True,
+           "not_matched_condition": None,
+           "not_matched_insert_values": None,
+           "not_matched_by_source_delete": False,
+           "not_matched_by_source_condition": None,
+           "not_matched_by_source_update": None,
+           "not_matched_by_source_update_condition": None}),
+         ("result", None)],
+    ),
+    "delete_between": (
+        "DELETE FROM rt WHERE k BETWEEN 1 AND 2000",
+        [("snapshot_delete_range_mor", ("<rt>", "k", 1, 2000), {}),
+         ("result", None)],
+    ),
+    "delete_between_signed": (
+        "DELETE FROM rt WHERE k BETWEEN -5 AND 3",
+        [("snapshot_delete_range_mor", ("<rt>", "k", -5, 3), {}),
+         ("result", None)],
+    ),
+    "delete_between_strings": (
+        "DELETE FROM rt WHERE tag BETWEEN 'a' AND 'b'",
+        [("snapshot_delete_range_mor", ("<rt>", "tag", "a", "b"), {}),
+         ("result", None)],
+    ),
+    "delete_where": (
+        "DELETE FROM rt WHERE o % 7 = 0",
+        [("snapshot_delete_where",
+          ("<rt>", "o % 7 = 0"),
+          {"_prune_region": None, "table_alias": "rt"}),
+         ("result", None)],
+    ),
+    "delete_where_or": (
+        "DELETE FROM rt WHERE k = 7 OR k BETWEEN 5 AND 5",
+        [("snapshot_delete_where",
+          ("<rt>", "k = 7 OR k BETWEEN 5 AND 5"),
+          {"_prune_region": None, "table_alias": "rt"}),
+         ("result", None)],
+    ),
+    "delete_in_subquery": (
+        "DELETE FROM rt WHERE k IN (SELECT k FROM rt_src WHERE v > 1)",
+        [("spark.sql", "SELECT k FROM rt_src WHERE v > 1"),
+         ("snapshot_delete_where",
+          ("<rt>", "k IN (SELECT k FROM rt_src WHERE v > 1)"),
+          {"_prune_region": [{"k": (2, 4)}], "table_alias": "rt"}),
+         ("result", None)],
+    ),
+    "delete_exists": (
+        "DELETE FROM rt WHERE EXISTS "
+        "(SELECT 1 FROM rt_src s WHERE s.k = rt.k)",
+        [("snapshot_delete_where",
+          ("<rt>", "EXISTS (SELECT 1 FROM rt_src s WHERE s.k = rt.k)"),
+          {"_prune_region": None, "table_alias": "rt"}),
+         ("result", None)],
+    ),
+    "delete_in_time_travel": (
+        "DELETE FROM rt WHERE k IN (SELECT k FROM rt VERSION AS OF 1)",
+        [("spark.sql", "SELECT k FROM rt__asof_v1"),
+         ("snapshot_delete_where",
+          ("<rt>", "k IN (SELECT k FROM rt__asof_v1)"),
+          {"_prune_region": [{"k": (1, 2)}], "table_alias": "rt"}),
+         ("result", None)],
+    ),
+    "delete_all": (
+        "DELETE FROM rt",
+        [("snapshot_truncate", ("<rt>",), {}),
+         ("result", None)],
+    ),
+    "truncate": (
+        "TRUNCATE TABLE rt",
+        [("snapshot_truncate", ("<rt>",), {}),
+         ("result", None)],
+    ),
+    "update_between": (
+        "UPDATE rt SET v = greatest(v, 55), tag = concat(tag, ',x') "
+        "WHERE k BETWEEN 1 AND 2000",
+        [("snapshot_update_range_mor",
+          ("<rt>", "k", 1, 2000,
+           {"v": "greatest(v, 55)", "tag": "concat(tag, ',x')"}),
+          {}),
+         ("result", None)],
+    ),
+    "update_between_signed": (
+        "UPDATE rt SET v = v + 1 WHERE k BETWEEN -5 AND 3",
+        [("snapshot_update_range_mor",
+          ("<rt>", "k", -5, 3, {"v": "v + 1"}),
+          {}),
+         ("result", None)],
+    ),
+    "update_where": (
+        "UPDATE rt SET v = least(v, coalesce(v, 0), 25) WHERE k = 9",
+        [("snapshot_update_where",
+          ("<rt>", "k = 9", {"v": "least(v, coalesce(v, 0), 25)"}),
+          {"_prune_region": None, "table_alias": "rt"}),
+         ("result", None)],
+    ),
+    "update_in_subquery": (
+        "UPDATE rt SET tag = 'hit' WHERE k IN (SELECT k FROM rt_src)",
+        [("spark.sql", "SELECT k FROM rt_src"),
+         ("snapshot_update_where",
+          ("<rt>", "k IN (SELECT k FROM rt_src)", {"tag": "'hit'"}),
+          {"_prune_region": [{"k": (2, 4)}], "table_alias": "rt"}),
+         ("result", None)],
+    ),
+    # -- maintenance --------------------------------------------------------
+    "copy_into": (
+        "COPY INTO rt FROM '/no/such/dir' FILEFORMAT = parquet "
+        "FORMAT_OPTIONS ('mergeSchema' = 'true')",
+        [("snapshot_copy_into",
+          ("/no/such/dir", "<rt>"),
+          {"fileformat": "parquet",
+           "format_options": {"mergeSchema": "true"}}),
+         ("result", None)],
+    ),
+    "restore_version": (
+        "RESTORE TABLE rt VERSION AS OF 1",
+        [("snapshot_restore", ("<rt>", 1), {}),
+         ("result", None)],
+    ),
+    "restore_timestamp": (
+        "RESTORE TABLE rt TIMESTAMP AS OF '2026-01-01 12:00:00'",
+        [("snapshot_restore", ("<rt>",),
+          {"as_of_ts": _iso_ts("2026-01-01 12:00:00")}),
+         ("result", None)],
+    ),
+    "vacuum": (
+        "VACUUM rt",
+        [("snapshot_vacuum", ("<rt>",), {"keep_versions": 1}),
+         ("result", None)],
+    ),
+    "vacuum_dry_run": (
+        "VACUUM rt RETAIN 2 VERSIONS DRY RUN",
+        [("snapshot_vacuum",
+          ("<rt>",),
+          {"keep_versions": 2, "dry_run": True}),
+         ("result", ("path",))],
+    ),
+    "table_changes": (
+        "SELECT count(*) AS n FROM table_changes('rt', 1)",
+        [("snapshot_change_feed", ("<rt>", 1, None), {}),
+         ("spark.sql", "SELECT count(*) AS n FROM rt__changes_1_tip"),
+         ("result", ("n",))],
+    ),
+    "table_changes_window": (
+        "SELECT k FROM table_changes('rt', 1, 2) WHERE k > 0",
+        [("snapshot_change_feed", ("<rt>", 1, 2), {}),
+         ("spark.sql", "SELECT k FROM rt__changes_1_2 WHERE k > 0"),
+         ("result", ("k",))],
+    ),
+    "analyze_stats": (
+        "ANALYZE TABLE rt COMPUTE STATISTICS FOR COLUMNS (k, v)",
+        [("snapshot_analyze", ("<rt>", ["k", "v"]), {}),
+         ("result", None)],
+    ),
+    "analyze_blooms": (
+        "ANALYZE TABLE rt COMPUTE BLOOM FILTERS FOR COLUMNS (tag)",
+        [("snapshot_analyze_blooms", ("<rt>", ["tag"]), {}),
+         ("result", None)],
+    ),
+    "optimize": (
+        "OPTIMIZE rt",
+        [("snapshot_compact", ("<rt>",), {"target_files": 1}),
+         ("result", None)],
+    ),
+    "optimize_where": (
+        "OPTIMIZE rt WHERE k >= 2 INTO 2 FILES",
+        [("snapshot_compact_where",
+          ("<rt>", "k >= 2"),
+          {"target_files": 2}),
+         ("result", None)],
+    ),
+    "optimize_zorder": (
+        "OPTIMIZE rt ZORDER BY (k, v) INTO 3 FILES",
+        [("snapshot_zorder_compact_n",
+          ("<rt>", ["k", "v"]),
+          {"n_files": 3}),
+         ("result", None)],
+    ),
+    "reorg": (
+        "REORG TABLE rt APPLY (PURGE)",
+        [("snapshot_purge_dv", ("<rt>",), {}),
+         ("result", None)],
+    ),
+    # -- schema and property DDL --------------------------------------------
+    "set_partitioned_by": (
+        "ALTER TABLE rt SET PARTITIONED BY (tag, k)",
+        [("snapshot_set_partitioning", ("<rt>", ["tag", "k"]), {}),
+         ("result", None)],
+    ),
+    "clear_partitioning": (
+        "ALTER TABLE rt CLEAR PARTITIONING",
+        [("snapshot_set_partitioning", ("<rt>", None), {}),
+         ("result", None)],
+    ),
+    "add_constraint": (
+        "ALTER TABLE rt ADD CONSTRAINT kc CHECK (k > 0 AND tag <> ')')",
+        [("snapshot_set_constraint",
+          ("<rt>", "kc", "k > 0 AND tag <> ')'"), {}),
+         ("result", None)],
+    ),
+    "drop_constraint": (
+        "ALTER TABLE rt DROP CONSTRAINT kc",
+        [("snapshot_drop_constraint", ("<rt>", "kc"), {}),
+         ("result", None)],
+    ),
+    "add_column": (
+        "ALTER TABLE rt ADD COLUMN c2 bigint DEFAULT 5",
+        [("snapshot_enable_column_mapping", ("<rt>",), {}),
+         ("snapshot_add_column",
+          ("<rt>", "c2", "bigint"),
+          {"default": "5"}),
+         ("result", None)],
+    ),
+    "add_columns": (
+        "ALTER TABLE rt ADD COLUMNS (c3 bigint DEFAULT 2 * 4 NOT NULL "
+        "COMMENT 'x', c4 string)",
+        [("snapshot_enable_column_mapping", ("<rt>",), {}),
+         ("spark.sql", "SELECT (2 * 4) AS v"),
+         ("snapshot_add_column",
+          ("<rt>", "c3", "bigint"),
+          {"default": "8"}),
+         ("snapshot_set_column_default", ("<rt>", "c3", "2 * 4"), {}),
+         ("snapshot_set_column_comment", ("<rt>", "c3", "x"), {}),
+         ("snapshot_set_constraint",
+          ("<rt>", "__not_null_c3", "c3 IS NOT NULL"),
+          {}),
+         ("snapshot_add_column",
+          ("<rt>", "c4", "string"),
+          {"default": None}),
+         ("result", None)],
+    ),
+    "rename_column": (
+        "ALTER TABLE rt RENAME COLUMN v TO w",
+        [("snapshot_enable_column_mapping", ("<rt>",), {}),
+         ("snapshot_rename_column", ("<rt>", "v", "w"), {}),
+         ("result", None)],
+    ),
+    "drop_column": (
+        "ALTER TABLE rt DROP COLUMN tag",
+        [("snapshot_enable_column_mapping", ("<rt>",), {}),
+         ("snapshot_drop_column", ("<rt>", "tag"), {}),
+         ("result", None)],
+    ),
+    "set_default": (
+        "ALTER TABLE rt ALTER COLUMN v SET DEFAULT 5",
+        [("snapshot_enable_column_mapping", ("<rt>",), {}),
+         ("snapshot_set_column_default", ("<rt>", "v", "5"), {}),
+         ("result", None)],
+    ),
+    "drop_default": (
+        "ALTER TABLE rt ALTER COLUMN v DROP DEFAULT",
+        [("snapshot_enable_column_mapping", ("<rt>",), {}),
+         ("snapshot_set_column_default", ("<rt>", "v", None), {}),
+         ("result", None)],
+    ),
+    "set_not_null": (
+        "ALTER TABLE rt ALTER COLUMN v SET NOT NULL",
+        [("snapshot_set_constraint",
+          ("<rt>", "__not_null_v", "v IS NOT NULL"),
+          {}),
+         ("result", None)],
+    ),
+    "drop_not_null": (
+        "ALTER TABLE rt ALTER COLUMN v DROP NOT NULL",
+        [("snapshot_drop_constraint", ("<rt>", "__not_null_v"), {}),
+         ("result", None)],
+    ),
+    "column_comment": (
+        "ALTER TABLE rt ALTER COLUMN v COMMENT 'it''s'",
+        [("snapshot_enable_column_mapping", ("<rt>",), {}),
+         ("snapshot_set_column_comment", ("<rt>", "v", "it's"), {}),
+         ("result", None)],
+    ),
+    "widen": (
+        "ALTER TABLE rt ALTER COLUMN v TYPE bigint",
+        [("snapshot_widen_column", ("<rt>", "v", "bigint"), {}),
+         ("result", None)],
+    ),
+    "set_tblproperties": (
+        "ALTER TABLE rt SET TBLPROPERTIES ('team' = 'ml', 'pii' = 'no')",
+        [("snapshot_set_properties",
+          ("<rt>", {"team": "ml", "pii": "no"}),
+          {}),
+         ("result", None)],
+    ),
+    "unset_tblproperties": (
+        "ALTER TABLE rt UNSET TBLPROPERTIES IF EXISTS ('pii')",
+        [("snapshot_unset_properties", ("<rt>", ["pii"]), {}),
+         ("result", None)],
+    ),
+    "sync_identity": (
+        "ALTER TABLE rt SYNC IDENTITY",
+        [("snapshot_sync_identity", ("<rt>",), {}),
+         ("result", None)],
+    ),
+    # -- read-only forms ----------------------------------------------------
+    "show_tblproperties": (
+        "SHOW TBLPROPERTIES rt",
+        [("result", ("key", "value"))],
+    ),
+    "show_tables": (
+        "SHOW TABLES",
+        [("result",
+          ("name", "location", "pinned_version", "current_version"))],
+    ),
+    "show_views": (
+        "SHOW VIEWS",
+        [("result", ("name", "definition"))],
+    ),
+    "show_partitions": (
+        "SHOW PARTITIONS rt",
+        [("raised", "ValueError")],
+    ),
+    "show_create": (
+        "SHOW CREATE TABLE rt",
+        [("result", ("createtab_stmt",))],
+    ),
+    "describe_history": (
+        "DESCRIBE HISTORY rt",
+        [("snapshot_history", ("<rt>",), {}),
+         ("result", ("version", "parent", "op", "ts", "n_files"))],
+    ),
+    "describe_detail": (
+        "DESCRIBE DETAIL rt",
+        [("result",
+          ("name",
+           "location",
+           "version",
+           "n_files",
+           "partitioning",
+           "bucketing",
+           "widened_types",
+           "check_constraints",
+           "column_mapping",
+           "dv_deleted_rows"))],
+    ),
+    "describe_table": (
+        "DESCRIBE TABLE rt",
+        [("result", ("col_name", "data_type", "info", "comment"))],
+    ),
+    "desc": (
+        "DESC rt",
+        [("result", ("col_name", "data_type", "info", "comment"))],
+    ),
+    "transaction_rollback": (
+        ("BEGIN", "ROLLBACK"),
+        [("result", None),
+         ("result", None)],
+    ),
+    "transaction_commit": (
+        ("BEGIN TRANSACTION", "COMMIT TRANSACTION"),
+        [("result", None),
+         ("result", None)],
+    ),
+    # -- plain SQL ----------------------------------------------------------
+    "select_version_as_of": (
+        "SELECT count(*) AS n FROM rt VERSION AS OF 1",
+        [("spark.sql", "SELECT count(*) AS n FROM rt__asof_v1"),
+         ("result", ("n",))],
+    ),
+    "select_timestamp_as_of": (
+        "SELECT count(*) AS n FROM rt TIMESTAMP AS OF '2099-01-01'",
+        [("snapshot_version_as_of", ("<rt>", _iso_ts("2099-01-01")), {}),
+         ("spark.sql", "SELECT count(*) AS n FROM rt__asof_v2"),
+         ("result", ("n",))],
+    ),
+    "select_unregistered": (
+        "SELECT * FROM rt_src",
+        [("spark.sql", "SELECT * FROM rt_src"),
+         ("result", ("k", "v", "tag", "o"))],
+    ),
+    "delete_unregistered": (
+        "DELETE FROM rt_src WHERE k = 1",
+        [("spark.sql", "DELETE FROM rt_src WHERE k = 1"),
+         ("raised", "Py4JJavaError")],
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def route_cat(spark, tmp_path_factory):
+    """A two-version table ``rt`` registered in a catalog, and a source
+    view ``rt_src`` of the same shape."""
+    rt = tmp_path_factory.mktemp("routes") / "rt"
+    schema = "k long, v long, tag string, o long"
+    snapshot_write(
+        spark.createDataFrame([(1, 10, "a", 7), (2, 20, "b", 8)], schema),
+        rt, stats_cols=["k"],
+    )
+    snapshot_append(spark.createDataFrame([(3, 30, "c", 14)], schema), rt)
+    spark.createDataFrame(
+        [(2, 25, "b", 8), (4, 40, "d", 21)], schema
+    ).createOrReplaceTempView("rt_src")
+    cat = SnapshotCatalog(spark)
+    cat.sql(f"CREATE TABLE rt USING snapshot LOCATION '{rt}'")
+    return cat, str(rt)
+
+
+@pytest.mark.parametrize("form", sorted(_ROUTES))
+def test_statement_routes(spark, route_cat, monkeypatch, form):
+    from pyspark.sql import DataFrame, SparkSession
+
+    from energy_datalake_solution_spark.sources import snapshots
+
+    cat, rt = route_cat
+    stmts, want = _ROUTES[form]
+    if isinstance(stmts, str):
+        stmts = (stmts,)
+    calls: list = []
+
+    def norm(a):
+        if isinstance(a, DataFrame):
+            return ("df", *a.columns)
+        if str(a) == rt:
+            return "<rt>"
+        return a
+
+    def stub(name, real):
+        def rec(*args, **kw):
+            calls.append((
+                name,
+                tuple(norm(a) for a in args
+                      if not isinstance(a, SparkSession)),
+                {k: norm(v) for k, v in kw.items()},
+            ))
+            if real is not None:
+                return real(*args, **kw)
+            return [] if name == "snapshot_vacuum" else None
+
+        return rec
+
+    for name in _ROUTE_MUTATORS:
+        monkeypatch.setattr(snapshots, name, stub(name, None))
+    for name in _ROUTE_READERS:
+        monkeypatch.setattr(snapshots, name, stub(name, getattr(snapshots, name)))
+    real_sql = spark.sql
+
+    def sql(text, *a, **kw):
+        calls.append(("spark.sql", text))
+        return real_sql(text, *a, **kw)
+
+    monkeypatch.setattr(spark, "sql", sql)
+    for stmt in stmts:
+        try:
+            out = cat.sql(stmt.replace("<rt>", rt))
+            calls.append(("result", tuple(out.columns) if out is not None
+                          else None))
+        except Exception as e:  # the refusal is part of the route
+            calls.append(("raised", type(e).__name__))
+    assert calls == want
