@@ -280,8 +280,11 @@ def _commit(
     partitioning_meta: dict | None = None,
     bucketing_meta: dict | None = None,
     properties_meta: dict | None = None,
+    empty_types: dict | None = None,
 ) -> int:
-    """Publish a manifest and advance the pointer.
+    """Publish a manifest and advance the pointer. ``empty_types`` (a
+    version listing no files: the {column: type} it reads as) is stored
+    on this version only.
 
     Concurrency contract (optimistic, Delta-LogStore-shaped): the
     manifest publish is a hard-link (atomic, no-overwrite — a
@@ -321,6 +324,8 @@ def _commit(
     manifest["n_files"] = len(files)
     if txn_app is not None:
         manifest["txn_app"] = txn_app
+    if empty_types:
+        manifest["empty_types"] = empty_types
     # carry the per-app latest-txn MAP forward into every manifest (the
     # analogue of Delta's SetTransaction actions): last_txn reads ONLY the
     # latest manifest, so vacuuming old manifests — including another
@@ -2265,7 +2270,7 @@ def _apply_delta(base: dict, raw: dict) -> dict:
     files.extend(d.get("add", []))
     out: dict = {"files": sorted(files)}
     for fld in ("version", "parent", "txn", "txn_app", "txns", "op", "ts",
-                "ckpt_dist", "n_files"):
+                "ckpt_dist", "n_files", "empty_types"):
         if fld in raw:
             out[fld] = raw[fld]
     # schema/constraints/types/partitioning metadata: a delta stores them
@@ -2431,8 +2436,9 @@ def snapshot_read(
     opening every file of a snapshot and the few whose stats can match.
     A selection no file can match reads as the snapshot's typed frame
     with no rows (planned, never scanned). So does a version listing no
-    files (a truncate): typed by the declared mapping, else by the footer
-    of the nearest earlier version that lists files."""
+    files (a truncate): typed by the declared mapping, else by the reader
+    schema the truncate recorded, else by the footer of the nearest
+    earlier version that lists files."""
     from pyspark.sql import functions as F
 
     p = Path(table_path)
@@ -2452,7 +2458,10 @@ def snapshot_read(
             return spark.createDataFrame([], ", ".join(
                 f"{c['name']} {c['type']}" for c in schema["cols"]
             ))
-        # an unmapped table keeps its schema only in file footers
+        # an unmapped table keeps its schema only in file footers: the
+        # truncate that emptied it recorded their reader schema
+        if m.get("empty_types"):
+            return spark.createDataFrame([], _types_ddl(m["empty_types"]))
         listed = _nearest_listed_ancestor(p, m)
         first = listed["files"][0] if listed else None
         if first is None or not (p / first).exists():
@@ -2769,11 +2778,25 @@ def snapshot_truncate(table_path) -> int:
     types map clears (no files remain, so there is nothing the map
     could describe — snapshot_write's honest-footer rule). The change
     feed reports every previous row as deleted, computed from the file
-    diff alone."""
+    diff alone. An unmapped table keeps its schema only in file footers,
+    so the truncate records the reader schema it has at hand (the
+    widened types map, else the first listed file's footer) for its
+    empty version to read as a typed frame once vacuum removes them."""
     p = _table(table_path)
-    return _transact(p, lambda parent, m: _commit(
-        p, [], parent, op="truncate", types_meta=CLEAR_METADATA
-    ))
+
+    def attempt(parent, m):
+        empty_types = None
+        if not m.get("schema"):
+            listed = m if m["files"] else _nearest_listed_ancestor(p, m)
+            empty_types = m.get("empty_types") or (listed and (
+                listed.get("types")
+                or _footer_sweep(None, p, listed["files"][:1],
+                                 _file_footer_types)[0]
+            ))
+        return _commit(p, [], parent, op="truncate",
+                       types_meta=CLEAR_METADATA, empty_types=empty_types)
+
+    return _transact(p, attempt)
 
 
 def snapshot_set_column_default(table_path, col: str,
@@ -3119,7 +3142,7 @@ def _materialize_checkpoint(p: Path, v: int) -> None:
     # width files without the explicit schema)
     for fld in ("op", "ts", "txn_app", "txns", "n_files", "schema",
                 "constraints", "types", "partitioning", "bucketing",
-                "properties"):
+                "properties", "empty_types"):
         if m.get(fld) is not None:
             full[fld] = m[fld]
     if len(m["files"]) >= CKPT_PARQUET_MIN_FILES:
@@ -4506,6 +4529,13 @@ def snapshot_change_feed(
     ins = read(plain_added, dv_to, m_to) if plain_added else empty(v_to, m_to)
     dels = read(removed, dv_from, m_from) if removed else empty(v_from, m_from)
     ins, dels = _align_schemas(ins, dels)
+    if sch:
+        # compare on the live physicals only: a dropped column's
+        # physical survives in the from-side files but not in their
+        # rewrites, and would keep every carried row from cancelling
+        live = {c["physical"] for c in sch["cols"]}
+        cols = [c for c in ins.columns if c in live]
+        ins, dels = ins.select(*cols), dels.select(*cols)
     net_ins = ins.exceptAll(dels)
     net_del = dels.exceptAll(ins)
     # kept files whose deletion vectors GREW: those positions were alive

@@ -429,10 +429,11 @@ def test_row_count_on_empty_table_raises_descriptively(tmp_path):
 
 def test_truncated_unmapped_table_reads_typed_empty(spark, tmp_path):
     """A truncate commits a version listing no files, and an unmapped
-    table keeps its schema only in file footers: the read takes its typed
-    empty frame from the nearest earlier version that lists files (its
-    widened types map included), through repeated truncates, and refuses
-    once vacuum has removed every such version."""
+    table keeps its schema only in file footers. The truncate records
+    the reader schema it has at hand (the widened types map, else the
+    footer's), so the empty tip reads as a typed empty frame through
+    repeated truncates and after vacuum has removed every version that
+    lists files."""
     from energy_datalake_solution_spark.sources.snapshots import snapshot_truncate
 
     t = tmp_path / "t"
@@ -446,8 +447,9 @@ def test_truncated_unmapped_table_reads_typed_empty(spark, tmp_path):
     assert out.schema["k"].dataType.simpleString() == "bigint"
     assert out.count() == 0
     snapshot_vacuum(t, keep_versions=1)
-    with pytest.raises(FileNotFoundError, match="no earlier version"):
-        snapshot_read(spark, t)
+    out = snapshot_read(spark, t)
+    assert out.schema == before
+    assert out.count() == 0
 
 
 def test_schema_evolution_read_across_appends(spark, tmp_path):
@@ -3376,3 +3378,36 @@ def test_analyze_blooms_refuses_a_missing_data_file(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         snapshot_analyze_blooms(spark, t, ["u"])
     assert current_version(t) == v
+
+
+def test_change_feed_cancels_carried_rows_after_a_dropped_column(spark, tmp_path):
+    """A compaction after a dropped column rewrites every row into files
+    without the dropped column's physical. The change feed over that
+    window must still cancel each carried row against its old copy and
+    report nothing, through the library and through table_changes()."""
+    from energy_datalake_solution_spark.sources.snapshot_catalog import (
+        SnapshotCatalog,
+    )
+    from energy_datalake_solution_spark.sources.snapshots import (
+        snapshot_change_feed,
+        snapshot_enable_column_mapping,
+    )
+
+    t = tmp_path / "t"
+    snapshot_write(
+        spark.range(6).selectExpr("id AS k", "id * 10 AS v", "'x' AS x"),
+        t, n_files=2,
+    )
+    snapshot_enable_column_mapping(spark, t)
+    cat = SnapshotCatalog(spark)
+    cat.sql(f"CREATE TABLE cfd USING snapshot LOCATION '{t}'")
+    cat.sql("ALTER TABLE cfd DROP COLUMN x")
+    v = current_version(t)
+    cat.sql("OPTIMIZE cfd INTO 1 FILES")
+    assert current_version(t) == v + 1
+    feed = snapshot_change_feed(spark, t, v)
+    assert feed.columns == ["k", "v", "_change_type"]
+    assert feed.count() == 0
+    out = cat.sql(f"SELECT * FROM table_changes('cfd', {v})")
+    assert out.columns == ["k", "v", "_change_type"]
+    assert out.count() == 0
