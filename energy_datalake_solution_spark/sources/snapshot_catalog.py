@@ -8,154 +8,138 @@ parses and resolves the schema through the registered Python DataSource,
 but in this Spark build the catalog does not propagate the table's
 options to the SCAN-side DataSource instance (reader() sees an empty
 options dict), so the first SELECT fails. This module provides the same
-contract one level up:
+contract one level up.
 
-  * ``SnapshotCatalog.sql(text)`` accepts the DDL forms
-        CREATE [OR REPLACE] TABLE <name> USING snapshot
-            (OPTIONS (path '<p>') | LOCATION '<p>') [VERSION AS OF <n>]
-        CREATE [OR REPLACE] TABLE <name> USING snapshot LOCATION '<p>'
-            AS <select>                           (CTAS — materialize +
-            register; the source query may itself time-travel)
-        CREATE TABLE <name> (c type [DEFAULT lit-or-foldable-expr
-              (infix expressions parse unparenthesized: DEFAULT 1 + 2)
-            | GENERATED ALWAYS AS (expr)
-            | GENERATED ALWAYS AS IDENTITY
-              [(START WITH s INCREMENT BY k)]]
+How a statement is read. ``SnapshotCatalog.sql(text)`` first tries a
+small pattern table that holds only the forms Spark's parser rejects or
+misreads. Every other statement is parsed ONCE by Spark's own parser
+(``sessionState().sqlParser().parsePlan``) and dispatched on the plan's
+node class: table names, column definitions, MERGE arms, time-travel
+relations and ``table_changes(...)`` calls are read from the tree.
+Conditions, assignment values, CHECK expressions and source queries
+pass on as the statement's own text, cut at each node's origin span, so
+the library sees byte for byte what was written. A statement the parser
+rejects that names a registered table (or the snapshot provider) raises
+ValueError with the parser's message.
+
+Forms Spark parses (each routed to its TRANSACTIONAL library operation —
+stats-pruned, DV-based, optimistic-concurrency commits, not a new engine):
+    CREATE [OR REPLACE] TABLE <name> USING snapshot
+        (OPTIONS (path '<p>') | LOCATION '<p>')     (register a table)
+    CREATE [OR REPLACE] TABLE <name> USING snapshot [PARTITIONED BY (c, ...)]
+        LOCATION '<p>' [PARTITIONED BY (c, ...)] AS <query>
+                                              -> snapshot_write (CTAS)
+    CREATE TABLE <name> (c type [DEFAULT expr] [GENERATED ALWAYS AS (expr)
+            | GENERATED ALWAYS AS IDENTITY [(START WITH s INCREMENT BY k)]]
             [NOT NULL] [COMMENT 'txt'], ...) USING snapshot
-            [PARTITIONED BY (c, ...)] LOCATION '<p>'
-            [PARTITIONED BY (c, ...)]
-            (CTAS accepts PARTITIONED BY in both positions too —
-            the result lands one file set per partition value)
-            (clauses in any order; empty-table DDL: v1 schema-only manifest,
-            column mapping from birth; reads return a typed empty frame;
-            generated columns compute on write when omitted and are
-            validated when supplied — partition BY one for the
-            date-partition-from-timestamp pattern)
-        ALTER TABLE <name> ADD COLUMN c type DEFAULT <literal>
-            (Iceberg-style initial+write-default: files lacking the
-            column — pre-add files, later narrow writes — read the
-            default, not NULL; stored values incl. explicit NULLs win)
-        DROP TABLE [IF EXISTS] <name>
-        CREATE [OR REPLACE] VIEW <name> AS <query> (text stored; resolved
-            against CURRENT table versions per query — never stale)
-        DROP VIEW [IF EXISTS] <name>
-    the DML/maintenance subset (each routed to the corresponding
-    TRANSACTIONAL library operation — stats-pruned, DV-based,
-    optimistic-concurrency commits, not a new engine):
-        INSERT INTO <name> [(col, ...)] <select|values>
-                                                  -> snapshot_append
-            (a full-width source maps by position; an explicit column
-            list maps to those columns, unlisted ones resolve by
-            DEFAULT / GENERATED / typed NULL on read)
-        MERGE INTO <name> USING <src> ON (k, ...) -> snapshot_upsert
-        MERGE INTO ... WHEN MATCHED [AND c] THEN UPDATE SET ../DELETE
-            [WHEN NOT MATCHED [AND c] THEN INSERT *
-                | INSERT (cols) VALUES (exprs)]
-            [WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE | UPDATE SET]
-            (WHEN MATCHED / BY SOURCE clause pairs evaluate in WRITTEN
-            order, Delta semantics)           -> snapshot_merge
-        MERGE WITH SCHEMA EVOLUTION INTO ...      (either MERGE form:
-            source columns absent from the target auto-add as metadata
-            before merging; old files read them as typed NULLs)
-        DELETE FROM <name> WHERE c BETWEEN a AND b-> snapshot_delete_range_mor
-        DELETE FROM <name> WHERE <any predicate>  -> snapshot_delete_where
-        UPDATE <name> SET c=e,... WHERE k BETWEEN -> snapshot_update_range_mor
-        UPDATE <name> SET c=e,... WHERE <any pred>-> snapshot_update_where
-        COPY INTO <name> FROM '<dir|glob>' FILEFORMAT = <fmt>
-            [FORMAT_OPTIONS (k = 'v', ...)]      -> snapshot_copy_into
-            (file-granular idempotent load: reruns skip files already
-            ingested — the ledger commits atomically with the rows)
-        RESTORE TABLE <name> VERSION/TIMESTAMP AS OF -> snapshot_restore
-        VACUUM <name> [RETAIN n VERSIONS] [DRY RUN] -> snapshot_vacuum
-            (DRY RUN returns the would-delete file list, touches nothing)
-        SELECT ... FROM table_changes('<name>', v1[, v2]) ...
-            -> snapshot_change_feed (batch CDF: net row changes with
-            _change_type, reading only the files that changed)
-        ANALYZE TABLE <name> COMPUTE STATISTICS FOR COLUMNS (a, b)
-        ANALYZE TABLE <name> COMPUTE BLOOM FILTERS FOR COLUMNS (a, b)
-            -> snapshot_analyze (metadata-only stats backfill: retrofits
-            file pruning onto stats-less tables — CTAS results,
-            DataSource writes, inherited lakes)
-        SHOW TABLES / SHOW VIEWS                  (registrations + views)
-        CREATE TABLE <name> SHALLOW CLONE <src>
-            [VERSION/TIMESTAMP AS OF ...] LOCATION '<p>' -> snapshot_clone
-            (zero-copy: the clone's manifest references the source
-            version's files by absolute path; DVs/stats re-key)
-        SHOW PARTITIONS <name>       (live partition value tuples of the
-            manifest's spec — a column-pruned distributed DISTINCT)
-        SHOW CREATE TABLE <name>     (reconstructed DDL: columns at the
-            read schema, partition/bucket specs, constraints)
-        DESCRIBE HISTORY <name>                   -> snapshot_history
-        DESCRIBE DETAIL <name>  (version, files, partitioning, bucketing,
-            widened types, constraints, column mapping — manifest-only)
-        OPTIMIZE <name> [WHERE <pred>] [ZORDER BY (a, b[, c...])]
-            [INTO n FILES]
-            -> snapshot_compact / snapshot_compact_where (predicate-
-            scoped: only stats-overlapping files rewrite — compact one
-            hot partition of a 100 TB table without touching the rest)
-            / snapshot_zorder_compact_n (any number of z columns); all
-            three share one conflict-safe rewrite loop
-        REORG TABLE <name> APPLY (PURGE)          -> snapshot_purge_dv
-            (rewrite ONLY deletion-vector-carrying files — O(dv'd
-            files); clean files stay byte-identical)
-        ALTER TABLE <name> SET PARTITIONED BY (c, ...) -> snapshot_set_partitioning
-        ALTER TABLE <name> CLEAR PARTITIONING     -> snapshot_set_partitioning
-        ALTER TABLE <name> ADD CONSTRAINT n CHECK (e)
-                                                  -> snapshot_set_constraint
-        ALTER TABLE <name> DROP CONSTRAINT n      -> snapshot_drop_constraint
-        ALTER TABLE <name> ADD COLUMN[S] [(]spec[, spec...][)]
-                                                  -> snapshot_add_column
-            (spec = full CREATE TABLE column grammar: DEFAULT incl.
-            constant-foldable expressions, COMMENT, NOT NULL — the
-            latter only WITH a DEFAULT; GENERATED/IDENTITY refuse)
-        ALTER TABLE <name> RENAME COLUMN a TO b   -> snapshot_rename_column
-        ALTER TABLE <name> DROP COLUMN c          -> snapshot_drop_column
-        ALTER TABLE <name> ALTER COLUMN c SET DEFAULT lit | DROP DEFAULT
-            -> snapshot_set_column_default (changes the WRITE default;
-            the birth default keeps resolving pre-existing files)
-        ALTER TABLE <name> ALTER COLUMN c SET NOT NULL | DROP NOT NULL
-            (a reserved-name CHECK; SET validates standing data first;
-            NOT NULL also parses inline in CREATE TABLE column specs)
-        ALTER TABLE <name> ALTER COLUMN c COMMENT 'txt'
-        ALTER TABLE <name> ALTER COLUMN c TYPE <wider>
-            -> snapshot_widen_column (O(1) metadata type widening;
-            narrowing / cross-chain refuses)
-            (COMMENT also parses inline in CREATE TABLE column specs;
-            DESCRIBE TABLE / SHOW CREATE TABLE surface it)
-        ALTER TABLE <name> SET TBLPROPERTIES ('k' = 'v', ...)
-            | UNSET TBLPROPERTIES [IF EXISTS] ('k', ...)
-        SHOW TBLPROPERTIES <name>     (user key-value metadata — carried
-            by every commit, inherited by clones, reverted by RESTORE)
-        ALTER TABLE <name> SYNC IDENTITY -> snapshot_sync_identity
-            (recompute identity high-water marks from stored values)
-        TRUNCATE TABLE <name> / DELETE FROM <name> -> snapshot_truncate
-            (metadata-only delete-all; identity marks survive)
-        DESCRIBE [TABLE] <name>  (per-column name/type plus DEFAULT /
-            GENERATED / IDENTITY decoration)
-            (each an O(columns) metadata commit — column mapping
-            auto-enables; old files read unchanged, dropped ids retire,
-            re-added names cannot resurrect old bytes)
-        BEGIN / COMMIT / ROLLBACK [TRANSACTION]   -> SnapshotTransaction
-            (multi-statement, multi-TABLE all-or-nothing: writes between
-            BEGIN and COMMIT stage without moving any pointer; SELECTs
-            in between read this session's OWN staged versions)
-    and passes every other statement to ``spark.sql`` after re-pointing
-    the registered snapshot views at their tables' CURRENT versions.
-    SELECT-level time travel works in any plain statement (and in
-    INSERT/MERGE source sub-queries):
-        SELECT ... FROM <name> VERSION AS OF <n> ...
-        SELECT ... FROM <name> TIMESTAMP AS OF '<iso>' ...
-    — each reference rewrites to a version-pinned temp view resolved
-    from ONE manifest, so the result stays frozen across later commits.
-  * Registration materializes a temp view over
-    ``spark.read.format("snapshot")`` — the DataSource plans one
-    InputPartition per data file from ONE resolved manifest, so each
-    query reads a consistent snapshot; re-registration per ``sql()``
-    call is O(manifest metadata) and gives catalog-table freshness
-    (a view pinned at CREATE time would go stale after appends).
+        [PARTITIONED BY (c, ...)] LOCATION '<p>' [TBLPROPERTIES (...)]
+                                              -> snapshot_create_table
+        (column clauses in any order, each at most once; a v1 schema-only
+        manifest with column mapping from birth; an expression DEFAULT
+        folds to its birth literal now and re-evaluates at each write;
+        generated columns compute on write when omitted and are validated
+        when supplied; ``delta.constraints.*`` properties re-apply as
+        CHECKs, so SHOW CREATE TABLE's output re-executes)
+    DROP TABLE [IF EXISTS] <name>
+    CREATE [OR REPLACE] VIEW <name> AS <query>  (text stored; resolved
+        against CURRENT table versions per query — never stale)
+    DROP VIEW [IF EXISTS] <name>
+    INSERT INTO <name> [(col, ...)] <query>   -> snapshot_append
+        (a full-width source maps by position; an explicit column list
+        maps to those columns, unlisted ones resolve by DEFAULT /
+        GENERATED / typed NULL on read)
+    INSERT OVERWRITE [TABLE] <name> <query>   -> snapshot_replace_where
+    INSERT INTO <name> REPLACE WHERE <pred> <query>
+                                              -> snapshot_replace_where
+    MERGE [WITH SCHEMA EVOLUTION] INTO <name> USING <src> ON (k, ...)
+        WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
+                                              -> snapshot_upsert
+    MERGE [WITH SCHEMA EVOLUTION] INTO <name> [t] USING <src> [s]
+        ON (k, ...) | t.k = s.k [AND ...]
+        WHEN MATCHED [AND c] THEN UPDATE SET ... | UPDATE SET * | DELETE
+        WHEN NOT MATCHED [AND c] THEN INSERT * | INSERT (cols) VALUES (...)
+        WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE | UPDATE SET ...
+                                              -> snapshot_merge
+        (WHEN MATCHED / BY SOURCE clause pairs evaluate in WRITTEN order,
+        Delta semantics; WITH SCHEMA EVOLUTION auto-adds source columns)
+    DELETE FROM <name> WHERE c BETWEEN a AND b -> snapshot_delete_range_mor
+    DELETE FROM <name> WHERE <any predicate>   -> snapshot_delete_where
+    UPDATE <name> SET c = e, ... WHERE k BETWEEN a AND b
+                                              -> snapshot_update_range_mor
+    UPDATE <name> SET c = e, ... WHERE <any predicate>
+                                              -> snapshot_update_where
+        (a predicate with a subquery re-points the views first; a whole
+        ``col IN (SELECT ...)`` clause also prunes files by the keys'
+        min/max)
+    TRUNCATE TABLE <name> / DELETE FROM <name> -> snapshot_truncate
+    ALTER TABLE <name> ADD COLUMN[S] [(]c type [DEFAULT e] [NOT NULL]
+        [COMMENT 'txt'][, ...][)]             -> snapshot_add_column
+        (every spec validates before any commits; NOT NULL needs a
+        non-NULL DEFAULT; GENERATED / IDENTITY refuse)
+    ALTER TABLE <name> RENAME COLUMN a TO b   -> snapshot_rename_column
+    ALTER TABLE <name> DROP COLUMN c          -> snapshot_drop_column
+    ALTER TABLE <name> ALTER COLUMN c SET DEFAULT e | DROP DEFAULT
+                                              -> snapshot_set_column_default
+    ALTER TABLE <name> ALTER COLUMN c SET NOT NULL | DROP NOT NULL
+        (a reserved-name CHECK; SET validates standing data first)
+    ALTER TABLE <name> ALTER COLUMN c COMMENT 'txt'
+    ALTER TABLE <name> ALTER COLUMN c TYPE <wider>
+                                              -> snapshot_widen_column
+        (column DDL is O(metadata); column mapping auto-enables)
+    ALTER TABLE <name> ADD CONSTRAINT n CHECK (e) -> snapshot_set_constraint
+    ALTER TABLE <name> DROP CONSTRAINT n      -> snapshot_drop_constraint
+    SHOW TBLPROPERTIES <name> / SHOW TABLES / SHOW VIEWS
+    SHOW PARTITIONS <name>   (live partition value tuples of the spec)
+    SHOW CREATE TABLE <name> (re-executable DDL)
+    DESCRIBE [TABLE] <name>  (name/type plus DEFAULT / GENERATED /
+        IDENTITY / NOT NULL decoration and comments)
+    SELECT ... FROM <name> VERSION AS OF <n> | TIMESTAMP AS OF '<iso>'
+        (in any statement, subqueries, CTEs, view bodies and INSERT /
+        MERGE sources included: each reference re-points at a
+        version-pinned temp view read from ONE manifest)
+    SELECT ... FROM table_changes('<name>', v1[, v2]) ...
+        -> snapshot_change_feed (net row changes with _change_type,
+        reading only the files that changed)
 
-At 100 TB the per-query cost is the manifest resolution (O(change)
-amortized through the delta-manifest cache) — never a file listing.
+Forms on the pattern table (Spark rejects or misparses them):
+    BEGIN / COMMIT / ROLLBACK [TRANSACTION]   -> SnapshotTransaction
+        (multi-table all-or-nothing; SELECTs in between read this
+        session's own staged versions)
+    CREATE TABLE <name> SHALLOW CLONE <src> [VERSION/TIMESTAMP AS OF ...]
+        LOCATION '<p>'                        -> snapshot_clone
+    CREATE [OR REPLACE] TABLE <name> USING snapshot LOCATION '<p>'
+        VERSION AS OF <n>                     (a read-only pinned name)
+    ALTER TABLE <name> SET PARTITIONED BY (c, ...) | CLEAR PARTITIONING
+                                              -> snapshot_set_partitioning
+    ALTER TABLE <name> SYNC IDENTITY          -> snapshot_sync_identity
+    ALTER TABLE <name> SET TBLPROPERTIES ('k' = 'v', ...)
+        | UNSET TBLPROPERTIES [IF EXISTS] ('k', ...)
+        -> snapshot_set_properties / snapshot_unset_properties (Spark
+        reserves owner, location, provider and comment as keys; here
+        they are plain user metadata, carried by every commit)
+    OPTIMIZE <name> [WHERE <pred>] [ZORDER BY (a, ...)] [INTO n FILES]
+        -> snapshot_compact / snapshot_compact_where /
+           snapshot_zorder_compact_n
+    REORG TABLE <name> APPLY (PURGE)          -> snapshot_purge_dv
+    VACUUM <name> [RETAIN n VERSIONS] [DRY RUN] -> snapshot_vacuum
+    RESTORE TABLE <name> VERSION/TIMESTAMP AS OF ... -> snapshot_restore
+    COPY INTO <name> FROM '<dir|glob>' FILEFORMAT = <fmt>
+        [FORMAT_OPTIONS ('k' = 'v', ...)]     -> snapshot_copy_into
+    ANALYZE TABLE <name> COMPUTE (STATISTICS | BLOOM FILTERS)
+        FOR COLUMNS [(]a, b[)]                -> snapshot_analyze[_blooms]
+    DESCRIBE DETAIL <name> / DESCRIBE HISTORY <name> (Spark reads both
+        as a DESCRIBE of a column)            -> manifest / snapshot_history
+    MERGE [WITH SCHEMA EVOLUTION] INTO <name> USING <src> ON (k, ...)
+        (no WHEN clause)                      -> snapshot_upsert
+
+Every other statement goes to ``spark.sql`` after the registered views
+are re-pointed at their tables' CURRENT versions. Registration
+materializes a temp view over ``spark.read.format("snapshot")`` — one
+InputPartition per data file from ONE resolved manifest, so each query
+reads a consistent snapshot; re-registration per ``sql()`` call is
+O(manifest metadata) and gives catalog-table freshness. At 100 TB the
+per-query cost is the manifest resolution (O(change) amortized through
+the delta-manifest cache) — never a file listing.
 
 Reference parity: the reference's tables are Glue-catalog entries over
 S3 parquet queried by name from Athena SQL (athena_queries/*.sql,
@@ -170,222 +154,327 @@ import json
 import re
 from pathlib import Path
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
-_CREATE_RE = re.compile(
-    r"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+(?P<name>[A-Za-z_][\w]*)\s+"
+from . import snapshots as S
+
+# -- the pattern table: forms Spark's parser rejects or misparses ----------
+_N = r"(?P<name>[A-Za-z_]\w*)"
+_COLS = r"[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*"
+_END = r"\s*;?\s*$"
+_I = re.IGNORECASE | re.DOTALL
+
+_TXN_RE = re.compile(
+    r"^\s*(?P<verb>BEGIN|COMMIT|ROLLBACK)(?:\s+TRANSACTION)?" + _END, _I
+)
+_CLONE_RE = re.compile(
+    rf"^\s*CREATE\s+TABLE\s+{_N}\s+SHALLOW\s+CLONE\s+(?P<src>[A-Za-z_]\w*)"
+    r"(?:\s+VERSION\s+AS\s+OF\s+(?P<version>\d+)"
+    r"|\s+TIMESTAMP\s+AS\s+OF\s+(?P<ts>'[^']+'))?"
+    r"\s+LOCATION\s+'(?P<path>[^']+)'" + _END, _I,
+)
+_CREATE_PINNED_RE = re.compile(
+    rf"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+{_N}\s+"
     r"USING\s+snapshot\s+"
     r"(?:OPTIONS\s*\(\s*path\s+'(?P<opath>[^']+)'\s*\)|LOCATION\s+'(?P<lpath>[^']+)')"
-    r"(?:\s+VERSION\s+AS\s+OF\s+(?P<version>\d+))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
+    r"\s+VERSION\s+AS\s+OF\s+(?P<version>\d+)" + _END, _I,
 )
-# CTAS: materialize a query result as a NEW snapshot table and register
-# it. The source query runs over fresh views (and may itself time-travel).
-_CTAS_RE = re.compile(
-    r"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+(?P<name>[A-Za-z_][\w]*)\s+"
-    r"USING\s+snapshot\s+"
-    # PARTITIONED BY accepted on either side of the location, like the
-    # empty-table DDL grammar
-    r"(?:PARTITIONED\s+BY\s*\(\s*"
-    r"(?P<part1>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\)\s+)?"
-    r"(?:OPTIONS\s*\(\s*path\s+'(?P<opath>[^']+)'\s*\)|LOCATION\s+'(?P<lpath>[^']+)')"
-    r"(?:\s+PARTITIONED\s+BY\s*\(\s*"
-    r"(?P<part2>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\))?"
-    r"\s+AS\s+(?P<query>(?:SELECT|WITH|VALUES|TABLE)\b.+)$",
-    re.IGNORECASE | re.DOTALL,
+_PARTITIONING_RE = re.compile(
+    rf"^\s*ALTER\s+TABLE\s+{_N}\s+(?:SET\s+PARTITIONED\s+BY\s*\(\s*"
+    rf"(?P<cols>{_COLS})\s*\)|(?P<clear>CLEAR\s+PARTITIONING))" + _END, _I,
 )
-_DROP_RE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?P<ifex>IF\s+EXISTS\s+)?(?P<name>[A-Za-z_][\w]*)\s*;?\s*$",
-    re.IGNORECASE,
+_SYNC_IDENTITY_RE = re.compile(
+    rf"^\s*ALTER\s+TABLE\s+{_N}\s+SYNC\s+IDENTITY" + _END, _I
 )
-# Empty-table DDL: CREATE TABLE t (c type [DEFAULT lit], ...) USING
-# snapshot LOCATION — commits a v1 schema-only manifest (zero files,
-# column mapping from birth) and registers the name.
-_CREATE_EMPTY_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s*"
-    r"\((?P<cols>.+)\)\s*"
-    r"USING\s+snapshot"
-    # Spark puts PARTITIONED BY between USING and LOCATION; accept it
-    # after the location too (both orders seen in the wild)
-    r"(?:\s+PARTITIONED\s+BY\s*\(\s*"
-    r"(?P<part1>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\))?"
-    r"\s+(?:OPTIONS\s*\(\s*path\s+'(?P<opath>[^']+)'\s*\)|LOCATION\s+'(?P<lpath>[^']+)')"
-    r"(?:\s+PARTITIONED\s+BY\s*\(\s*"
-    r"(?P<part2>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\))?"
-    # trailing TBLPROPERTIES: makes SHOW CREATE TABLE's output
-    # re-executable (constraints render as delta.constraints.* keys and
-    # re-apply as CHECKs; other keys land as table properties)
-    r"(?:\s+TBLPROPERTIES\s*\((?P<props>.+?)\))?"
-    r"\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
+_OPTIMIZE_RE = re.compile(
+    rf"^\s*OPTIMIZE\s+{_N}(?:\s+WHERE\s+(?P<cond>.+?))?"
+    rf"(?:\s+ZORDER\s+BY\s*\(\s*(?P<zcols>{_COLS})\s*\))?"
+    r"(?:\s+INTO\s+(?P<n>\d+)\s+FILES)?" + _END, _I,
 )
-# Column spec grammar: `name dtype` followed by column clauses in ANY
-# order (Spark/Delta DDL does not fix clause order — `c bigint DEFAULT 1
-# NOT NULL` and `c bigint NOT NULL DEFAULT 1` are both valid), each
-# clause at most once, DEFAULT / GENERATED ALWAYS AS / IDENTITY mutually
-# exclusive (checked downstream). Parsed by _parse_col_spec, not one
-# fixed-order regex.
-_COL_HEAD_RE = re.compile(
-    r"^\s*(?P<name>[A-Za-z_]\w*)\s+"
-    r"(?P<dtype>[A-Za-z_]\w*(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)",
-    re.IGNORECASE,
+_REORG_RE = re.compile(
+    rf"^\s*REORG\s+TABLE\s+{_N}\s+APPLY\s*\(\s*PURGE\s*\)" + _END, _I
 )
-_CL_NOT_NULL_RE = re.compile(r"NOT\s+NULL\b", re.IGNORECASE)
-_CL_COMMENT_RE = re.compile(
-    r"COMMENT\s+'(?P<c>(?:[^']|'')*)'", re.IGNORECASE
+_VACUUM_RE = re.compile(
+    rf"^\s*VACUUM\s+{_N}(?:\s+RETAIN\s+(?P<n>\d+)\s+VERSIONS)?"
+    r"(?:\s+(?P<dry>DRY\s+RUN))?" + _END, _I,
 )
-_CL_IDENTITY_RE = re.compile(
-    r"GENERATED\s+ALWAYS\s+AS\s+IDENTITY"
-    r"(?:\s*\(\s*START\s+WITH\s+(?P<start>-?\d+)\s+"
-    r"INCREMENT\s+BY\s+(?P<step>-?\d+)\s*\))?",
-    re.IGNORECASE,
+_RESTORE_RE = re.compile(
+    rf"^\s*RESTORE\s+TABLE\s+{_N}\s+(?:VERSION\s+AS\s+OF\s+(?P<version>\d+)"
+    r"|TIMESTAMP\s+AS\s+OF\s+(?P<ts>'[^']*'|[\d.]+))" + _END, _I,
 )
-_CL_GENERATED_RE = re.compile(
-    r"GENERATED\s+ALWAYS\s+AS\s*\(", re.IGNORECASE
+_COPY_INTO_RE = re.compile(
+    rf"^\s*COPY\s+INTO\s+{_N}\s+FROM\s+'(?P<src>[^']+)'\s+"
+    r"FILEFORMAT\s*=\s*(?P<fmt>[A-Za-z]+)"
+    r"(?:\s+FORMAT_OPTIONS\s*\((?P<opts>[^)]*)\))?" + _END, _I,
 )
-_CL_DEFAULT_RE = re.compile(r"DEFAULT\s+", re.IGNORECASE)
+_ANALYZE_RE = re.compile(
+    rf"^\s*ANALYZE\s+TABLE\s+{_N}\s+COMPUTE\s+"
+    r"(?:STATISTICS|(?P<bloom>BLOOM\s+FILTERS))\s+FOR\s+COLUMNS\s*\(?\s*"
+    rf"(?P<cols>{_COLS})\s*\)?" + _END, _I,
+)
+_DESCRIBE_RE = re.compile(
+    rf"^\s*DESCRIBE\s+(?P<what>DETAIL|HISTORY)\s+{_N}" + _END, _I
+)
+_MERGE_KEYS_RE = re.compile(
+    r"^\s*MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?"
+    rf"INTO\s+{_N}\s+USING\s+(?P<src>[A-Za-z_]\w*|\(.+\))\s+ON\s+"
+    rf"\(?\s*(?P<keys>{_COLS})\s*\)?" + _END, _I,
+)
+# Spark's parser reserves owner, location, provider and comment as
+# property keys; snapshot tables store them as plain user metadata
+_TBLPROPS_RE = re.compile(
+    rf"^\s*ALTER\s+TABLE\s+{_N}\s+(?P<verb>SET|UNSET)\s+TBLPROPERTIES\s*"
+    r"(?:IF\s+EXISTS\s*)?\((?P<items>.*)\)" + _END, _I,
+)
+_PROP_RE = re.compile(
+    r"\s*'(?P<key>(?:[^']|'')+)'\s*(?:=\s*'(?P<val>(?:[^']|'')*)'\s*)?(?:,|$)"
+)
+_IDENT_RE = re.compile(r"[A-Za-z_]\w*")
+
+# Spark's parser refusals on a snapshot table, restated in the catalog's
+# words (the parser's own message follows): keyed by the error condition,
+# else by the statement's first word
+_REFUSALS = {
+    "NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION":
+        "MERGE: when there are multiple WHEN MATCHED clauses, each clause "
+        "except the last must have an AND condition",
+    "NON_LAST_NOT_MATCHED_BY_SOURCE_CLAUSE_OMIT_CONDITION":
+        "MERGE: when there are multiple WHEN NOT MATCHED BY SOURCE "
+        "clauses, each clause except the last must have an AND condition",
+    "_LEGACY_ERROR_TEMP_0006":
+        "MERGE INSERT: the VALUES list must match the listed columns but "
+        "its length differs",
+    "IDENTITY_COLUMNS_ILLEGAL_STEP": "IDENTITY INCREMENT BY 0 is invalid",
+    "IDENTITY_COLUMNS_UNSUPPORTED_DATA_TYPE":
+        "IDENTITY requires an integral type",
+    "UPDATE":
+        "unsupported SET assignment or WHERE clause (expected UPDATE <t> "
+        "SET col = expr, ... WHERE <predicate>)",
+    "MERGE":
+        "MERGE: unsupported clause (WHEN MATCHED takes UPDATE SET or "
+        "DELETE, WHEN NOT MATCHED takes INSERT, WHEN NOT MATCHED BY SOURCE "
+        "takes DELETE or UPDATE SET t.<col> = ... — there is no source "
+        "row, so no INSERT and no SET *)",
+    "CREATE": "CREATE TABLE: cannot parse column spec or table clause",
+    "ALTER": "unsupported ALTER TABLE statement",
+}
+
+# subquery expressions: the walk steps from them into their plans
+_SUBQUERIES = {"ListQuery", "Exists", "ScalarSubquery", "LateralSubquery"}
+_RELATIONS = {"UnresolvedRelation", "RelationTimeTravel"}
 
 
-def _scan_balanced(s: str, i: int) -> int:
-    """Index just past the ``)`` closing the ``(`` at ``s[i]`` —
-    quote-aware ('' escapes inside string literals), so parens inside
-    literals never count."""
-    depth, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'":
-                    if j + 1 < n and s[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError(f"unbalanced parentheses in {s!r}")
+def _seq(x) -> list:
+    """A Scala collection's elements (a Map's as key/value tuples)."""
+    it, out = x.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
 
 
-def _scan_default_value(s: str, i: int) -> int:
-    """End index of a DEFAULT value starting at ``s[i]``: a quoted
-    string, or a token run with balanced parens (so expression defaults
-    like ``current_date()`` or ``date_add(current_date(), 7)`` parse),
-    ending at top-level whitespace — UNLESS the next token is an infix
-    operator (``DEFAULT 1 + 2``, ``DEFAULT 'a' || 'b'``), which
-    continues the expression; clause keywords are alphabetic and never
-    match, so ``DEFAULT 1 NOT NULL`` still splits correctly."""
-    n = len(s)
-
-    def _one(j: int) -> int:
-        # one operand: quoted string, or token run with balanced parens
-        if j < n and s[j] == "'":
-            k = j + 1
-            while k < n:
-                if s[k] == "'":
-                    if k + 1 < n and s[k + 1] == "'":
-                        k += 2
-                        continue
-                    return k + 1
-                k += 1
-            raise ValueError(f"unterminated string literal in {s!r}")
-        while j < n and not s[j].isspace():
-            if s[j] == "(":
-                j = _scan_balanced(s, j)
-            elif s[j] == "'":
-                return _one(j)
-            else:
-                j += 1
-        return j
-
-    ops = "+-*/%|&^<>="
-    j = _one(i)
-    while True:
-        k = j
-        while k < n and s[k].isspace():
-            k += 1
-        if k < n and s[k] in ops:
-            # operator BEGINS the next token: `1 + 2`, `1 +2`
-            while k < n and s[k] in ops:
-                k += 1
-            while k < n and s[k].isspace():
-                k += 1
-            j = _one(k)
-        elif j > i and s[j - 1] in ops and k < n:
-            # operator ENDED the previous token: `1+ 2` — the operand
-            # after the space continues the expression
-            j = _one(k)
-        else:
-            return j
+def _opt(x):
+    return x.get() if x.isDefined() else None
 
 
-def _parse_col_spec(spec: str) -> dict | None:
-    """One CREATE TABLE column spec -> {name, dtype, notnull, default,
-    identity, generated, comment}, clauses accepted in any order, each
-    at most once. None = unparseable (caller raises with the spec)."""
-    m = _COL_HEAD_RE.match(spec)
-    if not m:
+def _cls(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _origin(text: str, node) -> tuple:
+    """(start, stop) of a node's parser origin in ``text``, or Nones
+    when the origin belongs to another text (the parser's shared TRUE
+    and FALSE literals keep the origin of whatever statement built
+    them)."""
+    o = node.origin()
+    if _opt(o.sqlText()) != text:
+        return None, None
+    a, b = _opt(o.startIndex()), _opt(o.stopIndex())
+    return a, b + 1 if b is not None else None
+
+
+def _start(text: str, node) -> int | None:
+    """Where a node's text starts. A predicate's origin starts at its
+    keyword (BETWEEN, IN, IS, LIKE) and a join's at JOIN, so the start
+    follows the first child; a time-travel relation's origin is its AS
+    OF clause, so it starts at the table name; EXISTS takes the origin
+    of its enclosing clause, so it starts at the keyword before its
+    subquery."""
+    cls = _cls(node)
+    if cls == "RelationTimeTravel":
+        return _start(text, node.relation())
+    if cls == "Exists":
+        return text.upper().rindex("EXISTS", 0, _start(text, node.plan()))
+    kids = _seq(node.children())
+    starts = [_origin(text, node)[0], _start(text, kids[0]) if kids else None]
+    return min((s for s in starts if s is not None), default=None)
+
+
+def _stop(text: str, node) -> int | None:
+    """Where a node's text ends (exclusive), following the last child."""
+    if _cls(node) == "Exists":
+        return text.index(")", _stop(text, node.plan())) + 1
+    kids = _seq(node.children())
+    stops = [_origin(text, node)[1], _stop(text, kids[-1]) if kids else None]
+    return max((s for s in stops if s is not None), default=None)
+
+
+def _cut(text: str, node) -> str:
+    """The statement's own text for a node (a node the parser placed
+    nowhere in it, such as a shared TRUE literal, prints as SQL)."""
+    start = _start(text, node)
+    return node.sql() if start is None else text[start:_stop(text, node)]
+
+
+def _walk(node) -> list:
+    """Every node under ``node``: children, a plan's CTE bodies and
+    subquery plans (its inner children), and a subquery expression's
+    plan."""
+    out, stack = [], [node]
+    while stack:
+        n = stack.pop()
+        out.append(n)
+        stack += _seq(n.children()) + _seq(n.innerChildren())
+        if _cls(n) in _SUBQUERIES:
+            stack.append(n.plan())
+    return out
+
+
+def _parts(node) -> list:
+    """Name parts of a relation, identifier or attribute node."""
+    cls = _cls(node)
+    if cls == "UnresolvedIdentifier":
+        return _seq(node.nameParts())
+    if cls in ("UnresolvedRelation", "UnresolvedTable",
+               "UnresolvedTableOrView"):
+        return _seq(node.multipartIdentifier())
+    if cls in ("UnresolvedAttribute", "UnresolvedFieldName"):
+        return _seq(node.nameParts() if cls == "UnresolvedAttribute"
+                    else node.name())
+    return []
+
+
+def _ident(name: str, what: str) -> str:
+    if not _IDENT_RE.fullmatch(name):
+        raise ValueError(
+            f"{what}: {name!r} is not a plain identifier ([A-Za-z_][A-Za-z0-9_]*)"
+        )
+    return name
+
+
+def _column(node, what: str) -> str:
+    """The one column a single-part attribute or field name names."""
+    parts = _parts(node)
+    if len(parts) != 1:
+        raise ValueError(f"{what}: expected a plain column, got {parts}")
+    return _ident(parts[0], what)
+
+
+def _literal(tok: str):
+    """A BETWEEN bound: int, float, or single-quoted string."""
+    if tok.startswith("'") and tok.endswith("'"):
+        return tok[1:-1]
+    try:
+        return int(tok)
+    except ValueError:
+        return float(tok)
+
+
+def _ts_literal(tok: str) -> float:
+    """A TIMESTAMP AS OF value -> epoch seconds: numeric literals pass
+    through; quoted date/datetime strings parse as ISO-8601 (Delta's
+    timestamp-travel syntax — '2026-01-01' / '2026-01-01 12:00:00'),
+    failing with a CLEAR error instead of float()'s opaque ValueError."""
+    v = _literal(tok)
+    if not isinstance(v, str):
+        return float(v)
+    from datetime import datetime
+
+    try:
+        return datetime.fromisoformat(v).timestamp()
+    except ValueError:
+        try:
+            return float(v)
+        except ValueError:
+            raise ValueError(
+                f"TIMESTAMP AS OF {tok}: expected an ISO-8601 date/"
+                "datetime string or epoch seconds"
+            ) from None
+
+
+def _between(text: str, cond):
+    """(col, lo, hi) of a whole-clause ``col BETWEEN lo AND hi`` over
+    numeric or quoted-string literal bounds (the range fast paths), else
+    None."""
+    if _cls(cond) != "UnresolvedFunction" or [
+        p.lower() for p in _seq(cond.nameParts())
+    ] != ["between"]:
         return None
-    out = {
-        "name": m.group("name"), "dtype": m.group("dtype"),
-        "notnull": False, "default": None, "identity": None,
-        "generated": None, "comment": None,
-    }
-    s, i, n = spec, m.end(), len(spec)
-    while True:
-        while i < n and s[i].isspace():
-            i += 1
-        if i >= n:
-            return out
-        mm = _CL_NOT_NULL_RE.match(s, i)
-        if mm:
-            if out["notnull"]:
-                return None
-            out["notnull"] = True
-            i = mm.end()
-            continue
-        mm = _CL_IDENTITY_RE.match(s, i)  # before _CL_GENERATED_RE:
-        if mm:                            # IDENTITY is the longer match
-            if out["identity"] is not None:
-                return None
-            out["identity"] = {
-                "start": int(mm.group("start") or 1),
-                "step": int(mm.group("step") or 1),
-            }
-            i = mm.end()
-            continue
-        mm = _CL_GENERATED_RE.match(s, i)
-        if mm:
-            if out["generated"] is not None:
-                return None
-            end = _scan_balanced(s, mm.end() - 1)
-            out["generated"] = s[mm.end():end - 1].strip()
-            i = end
-            continue
-        mm = _CL_COMMENT_RE.match(s, i)
-        if mm:
-            if out["comment"] is not None:
-                return None
-            out["comment"] = mm.group("c")
-            i = mm.end()
-            continue
-        mm = _CL_DEFAULT_RE.match(s, i)
-        if mm:
-            if out["default"] is not None:
-                return None
-            j = _scan_default_value(s, mm.end())
-            if j == mm.end():
-                return None
-            out["default"] = s[mm.end():j]
-            i = j
-            continue
+    args = _seq(cond.arguments())
+    if len(args) != 3 or len(_parts(args[0])) != 1 or not all(
+        _cls(a) in ("Literal", "UnaryMinus") for a in args[1:]
+    ):
         return None
+    try:
+        return (_parts(args[0])[0], *(_literal(_cut(text, a)) for a in args[1:]))
+    except ValueError:
+        return None
+
+
+def _assignments(text: str, assignments) -> dict:
+    """SET / INSERT VALUES assignments -> {col: expr text}; a ``t.``
+    qualifier on the target column drops."""
+    out = {}
+    for a in _seq(assignments):
+        parts = _parts(a.key())
+        if len(parts) == 2 and parts[0] == "t":
+            parts = parts[1:]
+        if len(parts) != 1:
+            raise ValueError(
+                f"unsupported SET assignment to {'.'.join(parts)!r}: "
+                "expected `col = expr` pairs"
+            )
+        out[_ident(parts[0], "SET assignment")] = _cut(text, a.value())
+    return out
+
+
+def _merge_keys(text: str, cond) -> list:
+    """MERGE ON -> key list: ``(k1, k2)`` / ``k`` or the equality form
+    ``t.k = s.k [AND t.j = s.j]`` (same name both sides — renaming joins
+    are outside the documented subset)."""
+    cls = _cls(cond)
+    if cls == "UnresolvedAttribute":
+        return [_column(cond, "MERGE ON")]
+    if cls == "CreateNamedStruct":
+        return [_column(v, "MERGE ON") for v in _seq(cond.valExprs())]
+
+    def eq(n) -> list:
+        if _cls(n) == "And":
+            return eq(n.left()) + eq(n.right())
+        if _cls(n) == "EqualTo":
+            lp, rp = _parts(n.left()), _parts(n.right())
+            if (len(lp) == 2 == len(rp) and lp[0] == "t" and rp[0] == "s"
+                    and lp[1].lower() == rp[1].lower()):
+                return [lp[1]]
+        raise ValueError(
+            f"MERGE ON clause {_cut(text, cond)!r}: expected a key list "
+            "or t.<k> = s.<k> equalities (same column name both sides)"
+        )
+
+    return eq(cond)
+
+
+def _partition_cols(partitioning) -> list:
+    """PARTITIONED BY (c, ...) as column names (transforms refuse)."""
+    cols = []
+    for t in _seq(partitioning):
+        refs = list(t.references())
+        if t.name() != "identity" or len(refs) != 1:
+            raise ValueError(
+                f"PARTITIONED BY {t.describe()}: only plain columns partition"
+            )
+        cols.append(_ident(".".join(refs[0].fieldNames()), "PARTITIONED BY"))
+    return cols
 
 
 def _render_sql_literal(v) -> str:
@@ -489,410 +578,66 @@ def _fold_default(spark: SparkSession, expr: str) -> "tuple[str, str | None]":
             "current_timestamp()) are allowed"
         )
     return _render_sql_literal(row["v"]), expr
-# SHALLOW CLONE (Delta's CREATE TABLE ... SHALLOW CLONE): a new table
-# whose first manifest references the source version's files by absolute
-# path — zero data copied (snapshot_clone; DVs/stats re-key correctly).
-_CLONE_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+SHALLOW\s+CLONE\s+"
-    r"(?P<src>[A-Za-z_]\w*)"
-    r"(?:\s+VERSION\s+AS\s+OF\s+(?P<version>\d+)"
-    r"|\s+TIMESTAMP\s+AS\s+OF\s+(?P<ts>'[^']+'))?"
-    r"\s+LOCATION\s+'(?P<path>[^']+)'\s*;?\s*$",
-    re.IGNORECASE,
-)
-_SHOW_PARTS_RE = re.compile(
-    r"^\s*SHOW\s+PARTITIONS\s+(?P<name>[A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-_SHOW_CREATE_RE = re.compile(
-    r"^\s*SHOW\s+CREATE\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-# Named views: the TEXT is stored and re-resolved against the tables'
-# CURRENT versions on every query (a view over a snapshot table never
-# goes stale); time-travel clauses inside the text pin as usual.
-_CREATE_VIEW_RE = re.compile(
-    r"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?VIEW\s+(?P<name>[A-Za-z_]\w*)"
-    r"\s+AS\s+(?P<query>.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_VIEW_RE = re.compile(
-    r"^\s*DROP\s+VIEW\s+(?P<ifex>IF\s+EXISTS\s+)?(?P<name>[A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-# --- DML over snapshot tables (the documented subset; each form routes
-# to the corresponding transactional library operation) -------------------
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<name>[A-Za-z_]\w*)\s*"
-    r"(?:\((?P<cols>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\)\s*)?"
-    r"(?P<query>(?:SELECT|VALUES|WITH|TABLE)\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_INSERT_OVERWRITE_RE = re.compile(
-    r"^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?(?P<name>[A-Za-z_]\w*)\s+"
-    r"(?P<query>(?:SELECT|VALUES|WITH|TABLE)\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_REPLACE_WHERE_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<name>[A-Za-z_]\w*)\s+REPLACE\s+WHERE\s+"
-    r"(?P<cond>.+?)\s+(?P<query>(?:SELECT|VALUES|WITH|TABLE)\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<name>[A-Za-z_]\w*)\s+WHERE\s+"
-    r"(?P<col>[A-Za-z_]\w*)\s+BETWEEN\s+(?P<lo>'[^']*'|\S+)\s+AND\s+"
-    r"(?P<hi>'[^']*'|\S+?)\s*;?\s*$",
-    re.IGNORECASE,
-)
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<name>[A-Za-z_]\w*)\s+SET\s+(?P<sets>.+?)\s+WHERE\s+"
-    r"(?P<col>[A-Za-z_]\w*)\s+BETWEEN\s+(?P<lo>'[^']*'|\S+)\s+AND\s+"
-    r"(?P<hi>'[^']*'|\S+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_MERGE_RE = re.compile(
-    r"^\s*MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?"
-    r"INTO\s+(?P<name>[A-Za-z_]\w*)\s+USING\s+"
-    r"(?P<src>[A-Za-z_]\w*|\(.+\))\s+ON\s+\(?\s*"
-    r"(?P<keys>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\)?\s*"
-    r"(?:WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*\s+"
-    r"WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*)?;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# Conditional MERGE (Delta's WHEN-clause form). The simple
-# UPDATE SET * / INSERT * statement matches _MERGE_RE above and routes to
-# snapshot_upsert; everything with AND-conditions, a DELETE arm, or
-# explicit SET assignments parses here and routes to snapshot_merge.
-_MERGE_COND_RE = re.compile(
-    r"^\s*MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?"
-    r"INTO\s+(?P<name>[A-Za-z_]\w*)(?:\s+(?:AS\s+)?t)?\s+USING\s+"
-    r"(?P<src>[A-Za-z_]\w*|\(.+?\))(?:\s+(?:AS\s+)?s)?\s+ON\s+(?P<on>.+?)\s+"
-    r"(?P<clauses>WHEN\s+(?:NOT\s+)?MATCHED\b.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_RE = re.compile(
-    r"WHEN\s+(?P<notm>NOT\s+)?MATCHED(?P<bysrc>\s+BY\s+SOURCE)?"
-    r"(?:\s+AND\s+(?P<cond>.+?))?\s+THEN\s+"
-    r"(?:UPDATE\s+SET\s+(?P<sets>.+?)|(?P<delete>DELETE)"
-    r"|(?P<insert>INSERT\s+\*"
-    r"|INSERT\s*\((?P<icols>[^)]+)\)\s*VALUES\s*\((?P<ivals>.+?)\)))"
-    r"\s*(?=WHEN\s+(?:NOT\s+)?MATCHED\b|;?\s*$)",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
-def _parse_merge_on(on: str) -> list:
-    """ON clause -> key list: either ``(k1, k2)`` / ``k1, k2`` or the
-    equality form ``t.k = s.k [AND t.j = s.j]`` (same name both sides —
-    renaming joins are outside the documented subset)."""
-    on = on.strip()
-    if re.fullmatch(r"\(?\s*[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*\s*\)?", on):
-        return [k.strip() for k in on.strip("() \t\n").split(",")]
-    keys = []
-    for part in re.split(r"\s+AND\s+", on, flags=re.IGNORECASE):
-        mm = re.fullmatch(
-            r"\(?\s*t\.([A-Za-z_]\w*)\s*=\s*s\.([A-Za-z_]\w*)\s*\)?",
-            part.strip(),
-        )
-        if not mm or mm.group(1).lower() != mm.group(2).lower():
-            raise ValueError(
-                f"MERGE ON clause {on!r}: expected a key list or "
-                "t.<k> = s.<k> equalities (same column name both sides)"
-            )
-        keys.append(mm.group(1))
-    return keys
-
-
-def _split_top_commas(s: str) -> list:
-    """Split on commas at top level only (outside parens and
-    single-quoted strings)."""
-    parts, buf = [], []
-    depth, in_str = 0, False
-    for ch in s:
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    parts.append("".join(buf))
-    return parts
-
-
-def _split_assignments(sets: str) -> dict:
-    """SET clause -> {col: expr}. Commas split only at top level (outside
-    parens and single-quoted strings), so ``SET v = greatest(a, b), w = 2``
-    parses correctly; a fragment without a top-level ``=`` raises a clear
-    error instead of an opaque unpack failure."""
-    parts = _split_top_commas(sets)
-    assignments = {}
-    for part in parts:
-        col, eq, expr = part.partition("=")
-        if not eq or not col.strip() or not re.fullmatch(
-            r"(?:t\.)?[A-Za-z_]\w*", col.strip()
-        ):
-            raise ValueError(
-                f"unsupported SET assignment {part.strip()!r}: expected "
-                "top-level comma-separated `col = expr` pairs"
-            )
-        col = col.strip()
-        assignments[col[2:] if col[:2] == "t." else col] = expr.strip()
-    return assignments
-
-
-_REORG_RE = re.compile(
-    r"^\s*REORG\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+APPLY\s*\(\s*PURGE\s*\)\s*;?\s*$",
-    re.IGNORECASE,
-)
-_OPTIMIZE_RE = re.compile(
-    r"^\s*OPTIMIZE\s+(?P<name>[A-Za-z_]\w*)"
-    r"(?:\s+WHERE\s+(?P<cond>.+?))?"
-    r"(?:\s+ZORDER\s+BY\s*\(\s*"
-    r"(?P<zcols>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\))?"
-    r"(?:\s+INTO\s+(?P<n>\d+)\s+FILES)?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DETAIL_RE = re.compile(
-    r"^\s*DESCRIBE\s+DETAIL\s+(?P<name>[A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-# DESCRIBE [TABLE] t: per-column name/type plus the DEFAULT / GENERATED
-# / IDENTITY decoration — the schema view DESCRIBE DETAIL (manifest
-# facts) and SHOW CREATE TABLE (round-trippable DDL) don't cover.
-_DESCRIBE_TABLE_RE = re.compile(
-    r"^\s*(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?(?P<name>[A-Za-z_]\w*)"
-    r"\s*;?\s*$",
-    re.IGNORECASE,
-)
-# TRUNCATE TABLE t / DELETE FROM t (no predicate): metadata-only
-# delete-all (the `$` anchor keeps predicate DELETEs on their routes).
-_TRUNCATE_RE = re.compile(
-    r"^\s*(?:TRUNCATE\s+TABLE\s+(?P<name>[A-Za-z_]\w*)"
-    r"|DELETE\s+FROM\s+(?P<name2>[A-Za-z_]\w*))\s*;?\s*$",
-    re.IGNORECASE,
-)
-_ALTER_CONSTRAINT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+"
-    r"(?:ADD\s+CONSTRAINT\s+(?P<cname>[A-Za-z_]\w*)\s+CHECK\s*\((?P<expr>.+)\)"
-    r"|DROP\s+CONSTRAINT\s+(?P<dname>[A-Za-z_]\w*))\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# Schema-evolution DDL. Rename/drop require column mapping; the route
-# auto-enables it (an idempotent metadata commit) so a user evolving a
-# curated table needs one statement, not a property dance.
-_ALTER_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+"
-    r"(?:RENAME\s+COLUMN\s+(?P<old>[A-Za-z_]\w*)\s+TO\s+(?P<new>[A-Za-z_]\w*)"
-    r"|DROP\s+COLUMN\s+(?P<drop>[A-Za-z_]\w*))\s*;?\s*$",
-    re.IGNORECASE,
-)
-# ADD COLUMN takes a FULL column spec (same clause grammar as CREATE
-# TABLE — DEFAULT incl. expressions, COMMENT, NOT NULL in any order);
-# the spec is parsed by _parse_col_spec, so nested parens in expression
-# defaults survive. GENERATED / IDENTITY refuse (Delta cannot add
-# either to an existing table); NOT NULL requires a DEFAULT (without
-# one, every pre-existing row would violate it immediately).
-_ADD_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+ADD\s+COLUMNS?\s+"
-    r"(?P<spec>.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ALTER_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+"
-    r"(?:SET\s+PARTITIONED\s+BY\s*\(\s*"
-    r"(?P<col>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\)"
-    r"|(?P<clear>CLEAR\s+PARTITIONING))\s*;?\s*$",
-    re.IGNORECASE,
-)
-# ALTER COLUMN c SET DEFAULT lit / DROP DEFAULT (Delta): changes the
-# WRITE default; the birth default keeps resolving pre-existing files.
-_ALTER_COL_DEFAULT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+ALTER\s+COLUMN\s+"
-    r"(?P<col>[A-Za-z_]\w*)\s+"
-    r"(?:SET\s+DEFAULT\s+(?P<default>.+?)"
-    r"|(?P<drop>DROP\s+DEFAULT))\s*;?\s*$",
-    re.IGNORECASE,
-)
-# ALTER COLUMN c SET/DROP NOT NULL (Delta): a reserved-name CHECK —
-# SET validates the standing data first (Delta refuses otherwise).
-_ALTER_NOT_NULL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+ALTER\s+COLUMN\s+"
-    r"(?P<col>[A-Za-z_]\w*)\s+(?:SET\s+NOT\s+NULL"
-    r"|(?P<drop>DROP\s+NOT\s+NULL))\s*;?\s*$",
-    re.IGNORECASE,
-)
-# SET/UNSET TBLPROPERTIES + SHOW TBLPROPERTIES (Delta): user key-value
-# metadata carried by the manifest, cloned and RESTOREd like the rest.
-_SET_TBLPROPS_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+SET\s+TBLPROPERTIES"
-    r"\s*\((?P<pairs>.+)\)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UNSET_TBLPROPS_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+UNSET\s+TBLPROPERTIES"
-    r"\s*(?:IF\s+EXISTS\s*)?\((?P<keys>.+)\)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_SHOW_TBLPROPS_RE = re.compile(
-    r"^\s*SHOW\s+TBLPROPERTIES\s+(?P<name>[A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-_TBLPROP_PAIR_RE = re.compile(
-    r"^\s*'(?P<key>(?:[^']|'')+)'\s*=\s*'(?P<val>(?:[^']|'')*)'\s*$"
-)
-# ALTER COLUMN c COMMENT 'txt': O(metadata) column documentation.
-_ALTER_COL_COMMENT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+ALTER\s+COLUMN\s+"
-    r"(?P<col>[A-Za-z_]\w*)\s+COMMENT\s+'(?P<comment>(?:[^']|'')*)'"
-    r"\s*;?\s*$",
-    re.IGNORECASE,
-)
-# ALTER COLUMN c TYPE <wider> (Delta's type-widening DDL): an O(1)
-# metadata commit — snapshot_widen_column stamps the widened type into
-# the types map (and the mapped schema), refusing narrowing/cross-chain.
-_ALTER_COL_TYPE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+ALTER\s+COLUMN\s+"
-    r"(?P<col>[A-Za-z_]\w*)\s+TYPE\s+(?P<dtype>[A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-# ALTER TABLE t SYNC IDENTITY (Delta): recompute identity high-water
-# marks from the stored values (post-RESTORE/clone repair).
-_SYNC_IDENTITY_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+SYNC\s+IDENTITY"
-    r"\s*;?\s*$",
-    re.IGNORECASE,
-)
-_BEGIN_RE = re.compile(
-    r"^\s*BEGIN(?:\s+TRANSACTION)?\s*;?\s*$", re.IGNORECASE
-)
-_COMMIT_TXN_RE = re.compile(r"^\s*COMMIT(?:\s+TRANSACTION)?\s*;?\s*$",
-                            re.IGNORECASE)
-_ROLLBACK_RE = re.compile(r"^\s*ROLLBACK(?:\s+TRANSACTION)?\s*;?\s*$",
-                          re.IGNORECASE)
-# general-predicate DML (tried after the BETWEEN fast paths): any WHERE
-# expression routes to snapshot_delete_where / snapshot_update_where,
-# which prune files from the predicate's conjunctive constraints
-_DELETE_WHERE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<name>[A-Za-z_]\w*)\s+WHERE\s+"
-    r"(?P<cond>.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UPDATE_WHERE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<name>[A-Za-z_]\w*)\s+SET\s+(?P<sets>.+?)\s+WHERE\s+"
-    r"(?P<cond>.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
-# batch change-data-feed table function (Delta's table_changes): each
-# reference rewrites to a temp view materialized from the manifest-aware
-# snapshot_change_feed (only CHANGED files are read)
-_TABLE_CHANGES_RE = re.compile(
-    r"\btable_changes\s*\(\s*'(?P<name>[A-Za-z_]\w*)'\s*,\s*"
-    r"(?P<v1>\d+)(?:\s*,\s*(?P<v2>\d+))?\s*\)",
-    re.IGNORECASE,
-)
-# the uncorrelated staging-key shape (`k IN (SELECT ...)`) as the WHOLE
-# clause — the form whose subquery bounds seed a file prune
-_IN_SUBQ_RE = re.compile(
-    r"^\s*(?P<col>[A-Za-z_]\w*)\s+IN\s*\(\s*(?P<sub>SELECT\b.+)\)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_COPY_INTO_RE = re.compile(
-    r"^\s*COPY\s+INTO\s+(?P<name>[A-Za-z_]\w*)\s+FROM\s+'(?P<src>[^']+)'\s+"
-    r"FILEFORMAT\s*=\s*(?P<fmt>[A-Za-z]+)"
-    r"(?:\s+FORMAT_OPTIONS\s*\((?P<opts>[^)]*)\))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_RESTORE_RE = re.compile(
-    r"^\s*RESTORE\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+"
-    r"(?:VERSION\s+AS\s+OF\s+(?P<version>\d+)"
-    r"|TIMESTAMP\s+AS\s+OF\s+(?P<ts>'[^']*'|[\d.]+))\s*;?\s*$",
-    re.IGNORECASE,
-)
-# SELECT-level time travel (Delta/Iceberg's most-used form): a registered
-# table name followed by VERSION AS OF n / TIMESTAMP AS OF '<iso>' inside
-# any plain-SQL statement. Rewritten to a version-pinned temp view before
-# delegation to spark.sql — the pinned view reads ONE resolved manifest,
-# so the result stays frozen across later appends.
-_TT_RE = re.compile(
-    r"\b(?P<name>[A-Za-z_]\w*)\s+"
-    r"(?:VERSION\s+AS\s+OF\s+(?P<version>\d+)"
-    r"|TIMESTAMP\s+AS\s+OF\s+(?P<ts>'[^']*'|[\d.]+))",
-    re.IGNORECASE,
-)
-_VACUUM_RE = re.compile(
-    r"^\s*VACUUM\s+(?P<name>[A-Za-z_]\w*)"
-    r"(?:\s+RETAIN\s+(?P<n>\d+)\s+VERSIONS)?"
-    r"(?:\s+(?P<dry>DRY\s+RUN))?\s*;?\s*$",
-    re.IGNORECASE,
-)
-_ANALYZE_RE = re.compile(
-    r"^\s*ANALYZE\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\s+COMPUTE\s+"
-    r"(?:STATISTICS|(?P<bloom>BLOOM\s+FILTERS))\s+FOR\s+COLUMNS\s*\(?\s*"
-    r"(?P<cols>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\)?\s*;?\s*$",
-    re.IGNORECASE,
-)
-_SHOW_RE = re.compile(
-    r"^\s*SHOW\s+(?P<what>TABLES|VIEWS)\s*;?\s*$", re.IGNORECASE
-)
-_HISTORY_RE = re.compile(
-    r"^\s*DESCRIBE\s+HISTORY\s+(?P<name>[A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-
-def _literal(tok: str):
-    """A BETWEEN bound: int, float, or single-quoted string."""
-    if tok.startswith("'") and tok.endswith("'"):
-        return tok[1:-1]
-    try:
-        return int(tok)
-    except ValueError:
-        return float(tok)
-
-
-def _ts_literal(tok: str) -> float:
-    """A TIMESTAMP AS OF value -> epoch seconds: numeric literals pass
-    through; quoted date/datetime strings parse as ISO-8601 (Delta's
-    timestamp-travel syntax — '2026-01-01' / '2026-01-01 12:00:00'),
-    failing with a CLEAR error instead of float()'s opaque ValueError."""
-    v = _literal(tok)
-    if not isinstance(v, str):
-        return float(v)
-    from datetime import datetime
-
-    try:
-        return datetime.fromisoformat(v).timestamp()
-    except ValueError:
-        try:
-            return float(v)
-        except ValueError:
-            raise ValueError(
-                f"TIMESTAMP AS OF {tok}: expected an ISO-8601 date/"
-                "datetime string or epoch seconds"
-            ) from None
 
 
 class SnapshotCatalog:
     """Session-scoped snapshot-table catalog: name -> (path, version).
 
-    ``sql()`` is the single entry point — DDL mutates the registry,
-    anything else re-registers every live table at its current version
-    and delegates to ``spark.sql``. The underlying DataSource must be
-    registered once per session (done lazily here)."""
+    ``sql()`` is the single entry point — the pattern table, then one
+    parse and a dispatch on the plan's node class; anything no route
+    takes re-registers every live table at its current version and runs
+    on ``spark.sql``. The underlying DataSource must be registered once
+    per session (done lazily here)."""
+
+    # plan node class -> route; a route returns NotImplemented when the
+    # statement is not on a registered snapshot table
+    _ROUTES = {
+        "DeleteFromTable": "_delete",
+        "UpdateTable": "_update",
+        "MergeIntoTable": "_merge",
+        "InsertIntoStatement": "_insert",
+        "OverwriteByExpression": "_insert",
+        "CreateTable": "_create",
+        "ReplaceTable": "_create",
+        "CreateTableAsSelect": "_create",
+        "ReplaceTableAsSelect": "_create",
+        "DropTable": "_drop_table",
+        "CreateView": "_create_view",
+        "DropView": "_drop_view",
+        "TruncateTable": "_truncate",
+        "AddColumns": "_add_columns",
+        "RenameColumn": "_rename_column",
+        "DropColumns": "_drop_columns",
+        "AlterColumns": "_alter_column",
+        "AddCheckConstraint": "_add_constraint",
+        "DropConstraint": "_drop_constraint",
+        "ShowTableProperties": "_show_properties",
+        "ShowPartitions": "_show_partitions",
+        "ShowCreateTable": "_show_create",
+        "DescribeRelation": "_describe_table",
+        "ShowTables": "_show_tables",
+        "ShowViews": "_show_tables",
+    }
+    _PATTERNS = (
+        (_TXN_RE, "_transaction"),
+        (_CLONE_RE, "_clone"),
+        (_CREATE_PINNED_RE, "_create_pinned"),
+        (_PARTITIONING_RE, "_partitioning"),
+        (_SYNC_IDENTITY_RE, "_sync_identity"),
+        (_OPTIMIZE_RE, "_optimize"),
+        (_REORG_RE, "_reorg"),
+        (_VACUUM_RE, "_vacuum"),
+        (_RESTORE_RE, "_restore"),
+        (_COPY_INTO_RE, "_copy_into"),
+        (_ANALYZE_RE, "_analyze"),
+        (_TBLPROPS_RE, "_properties"),
+        (_DESCRIBE_RE, "_describe_meta"),
+        (_MERGE_KEYS_RE, "_merge_keys_only"),
+    )
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
+        self._parser = spark._jsparkSession.sessionState().sqlParser()
         self._tables: dict[str, tuple[str, int | None]] = {}
         self._views: dict[str, str] = {}  # named views, creation order
         self._txn = None  # open BEGIN TRANSACTION, if any
@@ -927,873 +672,350 @@ class SnapshotCatalog:
 
     # -- query -------------------------------------------------------------
     def sql(self, text: str) -> DataFrame | None:
-        if _BEGIN_RE.match(text):
-            from .snapshots import SnapshotTransaction
-
-            if self._txn is not None:
-                raise RuntimeError("a transaction is already open")
-            self._txn = SnapshotTransaction()
-            self._txn.__enter__()
-            return None
-        if _COMMIT_TXN_RE.match(text):
-            if self._txn is None:
-                raise RuntimeError("COMMIT without an open transaction")
-            txn, self._txn = self._txn, None
-            txn.__exit__(None, None, None)  # all-or-nothing swap; raises
-            # SnapshotCommitConflict on abort (staged manifests orphan)
-            return None
-        if _ROLLBACK_RE.match(text):
-            if self._txn is None:
-                raise RuntimeError("ROLLBACK without an open transaction")
-            txn, self._txn = self._txn, None
-            txn.__exit__(RuntimeError, RuntimeError("rollback"), None)
-            return None
-        m = _CTAS_RE.match(text)
-        if m:
-            from .snapshots import snapshot_write
-
-            name, replace = m.group("name"), bool(m.group("replace"))
-            if self._txn is not None:
-                raise RuntimeError(
-                    "CTAS inside an open transaction is not supported "
-                    "(the new table's pointer would not exist until "
-                    "COMMIT); COMMIT first"
-                )
-            if name in self._tables and not replace:
-                raise ValueError(
-                    f"table {name!r} already registered "
-                    "(use CREATE OR REPLACE TABLE)"
-                )
-            path = m.group("opath") or m.group("lpath")
-            if (Path(path) / "_latest").exists() and not replace:
-                raise ValueError(
-                    f"a snapshot table already exists at {path} "
-                    "(use CREATE OR REPLACE TABLE)"
-                )
-            part = m.group("part1") or m.group("part2")
-            snapshot_write(
-                self._fresh_sql(m.group("query")), path,
-                partition_by=[c.strip() for c in part.split(",")]
-                if part else None,
-            )
-            self.create_table(name, path)
-            return None
-        m = _CREATE_EMPTY_RE.match(text)
-        if m:
-            from .snapshots import snapshot_create_table
-
-            name = m.group("name")
-            if name in self._tables:
-                raise ValueError(f"table {name!r} already registered")
-            cols = []
-            for spec in _split_top_commas(m.group("cols")):
-                cm = _parse_col_spec(spec)
-                if not cm:
-                    raise ValueError(
-                        f"CREATE TABLE: cannot parse column spec {spec!r}"
-                    )
-                # DEFAULT/GENERATED/IDENTITY mutual exclusion is
-                # validated once, in snapshot_create_table
-                default, wdefault = cm["default"], None
-                if default is not None:
-                    # expression DEFAULTs fold to a birth literal NOW,
-                    # the raw expression re-evaluates at each write
-                    default, wdefault = _fold_default(self.spark, default)
-                comment = cm["comment"]
-                cols.append(
-                    (cm["name"], cm["dtype"].lower(), default,
-                     cm["generated"], cm["identity"], cm["notnull"],
-                     comment.replace("''", "'") if comment else None,
-                     wdefault)
-                )
-            part = m.group("part1") or m.group("part2")
-            if part:
-                pcols = [c.strip() for c in part.split(",")]
-                declared = {c[0].lower() for c in cols}
-                unknown = [c for c in pcols if c.lower() not in declared]
-                if unknown:
-                    raise ValueError(
-                        f"PARTITIONED BY names undeclared column(s) "
-                        f"{unknown}"
-                    )
-            snapshot_create_table(m.group("opath") or m.group("lpath"), cols)
-            if part:
-                from .snapshots import snapshot_set_partitioning
-
-                snapshot_set_partitioning(
-                    m.group("opath") or m.group("lpath"), pcols
-                )
-            if m.group("props"):
-                # trailing TBLPROPERTIES: re-executable SHOW CREATE —
-                # delta.constraints.* keys re-apply as CHECKs, the rest
-                # land as table properties
-                from .snapshots import (
-                    snapshot_set_constraint,
-                    snapshot_set_properties,
-                )
-
-                tpath = m.group("opath") or m.group("lpath")
-                plain: dict = {}
-                for pair in _split_top_commas(m.group("props")):
-                    pm_ = _TBLPROP_PAIR_RE.match(pair)
-                    if not pm_:
-                        raise ValueError(
-                            f"CREATE TABLE: cannot parse TBLPROPERTIES "
-                            f"pair {pair!r}"
-                        )
-                    key = pm_.group("key").replace("''", "'")
-                    val = pm_.group("val").replace("''", "'")
-                    if key.startswith("delta.constraints."):
-                        snapshot_set_constraint(
-                            self.spark, tpath,
-                            key[len("delta.constraints."):], val,
-                        )
-                    else:
-                        plain[key] = val
-                if plain:
-                    snapshot_set_properties(tpath, plain)
-            self.create_table(name, m.group("opath") or m.group("lpath"))
-            return None
-        m = _CLONE_RE.match(text)
-        if m:
-            from .snapshots import snapshot_clone
-
-            if self._txn is not None:
-                raise RuntimeError(
-                    "SHALLOW CLONE inside an open transaction is not "
-                    "supported (the clone's pointer would not exist "
-                    "until COMMIT); COMMIT first"
-                )
-            name, src = m.group("name"), m.group("src")
-            if name in self._tables:
-                raise ValueError(f"table {name!r} already registered")
-            if src not in self._tables:
-                raise ValueError(f"unknown source table {src!r}")
-            spath, spin = self._tables[src]
-            v, ts = m.group("version"), m.group("ts")
-            snapshot_clone(
-                spath, m.group("path"),
-                # an unqualified clone of a version-pinned registration
-                # clones the PINNED version (what the name reads as)
-                version=int(v) if v is not None else spin,
-                as_of_ts=_ts_literal(ts) if ts else None,
-            )
-            self.create_table(name, m.group("path"))
-            return None
-        m = _CREATE_RE.match(text)
-        if m:
-            if m.group("name") in self._tables and not m.group("replace"):
-                raise ValueError(
-                    f"table {m.group('name')!r} already registered "
-                    "(use CREATE OR REPLACE TABLE)"
-                )
-            v = m.group("version")
-            self.create_table(
-                m.group("name"),
-                m.group("opath") or m.group("lpath"),
-                int(v) if v is not None else None,
-            )
-            return None
-        m = _DROP_RE.match(text)
-        if m and m.group("name") in self._tables:
-            self.drop_table(m.group("name"))
-            return None
-        m = _CREATE_VIEW_RE.match(text)
-        if m:
-            name = m.group("name")
-            if name in self._tables:
-                raise ValueError(f"{name!r} is a registered TABLE")
-            if name in self._views and not m.group("replace"):
-                raise ValueError(
-                    f"view {name!r} already exists "
-                    "(use CREATE OR REPLACE VIEW)"
-                )
-            q = m.group("query").rstrip().rstrip(";")
-            prior = self._views.get(name)
-            self._views[name] = q
-            try:
-                self._refresh()  # materialize now — a bad query fails HERE
-            except Exception:
-                # a broken body must not poison later refreshes
-                if prior is None:
-                    del self._views[name]
-                else:
-                    self._views[name] = prior
+        for pattern, route in self._PATTERNS:
+            m = pattern.match(text)
+            if m:
+                out = getattr(self, route)(m)
+                if out is not NotImplemented:
+                    return out
+                break
+        try:
+            plan = self._parser.parsePlan(text)
+        except ParseException as e:
+            words = re.findall(r"\w+", text)
+            if not (set(words) & set(self._tables)
+                    or "snapshot" in {w.lower() for w in words}):
                 raise
-            return None
-        m = _DROP_VIEW_RE.match(text)
-        if m:
-            name = m.group("name")
-            if name not in self._views:
-                if m.group("ifex"):
-                    return None
-                raise KeyError(f"no view named {name!r}")
-            del self._views[name]
-            self.spark.catalog.dropTempView(name)
-            return None
-        handled = self._dml(text)
-        if handled is not NotImplemented:
-            return handled
+            hint = _REFUSALS.get(e.getCondition()) or _REFUSALS.get(
+                words[0].upper() if words else "", "cannot parse statement"
+            )
+            raise ValueError(f"{hint}: {str(e).strip()}") from None
+        route = self._ROUTES.get(_cls(plan))
+        out = getattr(self, route)(text, plan) if route else NotImplemented
+        if out is not NotImplemented:
+            return out
+        # an ALTER TABLE on a REGISTERED table that no route took refuses
+        # HERE: on spark.sql it would hit the temp VIEW registration
+        # ("expects a table but is a view")
+        kids = _seq(plan.children())
+        if (kids and _cls(kids[0]) == "UnresolvedTable"
+                and kids[0].commandName().startswith("ALTER TABLE")
+                and self._registered(kids[0])):
+            raise ValueError(
+                "unsupported ALTER TABLE statement for snapshot table "
+                f"{self._registered(kids[0])!r}: {text.strip()[:120]!r} — "
+                "see the SnapshotCatalog docstring for the supported DDL "
+                "surface"
+            )
         # plain SQL: re-point every registered view at the CURRENT version
         # (O(manifest) each — catalog freshness without staleness bugs)
         self._refresh()
-        return self.spark.sql(
-            self._table_changes_views(self._time_travel_views(text))
-        )
+        return self.spark.sql(self._sql(text, _walk(plan)))
 
-    # -- DML ---------------------------------------------------------------
-    def _dml(self, text: str):
-        """Route the documented DML subset to the library's transactional
-        operations (the commits keep file pruning, deletion vectors, type
-        widening, and optimistic concurrency — this is syntax, not a new
-        engine). Returns NotImplemented when the text is not DML."""
-        from .snapshots import (
-            snapshot_delete_range_mor,
-            snapshot_history,
-            snapshot_restore,
-            snapshot_update_range_mor,
-            snapshot_upsert,
-            snapshot_vacuum,
-        )
+    def _registered(self, node) -> str | None:
+        """The registered table a relation node names (through a
+        SubqueryAlias), else None."""
+        while _cls(node) == "SubqueryAlias":
+            node = node.child()
+        parts = _parts(node)
+        return parts[0] if len(parts) == 1 and parts[0] in self._tables \
+            else None
 
-        m = _REPLACE_WHERE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_replace_where
-
-            path = self._writable(m.group("name"))
-            df = self._values_named(
-                self._fresh_sql(m.group("query")), m.group("query"),
-                m.group("name"),
-            )
-            cond, _ = self._dml_condition(m.group("cond"))
-            snapshot_replace_where(self.spark, path, cond, df)
-            return None
-        m = _INSERT_OVERWRITE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_replace_where
-
-            path = self._writable(m.group("name"))
-            df = self._values_named(
-                self._fresh_sql(m.group("query")), m.group("query"),
-                m.group("name"),
-            )
-            snapshot_replace_where(self.spark, path, None, df)
-            return None
-        m = _INSERT_RE.match(text)
-        if m and m.group("name") in self._tables:
-            path = self._writable(m.group("name"))
-            df = self._fresh_sql(m.group("query"))
-            if m.group("cols"):
-                # explicit column list: the source maps to it by
-                # position; unlisted columns simply stay absent from the
-                # written files (typed NULLs / DEFAULTs / GENERATED
-                # expressions resolve them — narrow-append semantics)
-                cols = [c.strip() for c in m.group("cols").split(",")]
-                if len(df.columns) != len(cols):
-                    raise ValueError(
-                        f"INSERT INTO (cols): {len(cols)} columns listed "
-                        f"but the source has {len(df.columns)}"
-                    )
-                df = df.toDF(*cols)
-            else:
-                df = self._values_named(
-                    df, m.group("query"), m.group("name"),
-                )
-            from .snapshots import snapshot_append
-
-            snapshot_append(df, path)
-            return None
-        m = _MERGE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            path = self._writable(m.group("name"))
-            src = m.group("src")
-            df = self._fresh_sql(
-                src[1:-1] if src.startswith("(") else f"SELECT * FROM {src}"
-            )
-            keys = [k.strip() for k in m.group("keys").split(",")]
-            snapshot_upsert(
-                self.spark, df, path, keys,
-                auto_evolve_schema=bool(m.group("evolve")),
-            )
-            return None
-        m = _MERGE_COND_RE.match(text)
-        if m and m.group("name") in self._tables:
-            self._merge_conditional(m)
-            return None
-        m = _DELETE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            path = self._writable(m.group("name"))
-            snapshot_delete_range_mor(
-                self.spark, path, m.group("col"),
-                _literal(m.group("lo")), _literal(m.group("hi")),
-            )
-            return None
-        m = _UPDATE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            path = self._writable(m.group("name"))
-            assignments = _split_assignments(m.group("sets"))
-            snapshot_update_range_mor(
-                self.spark, path, m.group("col"),
-                _literal(m.group("lo")), _literal(m.group("hi")),
-                assignments,
-            )
-            return None
-        # general-predicate DML: any WHERE expression (the BETWEEN fast
-        # paths above prune by the range's region; these recover pruning
-        # from the region the predicate text implies — `k = 5` still
-        # touches only overlapping files)
-        m = _DELETE_WHERE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_delete_where
-
-            path = self._writable(m.group("name"))
-            cond, prune = self._dml_condition(m.group("cond"))
-            snapshot_delete_where(
-                self.spark, path, cond, _prune_region=prune,
-                table_alias=m.group("name"),
-            )
-            return None
-        m = _UPDATE_WHERE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_update_where
-
-            path = self._writable(m.group("name"))
-            cond, prune = self._dml_condition(m.group("cond"))
-            snapshot_update_where(
-                self.spark, path, cond,
-                _split_assignments(m.group("sets")),
-                _prune_region=prune,
-                table_alias=m.group("name"),
-            )
-            return None
-        m = _ALTER_CONSTRAINT_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import (
-                snapshot_drop_constraint,
-                snapshot_set_constraint,
-            )
-
-            path = self._writable(m.group("name"))
-            if m.group("cname"):
-                snapshot_set_constraint(
-                    self.spark, path, m.group("cname"), m.group("expr")
-                )
-            else:
-                snapshot_drop_constraint(path, m.group("dname"))
-            return None
-        m = _ADD_COL_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_enable_column_mapping
-
-            path = self._writable(m.group("name"))
-            snapshot_enable_column_mapping(self.spark, path)  # idempotent
-            specs = m.group("spec").strip()
-            if specs.startswith("(") and _scan_balanced(specs, 0) == len(specs):
-                specs = specs[1:-1].strip()  # optional surrounding parens
-            from .snapshots import _read_manifest, current_version
-
-            sch = _read_manifest(
-                Path(path), current_version(path)
-            ).get("schema") or {}
-            live = {c["name"].lower() for c in sch.get("cols", [])}
-            parsed = []
-            for spec in _split_top_commas(specs):
-                cm = _parse_col_spec(spec)
-                if not cm:
-                    raise ValueError(
-                        f"ADD COLUMN: cannot parse column spec {spec!r}"
-                    )
-                # every refusal fires HERE, before any spec commits —
-                # a multi-column statement must not leave the table
-                # with half its columns when a later spec is invalid.
-                # That includes the dynamic checks: the DEFAULT fold
-                # (stored on the spec so _add_one_column never
-                # re-folds), a NOT NULL whose expression default folds
-                # to NULL, and name collisions against the live schema
-                # AND within the statement itself.
-                self._validate_add_column(cm)
-                if cm["default"] is not None:
-                    cm["_folded"] = _fold_default(self.spark, cm["default"])
-                    if cm["notnull"] and (
-                        cm["_folded"][0].strip().lower() == "null"
-                    ):
-                        raise ValueError(
-                            "ADD COLUMN ... NOT NULL requires a "
-                            "non-NULL DEFAULT: the expression default "
-                            f"{cm['default']!r} folds to NULL, so every "
-                            "pre-existing row would violate immediately"
-                        )
-                key = cm["name"].lower()
-                if key in live:
-                    raise ValueError(
-                        f"ADD COLUMN: column {cm['name']!r} already "
-                        "exists"
-                    )
-                live.add(key)  # catches duplicates WITHIN the statement
-                parsed.append(cm)
-            for cm in parsed:
-                self._add_one_column(path, cm)
-            return None
-        m = _ALTER_COL_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import (
-                snapshot_drop_column,
-                snapshot_enable_column_mapping,
-                snapshot_rename_column,
-            )
-
-            path = self._writable(m.group("name"))
-            snapshot_enable_column_mapping(self.spark, path)  # idempotent
-            if m.group("old"):
-                snapshot_rename_column(path, m.group("old"), m.group("new"))
-            else:
-                snapshot_drop_column(path, m.group("drop"))
-            return None
-        m = _ALTER_COL_DEFAULT_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import (
-                snapshot_enable_column_mapping,
-                snapshot_set_column_default,
-            )
-
-            path = self._writable(m.group("name"))
-            snapshot_enable_column_mapping(self.spark, path)  # idempotent
-            default = m.group("default")
-            if default is not None:
-                # the write default stores the RAW expression (literal
-                # or constant-foldable; re-evaluated per write batch) —
-                # folding here only validates it is row-free
-                _fold_default(self.spark, default)
-            snapshot_set_column_default(path, m.group("col"), default)
-            return None
-        m = _SYNC_IDENTITY_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_sync_identity
-
-            path = self._writable(m.group("name"))
-            snapshot_sync_identity(self.spark, path)
-            return None
-        m = _SET_TBLPROPS_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_set_properties
-
-            path = self._writable(m.group("name"))
-            props = {}
-            for pair in _split_top_commas(m.group("pairs")):
-                pm = _TBLPROP_PAIR_RE.match(pair)
-                if not pm:
-                    raise ValueError(
-                        f"SET TBLPROPERTIES: cannot parse pair {pair!r} "
-                        "(expected 'key' = 'value')"
-                    )
-                props[pm.group("key").replace("''", "'")] = (
-                    pm.group("val").replace("''", "'")
-                )
-            snapshot_set_properties(path, props)
-            return None
-        m = _UNSET_TBLPROPS_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_unset_properties
-
-            path = self._writable(m.group("name"))
-            keys = []
-            for k in _split_top_commas(m.group("keys")):
-                km = re.match(r"^\s*'(?P<key>(?:[^']|'')+)'\s*$", k)
-                if not km:
-                    raise ValueError(
-                        f"UNSET TBLPROPERTIES: cannot parse key {k!r} "
-                        "(expected 'key')"
-                    )
-                keys.append(km.group("key").replace("''", "'"))
-            snapshot_unset_properties(path, keys)
-            return None
-        m = _SHOW_TBLPROPS_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import _read_manifest, current_version
-
-            path, pin = self._tables[m.group("name")]
-            v = pin if pin is not None else current_version(path)
-            props = _read_manifest(Path(path), v).get("properties") or {}
-            return self.spark.createDataFrame(
-                [(k, props[k]) for k in sorted(props)] or [],
-                "key string, value string",
-            )
-        m = _ALTER_COL_COMMENT_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import (
-                snapshot_enable_column_mapping,
-                snapshot_set_column_comment,
-            )
-
-            path = self._writable(m.group("name"))
-            snapshot_enable_column_mapping(self.spark, path)  # idempotent
-            snapshot_set_column_comment(
-                path, m.group("col"),
-                m.group("comment").replace("''", "'"),
-            )
-            return None
-        m = _ALTER_COL_TYPE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_widen_column
-
-            path = self._writable(m.group("name"))
-            snapshot_widen_column(
-                self.spark, path, m.group("col"), m.group("dtype")
-            )
-            return None
-        m = _ALTER_NOT_NULL_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import (
-                snapshot_drop_constraint,
-                snapshot_set_constraint,
-            )
-
-            path = self._writable(m.group("name"))
-            col = m.group("col")
-            if m.group("drop"):
-                snapshot_drop_constraint(path, f"__not_null_{col}")
-            else:
-                snapshot_set_constraint(
-                    self.spark, path, f"__not_null_{col}",
-                    f"{col} IS NOT NULL",
-                )
-            return None
-        m = _ALTER_PART_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_set_partitioning
-
-            path = self._writable(m.group("name"))
-            snapshot_set_partitioning(
-                path,
-                None if m.group("clear")
-                else [c.strip() for c in m.group("col").split(",")],
-            )
-            return None
-        m = _COPY_INTO_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_copy_into
-
-            path = self._writable(m.group("name"))
-            opts = {}
-            for pair in _split_top_commas(m.group("opts") or ""):
-                if not pair.strip():
+    def _sql(self, text: str, nodes: list, start: int = 0,
+             stop: int | None = None) -> str:
+        """``text[start:stop]`` with every time-travel relation and
+        ``table_changes(...)`` call among ``nodes`` that names a
+        registered table re-pointed at a pinned temp view. Cost:
+        O(manifest) per reference — never a data read."""
+        stop = len(text) if stop is None else stop
+        edits = []
+        for n in nodes:
+            cls = _cls(n)
+            if cls == "RelationTimeTravel":
+                name = self._registered(n.relation())
+                if name is not None:
+                    edits.append((_start(text, n), _stop(text, n),
+                                  self._pin_version(text, name, n)))
+            elif cls == "UnresolvedTableValuedFunction" and [
+                p.lower() for p in _seq(n.name())
+            ] == ["table_changes"]:
+                args = _seq(n.functionArgs())
+                try:
+                    name, *vs = [_literal(_cut(text, a)) for a in args]
+                except ValueError:
                     continue
-                k, eq, v = pair.partition("=")
-                if not eq:
-                    raise ValueError(
-                        f"COPY INTO: bad FORMAT_OPTIONS pair {pair.strip()!r}"
-                    )
-                opts[k.strip().strip("'\"")] = v.strip().strip("'\"")
-            snapshot_copy_into(
-                self.spark, m.group("src"), path,
-                fileformat=m.group("fmt").lower(),
-                format_options=opts or None,
-            )
-            return None
-        m = _RESTORE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            path = self._writable(m.group("name"))
-            if m.group("version") is not None:
-                snapshot_restore(path, int(m.group("version")))
-            else:
-                snapshot_restore(path, as_of_ts=_ts_literal(m.group("ts")))
-            return None
-        m = _VACUUM_RE.match(text)
-        if m and m.group("name") in self._tables:
+                if (name in self._tables and 1 <= len(vs) <= 2
+                        and all(isinstance(v, int) for v in vs)):
+                    edits.append((
+                        _start(text, n), text.index(")", _stop(text, args[-1])) + 1,
+                        self._pin_changes(name, *vs),
+                    ))
+        out, pos = [], start
+        for a, b, view in sorted(e for e in edits if start <= e[0] < stop):
+            out += [text[pos:a], view]
+            pos = b
+        return "".join(out) + text[pos:stop]
+
+    def _pin_version(self, text: str, name: str, tt) -> str:
+        """A ``<name> VERSION AS OF n`` / ``TIMESTAMP AS OF ts`` relation
+        as a version-pinned temp view over ONE resolved manifest."""
+        path, _ = self._tables[name]
+        version, ts = _opt(tt.version()), _opt(tt.timestamp())
+        v = int(version) if version is not None else \
+            S.snapshot_version_as_of(path, _ts_literal(_cut(text, ts)))
+        view = f"{name}__asof_v{v}"
+        (
+            self.spark.read.format("snapshot")
+            .option("path", path)
+            .option("version", str(v))
+            .load()
+            .createOrReplaceTempView(view)
+        )
+        return view
+
+    def _pin_changes(self, name: str, v1: int, v2: int | None = None) -> str:
+        """A ``table_changes('t', v1[, v2])`` call (Delta's batch CDF SQL
+        surface) as a temp view over :func:`snapshot_change_feed` — the
+        manifest-aware net change set between the versions (v2 defaults
+        to the current tip); only files that CHANGED are read."""
+        path, _ = self._tables[name]
+        view = f"{name}__changes_{v1}_{v2 if v2 is not None else 'tip'}"
+        S.snapshot_change_feed(self.spark, path, v1, v2) \
+            .createOrReplaceTempView(view)
+        return view
+
+    def _pin_query(self, query: str) -> str:
+        """A stored query (a view body, a pattern-table source) with its
+        time-travel and table_changes references pinned."""
+        return self._sql(query, _walk(self._parser.parsePlan(query)))
+
+    def _query_sql(self, text: str, node) -> str:
+        """A source query's text, pinned; a bare relation (``USING src``,
+        ``TABLE src``) reads as ``SELECT * FROM`` it."""
+        sql = self._sql(
+            text, _walk(node), _start(text, node), _stop(text, node)
+        )
+        return f"SELECT * FROM {sql}" if _cls(node) in _RELATIONS else sql
+
+    def _fresh_sql(self, text: str, node) -> DataFrame:
+        """Run a source query with every registered view re-pointed at its
+        table's current version (INSERT/MERGE/CTAS sources see fresh
+        data); its time-travel clauses pin like any query's."""
+        self._refresh()
+        return self.spark.sql(self._query_sql(text, node))
+
+    # -- the pattern table's routes -----------------------------------------
+    def _transaction(self, m: "re.Match"):
+        verb = m.group("verb").upper()
+        if verb == "BEGIN":
             if self._txn is not None:
-                raise RuntimeError(
-                    "VACUUM inside an open transaction would anchor "
-                    "retention on the staged version; COMMIT first"
-                )
-            path, _ = self._tables[m.group("name")]
-            n = m.group("n")
-            if m.group("dry"):
-                rels = snapshot_vacuum(
-                    path, keep_versions=int(n) if n else 1, dry_run=True
-                )
-                return self.spark.createDataFrame(
-                    [(r,) for r in rels] or [], "path string"
-                )
-            snapshot_vacuum(path, keep_versions=int(n) if n else 1)
+                raise RuntimeError("a transaction is already open")
+            self._txn = S.SnapshotTransaction()
+            self._txn.__enter__()
             return None
-        m = _REORG_RE.match(text)
-        if m and m.group("name") in self._tables:
-            if self._txn is not None:
-                raise RuntimeError(
-                    "REORG inside an open transaction is not supported; "
-                    "COMMIT first"
-                )
-            from .snapshots import snapshot_purge_dv
+        if self._txn is None:
+            raise RuntimeError(f"{verb} without an open transaction")
+        txn, self._txn = self._txn, None
+        if verb == "COMMIT":
+            txn.__exit__(None, None, None)  # all-or-nothing swap; raises
+            # SnapshotCommitConflict on abort (staged manifests orphan)
+        else:
+            txn.__exit__(RuntimeError, RuntimeError("rollback"), None)
+        return None
 
-            path = self._writable(m.group("name"))
-            snapshot_purge_dv(self.spark, path)
-            return None
-        m = _OPTIMIZE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            if self._txn is not None:
-                raise RuntimeError(
-                    "OPTIMIZE inside an open transaction is not "
-                    "supported; COMMIT first"
-                )
-            from .snapshots import (
-                snapshot_compact,
-                snapshot_compact_where,
-                snapshot_zorder_compact_n,
+    def _clone(self, m: "re.Match"):
+        """SHALLOW CLONE: a new table whose first manifest references the
+        source version's files by absolute path — zero data copied."""
+        if self._txn is not None:
+            raise RuntimeError(
+                "SHALLOW CLONE inside an open transaction is not "
+                "supported (the clone's pointer would not exist "
+                "until COMMIT); COMMIT first"
+            )
+        name, src = m.group("name"), m.group("src")
+        if name in self._tables:
+            raise ValueError(f"table {name!r} already registered")
+        if src not in self._tables:
+            raise ValueError(f"unknown source table {src!r}")
+        spath, spin = self._tables[src]
+        v, ts = m.group("version"), m.group("ts")
+        S.snapshot_clone(
+            spath, m.group("path"),
+            # an unqualified clone of a version-pinned registration
+            # clones the PINNED version (what the name reads as)
+            version=int(v) if v is not None else spin,
+            as_of_ts=_ts_literal(ts) if ts else None,
+        )
+        self.create_table(name, m.group("path"))
+        return None
+
+    def _create_pinned(self, m: "re.Match"):
+        name = m.group("name")
+        if name in self._tables and not m.group("replace"):
+            raise ValueError(
+                f"table {name!r} already registered "
+                "(use CREATE OR REPLACE TABLE)"
+            )
+        self.create_table(
+            name, m.group("opath") or m.group("lpath"), int(m.group("version"))
+        )
+        return None
+
+    def _partitioning(self, m: "re.Match"):
+        if m.group("name") not in self._tables:
+            return NotImplemented
+        S.snapshot_set_partitioning(
+            self._writable(m.group("name")),
+            None if m.group("clear")
+            else [c.strip() for c in m.group("cols").split(",")],
+        )
+        return None
+
+    def _sync_identity(self, m: "re.Match"):
+        if m.group("name") not in self._tables:
+            return NotImplemented
+        S.snapshot_sync_identity(self.spark, self._writable(m.group("name")))
+        return None
+
+    def _no_txn(self, what: str) -> None:
+        if self._txn is not None:
+            raise RuntimeError(
+                f"{what} inside an open transaction is not supported; "
+                "COMMIT first"
             )
 
-            path = self._writable(m.group("name"))
-            n = int(m.group("n")) if m.group("n") else None
-            if m.group("cond"):
-                if m.group("zcols"):
-                    raise ValueError(
-                        "OPTIMIZE WHERE does not compose with ZORDER BY "
-                        "(z-ordering is a whole-layout property)"
-                    )
-                snapshot_compact_where(
-                    self.spark, path, m.group("cond"),
-                    target_files=n if n else 1,
-                )
-            elif m.group("zcols"):
-                snapshot_zorder_compact_n(
-                    self.spark, path,
-                    [c.strip() for c in m.group("zcols").split(",")],
-                    **({"n_files": n} if n else {}),
-                )
-            else:
-                snapshot_compact(
-                    self.spark, path, target_files=n if n else 1
-                )
-            return None
-        m = _DETAIL_RE.match(text)
-        if m and m.group("name") in self._tables:
-            import json as _json
-
-            from .snapshots import _read_manifest, current_version
-
-            path, version = self._tables[m.group("name")]
-            v = current_version(path) if version is None else version
-            mf = _read_manifest(Path(path), v)
-            spec = mf.get("partitioning")
-            bspec = mf.get("bucketing")
-            return self.spark.createDataFrame(
-                [(
-                    m.group("name"), str(path), v,
-                    len(mf.get("files", [])),
-                    ",".join(spec["cols"]) if spec else None,
-                    _json.dumps(bspec) if bspec else None,
-                    _json.dumps(mf.get("types")) if mf.get("types") else None,
-                    _json.dumps(mf.get("constraints"))
-                    if mf.get("constraints") else None,
-                    mf.get("schema") is not None,
-                    sum(int(dv[0]) for dv in (mf.get("dv") or {}).values()),
-                )],
-                "name string, location string, version long, n_files long, "
-                "partitioning string, bucketing string, widened_types string, "
-                "check_constraints string, column_mapping boolean, "
-                "dv_deleted_rows long",
-            )
-        m = _DESCRIBE_TABLE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import _read_manifest, current_version
-
-            name = m.group("name")
-            path, pin = self._tables[name]
-            v = pin if pin is not None else current_version(path)
-            man = _read_manifest(Path(path), v)
-            scols = (man.get("schema") or {}).get("cols", [])
-            nn = {
-                cn[len("__not_null_"):]
-                for cn in (man.get("constraints") or {})
-                if cn.startswith("__not_null_")
-            }
-            reader = self.spark.read.format("snapshot").option(
-                "path", str(path)
-            ).option("version", str(v))
-            meta = {c["name"]: c for c in scols}
-            rows = []
-            for f in reader.load().schema.fields:
-                c = meta.get(f.name, {})
-                if c.get("identity"):
-                    info = (
-                        "GENERATED ALWAYS AS IDENTITY (START WITH "
-                        f"{c['identity']['start']} INCREMENT BY "
-                        f"{c['identity']['step']})"
-                    )
-                elif c.get("generated") is not None:
-                    info = f"GENERATED ALWAYS AS ({c['generated']})"
-                else:
-                    wd = c.get("wdefault")
-                    d = (wd if wd != "NULL" else None) if wd is not None \
-                        else c.get("default")
-                    info = f"DEFAULT {d}" if d is not None else None
-                if f.name in nn:
-                    info = f"NOT NULL {info}" if info else "NOT NULL"
-                rows.append((
-                    f.name, f.dataType.simpleString(), info,
-                    c.get("comment"),
-                ))
-            return self.spark.createDataFrame(
-                rows,
-                "col_name string, data_type string, info string, "
-                "comment string",
-            )
-        m = _TRUNCATE_RE.match(text)
-        if m and (m.group("name") or m.group("name2")) in self._tables:
-            from .snapshots import snapshot_truncate
-
-            path = self._writable(m.group("name") or m.group("name2"))
-            snapshot_truncate(path)
-            return None
-        m = _ANALYZE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import snapshot_analyze, snapshot_analyze_blooms
-
-            path = self._writable(m.group("name"))
-            fn = snapshot_analyze_blooms if m.group("bloom") else snapshot_analyze
-            fn(
-                self.spark, path,
-                [c.strip() for c in m.group("cols").split(",")],
-            )
-            return None
-        m = _SHOW_PARTS_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import _read_manifest, current_version
-
-            name = m.group("name")
-            path, pin = self._tables[name]
-            v = pin if pin is not None else current_version(path)
-            spec = _read_manifest(path, v).get("partitioning") or {}
-            cols = list(spec.get("cols") or [])
-            if not cols:
+    def _optimize(self, m: "re.Match"):
+        if m.group("name") not in self._tables:
+            return NotImplemented
+        self._no_txn("OPTIMIZE")
+        path = self._writable(m.group("name"))
+        n = int(m.group("n")) if m.group("n") else None
+        if m.group("cond"):
+            if m.group("zcols"):
                 raise ValueError(
-                    f"SHOW PARTITIONS: table {name!r} is not partitioned"
+                    "OPTIMIZE WHERE does not compose with ZORDER BY "
+                    "(z-ordering is a whole-layout property)"
                 )
-            # live partition value tuples: a distributed DISTINCT over
-            # the spec columns only (column-pruned scan; post-evolution
-            # files resolve it from their point stats at the footer)
-            self._refresh()
-            return self.spark.sql(
-                f"SELECT DISTINCT {', '.join(cols)} FROM {name} "
-                f"ORDER BY {', '.join(cols)}"
+            S.snapshot_compact_where(
+                self.spark, path, m.group("cond"), target_files=n or 1
             )
-        m = _SHOW_CREATE_RE.match(text)
-        if m and m.group("name") in self._tables:
-            from .snapshots import _read_manifest, current_version
+        elif m.group("zcols"):
+            S.snapshot_zorder_compact_n(
+                self.spark, path,
+                [c.strip() for c in m.group("zcols").split(",")],
+                **({"n_files": n} if n else {}),
+            )
+        else:
+            S.snapshot_compact(self.spark, path, target_files=n or 1)
+        return None
 
-            name = m.group("name")
-            path, pin = self._tables[name]
-            v = pin if pin is not None else current_version(path)
-            man = _read_manifest(path, v)
-            reader = self.spark.read.format("snapshot").option(
-                "path", str(path)
-            ).option("version", str(v))
-            fields = reader.load().schema.fields
-            scols = (man.get("schema") or {}).get("cols", [])
-            # the CURRENT write default (ALTER COLUMN SET DEFAULT wins
-            # over the birth default; the DROP DEFAULT sentinel hides
-            # the clause entirely)
-            dflt = {}
-            for c in scols:
-                wd = c.get("wdefault")
-                if wd is not None:
-                    if wd != "NULL":
-                        dflt[c["name"]] = wd
-                elif c.get("default") is not None:
-                    dflt[c["name"]] = c["default"]
-            gen = {
-                c["name"]: c["generated"] for c in scols
-                if c.get("generated") is not None
-            }
-            ident = {
-                c["name"]: c["identity"] for c in scols
-                if c.get("identity") is not None
-            }
-            cmnt = {
-                c["name"]: c["comment"] for c in scols
-                if c.get("comment") is not None
-            }
-            nn = {
-                cn[len("__not_null_"):]
-                for cn in (man.get("constraints") or {})
-                if cn.startswith("__not_null_")
-            }
-            lines = [f"CREATE TABLE {name} ("]
-            lines.append(",\n".join(
-                f"  {f.name} {f.dataType.simpleString().upper()}"
-                + (" NOT NULL" if f.name in nn else "")
-                + (f" DEFAULT {dflt[f.name]}" if f.name in dflt else "")
-                + (f" GENERATED ALWAYS AS ({gen[f.name]})"
-                   if f.name in gen else "")
-                + (
-                    " GENERATED ALWAYS AS IDENTITY (START WITH "
-                    f"{ident[f.name]['start']} INCREMENT BY "
-                    f"{ident[f.name]['step']})"
-                    if f.name in ident else ""
-                )
-                + (
-                    " COMMENT '{}'".format(
-                        cmnt[f.name].replace("'", "''")
-                    )
-                    if f.name in cmnt else ""
-                )
-                for f in fields
-            ))
-            lines.append(") USING snapshot")
-            spec = (man.get("partitioning") or {}).get("cols")
-            if spec:
-                lines.append(f"PARTITIONED BY ({', '.join(spec)})")
-            b = man.get("bucketing")
-            if b:
-                lines.append(
-                    f"CLUSTERED BY ({b['col']}) INTO {b['n']} BUCKETS"
-                )
-            lines.append(f"LOCATION '{path}'")
-            cons = man.get("constraints") or {}
-            user_props = man.get("properties") or {}
-            props = [
-                f"  'delta.constraints.{cn}' = '{cons[cn]}'"
-                for cn in sorted(cons)
-                if not cn.startswith("__not_null_")  # rendered inline
-            ] + [
-                "  '{}' = '{}'".format(
-                    k.replace("'", "''"), user_props[k].replace("'", "''")
-                )
-                for k in sorted(user_props)
-            ]
-            if props:
-                lines.append(
-                    "TBLPROPERTIES (\n" + ",\n".join(props) + "\n)"
-                )
-            return self.spark.createDataFrame(
-                [("\n".join(lines),)], "createtab_stmt string"
-            )
-        m = _SHOW_RE.match(text)
-        if m:
-            from .snapshots import current_version
+    def _reorg(self, m: "re.Match"):
+        if m.group("name") not in self._tables:
+            return NotImplemented
+        self._no_txn("REORG")
+        S.snapshot_purge_dv(self.spark, self._writable(m.group("name")))
+        return None
 
-            if m.group("what").upper() == "TABLES":
-                rows = [
-                    (
-                        name, str(path), version,
-                        current_version(path) if version is None else version,
-                    )
-                    for name, (path, version) in sorted(self._tables.items())
-                ]
-                return self.spark.createDataFrame(
-                    rows or [],
-                    "name string, location string, pinned_version long, "
-                    "current_version long",
-                )
-            rows = [
-                (name, q) for name, q in sorted(self._views.items())
-            ]
-            return self.spark.createDataFrame(
-                rows or [], "name string, definition string"
+    def _vacuum(self, m: "re.Match"):
+        if m.group("name") not in self._tables:
+            return NotImplemented
+        if self._txn is not None:
+            raise RuntimeError(
+                "VACUUM inside an open transaction would anchor "
+                "retention on the staged version; COMMIT first"
             )
-        m = _HISTORY_RE.match(text)
-        if m and m.group("name") in self._tables:
-            path, _ = self._tables[m.group("name")]
-            rows = snapshot_history(path)
+        path, _ = self._tables[m.group("name")]
+        keep = int(m.group("n")) if m.group("n") else 1
+        if m.group("dry"):
+            rels = S.snapshot_vacuum(path, keep_versions=keep, dry_run=True)
+            return self.spark.createDataFrame(
+                [(r,) for r in rels] or [], "path string"
+            )
+        S.snapshot_vacuum(path, keep_versions=keep)
+        return None
+
+    def _restore(self, m: "re.Match"):
+        if m.group("name") not in self._tables:
+            return NotImplemented
+        path = self._writable(m.group("name"))
+        if m.group("version") is not None:
+            S.snapshot_restore(path, int(m.group("version")))
+        else:
+            S.snapshot_restore(path, as_of_ts=_ts_literal(m.group("ts")))
+        return None
+
+    def _copy_into(self, m: "re.Match"):
+        """COPY INTO: file-granular idempotent load — reruns skip files
+        already ingested (the ledger commits atomically with the rows)."""
+        if m.group("name") not in self._tables:
+            return NotImplemented
+        path = self._writable(m.group("name"))
+        opts = {}
+        for pair in (m.group("opts") or "").split(","):
+            if not pair.strip():
+                continue
+            k, eq, v = pair.partition("=")
+            if not eq:
+                raise ValueError(
+                    f"COPY INTO: bad FORMAT_OPTIONS pair {pair.strip()!r}"
+                )
+            opts[k.strip().strip("'\"")] = v.strip().strip("'\"")
+        S.snapshot_copy_into(
+            self.spark, m.group("src"), path,
+            fileformat=m.group("fmt").lower(),
+            format_options=opts or None,
+        )
+        return None
+
+    def _analyze(self, m: "re.Match"):
+        """ANALYZE: metadata-only stats / bloom backfill — retrofits file
+        pruning onto stats-less tables."""
+        if m.group("name") not in self._tables:
+            return NotImplemented
+        fn = S.snapshot_analyze_blooms if m.group("bloom") else S.snapshot_analyze
+        fn(
+            self.spark, self._writable(m.group("name")),
+            [c.strip() for c in m.group("cols").split(",")],
+        )
+        return None
+
+    def _properties(self, m: "re.Match"):
+        """SET / UNSET TBLPROPERTIES: user key-value metadata carried by
+        every commit, inherited by clones, reverted by RESTORE. Keys and
+        values are quoted strings ('' escapes a quote)."""
+        if m.group("name") not in self._tables:
+            return NotImplemented
+        path = self._writable(m.group("name"))
+        verb, items = m.group("verb").upper(), m.group("items")
+        what, form = ("pair", "'key' = 'value'") if verb == "SET" \
+            else ("key", "'key'")
+        props, pos = {}, 0
+        while pos < len(items) or not props:
+            p = _PROP_RE.match(items, pos)
+            if not p or (p.group("val") is None) == (verb == "SET"):
+                raise ValueError(
+                    f"{verb} TBLPROPERTIES: cannot parse {what} "
+                    f"{items[pos:].strip()!r} (expected {form})"
+                )
+            props[p.group("key").replace("''", "'")] = (
+                (p.group("val") or "").replace("''", "'")
+            )
+            pos = p.end()
+        if verb == "SET":
+            S.snapshot_set_properties(path, props)
+        else:
+            S.snapshot_unset_properties(path, list(props))
+        return None
+
+    def _describe_meta(self, m: "re.Match"):
+        """DESCRIBE HISTORY (the commit log) / DESCRIBE DETAIL (version,
+        files, partitioning, bucketing, widened types, constraints,
+        column mapping — manifest-only)."""
+        name = m.group("name")
+        if name not in self._tables:
+            return NotImplemented
+        path, pin = self._tables[name]
+        if m.group("what").upper() == "HISTORY":
             return self.spark.createDataFrame(
                 [
                     (
@@ -1801,41 +1023,174 @@ class SnapshotCatalog:
                         float(r["ts"]) if r["ts"] is not None else None,
                         r["n_files"],
                     )
-                    for r in rows
+                    for r in S.snapshot_history(path)
                 ],
                 "version long, parent long, op string, ts double, n_files long",
             )
-        # ALTER TABLE on a REGISTERED snapshot table that no handler
-        # above recognized must refuse HERE: falling through to
-        # spark.sql would hit the temp VIEW registration and produce a
-        # baffling "expects a table but is a view" error (or, worse,
-        # some future Spark version might silently alter the view).
-        m = re.match(
-            r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_]\w*)\b", text,
-            re.IGNORECASE,
+        v = S.current_version(path) if pin is None else pin
+        mf = S._read_manifest(Path(path), v)
+        spec = mf.get("partitioning")
+        bspec = mf.get("bucketing")
+        return self.spark.createDataFrame(
+            [(
+                name, str(path), v,
+                len(mf.get("files", [])),
+                ",".join(spec["cols"]) if spec else None,
+                json.dumps(bspec) if bspec else None,
+                json.dumps(mf.get("types")) if mf.get("types") else None,
+                json.dumps(mf.get("constraints"))
+                if mf.get("constraints") else None,
+                mf.get("schema") is not None,
+                sum(int(dv[0]) for dv in (mf.get("dv") or {}).values()),
+            )],
+            "name string, location string, version long, n_files long, "
+            "partitioning string, bucketing string, widened_types string, "
+            "check_constraints string, column_mapping boolean, "
+            "dv_deleted_rows long",
         )
-        if m and m.group("name") in self._tables:
-            raise ValueError(
-                f"unsupported ALTER TABLE statement for snapshot table "
-                f"{m.group('name')!r}: {text.strip()[:120]!r} — see the "
-                "SnapshotCatalog docstring for the supported DDL surface"
-            )
-        return NotImplemented
 
-    def _merge_conditional(self, m: "re.Match") -> None:
-        """Execute a parsed conditional MERGE (Delta's WHEN-clause form)
-        through :func:`snapshot_merge`. The clause list must be fully
-        consumed by the documented grammar — anything else raises rather
-        than silently dropping an arm."""
-        from .snapshots import snapshot_merge
-
+    def _merge_keys_only(self, m: "re.Match"):
+        """MERGE ... ON (k, ...) with no WHEN clause: a keyed upsert."""
+        if m.group("name") not in self._tables:
+            return NotImplemented
         path = self._writable(m.group("name"))
         src = m.group("src")
-        df = self._fresh_sql(
+        self._refresh()
+        df = self.spark.sql(self._pin_query(
             src[1:-1] if src.startswith("(") else f"SELECT * FROM {src}"
+        ))
+        S.snapshot_upsert(
+            self.spark, df, path, [k.strip() for k in m.group("keys").split(",")],
+            auto_evolve_schema=bool(m.group("evolve")),
         )
-        keys = _parse_merge_on(m.group("on"))
-        clauses = m.group("clauses")
+        return None
+
+    # -- DML routes ----------------------------------------------------------
+    def _delete(self, text: str, plan):
+        name = self._registered(plan.table())
+        if name is None:
+            return NotImplemented
+        path = self._writable(name)
+        cond = plan.condition()
+        start = _start(text, cond)
+        if start is None or start < _stop(text, plan.table()):
+            # no WHERE (or WHERE true): the parser's shared TRUE literal
+            S.snapshot_truncate(path)
+            return None
+        between = _between(text, cond)
+        if between:
+            S.snapshot_delete_range_mor(self.spark, path, *between)
+            return None
+        # general predicates prune by the region the predicate implies
+        # (`k = 5` still touches only overlapping files)
+        cond, prune = self._dml_condition(text, cond)
+        S.snapshot_delete_where(
+            self.spark, path, cond, _prune_region=prune, table_alias=name,
+        )
+        return None
+
+    def _update(self, text: str, plan):
+        name = self._registered(plan.table())
+        cond = _opt(plan.condition())
+        if name is None or cond is None:
+            return NotImplemented
+        path = self._writable(name)
+        sets = _assignments(text, plan.assignments())
+        between = _between(text, cond)
+        if between:
+            S.snapshot_update_range_mor(self.spark, path, *between, sets)
+            return None
+        cond, prune = self._dml_condition(text, cond)
+        S.snapshot_update_where(
+            self.spark, path, cond, sets, _prune_region=prune,
+            table_alias=name,
+        )
+        return None
+
+    def _insert(self, text: str, plan):
+        """INSERT INTO / INSERT OVERWRITE / INSERT INTO ... REPLACE WHERE."""
+        name = self._registered(plan.table())
+        if name is None:
+            return NotImplemented
+        if _cls(plan) == "OverwriteByExpression":  # REPLACE WHERE
+            path = self._writable(name)
+            df = self._values_named(self._fresh_sql(text, plan.query()), name)
+            cond, _ = self._dml_condition(text, plan.deleteExpr())
+            S.snapshot_replace_where(self.spark, path, cond, df)
+            return None
+        cols = _seq(plan.userSpecifiedCols())
+        if (plan.partitionSpec().nonEmpty() or plan.byName()
+                or (plan.overwrite() and cols)):
+            return NotImplemented
+        path = self._writable(name)
+        df = self._fresh_sql(text, plan.query())
+        if plan.overwrite():
+            S.snapshot_replace_where(
+                self.spark, path, None, self._values_named(df, name)
+            )
+            return None
+        if cols:
+            # explicit column list: the source maps to it by position;
+            # unlisted columns stay absent from the written files (typed
+            # NULLs / DEFAULTs / GENERATED expressions resolve them)
+            if len(df.columns) != len(cols):
+                raise ValueError(
+                    f"INSERT INTO (cols): {len(cols)} columns listed "
+                    f"but the source has {len(df.columns)}"
+                )
+            df = df.toDF(*[_ident(c, "INSERT INTO") for c in cols])
+        else:
+            df = self._values_named(df, name)
+        S.snapshot_append(df, path)
+        return None
+
+    def _merge(self, text: str, plan):
+        """MERGE: the keyed SET * / INSERT * form routes to
+        :func:`snapshot_upsert`; every other arm list to
+        :func:`snapshot_merge`. Aliases are ``t`` (target) and ``s``
+        (source)."""
+        target = plan.targetTable()
+        name = self._registered(target)
+        if name is None:
+            return NotImplemented
+        path = self._writable(name)
+        source = plan.sourceTable()
+        aliases = [
+            n.alias().lower() if _cls(n) == "SubqueryAlias" else None
+            for n in (target, source)
+        ]
+        if aliases[0] not in (None, "t") or aliases[1] not in (None, "s"):
+            raise ValueError(
+                "MERGE: alias the target as t and the source as s "
+                "(conditions and assignments read t.<col> / s.<col>)"
+            )
+        if _cls(source) == "SubqueryAlias":
+            source = source.child()
+        df = self._fresh_sql(text, source)
+        on = plan.mergeCondition()
+        keys = _merge_keys(text, on)
+        evolve = bool(plan.withSchemaEvolution())
+        arms = [_seq(plan.matchedActions()), _seq(plan.notMatchedActions()),
+                _seq(plan.notMatchedBySourceActions())]
+        star = [[_cls(a) for a in arm] for arm in arms] == [
+            ["UpdateStarAction"], ["InsertStarAction"], []
+        ] and all(_opt(arm[0].condition()) is None for arm in arms[:2])
+        if (star and aliases == [None, None]
+                and _cls(on) in ("UnresolvedAttribute", "CreateNamedStruct")):
+            S.snapshot_upsert(
+                self.spark, df, path, keys, auto_evolve_schema=evolve
+            )
+            return None
+        S.snapshot_merge(
+            self.spark, df, path, keys, auto_evolve_schema=evolve,
+            **self._merge_arms(text, name, df, evolve, *arms),
+        )
+        return None
+
+    def _merge_arms(self, text: str, name: str, df: DataFrame, evolve: bool,
+                    matched: list, not_matched: list, by_source: list) -> dict:
+        """snapshot_merge's keyword arguments from the parsed WHEN arms.
+        Duplicate arms refuse rather than silently dropping one."""
         kw: dict = {
             "matched_update": None,
             "matched_update_condition": None,
@@ -1849,316 +1204,621 @@ class SnapshotCatalog:
             "not_matched_by_source_update": None,
             "not_matched_by_source_update_condition": None,
         }
-        pos = 0
-        matched_order: list[str] = []  # 'update'/'delete' in written order
-        nmbs_order: list[str] = []     # same, for the BY SOURCE arms
-        for w in _WHEN_RE.finditer(clauses):
-            if clauses[pos : w.start()].strip():
-                raise ValueError(
-                    f"MERGE: unparsed clause text {clauses[pos:w.start()]!r}"
-                )
-            pos = w.end()
-            cond = w.group("cond")
-            if w.group("bysrc"):
-                if not w.group("notm") or w.group("insert"):
-                    raise ValueError(
-                        "MERGE: BY SOURCE supports WHEN NOT MATCHED BY "
-                        "SOURCE THEN DELETE / UPDATE SET (no INSERT — "
-                        "there is no source row)"
-                    )
-                if w.group("delete"):
-                    if kw["not_matched_by_source_delete"]:
-                        raise ValueError(
-                            "MERGE: duplicate WHEN NOT MATCHED BY SOURCE "
-                            "DELETE arm"
-                        )
-                    kw["not_matched_by_source_delete"] = True
-                    kw["not_matched_by_source_condition"] = cond
-                    nmbs_order.append("delete")
-                else:
-                    if kw["not_matched_by_source_update"] is not None:
-                        raise ValueError(
-                            "MERGE: duplicate WHEN NOT MATCHED BY SOURCE "
-                            "UPDATE arm"
-                        )
-                    if w.group("sets").strip() == "*":
-                        raise ValueError(
-                            "MERGE: BY SOURCE UPDATE SET * is undefined "
-                            "(no source row) — list t.<col> assignments"
-                        )
-                    kw["not_matched_by_source_update"] = (
-                        _split_assignments(w.group("sets"))
-                    )
-                    kw["not_matched_by_source_update_condition"] = cond
-                    nmbs_order.append("update")
-                continue
-            if w.group("insert"):
-                if not w.group("notm"):
-                    raise ValueError("MERGE: INSERT requires WHEN NOT MATCHED")
-                if kw["not_matched_insert"]:
-                    raise ValueError("MERGE: duplicate WHEN NOT MATCHED arm")
-                kw["not_matched_insert"] = True
-                kw["not_matched_condition"] = cond
-                if w.group("icols"):
-                    cols = [c.strip() for c in w.group("icols").split(",")]
-                    cols = [c[2:] if c[:2] == "t." else c for c in cols]
-                    vals = [v.strip() for v in
-                            _split_top_commas(w.group("ivals"))]
-                    if len(cols) != len(vals):
-                        raise ValueError(
-                            f"MERGE INSERT: {len(cols)} columns but "
-                            f"{len(vals)} values"
-                        )
-                    kw["not_matched_insert_values"] = dict(zip(cols, vals))
-                continue
-            if w.group("notm"):
-                raise ValueError(
-                    "MERGE: WHEN NOT MATCHED supports only INSERT * or "
-                    "INSERT (cols) VALUES (exprs)"
-                )
-            if w.group("delete"):
+
+        def cond_of(a):
+            c = _opt(a.condition())
+            return _cut(text, c) if c is not None else None
+
+        for a in matched:
+            if _cls(a) == "DeleteAction":
                 if kw["matched_delete"]:
                     raise ValueError("MERGE: duplicate WHEN MATCHED DELETE arm")
                 kw["matched_delete"] = True
-                kw["matched_delete_condition"] = cond
-                matched_order.append("delete")
-            else:
-                if kw["matched_update"] is not None:
-                    raise ValueError("MERGE: duplicate WHEN MATCHED UPDATE arm")
-                sets = w.group("sets").strip()
-                if sets == "*":
-                    cols = self.spark.sql(
-                        f"SELECT * FROM {m.group('name')} LIMIT 0"
-                    ).columns
-                    if m.group("evolve"):
-                        # WITH SCHEMA EVOLUTION: SET * also assigns the
-                        # source's NEW columns (they auto-add to the
-                        # target inside snapshot_merge); target-only
-                        # columns the source lacks carry unchanged
-                        # instead of failing to resolve s.<col>
-                        cols = [c for c in cols if c in set(df.columns)]
-                        cols += [c for c in df.columns if c not in cols]
-                    kw["matched_update"] = {c: f"s.{c}" for c in cols}
-                else:
-                    kw["matched_update"] = _split_assignments(sets)
-                kw["matched_update_condition"] = cond
-                matched_order.append("update")
-        if clauses[pos:].strip():
-            raise ValueError(
-                f"MERGE: unparsed clause text {clauses[pos:]!r}"
-            )
-        if len(matched_order) == 2:
-            # Delta evaluates WHEN MATCHED clauses in WRITTEN order, and
-            # requires every clause but the last to carry a condition.
-            # snapshot_merge's engine precedence is UPDATE-then-DELETE, so
-            # a written DELETE-before-UPDATE translates by guarding the
-            # update arm with NOT(delete_condition) (NULL-safe: a NULL
-            # WHEN condition is false).
-            first = matched_order[0]
-            first_cond = kw[f"matched_{first}_condition"]
-            if first_cond is None:
-                raise ValueError(
-                    "MERGE: when there are multiple WHEN MATCHED clauses, "
-                    "each clause except the last must have an AND condition"
-                )
-            if first == "delete":
-                neg = f"NOT coalesce(({first_cond}), false)"
-                uc = kw["matched_update_condition"]
-                kw["matched_update_condition"] = (
-                    f"({neg}) AND ({uc})" if uc is not None else neg
-                )
-        if len(nmbs_order) == 2:
-            # same written-order translation for the BY SOURCE pair
-            # (engine precedence is UPDATE-then-DELETE there too)
-            first = nmbs_order[0]
-            first_cond = kw[
-                "not_matched_by_source_condition" if first == "delete"
-                else "not_matched_by_source_update_condition"
-            ]
-            if first_cond is None:
-                raise ValueError(
-                    "MERGE: when there are multiple WHEN NOT MATCHED BY "
-                    "SOURCE clauses, each clause except the last must "
-                    "have an AND condition"
-                )
-            if first == "delete":
-                neg = f"NOT coalesce(({first_cond}), false)"
-                uc = kw["not_matched_by_source_update_condition"]
-                kw["not_matched_by_source_update_condition"] = (
-                    f"({neg}) AND ({uc})" if uc is not None else neg
-                )
-        snapshot_merge(
-            self.spark, df, path, keys,
-            auto_evolve_schema=bool(m.group("evolve")), **kw
-        )
-
-    def _time_travel_views(self, text: str) -> str:
-        """Rewrite ``<table> VERSION AS OF n`` / ``TIMESTAMP AS OF ts``
-        references to version-pinned temp views (SELECT-level time
-        travel). Only registered snapshot table names rewrite; anything
-        else passes through untouched. Cost: O(manifest) per distinct
-        (table, version) — never a data read."""
-        from .snapshots import snapshot_version_as_of
-
-        def _pin(mm: "re.Match") -> str:
-            name = mm.group("name")
-            if name not in self._tables:
-                return mm.group(0)
-            path, _ = self._tables[name]
-            if mm.group("version") is not None:
-                v = int(mm.group("version"))
-            else:
-                v = snapshot_version_as_of(
-                    path, _ts_literal(mm.group("ts"))
-                )
-            view = f"{name}__asof_v{v}"
-            (
-                self.spark.read.format("snapshot")
-                .option("path", path)
-                .option("version", str(v))
-                .load()
-                .createOrReplaceTempView(view)
-            )
-            return view
-
-        # substitute only matches that START outside single-quoted
-        # string literals — a literal containing "<table> VERSION AS OF
-        # n" is data, not a table reference (a TIMESTAMP AS OF match
-        # starts at the table name, outside its own quoted literal, so
-        # that form still rewrites)
-        # small state machine, not find-pairing: SQL escapes a quote
-        # inside a literal by doubling it (''), so 'it''s' is ONE
-        # literal — naive pairing would flip parity at the inner ''
-        # and mis-span everything after it
-        spans = []
-        i, n = 0, len(text)
-        while i < n:
-            if text[i] != "'":
-                i += 1
+                kw["matched_delete_condition"] = cond_of(a)
                 continue
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2  # escaped quote: still inside the literal
-                        continue
-                    break
-                j += 1
-            spans.append((i, min(j + 1, n)))
-            i = j + 1
-
-        def _sub(mm: "re.Match") -> str:
-            if any(a <= mm.start() < b for a, b in spans):
-                return mm.group(0)
-            return _pin(mm)
-
-        return _TT_RE.sub(_sub, text)
-
-    def _writable(self, name: str) -> str:
-        path, version = self._tables[name]
-        if version is not None:
-            raise ValueError(
-                f"table {name!r} is pinned to VERSION AS OF {version} — "
-                "a time-travel registration is read-only"
+            if kw["matched_update"] is not None:
+                raise ValueError("MERGE: duplicate WHEN MATCHED UPDATE arm")
+            if _cls(a) == "UpdateStarAction":
+                cols = self.spark.sql(f"SELECT * FROM {name} LIMIT 0").columns
+                if evolve:
+                    # WITH SCHEMA EVOLUTION: SET * also assigns the
+                    # source's NEW columns (they auto-add to the target
+                    # inside snapshot_merge); target-only columns the
+                    # source lacks carry unchanged
+                    cols = [c for c in cols if c in set(df.columns)]
+                    cols += [c for c in df.columns if c not in cols]
+                kw["matched_update"] = {c: f"s.{c}" for c in cols}
+            else:
+                kw["matched_update"] = _assignments(text, a.assignments())
+            kw["matched_update_condition"] = cond_of(a)
+        for a in not_matched:
+            if kw["not_matched_insert"]:
+                raise ValueError("MERGE: duplicate WHEN NOT MATCHED arm")
+            kw["not_matched_insert"] = True
+            kw["not_matched_condition"] = cond_of(a)
+            if _cls(a) == "InsertAction":
+                kw["not_matched_insert_values"] = _assignments(
+                    text, a.assignments()
+                )
+        for a in by_source:
+            if _cls(a) == "DeleteAction":
+                if kw["not_matched_by_source_delete"]:
+                    raise ValueError(
+                        "MERGE: duplicate WHEN NOT MATCHED BY SOURCE "
+                        "DELETE arm"
+                    )
+                kw["not_matched_by_source_delete"] = True
+                kw["not_matched_by_source_condition"] = cond_of(a)
+                continue
+            if kw["not_matched_by_source_update"] is not None:
+                raise ValueError(
+                    "MERGE: duplicate WHEN NOT MATCHED BY SOURCE UPDATE arm"
+                )
+            kw["not_matched_by_source_update"] = _assignments(
+                text, a.assignments()
             )
-        return path
-
-    @staticmethod
-    def _validate_add_column(cm: dict) -> None:
-        """Refusals for one ADD COLUMN spec, run for EVERY spec before
-        ANY commits (per-spec application is multi-commit, so all
-        statically-decidable failures must fire first — a multi-column
-        statement must not leave half its columns behind). GENERATED /
-        IDENTITY refuse (Delta cannot add either to an existing table);
-        NOT NULL requires a non-NULL DEFAULT (without one, every
-        pre-existing row reads NULL and violates immediately)."""
-        if cm["generated"] is not None or cm["identity"] is not None:
-            raise ValueError(
-                "ADD COLUMN cannot add a GENERATED ALWAYS AS or "
-                "IDENTITY column to an existing table (declare them "
-                "in CREATE TABLE — Delta has the same restriction)"
-            )
-        if cm["notnull"] and (
-            cm["default"] is None or cm["default"].strip().lower() == "null"
+            kw["not_matched_by_source_update_condition"] = cond_of(a)
+        # Delta evaluates a WHEN MATCHED (or BY SOURCE) pair in WRITTEN
+        # order; snapshot_merge's precedence is UPDATE-then-DELETE, so a
+        # written DELETE-before-UPDATE guards the update arm with
+        # NOT(delete condition) (NULL-safe: a NULL WHEN condition is
+        # false). The parser already refused an unconditional first arm.
+        for arms, dcond, ucond in (
+            (matched, "matched_delete_condition",
+             "matched_update_condition"),
+            (by_source, "not_matched_by_source_condition",
+             "not_matched_by_source_update_condition"),
         ):
+            if len(arms) == 2 and _cls(arms[0]) == "DeleteAction":
+                neg = f"NOT coalesce(({kw[dcond]}), false)"
+                uc = kw[ucond]
+                kw[ucond] = f"({neg}) AND ({uc})" if uc is not None else neg
+        return kw
+
+    def _dml_condition(self, text: str, cond):
+        """Prepare a DML WHERE clause: plain predicates pass through as
+        written (the engine extracts their conjunctive constraints for
+        file pruning). A clause containing a subquery — ``k IN (SELECT
+        ...)``, ``[NOT] EXISTS (...)``, the reference's staging-key delete
+        shape as SQL — first re-points every registered view (the
+        subquery must see CURRENT table state, and may time-travel), then
+        rides the engine's evaluation unchanged: Spark plans the subquery
+        as a semi/anti-join inside the row-match filter, so the
+        delete/update stays fully distributed. For the uncorrelated
+        whole-clause ``col IN (SELECT ...)`` form, the subquery's min/max
+        additionally seed a stats-interval file prune — the text-
+        constraint extractor is rightly blind to subqueries, but a
+        key-set delete only ever touches files overlapping the keys'
+        range. Returns ``(condition_text, prune_region_or_None)``."""
+        nodes = _walk(cond)
+        if not any(_cls(n) in _SUBQUERIES for n in nodes):
+            return _cut(text, cond), None
+        self._refresh()
+        sql = self._sql(text, nodes, _start(text, cond), _stop(text, cond))
+        vals = _seq(cond.values()) if _cls(cond) == "InSubquery" else []
+        if len(vals) != 1 or len(_parts(vals[0])) != 1:
+            return sql, None
+        from pyspark.sql import functions as F
+
+        sub = self.spark.sql(self._query_sql(text, cond.query().plan()))
+        scol = sub.columns[0]
+        row = sub.agg(
+            F.min(scol).alias("lo"), F.max(scol).alias("hi")
+        ).first()
+        if row.lo is None:  # empty/all-NULL key set: IN matches nothing
+            return sql, None
+        return sql, [{_parts(vals[0])[0]: (row.lo, row.hi)}]
+
+    def _values_named(self, df: DataFrame, name: str):
+        """SQL INSERT resolves source columns BY POSITION (shared by
+        INSERT INTO / INSERT OVERWRITE / REPLACE WHERE): a full-width
+        source takes the table's column names in order, whatever the
+        SELECT called them — Spark/Delta INSERT semantics. A NARROWER
+        source keeps its own names (prefix-positional renames would
+        guess); its columns must then name real table columns (defaulted
+        or nullable trailing columns fill on read/as NULL)."""
+        cols = self.spark.sql(f"SELECT * FROM {name} LIMIT 0").columns
+        if len(df.columns) == len(cols):
+            return df.toDF(*cols)
+        return df
+
+    # -- DDL routes ----------------------------------------------------------
+    def _create(self, text: str, plan):
+        """CREATE [OR REPLACE] TABLE ... USING snapshot: registration
+        (no columns), empty-table DDL (columns) or CTAS (a query)."""
+        spec = plan.tableSpec()
+        if (_opt(spec.provider()) or "").lower() != "snapshot":
+            return NotImplemented
+        cls = _cls(plan)
+        replace = cls.startswith("Replace")
+        ctas = cls.endswith("AsSelect")
+        name = _ident(".".join(_parts(plan.name())), "CREATE TABLE")
+        path = _opt(spec.location())
+        cols = [] if ctas else _seq(plan.columns())
+        parts = _partition_cols(plan.partitioning())
+        props = {kv._1(): kv._2() for kv in _seq(spec.properties())}
+        if (path is None or (replace and not plan.orCreate())
+                or (not replace and plan.ignoreIfExists())
+                or _opt(spec.comment()) or _opt(spec.serde())
+                or spec.external() or _seq(spec.optionExpression().options())
+                or ((ctas or not cols) and props) or (replace and cols)
+                or (not ctas and not cols and parts)):
             raise ValueError(
-                "ADD COLUMN ... NOT NULL requires a non-NULL DEFAULT: "
-                "every pre-existing row would read NULL and violate "
-                "the constraint immediately"
+                f"unsupported CREATE TABLE form for a snapshot table: "
+                f"{text.strip()[:160]!r} — see the SnapshotCatalog "
+                "docstring for the supported DDL surface"
             )
+        if ctas:
+            return self._ctas(text, plan, name, path, parts, replace)
+        if not cols:  # register an existing table
+            if name in self._tables and not replace:
+                raise ValueError(
+                    f"table {name!r} already registered "
+                    "(use CREATE OR REPLACE TABLE)"
+                )
+            self.create_table(name, path)
+            return None
+        if name in self._tables:
+            raise ValueError(f"table {name!r} already registered")
+        specs = []
+        for c in cols:
+            ident = _opt(c.identityColumnSpec())
+            if ident is not None and ident.isAllowExplicitInsert():
+                raise ValueError(
+                    f"column {c.name()!r}: GENERATED BY DEFAULT AS IDENTITY "
+                    "is unsupported (use GENERATED ALWAYS AS IDENTITY)"
+                )
+            dflt = _opt(c.defaultValue())
+            default, wdefault = None, None
+            if dflt is not None:
+                # expression DEFAULTs fold to a birth literal NOW, the raw
+                # expression re-evaluates at each write; DEFAULT /
+                # GENERATED / IDENTITY exclusion is validated once, in
+                # snapshot_create_table
+                default, wdefault = _fold_default(self.spark, dflt.originalSQL())
+            specs.append((
+                _ident(c.name(), "CREATE TABLE"), c.dataType().simpleString(),
+                default, _opt(c.generationExpression()),
+                {"start": ident.getStart(), "step": ident.getStep()}
+                if ident is not None else None,
+                not c.nullable(), _opt(c.comment()), wdefault,
+            ))
+        declared = {c[0].lower() for c in specs}
+        unknown = [c for c in parts if c.lower() not in declared]
+        if unknown:
+            raise ValueError(
+                f"PARTITIONED BY names undeclared column(s) {unknown}"
+            )
+        S.snapshot_create_table(path, specs)
+        if parts:
+            S.snapshot_set_partitioning(path, parts)
+        # trailing TBLPROPERTIES (re-executable SHOW CREATE):
+        # delta.constraints.* keys re-apply as CHECKs, the rest land as
+        # table properties
+        plain = {}
+        for key, val in props.items():
+            if key.startswith("delta.constraints."):
+                S.snapshot_set_constraint(
+                    self.spark, path, key[len("delta.constraints."):], val
+                )
+            else:
+                plain[key] = val
+        if plain:
+            S.snapshot_set_properties(path, plain)
+        self.create_table(name, path)
+        return None
+
+    def _ctas(self, text: str, plan, name: str, path: str, parts: list,
+              replace: bool):
+        """CTAS: materialize a query result as a NEW snapshot table and
+        register it. The source query runs over fresh views (and may
+        itself time-travel)."""
+        if self._txn is not None:
+            raise RuntimeError(
+                "CTAS inside an open transaction is not supported "
+                "(the new table's pointer would not exist until "
+                "COMMIT); COMMIT first"
+            )
+        if name in self._tables and not replace:
+            raise ValueError(
+                f"table {name!r} already registered "
+                "(use CREATE OR REPLACE TABLE)"
+            )
+        if (Path(path) / "_latest").exists() and not replace:
+            raise ValueError(
+                f"a snapshot table already exists at {path} "
+                "(use CREATE OR REPLACE TABLE)"
+            )
+        S.snapshot_write(
+            self._fresh_sql(text, plan.query()), path,
+            partition_by=parts or None,
+        )
+        self.create_table(name, path)
+        return None
+
+    def _drop_table(self, text: str, plan):
+        name = self._registered(plan.child())
+        if name is None:
+            return NotImplemented
+        self.drop_table(name)
+        return None
+
+    def _create_view(self, text: str, plan):
+        """Named views: the TEXT is stored and re-resolved against the
+        tables' CURRENT versions on every query (a view over a snapshot
+        table never goes stale); time-travel clauses inside pin as
+        usual."""
+        if (plan.allowExisting() or _seq(plan.userSpecifiedColumns())
+                or _opt(plan.comment())):
+            return NotImplemented
+        name = _ident(".".join(_parts(plan.child())), "CREATE VIEW")
+        if name in self._tables:
+            raise ValueError(f"{name!r} is a registered TABLE")
+        if name in self._views and not plan.replace():
+            raise ValueError(
+                f"view {name!r} already exists (use CREATE OR REPLACE VIEW)"
+            )
+        prior = self._views.get(name)
+        self._views[name] = _opt(plan.originalText())
+        try:
+            self._refresh()  # materialize now — a bad query fails HERE
+        except Exception:
+            # a broken body must not poison later refreshes
+            if prior is None:
+                del self._views[name]
+            else:
+                self._views[name] = prior
+            raise
+        return None
+
+    def _drop_view(self, text: str, plan):
+        name = ".".join(_parts(plan.child()))
+        if name not in self._views:
+            if plan.ifExists():
+                return None
+            raise KeyError(f"no view named {name!r}")
+        del self._views[name]
+        self.spark.catalog.dropTempView(name)
+        return None
+
+    def _truncate(self, text: str, plan):
+        """TRUNCATE TABLE: metadata-only delete-all; identity marks
+        survive."""
+        name = self._registered(plan.table())
+        if name is None:
+            return NotImplemented
+        S.snapshot_truncate(self._writable(name))
+        return None
+
+    def _add_columns(self, text: str, plan):
+        """ADD COLUMN[S]: the CREATE TABLE column clauses (DEFAULT incl.
+        constant-foldable expressions, COMMENT, NOT NULL). Every refusal
+        fires before any spec commits — a multi-column statement must
+        not leave the table with half its columns."""
+        name = self._registered(plan.table())
+        if name is None:
+            return NotImplemented
+        path = self._writable(name)
+        S.snapshot_enable_column_mapping(self.spark, path)  # idempotent
+        sch = S._read_manifest(
+            Path(path), S.current_version(path)
+        ).get("schema") or {}
+        live = {c["name"].lower() for c in sch.get("cols", [])}
+        parsed = []
+        for q in _seq(plan.columnsToAdd()):
+            if _opt(q.path()) is not None or _opt(q.position()) is not None:
+                return NotImplemented
+            dflt = _opt(q.default())
+            cm = {
+                "name": _ident(q.colName(), "ADD COLUMN"),
+                "dtype": q.dataType().simpleString(),
+                "notnull": not q.nullable(),
+                "default": dflt.originalSQL() if dflt is not None else None,
+                "comment": _opt(q.comment()),
+            }
+            # NOT NULL needs a non-NULL DEFAULT: without one, every
+            # pre-existing row reads NULL and violates immediately. The
+            # DEFAULT folds HERE (stored on the spec), so a fold failure,
+            # or an expression folding to NULL, refuses before any commit
+            if cm["notnull"] and (
+                cm["default"] is None
+                or cm["default"].strip().lower() == "null"
+            ):
+                raise ValueError(
+                    "ADD COLUMN ... NOT NULL requires a non-NULL DEFAULT: "
+                    "every pre-existing row would read NULL and violate "
+                    "the constraint immediately"
+                )
+            if cm["default"] is not None:
+                cm["folded"] = _fold_default(self.spark, cm["default"])
+                if cm["notnull"] and cm["folded"][0].strip().lower() == "null":
+                    raise ValueError(
+                        "ADD COLUMN ... NOT NULL requires a non-NULL "
+                        "DEFAULT: the expression default "
+                        f"{cm['default']!r} folds to NULL, so every "
+                        "pre-existing row would violate immediately"
+                    )
+            key = cm["name"].lower()
+            if key in live:
+                raise ValueError(
+                    f"ADD COLUMN: column {cm['name']!r} already exists"
+                )
+            live.add(key)  # catches duplicates WITHIN the statement
+            parsed.append(cm)
+        for cm in parsed:
+            self._add_one_column(path, cm)
+        return None
 
     def _add_one_column(self, path: str, cm: dict) -> None:
-        """Apply one parsed (and _validate_add_column-checked) ADD
-        COLUMN spec: the column itself (with a folded birth default),
-        then the expression write default, the comment, and the NOT
-        NULL constraint — each an O(metadata) commit."""
-        from .snapshots import (
-            snapshot_add_column,
-            snapshot_set_column_comment,
-            snapshot_set_column_default,
-            snapshot_set_constraint,
-        )
-
-        default, wdefault = cm["default"], None
-        if default is not None:
-            # expression DEFAULTs: pre-existing rows read the DDL-time
-            # fold, future narrow writes re-evaluate. The ADD COLUMN[S]
-            # statement loop pre-folds during its all-specs-validate
-            # pass (so a fold failure fires before ANY spec commits);
-            # re-fold only for callers that skipped that pass.
-            default, wdefault = (
-                cm.get("_folded") or _fold_default(self.spark, default)
-            )
-        snapshot_add_column(
-            path, cm["name"], cm["dtype"].lower(), default=default
+        """Apply one validated ADD COLUMN spec: the column itself (with
+        its folded birth default), then the expression write default,
+        the comment, and the NOT NULL constraint — each an O(metadata)
+        commit."""
+        default, wdefault = cm.get("folded") or (None, None)
+        S.snapshot_add_column(
+            path, cm["name"], cm["dtype"], default=default
         )
         if wdefault is not None:
-            snapshot_set_column_default(path, cm["name"], wdefault)
+            S.snapshot_set_column_default(path, cm["name"], wdefault)
         if cm["comment"] is not None:
-            snapshot_set_column_comment(
-                path, cm["name"], cm["comment"].replace("''", "'")
-            )
+            S.snapshot_set_column_comment(path, cm["name"], cm["comment"])
         if cm["notnull"]:
             # standing data validates against the just-added birth
             # default (non-NULL by the guard above), so this passes on
             # history and gates every later write
-            snapshot_set_constraint(
+            S.snapshot_set_constraint(
                 self.spark, path, f"__not_null_{cm['name']}",
                 f"{cm['name']} IS NOT NULL",
             )
 
-    def _table_changes_views(self, text: str) -> str:
-        """Rewrite ``table_changes('t', v1[, v2])`` references (Delta's
-        batch CDF SQL surface) to temp views materialized from
-        :func:`snapshot_change_feed` — the manifest-aware net change set
-        between the versions (v2 defaults to the current tip). Only
-        files that CHANGED in the window are read. Unregistered names
-        pass through untouched (they would fail in spark.sql loudly)."""
-        from .snapshots import snapshot_change_feed
+    def _rename_column(self, text: str, plan):
+        name = self._registered(plan.table())
+        if name is None:
+            return NotImplemented
+        path = self._writable(name)
+        old = _column(plan.column(), "RENAME COLUMN")
+        new = _ident(plan.newName(), "RENAME COLUMN")
+        S.snapshot_enable_column_mapping(self.spark, path)  # idempotent
+        S.snapshot_rename_column(path, old, new)
+        return None
 
-        def _pin(mm: "re.Match") -> str:
-            name = mm.group("name")
-            if name not in self._tables:
-                return mm.group(0)
-            path, _ = self._tables[name]
-            v1 = int(mm.group("v1"))
-            v2 = int(mm.group("v2")) if mm.group("v2") else None
-            view = f"{name}__changes_{v1}_{v2 if v2 is not None else 'tip'}"
-            snapshot_change_feed(
-                self.spark, path, v1, v2
-            ).createOrReplaceTempView(view)
-            return view
+    def _drop_columns(self, text: str, plan):
+        name = self._registered(plan.table())
+        if name is None:
+            return NotImplemented
+        path = self._writable(name)
+        cols = [_column(c, "DROP COLUMN") for c in _seq(plan.columnsToDrop())]
+        S.snapshot_enable_column_mapping(self.spark, path)  # idempotent
+        for col in cols:
+            S.snapshot_drop_column(path, col)
+        return None
 
-        return _TABLE_CHANGES_RE.sub(_pin, text)
+    def _alter_column(self, text: str, plan):
+        """ALTER COLUMN c: SET/DROP DEFAULT (the WRITE default; the birth
+        default keeps resolving pre-existing files), SET/DROP NOT NULL (a
+        reserved-name CHECK; SET validates standing data first), COMMENT,
+        or TYPE <wider> (O(1) metadata widening)."""
+        name = self._registered(plan.table())
+        specs = _seq(plan.specs())
+        if name is None or len(specs) != 1:
+            return NotImplemented
+        spec = specs[0]
+        col = _column(spec.column(), "ALTER COLUMN")
+        dtype, nullable, comment, dflt = (
+            _opt(spec.newDataType()), _opt(spec.newNullability()),
+            _opt(spec.newComment()), _opt(spec.newDefaultExpression()),
+        )
+        if _opt(spec.newPosition()) is not None or (
+            dtype is not None and "(" in dtype.simpleString()
+        ):
+            return NotImplemented
+        path = self._writable(name)
+        if dtype is not None:
+            S.snapshot_widen_column(self.spark, path, col, dtype.simpleString())
+        elif nullable is not None:
+            if nullable:
+                S.snapshot_drop_constraint(path, f"__not_null_{col}")
+            else:
+                S.snapshot_set_constraint(
+                    self.spark, path, f"__not_null_{col}",
+                    f"{col} IS NOT NULL",
+                )
+        elif comment is not None:
+            S.snapshot_enable_column_mapping(self.spark, path)  # idempotent
+            S.snapshot_set_column_comment(path, col, comment)
+        else:
+            S.snapshot_enable_column_mapping(self.spark, path)  # idempotent
+            default = dflt.originalSQL() if dflt is not None else None
+            if default is not None:
+                # the write default stores the RAW expression (literal or
+                # constant-foldable; re-evaluated per write batch) —
+                # folding here only validates it is row-free
+                _fold_default(self.spark, default)
+            S.snapshot_set_column_default(path, col, default)
+        return None
 
-    def _fresh_sql(self, query: str) -> DataFrame:
-        """Run a sub-query with every registered view re-pointed at its
-        table's current version (INSERT/MERGE sources see fresh data).
-        Time-travel clauses rewrite here too, so an INSERT/MERGE source
-        can read a historical version of any registered table."""
+    def _add_constraint(self, text: str, plan):
+        check = plan.checkConstraint()
+        name = check.tableName()
+        if name not in self._tables:
+            return NotImplemented
+        S.snapshot_set_constraint(
+            self.spark, self._writable(name),
+            _ident(check.userProvidedName() or "", "ADD CONSTRAINT"),
+            check.condition(),
+        )
+        return None
+
+    def _drop_constraint(self, text: str, plan):
+        name = self._registered(plan.table())
+        if name is None:
+            return NotImplemented
+        S.snapshot_drop_constraint(self._writable(name), plan.name())
+        return None
+
+    # -- read-only routes ----------------------------------------------------
+    def _manifest(self, name: str) -> tuple:
+        """(path, version, manifest) a registered name reads as."""
+        path, pin = self._tables[name]
+        v = pin if pin is not None else S.current_version(path)
+        return path, v, S._read_manifest(Path(path), v)
+
+    def _show_properties(self, text: str, plan):
+        name = self._registered(plan.table())
+        if name is None or _opt(plan.propertyKey()) is not None:
+            return NotImplemented
+        props = self._manifest(name)[2].get("properties") or {}
+        return self.spark.createDataFrame(
+            [(k, props[k]) for k in sorted(props)] or [],
+            "key string, value string",
+        )
+
+    def _show_partitions(self, text: str, plan):
+        """SHOW PARTITIONS: live partition value tuples — a distributed
+        DISTINCT over the spec columns only (column-pruned scan;
+        post-evolution files resolve it from their point stats)."""
+        name = self._registered(plan.table())
+        if name is None or _opt(plan.pattern()) is not None:
+            return NotImplemented
+        spec = self._manifest(name)[2].get("partitioning") or {}
+        cols = list(spec.get("cols") or [])
+        if not cols:
+            raise ValueError(
+                f"SHOW PARTITIONS: table {name!r} is not partitioned"
+            )
         self._refresh()
         return self.spark.sql(
-            self._table_changes_views(self._time_travel_views(query))
+            f"SELECT DISTINCT {', '.join(cols)} FROM {name} "
+            f"ORDER BY {', '.join(cols)}"
+        )
+
+    def _schema_rows(self, name: str) -> tuple:
+        """(path, manifest, read-schema fields, {col: schema meta}, NOT
+        NULL columns) of a registered name."""
+        path, v, man = self._manifest(name)
+        fields = (
+            self.spark.read.format("snapshot").option("path", str(path))
+            .option("version", str(v)).load().schema.fields
+        )
+        meta = {
+            c["name"]: c for c in (man.get("schema") or {}).get("cols", [])
+        }
+        nn = {
+            cn[len("__not_null_"):]
+            for cn in (man.get("constraints") or {})
+            if cn.startswith("__not_null_")
+        }
+        return path, man, fields, meta, nn
+
+    def _describe_table(self, text: str, plan):
+        """DESCRIBE [TABLE] t: per-column name/type plus the DEFAULT /
+        GENERATED / IDENTITY decoration — the schema view DESCRIBE DETAIL
+        (manifest facts) and SHOW CREATE TABLE (round-trippable DDL)
+        don't cover."""
+        name = self._registered(plan.child())
+        if name is None or plan.isExtended() or not plan.partitionSpec().isEmpty():
+            return NotImplemented
+        _, _, fields, meta, nn = self._schema_rows(name)
+        rows = []
+        for f in fields:
+            c = meta.get(f.name, {})
+            if c.get("identity"):
+                info = (
+                    "GENERATED ALWAYS AS IDENTITY (START WITH "
+                    f"{c['identity']['start']} INCREMENT BY "
+                    f"{c['identity']['step']})"
+                )
+            elif c.get("generated") is not None:
+                info = f"GENERATED ALWAYS AS ({c['generated']})"
+            else:
+                d = _write_default(c)
+                info = f"DEFAULT {d}" if d is not None else None
+            if f.name in nn:
+                info = f"NOT NULL {info}" if info else "NOT NULL"
+            rows.append((
+                f.name, f.dataType.simpleString(), info, c.get("comment"),
+            ))
+        return self.spark.createDataFrame(
+            rows,
+            "col_name string, data_type string, info string, "
+            "comment string",
+        )
+
+    def _show_create(self, text: str, plan):
+        """SHOW CREATE TABLE: reconstructed DDL — columns at the read
+        schema, partition/bucket specs, constraints, properties."""
+        name = self._registered(plan.child())
+        if name is None or plan.asSerde():
+            return NotImplemented
+        path, man, fields, meta, nn = self._schema_rows(name)
+
+        def column(f) -> str:
+            c = meta.get(f.name, {})
+            d, ident = _write_default(c), c.get("identity")
+            return (
+                f"  {f.name} {f.dataType.simpleString().upper()}"
+                + (" NOT NULL" if f.name in nn else "")
+                + (f" DEFAULT {d}" if d is not None else "")
+                + (f" GENERATED ALWAYS AS ({c['generated']})"
+                   if c.get("generated") is not None else "")
+                + (
+                    " GENERATED ALWAYS AS IDENTITY (START WITH "
+                    f"{ident['start']} INCREMENT BY {ident['step']})"
+                    if ident is not None else ""
+                )
+                + (
+                    " COMMENT '{}'".format(c["comment"].replace("'", "''"))
+                    if c.get("comment") is not None else ""
+                )
+            )
+
+        lines = [f"CREATE TABLE {name} (", ",\n".join(map(column, fields)),
+                 ") USING snapshot"]
+        spec = (man.get("partitioning") or {}).get("cols")
+        if spec:
+            lines.append(f"PARTITIONED BY ({', '.join(spec)})")
+        b = man.get("bucketing")
+        if b:
+            lines.append(f"CLUSTERED BY ({b['col']}) INTO {b['n']} BUCKETS")
+        lines.append(f"LOCATION '{path}'")
+        cons = man.get("constraints") or {}
+        user_props = man.get("properties") or {}
+        props = [
+            f"  'delta.constraints.{cn}' = '{cons[cn]}'"
+            for cn in sorted(cons)
+            if not cn.startswith("__not_null_")  # rendered inline
+        ] + [
+            "  '{}' = '{}'".format(
+                k.replace("'", "''"), user_props[k].replace("'", "''")
+            )
+            for k in sorted(user_props)
+        ]
+        if props:
+            lines.append("TBLPROPERTIES (\n" + ",\n".join(props) + "\n)")
+        return self.spark.createDataFrame(
+            [("\n".join(lines),)], "createtab_stmt string"
+        )
+
+    def _show_tables(self, text: str, plan):
+        """SHOW TABLES / SHOW VIEWS: the catalog's registrations."""
+        if _cls(plan.namespace()) != "CurrentNamespace$" or _opt(
+            plan.pattern()
+        ) is not None:
+            return NotImplemented
+        if _cls(plan) == "ShowTables":
+            rows = [
+                (name, str(path), version,
+                 S.current_version(path) if version is None else version)
+                for name, (path, version) in sorted(self._tables.items())
+            ]
+            return self.spark.createDataFrame(
+                rows or [],
+                "name string, location string, pinned_version long, "
+                "current_version long",
+            )
+        return self.spark.createDataFrame(
+            sorted(self._views.items()) or [],
+            "name string, definition string",
         )
 
     def read_stream(self, name: str, starting_version: int = 0,
@@ -2185,54 +1845,14 @@ class SnapshotCatalog:
             reader = reader.option("readChangeFeed", "true")
         return reader.load()
 
-    def _values_named(self, df: DataFrame, query: str, name: str):
-        """SQL INSERT resolves source columns BY POSITION (shared by
-        INSERT INTO / INSERT OVERWRITE / REPLACE WHERE): a full-width
-        source takes the table's column names in order, whatever the
-        SELECT called them — Spark/Delta INSERT semantics. A NARROWER
-        source keeps its own names (prefix-positional renames would
-        guess); its columns must then name real table columns (defaulted
-        or nullable trailing columns fill on read/as NULL)."""
-        cols = self.spark.sql(f"SELECT * FROM {name} LIMIT 0").columns
-        if len(df.columns) == len(cols):
-            return df.toDF(*cols)
-        return df
-
-    def _dml_condition(self, cond: str):
-        """Prepare a DML WHERE clause: plain predicates pass through
-        untouched (the engine extracts their conjunctive constraints for
-        file pruning). A clause containing a subquery — ``k IN
-        (SELECT ...)``, ``[NOT] EXISTS (...)``, the reference's
-        staging-key delete shape as SQL — first re-points every
-        registered view (the subquery must see CURRENT table state, and
-        may time-travel: its clauses rewrite like any query's), then
-        rides the engine's evaluation unchanged: Spark plans the
-        subquery as a semi/anti-join inside the row-match filter, so
-        the delete/update stays fully distributed. For the uncorrelated
-        whole-clause ``col IN (SELECT ...)`` form, the subquery's
-        min/max additionally seed a stats-interval file prune — the
-        text-constraint extractor is rightly blind to subqueries, but a
-        key-set delete only ever touches files overlapping the keys'
-        range (at scale this is the difference between rewriting DVs on
-        every file and on the few the staging keys land in). Returns
-        ``(condition_text, prune_region_or_None)``."""
-        if not _SUBQUERY_RE.search(cond):
-            return cond, None
-        self._refresh()
-        cond = self._time_travel_views(cond)
-        m = _IN_SUBQ_RE.match(cond)
-        if not m:
-            return cond, None
-        from pyspark.sql import functions as F
-
-        sub = self.spark.sql(m.group("sub"))
-        scol = sub.columns[0]
-        row = sub.agg(
-            F.min(scol).alias("lo"), F.max(scol).alias("hi")
-        ).first()
-        if row.lo is None:  # empty/all-NULL key set: IN matches nothing
-            return cond, None
-        return cond, [{m.group("col"): (row.lo, row.hi)}]
+    def _writable(self, name: str) -> str:
+        path, version = self._tables[name]
+        if version is not None:
+            raise ValueError(
+                f"table {name!r} is pinned to VERSION AS OF {version} — "
+                "a time-travel registration is read-only"
+            )
+        return path
 
     def _refresh(self) -> None:
         """Re-point every registered snapshot view at its table's
@@ -2243,7 +1863,7 @@ class SnapshotCatalog:
         for vname, q in self._views.items():
             self.spark.sql(
                 f"CREATE OR REPLACE TEMPORARY VIEW {vname} AS "
-                f"{self._time_travel_views(q)}"
+                f"{self._pin_query(q)}"
             )
 
     def _register(self, name: str) -> None:
@@ -2269,11 +1889,9 @@ class SnapshotCatalog:
         # commit stamp: a table dropped and recreated at the same path
         # can reach the same version number, and must not keep serving
         # the old table's view.
-        from .snapshots import _manifest_path, current_version
-
-        v = current_version(path) if version is None else version
+        v = S.current_version(path) if version is None else version
         try:
-            ts = json.loads(_manifest_path(path, v).read_text()).get("ts")
+            ts = json.loads(S._manifest_path(path, v).read_text()).get("ts")
         except FileNotFoundError:
             ts = None  # the load below fails loudly on a missing version
         pin = (str(path), v, ts)
@@ -2287,3 +1905,12 @@ class SnapshotCatalog:
             reader = reader.option("version", str(version))
         reader.load().createOrReplaceTempView(name)
         self._pinned[name] = pin
+
+
+def _write_default(c: dict):
+    """A column's CURRENT write default: ALTER COLUMN SET DEFAULT wins
+    over the birth default; the DROP DEFAULT sentinel hides it."""
+    wd = c.get("wdefault")
+    if wd is not None:
+        return wd if wd != "NULL" else None
+    return c.get("default")

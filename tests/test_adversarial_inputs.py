@@ -231,7 +231,6 @@ def test_round14_sql_routes_reject_malformed_statements(spark, tmp_path):
 
     from energy_datalake_solution_spark.sources.snapshot_catalog import (
         SnapshotCatalog,
-        _parse_col_spec,
     )
     from energy_datalake_solution_spark.sources.snapshots import (
         current_version,
@@ -240,7 +239,11 @@ def test_round14_sql_routes_reject_malformed_statements(spark, tmp_path):
     cat = SnapshotCatalog(spark)
     t = tmp_path / "t"
     # unterminated string literal in a COMMENT / DEFAULT
-    assert _parse_col_spec("c bigint COMMENT 'oops") is None
+    with pytest.raises(ValueError, match="unterminated|column spec"):
+        cat.sql(
+            f"CREATE TABLE bad0 (c bigint COMMENT 'oops) "
+            f"USING snapshot LOCATION '{t}'"
+        )
     with pytest.raises(ValueError, match="unterminated|column spec"):
         cat.sql(
             f"CREATE TABLE bad1 (c string DEFAULT 'oops) "

@@ -705,8 +705,8 @@ def test_identity_allocation_unique_and_on_grid(
 
 
 # ---------------------------------------------------------------------------
-# Column-spec grammar round-trip (the r14 order-free clause tokenizer +
-# the r15 infix-operator DEFAULT scanner). Pure parser — no Spark jobs.
+# Column-spec grammar round-trip: a CREATE TABLE column spec with its
+# clauses in any order, read back through DESCRIBE TABLE.
 # ---------------------------------------------------------------------------
 
 _CS_NAMES = st.sampled_from(["c", "col_1", "Val", "x9"])
@@ -730,12 +730,15 @@ _CS_COMMENTS = st.sampled_from([None, "plain", "with 'quote'"])
     order=st.permutations([0, 1, 2]),
 )
 @settings(max_examples=80, deadline=None)
-def test_col_spec_grammar_roundtrip(name, dtype, default, notnull, comment, order):
+def test_col_spec_grammar_roundtrip(
+    spark, tmp_path_factory, name, dtype, default, notnull, comment, order
+):
     """Any combination of DEFAULT / NOT NULL / COMMENT clauses, in ANY
-    order, parses back to exactly the components it was rendered from —
-    including infix-operator and function-call expression defaults."""
+    order, creates a table whose DESCRIBE TABLE row gives back exactly
+    the components it was rendered from — including infix-operator and
+    function-call expression defaults."""
     from energy_datalake_solution_spark.sources.snapshot_catalog import (
-        _parse_col_spec,
+        SnapshotCatalog,
     )
 
     clauses = [None, None, None]
@@ -748,19 +751,19 @@ def test_col_spec_grammar_roundtrip(name, dtype, default, notnull, comment, orde
     rendered = " ".join(
         [f"{name} {dtype}"] + [clauses[i] for i in order if clauses[i]]
     )
-    cm = _parse_col_spec(rendered)
-    assert cm is not None, rendered
-    assert cm["name"] == name
-    assert cm["dtype"].replace(" ", "") == dtype.replace(" ", "")
-    assert cm["notnull"] == notnull
+    cat = SnapshotCatalog(spark)
+    t = tmp_path_factory.mktemp("colspec")
+    cat.sql(f"CREATE TABLE cs ({rendered}) USING snapshot LOCATION '{t}'")
+    row = cat.sql("DESCRIBE TABLE cs").first()
+    assert row.col_name == name
+    assert row.data_type.replace(" ", "") == dtype.replace(" ", "")
+    info = row.info or ""
+    assert info.startswith("NOT NULL") == notnull, rendered
     if default is None:
-        assert cm["default"] is None
+        assert "DEFAULT" not in info
     else:
-        assert cm["default"].strip() == default, rendered
-    if comment is None:
-        assert cm["comment"] is None
-    else:
-        assert cm["comment"].replace("''", "'") == comment
+        assert info.split("DEFAULT ", 1)[1] == default, rendered
+    assert row.comment == comment
 
 
 @given(
@@ -768,9 +771,16 @@ def test_col_spec_grammar_roundtrip(name, dtype, default, notnull, comment, orde
                          "COMMENT 'a' COMMENT 'b'"]),
 )
 @settings(max_examples=10, deadline=None)
-def test_col_spec_duplicate_clauses_refuse(dup):
+def test_col_spec_duplicate_clauses_refuse(spark, tmp_path_factory, dup):
+    import pytest
+
     from energy_datalake_solution_spark.sources.snapshot_catalog import (
-        _parse_col_spec,
+        SnapshotCatalog,
     )
 
-    assert _parse_col_spec(f"c bigint {dup}") is None
+    t = tmp_path_factory.mktemp("colspec_dup")
+    with pytest.raises(ValueError, match="column spec"):
+        SnapshotCatalog(spark).sql(
+            f"CREATE TABLE csd (c bigint {dup}) USING snapshot LOCATION '{t}'"
+        )
+    assert not (t / "_latest").exists()

@@ -2969,3 +2969,24 @@ def test_statement_routes(spark, route_cat, monkeypatch, form):
         except Exception as e:  # the refusal is part of the route
             calls.append(("raised", type(e).__name__))
     assert calls == want
+
+
+def test_time_travel_rewrites_only_parsed_relations(spark, tmp_path):
+    """``VERSION AS OF`` and ``table_changes(...)`` rewrite only the
+    relations Spark's parser finds: text inside a double-quoted string
+    literal stays data, and a backticked table name time-travels like a
+    bare one."""
+    cat = SnapshotCatalog(spark)
+    t = tmp_path / "t"
+    snapshot_write(spark.range(5).selectExpr("id AS k"), t)
+    snapshot_append(spark.range(5, 8).selectExpr("id AS k"), t)
+    cat.sql(f"CREATE TABLE dq USING snapshot LOCATION '{t}'")
+    assert cat.sql('SELECT "dq VERSION AS OF 1" AS s').first().s == (
+        "dq VERSION AS OF 1"
+    )
+    assert cat.sql("SELECT \"table_changes('dq', 1)\" AS s").first().s == (
+        "table_changes('dq', 1)"
+    )
+    assert cat.sql(
+        "SELECT count(*) AS n FROM `dq` VERSION AS OF 1"
+    ).first().n == 5
