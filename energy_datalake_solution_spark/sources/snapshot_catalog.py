@@ -230,6 +230,11 @@ _TBLPROPS_RE = re.compile(
 _PROP_RE = re.compile(
     r"\s*'(?P<key>(?:[^']|'')+)'\s*(?:=\s*'(?P<val>(?:[^']|'')*)'\s*)?(?:,|$)"
 )
+# one FORMAT_OPTIONS pair; keys and values may be quoted either way
+_OPTION_RE = re.compile(
+    r"""\s*(?P<k>'[^']*'|"[^"]*"|[\w.]+)\s*=\s*(?P<v>'[^']*'|"[^"]*"|[^,\s]+)"""
+    r"\s*(?:,|$)"
+)
 _IDENT_RE = re.compile(r"[A-Za-z_]\w*")
 
 # Spark's parser refusals on a snapshot table, restated in the catalog's
@@ -371,7 +376,8 @@ def _column(node, what: str) -> str:
 
 
 def _literal(tok: str):
-    """A BETWEEN bound: int, float, or single-quoted string."""
+    """A literal token (a BETWEEN bound, a table_changes argument): int,
+    float, or single-quoted string."""
     if tok.startswith("'") and tok.endswith("'"):
         return tok[1:-1]
     try:
@@ -710,7 +716,7 @@ class SnapshotCatalog:
         # plain SQL: re-point every registered view at the CURRENT version
         # (O(manifest) each — catalog freshness without staleness bugs)
         self._refresh()
-        return self.spark.sql(self._sql(text, _walk(plan)))
+        return self.spark.sql(self._pin_text(text, _walk(plan)))
 
     def _registered(self, node) -> str | None:
         """The registered table a relation node names (through a
@@ -721,8 +727,8 @@ class SnapshotCatalog:
         return parts[0] if len(parts) == 1 and parts[0] in self._tables \
             else None
 
-    def _sql(self, text: str, nodes: list, start: int = 0,
-             stop: int | None = None) -> str:
+    def _pin_text(self, text: str, nodes: list, start: int = 0,
+                  stop: int | None = None) -> str:
         """``text[start:stop]`` with every time-travel relation and
         ``table_changes(...)`` call among ``nodes`` that names a
         registered table re-pointed at a pinned temp view. Cost:
@@ -746,10 +752,9 @@ class SnapshotCatalog:
                     continue
                 if (name in self._tables and 1 <= len(vs) <= 2
                         and all(isinstance(v, int) for v in vs)):
-                    edits.append((
-                        _start(text, n), text.index(")", _stop(text, args[-1])) + 1,
-                        self._pin_changes(name, *vs),
-                    ))
+                    close = text.index(")", _stop(text, args[-1])) + 1
+                    edits.append((_start(text, n), close,
+                                  self._pin_changes(name, *vs)))
         out, pos = [], start
         for a, b, view in sorted(e for e in edits if start <= e[0] < stop):
             out += [text[pos:a], view]
@@ -787,12 +792,12 @@ class SnapshotCatalog:
     def _pin_query(self, query: str) -> str:
         """A stored query (a view body, a pattern-table source) with its
         time-travel and table_changes references pinned."""
-        return self._sql(query, _walk(self._parser.parsePlan(query)))
+        return self._pin_text(query, _walk(self._parser.parsePlan(query)))
 
     def _query_sql(self, text: str, node) -> str:
         """A source query's text, pinned; a bare relation (``USING src``,
         ``TABLE src``) reads as ``SELECT * FROM`` it."""
-        sql = self._sql(
+        sql = self._pin_text(
             text, _walk(node), _start(text, node), _stop(text, node)
         )
         return f"SELECT * FROM {sql}" if _cls(node) in _RELATIONS else sql
@@ -950,16 +955,15 @@ class SnapshotCatalog:
         if m.group("name") not in self._tables:
             return NotImplemented
         path = self._writable(m.group("name"))
-        opts = {}
-        for pair in (m.group("opts") or "").split(","):
-            if not pair.strip():
-                continue
-            k, eq, v = pair.partition("=")
-            if not eq:
+        opts, items, pos = {}, m.group("opts") or "", 0
+        while items[pos:].strip():
+            o = _OPTION_RE.match(items, pos)
+            if not o:
                 raise ValueError(
-                    f"COPY INTO: bad FORMAT_OPTIONS pair {pair.strip()!r}"
+                    f"COPY INTO: bad FORMAT_OPTIONS pair {items[pos:].strip()!r}"
                 )
-            opts[k.strip().strip("'\"")] = v.strip().strip("'\"")
+            opts[o.group("k").strip("'\"")] = o.group("v").strip("'\"")
+            pos = o.end()
         S.snapshot_copy_into(
             self.spark, m.group("src"), path,
             fileformat=m.group("fmt").lower(),
@@ -1294,7 +1298,7 @@ class SnapshotCatalog:
         if not any(_cls(n) in _SUBQUERIES for n in nodes):
             return _cut(text, cond), None
         self._refresh()
-        sql = self._sql(text, nodes, _start(text, cond), _stop(text, cond))
+        sql = self._pin_text(text, nodes, _start(text, cond), _stop(text, cond))
         vals = _seq(cond.values()) if _cls(cond) == "InSubquery" else []
         if len(vals) != 1 or len(_parts(vals[0])) != 1:
             return sql, None
