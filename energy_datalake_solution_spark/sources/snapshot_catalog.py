@@ -32,14 +32,13 @@ stats-pruned, DV-based, optimistic-concurrency commits, not a new engine):
     CREATE TABLE <name> (c type [DEFAULT expr] [GENERATED ALWAYS AS (expr)
             | GENERATED ALWAYS AS IDENTITY [(START WITH s INCREMENT BY k)]]
             [NOT NULL] [COMMENT 'txt'], ...) USING snapshot
-        [PARTITIONED BY (c, ...)] LOCATION '<p>' [TBLPROPERTIES (...)]
+        [PARTITIONED BY (c, ...)] LOCATION '<p>'
                                               -> snapshot_create_table
         (column clauses in any order, each at most once; a v1 schema-only
         manifest with column mapping from birth; an expression DEFAULT
         folds to its birth literal now and re-evaluates at each write;
         generated columns compute on write when omitted and are validated
-        when supplied; ``delta.constraints.*`` properties re-apply as
-        CHECKs, so SHOW CREATE TABLE's output re-executes)
+        when supplied)
     DROP TABLE [IF EXISTS] <name>
     CREATE [OR REPLACE] VIEW <name> AS <query>  (text stored; resolved
         against CURRENT table versions per query — never stale)
@@ -114,9 +113,14 @@ Forms on the pattern table (Spark rejects or misparses them):
     ALTER TABLE <name> SYNC IDENTITY          -> snapshot_sync_identity
     ALTER TABLE <name> SET TBLPROPERTIES ('k' = 'v', ...)
         | UNSET TBLPROPERTIES [IF EXISTS] ('k', ...)
-        -> snapshot_set_properties / snapshot_unset_properties (Spark
-        reserves owner, location, provider and comment as keys; here
-        they are plain user metadata, carried by every commit)
+        -> snapshot_set_properties / snapshot_unset_properties
+    CREATE TABLE <name> (...) USING snapshot ... TBLPROPERTIES (...)
+        (the trailing clause SHOW CREATE TABLE writes: the rest of the
+        statement is parsed as usual, ``delta.constraints.*`` keys
+        re-apply as CHECKs, so that output re-executes)
+        (Spark reserves owner, location, provider and comment as
+        property keys; here they are plain user metadata, carried by
+        every commit)
     OPTIMIZE <name> [WHERE <pred>] [ZORDER BY (a, ...)] [INTO n FILES]
         -> snapshot_compact / snapshot_compact_where /
            snapshot_zorder_compact_n
@@ -222,7 +226,13 @@ _MERGE_KEYS_RE = re.compile(
     rf"\(?\s*(?P<keys>{_COLS})\s*\)?" + _END, _I,
 )
 # Spark's parser reserves owner, location, provider and comment as
-# property keys; snapshot tables store them as plain user metadata
+# property keys; snapshot tables store them as plain user metadata, so
+# both TBLPROPERTIES clauses are read here (the CREATE TABLE one when it
+# trails the statement, as SHOW CREATE TABLE writes it)
+_CREATE_PROPS_RE = re.compile(
+    rf"^(?P<head>\s*CREATE\s+TABLE\s+{_N}\s*\(.*\)\s*USING\s+snapshot\b.*?)"
+    r"\s+TBLPROPERTIES\s*\((?P<items>.*)\)" + _END, _I,
+)
 _TBLPROPS_RE = re.compile(
     rf"^\s*ALTER\s+TABLE\s+{_N}\s+(?P<verb>SET|UNSET)\s+TBLPROPERTIES\s*"
     r"(?:IF\s+EXISTS\s*)?\((?P<items>.*)\)" + _END, _I,
@@ -483,6 +493,25 @@ def _partition_cols(partitioning) -> list:
     return cols
 
 
+def _property_list(items: str, verb: str, pairs: bool) -> dict:
+    """A TBLPROPERTIES list -> {key: value} (keys only: values ''). Keys
+    and values are quoted strings, '' escaping a quote."""
+    what, form = ("pair", "'key' = 'value'") if pairs else ("key", "'key'")
+    props, pos = {}, 0
+    while pos < len(items) or not props:
+        p = _PROP_RE.match(items, pos)
+        if not p or (p.group("val") is None) == pairs:
+            raise ValueError(
+                f"{verb} TBLPROPERTIES: cannot parse {what} "
+                f"{items[pos:].strip()!r} (expected {form})"
+            )
+        props[p.group("key").replace("''", "'")] = (
+            (p.group("val") or "").replace("''", "'")
+        )
+        pos = p.end()
+    return props
+
+
 def _render_sql_literal(v) -> str:
     """A collected Python value back as SQL literal text that
     _parse_default_literal round-trips (dates/timestamps as quoted ISO
@@ -637,6 +666,7 @@ class SnapshotCatalog:
         (_COPY_INTO_RE, "_copy_into"),
         (_ANALYZE_RE, "_analyze"),
         (_TBLPROPS_RE, "_properties"),
+        (_CREATE_PROPS_RE, "_create_with_properties"),
         (_DESCRIBE_RE, "_describe_meta"),
         (_MERGE_KEYS_RE, "_merge_keys_only"),
     )
@@ -685,17 +715,7 @@ class SnapshotCatalog:
                 if out is not NotImplemented:
                     return out
                 break
-        try:
-            plan = self._parser.parsePlan(text)
-        except ParseException as e:
-            words = re.findall(r"\w+", text)
-            if not (set(words) & set(self._tables)
-                    or "snapshot" in {w.lower() for w in words}):
-                raise
-            hint = _REFUSALS.get(e.getCondition()) or _REFUSALS.get(
-                words[0].upper() if words else "", "cannot parse statement"
-            )
-            raise ValueError(f"{hint}: {str(e).strip()}") from None
+        plan = self._parse(text)
         route = self._ROUTES.get(_cls(plan))
         out = getattr(self, route)(text, plan) if route else NotImplemented
         if out is not NotImplemented:
@@ -717,6 +737,23 @@ class SnapshotCatalog:
         # (O(manifest) each — catalog freshness without staleness bugs)
         self._refresh()
         return self.spark.sql(self._pin_text(text, _walk(plan)))
+
+    def _parse(self, text: str):
+        """Spark's logical plan of ``text``. A statement the parser
+        rejects that names a registered table or the snapshot provider
+        refuses with ValueError: the catalog's words, then the parser's
+        message."""
+        try:
+            return self._parser.parsePlan(text)
+        except ParseException as e:
+            words = re.findall(r"\w+", text)
+            if not (set(words) & set(self._tables)
+                    or "snapshot" in {w.lower() for w in words}):
+                raise
+            hint = _REFUSALS.get(e.getCondition()) or _REFUSALS.get(
+                words[0].upper() if words else "", "cannot parse statement"
+            )
+            raise ValueError(f"{hint}: {str(e).strip()}") from None
 
     def _registered(self, node) -> str | None:
         """The registered table a relation node names (through a
@@ -990,26 +1027,20 @@ class SnapshotCatalog:
         if m.group("name") not in self._tables:
             return NotImplemented
         path = self._writable(m.group("name"))
-        verb, items = m.group("verb").upper(), m.group("items")
-        what, form = ("pair", "'key' = 'value'") if verb == "SET" \
-            else ("key", "'key'")
-        props, pos = {}, 0
-        while pos < len(items) or not props:
-            p = _PROP_RE.match(items, pos)
-            if not p or (p.group("val") is None) == (verb == "SET"):
-                raise ValueError(
-                    f"{verb} TBLPROPERTIES: cannot parse {what} "
-                    f"{items[pos:].strip()!r} (expected {form})"
-                )
-            props[p.group("key").replace("''", "'")] = (
-                (p.group("val") or "").replace("''", "'")
-            )
-            pos = p.end()
+        verb = m.group("verb").upper()
+        props = _property_list(m.group("items"), verb, verb == "SET")
         if verb == "SET":
             S.snapshot_set_properties(path, props)
         else:
             S.snapshot_unset_properties(path, list(props))
         return None
+
+    def _create_with_properties(self, m: "re.Match"):
+        """Empty-table DDL with a trailing TBLPROPERTIES clause: the
+        clause is read here, the rest parsed as usual."""
+        props = _property_list(m.group("items"), "CREATE TABLE", True)
+        head = m.group("head")
+        return self._create(head, self._parse(head), props)
 
     def _describe_meta(self, m: "re.Match"):
         """DESCRIBE HISTORY (the commit log) / DESCRIBE DETAIL (version,
@@ -1327,7 +1358,7 @@ class SnapshotCatalog:
         return df
 
     # -- DDL routes ----------------------------------------------------------
-    def _create(self, text: str, plan):
+    def _create(self, text: str, plan, props: dict | None = None):
         """CREATE [OR REPLACE] TABLE ... USING snapshot: registration
         (no columns), empty-table DDL (columns) or CTAS (a query)."""
         spec = plan.tableSpec()
@@ -1340,7 +1371,8 @@ class SnapshotCatalog:
         path = _opt(spec.location())
         cols = [] if ctas else _seq(plan.columns())
         parts = _partition_cols(plan.partitioning())
-        props = {kv._1(): kv._2() for kv in _seq(spec.properties())}
+        if props is None:
+            props = {kv._1(): kv._2() for kv in _seq(spec.properties())}
         if (path is None or (replace and not plan.orCreate())
                 or (not replace and plan.ignoreIfExists())
                 or _opt(spec.comment()) or _opt(spec.serde())
