@@ -1820,7 +1820,9 @@ class SnapshotCatalog:
         cons = man.get("constraints") or {}
         user_props = man.get("properties") or {}
         props = [
-            f"  'delta.constraints.{cn}' = '{cons[cn]}'"
+            "  'delta.constraints.{}' = '{}'".format(
+                cn, cons[cn].replace("'", "''")
+            )
             for cn in sorted(cons)
             if not cn.startswith("__not_null_")  # rendered inline
         ] + [

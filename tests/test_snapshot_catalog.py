@@ -2995,13 +2995,14 @@ def test_time_travel_rewrites_only_parsed_relations(spark, tmp_path):
 def test_show_create_reexecutes_with_reserved_property_keys(spark, tmp_path):
     """Spark's parser reserves owner, location, provider and comment as
     property keys. SET TBLPROPERTIES stores them as user metadata, and
-    the DDL SHOW CREATE TABLE writes for such a table re-executes."""
+    the DDL SHOW CREATE TABLE writes for such a table re-executes, a
+    CHECK with a quoted literal included."""
     cat = SnapshotCatalog(spark)
     cat.sql(
         f"CREATE TABLE rk (k bigint) USING snapshot "
         f"LOCATION '{tmp_path / 'a'}'"
     )
-    cat.sql("ALTER TABLE rk ADD CONSTRAINT pos CHECK (k > 0)")
+    cat.sql("ALTER TABLE rk ADD CONSTRAINT pos CHECK (k > 0 OR 'a' = 'b')")
     cat.sql("ALTER TABLE rk SET TBLPROPERTIES ('owner' = 'it''s me')")
     ddl = cat.sql("SHOW CREATE TABLE rk").first().createtab_stmt
     cat.sql(
@@ -3013,5 +3014,5 @@ def test_show_create_reexecutes_with_reserved_property_keys(spark, tmp_path):
         "owner": "it's me"
     }
     assert cat.sql("DESCRIBE DETAIL rk2").first().check_constraints == (
-        '{"pos": "k > 0"}'
+        '{"pos": "k > 0 OR \'a\' = \'b\'"}'
     )
