@@ -280,11 +280,10 @@ def _commit(
     partitioning_meta: dict | None = None,
     bucketing_meta: dict | None = None,
     properties_meta: dict | None = None,
-    empty_types: dict | None = None,
 ) -> int:
-    """Publish a manifest and advance the pointer. ``empty_types`` (a
-    version listing no files: the {column: type} it reads as) is stored
-    on this version only.
+    """Publish a manifest and advance the pointer. A version listing no
+    files on an unmapped table records the reader schema it reads as
+    (:func:`_empty_types`), on this version only.
 
     Concurrency contract (optimistic, Delta-LogStore-shaped): the
     manifest publish is a hard-link (atomic, no-overwrite — a
@@ -324,8 +323,6 @@ def _commit(
     manifest["n_files"] = len(files)
     if txn_app is not None:
         manifest["txn_app"] = txn_app
-    if empty_types:
-        manifest["empty_types"] = empty_types
     # carry the per-app latest-txn MAP forward into every manifest (the
     # analogue of Delta's SetTransaction actions): last_txn reads ONLY the
     # latest manifest, so vacuuming old manifests — including another
@@ -417,6 +414,10 @@ def _commit(
         if properties_meta is not None
         else (parent_resolved or {}).get("properties")
     )
+    if not files and not schema:
+        empty_types = types or _empty_types(table_path, parent_resolved)
+        if empty_types:
+            manifest["empty_types"] = empty_types
     parent_dist = (
         int(parent_resolved.get("ckpt_dist", 0)) if parent_resolved else 0
     )
@@ -555,6 +556,25 @@ def _transact(p: Path, attempt, *, txn: int | None = None,
         except SnapshotCommitConflict:
             if n == COMMIT_RETRIES - 1:
                 raise
+
+
+def _empty_types(p: Path, m: dict | None) -> dict | None:
+    """The {column: type} an unmapped table's version listing no files
+    reads as, from its parent ``m``: an unmapped table keeps its schema
+    only in file footers, so every commit that empties it (a truncate, a
+    purge or delete that leaves no file) records the reader schema at
+    hand (the parent's own empty_types, else the widened types map, else
+    the first footer of the nearest version listing files) for the empty
+    version to stay readable once vacuum removes those files. None when
+    no ancestor is left to read."""
+    if m is None:
+        return None
+    listed = m if m["files"] else _nearest_listed_ancestor(p, m)
+    return m.get("empty_types") or (listed and (
+        listed.get("types")
+        or _footer_sweep(None, Path(p), listed["files"][:1],
+                         _file_footer_types)[0]
+    )) or None
 
 
 def _recommit(p: Path, parent: int, m: dict, op: str, **meta) -> int:
@@ -2437,7 +2457,7 @@ def snapshot_read(
     A selection no file can match reads as the snapshot's typed frame
     with no rows (planned, never scanned). So does a version listing no
     files (a truncate): typed by the declared mapping, else by the reader
-    schema the truncate recorded, else by the footer of the nearest
+    schema the emptying commit recorded, else by the footer of the nearest
     earlier version that lists files."""
     from pyspark.sql import functions as F
 
@@ -2459,7 +2479,7 @@ def snapshot_read(
                 f"{c['name']} {c['type']}" for c in schema["cols"]
             ))
         # an unmapped table keeps its schema only in file footers: the
-        # truncate that emptied it recorded their reader schema
+        # commit that emptied it recorded their reader schema
         if m.get("empty_types"):
             return spark.createDataFrame([], _types_ddl(m["empty_types"]))
         listed = _nearest_listed_ancestor(p, m)
@@ -2778,25 +2798,12 @@ def snapshot_truncate(table_path) -> int:
     types map clears (no files remain, so there is nothing the map
     could describe — snapshot_write's honest-footer rule). The change
     feed reports every previous row as deleted, computed from the file
-    diff alone. An unmapped table keeps its schema only in file footers,
-    so the truncate records the reader schema it has at hand (the
-    widened types map, else the first listed file's footer) for its
-    empty version to read as a typed frame once vacuum removes them."""
+    diff alone. On an unmapped table the empty version records its
+    reader schema (:func:`_empty_types`)."""
     p = _table(table_path)
-
-    def attempt(parent, m):
-        empty_types = None
-        if not m.get("schema"):
-            listed = m if m["files"] else _nearest_listed_ancestor(p, m)
-            empty_types = m.get("empty_types") or (listed and (
-                listed.get("types")
-                or _footer_sweep(None, p, listed["files"][:1],
-                                 _file_footer_types)[0]
-            ))
-        return _commit(p, [], parent, op="truncate",
-                       types_meta=CLEAR_METADATA, empty_types=empty_types)
-
-    return _transact(p, attempt)
+    return _transact(p, lambda parent, m: _commit(
+        p, [], parent, op="truncate", types_meta=CLEAR_METADATA
+    ))
 
 
 def snapshot_set_column_default(table_path, col: str,

@@ -452,6 +452,26 @@ def test_truncated_unmapped_table_reads_typed_empty(spark, tmp_path):
     assert out.count() == 0
 
 
+def test_purged_empty_unmapped_table_reads_typed_empty(spark, tmp_path):
+    """A purge that drops files whose every row a deletion vector hides
+    also commits a version listing no files; like a truncate it records
+    the reader schema, so the empty tip stays readable after vacuum."""
+    from energy_datalake_solution_spark.sources.snapshots import (
+        snapshot_delete_range_mor,
+        snapshot_purge_dv,
+    )
+
+    t = tmp_path / "t"
+    snapshot_write(_df(spark, 0, 5, "a").coalesce(1), t)
+    before = snapshot_read(spark, t).schema
+    snapshot_delete_range_mor(spark, t, "k", 0, 10)
+    snapshot_purge_dv(spark, t)
+    snapshot_vacuum(t, keep_versions=1)
+    out = snapshot_read(spark, t)
+    assert out.schema == before
+    assert out.count() == 0
+
+
 def test_schema_evolution_read_across_appends(spark, tmp_path):
     """Additive schema evolution: a later append carries an extra column;
     a merge_schema read surfaces it (NULL on pre-evolution rows), the
