@@ -70,7 +70,8 @@ stats-pruned, DV-based, optimistic-concurrency commits, not a new engine):
         (a predicate with a subquery re-points the views first; a whole
         ``col IN (SELECT ...)`` clause also prunes files by the keys'
         min/max)
-    TRUNCATE TABLE <name> / DELETE FROM <name> -> snapshot_truncate
+    TRUNCATE TABLE <name> / DELETE FROM <name> [WHERE true]
+                                              -> snapshot_truncate
     ALTER TABLE <name> ADD COLUMN[S] [(]c type [DEFAULT e] [NOT NULL]
         [COMMENT 'txt'][, ...][)]             -> snapshot_add_column
         (every spec validates before any commits; NOT NULL needs a
@@ -159,6 +160,7 @@ import re
 from pathlib import Path
 
 from pyspark.errors import ParseException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 
 from . import snapshots as S
@@ -246,6 +248,9 @@ _OPTION_RE = re.compile(
     r"\s*(?:,|$)"
 )
 _IDENT_RE = re.compile(r"[A-Za-z_]\w*")
+# every time-travel clause ends in the word OF; a text with neither it
+# nor table_changes has nothing to pin and skips the tree walk
+_PIN_HINT_RE = re.compile(r"\bOF\b|table_changes", re.IGNORECASE)
 
 # Spark's parser refusals on a snapshot table, restated in the catalog's
 # words (the parser's own message follows): keyed by the error condition,
@@ -736,13 +741,16 @@ class SnapshotCatalog:
         # plain SQL: re-point every registered view at the CURRENT version
         # (O(manifest) each — catalog freshness without staleness bugs)
         self._refresh()
-        return self.spark.sql(self._pin_text(text, _walk(plan)))
+        return self.spark.sql(self._pin_text(text, plan))
 
     def _parse(self, text: str):
         """Spark's logical plan of ``text``. A statement the parser
         rejects that names a registered table or the snapshot provider
         refuses with ValueError: the catalog's words, then the parser's
-        message."""
+        message. pyspark's JSON ERROR record of the parse failure stays
+        off stderr: the caller gets the error, raised."""
+        log = PySparkLogger.getLogger("SQLQueryContextLogger")
+        was, log.disabled = log.disabled, True
         try:
             return self._parser.parsePlan(text)
         except ParseException as e:
@@ -754,6 +762,8 @@ class SnapshotCatalog:
                 words[0].upper() if words else "", "cannot parse statement"
             )
             raise ValueError(f"{hint}: {str(e).strip()}") from None
+        finally:
+            log.disabled = was
 
     def _registered(self, node) -> str | None:
         """The registered table a relation node names (through a
@@ -764,15 +774,18 @@ class SnapshotCatalog:
         return parts[0] if len(parts) == 1 and parts[0] in self._tables \
             else None
 
-    def _pin_text(self, text: str, nodes: list, start: int = 0,
+    def _pin_text(self, text: str, root, start: int = 0,
                   stop: int | None = None) -> str:
         """``text[start:stop]`` with every time-travel relation and
-        ``table_changes(...)`` call among ``nodes`` that names a
+        ``table_changes(...)`` call under ``root`` that names a
         registered table re-pointed at a pinned temp view. Cost:
-        O(manifest) per reference — never a data read."""
+        O(manifest) per reference — never a data read; a text with no
+        such clause costs one regex search, not a tree walk."""
         stop = len(text) if stop is None else stop
+        if not _PIN_HINT_RE.search(text, start, stop):
+            return text[start:stop]
         edits = []
-        for n in nodes:
+        for n in _walk(root):
             cls = _cls(n)
             if cls == "RelationTimeTravel":
                 name = self._registered(n.relation())
@@ -829,14 +842,14 @@ class SnapshotCatalog:
     def _pin_query(self, query: str) -> str:
         """A stored query (a view body, a pattern-table source) with its
         time-travel and table_changes references pinned."""
-        return self._pin_text(query, _walk(self._parser.parsePlan(query)))
+        if not _PIN_HINT_RE.search(query):
+            return query
+        return self._pin_text(query, self._parse(query))
 
     def _query_sql(self, text: str, node) -> str:
         """A source query's text, pinned; a bare relation (``USING src``,
         ``TABLE src``) reads as ``SELECT * FROM`` it."""
-        sql = self._pin_text(
-            text, _walk(node), _start(text, node), _stop(text, node)
-        )
+        sql = self._pin_text(text, node, _start(text, node), _stop(text, node))
         return f"SELECT * FROM {sql}" if _cls(node) in _RELATIONS else sql
 
     def _fresh_sql(self, text: str, node) -> DataFrame:
@@ -1107,9 +1120,9 @@ class SnapshotCatalog:
             return NotImplemented
         path = self._writable(name)
         cond = plan.condition()
-        start = _start(text, cond)
-        if start is None or start < _stop(text, plan.table()):
-            # no WHERE (or WHERE true): the parser's shared TRUE literal
+        if _cls(cond) == "Literal" and cond.value() is True:
+            # no WHERE (or WHERE true): the parser's TRUE literal. Any
+            # other condition, a literal FALSE too, deletes by predicate
             S.snapshot_truncate(path)
             return None
         between = _between(text, cond)
@@ -1325,11 +1338,10 @@ class SnapshotCatalog:
         constraint extractor is rightly blind to subqueries, but a
         key-set delete only ever touches files overlapping the keys'
         range. Returns ``(condition_text, prune_region_or_None)``."""
-        nodes = _walk(cond)
-        if not any(_cls(n) in _SUBQUERIES for n in nodes):
+        if not any(_cls(n) in _SUBQUERIES for n in _walk(cond)):
             return _cut(text, cond), None
         self._refresh()
-        sql = self._pin_text(text, nodes, _start(text, cond), _stop(text, cond))
+        sql = self._pin_text(text, cond, _start(text, cond), _stop(text, cond))
         vals = _seq(cond.values()) if _cls(cond) == "InSubquery" else []
         if len(vals) != 1 or len(_parts(vals[0])) != 1:
             return sql, None

@@ -2587,6 +2587,18 @@ _ROUTES = {
         [("snapshot_truncate", ("<rt>",), {}),
          ("result", None)],
     ),
+    "delete_where_true": (
+        "DELETE FROM rt WHERE true",
+        [("snapshot_truncate", ("<rt>",), {}),
+         ("result", None)],
+    ),
+    "delete_where_false": (
+        "DELETE FROM rt WHERE false",
+        [("snapshot_delete_where",
+          ("<rt>", "false"),
+          {"_prune_region": None, "table_alias": "rt"}),
+         ("result", None)],
+    ),
     "truncate": (
         "TRUNCATE TABLE rt",
         [("snapshot_truncate", ("<rt>",), {}),
@@ -2969,6 +2981,33 @@ def test_statement_routes(spark, route_cat, monkeypatch, form):
         except Exception as e:  # the refusal is part of the route
             calls.append(("raised", type(e).__name__))
     assert calls == want
+
+
+def test_delete_where_false_keeps_every_row(spark, tmp_path):
+    """The parser hands WHERE false on as a literal just as it does the
+    TRUE of a bare DELETE; only the TRUE one truncates."""
+    cat = SnapshotCatalog(spark)
+    cat.sql(f"CREATE TABLE wf (k bigint) USING snapshot "
+            f"LOCATION '{tmp_path / 'wf'}'")
+    cat.sql("INSERT INTO wf SELECT id FROM range(4)")
+    cat.sql("DELETE FROM wf WHERE false")
+    assert cat.sql("SELECT count(*) AS n FROM wf").first().n == 4
+    cat.sql("DELETE FROM wf WHERE true")
+    assert cat.sql("SELECT count(*) AS n FROM wf").first().n == 0
+
+
+def test_parser_refusal_is_quiet(spark, tmp_path, capfd):
+    """A statement the parser rejects raises; pyspark's JSON ERROR
+    record of the parse failure (written for a refusal that carries a
+    query context) does not reach stderr. The parser reads the WHERE
+    below as a table alias with column aliases."""
+    cat = SnapshotCatalog(spark)
+    cat.sql(f"CREATE TABLE qr (k bigint) USING snapshot "
+            f"LOCATION '{tmp_path / 'qr'}'")
+    capfd.readouterr()
+    with pytest.raises(ValueError, match="COLUMN_ALIASES_NOT_ALLOWED"):
+        cat.sql("DELETE FROM qr WHERE (false)")
+    assert "SQLQueryContextLogger" not in capfd.readouterr().err
 
 
 def test_time_travel_rewrites_only_parsed_relations(spark, tmp_path):
