@@ -679,6 +679,12 @@ class SnapshotCatalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._parser = spark._jsparkSession.sessionState().sqlParser()
+        # the tree-pattern bit every subquery expression sets on its
+        # ancestors: one Py4J call tells whether a condition has one
+        self._subquery_bit = (
+            spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+            .PLAN_EXPRESSION()
+        )
         self._tables: dict[str, tuple[str, int | None]] = {}
         self._views: dict[str, str] = {}  # named views, creation order
         self._txn = None  # open BEGIN TRANSACTION, if any
@@ -1338,7 +1344,7 @@ class SnapshotCatalog:
         constraint extractor is rightly blind to subqueries, but a
         key-set delete only ever touches files overlapping the keys'
         range. Returns ``(condition_text, prune_region_or_None)``."""
-        if not any(_cls(n) in _SUBQUERIES for n in _walk(cond)):
+        if not cond.containsPattern(self._subquery_bit):
             return _cut(text, cond), None
         self._refresh()
         sql = self._pin_text(text, cond, _start(text, cond), _stop(text, cond))
