@@ -2999,14 +2999,13 @@ def test_delete_where_false_keeps_every_row(spark, tmp_path):
 def test_parser_refusal_is_quiet(spark, tmp_path, capfd):
     """A statement the parser rejects raises; pyspark's JSON ERROR
     record of the parse failure (written for a refusal that carries a
-    query context) does not reach stderr. The parser reads the WHERE
-    below as a table alias with column aliases."""
+    query context) does not reach stderr."""
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE qr (k bigint) USING snapshot "
             f"LOCATION '{tmp_path / 'qr'}'")
     capfd.readouterr()
-    with pytest.raises(ValueError, match="COLUMN_ALIASES_NOT_ALLOWED"):
-        cat.sql("DELETE FROM qr WHERE (false)")
+    with pytest.raises(ValueError, match="NOT NULL"):
+        cat.sql("ALTER TABLE qr ADD COLUMN c bigint NOT NULL NOT NULL")
     assert "SQLQueryContextLogger" not in capfd.readouterr().err
 
 
