@@ -70,8 +70,7 @@ stats-pruned, DV-based, optimistic-concurrency commits, not a new engine):
         (a predicate with a subquery re-points the views first; a whole
         ``col IN (SELECT ...)`` clause also prunes files by the keys'
         min/max)
-    TRUNCATE TABLE <name> / DELETE FROM <name> [WHERE true]
-                                              -> snapshot_truncate
+    TRUNCATE TABLE <name> / DELETE FROM <name> -> snapshot_truncate
     ALTER TABLE <name> ADD COLUMN[S] [(]c type [DEFAULT e] [NOT NULL]
         [COMMENT 'txt'][, ...][)]             -> snapshot_add_column
         (every spec validates before any commits; NOT NULL needs a
@@ -1125,12 +1124,13 @@ class SnapshotCatalog:
         if name is None:
             return NotImplemented
         path = self._writable(name)
-        cond = plan.condition()
-        if _cls(cond) == "Literal" and cond.value() is True:
-            # no WHERE (or WHERE true): the parser's TRUE literal. Any
-            # other condition, a literal FALSE too, deletes by predicate
+        if not re.search(r"\bWHERE\b", text, re.IGNORECASE):
+            # no WHERE clause (the parser's condition is a shared TRUE
+            # literal, and so is WHERE true's: only the text tells them
+            # apart). Every WHERE clause deletes by predicate
             S.snapshot_truncate(path)
             return None
+        cond = plan.condition()
         between = _between(text, cond)
         if between:
             S.snapshot_delete_range_mor(self.spark, path, *between)

@@ -2589,7 +2589,9 @@ _ROUTES = {
     ),
     "delete_where_true": (
         "DELETE FROM rt WHERE true",
-        [("snapshot_truncate", ("<rt>",), {}),
+        [("snapshot_delete_where",
+          ("<rt>", "true"),
+          {"_prune_region": None, "table_alias": "rt"}),
          ("result", None)],
     ),
     "delete_where_false": (
@@ -2985,7 +2987,7 @@ def test_statement_routes(spark, route_cat, monkeypatch, form):
 
 def test_delete_where_false_keeps_every_row(spark, tmp_path):
     """The parser hands WHERE false on as a literal just as it does the
-    TRUE of a bare DELETE; only the TRUE one truncates."""
+    TRUE of a bare DELETE; only a DELETE with no WHERE truncates."""
     cat = SnapshotCatalog(spark)
     cat.sql(f"CREATE TABLE wf (k bigint) USING snapshot "
             f"LOCATION '{tmp_path / 'wf'}'")
