@@ -2,8 +2,11 @@
 
 Re-expresses the reference's Glue Job 2 (glue_jobs/etl-s3-processed-to-
 redshift.py) without a warehouse: the curated zone is parquet, and the
-staging-table DELETE USING + INSERT merge (:66-96) becomes a left-anti
-join + union overwrite. Steps:
+staging-table DELETE USING + INSERT merge (:66-96) keeps its shape. The
+batch is staged once as its own data files; the files whose key range it
+can touch are rewritten without its keys (a left-anti join against the
+staged keys); one commit swaps them for the rewrite plus the staged
+files. Steps:
 
   * read exactly one load-date partition of the processed zone
     (partition-path read, :37-50,109-114 -> here a partition filter that

@@ -63,6 +63,10 @@ stats-pruned, DV-based, optimistic-concurrency commits, not a new engine):
         Delta semantics; WITH SCHEMA EVOLUTION auto-adds source columns)
     DELETE FROM <name> WHERE c BETWEEN a AND b -> snapshot_delete_range_mor
     DELETE FROM <name> WHERE <any predicate>   -> snapshot_delete_where
+        (``WHERE (c)`` with a bare column or literal: Spark reads WHERE as
+        a table alias and ``(c)`` as its column list, so the statement is
+        parsed with the table's own name as an explicit alias; a WHERE
+        with no condition refuses)
     UPDATE <name> SET c = e, ... WHERE k BETWEEN a AND b
                                               -> snapshot_update_range_mor
     UPDATE <name> SET c = e, ... WHERE <any predicate>
@@ -247,6 +251,10 @@ _OPTION_RE = re.compile(
     r"\s*(?:,|$)"
 )
 _IDENT_RE = re.compile(r"[A-Za-z_]\w*")
+# DELETE FROM <name> WHERE (...): ends where an explicit alias goes
+_DELETE_PAREN_RE = re.compile(
+    rf"\s*DELETE\s+FROM\s+{_N}\s+(?=WHERE\s*\()", _I
+)
 # every time-travel clause ends in the word OF; a text with neither it
 # nor table_changes has nothing to pin and skips the tree walk
 _PIN_HINT_RE = re.compile(r"\bOF\b|table_changes", re.IGNORECASE)
@@ -725,6 +733,11 @@ class SnapshotCatalog:
                 if out is not NotImplemented:
                     return out
                 break
+        m = _DELETE_PAREN_RE.match(text)
+        if m and m["name"] in self._tables:
+            # the parser would read `WHERE (c)` as an alias and its column
+            # list; with the alias named, WHERE is the clause it reads as
+            text = f"{text[:m.end()]}AS {m['name']} {text[m.end():]}"
         plan = self._parse(text)
         route = self._ROUTES.get(_cls(plan))
         out = getattr(self, route)(text, plan) if route else NotImplemented
@@ -1123,6 +1136,13 @@ class SnapshotCatalog:
         name = self._registered(plan.table())
         if name is None:
             return NotImplemented
+        if (_cls(plan.table()) == "SubqueryAlias"
+                and plan.table().alias().upper() == "WHERE"):
+            # `DELETE FROM t WHERE` with no condition: the parser takes
+            # WHERE for the alias and hands back TRUE
+            raise ValueError(
+                f"DELETE FROM {name} WHERE: the WHERE clause has no condition"
+            )
         path = self._writable(name)
         if not re.search(r"\bWHERE\b", text, re.IGNORECASE):
             # no WHERE clause (the parser's condition is a shared TRUE

@@ -1523,14 +1523,19 @@ def snapshot_upsert(
     rewrite. New files' stats are collected for every column the parent
     manifest tracked, so later upserts and range reads keep pruning.
 
+    The batch is written once, as its own data files (the reference's
+    staging table), before the commit loop. Their footers give the key
+    range and the row count; the rewrite is the touched files
+    anti-joined against the staged files' key columns, and the commit
+    lists the rewritten files plus the staged ones. A conflict retry
+    reuses the staged files; only the prune and the rewrite rerun.
+
     ``seed_stats_files``: when the call CREATES the table, range-split the
     first commit on the key into that many files with per-file stats —
     the layout every later upsert's pruning feeds on. Ignored for
     existing tables (their layout is already decided).
     ``auto_evolve_schema`` auto-adds batch columns absent from the
     target before merging (see :func:`snapshot_evolve_schema_for`)."""
-    from pyspark.sql import functions as F
-
     p = _table(table_path)
     if current_version(p) == 0:
         # table creation (full replace either way); the rebase inside the
@@ -1578,34 +1583,44 @@ def snapshot_upsert(
     # type widening: wider batch -> manifest records the widened types;
     # narrower batch -> upcast here so the merge runs at the wide type
     df, widen_types = _apply_type_widening(df, p, m_tip)
-    # The batch is evaluated more than once below (key-range agg, then
-    # the anti-join + write; the no-stats path references it twice inside
-    # one DAG). Persist pins one evaluation so a NONDETERMINISTIC batch
-    # (sample(), rand-derived keys, a re-read of a mutable source) cannot
+    # the staged files are the batch's one evaluation: a NONDETERMINISTIC
+    # batch (sample(), random keys, a re-read of a mutable source) cannot
     # write keys outside the pruned [lo, hi] and leave stale duplicates
-    # alive in unrewritten files.
-    df = df.persist()
-    try:
-        # each round re-resolves the tip: an upsert's read-set is its file
-        # prune, so a conflict means another writer changed the file list
-        # — the WHOLE prune+rewrite reruns against the new parent (the
-        # failed attempt's files stay as vacuum-able orphans). This is
-        # Delta's conflict disposition for overlapping MERGEs: serialize
-        # by re-running, never compose.
-        return _transact(p, lambda parent, m: _snapshot_upsert_committed(
-            spark, df, p, keys, parent, m, widen_types,
-        ))
-    finally:
-        df.unpersist()
+    # alive in unrewritten files, not even when an executor is lost
+    staged, stats = _write_nonempty(spark, df, p)
+    # each round re-resolves the tip: an upsert's read-set is its file
+    # prune, so a conflict means another writer changed the file list —
+    # the prune and the rewrite rerun against the new parent over the same
+    # staged files (the failed attempt's rewrite stays a vacuum-able
+    # orphan). This is Delta's conflict disposition for overlapping
+    # MERGEs: serialize by re-running, never compose.
+    return _transact(p, lambda parent, m: _snapshot_upsert_committed(
+        spark, p, keys, staged, stats, parent, m, widen_types,
+    ))
+
+
+def _write_nonempty(
+    spark: SparkSession, df: DataFrame, p: Path
+) -> "tuple[list[str], dict]":
+    """:func:`_write_files`, keeping the files that hold rows, and their
+    footer stats over every column of ``df`` (a superset of whatever a
+    commit tracks). Spark writes its first part file even when that
+    partition is empty; a commit must not list it, so it is deleted."""
+    files = _write_files(df, p)
+    stats = _collect_stats(p, files, df.columns, spark=spark)
+    for f in files:
+        if not stats[f][_ROWS_KEY]:
+            (p / f).unlink()
+            del stats[f]
+    return list(stats), stats
 
 
 def _snapshot_upsert_committed(
-    spark, df, p, keys, parent, m, widen_types: dict | None = None,
+    spark, p, keys, staged, stats, parent, m, widen_types: dict | None = None,
 ) -> int:
     from pyspark.sql import functions as F
 
     col = keys[0]
-    stats = m.get("stats", {}) or {}
     # effective read/commit types: the parent's widened map merged with
     # this batch's contribution (rebase-safe: recomputed per attempt)
     eff_types = (
@@ -1614,59 +1629,46 @@ def _snapshot_upsert_committed(
         else m.get("types")
     )
     types_meta = eff_types if widen_types is not None else None
-    if not any(col in s for s in stats.values()):
-        # no key stats anywhere: classic full rewrite — but keep whatever
-        # OTHER column stats the table tracked (a commit must never
-        # silently strip the manifest's pruning metadata)
-        # PHYSICAL-space read (not snapshot_read, which would surface a
-        # mapped table's logical names and break the join with the
-        # already-translated batch)
-        cur = _read_files_with_dv(
-            spark, p, list(m["files"]), m.get("dv"), merge_schema=True,
-            types=eff_types, schema=m.get("schema"),
-        )
-        merged = cur.join(df.select(keys).distinct(), keys, "left_anti").unionByName(
-            df, allowMissingColumns=True  # additive schema evolution
-        )
-        return _replace_files(spark, p, parent, m, m["files"],
-                              _write_files(merged, p), "upsert",
-                              types_meta=types_meta)
-
-    lo, hi, n_rows = df.agg(F.min(col), F.max(col), F.count(F.lit(1))).first()
-    if n_rows == 0:
+    if not staged:
         # empty batch: metadata-only commit carrying the parent's files
         return _recommit(p, parent, m, "upsert", types_meta=types_meta)
-    if lo is None:
-        # non-empty batch whose key is NULL in every row: NULL matches no
-        # existing row (the anti-join never equates NULLs), so this is a
-        # pure append — rewrite NOTHING, add the batch's files. Dropping
-        # it as "empty" would silently lose the rows a stats-less table
-        # keeps.
-        touched: set[str] = set()
-        merged = df
+    if not any(col in s for s in (m.get("stats") or {}).values()):
+        # no key stats anywhere: every file is rewritten (the OTHER column
+        # stats the table tracked are re-collected for the new files)
+        touched = list(m["files"])
     else:
-        touched = set(_admitted(m, [{col: (lo, hi)}]))
-        if touched:
-            # mergeSchema: on a schema-evolved table the touched set can
-            # span file generations — a single-footer inference would
-            # silently drop later-added columns from the rewritten rows
-            cur_t = _read_files_with_dv(
-                spark, p, sorted(touched), m.get("dv"), merge_schema=True,
-                types=eff_types, schema=m.get("schema"),
-            )
-            merged = cur_t.join(
-                df.select(keys).distinct(), keys, "left_anti"
-            ).unionByName(df, allowMissingColumns=True)
-            # write roughly as many files as were rewritten: without this
-            # the rewrite lands in default-parallelism part files and
-            # every narrow upsert GROWS the table's file count (small-
-            # files creep that compaction then has to undo)
-            merged = merged.coalesce(max(1, len(touched)))
+        bounds = [stats[f].get(col) for f in staged]
+        if None in bounds:
+            # a staged footer keeps no bound for the key (all NULL, or a
+            # type written without min/max): read the key column itself
+            lo, hi = _read_files_with_dv(spark, p, staged, None).agg(
+                F.min(col), F.max(col)
+            ).first()
         else:
-            merged = df
-    return _replace_files(spark, p, parent, m, touched,
-                          _write_files(merged, p), "upsert",
-                          types_meta=types_meta)
+            lo, hi = min(b[0] for b in bounds), max(b[1] for b in bounds)
+        # lo None: every batch key is NULL, which matches no existing row
+        # (the anti-join never equates NULLs) — a pure append of the batch
+        touched = [] if lo is None else _admitted(m, [{col: (lo, hi)}])
+    rewritten: list[str] = []
+    if touched:
+        # mergeSchema: on a schema-evolved table the touched set can span
+        # file generations — a single-footer inference would silently drop
+        # later-added columns from the rewritten rows
+        kept = _read_files_with_dv(
+            spark, p, sorted(touched), m.get("dv"), merge_schema=True,
+            types=eff_types, schema=m.get("schema"),
+        ).join(_read_files_with_dv(spark, p, staged, None).select(keys),
+               keys, "left_anti")
+        # write at most as many files as were rewritten: without this the
+        # rewrite lands in default-parallelism part files and every narrow
+        # upsert GROWS the table's file count (small-files creep that
+        # compaction then has to undo)
+        rewritten, rw_stats = _write_nonempty(
+            spark, kept.coalesce(len(touched)), p
+        )
+        stats = {**stats, **rw_stats}
+    return _replace_files(spark, p, parent, m, touched, rewritten + staged,
+                          "upsert", new_stats=stats, types_meta=types_meta)
 
 
 def _merge_cond(expr):
@@ -3514,7 +3516,8 @@ def _dv_key(f: str) -> str:
 
 def _replace_files(
     spark: SparkSession, p: Path, parent: int, m: dict, touched,
-    new_files: list[str], op: str, *, stats_cols=(), **meta,
+    new_files: list[str], op: str, *, stats_cols=(),
+    new_stats: dict | None = None, **meta,
 ) -> int:
     """The copy-on-write DML commit: ``new_files`` replace the
     ``touched`` files of ``m`` on top of ``parent``. Every other file
@@ -3522,7 +3525,9 @@ def _replace_files(
     the touched files' entries drop (their rewrite read through their
     vectors). New files get footer stats for every column the parent
     tracked plus ``stats_cols``, and blooms for every column it
-    bloomed. ``meta`` goes to _commit."""
+    bloomed. ``new_stats`` holds footer stats the caller already read
+    for every new file over all its columns; the tracked ones are kept
+    and no footer is opened again. ``meta`` goes to _commit."""
     touched = set(touched)
     untouched = [f for f in m["files"] if f not in touched]
     parent_stats = m.get("stats") or {}
@@ -3530,7 +3535,13 @@ def _replace_files(
     tracked = sorted(
         {c for s in parent_stats.values() for c in s} | set(stats_cols)
     )
-    if tracked:
+    if tracked and new_stats is not None:
+        keep = {_ROWS_KEY, *tracked}
+        stats.update({
+            f: {c: v for c, v in new_stats[f].items() if c in keep}
+            for f in new_files
+        })
+    elif tracked:
         stats.update(_collect_stats(p, new_files, tracked, spark=spark))
     return _commit(p, untouched + new_files, parent, stats=stats or None,
                    blooms=_carry_blooms(p, m, untouched, new_files),

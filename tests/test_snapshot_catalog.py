@@ -2601,6 +2601,28 @@ _ROUTES = {
           {"_prune_region": None, "table_alias": "rt"}),
          ("result", None)],
     ),
+    "delete_where_paren_column": (
+        "DELETE FROM rt WHERE (k)",
+        [("snapshot_delete_where",
+          ("<rt>", "k"),
+          {"_prune_region": None, "table_alias": "rt"}),
+         ("result", None)],
+    ),
+    "delete_where_paren_false": (
+        "DELETE FROM rt WHERE (false)",
+        [("snapshot_delete_where",
+          ("<rt>", "false"),
+          {"_prune_region": None, "table_alias": "rt"}),
+         ("result", None)],
+    ),
+    "delete_where_no_condition": (
+        "DELETE FROM rt WHERE",
+        [("raised", "ValueError")],
+    ),
+    "delete_where_paren_unregistered": (
+        "DELETE FROM rt_src WHERE (k)",
+        [("raised", "ParseException")],
+    ),
     "truncate": (
         "TRUNCATE TABLE rt",
         [("snapshot_truncate", ("<rt>",), {}),
@@ -2996,6 +3018,30 @@ def test_delete_where_false_keeps_every_row(spark, tmp_path):
     assert cat.sql("SELECT count(*) AS n FROM wf").first().n == 4
     cat.sql("DELETE FROM wf WHERE true")
     assert cat.sql("SELECT count(*) AS n FROM wf").first().n == 0
+
+
+def test_delete_where_parenthesized_bare_condition(spark, tmp_path):
+    """``WHERE (flag)`` and ``WHERE (false)`` delete by predicate, though
+    Spark's parser reads WHERE there as a table alias; a column list that
+    is no predicate, and a WHERE with no condition, refuse and delete
+    nothing."""
+    cat = SnapshotCatalog(spark)
+    cat.sql(f"CREATE TABLE pw (k bigint, flag boolean) USING snapshot "
+            f"LOCATION '{tmp_path / 'pw'}'")
+    cat.sql("INSERT INTO pw SELECT id, id % 2 = 0 FROM range(4)")
+
+    def keys():
+        return sorted(r.k for r in cat.sql("SELECT k FROM pw").collect())
+
+    cat.sql("DELETE FROM pw WHERE (false)")
+    assert keys() == [0, 1, 2, 3]
+    cat.sql("DELETE FROM pw WHERE (flag)")
+    assert keys() == [1, 3]
+    with pytest.raises(Exception):
+        cat.sql("DELETE FROM pw WHERE (k, flag)")
+    with pytest.raises(ValueError, match="no condition"):
+        cat.sql("DELETE FROM pw WHERE")
+    assert keys() == [1, 3]
 
 
 def test_parser_refusal_is_quiet(spark, tmp_path, capfd):

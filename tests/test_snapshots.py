@@ -695,6 +695,78 @@ def test_upsert_no_key_stats_fallback_keeps_other_column_stats(spark, tmp_path):
     assert m["files"] and all("d" in m.get("stats", {}).get(f, {}) for f in m["files"])
 
 
+def test_upsert_evaluates_a_nondeterministic_batch_once(spark, tmp_path):
+    """A batch whose keys are random is evaluated once: the key range
+    that prunes, the keys that anti-join and the rows committed all come
+    from the same staged rows, so no key is left twice and the table's
+    new rows are exactly the staged ones."""
+    import random
+
+    from energy_datalake_solution_spark.sources.snapshots import (
+        _read_manifest,
+    )
+
+    t = tmp_path / "t"
+    snapshot_write(_df(spark, 0, 4000, "old"), t, stats_cols=["k"], n_files=8)
+    pre = set(_read_manifest(t, current_version(t))["files"])
+    # one key per id in [id * 80, id * 80 + 80): distinct, spread over
+    # the table's ranges, different on every evaluation (F.rand() would
+    # repeat: its seed is fixed when the column is built)
+    draw = F.udf(
+        lambda i: i * 80 + random.SystemRandom().randrange(80), "long"
+    ).asNondeterministic()
+    batch = spark.range(0, 50, numPartitions=4).select(
+        draw("id").alias("k"), F.lit("new").alias("v"),
+    )
+    snapshot_upsert(spark, batch, t, ["k"])
+
+    rows = snapshot_read(spark, t).collect()
+    keys = [r.k for r in rows]
+    assert len(keys) == len(set(keys)) == 4000
+    new = sorted((r.k, r.v) for r in rows if r.v == "new")
+    assert len(new) == 50
+    added = set(_read_manifest(t, current_version(t))["files"]) - pre
+    staged = spark.read.parquet(*[str(t / f) for f in added]).where(
+        F.col("v") == "new"
+    )
+    assert sorted((r.k, r.v) for r in staged.collect()) == new
+
+
+@pytest.mark.parametrize("case", ["one_row", "empties_a_file", "no_key_stats"])
+def test_upsert_commits_only_files_holding_rows(spark, tmp_path, case):
+    """Spark writes a part file for an empty first partition, and a
+    rewrite whose rows the batch all replaces writes one empty file; an
+    upsert commits neither. Every file it adds holds rows and carries the
+    stats the table tracks (the key's, on a key-stats table)."""
+    from energy_datalake_solution_spark.sources.snapshots import (
+        _ROWS_KEY,
+        _read_manifest,
+    )
+
+    t = tmp_path / "t"
+    tracked = "v" if case == "no_key_stats" else "k"
+    snapshot_write(_df(spark, 0, 40, "old"), t, stats_cols=[tracked], n_files=4)
+    pre = set(_read_manifest(t, current_version(t))["files"])
+    if case == "empties_a_file":
+        batch = _df(spark, 0, 10, "new")  # every row of the first file
+    else:
+        batch = spark.createDataFrame([(5, "new")], "k long, v string")
+    assert batch.rdd.getNumPartitions() > 1
+    snapshot_upsert(spark, batch, t, ["k"])
+
+    m = _read_manifest(t, current_version(t))
+    added = set(m["files"]) - pre
+    assert added
+    for f in added:
+        assert m["stats"][f][_ROWS_KEY] > 0
+        assert tracked in m["stats"][f]
+    got = sorted((r.k, r.v) for r in snapshot_read(spark, t).collect())
+    new = range(10) if case == "empties_a_file" else [5]
+    assert got == sorted(
+        (k, "new" if k in new else "old") for k in range(40)
+    )
+
+
 def test_stream_sink_skips_replays_stamped_under_legacy_namespace(spark, tmp_path):
     """A checkpoint lineage that stamped its txns under the raw path
     spelling (pre-canonicalization default) must keep skipping replays
