@@ -66,7 +66,8 @@ stats-pruned, DV-based, optimistic-concurrency commits, not a new engine):
         (``WHERE (c)`` with a bare column or literal: Spark reads WHERE as
         a table alias and ``(c)`` as its column list, so the statement is
         parsed with the table's own name as an explicit alias; a WHERE
-        with no condition refuses)
+        with no condition refuses. A query's ``FROM t WHERE (c)`` on a
+        registered table is read the same way)
     UPDATE <name> SET c = e, ... WHERE k BETWEEN a AND b
                                               -> snapshot_update_range_mor
     UPDATE <name> SET c = e, ... WHERE <any predicate>
@@ -255,6 +256,9 @@ _IDENT_RE = re.compile(r"[A-Za-z_]\w*")
 _DELETE_PAREN_RE = re.compile(
     rf"\s*DELETE\s+FROM\s+{_N}\s+(?=WHERE\s*\()", _I
 )
+# `FROM t WHERE (c)`: the parser may take WHERE for the relation's alias
+# and (c) for its column list; a text without this shape skips the walk
+_WHERE_PAREN_RE = re.compile(r"\bWHERE\s*\(", re.IGNORECASE)
 # every time-travel clause ends in the word OF; a text with neither it
 # nor table_changes has nothing to pin and skips the tree walk
 _PIN_HINT_RE = re.compile(r"\bOF\b|table_changes", re.IGNORECASE)
@@ -739,6 +743,8 @@ class SnapshotCatalog:
             # list; with the alias named, WHERE is the clause it reads as
             text = f"{text[:m.end()]}AS {m['name']} {text[m.end():]}"
         plan = self._parse(text)
+        if _WHERE_PAREN_RE.search(text):
+            text, plan = self._where_alias(text, plan)
         route = self._ROUTES.get(_cls(plan))
         out = getattr(self, route)(text, plan) if route else NotImplemented
         if out is not NotImplemented:
@@ -782,6 +788,28 @@ class SnapshotCatalog:
             raise ValueError(f"{hint}: {str(e).strip()}") from None
         finally:
             log.disabled = was
+
+    def _where_alias(self, text: str, plan) -> tuple:
+        """``FROM t WHERE (c)`` on a registered table: the parser reads
+        WHERE as t's alias and ``(c)`` as its column list, so the query
+        would return every row unfiltered. Name the alias (the table's
+        own name) so WHERE reads as the clause it is, and parse again."""
+        cuts = []
+        for n in _walk(plan):
+            if (_cls(n) != "SubqueryAlias" or n.alias().upper() != "WHERE"
+                    or _cls(n.child()) != "UnresolvedSubqueryColumnAliases"):
+                continue
+            rel = n.child().child()
+            name = self._registered(
+                rel.relation() if _cls(rel) == "RelationTimeTravel" else rel
+            )
+            if name is not None:
+                cuts.append((_stop(text, rel), name))
+        if not cuts:
+            return text, plan
+        for pos, name in sorted(cuts, reverse=True):
+            text = f"{text[:pos]} AS {name}{text[pos:]}"
+        return text, self._parse(text)
 
     def _registered(self, node) -> str | None:
         """The registered table a relation node names (through a

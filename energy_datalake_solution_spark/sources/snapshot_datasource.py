@@ -29,6 +29,12 @@ compactions) re-emit carried rows by that contract — consumers needing
 NET row changes use snapshot_tail_changes / snapshot_change_feed, or the
 STREAMING CHANGE FEED below.
 
+Both stream readers walk the committed history with
+``snapshots._ancestry`` and diff versions with ``snapshots._manifest_diff``:
+the one history walk and the one manifest diff that the library's
+version-window readers (the change feed, the incremental read, the tail,
+TIMESTAMP AS OF) use too.
+
 Streaming change feed (``.option("readChangeFeed", "true")``, Delta's
 CDF-stream form): each micro-batch carries net row-level changes per
 commit step — added files' live rows as 'insert', removed files'
@@ -48,7 +54,6 @@ north-star surface following Delta's streaming-source design
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from pathlib import Path
@@ -65,10 +70,11 @@ from pyspark.sql.datasource import (
 
 from .snapshots import (
     _PROV_COLS,
+    _ancestry,
     _dv_key,
     _footer_types,
+    _manifest_diff,
     _manifest_path,
-    _pack_positions,
     _read_manifest,
     _unpack_positions,
     _wider_type,
@@ -500,6 +506,34 @@ class _SnapshotBatchReader(DataSourceReader):
         yield from _arrow_batches(partition)
 
 
+def _window(
+    table_path: Path, v_from: int, v_to: int
+) -> list[tuple[int, dict]]:
+    """The committed steps ``(version, header)`` of the stream window
+    (v_from, v_to], oldest first: the :func:`_ancestry` of ``v_to`` down
+    to ``v_from``, so orphan manifests (lost commit races, rollbacks)
+    never contribute files. Fails loudly: a vacuumed manifest in the
+    window raises FileNotFoundError, and an offset the committed chain
+    passes without touching (the checkpoint recorded an orphan) raises
+    ValueError."""
+    steps = list(_ancestry(table_path, v_to, v_from))
+    end = steps[-1][1]["parent"] if steps else v_to
+    if end > v_from:
+        raise FileNotFoundError(
+            f"manifest v{end} of {table_path} is gone (vacuumed): the "
+            f"stream window ({v_from}, {v_to}] is no longer readable"
+        )
+    if end < v_from:
+        raise ValueError(
+            f"stream offset {v_from} is not on the committed ancestry of "
+            f"version {v_to} (nearest ancestors {end}..{steps[-1][0]}): "
+            "the checkpoint references an orphaned (uncommitted or "
+            "rolled-back) version"
+        )
+    steps.reverse()
+    return steps
+
+
 class _SnapshotStreamReader(DataSourceStreamReader):
     """Version-offset streaming source: each micro-batch covers the files
     ADDED between the start and end versions, with the END version's
@@ -576,37 +610,22 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         # pacing walk stays O(new versions) per trigger, not O(backlog)
         self._steps: dict[int, tuple[int, tuple[str, ...]]] = {}
 
-    def _step(self, v: int) -> tuple[int, tuple[str, ...]]:
+    def _step(
+        self, v: int, header: dict | None = None
+    ) -> tuple[int, tuple[str, ...]]:
+        """(parent, files ADDED) of commit ``v``. ``header`` comes from
+        the caller's walk; a step no walk reached (a mid-version start)
+        reads its own."""
         hit = self._steps.get(v)
         if hit is None:
-            m = _read_manifest(self.table_path, v)
-            pv = int(m.get("parent", 0))
-            prev = (
-                set(_read_manifest(self.table_path, pv)["files"])
-                if pv
-                else set()
-            )
-            hit = (pv, tuple(sorted(set(m["files"]) - prev)))
-            self._steps[v] = hit
+            if header is None:
+                header = dict(_ancestry(self.table_path, v, v - 1)).get(v)
+                if header is None:
+                    raise FileNotFoundError(_manifest_path(self.table_path, v))
+            parent = header["parent"]
+            added = _manifest_diff(self.table_path, parent, v)[0]
+            hit = self._steps[v] = (parent, tuple(added))
         return hit
-
-    def _chain(self, v_from: int, v_to: int) -> list[int]:
-        """Published ancestry (v_from, v_to], oldest first — walked by
-        parent pointer like the change feed, so orphan manifests (lost
-        commit races, rollbacks) never contribute files."""
-        chain: list[int] = []
-        v = v_to
-        while v > v_from:
-            chain.append(v)
-            v = self._step(v)[0]
-        if v != v_from:
-            raise ValueError(
-                f"stream offset {v_from} is not on the committed "
-                f"ancestry of version {v_to}: the checkpoint references "
-                "an orphaned (uncommitted or rolled-back) version"
-            )
-        chain.reverse()
-        return chain
 
     @staticmethod
     def _off_key(off: dict) -> tuple[int, float]:
@@ -649,8 +668,8 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         pending: list[tuple[int, tuple[str, ...], int]] = []
         if "index" in pos:
             pending.append((v0, self._step(v0)[1], int(pos["index"])))
-        for v in self._chain(v0, tip):
-            pending.append((v, self._step(v)[1], 0))
+        for v, header in _window(self.table_path, v0, tip):
+            pending.append((v, self._step(v, header)[1], 0))
         nf, nb = 0, 0
         out = dict(pos)
         for v, files, i in pending:
@@ -691,47 +710,30 @@ class _SnapshotStreamReader(DataSourceStreamReader):
             # only files still present at (and not already present
             # before) the window — same net-files contract as the
             # endpoint diff below, deterministic across replays
-            i_from = int(start.get("index", 0)) if "index" in start else None
-            if i_from is not None:
+            planned: list[str] = []
+            base, consumed = v_from, set()
+            if "index" in start:
                 # mid-version start: the pre-window state is the step's
                 # PARENT plus the consumed slice — v_from's own manifest
                 # would wrongly contain the files still to be emitted
-                pv, sfiles = self._step(v_from)
-                old = (
-                    set(_read_manifest(self.table_path, pv)["files"])
-                    if pv
-                    else set()
-                )
-                old |= set(sfiles[:i_from])
-            else:
-                old = (
-                    set(_read_manifest(self.table_path, v_from)["files"])
-                    if v_from
-                    else set()
-                )
-            present = set(m_to["files"])
-            planned: list[str] = []
-            if i_from is not None:
-                files = self._step(v_from)[1]
+                i_from = int(start["index"])
+                base, files = self._step(v_from)
+                consumed = set(files[:i_from])
                 hi = (
                     int(end["index"])
                     if v_to == v_from and "index" in end
                     else len(files)
                 )
                 planned.extend(files[i_from:hi])
-            for v in self._chain(v_from, v_to):
-                files = self._step(v)[1]
+            for v, header in _window(self.table_path, v_from, v_to):
+                files = self._step(v, header)[1]
                 if v == v_to and "index" in end:
                     files = files[: int(end["index"])]
                 planned.extend(files)
-            added = [r for r in planned if r in present and r not in old]
+            new = set(_manifest_diff(self.table_path, base, v_to)[0])
+            added = [r for r in planned if r in new and r not in consumed]
         else:
-            old = (
-                set(_read_manifest(self.table_path, v_from)["files"])
-                if v_from
-                else set()
-            )
-            added = sorted(set(m_to["files"]) - old)
+            added = _manifest_diff(self.table_path, v_from, v_to)[0]
         # suffix-keyed DV lookup (see _SnapshotBatchReader.partitions)
         return [
             _FilePartition(
@@ -756,74 +758,40 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         History is bounded by vacuum like Delta's CDF: a vacuumed-away
         manifest or data file in the window fails the stream loudly.
 
-        Steps follow the PUBLISHED ancestry (each manifest's recorded
-        parent pointer, walked back from v_to), not consecutive version
-        numbers: orphan manifests — losing optimistic-commit racers,
-        aborted transactions, rollback leftovers — occupy interior
-        numbers the committed chain skips, and diffing v-1 vs v across
-        one would emit never-committed rows as insert@orphan +
-        delete@next with misattributed _commit_version. The winner's
-        manifest records the true parent, so the chain walk never sees
-        them. An ancestry that crosses v_from without touching it (the
-        checkpointed offset was itself an orphan) fails loudly."""
-        chain: list[int] = []
-        v = v_to
-        while v > v_from:
-            chain.append(v)
-            v = int(_read_manifest(self.table_path, v).get("parent", 0))
-        if v != v_from:
-            raise ValueError(
-                f"change-feed offset {v_from} is not on the committed "
-                f"ancestry of version {v_to} (nearest ancestors "
-                f"{v}..{chain[-1]}): the checkpoint references an "
-                "orphaned (uncommitted or rolled-back) version"
-            )
+        Steps follow the PUBLISHED ancestry (:func:`_window`), not
+        consecutive version numbers: orphan manifests — losing
+        optimistic-commit racers, aborted transactions, rollback
+        leftovers — occupy interior numbers the committed chain skips,
+        and diffing v-1 vs v across one would emit never-committed rows
+        as insert@orphan + delete@next with misattributed
+        _commit_version. Each step is :func:`_manifest_diff` of its
+        parent and itself, the diff ``snapshot_change_feed`` reads its
+        window from."""
+        # the STREAM-START mapping resolves every step (physical names
+        # freeze under column mapping), keeping all batches on the
+        # declared schema across historical renames
+        rename = self.rename
+        expect = None if rename else self.expect
+
+        def part(rel, positions, cdf):
+            return _FilePartition(str(self.table_path / rel), positions,
+                                  rename, self.types, expect, cdf=cdf)
+
         parts = []
-        for v in reversed(chain):
-            m_cur = _read_manifest(self.table_path, v)
-            pv = int(m_cur.get("parent", 0))
-            m_prev = (
-                _read_manifest(self.table_path, pv)
-                if pv
-                else {"files": []}
+        for v, header in _window(self.table_path, v_from, v_to):
+            pv = header["parent"]
+            added, removed, grown = _manifest_diff(self.table_path, pv, v)
+            dv_cur = _read_manifest(self.table_path, v).get("dv") or {}
+            dv_prev = (
+                _read_manifest(self.table_path, pv).get("dv") or {}
+                if removed else {}
             )
-            prev_files = set(m_prev.get("files", []))
-            cur_files = set(m_cur.get("files", []))
-            dv_prev = m_prev.get("dv", {}) or {}
-            dv_cur = m_cur.get("dv", {}) or {}
-            # the STREAM-START mapping resolves every step (physical
-            # names freeze under column mapping), keeping all batches on
-            # the declared schema across historical renames
-            rename = self.rename
-            expect = None if rename else self.expect
-            for rel in sorted(cur_files - prev_files):
-                parts.append(_FilePartition(
-                    str(self.table_path / rel), dv_cur.get(_dv_key(rel)),
-                    rename, self.types, expect, cdf=("insert", v, None),
-                ))
-            for rel in sorted(prev_files - cur_files):
-                parts.append(_FilePartition(
-                    str(self.table_path / rel), dv_prev.get(_dv_key(rel)),
-                    rename, self.types, expect,
-                    cdf=("delete", v, None),
-                ))
-            for rel in sorted(cur_files & prev_files):
-                k = _dv_key(rel)
-                if k not in dv_cur:
-                    continue
-                cp = set(_unpack_positions(dv_cur[k]))
-                pp = (
-                    set(_unpack_positions(dv_prev[k]))
-                    if k in dv_prev
-                    else set()
-                )
-                delta = sorted(cp - pp)
-                if delta:
-                    parts.append(_FilePartition(
-                        str(self.table_path / rel), None, rename,
-                        self.types, expect,
-                        cdf=("delete", v, _pack_positions(delta)),
-                    ))
+            parts += [part(rel, dv_cur.get(_dv_key(rel)), ("insert", v, None))
+                      for rel in added]
+            parts += [part(rel, dv_prev.get(_dv_key(rel)), ("delete", v, None))
+                      for rel in removed]
+            parts += [part(rel, None, ("delete", v, pos))
+                      for rel, pos in grown.items()]
         return parts
 
     def read(self, partition: _FilePartition):
@@ -951,16 +919,10 @@ class SnapshotDataSource(DataSource):
             # the oldest such commit on the published chain. A timestamp
             # after the tip streams only FUTURE commits.
             ts = _ts_float(st)
-            import json as _json
-
-            v = current_version(p)
-            start = v
-            while v > 0:
-                raw = _json.loads(_manifest_path(p, v).read_text())
-                if raw.get("ts") is not None and float(raw["ts"]) >= ts:
-                    start = int(raw.get("parent", 0))
-                v = int(raw.get("parent", 0))
-            starting_version = start
+            starting_version = current_version(p)
+            for _v, header in _ancestry(p, starting_version):
+                if header.get("ts") is not None and float(header["ts"]) >= ts:
+                    starting_version = header["parent"]
         elif str(sv).lower() == "latest":
             # only commits AFTER stream start (Delta's 'latest')
             starting_version = current_version(p)

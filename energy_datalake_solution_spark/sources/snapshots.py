@@ -317,9 +317,13 @@ def _commit(
     # manifests (their file list only exists after resolution).
     if op is not None:
         manifest["op"] = op
+    import math
     import time as _time
 
-    manifest["ts"] = round(_time.time(), 3)
+    # floored to the millisecond, never rounded up: a TIMESTAMP AS OF
+    # taken right after the commit returns must find this version
+    now = _time.time()
+    manifest["ts"] = min(math.floor(now * 1000) / 1000, now)
     manifest["n_files"] = len(files)
     if txn_app is not None:
         manifest["txn_app"] = txn_app
@@ -415,7 +419,9 @@ def _commit(
         else (parent_resolved or {}).get("properties")
     )
     if not files and not schema:
-        empty_types = types or _empty_types(table_path, parent_resolved)
+        empty_types = types or _empty_types(
+            table_path, parent, parent_resolved
+        )
         if empty_types:
             manifest["empty_types"] = empty_types
     parent_dist = (
@@ -558,9 +564,10 @@ def _transact(p: Path, attempt, *, txn: int | None = None,
                 raise
 
 
-def _empty_types(p: Path, m: dict | None) -> dict | None:
+def _empty_types(p: Path, parent: int, m: dict | None) -> dict | None:
     """The {column: type} an unmapped table's version listing no files
-    reads as, from its parent ``m``: an unmapped table keeps its schema
+    reads as, from its ``parent`` version, resolved as ``m`` (None when
+    there is none on disk): an unmapped table keeps its schema
     only in file footers, so every commit that empties it (a truncate, a
     purge or delete that leaves no file) records the reader schema at
     hand (the parent's own empty_types, else the widened types map, else
@@ -569,7 +576,7 @@ def _empty_types(p: Path, m: dict | None) -> dict | None:
     no ancestor is left to read."""
     if m is None:
         return None
-    listed = m if m["files"] else _nearest_listed_ancestor(p, m)
+    listed = _nearest_listed_ancestor(p, parent)
     return m.get("empty_types") or (listed and (
         listed.get("types")
         or _footer_sweep(None, Path(p), listed["files"][:1],
@@ -1480,28 +1487,15 @@ def last_txn(table_path, txn_app: str | None = None) -> int:
     Manifests predating the map fall back to the chain walk; a
     vacuumed-away ancestor ends that walk conservatively at -1."""
     p = Path(table_path)
-    v = current_version(p)
-    if v == 0:
-        return -1
-    try:
-        m = _read_manifest(p, v)
-    except FileNotFoundError:
-        return -1
-    # key absent from the map (or no map): walk the chain — a legacy
+    # key absent from the tip's map (or no map): walk the chain — a legacy
     # pre-map stamp for this app may sit below map-carrying commits whose
     # maps never saw it (conservative, never skips a live stamp; a
     # vacuumed ancestor ends the walk at -1)
-    while True:
-        seen = _txn_stamp(m, txn_app)
+    for _v, header in _ancestry(p, current_version(p)):
+        seen = _txn_stamp(header, txn_app)
         if seen >= 0:
             return seen
-        v = m["parent"]
-        if v <= 0:
-            return -1
-        try:
-            m = _read_manifest(p, v)
-        except FileNotFoundError:
-            return -1  # ancestor vacuumed — no older txn survives
+    return -1
 
 
 def snapshot_upsert(
@@ -2405,33 +2399,70 @@ def _read_manifest(table_path, version: int) -> dict:
     return _copy_resolved(base)
 
 
+def _ancestry(p: Path, tip: int, stop: int = 0):
+    """The committed history at and below ``tip``, newest first: yields
+    ``(version, header)`` per version on the tip's parent chain, where
+    ``header`` is the manifest's raw JSON (version, parent, ts, op, txn,
+    txn_app and txns are always top-level there, never behind a delta or
+    a sidecar, so nothing is resolved). Orphan manifests — losing racers,
+    rolled-over versions — are never on the chain. The walk ends above
+    ``stop``, at version 0, or at a manifest no longer on disk (vacuumed
+    history); a caller that must fail on a gap checks where it ended."""
+    v = int(tip)
+    while v > max(stop, 0):
+        try:
+            header = json.loads(_manifest_path(p, v).read_text())
+        except FileNotFoundError:
+            return
+        header.setdefault("parent", 0)
+        yield v, header
+        v = int(header["parent"])
+
+
+def _manifest_diff(
+    p: Path, v_from: int, v_to: int
+) -> tuple[list, list, dict]:
+    """What changed between two versions, from manifest metadata alone:
+    ``(added, removed, grown)``. ``added`` and ``removed`` are sorted file
+    refs; ``grown`` maps each file listed at both versions whose deletion
+    vector gained positions to those newly dead positions, packed. Version
+    0 reads as the empty manifest. A vacuumed version raises
+    FileNotFoundError."""
+    def files_dv(v):
+        m = _read_manifest(p, v) if v else {"files": []}
+        return set(m["files"]), m.get("dv") or {}
+
+    (f_from, dv_from), (f_to, dv_to) = files_dv(v_from), files_dv(v_to)
+    grown: dict[str, str] = {}
+    for f in sorted(f_from & f_to):
+        k = _dv_key(f)  # dv dicts are suffix-keyed (clone inherited refs)
+        if k not in dv_to or dv_to[k] == dv_from.get(k):
+            continue
+        old = set(_unpack_positions(dv_from[k])) if k in dv_from else set()
+        dead = sorted(set(_unpack_positions(dv_to[k])) - old)
+        if dead:
+            grown[f] = _pack_positions(dead)
+    return sorted(f_to - f_from), sorted(f_from - f_to), grown
+
+
 def snapshot_version_as_of(table_path, ts: float) -> int:
     """Delta's TIMESTAMP AS OF: the LATEST version whose commit wall-clock
     stamp is <= ``ts``, resolved by walking the TIP'S PARENT CHAIN (the
-    committed history — exactly snapshot_tail_changes' walk). A losing
-    racer's orphan manifest or a rolled-over version sits on disk but not
-    on the chain, so it can never be resolved to — globbing v*.json could
-    return a version that was never committed history and whose files
-    vacuum is free to delete. Reads raw manifest JSON headers only
-    (version/parent/ts are always top-level, never behind a delta or
-    sidecar). Raises if every chain manifest postdates ``ts`` — same
-    contract as Delta, which refuses a timestamp before the earliest
+    committed history, :func:`_ancestry`). A losing racer's orphan
+    manifest or a rolled-over version sits on disk but not on the chain,
+    so it can never be resolved to — globbing v*.json could return a
+    version that was never committed history and whose files vacuum is
+    free to delete. Raises if every chain manifest postdates ``ts`` —
+    same contract as Delta, which refuses a timestamp before the earliest
     reproducible commit (older history may have been vacuumed). Manifests
     predating the ts stamp (none in practice) are skipped rather than
     guessed at."""
     p = Path(table_path)
-    v = current_version(p)
-    while v > 0:
-        try:
-            raw = json.loads(_manifest_path(p, v).read_text())
-        except FileNotFoundError:
-            break  # vacuumed ancestor: older history is unreachable
-        mts = raw.get("ts")
-        if mts is not None and mts <= ts:
-            # chain walks newest -> oldest, so the first qualifying
-            # version IS the latest one at or before ts
+    for v, header in _ancestry(p, current_version(p)):
+        # newest -> oldest, so the first qualifying version IS the
+        # latest one at or before ts
+        if header.get("ts") is not None and header["ts"] <= ts:
             return v
-        v = int(raw.get("parent", 0))
     raise FileNotFoundError(
         f"no committed version at or before ts={ts} in {table_path}"
     )
@@ -2484,7 +2515,7 @@ def snapshot_read(
         # commit that emptied it recorded their reader schema
         if m.get("empty_types"):
             return spark.createDataFrame([], _types_ddl(m["empty_types"]))
-        listed = _nearest_listed_ancestor(p, m)
+        listed = _nearest_listed_ancestor(p, v)
         first = listed["files"][0] if listed else None
         if first is None or not (p / first).exists():
             raise FileNotFoundError(
@@ -2517,19 +2548,17 @@ def snapshot_read(
     return df.where(where)
 
 
-def _nearest_listed_ancestor(p: Path, m: dict) -> dict | None:
-    """Resolved manifest of the nearest version on ``m``'s parent chain
-    that lists files; None when the chain ends (or reaches a vacuumed
-    manifest) first."""
-    v = int(m.get("parent", 0))
-    while v > 0:
+def _nearest_listed_ancestor(p: Path, v: int) -> dict | None:
+    """Resolved manifest of the nearest version at or below ``v`` on its
+    parent chain that lists files; None when the chain ends (or reaches a
+    vacuumed manifest) first."""
+    for anc_v, _header in _ancestry(p, v):
         try:
-            anc = _read_manifest(p, v)
+            anc = _read_manifest(p, anc_v)
         except FileNotFoundError:
             return None
         if anc["files"]:
             return anc
-        v = int(anc.get("parent", 0))
     return None
 
 
@@ -4440,11 +4469,10 @@ def snapshot_read_incremental(
     pure file diff would over-report."""
     p = Path(table_path)
     v_to = current_version(p) if to_version is None else to_version
-    m_from = _read_manifest(p, since_version) if since_version else {"files": []}
-    m_to = _read_manifest(p, v_to)
-    added = sorted(set(m_to["files"]) - set(m_from.get("files", [])))
+    added = _manifest_diff(p, since_version, v_to)[0]
     if not added:
         return snapshot_read(spark, p, version=v_to).limit(0)
+    m_to = _read_manifest(p, v_to)
     sch = m_to.get("schema")
     # as in snapshot_read: the mapping must see every physical generation
     df = _read_files_with_dv(spark, p, added, m_to.get("dv"),
@@ -4505,18 +4533,18 @@ def snapshot_change_feed(
     'update_preimage' / 'update_postimage' instead (Delta's CDF update
     semantics). Pairing degrades gracefully: an image whose origin file
     left the window's kept set (compacted away, or a multi-commit window
-    rewrote it) falls back to insert/delete, never silently drops."""
+    rewrote it) falls back to insert/delete, never silently drops.
+
+    The file-level window — added, removed and grown deletion vectors —
+    is :func:`_manifest_diff`, the same diff the streaming change feed
+    plans each commit step from."""
     from pyspark.sql import functions as F
 
     p = Path(table_path)
     v_to = current_version(p) if v_to is None else v_to
     m_from, m_to = _read_manifest(p, v_from), _read_manifest(p, v_to)
-    from_files, to_files = set(m_from["files"]), set(m_to["files"])
-    dv_from = m_from.get("dv", {}) or {}
-    dv_to = m_to.get("dv", {}) or {}
-    added = sorted(to_files - from_files)
-    removed = sorted(from_files - to_files)
-    kept = sorted(from_files & to_files)
+    added, removed, grown = _manifest_diff(p, v_from, v_to)
+    dv_from, dv_to = m_from.get("dv"), m_to.get("dv")
     sch = m_to.get("schema")
 
     def read(rels, dv, m, **kw):
@@ -4556,23 +4584,15 @@ def snapshot_change_feed(
         ins, dels = ins.select(*cols), dels.select(*cols)
     net_ins = ins.exceptAll(dels)
     net_del = dels.exceptAll(ins)
-    # kept files whose deletion vectors GREW: those positions were alive
-    # at v_from and dead at v_to — deletes with no matching rewrite
-    grown: dict[str, list] = {}
-    for f in kept:
-        k = _dv_key(f)  # dv dicts are suffix-keyed (clone inherited refs)
-        new_pos = set(_unpack_positions(dv_to[k])) if k in dv_to else set()
-        old_pos = set(_unpack_positions(dv_from[k])) if k in dv_from else set()
-        delta = sorted(new_pos - old_pos)
-        if delta:
-            grown[k] = _pack_positions(delta)
     pre_tagged = None  # grown-delta rows WITH (_fp, _ri), updates mode
     if grown:
-        # read ONLY the delta positions of the grown files; the from-side
-        # types map types the rows that DIED
+        # kept files whose deletion vectors GREW: those positions were
+        # alive at v_from and dead at v_to — deletes with no matching
+        # rewrite. Read ONLY the delta positions; the from-side types map
+        # types the rows that DIED
         matches = read(
-            sorted(f for f in kept if _dv_key(f) in grown), grown, m_from,
-            _tag=updates_as == "updates", _keep=True,
+            sorted(grown), {_dv_key(f): pos for f, pos in grown.items()},
+            m_from, _tag=updates_as == "updates", _keep=True,
         )
         if updates_as == "updates":
             pre_tagged = matches  # pairing decides delete vs preimage
@@ -4974,15 +4994,12 @@ def _last_zorder_files(p: Path, tip: int) -> set[str] | None:
     """File list of the newest op=="zorder" manifest at or below ``tip``
     still on disk, or None. Walks the parent chain (vacuumed ancestors
     end the walk — incremental maintenance then falls back to full)."""
-    v = tip
-    while v > 0:
-        try:
-            m = _read_manifest(p, v)
-        except FileNotFoundError:
-            return None
-        if m.get("op") == "zorder":
-            return set(m["files"])
-        v = m.get("parent", 0)
+    for v, header in _ancestry(p, tip):
+        if header.get("op") == "zorder":
+            try:
+                return set(_read_manifest(p, v)["files"])
+            except FileNotFoundError:
+                return None
     return None
 
 
@@ -6174,29 +6191,17 @@ def snapshot_tail_changes(
     table = Path(table_path)
     progress = _table(progress_path)
     consumed = last_txn(progress, app_id)  # -1 on first run
-    tip = current_version(table)
-    if tip == 0:
-        return 0
-    # committed history = the tip's parent chain (orphan manifests from
-    # losing racers never appear on it)
-    chain: list[int] = []
-    v = tip
-    while v > 0 and v > consumed:
-        chain.append(v)
-        try:
-            raw = _read_manifest(table, v)
-        except FileNotFoundError:
-            break  # vacuumed ancestor: consumption starts at this gap
-        v = int(raw.get("parent", 0))
+    # committed history = the tip's parent chain down to the consumed
+    # version (orphan manifests from losing racers never appear on it);
+    # a vacuumed gap ends it, and the change feed of the oldest step then
+    # fails on the missing parent
+    chain = list(_ancestry(table, current_version(table), stop=consumed))
     chain.reverse()
     if max_versions is not None:
         chain = chain[:max_versions]
     n = 0
-    for ver in chain:
-        try:
-            prev = int(_read_manifest(table, ver).get("parent", 0))
-        except FileNotFoundError:
-            continue
+    for ver, header in chain:
+        prev = header["parent"]
         if prev == 0:
             # first version: its changes are its full contents as inserts
             from pyspark.sql import functions as F
@@ -6227,6 +6232,9 @@ def snapshot_history(table_path) -> list[dict]:
     their manifests, as in any format where history retention is the
     vacuum policy); manifests predating the op/ts stamps report None."""
     p = Path(table_path)
+    # one pointer read: a commit landing mid-loop must not mark two
+    # entries current, or none
+    tip = current_version(p)
     out = []
     for mf in sorted(
         (p / _MANIFEST_DIR).glob("v*.json"),
@@ -6246,7 +6254,7 @@ def snapshot_history(table_path) -> list[dict]:
                 "n_files": m.get("n_files", len(m.get("files", []))),
                 "txn": m.get("txn"),
                 "txn_app": m.get("txn_app"),
-                "current": m["version"] == current_version(p),
+                "current": m["version"] == tip,
             }
         )
     return out

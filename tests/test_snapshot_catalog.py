@@ -3044,6 +3044,28 @@ def test_delete_where_parenthesized_bare_condition(spark, tmp_path):
     assert keys() == [1, 3]
 
 
+def test_select_where_parenthesized_bare_condition(spark, tmp_path):
+    """``SELECT ... FROM t WHERE (flag)`` filters by ``flag``, though
+    Spark's parser reads WHERE there as t's alias and ``(flag)`` as its
+    column list: a registered table returned every row unfiltered. The
+    same holds under time travel and inside a subquery."""
+    from energy_datalake_solution_spark.sources.snapshots import (
+        current_version,
+    )
+
+    cat = SnapshotCatalog(spark)
+    cat.sql(f"CREATE TABLE sw (flag boolean) USING snapshot "
+            f"LOCATION '{tmp_path / 'sw'}'")
+    cat.sql("INSERT INTO sw VALUES (true), (false), (false)")
+    v = current_version(tmp_path / "sw")
+    for q in ("SELECT * FROM sw WHERE (flag)",
+              "SELECT * FROM sw where(flag)",
+              f"SELECT * FROM sw VERSION AS OF {v} WHERE (flag)",
+              "SELECT * FROM (SELECT * FROM sw WHERE (flag)) x"):
+        assert [r.flag for r in cat.sql(q).collect()] == [True], q
+    assert cat.sql("SELECT * FROM sw WHERE flag").count() == 1
+
+
 def test_parser_refusal_is_quiet(spark, tmp_path, capfd):
     """A statement the parser rejects raises; pyspark's JSON ERROR
     record of the parse failure (written for a refusal that carries a

@@ -836,6 +836,40 @@ def test_stream_starting_timestamp_and_latest(ds_spark, tmp_path):
         }).streamReader(None)
 
 
+def test_stream_starting_timestamp_after_vacuumed_history(ds_spark, tmp_path):
+    """startingTimestamp on a vacuumed table walks only the kept history:
+    a timestamp inside it streams the commits stamped at or after it
+    (the walk read every manifest down to version 1 and failed on the
+    first vacuumed one)."""
+    import json as _json
+
+    from energy_datalake_solution_spark.sources.snapshots import (
+        _manifest_path,
+        snapshot_vacuum,
+    )
+
+    spark = ds_spark
+    t = tmp_path / "t"
+    snapshot_write(_df(spark, 0, 3, "a"), t)   # v1
+    snapshot_append(_df(spark, 3, 6, "b"), t)  # v2
+    snapshot_append(_df(spark, 6, 9, "c"), t)  # v3
+    snapshot_vacuum(t, keep_versions=2)        # v1's manifest is gone
+    ts_v3 = _json.loads(_manifest_path(t, 3).read_text())["ts"]
+    r = SnapshotDataSource(options={
+        "path": str(t), "startingTimestamp": str(ts_v3),
+    }).streamReader(None)
+    assert r.initialOffset() == {"version": 2}
+    rows = [
+        row
+        for part in r.partitions(r.initialOffset(), r.latestOffset())
+        for batch in r.read(part)
+        for row in batch.to_pylist()
+    ]
+    assert sorted((x["k"], x["v"]) for x in rows) == [
+        (6, "c"), (7, "c"), (8, "c")
+    ]
+
+
 def test_batch_time_travel_via_timestamp_option(ds_spark, tmp_path):
     """timestampAsOf resolves the latest commit stamped at-or-before the
     given time (Delta's batch TIMESTAMP AS OF); schema resolves at the

@@ -2500,6 +2500,51 @@ def test_version_as_of_ignores_orphans_and_rolled_over_versions(spark, tmp_path)
     assert snapshot_read(spark, t, as_of_ts=t_mid).count() == 5
 
 
+def test_history_reads_the_pointer_once(spark, tmp_path, monkeypatch):
+    """DESCRIBE HISTORY marks exactly one entry current even when the
+    pointer moves while it lists the manifests (here a rollback lands
+    right after the first pointer read): the pointer is read once."""
+    from energy_datalake_solution_spark.sources import snapshots as S
+
+    t = tmp_path / "t"
+    for i in range(3):
+        snapshot_append(_df(spark, i, i + 1, "a"), t)
+    real = S.current_version
+
+    def racing(p):
+        v = real(p)
+        if v == 3:
+            snapshot_rollback(t, 2)
+        return v
+
+    monkeypatch.setattr(S, "current_version", racing)
+    assert [h["version"] for h in S.snapshot_history(t) if h["current"]] \
+        == [3]
+
+
+def test_commit_stamp_never_postdates_the_commit(spark, tmp_path,
+                                                 monkeypatch):
+    """The manifest's ts is floored to the millisecond, never rounded up:
+    TIMESTAMP AS OF a clock reading taken as the commit returns finds the
+    version (a stamp rounded up to the next millisecond found none)."""
+    import json
+    import math
+    import time
+
+    from energy_datalake_solution_spark.sources import snapshots as S
+
+    t = tmp_path / "t"
+    p = S._table(t)
+    files = S._write_files(_df(spark, 0, 3, "a"), p)
+    x = math.floor(time.time()) + 0.0006
+    with monkeypatch.context() as mp:
+        mp.setattr(time, "time", lambda: x)
+        v = S._commit(p, files, parent=0)
+    ts = json.loads(S._manifest_path(p, v).read_text())["ts"]
+    assert ts <= x
+    assert S.snapshot_version_as_of(t, x) == v
+
+
 def _chain_versions(p, tip):
     import json as _json
 
