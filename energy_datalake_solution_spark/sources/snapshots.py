@@ -3711,8 +3711,7 @@ def _read_files_with_dv(
             df = _read_files_with_dv(spark, p, sub, dv, merge_schema, types,
                                      _tag=_tag, _prov=_prov, _keep=_keep)
             for ph in sorted(lacking):
-                expr, t = defaults[ph]
-                df = df.withColumn(ph, F.expr(expr).cast(t))
+                df = df.withColumn(ph, _default_col(*defaults[ph]))
             out = df if out is None else out.unionByName(
                 df, allowMissingColumns=True
             )
@@ -5405,6 +5404,16 @@ def _schema_defaults(schema: dict | None) -> dict:
     }
 
 
+def _default_col(expr: str, dtype: str):
+    """A column DEFAULT read on a file that lacks the column: the value,
+    typed, and NULLABLE as the stored column is (NULLIF with NULL is the
+    identity), so a read's schema never depends on which files it
+    lists."""
+    from pyspark.sql import functions as F
+
+    return F.nullif(F.expr(expr).cast(dtype), F.lit(None))
+
+
 @functools.lru_cache(maxsize=65536)
 def _footer_names(abs_path: str) -> frozenset:
     """Column names physically present in one parquet file's footer —
@@ -5430,7 +5439,7 @@ def _apply_column_mapping(
 
     def _absent(c):
         if c.get("default") is not None:
-            return F.expr(c["default"]).cast(c["type"])
+            return _default_col(c["default"], c["type"])
         return F.lit(None).cast(c["type"])
 
     return df.select(
