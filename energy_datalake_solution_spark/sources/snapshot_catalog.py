@@ -143,12 +143,19 @@ Forms on the pattern table (Spark rejects or misparses them):
 
 Every other statement goes to ``spark.sql`` after the registered views
 are re-pointed at their tables' CURRENT versions. Registration
-materializes a temp view over ``spark.read.format("snapshot")`` — one
-InputPartition per data file from ONE resolved manifest, so each query
-reads a consistent snapshot; re-registration per ``sql()`` call is
-O(manifest metadata) and gives catalog-table freshness. At 100 TB the
-per-query cost is the manifest resolution (O(change) amortized through
-the delta-manifest cache) — never a file listing.
+materializes a temp view over ``snapshots.snapshot_read`` at ONE
+resolved version: Spark's native parquet reader over that manifest's
+file list, with its deletion vectors, column mapping, defaults and
+widened types applied, so each query reads a consistent snapshot.
+No Python worker runs, and for up to 32 Spark-written files of a table
+without column mapping the view is planned on the driver from the
+manifest and one footer, with no Spark job (see
+``snapshots._read_files_with_dv``).
+Re-registration per ``sql()`` call re-plans only tables whose version
+moved, and gives catalog-table freshness. At 100 TB the per-query cost is the manifest resolution
+(O(change) amortized through the delta-manifest cache) — never a file
+listing. The Python data source (``snapshot_datasource``) serves only
+``read_stream``.
 
 Reference parity: the reference's tables are Glue-catalog entries over
 S3 parquet queried by name from Athena SQL (athena_queries/*.sql,
@@ -700,15 +707,9 @@ class SnapshotCatalog:
         self._views: dict[str, str] = {}  # named views, creation order
         self._txn = None  # open BEGIN TRANSACTION, if any
         # (path, version, manifest ts) each registered view is pinned at —
-        # lets _refresh skip the Python-data-source reload for tables
-        # whose resolved version did not move (see _register)
+        # lets _refresh skip re-planning tables whose resolved version
+        # did not move (see _register)
         self._pinned: dict[str, tuple] = {}
-        from .snapshot_datasource import SnapshotDataSource
-
-        try:
-            spark.dataSource.register(SnapshotDataSource)
-        except Exception:
-            pass  # already registered in this session
 
     # -- DDL ---------------------------------------------------------------
     def create_table(
@@ -865,13 +866,8 @@ class SnapshotCatalog:
         v = int(version) if version is not None else \
             S.snapshot_version_as_of(path, _ts_literal(_cut(text, ts)))
         view = f"{name}__asof_v{v}"
-        (
-            self.spark.read.format("snapshot")
-            .option("path", path)
-            .option("version", str(v))
-            .load()
+        S.snapshot_read(self.spark, path, version=v) \
             .createOrReplaceTempView(view)
-        )
         return view
 
     def _pin_changes(self, name: str, v1: int, v2: int | None = None) -> str:
@@ -1798,10 +1794,7 @@ class SnapshotCatalog:
         """(path, manifest, read-schema fields, {col: schema meta}, NOT
         NULL columns) of a registered name."""
         path, v, man = self._manifest(name)
-        fields = (
-            self.spark.read.format("snapshot").option("path", str(path))
-            .option("version", str(v)).load().schema.fields
-        )
+        fields = S.snapshot_read(self.spark, path, version=v).schema.fields
         meta = {
             c["name"]: c for c in (man.get("schema") or {}).get("cols", [])
         }
@@ -1940,6 +1933,14 @@ class SnapshotCatalog:
                 f"table {name!r} is pinned to VERSION AS OF {version} — "
                 "a time-travel registration has no change stream"
             )
+        # registering the Python source starts Spark's data-source
+        # lookup worker, so only a stream pays for it
+        from .snapshot_datasource import SnapshotDataSource
+
+        try:
+            self.spark.dataSource.register(SnapshotDataSource)
+        except Exception:
+            pass  # already registered in this session
         reader = (
             self.spark.readStream.format("snapshot")
             .option("path", path)
@@ -1980,34 +1981,27 @@ class SnapshotCatalog:
             staged = self._txn._staged_version(path)
             if staged is not None:
                 version = staged
-        # The data-source reader pins current_version(path) at instance
-        # creation when no version option is passed (snapshot_datasource
-        # .py), so the view's pin is fully determined by (path, resolved
-        # version, that manifest's identity). Re-resolving that pin in
-        # this process (a pointer-file and a manifest read) and SKIPPING
-        # the reload when it did not move makes _refresh O(changed
-        # tables) instead of one Python-data-source load() — a Python
-        # worker round-trip for schema resolution — per registered table
-        # per statement: a multi-table session previously re-paid every
-        # table's load on every DML. The identity is the manifest's
-        # commit stamp: a table dropped and recreated at the same path
-        # can reach the same version number, and must not keep serving
-        # the old table's view.
+        # The view reads snapshot_read at the version resolved here, so
+        # its pin is (path, that version, that manifest's identity) by
+        # construction. Skipping the re-plan when the pin did not move
+        # makes _refresh O(changed tables), not one planned read (a
+        # manifest resolve and a footer) per registered table per
+        # statement. The identity is the manifest's commit stamp: a table
+        # dropped and recreated at the same path can reach the same
+        # version number, and must not keep serving the old table's view.
         v = S.current_version(path) if version is None else version
         try:
             ts = json.loads(S._manifest_path(path, v).read_text()).get("ts")
         except FileNotFoundError:
-            ts = None  # the load below fails loudly on a missing version
+            ts = None  # snapshot_read fails loudly on a missing version
         pin = (str(path), v, ts)
         if (
             self._pinned.get(name) == pin
             and self.spark.catalog.tableExists(name)
         ):
             return
-        reader = self.spark.read.format("snapshot").option("path", path)
-        if version is not None:
-            reader = reader.option("version", str(version))
-        reader.load().createOrReplaceTempView(name)
+        S.snapshot_read(self.spark, path, version=v) \
+            .createOrReplaceTempView(name)
         self._pinned[name] = pin
 
 

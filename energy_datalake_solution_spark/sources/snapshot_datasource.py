@@ -9,6 +9,15 @@ so a snapshot table is consumed like any Spark source (joins, SQL views,
 Structured Streaming triggers, checkpointed exactly-once progress — all
 free from the engine), instead of only through this package's Python API.
 
+Who uses which half: ``SnapshotCatalog`` views and every library read
+go through ``snapshots.snapshot_read`` (Spark's native parquet reader,
+planned on the driver with no Python process); the catalog registers
+this source only for ``read_stream``. The batch reader below serves
+external ``format("snapshot")`` callers, and the writers serve
+``df.write`` / ``writeStream``. Registering the source starts Spark's
+Python data-source lookup worker, and a batch read runs each file in a
+Python worker with no filter or column pushdown.
+
 Batch read: one InputPartition PER DATA FILE, planned from ONE resolved
 manifest — a consistent snapshot no matter what writers do during the
 scan, with the file's deletion-vector positions shipped inside the

@@ -835,6 +835,27 @@ def _footer_sweep(spark: SparkSession | None, p: Path, rels: list[str], fn) -> l
     return [run(rel) for rel in rels]
 
 
+@functools.lru_cache(maxsize=65536)
+def _written_schema(abs_path: str):
+    """The StructType Spark recorded in one parquet file's footer when it
+    wrote the file (its row-metadata key), which is the schema Spark's
+    own inference returns for that file; None for files other writers
+    made (the Python data source writer, INT96 or nanosecond files from
+    other tools), or a type this pyspark cannot name. Cacheable forever:
+    data files are immutable. Executor-safe (pure pyarrow, no
+    session)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    written = (pq.read_schema(abs_path).metadata or {}).get(_SPARK_ROW_METADATA)
+    if not written:
+        return None
+    try:
+        return StructType.fromJson(json.loads(written))
+    except (ValueError, KeyError, TypeError):
+        return None
+
+
 def _file_footer_types(path: str) -> dict:
     """One file's {column: Spark type} from its parquet footer — the
     per-task unit of the distributed type sweep (executor-safe: pure
@@ -846,14 +867,9 @@ def _file_footer_types(path: str) -> dict:
     arrow schema."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StructType
 
-    arrow = pq.read_schema(path)
-    written = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
-    schema = (
-        StructType.fromJson(json.loads(written))
-        if written
-        else from_arrow_schema(arrow)
+    schema = _written_schema(os.path.abspath(path)) or from_arrow_schema(
+        pq.read_schema(path)
     )
     return {
         f.name: f.dataType.simpleString()
@@ -3683,7 +3699,14 @@ def _read_files_with_dv(
     promotion per file (INT32 files surface as bigint, FLOAT as double),
     which mergeSchema cannot do (mixed widths are a merge conflict), and
     columns a pre-evolution file lacks still read as NULL. Without it,
-    ``merge_schema`` unions the footers' schemas.
+    ``merge_schema`` unions the footers' schemas (a Spark job). Otherwise
+    the read is planned on the driver: each scan's schema is the one
+    Spark wrote into the footer its own inference would open (the first
+    of the sorted paths), read once per file and cached, so planning
+    starts no schema job; a footer without that record (another
+    writer's file) leaves the inference to Spark. (A scan of more than
+    32 paths still starts Spark's parallel file-listing job:
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold``.)
 
     ``schema`` (the manifest's column-mapping meta) activates column
     DEFAULTs: a file that physically LACKS a defaulted column reads it
@@ -3716,16 +3739,24 @@ def _read_files_with_dv(
                 df, allowMissingColumns=True
             )
         return out
-    reader = spark.read
-    if types:
-        reader = reader.schema(
-            _types_ddl_with_prov(types) if _prov else _types_ddl(types)
-        )
-    elif merge_schema:
-        reader = reader.option("mergeSchema", "true")
-
     def scan(files: list[str], tag: bool) -> DataFrame:
-        df = reader.parquet(*[str(p / f) for f in files])
+        paths = [str(p / f) for f in files]
+        reader = spark.read
+        if types:
+            reader = reader.schema(
+                _types_ddl_with_prov(types) if _prov else _types_ddl(types)
+            )
+        elif merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            # without mergeSchema Spark infers from ONE footer: the first
+            # of its qualified paths in sorted order (ParquetUtils.
+            # splitFiles)
+            first = min(os.path.normpath(os.path.abspath(f)) for f in paths)
+            written = _written_schema(first)
+            if written is not None:
+                reader = reader.schema(written)
+        df = reader.parquet(*paths)
         if not tag:
             return df if _prov else _strip_prov(df)
         # select (not drop) the kept columns: the _metadata pseudo-

@@ -114,7 +114,9 @@ _SHAPES = {
     "generated_and_identity": _generated_and_identity,
     "mor_deletion_vectors": _mor_deletion_vectors,
     "widened_type": _widened_type,
+    "truncated_after_vacuum": _truncated_after_vacuum,
     "int96": _int96,
+    "timestamp_ntz": _timestamp_ntz,
 }
 
 

@@ -1,4 +1,5 @@
-"""Repo-root hygiene: no stray artifacts in the tracked tree.
+"""Repo hygiene: no stray artifacts in the tracked tree, and no batch
+read of a snapshot table through the Python data source in the catalog.
 
 Round 12 accidentally committed a shell-redirect file whose name contained
 double quotes (impossible to check out on Windows). This guard pins the
@@ -8,6 +9,7 @@ silently land again.
 
 from __future__ import annotations
 
+import ast
 import re
 import subprocess
 from pathlib import Path
@@ -93,3 +95,26 @@ def test_no_windows_illegal_filenames_tracked():
     ).stdout.decode()
     bad = [p for p in out.split("\0") if p and WINDOWS_ILLEGAL.search(p)]
     assert bad == [], f"tracked paths illegal on Windows: {bad}"
+
+
+def test_catalog_reads_snapshot_tables_natively():
+    """SnapshotCatalog plans every batch view with ``snapshot_read``
+    (Spark's native parquet reader, planned on the driver). The Python
+    ``snapshot`` source is only its stream reader: a batch
+    ``read.format("snapshot")`` would start Python workers per view."""
+    src = (
+        REPO_ROOT / "energy_datalake_solution_spark" / "sources"
+        / "snapshot_catalog.py"
+    ).read_text()
+    readers = [
+        node.func.value.attr
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "format"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "snapshot"
+    ]
+    assert readers == ["readStream"]
