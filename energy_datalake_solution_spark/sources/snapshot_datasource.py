@@ -742,6 +742,12 @@ class _SnapshotStreamReader(DataSourceStreamReader):
             new = set(_manifest_diff(self.table_path, base, v_to)[0])
             added = [r for r in planned if r in new and r not in consumed]
         else:
+            if v_from:
+                # the endpoint diff is right only for a start on the
+                # committed chain: an orphan the checkpoint recorded
+                # raises, as the paced reader and the change feed do (a
+                # stream from 0 needs only the end version)
+                _window(self.table_path, v_from, v_to)
             added = _manifest_diff(self.table_path, v_from, v_to)[0]
         # suffix-keyed DV lookup (see _SnapshotBatchReader.partitions)
         return [

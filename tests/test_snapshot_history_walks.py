@@ -214,11 +214,13 @@ def _check_plain_stream(spark, case, c):
             (8, "e"), (9, "e")
         ]
     else:
-        # unpaced: an orphan start is diffed as it stands (v3 holds the
-        # zordered copy of v1's rows, so v1's own files count as added)
-        assert _values(_rows(r, {"version": 3}, {"version": 4})) == [
-            (k, "a") for k in range(4)
-        ] + [(4, "b"), (5, "b")]
+        # an orphan start fails loudly, paced or not: diffed as it
+        # stands it would re-emit v1's rows (v3 holds their zordered copy)
+        with pytest.raises(ValueError, match="not on the committed"):
+            r.partitions({"version": 3}, {"version": 4})
+        assert _values(_rows(r, {"version": 1}, {"version": 4})) == [
+            (4, "b"), (5, "b")
+        ]
         paced2 = _stream(c.t, maxFilesPerTrigger=100, startingVersion=3)
         with pytest.raises(ValueError, match="not on the committed"):
             paced2.latestOffset()
