@@ -1934,13 +1934,11 @@ class SnapshotCatalog:
                 "a time-travel registration has no change stream"
             )
         # registering the Python source starts Spark's data-source
-        # lookup worker, so only a stream pays for it
+        # lookup worker, so only a stream pays for it (registering again
+        # replaces the entry)
         from .snapshot_datasource import SnapshotDataSource
 
-        try:
-            self.spark.dataSource.register(SnapshotDataSource)
-        except Exception:
-            pass  # already registered in this session
+        self.spark.dataSource.register(SnapshotDataSource)
         reader = (
             self.spark.readStream.format("snapshot")
             .option("path", path)

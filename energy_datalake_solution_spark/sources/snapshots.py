@@ -842,8 +842,8 @@ def _written_schema(abs_path: str):
     own inference returns for that file; None for files other writers
     made (the Python data source writer, INT96 or nanosecond files from
     other tools), or a type this pyspark cannot name. Cacheable forever:
-    data files are immutable. Executor-safe (pure pyarrow, no
-    session)."""
+    data files are immutable; every caller shares the one StructType, so
+    none may mutate it. Executor-safe (pure pyarrow, no session)."""
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
@@ -3739,6 +3739,7 @@ def _read_files_with_dv(
                 df, allowMissingColumns=True
             )
         return out
+
     def scan(files: list[str], tag: bool) -> DataFrame:
         paths = [str(p / f) for f in files]
         reader = spark.read
