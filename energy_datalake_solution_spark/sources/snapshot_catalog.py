@@ -150,9 +150,9 @@ widened types applied, so each query reads a consistent snapshot.
 No Python worker runs, and for up to 32 Spark-written files of a table
 without column mapping the view is planned on the driver from the
 manifest and one footer, with no Spark job (see
-``snapshots._read_files_with_dv``).
-Re-registration per ``sql()`` call re-plans only tables whose version
-moved, and gives catalog-table freshness. At 100 TB the per-query cost is the manifest resolution
+``snapshots._read_files_with_dv``). Re-registration per ``sql()`` call
+re-plans only tables whose version moved, and gives catalog-table
+freshness. At 100 TB the per-query cost is the manifest resolution
 (O(change) amortized through the delta-manifest cache) — never a file
 listing. The Python data source (``snapshot_datasource``) serves only
 ``read_stream``.
