@@ -406,3 +406,68 @@ def test_dml_commits_pinned_manifest(spark, seeded, tmp_path, case):
             assert post_dv[S._dv_key(f)] == pre_dv[S._dv_key(f)]
 
     assert _rows(spark, t) == sorted(model(rows_pre))
+
+
+# -- the merge-on-read cap: ``cap`` affected rows commit MOR, one more CoW ---
+
+CAP = 3
+
+
+def _kv_src(spark, keys):
+    return spark.createDataFrame(
+        [(k, k) for k in keys], "k bigint, v bigint"
+    ).coalesce(1)
+
+
+BOUNDARY = {
+    "delete-where": lambda spark, t, n: S.snapshot_delete_where(
+        spark, t, f"k < {n}", max_deleted_rows=CAP
+    ),
+    "update-where": lambda spark, t, n: S.snapshot_update_where(
+        spark, t, f"k < {n}", {"v": "v + 100"}, max_updated_rows=CAP
+    ),
+    "merge-update": lambda spark, t, n: S.snapshot_merge(
+        spark, _kv_src(spark, range(n)), t, ["k"],
+        matched_update={"v": "s.v + 100"}, not_matched_insert=False,
+    ),
+    "merge-delete": lambda spark, t, n: S.snapshot_merge(
+        spark, _kv_src(spark, range(n)), t, ["k"],
+        matched_delete=True, not_matched_insert=False,
+    ),
+    "merge-by-source-update": lambda spark, t, n: S.snapshot_merge(
+        spark, _kv_src(spark, range(n, 20)), t, ["k"],
+        not_matched_insert=False,
+        not_matched_by_source_update={"v": "t.v + 100"},
+    ),
+    "merge-by-source-delete": lambda spark, t, n: S.snapshot_merge(
+        spark, _kv_src(spark, range(n, 20)), t, ["k"],
+        not_matched_insert=False, not_matched_by_source_delete=True,
+    ),
+}
+
+
+@pytest.mark.parametrize("affected", [CAP, CAP + 1], ids=["at-cap", "over-cap"])
+@pytest.mark.parametrize("case", sorted(BOUNDARY))
+def test_cap_boundary(spark, tmp_path, monkeypatch, case, affected):
+    """Each statement affects ``affected`` of 20 rows (k 0..19 in two
+    range-split files): at the cap it grows deletion vectors and keeps
+    every file; one row over, it rewrites the files it touched."""
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", CAP)
+    t = tmp_path / "t"
+    S.snapshot_write(
+        spark.range(20).selectExpr("id AS k", "id AS v"), t,
+        stats_cols=["k"], n_files=2,
+    )
+    pre = _manifest(t)
+    BOUNDARY[case](spark, t, affected)
+    post = _manifest(t)
+    dv = post.get("dv") or {}
+    if affected <= CAP:
+        assert set(pre["files"]) <= set(post["files"])
+        assert sum(len(S._unpack_positions(e)) for e in dv.values()) == affected
+    else:
+        assert not set(pre["files"]) <= set(post["files"])
+        assert not dv
+    assert S.snapshot_read(spark, t).count() == (
+        20 - affected if "delete" in case else 20
+    )
