@@ -84,9 +84,11 @@ from .snapshots import (
     _footer_types,
     _manifest_diff,
     _manifest_path,
+    _nearest_listed_ancestor,
     _read_manifest,
     _unpack_positions,
     _wider_type,
+    _written_schema,
     current_version,
 )
 
@@ -315,9 +317,9 @@ def _footer_schema(path: str):
 
 def _expected_names(table_path: Path, rels: list) -> list:
     """Declared column order for a file set: the first-seen-order union
-    of the files' footer (name, arrow type) fields — matching pa_unify /
-    the engine-declared schema, with the type kept so a file MISSING the
-    column can emit a correctly-typed all-NULL array (Spark's vectorized
+    of the files' footer (name, arrow type) fields — matching the
+    declared schema (_spark_schema_for), with the type kept so a file
+    MISSING the column can emit a correctly-typed all-NULL array (Spark's vectorized
     reader rejects untyped null arrays). Footer reads are metadata-only
     and cached (immutable files)."""
     fields: list = []
@@ -353,41 +355,56 @@ def _typed_nulls(n: int, ddl: str | None):
 
 def _spark_schema_for(table_path: Path, version: int):
     """Merged Spark schema of a version's files (logical names when the
-    table is column-mapped), via pyarrow footers — no JVM needed at
-    datasource-schema time; footers cached (immutable files)."""
+    table is column-mapped), from their footers: no JVM needed at
+    datasource-schema time; footers cached (immutable files). A footer
+    Spark wrote types its columns as Spark wrote them (``_written_schema``:
+    the parquet types alone read a ``timestamp_ntz`` as ``timestamp``);
+    other writers' files type through arrow. A version listing no files
+    types as ``snapshot_read`` types it: by the declared mapping, else by
+    the reader schema the emptying commit recorded, else by the first
+    footer of the nearest earlier version that lists files."""
     from pyspark.sql.pandas.types import from_arrow_schema
-
-    m = _read_manifest(table_path, version)
-    sch = None
-    for rel in m["files"]:
-        s = _footer_schema(str(table_path / rel))
-        sch = s if sch is None else pa_unify(sch, s)
-    mapping = m.get("schema")
-    if sch is None:
-        # schema-only version (empty-table DDL): the declared mapping IS
-        # the schema — no footer exists to infer from
-        if mapping:
-            from pyspark.sql.types import StructField, StructType
-
-            return StructType([
-                StructField(c["name"], _ddl_type(c["type"]), True)
-                for c in mapping["cols"]
-            ])
-        raise ValueError(f"version {version} of {table_path} lists no files")
     from pyspark.sql.types import StructField, StructType
 
+    m = _read_manifest(table_path, version)
+    mapping = m.get("schema")
+    if not m["files"] and not mapping:
+        if m.get("empty_types"):
+            return StructType([
+                StructField(c, _ddl_type(t), True)
+                for c, t in m["empty_types"].items()
+            ])
+        listed = _nearest_listed_ancestor(table_path, version)
+        if listed is None:
+            raise ValueError(
+                f"version {version} of {table_path} lists no files"
+            )
+        m = {**listed, "files": listed["files"][:1]}
+    fields: dict = {}
+    for rel in m["files"]:
+        path = str(table_path / rel)
+        written = _written_schema(os.path.abspath(path)) or from_arrow_schema(
+            _footer_schema(path)
+        )
+        for f in written.fields:
+            fields.setdefault(f.name, f.dataType)
+    if not fields:
+        # schema-only version (empty-table DDL): the declared mapping IS
+        # the schema — no footer exists to infer from
+        return StructType([
+            StructField(c["name"], _ddl_type(c["type"]), True)
+            for c in mapping["cols"]
+        ])
     # every column is NULLABLE at the table level regardless of footer
     # nullability: additive evolution NULL-fills pre-evolution files, and
     # deletion-vector filtering must never promise non-null to codegen.
     # Reserved provenance columns (MOR update appends) never surface —
     # the same strip contract as the library read paths.
-    spark_schema = StructType(
-        [
-            StructField(f.name, f.dataType, True)
-            for f in from_arrow_schema(sch).fields
-            if f.name not in _PROV_COLS
-        ]
-    )
+    spark_schema = StructType([
+        StructField(name, dtype, True)
+        for name, dtype in fields.items()
+        if name not in _PROV_COLS
+    ])
 
     types = m.get("types")
     if types:
@@ -466,20 +483,6 @@ def _ddl_type(s: str):
     from pyspark.sql.types import _parse_datatype_string
 
     return _parse_datatype_string(s)
-
-
-def pa_unify(a, b):
-    """Union two Arrow schemas by field name (later files may add columns
-    — additive evolution); first-seen type wins, matching the read side's
-    mergeSchema behavior at the fidelity the tests exercise."""
-    import pyarrow as pa
-
-    fields = list(a)
-    names = {f.name for f in a}
-    for f in b:
-        if f.name not in names:
-            fields.append(f)
-    return pa.schema(fields)
 
 
 class _SnapshotBatchReader(DataSourceReader):

@@ -1768,13 +1768,15 @@ def snapshot_merge(
     matching one target row raise (Delta's cardinality contract).
 
     Scale shape: stats-pruned like snapshot_upsert — only files whose
-    [min, max] can contain a source key participate. With an UPDATE arm
-    the touched files copy-on-write rewrite (one pruned join). With NO
-    update arm the merge is MERGE-ON-READ: the delete arm grows the
-    touched files' deletion vectors (no file rewritten, capped at
-    DV_MAX_DELETED_ROWS like every MOR writer) and inserts append as new
-    files — a delete+insert merge on a 100 TB table touches O(matched)
-    metadata plus the insert bytes. Same optimistic rebase-retry
+    [min, max] can contain a source key participate, through one
+    left-outer join of their live rows with the source. The rows the
+    arms update or delete are counted once (:func:`_apply_row_actions`,
+    the core UPDATE and DELETE share): up to DV_MAX_DELETED_ROWS of them
+    commit MERGE-ON-READ — their positions grow the touched files'
+    deletion vectors, update images append with row provenance and
+    inserts append as new files, so a narrow merge on a 100 TB table
+    touches O(matched) metadata plus the new rows' bytes. Wider merges
+    copy-on-write rewrite the touched files. Same optimistic rebase-retry
     disposition as every writer. Reference parity: generalizes the J1
     merge class (etl-s3-processed-to-redshift.py:66-96) to Delta's
     conditional WHEN-clause form. ``not_matched_by_source_delete`` adds
@@ -1782,10 +1784,9 @@ def snapshot_merge(
     full-sync replication shape (target rows whose key the source no
     longer carries are deleted; the condition sees only ``t``). Its
     scope is the WHOLE table by definition, so with this arm every live
-    file participates: small affected sets still commit merge-on-read
-    (deletion vectors + provenance-paired images), wide ones rewrite
-    the table copy-on-write. ``not_matched_by_source_update`` adds
-    Delta's WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET arm
+    file participates, under the same cap.
+    ``not_matched_by_source_update`` adds Delta's WHEN NOT MATCHED BY
+    SOURCE [AND cond] THEN UPDATE SET arm
     (soft-delete flagging is the canonical use) — expressions and the
     condition see only ``t`` (there IS no source row; qualify columns
     as ``t.<col>``). When both BY SOURCE arms are present the UPDATE
@@ -1916,12 +1917,12 @@ def _snapshot_merge_committed(
     nmbs_update=None, nmbs_update_condition=None,
     txn=None, txn_app=None,
 ) -> int:
+    from functools import reduce
+    from operator import or_
+
     from pyspark.sql import functions as F
 
     sch = m.get("schema")
-    # columns any UPDATE arm assigns — generated columns sourced from
-    # them must recompute on the update image (see _regen_generated)
-    gen_assigned = set(matched_update or ()) | set(nmbs_update or ())
     stats: dict = m.get("stats", {}) or {}
     eff_types = (
         _merge_type_maps(m.get("types"), widen_types)
@@ -1937,7 +1938,11 @@ def _snapshot_merge_committed(
         # arm is present, where it means "sync to empty" (every target
         # row is unmatched and the arm decides its fate below)
         return _recommit(p, parent, m, "merge", **meta)
-    if lo is None or not any(pcol in s for s in stats.values()):
+    if nmbs_delete or nmbs_update is not None:
+        # WHEN NOT MATCHED BY SOURCE: an unmatched row can live in ANY
+        # file, so every live file participates
+        touched = sorted(m["files"])
+    elif lo is None or not any(pcol in s for s in stats.values()):
         # all-NULL keys match nothing (pure insert); a table with no key
         # stats anywhere conservatively touches every file
         touched = [] if lo is None else list(m["files"])
@@ -1951,8 +1956,6 @@ def _snapshot_merge_committed(
         throws to _transact, whose next round re-derives from the
         fresh tip — snapshot_append's restart-with-fresh-values
         protocol."""
-        if not not_matched_insert:
-            return src.limit(0), None
         ins = src
         if not_matched_condition is not None:
             ins = ins.alias("s").where(_merge_cond(not_matched_condition))
@@ -2007,256 +2010,48 @@ def _snapshot_merge_committed(
             ins.drop(*[c["name"] for c in _identity_cols(sch)]), sch
         )
 
-    def _insert_files(live_keys: DataFrame) -> "tuple[list[str], dict | None]":
-        """Write the insert arm's rows on their own (merge-on-read):
-        CHECKs (incl. ones referencing identity, deferred
-        pre-allocation) bite on the allocated rows."""
-        ins, id_meta = _ins_rows(live_keys)
-        _enforce_constraints(ins, p, parent)
-        if sch:
-            ins = _df_to_physical(ins, sch)
-        return (_write_files(ins, p) if not ins.isEmpty() else []), id_meta
-
-    def _mor(tagged, aff, data_cols) -> int:
-        """Merge-on-read commit of the affected rows ``aff`` (tagged
-        (_fp, _ri), ``_upd`` flagging an update image): their positions
-        grow the deletion vectors, update images and inserts append."""
-        images = _update_images(
-            p, parent, aff.where(F.col("_upd")), data_cols, sch
-        )
-        img_files = (
-            _write_files(images.coalesce(1), p)
-            if not images.isEmpty()
-            else []
-        )
-        ins_files, id_meta = _insert_files(tagged.select(keys).distinct())
-        return _grow_dvs(spark, p, parent, m, aff, img_files + ins_files,
-                         "merge", schema_meta=id_meta, **meta)
-
-    always = F.lit(True)
-    if matched_update is None and not nmbs_delete and nmbs_update is None:
-        # MERGE-ON-READ path: no rewrite — the delete arm grows deletion
-        # vectors; inserts append as new files. One commit. (The
-        # not-matched-by-source arms route to their whole-table branch
-        # below instead — their scope ignores the stats prune.)
-        hits = None
-        if touched:
-            tagged = _tagged_live_logical(spark, p, m, touched, types=eff_types)
-            # tagged is used twice (insert anti-join keys; delete hits) —
-            # two lazy scans of the PRUNED touched set, never a driver
-            # materialization of whole files
-            live_keys = tagged.select(keys).distinct()
-            if matched_delete:
-                pair = tagged.alias("t").join(src.alias("s"), keys, "inner")
-                if matched_delete_condition is not None:
-                    pair = pair.where(_merge_cond(matched_delete_condition))
-                hits = pair.select("t._fp", "t._ri")
-                if hits.count() > DV_MAX_DELETED_ROWS:
-                    # wide delete: the rewrite is cheaper than giant
-                    # vectors — rerun on the CoW shape with a never-firing
-                    # update arm so only the delete clause applies
-                    return _snapshot_merge_committed(
-                        spark, src, p, keys, col, parent, m, widen_types,
-                        {}, F.lit(False), True, matched_delete_condition,
-                        not_matched_insert, not_matched_condition,
-                        insert_values=insert_values,
-                        nmbs_delete=nmbs_delete, nmbs_condition=nmbs_condition,
-                        txn=txn, txn_app=txn_app,
-                    )
-        else:
-            live_keys = src.limit(0).select(keys)
-        ins_files, id_meta = _insert_files(live_keys)
-        return _grow_dvs(spark, p, parent, m, hits, ins_files, "merge",
-                         schema_meta=id_meta, **meta)
-
-    upd_c = _merge_cond(matched_update_condition) if (
-        matched_update_condition is not None
-    ) else always
-    del_c = _merge_cond(matched_delete_condition) if (
-        matched_delete_condition is not None
-    ) else always
-    if nmbs_delete or nmbs_update is not None:
-        # WHEN NOT MATCHED BY SOURCE THEN UPDATE SET / DELETE:
-        # whole-table scope (an unmatched row can live in ANY file), so
-        # every live file participates — stats pruning does not apply
-        nmbs_c = _merge_cond(nmbs_condition) if (
-            nmbs_condition is not None
-        ) else always
-        nmbs_u_c = _merge_cond(nmbs_update_condition) if (
-            nmbs_update_condition is not None
-        ) else always
-        nmbs_map = nmbs_update or {}
-        upd_map = matched_update or {}
-
-        def _upd_expr(c, do_upd_n, do_nmbs_upd):
-            # matched-UPDATE image wins over the BY SOURCE image — the
-            # two arms are disjoint by construction (is_m vs ~is_m)
-            e = F.col(f"t.{c}")
-            if c in nmbs_map:
-                e = F.when(do_nmbs_upd, _merge_cond(nmbs_map[c])).otherwise(e)
-            if c in upd_map:
-                e = F.when(do_upd_n, _merge_cond(upd_map[c])).otherwise(e)
-            return e
-
-        live = sorted(m["files"])
-        if live:
-            tagged = _tagged_live_logical(spark, p, m, live, types=eff_types)
-            data_cols = [c for c in tagged.columns if c not in ("_fp", "_ri")]
-            nmbs_map = _normalize_assign_keys(nmbs_map, data_cols)
-            upd_map = _normalize_assign_keys(upd_map, data_cols)
-            s_tag = src.withColumn("_s_matched", F.lit(True))
-            pair_n = tagged.alias("t").join(
-                s_tag.alias("s"),
-                [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
-                "left_outer",
-            )
-            is_m = F.coalesce(F.col("s._s_matched"), F.lit(False))
-            do_upd_n = (
-                is_m & F.coalesce(upd_c, F.lit(False))
-                if matched_update is not None
-                else F.lit(False)
-            )
-            do_del_n = (
-                is_m & ~do_upd_n & F.coalesce(del_c, F.lit(False))
-                if matched_delete
-                else F.lit(False)
-            )
-            do_nmbs_upd = (
-                ~is_m & F.coalesce(nmbs_u_c, F.lit(False))
-                if nmbs_update is not None
-                else F.lit(False)
-            )
-            do_nmbs_del = (
-                ~is_m & ~do_nmbs_upd & F.coalesce(nmbs_c, F.lit(False))
-                if nmbs_delete
-                else F.lit(False)
-            )
-            hit_c = do_upd_n | do_del_n | do_nmbs_upd | do_nmbs_del
-            n_aff = pair_n.where(hit_c).count()
-            if n_aff <= DV_MAX_DELETED_ROWS:
-                aff = pair_n.where(hit_c).select(
-                    F.col("t._fp").alias("_fp"),
-                    F.col("t._ri").alias("_ri"),
-                    (do_upd_n | do_nmbs_upd).alias("_upd"),
-                    *[
-                        _upd_expr(c, do_upd_n, do_nmbs_upd).alias(c)
-                        for c in data_cols
-                    ],
-                )
-                aff = _regen_generated(aff, sch, gen_assigned)
-                if n_aff:
-                    aff = aff.localCheckpoint(eager=True)  # <= cap rows
-                return _mor(tagged, aff, data_cols)
-            # wide sync: a full-table rewrite IS the honest cost
-            kept = pair_n.where(~do_del_n & ~do_nmbs_del).select(*[
-                _upd_expr(c, do_upd_n, do_nmbs_upd).alias(c)
-                for c in data_cols
-            ])
-            kept = _regen_generated(kept, sch, gen_assigned)
-            ins, id_meta = _ins_rows(tagged.select(keys).distinct())
-            merged = kept.unionByName(
-                ins, allowMissingColumns=True,
-            ).coalesce(max(1, len(live)))
-        else:
-            merged, id_meta = _ins_rows(src.limit(0).select(keys))
-        _enforce_constraints(merged, p, parent)
-        if sch:
-            merged = _df_to_physical(merged, sch)
-        new_files = _write_files(merged, p) if not merged.isEmpty() else []
-        return _replace_files(spark, p, parent, m, live, new_files, "merge",
-                              schema_meta=id_meta, **meta)
-
-    # MERGE-ON-READ first (update arm present): when the affected row
-    # set is small — the overwhelmingly common MERGE on a large table —
-    # no touched file rewrites: affected positions grow the deletion
-    # vectors, UPDATED images append carrying row provenance (the change
-    # feed pairs them as update_preimage/update_postimage, Delta's
-    # row-tracking contract), deleted rows are DV-only, and inserts
-    # append plain. Counted against DV_MAX_DELETED_ROWS; wide merges
-    # fall through to the copy-on-write rewrite below.
-    if touched:
+    if not touched:
+        rows, live_keys = None, src.limit(0).select(keys)
+    else:
         tagged = _tagged_live_logical(spark, p, m, touched, types=eff_types)
-        data_cols = [c for c in tagged.columns if c not in ("_fp", "_ri")]
-        upd_norm = _normalize_assign_keys(matched_update or {}, data_cols)
-        s_tag = src.withColumn("_s_matched", F.lit(True))
-        pair_m = tagged.alias("t").join(
-            s_tag.alias("s"),
-            [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
-            "inner",
-        )
-        do_upd_m = F.coalesce(upd_c, F.lit(False))
-        do_del_m = (
-            ~do_upd_m & F.coalesce(del_c, F.lit(False))
-            if matched_delete
-            else F.lit(False)
-        )
-        n_aff = pair_m.where(do_upd_m | do_del_m).count()
-        if n_aff <= DV_MAX_DELETED_ROWS:
-            aff = pair_m.where(do_upd_m | do_del_m).select(
-                F.col("t._fp").alias("_fp"),
-                F.col("t._ri").alias("_ri"),
-                do_upd_m.alias("_upd"),
-                *[
-                    (
-                        F.when(do_upd_m, _merge_cond(upd_norm[c]))
-                        .otherwise(F.col(f"t.{c}"))
-                        if c in upd_norm
-                        else F.col(f"t.{c}")
-                    ).alias(c)
-                    for c in data_cols
-                ],
-            )
-            aff = _regen_generated(aff, sch, gen_assigned)
-            if n_aff:
-                aff = aff.localCheckpoint(eager=True)  # <= cap rows
-            return _mor(tagged, aff, data_cols)
-
-    # COPY-ON-WRITE path (wide update set): rewrite the touched files
-    # with the clause logic applied; untouched files carry byte-identical
-    if touched:
-        cur = _read_files_with_dv(
-            spark, p, touched, m.get("dv"), merge_schema=True,
-            types=eff_types, schema=sch,
-        )
-        if sch:
-            cur = _apply_column_mapping(cur, sch)
-        t_cols = cur.columns
-        s_tag = src.withColumn("_s_matched", F.lit(True))
-        pair = cur.alias("t").join(
-            s_tag.alias("s"),
+        live_keys = tagged.select(keys).distinct()
+        rows = tagged.alias("t").join(
+            src.withColumn("_s_matched", F.lit(True)).alias("s"),
             [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
             "left_outer",
         )
-        matched = F.coalesce(F.col("s._s_matched"), F.lit(False))
-        do_upd = matched & F.coalesce(upd_c, F.lit(False))
-        do_del = (
-            matched & ~do_upd & F.coalesce(del_c, F.lit(False))
-            if matched_delete
-            else F.lit(False)
+
+    def when(cond):
+        # a clause's condition: absent is true, NULL is false
+        return F.lit(True) if cond is None else F.coalesce(
+            _merge_cond(cond), F.lit(False)
         )
-        upd_norm = _normalize_assign_keys(matched_update or {}, t_cols)
-        kept = pair.where(~do_del).select(*[
-            (
-                F.when(do_upd, _merge_cond(upd_norm[c]))
-                .otherwise(F.col(f"t.{c}"))
-                if c in upd_norm
-                else F.col(f"t.{c}")
-            ).alias(c)
-            for c in t_cols
-        ])
-        kept = _regen_generated(kept, sch, gen_assigned)
-        ins, id_meta = _ins_rows(cur.select(keys).distinct())
-        merged = kept.unionByName(
-            ins, allowMissingColumns=True
-        ).coalesce(max(1, len(touched)))
-    else:
-        merged, id_meta = _ins_rows(src.limit(0).select(keys))
-    _enforce_constraints(merged, p, parent)
-    if sch:
-        merged = _df_to_physical(merged, sch)
-    new_files = _write_files(merged, p) if not merged.isEmpty() else []
-    return _replace_files(spark, p, parent, m, touched, new_files, "merge",
-                          schema_meta=id_meta, **meta)
+
+    # the arms, matched and not matched by source: on each side an
+    # UPDATE wins over the DELETE
+    is_m = F.coalesce(F.col("s._s_matched"), F.lit(False))
+    deletes, updates = [], []
+    for side, upd_map, upd_cond, has_del, del_cond in (
+        (is_m, matched_update, matched_update_condition,
+         matched_delete, matched_delete_condition),
+        (~is_m, nmbs_update, nmbs_update_condition,
+         nmbs_delete, nmbs_condition),
+    ):
+        dele = side & when(del_cond)
+        if upd_map is not None:
+            upd = side & when(upd_cond)
+            updates.append((upd, upd_map))
+            dele = dele & ~upd
+        if has_del:
+            deletes.append(dele)
+    return _apply_row_actions(
+        spark, p, parent, m, touched, rows,
+        reduce(or_, deletes) if deletes else None, updates, target="t",
+        insert_rows=(
+            (lambda: _ins_rows(live_keys)) if not_matched_insert else None
+        ),
+        ops=("merge", "merge"), **meta,
+    )
 
 
 # Resolved-manifest cache: manifests are immutable once published (the
@@ -3456,7 +3251,9 @@ def snapshot_delete_range(
 #   vectors and the new files (update images, inserts) append; it commits
 #   through _replace_files with nothing touched.
 # In both, new files get footer stats and blooms for every column the
-# parent tracked.
+# parent tracked. MERGE, UPDATE and DELETE ... WHERE choose between the
+# two in one place, _apply_row_actions, the only reader of
+# DV_MAX_DELETED_ROWS.
 # ---------------------------------------------------------------------------
 
 DV_MAX_DELETED_ROWS = 1_000_000
@@ -3643,6 +3440,113 @@ def _update_images(
     return images
 
 
+def _apply_row_actions(
+    spark: SparkSession, p: Path, parent: int, m: dict, scope: list[str],
+    rows: "DataFrame | None", delete=None, updates=(), *,
+    target: str | None = None, insert_rows=None, ops: tuple, **meta,
+) -> int:
+    """The one row-level core behind MERGE, UPDATE and DELETE. ``rows``
+    are the tagged live rows of the ``scope`` files
+    (:func:`_tagged_live_logical`), possibly joined to a source, with the
+    target's columns qualified by the alias ``target`` when given; None
+    when the scope lists no file. ``delete`` is a Column marking the rows
+    the statement deletes and ``updates`` a list of (Column, {column:
+    expression}) arms marking the rows it updates and their assignments;
+    the caller makes them NULL-free and disjoint. ``insert_rows`` returns
+    the insert arm's (rows, schema_meta).
+
+    The affected rows are counted once. Up to DV_MAX_DELETED_ROWS of them
+    commit merge-on-read as ``ops[0]`` (:func:`_grow_dvs`): their
+    positions grow the deletion vectors, and the update images (at most
+    the cap of rows, checkpointed) and the inserts append. More rewrite
+    the scope copy-on-write as ``ops[1]`` (:func:`_replace_files`) from
+    the same rows: deleted rows drop, updated rows take their images and
+    the inserts join. Every assignment casts to its column's current
+    type, so no image writes a wider type than the files beside it. A
+    pure delete's merge-on-read commit is one count and one position
+    collect over the hits."""
+    from functools import reduce
+    from operator import or_
+
+    from pyspark.sql import functions as F
+
+    sch = m.get("schema")
+
+    def col(c):
+        return F.col(f"{target}.{c}" if target else c)
+
+    acts = [a for a in (delete, *(u for u, _s in updates)) if a is not None]
+    affected = reduce(or_, acts) if acts else None
+    n = rows.where(affected).count() if rows is not None and acts else 0
+    if rows is not None:
+        own = rows.select(f"{target}.*") if target else rows
+        types = {
+            f.name: f.dataType for f in own.schema.fields
+            if f.name not in ("_fp", "_ri")
+        }
+        arms = [(u, _normalize_assign_keys(s, types)) for u, s in updates]
+        assigned = {c for _u, s in updates for c in s}
+
+        def images(df: DataFrame, arms, *tags) -> DataFrame:
+            cols = []
+            for c in types:
+                e = col(c)
+                for u, s in reversed(arms):
+                    if c in s:
+                        e = F.when(u, _merge_cond(s[c]).cast(types[c])
+                                   ).otherwise(e)
+                cols.append(e.alias(c))
+            return _regen_generated(df.select(*tags, *cols), sch, assigned)
+
+    id_meta = None
+    if n <= DV_MAX_DELETED_ROWS:
+        hits, new_files = None, []
+        if rows is not None and updates:
+            if len(acts) == 1:
+                # the filter decided every row: the one arm's Column (a
+                # correlated subquery, say, which Spark fails to push
+                # through the union of a read with vectors) is not
+                # projected again
+                arms = [(F.lit(True), s) for _u, s in arms]
+            hits = images(
+                rows.where(affected), arms, col("_fp").alias("_fp"),
+                col("_ri").alias("_ri"),
+                reduce(or_, [u for u, _s in arms]).alias("_upd"),
+            )
+            if n:
+                hits = hits.localCheckpoint(eager=True)  # <= cap rows
+                img = _update_images(p, parent, hits.where(F.col("_upd")),
+                                     list(types), sch)
+                if not img.isEmpty():
+                    new_files = _write_files(img.coalesce(1), p)
+        elif rows is not None and delete is not None:
+            hits = rows.where(delete).select(
+                col("_fp").alias("_fp"), col("_ri").alias("_ri")
+            )
+        if insert_rows is not None:
+            ins, id_meta = insert_rows()
+            # CHECKs bite on the allocated rows (identity included)
+            _enforce_constraints(ins, p, parent)
+            if sch:
+                ins = _df_to_physical(ins, sch)
+            if not ins.isEmpty():
+                new_files = new_files + _write_files(ins, p)
+        return _grow_dvs(spark, p, parent, m, hits, new_files, ops[0],
+                         schema_meta=id_meta, **meta)
+    kept = images(rows if delete is None else rows.where(~delete), arms)
+    if insert_rows is not None:
+        ins, id_meta = insert_rows()
+        kept = kept.unionByName(ins, allowMissingColumns=True)
+    kept = kept.coalesce(max(1, len(scope)))  # no small-files creep
+    if updates or insert_rows is not None:
+        _enforce_constraints(kept, p, parent)
+    if sch:
+        kept = _df_to_physical(kept, sch)
+    new_files, new_stats = _write_nonempty(spark, kept, p)
+    return _replace_files(spark, p, parent, m, scope, new_files, ops[1],
+                          new_stats=new_stats, schema_meta=id_meta, **meta)
+
+
 def _default_groups(
     p: Path, rels: list[str], defaults: dict
 ) -> "list[tuple[frozenset, list[str]]]":
@@ -3815,7 +3719,6 @@ def _read_files_with_dv(
 
 def snapshot_delete_range_mor(
     spark: SparkSession, table_path, col: str, lo, hi,
-    max_deleted_rows: int = DV_MAX_DELETED_ROWS,
 ) -> int:
     """Merge-on-read DELETE of every row with ``lo <= col <= hi``: commits
     a new version whose manifest adds the matching rows' positions to the
@@ -3823,8 +3726,8 @@ def snapshot_delete_range_mor(
     copied beyond the position scan, and old versions still time-travel
     to the rows. Stats-pruned like the CoW form (only files whose
     [min, max] can contain the range are even scanned for positions).
-    Deletes wider than ``max_deleted_rows`` copy-on-write rewrite the
-    touched files instead — counted, not assumed. Same optimistic-retry
+    Deletes of more than DV_MAX_DELETED_ROWS rows copy-on-write rewrite
+    the touched files instead — counted, not assumed. Same optimistic-retry
     disposition as every writer. This is :func:`snapshot_delete_where`
     pruned by the range's region (general predicates live there)."""
     from pyspark.sql import functions as F
@@ -3832,7 +3735,6 @@ def snapshot_delete_range_mor(
     return snapshot_delete_where(
         spark, table_path,
         (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
-        max_deleted_rows=max_deleted_rows,
         _prune_region=[{col: (lo, hi)}],
     )
 
@@ -3840,7 +3742,6 @@ def snapshot_delete_range_mor(
 def snapshot_update_range_mor(
     spark: SparkSession, table_path, col: str, lo, hi,
     assignments: dict,
-    max_updated_rows: int = DV_MAX_DELETED_ROWS,
 ) -> int:
     """Merge-on-read UPDATE of every row with ``lo <= col <= hi``: the
     matched rows' positions join the touched files' deletion vectors and
@@ -3849,8 +3750,8 @@ def snapshot_update_range_mor(
     change feed sees it as paired update images through the appended
     files' reserved provenance columns. ``assignments`` maps column
     name -> Column expression (or SQL string) evaluated against the
-    matched rows. Updates wider than ``max_updated_rows`` route to the
-    copy-on-write form — counted, not assumed. Rows already deleted by
+    matched rows. Updates of more than DV_MAX_DELETED_ROWS rows route to
+    the copy-on-write form — counted, not assumed. Rows already deleted by
     existing vectors are never re-updated or resurrected. Same
     optimistic rebase-retry disposition as every writer. This is
     :func:`snapshot_update_where` pruned by the range's region."""
@@ -3860,7 +3761,6 @@ def snapshot_update_range_mor(
         spark, table_path,
         (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
         assignments,
-        max_updated_rows=max_updated_rows,
         _prune_region=[{col: (lo, hi)}],
     )
 
@@ -4143,9 +4043,22 @@ def _tagged_live_logical(spark, p: Path, m: dict, touched: list[str],
     return _apply_column_mapping(df, sch, keep=("_fp", "_ri")) if sch else df
 
 
+def _where_rows(spark, p: Path, m: dict, condition, region, alias):
+    """The tagged live rows a DELETE or UPDATE ... WHERE ``condition``
+    matches against, named ``alias`` for the condition's scope, and the
+    files they come from: those of ``m`` that ``region`` (else the
+    region ``condition`` implies) admits. (None, []) when none is."""
+    touched = sorted(
+        _admitted(m, _where_region(m.get("schema"), region or condition))
+    )
+    if not touched:
+        return None, []
+    rows = _tagged_live_logical(spark, p, m, touched)
+    return (rows.alias(alias) if alias else rows), touched
+
+
 def snapshot_delete_where(
     spark: SparkSession, table_path, condition,
-    max_deleted_rows: int = DV_MAX_DELETED_ROWS,
     _prune_region: list | None = None,
     table_alias: str | None = None,
 ) -> int:
@@ -4156,8 +4069,9 @@ def snapshot_delete_where(
     names; string form enables file pruning by the region its text
     implies, as :func:`snapshot_files` reads it) or a Column (correct,
     but scans every file). A NULL predicate value deletes nothing (SQL WHERE
-    semantics). Deletes wider than ``max_deleted_rows`` copy-on-write
-    rewrite the touched files instead — counted, not assumed. Same
+    semantics). Deletes of more than DV_MAX_DELETED_ROWS rows (read when
+    the statement runs) copy-on-write rewrite the touched files instead —
+    counted, not assumed (:func:`_apply_row_actions`). Same
     optimistic rebase-retry disposition as every writer. The range form
     :func:`snapshot_delete_range_mor` is this pruned by the range's
     region (``_prune_region``).
@@ -4175,40 +4089,18 @@ def snapshot_delete_where(
     matched = F.coalesce(_merge_cond(condition), F.lit(False))
 
     def attempt(parent, m):
-        schema = m.get("schema")
-        touched = sorted(
-            _admitted(m, _where_region(schema, _prune_region or condition))
-        )
+        rows, touched = _where_rows(spark, p, m, condition, _prune_region,
+                                    table_alias)
         if not touched:
             return _recommit(p, parent, m, "delete-mor")
-        tagged = _tagged_live_logical(spark, p, m, touched)
-        if table_alias:
-            tagged = tagged.alias(table_alias)
-        hits = tagged.where(matched).select("_fp", "_ri")
-        if hits.count() > max_deleted_rows:
-            # wide delete: the rewrite is cheaper than giant vectors —
-            # copy-on-write the touched files keeping unmatched rows
-            cur = _read_files_with_dv(
-                spark, p, touched, m.get("dv"), merge_schema=True,
-                types=m.get("types"), schema=schema,
-            )
-            if schema:
-                cur = _apply_column_mapping(cur, schema)
-            if table_alias:
-                cur = cur.alias(table_alias)
-            kept = cur.where(~matched).coalesce(max(1, len(touched)))
-            if schema:
-                kept = _df_to_physical(kept, schema)
-            return _replace_files(spark, p, parent, m, touched,
-                                  _write_files(kept, p), "delete")
-        return _grow_dvs(spark, p, parent, m, hits, [], "delete-mor")
+        return _apply_row_actions(spark, p, parent, m, touched, rows,
+                                  matched, ops=("delete-mor", "delete"))
 
     return _transact(p, attempt)
 
 
 def snapshot_update_where(
     spark: SparkSession, table_path, condition, assignments: dict,
-    max_updated_rows: int = DV_MAX_DELETED_ROWS,
     _prune_region: list | None = None,
     table_alias: str | None = None,
 ) -> int:
@@ -4219,8 +4111,9 @@ def snapshot_update_where(
     rewritten, the change feed pairs the images as updates. Same
     condition/pruning contract as :func:`snapshot_delete_where`
     (including ``table_alias`` scoping correlated subqueries' outer
-    references); updates wider than ``max_updated_rows`` copy-on-write
-    rewrite instead. The range form :func:`snapshot_update_range_mor` is
+    references); updates of more than DV_MAX_DELETED_ROWS rows
+    copy-on-write rewrite instead. Each assignment casts to its column's
+    current type. The range form :func:`snapshot_update_range_mor` is
     this pruned by the range's region."""
     from pyspark.sql import functions as F
 
@@ -4244,68 +4137,15 @@ def snapshot_update_where(
             "IDENTITY and cannot be assigned by UPDATE"
         )
     matched = F.coalesce(_merge_cond(condition), F.lit(False))
-    set_cols = {
-        c: (F.expr(e) if isinstance(e, str) else e)
-        for c, e in assignments.items()
-    }
 
     def attempt(parent, m):
-        schema = m.get("schema")
-        touched = sorted(
-            _admitted(m, _where_region(schema, _prune_region or condition))
-        )
+        rows, touched = _where_rows(spark, p, m, condition, _prune_region,
+                                    table_alias)
         if not touched:
             return _recommit(p, parent, m, "update-mor")
-        tagged = _tagged_live_logical(spark, p, m, touched)
-        if table_alias:
-            tagged = tagged.alias(table_alias)
-        hits = tagged.where(matched)
-        hits = hits.localCheckpoint(eager=True)  # one scan, three uses
-        n_hits = hits.count()
-        if n_hits == 0:
-            return _recommit(p, parent, m, "update-mor")
-        data_cols = [c for c in hits.columns if c not in ("_fp", "_ri")]
-        if n_hits > max_updated_rows:
-            # wide update: the rewrite is cheaper than giant vectors —
-            # copy-on-write the touched files with assignments applied
-            cur = _read_files_with_dv(
-                spark, p, touched, m.get("dv"), merge_schema=True,
-                types=m.get("types"), schema=schema,
-            )
-            if schema:
-                cur = _apply_column_mapping(cur, schema)
-            if table_alias:
-                cur = cur.alias(table_alias)
-            sc = _normalize_assign_keys(set_cols, cur.columns)
-            rewritten = cur.select(*[
-                (F.when(matched, sc[c]).otherwise(F.col(c))
-                 if c in sc else F.col(c)).alias(c)
-                for c in cur.columns
-            ]).coalesce(max(1, len(touched)))
-            rewritten = _regen_generated(rewritten, schema, set_cols)
-            _enforce_constraints(rewritten, p, parent)
-            if schema:
-                rewritten = _df_to_physical(rewritten, schema)
-            return _replace_files(spark, p, parent, m, touched,
-                                  _write_files(rewritten, p), "update")
-        # MOR path: the hit positions grow the vectors and the updated
-        # images append as new files carrying row provenance (see
-        # snapshot_update_range_mor's contract note). Assignments cast
-        # to the column's CURRENT type: `SET v = 1` on a long column
-        # must not append an int-typed image file — mixed parquet widths
-        # crash the vectorized reader (the CoW path gets this free from
-        # when/otherwise type coercion)
-        cur_type = {f.name: f.dataType for f in hits.schema.fields}
-        sc = _normalize_assign_keys(set_cols, data_cols)
-        updated = hits.select(*[
-            (sc[c].cast(cur_type[c]) if c in sc
-             else F.col(c)).alias(c)
-            for c in data_cols
-        ], "_fp", "_ri")
-        updated = _regen_generated(updated, schema, set_cols)
-        images = _update_images(p, parent, updated, data_cols, schema)
-        return _grow_dvs(spark, p, parent, m, hits,
-                         _write_files(images.coalesce(1), p), "update-mor")
+        return _apply_row_actions(spark, p, parent, m, touched, rows,
+                                  updates=[(matched, assignments)],
+                                  ops=("update-mor", "update"))
 
     return _transact(p, attempt)
 

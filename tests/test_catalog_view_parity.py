@@ -1,7 +1,8 @@
 """Catalog views equal the library read: for every table shape the
 format supports, ``SELECT * FROM t`` through :class:`SnapshotCatalog`
 returns the rows of ``snapshot_read(spark, path, v)`` at the version the
-view is pinned to, with the same column names, types and nullability.
+view is pinned to, with the same column names, types and nullability;
+so does the batch ``read.format("snapshot")`` data source.
 DESCRIBE TABLE and SHOW CREATE TABLE are pinned verbatim on one table
 that carries every column decoration."""
 
@@ -15,6 +16,9 @@ from pyspark.sql import functions as F
 from energy_datalake_solution_spark.sources import snapshots as S
 from energy_datalake_solution_spark.sources.snapshot_catalog import (
     SnapshotCatalog,
+)
+from energy_datalake_solution_spark.sources.snapshot_datasource import (
+    SnapshotDataSource,
 )
 
 
@@ -130,6 +134,24 @@ def test_catalog_view_equals_snapshot_read(spark, tmp_path, shape):
     _assert_parity(
         cat.sql("SELECT * FROM pv"),
         S.snapshot_read(spark, t, version=S.current_version(t)),
+    )
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_snapshot_format_equals_snapshot_read(spark, tmp_path, shape):
+    """The batch ``read.format("snapshot")`` reader (the Python data
+    source, kept for external callers) returns what ``snapshot_read``
+    does at the tip: ``timestamp_ntz`` stays ``timestamp_ntz``, and a
+    truncated table without column mapping reads as its typed empty
+    frame."""
+    cat = SnapshotCatalog(spark)
+    t = tmp_path / "t"
+    _SHAPES[shape](spark, cat, t)
+    cat.drop_table("pv", if_exists=True)
+    spark.dataSource.register(SnapshotDataSource)
+    _assert_parity(
+        spark.read.format("snapshot").option("path", str(t)).load(),
+        S.snapshot_read(spark, t),
     )
 
 

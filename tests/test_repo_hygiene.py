@@ -118,3 +118,33 @@ def test_catalog_reads_snapshot_tables_natively():
         and node.args[0].value == "snapshot"
     ]
     assert readers == ["readStream"]
+
+
+def test_one_merge_on_read_cap():
+    """The merge-on-read / copy-on-write choice of MERGE, UPDATE and
+    DELETE is made at one site: ``snapshots.py`` compares against
+    ``DV_MAX_DELETED_ROWS`` exactly once, and no public ``snapshot_*``
+    function takes a cap of its own."""
+    import inspect
+
+    from energy_datalake_solution_spark.sources import snapshots as S
+
+    src = Path(S.__file__).read_text()
+    compares = [
+        node.lineno
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Compare)
+        and any(
+            isinstance(x, ast.Name) and x.id == "DV_MAX_DELETED_ROWS"
+            for x in [node.left, *node.comparators]
+        )
+    ]
+    assert len(compares) == 1, compares
+    capped = [
+        name
+        for name, fn in inspect.getmembers(S, inspect.isfunction)
+        if name.startswith("snapshot_") and fn.__module__ == S.__name__
+        and {"max_deleted_rows", "max_updated_rows"}
+        & set(inspect.signature(fn).parameters)
+    ]
+    assert capped == []

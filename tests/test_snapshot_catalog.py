@@ -1692,7 +1692,9 @@ def test_insert_with_explicit_column_list(spark, tmp_path):
         cat.sql("INSERT INTO ic (k, v, tag) VALUES (9, 9)")
 
 
-def test_generated_columns_recompute_on_update_and_merge(spark, tmp_path):
+def test_generated_columns_recompute_on_update_and_merge(
+    spark, tmp_path, monkeypatch
+):
     """Round-12 advisory fix: an UPDATE/MERGE that assigns a generated
     column's SOURCE column recomputes the generated expression on the
     update image (Delta's semantics) instead of tripping the
@@ -1718,12 +1720,14 @@ def test_generated_columns_recompute_on_update_and_merge(spark, tmp_path):
     got = {r.k: r.bucket for r in snapshot_read(spark, t).collect()}
     assert got[103] == 103 % 4
 
-    # forced copy-on-write path (max_updated_rows=0) recomputes too
-    # (2 -> 101: a key no other row collapses onto, so the assertion
+    # forced copy-on-write path (a zero DV_MAX_DELETED_ROWS) recomputes
+    # too (2 -> 101: a key no other row collapses onto, so the assertion
     # discriminates the CoW recompute specifically)
-    snapshot_update_where(
-        spark, t, "k = 2", {"k": "k + 99"}, max_updated_rows=0
-    )
+    import energy_datalake_solution_spark.sources.snapshots as S
+
+    with monkeypatch.context() as mp:
+        mp.setattr(S, "DV_MAX_DELETED_ROWS", 0)
+        snapshot_update_where(spark, t, "k = 2", {"k": "k + 99"})
     got = {r.k: r.bucket for r in snapshot_read(spark, t).collect()}
     assert got[101] == 101 % 4
 

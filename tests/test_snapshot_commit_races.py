@@ -169,24 +169,24 @@ def test_delete_range_rebases(spark, t, race):
     assert _keys(spark, t) == [0, 3, *RACER_KEYS]
 
 
-@pytest.mark.parametrize("op, max_deleted_rows", [
+@pytest.mark.parametrize("op, cap", [
     pytest.param("delete-mor", S.DV_MAX_DELETED_ROWS, id="mor"),
     pytest.param("delete", 0, id="cow"),
 ])
-def test_delete_where_rebases(spark, t, race, op, max_deleted_rows):
-    S.snapshot_delete_where(spark, t, "k = 1", max_deleted_rows=max_deleted_rows)
+def test_delete_where_rebases(spark, t, race, op, cap, monkeypatch):
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", cap)
+    S.snapshot_delete_where(spark, t, "k = 1")
     _rebased(t, race, op)
     assert _keys(spark, t) == [0, 2, 3, *RACER_KEYS]
 
 
-@pytest.mark.parametrize("op, max_updated_rows", [
+@pytest.mark.parametrize("op, cap", [
     pytest.param("update-mor", S.DV_MAX_DELETED_ROWS, id="mor"),
     pytest.param("update", 0, id="cow"),
 ])
-def test_update_where_rebases(spark, t, race, op, max_updated_rows):
-    S.snapshot_update_where(
-        spark, t, "k = 1", {"v": "'upd'"}, max_updated_rows=max_updated_rows
-    )
+def test_update_where_rebases(spark, t, race, op, cap, monkeypatch):
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", cap)
+    S.snapshot_update_where(spark, t, "k = 1", {"v": "'upd'"})
     _rebased(t, race, op)
     got = _values(spark, t)
     assert sorted(got) == [0, 1, 2, 3, *RACER_KEYS]

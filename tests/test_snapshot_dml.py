@@ -15,9 +15,9 @@ merge-on-read (MOR) or copy-on-write (CoW) form, and checks the committed
 manifest: its ``op``, which files carry over byte-identical, the stats,
 bloom and DV keys of every file, which vectors grow, the ``types`` and
 ``schema`` metadata, and the rows the table reads afterwards against a
-Python model of the statement. ``max_deleted_rows=0`` and
-``max_updated_rows=0`` force the CoW form of delete-where and
-update-where; a zero ``DV_MAX_DELETED_ROWS`` forces it for merge.
+Python model of the statement. A case named ``*-cow`` runs with a zero
+``DV_MAX_DELETED_ROWS``, the one merge-on-read cap, which forces the CoW
+form of merge, delete-where and update-where.
 """
 import hashlib
 import shutil
@@ -145,19 +145,6 @@ def _merge(**kw):
     )
 
 
-def _merge_cow(**kw):
-    return lambda spark, t: _with_dv_cap(0, _merge(**kw), spark, t)
-
-
-def _with_dv_cap(cap, run, spark, t):
-    real = S.DV_MAX_DELETED_ROWS
-    S.DV_MAX_DELETED_ROWS = cap
-    try:
-        return run(spark, t)
-    finally:
-        S.DV_MAX_DELETED_ROWS = real
-
-
 def _all(m):
     return set(m["files"])
 
@@ -194,7 +181,7 @@ CASES = {
         NEW_STATS, {"u"}, lambda rows: _merge_model(rows, update=True), True,
     ),
     "merge-update-cow": (
-        _merge_cow(matched_update={"u": "s.u"}),
+        _merge(matched_update={"u": "s.u"}),
         "merge", lambda m: _holding(m, 100, 705), _none,
         NEW_STATS, {"u"}, lambda rows: _merge_model(rows, update=True), True,
     ),
@@ -204,7 +191,7 @@ CASES = {
         NEW_STATS, {"u"}, lambda rows: _merge_model(rows, delete=True), True,
     ),
     "merge-delete-cow": (
-        _merge_cow(matched_delete=True),
+        _merge(matched_delete=True),
         "merge", lambda m: _holding(m, 100, 705), _none,
         NEW_STATS, {"u"}, lambda rows: _merge_model(rows, delete=True), True,
     ),
@@ -221,7 +208,7 @@ CASES = {
         True,
     ),
     "merge-by-source-cow": (
-        _merge_cow(
+        _merge(
             matched_update={"u": "s.u"}, not_matched_by_source_delete=True,
             not_matched_by_source_condition="t.k < 50",
         ),
@@ -245,9 +232,7 @@ CASES = {
         lambda rows: [r for r in rows if not 100 <= r[0] <= 109], False,
     ),
     "delete-range-mor-cow": (
-        lambda spark, t: S.snapshot_delete_range_mor(
-            spark, t, "k", 100, 109, max_deleted_rows=0
-        ),
+        lambda spark, t: S.snapshot_delete_range_mor(spark, t, "k", 100, 109),
         "delete", lambda m: _holding(m, 100, 109), _none,
         NEW_STATS, {"u"},
         lambda rows: [r for r in rows if not 100 <= r[0] <= 109], True,
@@ -259,9 +244,7 @@ CASES = {
         False,
     ),
     "delete-where-cow": (
-        lambda spark, t: S.snapshot_delete_where(
-            spark, t, WHERE, max_deleted_rows=0
-        ),
+        lambda spark, t: S.snapshot_delete_where(spark, t, WHERE),
         "delete", lambda m: _holding(m, 0, 299), _none,
         NEW_STATS, {"u"}, lambda rows: [r for r in rows if not _where_hit(r)],
         True,
@@ -277,7 +260,7 @@ CASES = {
     ),
     "update-where-cow": (
         lambda spark, t: S.snapshot_update_where(
-            spark, t, WHERE, {"w": "w + 1000000"}, max_updated_rows=0
+            spark, t, WHERE, {"w": "w + 1000000"}
         ),
         "update", lambda m: _holding(m, 0, 299), _none,
         NEW_STATS, {"u"},
@@ -296,7 +279,7 @@ CASES = {
     ),
     "update-range-mor-cow": (
         lambda spark, t: S.snapshot_update_range_mor(
-            spark, t, "k", 100, 109, {"u": "u + 1"}, max_updated_rows=0
+            spark, t, "k", 100, 109, {"u": "u + 1"}
         ),
         "update", lambda m: _holding(m, 100, 109), _none,
         NEW_STATS, {"u"},
@@ -343,7 +326,10 @@ CASES = {
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
-def test_dml_commits_pinned_manifest(spark, seeded, tmp_path, case):
+def test_dml_commits_pinned_manifest(spark, seeded, tmp_path, monkeypatch,
+                                    case):
+    if case.endswith("-cow"):
+        monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 0)
     run, op, touched_of, grown_of, new_stats, new_blooms, model, has_new = (
         CASES[case]
     )
@@ -421,10 +407,10 @@ def _kv_src(spark, keys):
 
 BOUNDARY = {
     "delete-where": lambda spark, t, n: S.snapshot_delete_where(
-        spark, t, f"k < {n}", max_deleted_rows=CAP
+        spark, t, f"k < {n}"
     ),
     "update-where": lambda spark, t, n: S.snapshot_update_where(
-        spark, t, f"k < {n}", {"v": "v + 100"}, max_updated_rows=CAP
+        spark, t, f"k < {n}", {"v": "v + 100"}
     ),
     "merge-update": lambda spark, t, n: S.snapshot_merge(
         spark, _kv_src(spark, range(n)), t, ["k"],
@@ -471,3 +457,46 @@ def test_cap_boundary(spark, tmp_path, monkeypatch, case, affected):
     assert S.snapshot_read(spark, t).count() == (
         20 - affected if "delete" in case else 20
     )
+
+
+# -- assignments keep the column's type --------------------------------------
+
+TYPED = {
+    "merge": lambda spark, t: S.snapshot_merge(
+        spark,
+        spark.range(3).selectExpr("id AS k", "id + 0.5 AS x").coalesce(1),
+        t, ["k"], matched_update={"v": "s.x"}, not_matched_insert=False,
+    ),
+    "update": lambda spark, t: S.snapshot_update_where(
+        spark, t, "k < 3", {"v": "v * 1.5"}
+    ),
+}
+
+
+@pytest.mark.parametrize("form", ["mor", "cow"])
+@pytest.mark.parametrize("stmt", sorted(TYPED))
+def test_assignment_keeps_column_type(spark, tmp_path, monkeypatch, stmt,
+                                      form):
+    """A wider assignment (double, decimal) to a bigint column writes
+    bigint images and bigint rewrites, so every file of the table keeps
+    an int64 ``v`` and the table reads back as bigint."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if form == "cow":
+        monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 0)
+    t = tmp_path / "t"
+    S.snapshot_write(
+        spark.range(20).selectExpr("id AS k", "id AS v"), t,
+        stats_cols=["k"], n_files=2,
+    )
+    TYPED[stmt](spark, t)
+    m = _manifest(t)
+    assert bool(m.get("dv")) == (form == "mor")
+    for f in m["files"]:
+        assert pq.read_schema(t / f).field("v").type == pa.int64(), f
+    df = S.snapshot_read(spark, t)
+    assert dict(df.dtypes)["v"] == "bigint"
+    got = {r.k: r.v for r in df.collect()}
+    assert got == {k: (int(k * 1.5) if stmt == "update" else k) if k < 3
+                   else k for k in range(20)}

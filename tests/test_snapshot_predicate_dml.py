@@ -129,7 +129,8 @@ def test_delete_where_null_predicate_deletes_nothing(spark, tmp_path):
     assert snapshot_read(spark, t).count() == 9
 
 
-def test_delete_where_wide_falls_back_to_cow(spark, tmp_path):
+def test_delete_where_wide_falls_back_to_cow(spark, tmp_path, monkeypatch):
+    from energy_datalake_solution_spark.sources import snapshots as S
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
         current_version,
@@ -138,7 +139,8 @@ def test_delete_where_wide_falls_back_to_cow(spark, tmp_path):
     t = tmp_path / "t"
     _seed(spark, t, n=100, n_files=4)
     m1 = _read_manifest(t, current_version(t))
-    snapshot_delete_where(spark, t, "k <= 49", max_deleted_rows=10)
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 10)
+    snapshot_delete_where(spark, t, "k <= 49")
     m2 = _read_manifest(t, current_version(t))
     # the two touched files left the manifest (rewritten, CoW — not DV);
     # the two unpruned files carried; no deletion vectors grew
@@ -149,12 +151,16 @@ def test_delete_where_wide_falls_back_to_cow(spark, tmp_path):
     assert got == set(range(50, 100))
 
 
-def test_delete_where_repeat_is_idempotent(spark, tmp_path):
+def test_delete_where_repeat_is_idempotent(spark, tmp_path, monkeypatch):
+    from energy_datalake_solution_spark.sources import snapshots as S
+
     t = tmp_path / "t"
     _seed(spark, t, n=30, n_files=2)
-    snapshot_delete_where(spark, t, "k = 5", max_deleted_rows=3)
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 3)
+    snapshot_delete_where(spark, t, "k = 5")
     # repeating must not re-count the dead row against the cap
-    snapshot_delete_where(spark, t, "k <= 6", max_deleted_rows=6)
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 6)
+    snapshot_delete_where(spark, t, "k <= 6")
     got = {r.k for r in snapshot_read(spark, t).collect()}
     assert got == set(range(7, 30))
 
@@ -197,12 +203,13 @@ def test_update_where_string_predicate_and_multiple_sets(spark, tmp_path):
     assert got[5] == (50, "odd") and got[2] == (20, "even")
 
 
-def test_update_where_wide_falls_back_to_cow(spark, tmp_path):
+def test_update_where_wide_falls_back_to_cow(spark, tmp_path, monkeypatch):
+    from energy_datalake_solution_spark.sources import snapshots as S
+
     t = tmp_path / "t"
     _seed(spark, t, n=100, n_files=4)
-    snapshot_update_where(
-        spark, t, "k < 50", {"v": "v + 1"}, max_updated_rows=10
-    )
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 10)
+    snapshot_update_where(spark, t, "k < 50", {"v": "v + 1"})
     got = {r.k: r.v for r in snapshot_read(spark, t).collect()}
     assert got[0] == 1 and got[49] == 491 and got[50] == 500
     assert len(got) == 100

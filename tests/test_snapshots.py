@@ -1265,9 +1265,9 @@ def test_mor_delete_rewrites_no_files_and_never_resurrects(spark, tmp_path):
     assert snapshot_read(spark, t).count() == 2910
 
 
-def test_mor_delete_wide_ranges_fall_back_to_rewrite(spark, tmp_path):
+def test_mor_delete_wide_ranges_fall_back_to_rewrite(spark, tmp_path, monkeypatch):
     """The DV cap is counted: a delete matching more rows than
-    max_deleted_rows routes to the copy-on-write path (files rewritten,
+    DV_MAX_DELETED_ROWS routes to the copy-on-write path (files rewritten,
     no vectors) instead of committing a giant vector."""
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
@@ -1280,7 +1280,10 @@ def test_mor_delete_wide_ranges_fall_back_to_rewrite(spark, tmp_path):
     t = tmp_path / "t"
     df = spark.range(0, 1000).select(F.col("id").alias("k"))
     snapshot_write(df, t, stats_cols=["k"], n_files=4)
-    v = snapshot_delete_range_mor(spark, t, "k", 0, 899, max_deleted_rows=100)
+    from energy_datalake_solution_spark.sources import snapshots as S
+
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 100)
+    v = snapshot_delete_range_mor(spark, t, "k", 0, 899)
     m = _read_manifest(t, current_version(t))
     assert v == current_version(t)
     assert m["op"] == "delete"  # the CoW path committed
@@ -1602,9 +1605,9 @@ def test_dv_read_survives_symlinked_table_path(spark, tmp_path):
     assert kept == set(range(0, 10)) | set(range(20, 100))
 
 
-def test_repeated_mor_delete_stays_on_fast_path(spark, tmp_path):
+def test_repeated_mor_delete_stays_on_fast_path(spark, tmp_path, monkeypatch):
     """Overlapping range deletes must not double-count already-vectored
-    rows against max_deleted_rows: the second, overlapping delete's NEW
+    rows against DV_MAX_DELETED_ROWS: the second, overlapping delete's NEW
     hits fit the cap, so it must commit as delete-mor (not fall back to
     the copy-on-write rewrite) and the final contents are exact."""
     from energy_datalake_solution_spark.sources import snapshots as S
@@ -1617,7 +1620,8 @@ def test_repeated_mor_delete_stays_on_fast_path(spark, tmp_path):
     S.snapshot_delete_range_mor(spark, t, "k", 0, 59)        # 60 dead rows
     # overlapping window re-deletes 0..59 (all already dead) + 10 new;
     # with double counting hits=70 > cap=15 -> spurious CoW fallback
-    v = S.snapshot_delete_range_mor(spark, t, "k", 0, 69, max_deleted_rows=15)
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 15)
+    v = S.snapshot_delete_range_mor(spark, t, "k", 0, 69)
     hist = {h["version"]: h["op"] for h in S.snapshot_history(t)}
     assert hist[v] == "delete-mor", hist
     assert snapshot_read(spark, t).count() == 30
@@ -2030,8 +2034,8 @@ def test_mor_update_range(spark, tmp_path):
     assert ins == {(k, k * 10 + 1) for k in want}
 
 
-def test_mor_update_wide_routes_to_cow(spark, tmp_path):
-    """An update wider than max_updated_rows routes to copy-on-write:
+def test_mor_update_wide_routes_to_cow(spark, tmp_path, monkeypatch):
+    """An update wider than DV_MAX_DELETED_ROWS routes to copy-on-write:
     correct result, touched files rewritten, vectors not grown."""
     from energy_datalake_solution_spark.sources.snapshots import (
         _read_manifest,
@@ -2047,9 +2051,10 @@ def test_mor_update_wide_routes_to_cow(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
     snapshot_write(df, t, stats_cols=["k"], n_files=4)
-    snapshot_update_range_mor(
-        spark, t, "k", 0, 99, {"v": F.col("v") + 5}, max_updated_rows=10
-    )
+    from energy_datalake_solution_spark.sources import snapshots as S
+
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 10)
+    snapshot_update_range_mor(spark, t, "k", 0, 99, {"v": F.col("v") + 5})
     m = _read_manifest(t, current_version(t))
     assert not m.get("dv"), "wide update should not grow vectors"
     got = {r.k: r.v for r in snapshot_read(spark, t).collect()}
@@ -2265,7 +2270,7 @@ def test_two_writer_threaded_mor_updates_compose(spark, tmp_path):
             assert got[k] == k * 10, k
 
 
-def test_mor_update_on_column_mapped_table(spark, tmp_path):
+def test_mor_update_on_column_mapped_table(spark, tmp_path, monkeypatch):
     """MOR UPDATE speaks LOGICAL names on a column-mapped table: prune on
     the physical key, evaluate assignments against logical columns, write
     the appended images under physical names — across a rename."""
@@ -2301,9 +2306,11 @@ def test_mor_update_on_column_mapped_table(spark, tmp_path):
     for k in range(60):
         assert got[k] == k * 10 + (7 if 10 <= k <= 19 else 0), k
     # wide (CoW) route on the mapped table too
+    from energy_datalake_solution_spark.sources import snapshots as S
+
+    monkeypatch.setattr(S, "DV_MAX_DELETED_ROWS", 5)
     snapshot_update_range_mor(
         spark, t, "k", 0, 59, {"price": F.col("price") + 1},
-        max_updated_rows=5,
     )
     got = {r.k: r.price for r in snapshot_read(spark, t).collect()}
     for k in range(60):
